@@ -931,10 +931,6 @@ object AccessControl {
     *  3. the FROM/JOIN/INTO/TABLE regex scan covers dialect-only
     *     syntax the Spark parser rejects. */
   private def touchedTables(spark: SparkSession, stmt: String): Seq[String] = {
-    // scan only OUTSIDE single-quoted literals (the dialect's standard
-    // quote-split) so 'FROM nation' inside a string never trips a check
-    val outside = stmt.split("'", -1).zipWithIndex
-      .collect { case (seg, i) if i % 2 == 0 => seg }.mkString(" ")
     val mergeTables =
       "(?i)\\bmerge\\s*\\(\\s*(?:'[^']*'\\s*,\\s*)?'([^']+)'\\s*\\)".r
         .findAllMatchIn(stmt).flatMap { m =>
@@ -948,9 +944,10 @@ object AccessControl {
           r.multipartIdentifier.mkString(".")
       }
       catch { case _: Exception => Seq.empty }
-    val ids = (("(?is)\\b(?:FROM|JOIN|INTO|TABLE)\\s+" +
-      "([A-Za-z_][A-Za-z0-9_.]*)").r
-      .findAllMatchIn(outside).map(_.group(1)).toSeq ++
+    // scan only outside literals and comments, so 'FROM nation' inside
+    // a string never trips a check
+    val ids = (SqlLex.matchesIn(stmt, ("(?is)\\b(?:FROM|JOIN|INTO|TABLE)\\s+" +
+      "([A-Za-z_][A-Za-z0-9_.]*)").r).map(_.group(1)).toSeq ++
       planned ++ mergeTables).distinct
       .filterNot(_.toLowerCase.startsWith("system."))
     val catalog = spark.sessionState.catalog

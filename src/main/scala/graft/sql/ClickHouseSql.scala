@@ -23,25 +23,24 @@ object ClickHouseSql {
 
   /** Apply all textual rewrites. */
   def rewrite(sql: String): String = {
-    var s = sql
+    // every rewrite below matches outside literals and comments only
+    // (SqlLex); comments go first, so none of them ever sees one
+    var s = SqlLex.stripComments(sql)
     s = rewriteFormat(s)
     s = rewriteSettings(s)
     s = rewriteNumbers(s)
     s = rewriteGenerateRandom(s)
     // GLOBAL IN / GLOBAL JOIN: a distributed-execution hint (broadcast the
     // right side to every shard) — Catalyst + AQE own that decision here
-    s = s.replaceAll("(?i)\\bGLOBAL\\s+(?=(NOT\\s+)?IN\\b|ANY\\b|ALL\\b|INNER\\b|LEFT\\b|RIGHT\\b|FULL\\b|JOIN\\b)", "")
+    s = SqlLex.replaceAll(s, ("(?i)\\bGLOBAL\\s+(?=(NOT\\s+)?IN\\b|ANY\\b|ALL\\b|" +
+      "INNER\\b|LEFT\\b|RIGHT\\b|FULL\\b|JOIN\\b)").r)(_ => "")
     // CH dateDiff('unit', a, b): Spark's parser OWNS the datediff name
     // (special unquoted-unit grammar, rejects the string form at parse
     // time) — rename the quoted-unit spelling to the registered
-    // boundary-semantics builder before parsing. Only OUTSIDE string
-    // literals (the dialect's standard quote-split).
-    s = s.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg
-      else seg.replaceAll(
-        "(?i)\\b(dateDiff|date_diff|timestampDiff|timestamp_diff)\\s*\\(\\s*$",
-        "chDateDiff(")
-    }.mkString("'")
+    // boundary-semantics builder before parsing.
+    s = SqlLex.replaceAll(s,
+      "(?i)\\b(dateDiff|date_diff|timestampDiff|timestamp_diff)\\s*\\(\\s*(?=')".r)(
+      _ => "chDateDiff(")
     s = rewriteParametric(s)
     s = rewriteSample(s)
     s = rewriteArrayJoin(s)
@@ -85,8 +84,7 @@ object ClickHouseSql {
     * misread), as do GROUPS frames inside subqueries or CTE bodies. */
   private def rewriteGroupsFrames(s0: String): String = {
     val groupsRe = "(?i)\\bGROUPS\\s+BETWEEN\\b".r
-    if (groupsRe.findFirstIn(JoinSpellings.maskLiterals(s0)).isEmpty)
-      return s0
+    if (SqlLex.firstMatch(s0, groupsRe).isEmpty) return s0
     var s = s0
     // collected distinct (partitionBy, orderBy) specs → __grp_i index
     val specs = scala.collection.mutable.LinkedHashMap.empty[(String, String), Int]
@@ -102,30 +100,22 @@ object ClickHouseSql {
     while (replaced && budget > 0) {
       replaced = false
       budget -= 1
-      val m = JoinSpellings.maskLiterals(s)
+      val m = SqlLex.mask(s)
       // the OVER may nest inside EXPRESSION parens (CAST(sum(x) OVER …))
       // but not inside a (SELECT …) subquery — a __grp_i computed in the
       // top-level wrap would be out of scope there
-      def insideSubquery(pos: Int): Boolean = {
-        val stack = scala.collection.mutable.Stack.empty[Int]
-        for (i <- 0 until pos) {
-          if (m.charAt(i) == '(') stack.push(i)
-          else if (m.charAt(i) == ')' && stack.nonEmpty) stack.pop()
-        }
-        stack.exists { p =>
-          val inner = m.substring(p + 1).dropWhile(_.isWhitespace)
-          inner.take(6).equalsIgnoreCase("select") ||
-            inner.take(4).equalsIgnoreCase("with")
-        }
-      }
+      def insideSubquery(pos: Int): Boolean =
+        "(?i)\\(\\s*(?:SELECT|WITH)\\b".r.findAllMatchIn(m)
+          .exists(q => q.start < pos && SqlLex.closeOf(m, q.start) > pos)
       overRe.findAllMatchIn(m).find { om =>
         val open = m.indexOf('(', om.start)
-        val close = JoinSpellings.closeOf(m, open)
-        groupsRe.findFirstIn(m.substring(open + 1, close - 1)).isDefined
+        val close = SqlLex.closeOf(m, open)
+        close > open &&
+          groupsRe.findFirstIn(m.substring(open + 1, close - 1)).isDefined
       } match {
         case Some(om) =>
           val open = m.indexOf('(', om.start)
-          val close = JoinSpellings.closeOf(m, open)
+          val close = SqlLex.closeOf(m, open)
           if (insideSubquery(om.start))
             throw new IllegalArgumentException(
               "GROUPS frames are supported in the top-level select list " +
@@ -151,54 +141,34 @@ object ClickHouseSql {
     if (specs.isEmpty) return s
     // wrap the top-level SELECT: its FROM[+WHERE] segment moves into a
     // subquery that also computes every __grp_i
-    val m = JoinSpellings.maskLiterals(s)
-    val depthAt = new Array[Int](m.length)
-    var d = 0
-    for (i <- 0 until m.length) {
-      depthAt(i) = d
-      if (m.charAt(i) == '(') d += 1
-      else if (m.charAt(i) == ')') d -= 1
-    }
-    def depth0(re: scala.util.matching.Regex): Seq[Int] =
-      re.findAllMatchIn(m).filter(x => depthAt(x.start) == 0)
-        .map(_.start).toSeq
-    if (depth0("(?i)\\bGROUP\\s+BY\\b".r).nonEmpty ||
-        depth0("(?i)\\bHAVING\\b".r).nonEmpty ||
-        depth0("(?i)\\b(UNION|INTERSECT|EXCEPT)\\b".r).nonEmpty)
+    def at(kw: String, from: Int = 0): Option[Int] =
+      SqlLex.find(s, kw, from).map(_._1)
+    if (Seq("GROUP BY", "HAVING", "UNION", "INTERSECT", "EXCEPT")
+        .exists(at(_).isDefined))
       throw new IllegalArgumentException(
         "GROUPS frame: not supported together with a top-level GROUP BY/" +
           "HAVING/set operation — wrap the aggregation in a subquery")
-    val selIdx = depth0("(?i)\\bSELECT\\b".r).headOption.getOrElse(
+    val selIdx = at("SELECT").getOrElse(
       throw new IllegalArgumentException(
         "GROUPS frame: no top-level SELECT found"))
-    val fromIdx = depth0("(?i)\\bFROM\\b".r)
-      .find(_ > selIdx).getOrElse(throw new IllegalArgumentException(
+    val fromIdx = at("FROM", selIdx).getOrElse(
+      throw new IllegalArgumentException(
         "GROUPS frame: the select needs a FROM clause"))
-    val tailIdx = (depth0("(?i)\\bORDER\\s+BY\\b".r) ++
-      depth0("(?i)\\bLIMIT\\b".r)).filter(_ > fromIdx)
+    val tailIdx = (at("ORDER BY", fromIdx) ++ at("LIMIT", fromIdx))
       .minOption.getOrElse(s.length)
     val sel = s.substring(selIdx + 6, fromIdx)
     // a star projection (`SELECT *` / `SELECT t.*`) would silently gain
     // the __grp_N helper columns the wrap computes — loud reject, like
     // the other unsupported shapes (`count(*)` is fine: its star sits
     // inside parens; `a * b` is fine: its star follows an operand)
-    locally {
-      val mSel = m.substring(selIdx + 6, fromIdx)
-      var d2 = 0
-      for (i <- 0 until mSel.length) {
-        val c = mSel.charAt(i)
-        if (c == '(') d2 += 1
-        else if (c == ')') d2 -= 1
-        else if (c == '*' && d2 == 0) {
-          val prev = mSel.substring(0, i).reverse.dropWhile(_.isWhitespace)
-            .headOption
-          if (prev.isEmpty || prev.contains(',') || prev.contains('.'))
-            throw new IllegalArgumentException(
-              "GROUPS frame: `SELECT *` is not supported with a GROUPS " +
-                "window (the rewrite adds helper columns a star would " +
-                "leak) — list the output columns explicitly")
-        }
-      }
+    SqlLex.findAll(sel, "*").foreach { case (i, _) =>
+      val prev = sel.substring(0, i).reverse.dropWhile(_.isWhitespace)
+        .headOption
+      if (prev.isEmpty || prev.contains(',') || prev.contains('.'))
+        throw new IllegalArgumentException(
+          "GROUPS frame: `SELECT *` is not supported with a GROUPS " +
+            "window (the rewrite adds helper columns a star would " +
+            "leak) — list the output columns explicitly")
     }
     val src = s.substring(fromIdx + 4, tailIdx).trim.stripSuffix(";")
     val tail = if (tailIdx >= s.length) "" else " " + s.substring(tailIdx)
@@ -221,20 +191,21 @@ object ClickHouseSql {
     Seq(("corrMatrix", "corr"), ("covarSampMatrix", "covar_samp"),
         ("covarPopMatrix", "covar_pop")).foreach { case (name, fn) =>
       val re = ("(?i)\\b" + name + "\\s*(\\()").r
-      var m = re.findFirstMatchIn(s)
+      var m = SqlLex.firstMatch(s, re)
       var guard = 0
       while (m.isDefined && guard < 32) {
         guard += 1
-        balanced(s, m.get.start(1)) match {
-          case Some((body, end)) =>
-            val args = splitTopLevel(body).map(_.trim)
-            val matrix = args.map(a =>
-              args.map(b => s"$fn($a, $b)").mkString("array(", ", ", ")"))
-              .mkString("array(", ", ", ")")
-            s = s.substring(0, m.get.start) + matrix + s.substring(end)
-          case None => guard = 32
+        val open = m.get.start(1)
+        val end = SqlLex.closeOf(s, open)
+        if (end < 0) guard = 32
+        else {
+          val args = SqlLex.splitTop(s.substring(open + 1, end - 1))
+          val matrix = args.map(a =>
+            args.map(b => s"$fn($a, $b)").mkString("array(", ", ", ")"))
+            .mkString("array(", ", ", ")")
+          s = s.substring(0, m.get.start) + matrix + s.substring(end)
         }
-        m = re.findFirstMatchIn(s)
+        m = SqlLex.firstMatch(s, re)
       }
     }
     s
@@ -256,7 +227,7 @@ object ClickHouseSql {
       "FROM\\s+(toDate|toDateTime)\\('([^']+)'\\)\\s+TO\\s+(?:toDate|toDateTime)\\('([^']+)'\\)" +
       "\\s+STEP\\s+INTERVAL\\s+(\\d+)\\s+([A-Za-z]+)" +
       "(?:\\s+INTERPOLATE\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\))?\\s*;?\\s*$").r
-    reDate.findFirstMatchIn(s) match {
+    SqlLex.firstMatch(s, reDate) match {
       case Some(m) =>
         val axis = m.group(1)
         val lit = if (m.group(2).equalsIgnoreCase("toDate")) "DATE" else "TIMESTAMP"
@@ -283,7 +254,7 @@ object ClickHouseSql {
       "FROM\\s+(-?\\d+)\\s+TO\\s+(-?\\d+)(?:\\s+STEP\\s+(-?\\d+))?" +
       "(?:\\s+STALENESS\\s+(\\d+))?" +
       "(?:\\s+INTERPOLATE\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\))?\\s*;?\\s*$").r
-    re.findFirstMatchIn(s) match {
+    SqlLex.firstMatch(s, re) match {
       case None => s
       case Some(m) =>
         val axis = m.group(1)
@@ -344,13 +315,13 @@ object ClickHouseSql {
   /** CH zero-arg `count()` → `count(*)` (the registry deliberately does
     * not shadow Spark's `count`). */
   private def rewriteCountEmpty(s: String): String =
-    s.replaceAll("(?i)\\bcount\\s*\\(\\s*\\)", "count(*)")
+    SqlLex.replaceAll(s, "(?i)\\bcount\\s*\\(\\s*\\)".r)(_ => "count(*)")
 
   /** CH `any(x)` (arbitrary-value aggregate) → Spark `any_value(x)`.
     * Spark's built-in `any` is bool_or — the one alias that CANNOT be
     * registered without corrupting standard SQL (see ChFunctionRegistry). */
   private def rewriteAnyAgg(s: String): String =
-    s.replaceAll("(?i)\\bany\\s*\\(", "any_value(")
+    SqlLex.replaceAll(s, "(?i)\\bany\\s*\\(".r)(_ => "any_value(")
 
   // ---- CREATE FUNCTION (SQL-lambda UDF) ------------------------------
   // Reference: user-defined SQL functions stored by name and expanded at
@@ -391,31 +362,13 @@ object ClickHouseSql {
       pass += 1
       userFunctions.foreach { case (name, (params, body)) =>
         val call = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
-        var m = call.findFirstMatchIn(s)
+        var m = SqlLex.firstMatch(s, call)
         while (m.isDefined && budget > 0) {
           budget -= 1
           val start = m.get.start
-          val argsStart = m.get.end
-          // scan to the matching close paren
-          var depth = 1; var i = argsStart; var inStr = false
-          val splits = scala.collection.mutable.ArrayBuffer(argsStart)
-          while (i < s.length && depth > 0) {
-            val c = s.charAt(i)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1
-              case ',' if depth == 1 => splits += i + 1
-              case _ =>
-            }
-            i += 1
-          }
-          if (depth != 0) return s // unbalanced; leave untouched
-          val end = i // index AFTER the close paren
-          val rawArgs = (splits :+ end).toSeq.sliding(2).map { case Seq(a, b) =>
-            s.substring(a, math.max(a, b - 1)).trim
-          }.toSeq.filter(_.nonEmpty)
+          val end = SqlLex.closeOf(s, m.get.end - 1)
+          if (end < 0) return s // unbalanced; leave untouched
+          val rawArgs = SqlLex.splitTop(s.substring(m.get.end, end - 1))
           // Two-phase substitution (round-2 advice): first every parameter
           // becomes a collision-free placeholder (skipping the body's
           // string literals), THEN placeholders become argument texts — a
@@ -427,43 +380,19 @@ object ClickHouseSql {
             (p, s"__graft_arg_${i}__")
           }
           placeholders.foreach { case (p, tok) =>
-            expanded = replaceOutsideStrings(expanded,
-              "(?i)\\b" + java.util.regex.Pattern.quote(p) + "\\b", tok)
+            expanded = SqlLex.replaceAll(expanded,
+              ("(?i)\\b" + java.util.regex.Pattern.quote(p) + "\\b").r)(_ => tok)
           }
           placeholders.map(_._2).zip(rawArgs).foreach { case (tok, a) =>
             expanded = expanded.replace(tok, s"($a)")
           }
           s = s.substring(0, start) + "(" + expanded + ")" + s.substring(end)
           changed = true
-          m = call.findFirstMatchIn(s)
+          m = SqlLex.firstMatch(s, call)
         }
       }
     }
     s
-  }
-
-  /** Regex-replace applied only OUTSIDE single-quoted string literals —
-    * a lambda body's 'x = ...' literal must not have its x rewritten. */
-  private def replaceOutsideStrings(s: String, pattern: String,
-      replacement: String): String = {
-    val sb = new StringBuilder
-    var segStart = 0
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inStr && c == '\'') {
-        sb.append(s.substring(segStart, i).replaceAll(pattern, replacement))
-        segStart = i; inStr = true
-      } else if (inStr && c == '\'') {
-        sb.append(s.substring(segStart, i + 1))
-        segStart = i + 1; inStr = false
-      }
-      i += 1
-    }
-    val tail = s.substring(segStart)
-    sb.append(if (inStr) tail else tail.replaceAll(pattern, replacement))
-    sb.toString
   }
 
   /** `FROM t [LEFT] ARRAY JOIN e1 [AS a1], e2 [AS a2]…` (reference
@@ -480,38 +409,16 @@ object ClickHouseSql {
     ("(?is)\\bFROM\\s+(" + arrayJoinFromRef + ")\\s+(LEFT\\s+)?ARRAY\\s+JOIN\\s+" +
       "(.*?)(?=\\s+WHERE\\b|\\s+GROUP\\b|\\s+HAVING\\b|\\s+ORDER\\b|\\s+LIMIT\\b|\\s*$)").r
 
-  /** Comma-split at paren depth 0 — shared with the dictionary DDL. */
-  def splitTopLevelPublic(s: String): Seq[String] = splitTopLevel(s)
-
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { c =>
-      if (quote != 0) { cur.append(c); if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   @annotation.tailrec
   private def rewriteArrayJoin(s: String, budget: Int = 8): String =
     if (budget <= 0) s
-    else arrayJoinRe.findFirstMatchIn(s) match {
+    else SqlLex.firstMatch(s, arrayJoinRe) match {
       case None => s
       case Some(m) =>
         val table = m.group(1).trim
         val outer = if (m.group(2) != null) "OUTER " else ""
         val asRe = "(?is)^(.*?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-        val items = splitTopLevel(m.group(3)).map {
+        val items = SqlLex.splitTop(m.group(3)).map {
           case asRe(e, a) => (e.trim, a)
           case bare => (bare.trim, bare.trim)
         }
@@ -545,7 +452,8 @@ object ClickHouseSql {
   /** `... FORMAT JSONEachRow` → strip (output format is the caller's
     * concern in a DataFrame engine). */
   private def rewriteFormat(s: String): String =
-    s.replaceAll("(?is)\\bFORMAT\\s+[A-Za-z][A-Za-z0-9]*\\s*;?\\s*$", "")
+    SqlLex.replaceAll(s,
+      "(?is)\\bFORMAT\\s+[A-Za-z][A-Za-z0-9]*\\s*;?\\s*$".r)(_ => "")
 
   /** Reference parametric-aggregate call syntax `f(params)(args)` —
     * `quantile(0.9)(x)`, `quantiles(0.25, 0.75)(x)` — rearranged to the
@@ -578,18 +486,19 @@ object ClickHouseSql {
     while (changed && guard < 32) {
       changed = false
       guard += 1
-      val hit = parametricName.findAllMatchIn(out).flatMap { m =>
-        val open1 = out.indexOf('(', m.end - 1)
-        balanced(out, open1).flatMap { case (params, end1) =>
-          var i = end1
-          while (i < out.length && out.charAt(i).isWhitespace) i += 1
-          if (i < out.length && out.charAt(i) == '(')
-            balanced(out, i).map { case (args, end2) =>
-              (m.start, end2, m.group(1), params.trim, args.trim)
-            }
-          else None
-        }
-      }.toSeq.headOption
+      val hit = SqlLex.matchesIn(out, parametricName).flatMap { m =>
+        val open1 = m.end - 1
+        val end1 = SqlLex.closeOf(out, open1)
+        val open2 = if (end1 < 0) -1
+          else out.indexWhere(!_.isWhitespace, end1)
+        val end2 =
+          if (open2 < 0 || out.charAt(open2) != '(') -1
+          else SqlLex.closeOf(out, open2)
+        if (end2 < 0) None
+        else Some((m.start, end2, m.group(1),
+          out.substring(open1 + 1, end1 - 1).trim,
+          out.substring(open2 + 1, end2 - 1).trim))
+      }.nextOption()
       hit.foreach { case (start, end, name, params, args) =>
         out = out.substring(0, start) + s"$name($args, $params)" +
           out.substring(end)
@@ -607,7 +516,7 @@ object ClickHouseSql {
     val frac = "(?is)\\bSAMPLE\\s+(0?\\.\\d+)".r
     // exact decimal ×100, not (toDouble*100).toInt — 0.29*100 is
     // 28.999... in binary and toInt truncated it to 28 PERCENT
-    frac.replaceAllIn(s, m =>
+    SqlLex.replaceAll(s, frac)(m =>
       s"TABLESAMPLE (${(BigDecimal(m.group(1)) * 100).bigDecimal.stripTrailingZeros.toPlainString} PERCENT) REPEATABLE (42)")
   }
 
@@ -621,11 +530,11 @@ object ClickHouseSql {
     val one = "(?is)\\bFROM\\s+numbers\\s*\\(\\s*(\\d+)\\s*\\)".r
     val two = "(?is)\\bFROM\\s+numbers\\s*\\(\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\)".r
     val zeros = "(?is)\\bFROM\\s+zeros(?:_mt)?\\s*\\(\\s*(\\d+)\\s*\\)".r
-    val s1 = two.replaceAllIn(s, m =>
+    val s1 = SqlLex.replaceAll(s, two)(m =>
       s"FROM (SELECT id AS number FROM range(${m.group(1)}, ${m.group(1).toLong + m.group(2).toLong})) _nums")
-    val s2 = one.replaceAllIn(s1, m =>
+    val s2 = SqlLex.replaceAll(s1, one)(m =>
       s"FROM (SELECT id AS number FROM range(${m.group(1)})) _nums")
-    zeros.replaceAllIn(s2, m =>
+    SqlLex.replaceAll(s2, zeros)(m =>
       s"FROM (SELECT CAST(0 AS TINYINT) AS zero FROM range(${m.group(1)})) _zeros")
   }
 
@@ -640,7 +549,7 @@ object ClickHouseSql {
   private def rewriteGenerateRandom(s: String): String = {
     val re = ("(?is)\\bFROM\\s+generateRandom\\s*\\(\\s*'([^']*)'" +
       "\\s*(?:,\\s*(\\d+)\\s*)?\\)").r
-    re.replaceAllIn(s, m => {
+    SqlLex.replaceAll(s, re)(m => {
       val seed = Option(m.group(2)).getOrElse("42").toLong
       val cols = m.group(1).split(",").map(_.trim).filter(_.nonEmpty)
         .zipWithIndex.map { case (cd, i) =>
@@ -659,16 +568,15 @@ object ClickHouseSql {
               s"generateRandom: unsupported type '$other'")
           }
         }
-      scala.util.matching.Regex.quoteReplacement(
-        s"FROM (SELECT ${cols.mkString(", ")} FROM range(1000000)) _genrnd")
+      s"FROM (SELECT ${cols.mkString(", ")} FROM range(1000000)) _genrnd"
     })
   }
 
   /** Trailing `SETTINGS k = v, …` → strip (per-query engine knobs have no
     * Spark analog at the SQL layer; session confs carry that role). */
   private def rewriteSettings(s: String): String =
-    s.replaceAll(
-      "(?is)\\bSETTINGS\\s+\\w+\\s*=\\s*[^,;\\s]+(\\s*,\\s*\\w+\\s*=\\s*[^,;\\s]+)*\\s*;?\\s*$", "")
+    SqlLex.replaceAll(s, ("(?is)\\bSETTINGS\\s+\\w+\\s*=\\s*[^,;\\s]+" +
+      "(\\s*,\\s*\\w+\\s*=\\s*[^,;\\s]+)*\\s*;?\\s*$").r)(_ => "")
 
   /** PREWHERE cond → merged into WHERE. The reference evaluates PREWHERE
     * before reading remaining columns (MergeTreeWhereOptimizer); Spark's
@@ -676,7 +584,7 @@ object ClickHouseSql {
     * clause is just a conjunct. */
   private def rewritePrewhere(s: String): String = {
     val pre = "(?is)\\bPREWHERE\\b(.*?)(\\bWHERE\\b|\\bGROUP\\s+BY\\b|\\bORDER\\s+BY\\b|\\bLIMIT\\b|$)".r
-    pre.findFirstMatchIn(s) match {
+    SqlLex.firstMatch(s, pre) match {
       case None => s
       case Some(m) =>
         val cond = m.group(1).trim
@@ -694,7 +602,7 @@ object ClickHouseSql {
     * ReadFromMergeTree). */
   private def rewriteFinal(s: String): String = {
     val fin = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+FINAL\\b".r
-    fin.replaceAllIn(s, m => {
+    SqlLex.replaceAll(s, fin)(m => {
       val t = m.group(1)
       replacingTables.get(t.toLowerCase) match {
         case Some((keys, ver)) =>
@@ -718,61 +626,6 @@ object ClickHouseSql {
     * ` LIMIT 1 BY keys` after an existing LIMIT produced invalid SQL (the
     * advice-round bug: the LIMIT-BY window regex then swallowed
     * `k LIMIT 10` as its ORDER BY spec). */
-  /** First depth-0, outside-quotes occurrence of the keyword `kw` at or
-    * after `from`; -1 if none. Multi-word keywords ("GROUP BY",
-    * "WITH TOTALS") tolerate ANY whitespace run — including newlines —
-    * between words, matching what the quote-split regex rewrites accept. */
-  private def depth0Index(s: String, kw: String, from: Int): Int =
-    depth0Find(s, kw, from).map(_._1).getOrElse(-1)
-
-  /** Like depth0Index but yields (start, endExclusive) — the end is
-    * needed by callers slicing around a multi-word keyword, whose
-    * matched length varies with the whitespace between its words. */
-  private def depth0Find(s: String, kw: String,
-      from: Int): Option[(Int, Int)] = {
-    val words = kw.split("\\s+")
-    // matched span of the word sequence starting at i, or -1
-    def matchAt(i: Int): Int = {
-      var pos = i
-      var w = 0
-      while (w < words.length) {
-        val word = words(w)
-        if (!s.regionMatches(true, pos, word, 0, word.length)) return -1
-        pos += word.length
-        if (w < words.length - 1) {
-          val ws0 = pos
-          while (pos < s.length && Character.isWhitespace(s.charAt(pos)))
-            pos += 1
-          if (pos == ws0) return -1 // words must be separated
-        } else {
-          if (pos < s.length && (Character.isLetterOrDigit(s.charAt(pos)) ||
-              s.charAt(pos) == '_')) return -1 // word boundary after
-        }
-        w += 1
-      }
-      pos
-    }
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && i >= from &&
-              (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-                s.charAt(i - 1) != '_')) {
-            val end = matchAt(i)
-            if (end >= 0) return Some((i, end))
-          }
-      }
-      i += 1
-    }
-    None
-  }
-
   /** `QUALIFY pred` (ASTSelectQuery's qualify clause — a filter over
     * window results): rewritten to the wrap the reference's analyzer
     * performs —
@@ -784,23 +637,21 @@ object ClickHouseSql {
     * core's output columns (they must be projected by the core — the
     * documented scope). The trailing ORDER BY / LIMIT stays outside. */
   private def rewriteQualify(s0: String): String = {
-    val at = depth0Index(s0, "QUALIFY", 0)
-    if (at < 0) return s0
+    if (SqlLex.find(s0, "QUALIFY").isEmpty) return s0
     // INSERT INTO t SELECT … QUALIFY …: rewrite the SELECT part only
     if (s0.trim.matches("(?is)^INSERT\\b.*")) {
-      val selAt = depth0Index(s0, "SELECT", 0)
+      val selAt = SqlLex.find(s0, "SELECT").fold(-1)(_._1)
       return if (selAt <= 0) s0
       else s0.substring(0, selAt) + rewriteQualify(s0.substring(selAt))
     }
     if (!s0.trim.matches("(?is)^(SELECT|WITH)\\b.*")) return s0
     val s = s0.trim.stripSuffix(";")
-    val at2 = depth0Index(s, "QUALIFY", 0)
-    val core = s.substring(0, at2).trim
-    val after = s.substring(at2 + "QUALIFY".length).trim
+    val (at, atEnd) = SqlLex.find(s, "QUALIFY").get
+    val core = s.substring(0, at).trim
+    val after = s.substring(atEnd).trim
     val tailAt = Seq("ORDER BY", "LIMIT", "FORMAT", "SETTINGS",
       "INTO OUTFILE", "UNION")
-      .map(k => depth0Index(after, k, 0)).filter(_ >= 0)
-      .sorted.headOption
+      .flatMap(k => SqlLex.find(after, k)).map(_._1).minOption
     val (pred, tail) = tailAt match {
       case Some(i) => (after.substring(0, i).trim, " " + after.substring(i))
       case None => (after, "")
@@ -818,13 +669,11 @@ object ClickHouseSql {
     * defaults; the NULL-keyed row is the documented Spark rendering).
     * WITH ROLLUP / WITH CUBE pass through — Spark speaks them natively. */
   private def rewriteWithTotals(s: String): String = {
-    val (at, atEnd) = depth0Find(s, "WITH TOTALS", 0).getOrElse(return s)
+    val (at, atEnd) = SqlLex.find(s, "WITH TOTALS").getOrElse(return s)
     // the GROUP BY this TOTALS belongs to: the last depth-0 GROUP BY
     // before it
-    var gb: Option[(Int, Int)] = None
-    var m = depth0Find(s, "GROUP BY", 0)
-    while (m.exists(_._1 < at)) { gb = m; m = depth0Find(s, "GROUP BY", m.get._1 + 1) }
-    val (gbAt, gbEnd) = gb.getOrElse(return s)
+    val (gbAt, gbEnd) = SqlLex.findAll(s, "GROUP BY").takeWhile(_._1 < at)
+      .lastOption.getOrElse(return s)
     val keys = s.substring(gbEnd, at).trim
     rewriteWithTotals(
       s.substring(0, gbAt) + s"GROUP BY GROUPING SETS (($keys), ())" +
@@ -833,13 +682,13 @@ object ClickHouseSql {
 
   private def rewriteDistinctOn(s: String): String = {
     val re = "(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(([^)]*)\\)".r
-    re.findFirstMatchIn(s) match {
+    SqlLex.firstMatch(s, re) match {
       case None => s
       case Some(m) =>
         val keys = m.group(1).trim
         val rest = s.substring(0, m.start) + "SELECT" + s.substring(m.end)
         val tail = "(?is)\\bLIMIT\\s+(\\d+)(\\s+OFFSET\\s+\\d+)?\\s*;?\\s*$".r
-        tail.findFirstMatchIn(rest) match {
+        SqlLex.firstMatch(rest, tail) match {
           case Some(t) =>
             rewriteLimitBy(rest.substring(0, t.start).trim +
               s" LIMIT 1 BY $keys") + " " + t.matched.trim.stripSuffix(";")
@@ -850,14 +699,15 @@ object ClickHouseSql {
 
   /** MySQL-style `LIMIT offset, count` → `LIMIT count OFFSET offset`. */
   private def rewriteLimitOffsetComma(s: String): String =
-    s.replaceAll("(?is)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+)\\s*(;?\\s*)$",
-      "LIMIT $2 OFFSET $1$3")
+    SqlLex.replaceAll(s,
+      "(?is)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+)\\s*(;?\\s*)$".r)(m =>
+      s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}${m.group(3)}")
 
   /** `SELECT TOP n …` → trailing LIMIT (only when the query has none). */
   private def rewriteTop(s: String): String = {
     val re = "(?is)^(\\s*SELECT)\\s+TOP\\s+(\\d+)\\s+".r
-    re.findFirstMatchIn(s) match {
-      case Some(m) if !s.toUpperCase.matches("(?s).*\\bLIMIT\\b.*") =>
+    SqlLex.firstMatch(s, re) match {
+      case Some(m) if SqlLex.find(s, "LIMIT").isEmpty =>
         s.substring(0, m.start) + m.group(1) + " " + s.substring(m.end) +
           s" LIMIT ${m.group(2)}"
       case _ => s
@@ -875,7 +725,7 @@ object ClickHouseSql {
     val lim = ("(?is)\\bLIMIT\\s+(\\d+)(?:\\s*,\\s*(\\d+)|\\s+OFFSET\\s+(\\d+))?" +
       "\\s+BY\\s+([A-Za-z_][A-Za-z0-9_,\\s]*?)" +
       "\\s*(LIMIT\\s+\\d+(?:\\s+OFFSET\\s+\\d+)?)?\\s*;?\\s*$").r
-    lim.findFirstMatchIn(s) match {
+    SqlLex.firstMatch(s, lim) match {
       case None => s
       case Some(m) =>
         // `LIMIT o, n BY` → (offset o, take n); `LIMIT n OFFSET o BY` →
@@ -890,7 +740,7 @@ object ClickHouseSql {
         // window — the capture must stop at a LIMIT/OFFSET token (never
         // swallow `k LIMIT 10` as a sort spec)
         val ob = "(?is)\\bORDER\\s+BY\\s+((?:(?!\\b(?:LIMIT|OFFSET)\\b)[^()])*?)\\s*$".r
-        val (core, order) = ob.findFirstMatchIn(inner) match {
+        val (core, order) = SqlLex.firstMatch(inner, ob) match {
           case Some(o) => (inner.substring(0, o.start), o.group(1).trim)
           case None => (inner, keys)
         }
@@ -982,10 +832,10 @@ object ClickHouseSql {
     AccessControl.installResultRowsMeter(spark) // idempotent per session
     // Query parameters (src/Parsers/ASTQueryParameter.h:10): `{name:Type}`
     // placeholders substitute as TYPE-CHECKED literals from the session's
-    // `SET param_<name> = v` values, before any other rewriting. Only
-    // segments OUTSIDE single-quoted literals are touched.
+    // `SET param_<name> = v` values, before any other rewriting, outside
+    // literals only. Comments go first, so no lane below ever sees one.
     val trimmed0 = {
-      val raw = chSql.trim
+      val raw = SqlLex.stripComments(chSql).trim
       // SET dialect = 'kusto' (executeQuery.cpp:1044 Dialect::kusto, the
       // reference's KQL front-end switch): every non-SET statement
       // translates through KqlTranslator FIRST, then proceeds through
@@ -1003,9 +853,7 @@ object ClickHouseSql {
       // call time, per view invocation (parameterized views)
       if (!t0.contains("{") ||
           t0.matches("(?is)^CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\b.*")) t0
-      else t0.split("'", -1).zipWithIndex.map { case (seg, i) =>
-        if (i % 2 == 1) seg else substituteParams(spark, seg)
-      }.mkString("'")
+      else substituteParams(spark, t0)
     }
     // INTO OUTFILE 'path' [FORMAT fmt] (ParserQueryWithOutput): execute
     // the query and write the result where the client asked —
@@ -1017,16 +865,10 @@ object ClickHouseSql {
     // (bounded pool), each submitting its own Spark jobs; the scheduler
     // interleaves them exactly like the reference's thread pool. Legs
     // are independent by the statement's contract. The split happens
-    // OUTSIDE single-quoted literals only.
+    // outside literals only.
     if (!trimmed0.matches("(?is)^(SELECT|WITH)\\b.*")) {
-      val segs = trimmed0.split("'", -1)
-      val marker = "(?i)\\bPARALLEL\\s+WITH\\b".r
-      if (segs.zipWithIndex.exists { case (s, i) =>
-            i % 2 == 0 && marker.findFirstIn(s).isDefined }) {
-        // rebuild with a sentinel outside literals, then split on it
-        val withSentinel = segs.zipWithIndex.map { case (s, i) =>
-          if (i % 2 == 0) marker.replaceAllIn(s, "\u0001") else s
-        }.mkString("'")
+      val legs = SqlLex.splitTop(trimmed0, "PARALLEL WITH")
+      if (legs.length > 1) {
         // sqlImpl, not sql: the user issued ONE statement (quota was
         // already charged once at the sql() entry; QuotaCache::used
         // charges per statement, not per PARALLEL WITH leg).
@@ -1041,7 +883,6 @@ object ClickHouseSql {
         // by file rename: Spark's own commit protocol stages every
         // insert of a table under its single `_temporary` dir, so the
         // constraint is lifted beside it, not fought inside it.
-        val legs = withSentinel.split('\u0001').map(_.trim).filter(_.nonEmpty)
         // Every table identifier a leg references. Round-12 ADVICE fixes:
         // comma-separated FROM lists ('FROM a, b' — each element's first
         // word is the table, the rest an alias), backtick-quoted names,
@@ -1049,8 +890,6 @@ object ClickHouseSql {
         // land on the same group key, so legs sharing a table can never
         // race into different union-find groups.
         def legIdents(l: String): Set[String] = {
-          val outside = l.split("'", -1).zipWithIndex
-            .collect { case (s, i) if i % 2 == 0 => s }.mkString(" ")
           val kw = Set("select", "values", "with", "table", "if", "not",
             "exists", "from", "into", "where", "only", "infile", "outfile",
             "partition", "as", "on", "using", "join", "left", "right",
@@ -1066,7 +905,7 @@ object ClickHouseSql {
           val listRe = ("(?is)\\b(?:FROM|JOIN|INTO|UPDATE|TABLE)\\s+" +
             "(?:TABLE\\s+)?(?:IF\\s+(?:NOT\\s+)?EXISTS\\s+)?" +
             s"($ident$alias(?:\\s*,\\s*$ident$alias)*)").r
-          listRe.findAllMatchIn(outside)
+          SqlLex.matchesIn(l, listRe)
             .flatMap(_.group(1).split(','))
             .map(_.trim.split("\\s+")(0))
             .map(_.stripPrefix("`").stripSuffix("`").toLowerCase)
@@ -1132,7 +971,7 @@ object ClickHouseSql {
           // positional binding + cast, exactly like insertInto; with a
           // column list, unlisted table columns fill with NULL (the
           // standard INSERT (cols) contract)
-          val aligned = colList match {
+          val aligned = colList.orElse(declaredOrder(spark, t)) match {
             case None =>
               require(df0.columns.length == schema.length,
                 s"INSERT INTO $t: ${df0.columns.length} columns, " +
@@ -1419,7 +1258,7 @@ object ClickHouseSql {
       import spark.implicits._
       val predicate = org.apache.spark.sql.functions.expr(rewrite(pred))
       val kv = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
-      val asn = assigns.map(splitTopLevel(_).map {
+      val asn = assigns.map(SqlLex.splitTop(_).map {
         case kv(c, e) => c -> org.apache.spark.sql.functions
           .expr(rewrite(e))
         case other => throw new IllegalArgumentException(
@@ -1777,12 +1616,8 @@ object ClickHouseSql {
               resolveNullFn(spark, resolveDeltaLakeFn(spark,
                 resolveCollectionFileFn(trimmedNoFmt))))))))
       else trimmedNoFmt
-    // rewrite only OUTSIDE single-quoted literals: split on ' and touch
-    // the even-indexed (non-literal) segments
-    val trimmed = trimmedFileFn.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg
-      else seg.replaceAll(
-        "(?i)\\bsystem\\.(tables|functions|settings|query_log|dictionaries|" +
+    val trimmed = SqlLex.replaceAll(trimmedFileFn,
+        ("(?i)\\bsystem\\.(tables|functions|settings|query_log|dictionaries|" +
           "data_skipping_indices|metrics|events|asynchronous_metrics|" +
           "databases|processes|one|numbers|merges|mutations|" +
           "formats|table_engines|clusters|disks|columns|parts|" +
@@ -1791,9 +1626,8 @@ object ClickHouseSql {
           "users|roles|grants|row_policies|settings_profiles|" +
           "quota_usage|quotas|part_log|settings_changes|" +
           "current_roles|enabled_roles|dropped_tables|" +
-          "named_collections|workloads|resources)\\b",
-        "graft_system_$1")
-    }.mkString("'")
+          "named_collections|workloads|resources)\\b").r)(
+      m => "graft_system_" + m.group(1))
     if (Dictionaries.matches(trimmed))
       Dictionaries.execute(spark, trimmed)
     else if (trimmed.matches("(?is)^DESC(RIBE)?(\\s+TABLE)?\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
@@ -2161,9 +1995,10 @@ object ClickHouseSql {
       trimmed match {
         case re(a, b) =>
           val tmp = s"__graft_xchg_${System.nanoTime()}"
-          spark.sql(s"ALTER TABLE $a RENAME TO $tmp")
-          spark.sql(s"ALTER TABLE $b RENAME TO $a")
-          spark.sql(s"ALTER TABLE $tmp RENAME TO $b")
+          Seq((a, tmp), (b, a), (tmp, b)).foreach { case (from, to) =>
+            spark.sql(s"ALTER TABLE $from RENAME TO $to")
+            moveEngineMeta(from, to)
+          }
           import spark.implicits._
           Seq("OK").toDF("status")
         case _ => throw new IllegalArgumentException("unsupported EXCHANGE form")
@@ -2172,7 +2007,10 @@ object ClickHouseSql {
       val re = ("(?is)^RENAME\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+TO\\s+" +
         "([A-Za-z_][A-Za-z0-9_.]*)\\s*;?\\s*$").r
       trimmed match {
-        case re(from, to) => spark.sql(s"ALTER TABLE $from RENAME TO $to")
+        case re(from, to) =>
+          val df = spark.sql(s"ALTER TABLE $from RENAME TO $to")
+          moveEngineMeta(from, to)
+          df
         case _ => throw new IllegalArgumentException("unsupported RENAME form")
       }
     }
@@ -2518,7 +2356,8 @@ object ClickHouseSql {
             JoinSpellings.applies(trimmed))
           JoinSpellings.rewrite(spark, trimmed, selectRunner(spark))
         else trimmed
-      val result = spark.sql(rewrite(expandSchemaTransformers(spark, preJoined)))
+      val result = spark.sql(rewrite(expandSchemaTransformers(spark,
+        bindDeclaredOrder(spark, preJoined))))
       // INSERT appends files to the table's layout: per-file skip indexes
       // no longer cover the new files (transparent pruning would silently
       // exclude the inserted rows) and cached SELECT results are stale —
@@ -2938,7 +2777,7 @@ object ClickHouseSql {
   private def chSchemaToStruct(s: String): org.apache.spark.sql.types.StructType = {
     val cd = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+(.+?)\\s*$".r
     org.apache.spark.sql.types.StructType.fromDDL(
-      splitTopLevel(s).map {
+      SqlLex.splitTop(s).map {
         case cd(n, t) => s"$n ${sparkTypeText(t)}"
         case other => throw new IllegalArgumentException(
           s"unparsable file() schema column '$other'")
@@ -3039,7 +2878,7 @@ object ClickHouseSql {
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     def parseKv(text: String): Map[String, String] =
-      splitTopLevel(text).map { kv =>
+      SqlLex.splitTop(text).map { kv =>
         val Array(k, v) = kv.split("=", 2).map(_.trim)
         // OVERRIDABLE flags are accepted + dropped (no override layer
         // on a single-session engine)
@@ -3110,50 +2949,23 @@ object ClickHouseSql {
   private val deltaLakeFnRe =
     "(?i)\\bdeltaLake(?:Local)?\\s*\\(\\s*'([^']+)'\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
 
-  /** Replace matches of `re` found OUTSIDE string literals only: the
-    * scan runs over the literal-masked copy (so a fn spelling INSIDE a
-    * literal never fires) while the argument text slices from the
-    * ORIGINAL string by match position. */
-  private def replaceOutsideLiterals(sql0: String,
-      re: scala.util.matching.Regex)(
-      build: (String => String) => String): String = {
-    var s = sql0
-    var budget = 8
-    var found = true
-    while (found && budget > 0) {
-      budget -= 1
-      val masked = JoinSpellings.maskLiterals(s)
-      re.findFirstMatchIn(masked) match {
-        case None => found = false
-        case Some(m) =>
-          val cur = s
-          val rep = build(g => {
-            val i = g.toInt
-            if (m.start(i) < 0) null else cur.substring(m.start(i), m.end(i))
-          })
-          s = s.substring(0, m.start) + rep + s.substring(m.end)
-      }
-    }
-    s
-  }
-
   private def resolveDeltaLakeFn(spark: SparkSession, sql0: String): String = {
     // *Cluster variants (TableFunctionObjectStorageCluster.cpp:
     // deltaLakeCluster/icebergCluster/hudiCluster — same read with a
     // cluster routing hint as arg 1): Spark IS the cluster here, so the
     // hint drops and the base function resolves the rest
-    val step0 = replaceOutsideLiterals(sql0,
+    val step0 = SqlLex.replaceAll(sql0,
       "(?i)\\b(deltaLake|iceberg|hudi)Cluster\\s*\\(\\s*'[^']*'\\s*,\\s*".r)(
-      g => s"${g("1")}(")
+      g => s"${g.group(1)}(")
     // table_changes('path', v1[, v2]) — the Delta CHANGE DATA FEED
     // read (round 16): per-commit change rows with _change_type +
     // _commit_version, from cdc files where a commit wrote them and
     // from dataChange adds (as inserts) otherwise
-    val step0c = replaceOutsideLiterals(step0,
+    val step0c = SqlLex.replaceAll(step0,
       ("(?i)\\btable_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*(\\d+)\\s*" +
         "(?:,\\s*(\\d+)\\s*)?\\)").r) { g =>
-      val df = graft.sources.DeltaLakeSource.readChanges(spark, g("1"),
-        g("2").toLong, Option(g("3")).map(_.toLong))
+      val df = graft.sources.DeltaLakeSource.readChanges(spark, g.group(1),
+        g.group(2).toLong, Option(g.group(3)).map(_.toLong))
       val view = s"graft_delta_cdf_${fileFnCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       view
@@ -3162,11 +2974,11 @@ object ClickHouseSql {
     // incremental append scan (round 16): rows appended strictly after
     // the from-snapshot; ranges containing overwrites/deletes/rewrites
     // refuse loudly
-    val step0d = replaceOutsideLiterals(step0c,
+    val step0d = SqlLex.replaceAll(step0c,
       ("(?i)\\biceberg_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*(\\d+)\\s*" +
         "(?:,\\s*(\\d+)\\s*)?\\)").r) { g =>
       val df = graft.sources.IcebergSource.readIncremental(spark,
-        g("1"), g("2").toLong, Option(g("3")).map(_.toLong))
+        g.group(1), g.group(2).toLong, Option(g.group(3)).map(_.toLong))
       val view = s"graft_ice_inc_${fileFnCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       view
@@ -3174,18 +2986,18 @@ object ClickHouseSql {
     // hudi_changes('path', 'fromInstant'[, 'toInstant']) — the Hudi
     // incremental query (round 16): rows whose winning event committed
     // strictly after the from-instant
-    val step0e = replaceOutsideLiterals(step0d,
+    val step0e = SqlLex.replaceAll(step0d,
       ("(?i)\\bhudi_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*'([^']*)'\\s*" +
         "(?:,\\s*'([^']*)'\\s*)?\\)").r) { g =>
-      val df = graft.sources.HudiSource.readIncremental(spark, g("1"),
-        g("2"), Option(g("3")))
+      val df = graft.sources.HudiSource.readIncremental(spark, g.group(1),
+        g.group(2), Option(g.group(3)))
       val view = s"graft_hudi_inc_${fileFnCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       view
     }
-    val step1 = replaceOutsideLiterals(step0e, deltaLakeFnRe) { g =>
-      val df = graft.sources.DeltaLakeSource.read(spark, g("1"),
-        Option(g("2")).map(_.toLong))
+    val step1 = SqlLex.replaceAll(step0e, deltaLakeFnRe) { g =>
+      val df = graft.sources.DeltaLakeSource.read(spark, g.group(1),
+        Option(g.group(2)).map(_.toLong))
       val view = s"graft_delta_fn_${fileFnCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       view
@@ -3194,20 +3006,20 @@ object ClickHouseSql {
     // native latest-file-slice selection with timeline awareness
     // (HudiMetadata.cpp); the optional second argument time-travels to
     // the newest completed instant at or before it
-    val step2 = replaceOutsideLiterals(step1,
+    val step2 = SqlLex.replaceAll(step1,
       // the instant stays a QUOTED group: the scan runs over the
       // literal-masked SQL, where digits inside quotes are hidden —
       // the argument text slices from the original by position
       "(?i)\\bhudi\\s*\\(\\s*'([^']+)'\\s*(?:,\\s*'([^']*)'\\s*)?\\)".r) { g =>
-      val df = graft.sources.HudiSource.read(spark, g("1"),
-        Option(g("2")))
+      val df = graft.sources.HudiSource.read(spark, g.group(1),
+        Option(g.group(2)))
       val view = s"graft_hudi_fn_${fileFnCounter.incrementAndGet()}"
       df.createOrReplaceTempView(view)
       view
     }
     // iceberg('path'[, snapshotId]) — native metadata/manifest replay
     // (IcebergMetadata.cpp)
-    replaceOutsideLiterals(step2,
+    SqlLex.replaceAll(step2,
       "(?i)\\biceberg\\s*\\(\\s*'([^']+)'\\s*(?:,\\s*(\\d+)\\s*)?\\)".r) { g =>
       // the reference's time-travel SETTINGS (Core/Settings.cpp:
       // iceberg_snapshot_id / iceberg_timestamp_ms, 0 = latest) apply
@@ -3216,8 +3028,8 @@ object ClickHouseSql {
         spark.conf.getOption(s"graft.ch.$name")
           .map(_.stripPrefix("'").stripSuffix("'").trim.toLong)
           .filter(_ != 0L)
-      val explicit = Option(g("2")).map(_.toLong)
-      val df = graft.sources.IcebergSource.read(spark, g("1"),
+      val explicit = Option(g.group(2)).map(_.toLong)
+      val df = graft.sources.IcebergSource.read(spark, g.group(1),
         explicit.orElse(setting("iceberg_snapshot_id")),
         if (explicit.isDefined) None else setting("iceberg_timestamp_ms"))
       val view = s"graft_iceberg_fn_${fileFnCounter.incrementAndGet()}"
@@ -3448,30 +3260,26 @@ object ClickHouseSql {
       changed = false
       guard += 1
       val call = "(?i)\\b([A-Za-z_][A-Za-z0-9_]*)\\s*(\\()".r
-      val hit = call.findAllMatchIn(s).flatMap { m =>
-        Option(paramViews.get(m.group(1).toLowerCase)).flatMap { body =>
-          balanced(s, m.start(2)).map { case (argsTxt, end) =>
-            (m.start, end, m.group(1), body, argsTxt)
-          }
-        }
-      }.toSeq.headOption
+      val hit = SqlLex.matchesIn(s, call).flatMap { m =>
+        val end = SqlLex.closeOf(s, m.start(2))
+        Option(paramViews.get(m.group(1).toLowerCase)).filter(_ => end > 0)
+          .map(body => (m.start, end, m.group(1), body,
+            s.substring(m.start(2) + 1, end - 1)))
+      }.nextOption()
       hit.foreach { case (start, end, name, body, argsTxt) =>
         val kv = "(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*=\\s*(.+?)\\s*$".r
-        val vals = splitTopLevel(argsTxt).map {
+        val vals = SqlLex.splitTop(argsTxt).map {
           case kv(k, v) => k -> v
           case other => throw new IllegalArgumentException(
             s"parameterized view $name: unparsable argument '$other'")
         }.toMap
         // substitute only OUTSIDE string literals of the body
-        val sub = body.split("'", -1).zipWithIndex.map { case (seg, i) =>
-          if (i % 2 == 1) seg
-          else paramRe.replaceAllIn(seg, m2 => {
-            val p = m2.group(1)
-            val v = vals.getOrElse(p, throw new IllegalArgumentException(
-              s"parameterized view $name: parameter '$p' not supplied"))
-            java.util.regex.Matcher.quoteReplacement(typedLiteral(v, m2.group(2)))
-          })
-        }.mkString("'")
+        val sub = SqlLex.replaceAll(body, paramRe) { m2 =>
+          val p = m2.group(1)
+          val v = vals.getOrElse(p, throw new IllegalArgumentException(
+            s"parameterized view $name: parameter '$p' not supplied"))
+          typedLiteral(v, m2.group(2))
+        }
         s = s.substring(0, start) + s"($sub) $name" + s.substring(end)
         changed = true
       }
@@ -3487,14 +3295,14 @@ object ClickHouseSql {
   /** Replace `{name:Type}` with the typed literal rendering of the
     * session's `param_<name>` setting; unset parameters fail like the
     * reference's UNKNOWN_QUERY_PARAMETER. */
-  private def substituteParams(spark: SparkSession, seg: String): String =
-    paramRe.replaceAllIn(seg, m => {
+  private def substituteParams(spark: SparkSession, sql: String): String =
+    SqlLex.replaceAll(sql, paramRe) { m =>
       val name = m.group(1)
       val v = spark.conf.getOption(s"graft.ch.param_$name").getOrElse(
         throw new IllegalArgumentException(
           s"Substitution '$name' is not set (SET param_$name = ...)"))
-      java.util.regex.Matcher.quoteReplacement(typedLiteral(v, m.group(2)))
-    })
+      typedLiteral(v, m.group(2))
+    }
 
   /** Render a parameter value as a literal of the declared reference
     * type — the type check is what separates parameters from textual
@@ -3733,7 +3541,7 @@ object ClickHouseSql {
     stmt.trim match {
       case upd(t, assigns, pred) =>
         val kv = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
-        val asn = splitTopLevel(assigns).map {
+        val asn = SqlLex.splitTop(assigns).map {
           case kv(c, e) => c -> expr(rewrite(e))
           case other => throw new IllegalArgumentException(
             s"unparsable UPDATE assignment '$other'")
@@ -3805,6 +3613,9 @@ object ClickHouseSql {
       refreshSkipIndexes(spark, t)
       queryCache.clear()
     }
+    /** The column order a positional INSERT into `t` binds to. */
+    def declared(t: String): Seq[String] =
+      declaredOrder(spark, t).getOrElse(spark.table(t).columns.toSeq)
 
     stmt.trim match {
       case add(t, ifNot, name, ctype, dflt, first, after) =>
@@ -3818,16 +3629,18 @@ object ClickHouseSql {
             .map(d => expr(rewrite(d)).cast(st))
             .getOrElse(lit(null).cast(st))
           val withCol = base.withColumn(name, value)
+          val before = declared(t)
           val order: Seq[String] =
-            if (first != null) name +: base.columns.toSeq
+            if (first != null) name +: before
             else if (after != null) {
-              val i = base.columns.indexOf(after)
+              val i = before.indexOf(after)
               if (i < 0) throw new IllegalArgumentException(
                 s"AFTER column $after not found in $t")
-              val (pre, post) = base.columns.toSeq.splitAt(i + 1)
+              val (pre, post) = before.splitAt(i + 1)
               pre ++ (name +: post)
-            } else base.columns.toSeq :+ name
+            } else before :+ name
           rewriteTable(t, withCol.select(order.map(col): _*))
+          redeclare(spark, t, order)
         }
         Seq("OK").toDF("status")
       case drop(t, ifEx, name) =>
@@ -3835,7 +3648,11 @@ object ClickHouseSql {
         if (!base.columns.contains(name)) {
           if (ifEx == null) throw new IllegalArgumentException(
             s"column $name does not exist in $t")
-        } else rewriteTable(t, base.drop(name))
+        } else {
+          val before = declared(t)
+          rewriteTable(t, base.drop(name))
+          redeclare(spark, t, before.filterNot(_ == name))
+        }
         Seq("OK").toDF("status")
       case modify(t, ifEx, name, ctype) =>
         val base = spark.table(t)
@@ -3852,7 +3669,11 @@ object ClickHouseSql {
         if (!base.columns.contains(from)) {
           if (ifEx == null) throw new IllegalArgumentException(
             s"column $from does not exist in $t")
-        } else rewriteTable(t, base.withColumnRenamed(from, to))
+        } else {
+          val before = declared(t)
+          rewriteTable(t, base.withColumnRenamed(from, to))
+          redeclare(spark, t, before.map(c => if (c == from) to else c))
+        }
         Seq("OK").toDF("status")
       case _ => throw new IllegalArgumentException(
         "unsupported ALTER COLUMN form")
@@ -3966,7 +3787,7 @@ object ClickHouseSql {
       case wrap(_, inner) => sparkTypeText(inner)
       case arr(inner) => s"ARRAY<${sparkTypeText(inner)}>"
       case map(inner) =>
-        val parts = splitTopLevel(inner)
+        val parts = SqlLex.splitTop(inner)
         s"MAP<${sparkTypeText(parts(0))}, ${sparkTypeText(parts(1))}>"
       case dec(p, sc) => s"DECIMAL($p, $sc)"
       case decN(w, sc) =>
@@ -4005,11 +3826,14 @@ object ClickHouseSql {
     * sampling expression, table comment, per-column comments, and
     * per-column DEFAULT expressions. Physical-layout hints carried as
     * properties (Catalyst sorts/samples on demand); SHOW CREATE renders
-    * them back and MATERIALIZE COLUMN rewrites from the defaults. */
+    * them back and MATERIALIZE COLUMN rewrites from the defaults.
+    * `columns` is the declared column order, kept only when it differs
+    * from the catalog's: Spark moves PARTITION BY columns last. */
   final case class EngineMeta(orderBy: Option[String] = None,
       sampleBy: Option[String] = None, comment: Option[String] = None,
       colComments: Map[String, String] = Map.empty,
-      colDefaults: Map[String, String] = Map.empty)
+      colDefaults: Map[String, String] = Map.empty,
+      columns: Seq[String] = Nil)
   private val engineMeta =
     scala.collection.concurrent.TrieMap.empty[String, EngineMeta]
   /** Dropped tables' engine metadata, restored by UNDROP. */
@@ -4036,10 +3860,12 @@ object ClickHouseSql {
         .findFirstMatchIn(tail).map(_.group(1))
       val colComments = scala.collection.mutable.Map[String, String]()
       val colDefaults = scala.collection.mutable.Map[String, String]()
-      splitTopLevel(m.group(2)).foreach { colDef =>
+      val declared = Seq.newBuilder[String]
+      SqlLex.splitTop(m.group(2)).foreach { colDef =>
         "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+(.*)$".r
           .findFirstMatchIn(colDef).foreach { cm =>
             val cname = cm.group(1)
+            declared += cname
             val rest = cm.group(2)
             ("(?is)\\bDEFAULT\\s+(.+?)(?=\\s+(?:CODEC|COMMENT|TTL)\\b|$)").r
               .findFirstMatchIn(rest)
@@ -4048,8 +3874,13 @@ object ClickHouseSql {
               .foreach(c => colComments(cname) = c.group(1))
           }
       }
+      val cols = declared.result()
+      val (part, rest) = cols.partition(c =>
+        createPartitionColumn(tail).exists(_.equalsIgnoreCase(c)))
+      val catalogOrder = rest ++ part
       engineMeta.put(name, EngineMeta(clause("ORDER\\s+BY"),
-        clause("SAMPLE\\s+BY"), comment, colComments.toMap, colDefaults.toMap))
+        clause("SAMPLE\\s+BY"), comment, colComments.toMap, colDefaults.toMap,
+        if (cols == catalogOrder) Nil else cols))
     }
   }
 
@@ -4156,7 +3987,7 @@ object ClickHouseSql {
       case Some(m) =>
         val ifNot = if (m.group(1) != null) "IF NOT EXISTS " else ""
         val name = m.group(2)
-        val cols = splitTopLevel(m.group(3)).map { colDef =>
+        val cols = SqlLex.splitTop(m.group(3)).map { colDef =>
           val cd = "(?s)^([A-Za-z_][A-Za-z0-9_]*)\\s+(.*)$".r
           colDef.trim match {
             case cd(cname, ctype0) =>
@@ -4168,13 +3999,59 @@ object ClickHouseSql {
               throw new IllegalArgumentException(s"unparsable column def '$other'")
           }
         }
-        val tail = m.group(4)
-        val part = "(?is)\\bPARTITION\\s+BY\\s+([A-Za-z_][A-Za-z0-9_]*)\\b".r
-          .findFirstMatchIn(tail).map(p => s" PARTITIONED BY (${p.group(1)})")
-          .getOrElse("")
+        val part = createPartitionColumn(m.group(4))
+          .map(p => s" PARTITIONED BY ($p)").getOrElse("")
         s"CREATE TABLE $ifNot$name (${cols.mkString(", ")}) USING parquet$part"
     }
   }
+
+  /** The bare-column `PARTITION BY` of a CREATE TABLE's engine clauses. */
+  private def createPartitionColumn(tail: String): Option[String] =
+    "(?is)\\bPARTITION\\s+BY\\s+([A-Za-z_][A-Za-z0-9_]*)\\b".r
+      .findFirstMatchIn(tail).map(_.group(1))
+
+  /** The column order a positional INSERT into `t` binds to, when it is
+    * not the catalog's: the declared order of its CREATE TABLE (see
+    * EngineMeta.columns), then any column added since, in catalog order. */
+  private def declaredOrder(spark: SparkSession, t: String): Option[Seq[String]] = {
+    val declared = engineMetaOf(t).columns
+    if (declared.isEmpty) None
+    else {
+      val cur = spark.table(t).columns.toSeq
+      val known = declared.map(_.toLowerCase).toSet
+      val order = declared.flatMap(d => cur.find(_.equalsIgnoreCase(d))) ++
+        cur.filterNot(c => known(c.toLowerCase))
+      Some(order).filter(_ != cur)
+    }
+  }
+
+  /** Records `cols` as `t`'s declared column order after an ALTER that
+    * added, dropped or renamed a column. */
+  private def redeclare(spark: SparkSession, t: String, cols: Seq[String]): Unit = {
+    val cur = spark.table(t).columns.toSeq
+    if (cols != cur || engineMeta.contains(t))
+      engineMeta.put(t, engineMetaOf(t).copy(columns =
+        if (cols == cur) Nil else cols))
+  }
+
+  /** Moves a table's engine metadata along with a rename of the table. */
+  private def moveEngineMeta(from: String, to: String): Unit =
+    engineMeta.remove(from) match {
+      case Some(m) => engineMeta.put(to, m)
+      case None => engineMeta.remove(to)
+    }
+
+  private val positionalInsertRe = ("(?is)^(INSERT\\s+INTO\\s+(?:TABLE\\s+)?" +
+    "([A-Za-z_][A-Za-z0-9_.]*))\\s+(?=SELECT\\b|WITH\\b|VALUES\\b)").r
+
+  /** A positional `INSERT INTO t SELECT/VALUES …` with t's declared column
+    * list spelled out, so the values bind in declared order. */
+  private def bindDeclaredOrder(spark: SparkSession, stmt: String): String =
+    positionalInsertRe.findFirstMatchIn(stmt).flatMap { m =>
+      declaredOrder(spark, m.group(2)).map(cols =>
+        s"${m.group(1)} (${cols.map(c => s"`$c`").mkString(", ")}) " +
+          stmt.substring(m.end))
+    }.getOrElse(stmt)
 
   // ---- schema-aware SELECT transformers (ASTColumnsTransformers) ------
   //
@@ -4185,27 +4062,10 @@ object ClickHouseSql {
 
   private def fromTableColumns(spark: SparkSession, s: String): Option[Seq[String]] = {
     val from = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_.]*)".r
-    from.findFirstMatchIn(s).flatMap { m =>
+    SqlLex.firstMatch(s, from).flatMap { m =>
       try Some(spark.table(m.group(1)).columns.toSeq)
       catch { case _: Exception => None }
     }
-  }
-
-  /** Content between the '(' at `open` and its balanced ')'. */
-  private def balanced(s: String, open: Int): Option[(String, Int)] = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return Some((s.substring(open + 1, i), i + 1))
-        case _ =>
-      }
-      i += 1
-    }
-    None
   }
 
   private def expandSchemaTransformers(spark: SparkSession, sql0: String): String = {
@@ -4214,11 +4074,12 @@ object ClickHouseSql {
 
     // * REPLACE(e1 AS c1, ...)
     val rep = "(?is)\\*\\s+REPLACE\\s*(\\()".r
-    rep.findFirstMatchIn(s).foreach { m =>
-      (balanced(s, m.start(1)), colsOpt) match {
-        case (Some((body, end)), Some(cols)) =>
+    SqlLex.firstMatch(s, rep).foreach { m =>
+      val end = SqlLex.closeOf(s, m.start(1))
+      colsOpt match {
+        case Some(cols) if end > 0 =>
           val asRe = "(?is)^(.*?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-          val repl = splitTopLevel(body).collect {
+          val repl = SqlLex.splitTop(s.substring(m.start(1) + 1, end - 1)).collect {
             case asRe(e, c) => c.toLowerCase -> e.trim
           }.toMap
           val select = cols.map(c =>
@@ -4231,24 +4092,21 @@ object ClickHouseSql {
     // COLUMNS('re') [APPLY(f)]
     val colsRe =
       "(?is)\\bCOLUMNS\\s*\\(\\s*'([^']+)'\\s*\\)(\\s+APPLY\\s*\\(\\s*([A-Za-z0-9_]+)\\s*\\))?".r
-    s = colsRe.replaceAllIn(s, m => colsOpt match {
+    s = SqlLex.replaceAll(s, colsRe)(m => colsOpt match {
       case Some(cols) =>
         val re = m.group(1).r
         val matched = cols.filter(c => re.findFirstIn(c).isDefined)
-        val rendered =
-          if (m.group(3) == null) matched.mkString(", ")
-          else matched.map(c => s"${m.group(3)}($c) AS `${m.group(3)}($c)`").mkString(", ")
-        java.util.regex.Matcher.quoteReplacement(rendered)
-      case None => java.util.regex.Matcher.quoteReplacement(m.matched)
+        if (m.group(3) == null) matched.mkString(", ")
+        else matched.map(c => s"${m.group(3)}($c) AS `${m.group(3)}($c)`").mkString(", ")
+      case None => m.matched
     })
 
     // * APPLY(f)
     val starApply = "(?is)\\*\\s+APPLY\\s*\\(\\s*([A-Za-z0-9_]+)\\s*\\)".r
-    s = starApply.replaceAllIn(s, m => colsOpt match {
+    s = SqlLex.replaceAll(s, starApply)(m => colsOpt match {
       case Some(cols) =>
-        java.util.regex.Matcher.quoteReplacement(
-          cols.map(c => s"${m.group(1)}($c) AS `${m.group(1)}($c)`").mkString(", "))
-      case None => java.util.regex.Matcher.quoteReplacement(m.matched)
+        cols.map(c => s"${m.group(1)}($c) AS `${m.group(1)}($c)`").mkString(", ")
+      case None => m.matched
     })
     s
   }

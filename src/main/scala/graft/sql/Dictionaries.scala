@@ -98,7 +98,7 @@ object Dictionaries {
     stmt match {
       case ddlRe(ifNot, name, colsRaw, pk, srcTable) =>
         if (ifNot != null && dicts.containsKey(name)) return status(spark)
-        val colDefs = ClickHouseSql.splitTopLevelPublic(colsRaw).map { cd0 =>
+        val colDefs = SqlLex.splitTop(colsRaw).map { cd0 =>
           // HIERARCHICAL marks the key→parent attribute
           // (DictionaryStructure hierarchical flag); INJECTIVE is a
           // lookup-optimization hint — recorded/dropped respectively

@@ -64,11 +64,8 @@ object JoinSpellings {
   /** Cheap guard: does the statement contain one of the spellings
     * outside string literals? Ordinary SQL never pays rewrite cost. */
   def applies(sql: String): Boolean = {
-    val outside = sql.split("'", -1).zipWithIndex
-      .collect { case (s, i) if i % 2 == 0 => s }.mkString(" ")
-    anyJoinRe.findFirstIn(outside).isDefined ||
-      asofJoinRe.findFirstIn(outside).isDefined ||
-      pasteJoinRe.findFirstIn(outside).isDefined
+    val m = SqlLex.mask(sql)
+    Seq(anyJoinRe, asofJoinRe, pasteJoinRe).exists(_.findFirstIn(m).isDefined)
   }
 
   /** Apply all three spellings. `run` evaluates dialect SQL to a
@@ -90,36 +87,7 @@ object JoinSpellings {
     "(?i)\\b(?:(LEFT|INNER)\\s+)?ASOF\\s+(?:(LEFT|INNER)\\s+)?JOIN\\b".r
   private val pasteJoinRe = "(?i)\\bPASTE\\s+JOIN\\b".r
 
-  // ---- lexical helpers -------------------------------------------------
-
-  /** Same-length copy with single-quoted literal contents blanked to
-    * U+0001, so regex/bracket scans never trip on quoted text while
-    * indices stay valid in the ORIGINAL string. */
-  private[sql] def maskLiterals(s: String): String = {
-    val sb = new StringBuilder(s)
-    var i = 0
-    var in = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') in = !in
-      else if (in) sb.setCharAt(i, '\u0001')
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Index just past the ')' matching the '(' at `open` (masked text). */
-  private[sql] def closeOf(m: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < m.length) {
-      val c = m.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i + 1 }
-      i += 1
-    }
-    throw new IllegalArgumentException("join rewrite: unbalanced parentheses")
-  }
+  // ---- lexical helpers (masked text: SqlLex.mask) ----------------------
 
   private val relStopWords = Set("on", "using", "where", "group", "having",
     "order", "limit", "settings", "union", "intersect", "except",
@@ -152,7 +120,8 @@ object JoinSpellings {
       throw new IllegalArgumentException("join rewrite: missing relation")
     val (text, isSub, bodyEnd) =
       if (m.charAt(i) == '(') {
-        val e = closeOf(m, i)
+        val e = SqlLex.closeOf(m, i)
+        require(e > 0, "join rewrite: unbalanced parentheses")
         (s.substring(i, e), true, e)
       } else identRe.findFirstIn(m.substring(i)) match {
         case Some(t) => (t, false, i + t.length)
@@ -197,53 +166,13 @@ object JoinSpellings {
         "aliased subquery) immediately after FROM")
   }
 
-  /** End (exclusive) of a join condition starting at `from`: stops at a
-    * depth-0 clause keyword, an enclosing ')' (depth < 0), or EOS. */
-  private def condEnd(m: String, from: Int): Int = {
-    val stops = Set("where", "group", "having", "order", "limit",
-      "settings", "union", "intersect", "except", "qualify", "format",
-      "into", "window", "offset")
-    var depth = 0
-    var i = from
-    while (i < m.length) {
-      val c = m.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth < 0) return i }
-      else if (depth == 0 && (c.isLetter || c == '_') &&
-          (i == 0 || !(m.charAt(i - 1).isLetterOrDigit ||
-            m.charAt(i - 1) == '_' || m.charAt(i - 1) == '.'))) {
-        val w = wordRe.findFirstIn(m.substring(i)).getOrElse("")
-        if (stops(w.toLowerCase)) return i
-        i += math.max(w.length - 1, 0)
-      }
-      i += 1
-    }
-    m.length
-  }
-
-  /** Split a condition on depth-0 ANDs (masked scan, original slices). */
-  private def splitAnd(s: String, m: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var last = 0
-    var i = 0
-    while (i < m.length) {
-      val c = m.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'a' || c == 'A') && i + 3 <= m.length &&
-          m.substring(i, i + 3).equalsIgnoreCase("and") &&
-          (i == 0 || !(m.charAt(i - 1).isLetterOrDigit || m.charAt(i - 1) == '_')) &&
-          (i + 3 == m.length || !(m.charAt(i + 3).isLetterOrDigit || m.charAt(i + 3) == '_'))) {
-        parts += s.substring(last, i)
-        last = i + 3
-        i += 2
-      }
-      i += 1
-    }
-    parts += s.substring(last)
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** End (exclusive) of a join condition starting at `from`: the first
+    * clause keyword on its bracket level, else the end of its scope. */
+  private def condEnd(m: String, from: Int): Int =
+    Seq("where", "group", "having", "order", "limit", "settings", "union",
+      "intersect", "except", "qualify", "format", "into", "window", "offset")
+      .flatMap(SqlLex.find(m, _, from)).map(_._1).minOption
+      .getOrElse(SqlLex.scopeEnd(m, from))
 
   /** A simple (optionally qualified) column reference. */
   private val colRefRe =
@@ -290,30 +219,21 @@ object JoinSpellings {
     * the ASOF view's output names (left cols keep their names, right
     * cols surface as asof_<c>) — outside string literals. */
   private def remapRefs(sql: String, lq: Option[String], rq: Option[String],
-      rightOnly: Seq[String]): String =
-    sql.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg
-      else {
-        var x = seg
-        rq.foreach { q =>
-          x = ("(?i)\\b" + java.util.regex.Pattern.quote(q) +
-            "\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)").r
-            .replaceAllIn(x, mm => "asof_" + mm.group(1))
-        }
-        lq.foreach { q =>
-          x = ("(?i)\\b" + java.util.regex.Pattern.quote(q) +
-            "\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)").r
-            .replaceAllIn(x, mm => mm.group(1))
-        }
-        rightOnly.foreach { rc =>
-          // a bare right-only name (not qualified, not a function call)
-          x = x.replaceAll(
-            "(?i)(?<![\\w.`])" + java.util.regex.Pattern.quote(rc) +
-              "\\b(?!\\s*\\()", "asof_" + rc)
-        }
-        x
-      }
-    }.mkString("'")
+      rightOnly: Seq[String]): String = {
+    var x = sql
+    rq.foreach(q => x = SqlLex.replaceAll(x, qualified(q))(m => "asof_" + m.group(1)))
+    lq.foreach(q => x = SqlLex.replaceAll(x, qualified(q))(_.group(1)))
+    rightOnly.foreach { rc =>
+      // a bare right-only name (not qualified, not a function call)
+      x = SqlLex.replaceAll(x, ("(?i)(?<![\\w.`])" +
+        java.util.regex.Pattern.quote(rc) + "\\b(?!\\s*\\()").r)(_ => "asof_" + rc)
+    }
+    x
+  }
+
+  /** `q.col` for the qualifier `q`; group 1 is the column. */
+  private def qualified(q: String) = ("(?i)\\b" +
+    java.util.regex.Pattern.quote(q) + "\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)").r
 
   // ---- ANY JOIN --------------------------------------------------------
 
@@ -322,7 +242,7 @@ object JoinSpellings {
     var s = sql0
     var budget = 4
     while (budget > 0) {
-      val m = maskLiterals(s)
+      val m = SqlLex.mask(s)
       anyJoinRe.findFirstMatchIn(m) match {
         case None => return s
         case Some(jm) =>
@@ -381,12 +301,13 @@ object JoinSpellings {
     val rest = m.substring(ci)
     if (usingRe.findFirstMatchIn(rest).isDefined) {
       val open = m.indexOf('(', ci)
-      val close = closeOf(m, open)
+      val close = SqlLex.closeOf(m, open)
+      require(close > 0, "join rewrite: unbalanced parentheses")
       s.substring(open + 1, close - 1).split(',').map(_.trim).toSeq
     } else if (onRe.findFirstIn(rest).isDefined) {
       val cs = ci + 2
       val ce = condEnd(m, cs)
-      val conj = splitAnd(s.substring(cs, ce), m.substring(cs, ce))
+      val conj = SqlLex.splitTop(s.substring(cs, ce), "AND")
       val dq = dedupRel.qualifier
       val dCols = dedupDf.columns.map(_.toLowerCase).toSet
       conj.map { c =>
@@ -439,7 +360,7 @@ object JoinSpellings {
     var s = sql0
     var budget = 4
     while (budget > 0) {
-      val m = maskLiterals(s)
+      val m = SqlLex.mask(s)
       asofJoinRe.findFirstMatchIn(m) match {
         case None => return s
         case Some(jm) =>
@@ -470,7 +391,8 @@ object JoinSpellings {
     val (lks, rks, ltc, rtc, op, ce) =
       if ("(?i)^USING\\s*\\(".r.findFirstIn(rest).isDefined) {
         val open = m.indexOf('(', ci)
-        val close = closeOf(m, open)
+        val close = SqlLex.closeOf(m, open)
+        require(close > 0, "join rewrite: unbalanced parentheses")
         val cols = s.substring(open + 1, close - 1).split(',').map(_.trim).toSeq
         require(cols.length >= 2,
           "ASOF JOIN USING needs at least (key, asof_column)")
@@ -478,7 +400,7 @@ object JoinSpellings {
       } else if ("(?i)^ON\\b".r.findFirstIn(rest).isDefined) {
         val cs = ci + 2
         val cend = condEnd(m, cs)
-        val conj = splitAnd(s.substring(cs, cend), m.substring(cs, cend))
+        val conj = SqlLex.splitTop(s.substring(cs, cend), "AND")
         val ineqRe = "(?s)^(.*?)(<=|>=|<|>)(.*)$".r
         var eqL = Vector.empty[String]
         var eqR = Vector.empty[String]
@@ -582,7 +504,7 @@ object JoinSpellings {
     var s = sql0
     var budget = 4
     while (budget > 0) {
-      val m = maskLiterals(s)
+      val m = SqlLex.mask(s)
       pasteJoinRe.findFirstMatchIn(m) match {
         case None => return s
         case Some(jm) =>
@@ -604,14 +526,7 @@ object JoinSpellings {
             s.substring(rRel.end)
           // both sides' columns keep their names — strip the qualifiers
           s = Seq(lRel.qualifier, rRel.qualifier).flatten
-            .foldLeft(out) { (x, q) =>
-              x.split("'", -1).zipWithIndex.map { case (seg, i) =>
-                if (i % 2 == 1) seg
-                else ("(?i)\\b" + java.util.regex.Pattern.quote(q) +
-                  "\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)").r
-                  .replaceAllIn(seg, mm => mm.group(1))
-              }.mkString("'")
-            }
+            .foldLeft(out)((x, q) => SqlLex.replaceAll(x, qualified(q))(_.group(1)))
       }
     }
     s

@@ -36,7 +36,7 @@ object KqlTranslator {
     * for the stages that need column lists (extend-replace, mv-expand);
     * schema resolution plans but never runs a job. */
   def translate(spark: SparkSession, kql: String): String = {
-    val stages = splitPipes(kql.trim.stripSuffix(";"))
+    val stages = SqlLex.splitTop(kql.trim.stripSuffix(";"), "|")
     require(stages.nonEmpty, "KQL: empty statement")
     val head = stages.head.trim
     var cur: String =
@@ -87,7 +87,7 @@ object KqlTranslator {
   /** `print [name =] expr, ...` → one-row select; unnamed columns are
     * print_0, print_1, … (the KQL convention). */
   private def printStage(st: String): String = {
-    val items = splitTop(st.trim.drop("print".length), ',')
+    val items = SqlLex.splitTop(st.trim.drop("print".length))
     val sel = items.zipWithIndex.map { case (it, i) =>
       it.trim match {
         case named(n, e) => s"${expr(e)} AS $n"
@@ -101,7 +101,7 @@ object KqlTranslator {
 
   /** `a, b = expr, c` — a projection list with KQL `name = expr` aliases. */
   private def projList(body: String): String =
-    splitTop(body, ',').map(_.trim).map {
+    SqlLex.splitTop(body).map {
       case named(n, e) => s"${expr(e)} AS $n"
       case e => expr(e)
     }.mkString(", ")
@@ -110,7 +110,7 @@ object KqlTranslator {
     * column of the same name (KQL_ReleaseNote.md bug-fix entry). */
   private def extendStage(spark: SparkSession, cur: String,
       body: String): String = {
-    val adds = splitTop(body, ',').map(_.trim).map {
+    val adds = SqlLex.splitTop(body).map {
       case named(n, e) => (n, expr(e))
       case e => throw new IllegalArgumentException(
         s"KQL extend: expected name = expr, got '$e'")
@@ -126,7 +126,7 @@ object KqlTranslator {
   /** `sort by c1 [asc|desc], c2 …` — KQL defaults to DESC
     * (ParserKQLSort.cpp:49). */
   private def sortList(body: String): String =
-    splitTop(body, ',').map(_.trim).map { item =>
+    SqlLex.splitTop(body).map { item =>
       val m = "(?is)^(.*?)\\s+(asc|desc)(\\s+nulls\\s+(first|last))?$".r
       item match {
         case m(e, dir, _, nulls) =>
@@ -139,9 +139,12 @@ object KqlTranslator {
   /** `summarize [alias =] agg(…)[, …] [by key[, …]]` with the
     * reference's output-alias rules. */
   private def summarizeStage(cur: String, body0: String): String = {
-    val (aggPart, byPart) = splitByKeyword(body0, "by")
+    val (aggPart, byPart) = SqlLex.find(body0, "by") match {
+      case Some((a, b)) => (body0.substring(0, a), Some(body0.substring(b)))
+      case None => (body0, None)
+    }
     var colN = 0
-    val keys = byPart.toSeq.flatMap(splitTop(_, ',')).map(_.trim).map {
+    val keys = byPart.toSeq.flatMap(SqlLex.splitTop(_)).map {
       case named(n, e) => (expr(e), n)
       case e if e.matches("^[A-Za-z_][A-Za-z0-9_]*$") => (e, e)
       case e =>
@@ -152,7 +155,7 @@ object KqlTranslator {
           case None => colN += 1; (expr(e), s"Columns$colN")
         }
     }
-    val aggs = splitTop(aggPart, ',').map(_.trim).filter(_.nonEmpty).map {
+    val aggs = SqlLex.splitTop(aggPart).map {
       case named(n, e) => s"${aggExpr(e)._1} AS $n"
       case e => val (sql, alias) = aggExpr(e); s"$sql AS $alias"
     }
@@ -168,7 +171,7 @@ object KqlTranslator {
     e.trim match {
       case call(fn0, args0) =>
         val fn = fn0.toLowerCase
-        val args = splitTop(args0, ',').map(_.trim).filter(_.nonEmpty)
+        val args = SqlLex.splitTop(args0)
         def aliasFor(a: Seq[String]): String = {
           val base = a.headOption.filter(_.matches("^[A-Za-z_][A-Za-z0-9_]*$"))
             .map(c => s"_$c").getOrElse("_")
@@ -236,7 +239,7 @@ object KqlTranslator {
       "(?:by\\s+(.+))?$").r
     body0.trim match {
       case m0(alias, fn0, arg0, dflt0, axis, from0, to0, step0, by0) =>
-        val keys = Option(by0).toSeq.flatMap(splitTop(_, ',')).map(_.trim)
+        val keys = Option(by0).toSeq.flatMap(SqlLex.splitTop(_))
         val dflt = Option(dflt0).getOrElse("0")
         // timespan steps (1h / 30m / 15s / 1d) → seconds; a datetime
         // axis then bins over epoch seconds
@@ -342,8 +345,13 @@ object KqlTranslator {
     e = "(?i)\\bdatetime\\s*\\(\\s*([0-9TZz: .-]+?)\\s*\\)".r
       .replaceAllIn(e, m => java.util.regex.Matcher.quoteReplacement(
         s"TIMESTAMP ${reg(normalizeDt(m.group(1)))}"))
-    // dynamic([x, y, …]) → array(x, y, …) (balanced)
-    e = rewriteDynamic(e)
+    // dynamic([x, y, …]) → array(x, y, …)
+    e = rewriteCall(e, "dynamic", a => {
+      val inner = a.mkString(", ")
+      if (inner.startsWith("[") && inner.endsWith("]"))
+        s"array(${inner.substring(1, inner.length - 1)})"
+      else s"array($inner)"
+    })
     // operators — longest spellings first
     e = e.replaceAll("(?i)\\bmatches\\s+regex\\b", " RLIKE ")
     e = e.replaceAll("!~", " __KQL_NEQI__ ")
@@ -360,21 +368,28 @@ object KqlTranslator {
       "todouble" -> "DOUBLE", "toreal" -> "DOUBLE",
       "tobool" -> "BOOLEAN", "todatetime" -> "TIMESTAMP")
       .foreach { case (k, t) =>
-        e = e.replaceAll(s"(?i)\\b$k\\s*\\(", s"CAST__KQL__${t}__(")
+        e = rewriteCall(e, k, a => s"CAST(${a.mkString(", ")} AS $t)")
       }
-    // CAST__KQL__T__(x) → CAST(x AS T) (balanced rewrite)
-    e = rewriteCastMarkers(e)
-    // isnull/isempty family (balanced args)
-    e = rewriteUnaryPredicate(e, "isnotnull", x => s"(($x) IS NOT NULL)")
-    e = rewriteUnaryPredicate(e, "isnull", x => s"(($x) IS NULL)")
-    e = rewriteUnaryPredicate(e, "isnotempty",
-      x => s"(($x) IS NOT NULL AND ($x) <> ${reg("")})")
-    e = rewriteUnaryPredicate(e, "isempty",
-      x => s"(($x) IS NULL OR ($x) = ${reg("")})")
+    // isnull/isempty family
+    Seq[(String, String => String)](
+      "isnotnull" -> (x => s"(($x) IS NOT NULL)"),
+      "isnull" -> (x => s"(($x) IS NULL)"),
+      "isnotempty" -> (x => s"(($x) IS NOT NULL AND ($x) <> ${reg("")})"),
+      "isempty" -> (x => s"(($x) IS NULL OR ($x) = ${reg("")})"))
+      .foreach { case (fn, out) => e = rewriteCall(e, fn, a => out(a.mkString(", "))) }
     // bin(x, n) → floor-to-multiple
-    e = rewriteBin(e)
+    e = rewriteCall(e, "bin", a => {
+      require(a.length == 2, "KQL bin(value, roundTo) takes two arguments")
+      s"(FLOOR((${a(0)}) / (${a(1)})) * (${a(1)}))"
+    })
     // case(p1, v1, ..., default) → CASE WHEN chain
-    e = rewriteCase(e)
+    e = rewriteCall(e, "case", a => {
+      require(a.length >= 3 && a.length % 2 == 1,
+        "KQL case(p1, v1, …, default) needs pred/value pairs + a default")
+      val whens = a.init.grouped(2)
+        .map(p => s"WHEN ${p(0)} THEN ${p(1)}").mkString(" ")
+      s"(CASE $whens ELSE ${a.last} END)"
+    })
     // the KQLFunctionFactory scalar tail (string/array/datetime/binary)
     e = rewriteKqlFunctions(e, lits, reg)
     // x[i] → element_at(x, i+1) (KQL indexes from 0)
@@ -422,52 +437,15 @@ object KqlTranslator {
     * pass through raw. */
   private def liftStrings(s: String, reg: String => String): String = {
     val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') {
-        val e = s.indexOf('\'', i + 1)
-        require(e >= 0, "KQL: unterminated string literal")
-        sb.append(reg(s.substring(i + 1, e)))
-        i = e + 1
-      } else if (c == '"') {
-        val content = new StringBuilder
-        var j = i + 1
-        var closed = false
-        while (j < s.length && !closed) {
-          val d = s.charAt(j)
-          if (d == '\\' && j + 1 < s.length) {
-            content.append(s.charAt(j + 1)); j += 2
-          } else if (d == '"') { closed = true; j += 1 }
-          else { content.append(d); j += 1 }
-        }
-        require(closed, "KQL: unterminated string literal")
-        sb.append(reg(content.toString))
-        i = j
-      } else { sb.append(c); i += 1 }
+    var last = 0
+    SqlLex.literals(s).filter(l => s.charAt(l._1) != '`').foreach {
+      case (a, b) =>
+        val body = s.substring(a + 1, b - 1)
+        sb.append(s.substring(last, a)).append(reg(
+          if (s.charAt(a) == '\'') body else body.replaceAll("(?s)\\\\(.)", "$1")))
+        last = b
     }
-    sb.toString
-  }
-
-  /** dynamic([x, y, …]) → array(x, y, …) — balanced. */
-  private def rewriteDynamic(e0: String): String = {
-    var e = e0
-    val re = "(?i)\\bdynamic\\s*\\(".r
-    var m = re.findFirstMatchIn(e)
-    var guard = 0
-    while (m.isDefined && guard < 32) {
-      guard += 1
-      val open = e.indexOf('(', m.get.start)
-      val close = JoinSpellings.closeOf(e, open)
-      val inner = e.substring(open + 1, close - 1).trim
-      val body =
-        if (inner.startsWith("[") && inner.endsWith("]"))
-          inner.substring(1, inner.length - 1)
-        else inner
-      e = e.substring(0, m.get.start) + s"array($body)" + e.substring(close)
-      m = re.findFirstMatchIn(e)
-    }
-    e
+    sb.append(s.substring(last)).toString
   }
 
   /** The ParserKQLOperators.cpp catalog: contains/startswith/endswith/
@@ -511,7 +489,7 @@ object KqlTranslator {
       .replaceAllIn(e, m => {
         val a = m.group(1); val neg = m.group(2) == "!"
         val ci = m.group(3) == "~"
-        val items = splitTop(m.group(4), ',').map(_.trim)
+        val items = SqlLex.splitTop(m.group(4))
         val (lhs, list) =
           if (ci) (s"lower($a)", items.map(i => s"lower($i)"))
           else (a, items)
@@ -543,10 +521,10 @@ object KqlTranslator {
           case "hassuffix" => tokenSuffix(a, b, ci = true)
           case "hassuffix_cs" => tokenSuffix(a, b, ci = false)
           case "has_any" =>
-            splitTop(b, ',').map(x => tokenMatch(a, x.trim, "has_any", ci = true))
+            SqlLex.splitTop(b).map(x => tokenMatch(a, x, "has_any", ci = true))
               .mkString("(", " OR ", ")")
           case "has_all" =>
-            splitTop(b, ',').map(x => tokenMatch(a, x.trim, "has_all", ci = true))
+            SqlLex.splitTop(b).map(x => tokenMatch(a, x, "has_all", ci = true))
               .mkString("(", " AND ", ")")
         }
         java.util.regex.Matcher.quoteReplacement(
@@ -570,9 +548,9 @@ object KqlTranslator {
     while (m.isDefined && guard < 64) {
       guard += 1
       val open = e.indexOf('(', m.get.start)
-      val close = JoinSpellings.closeOf(e, open)
-      val args = splitTop(e.substring(open + 1, close - 1), ',')
-        .map(_.trim).filter(_.nonEmpty)
+      val close = SqlLex.closeOf(e, open)
+      require(close > 0, s"KQL: unbalanced brackets after $fn in '$e0'")
+      val args = SqlLex.splitTop(e.substring(open + 1, close - 1))
       e = e.substring(0, m.get.start) + out(args) + e.substring(close)
       m = re.findFirstMatchIn(e)
     }
@@ -774,136 +752,4 @@ object KqlTranslator {
       s"$date $hh:$mm:${if (ss.length == 1) "0" + ss else ss}"
     }
   }
-
-  private def rewriteCastMarkers(e0: String): String = {
-    var e = e0
-    val re = "CAST__KQL__([A-Z]+)__\\(".r
-    var m = re.findFirstMatchIn(e)
-    var guard = 0
-    while (m.isDefined && guard < 64) {
-      guard += 1
-      val t = m.get.group(1)
-      val open = m.get.end - 1
-      val close = JoinSpellings.closeOf(e, open)
-      val inner = e.substring(open + 1, close - 1)
-      e = e.substring(0, m.get.start) + s"CAST($inner AS $t)" +
-        e.substring(close)
-      m = re.findFirstMatchIn(e)
-    }
-    e
-  }
-
-  private def rewriteUnaryPredicate(e0: String, fn: String,
-      out: String => String): String = {
-    var e = e0
-    val re = s"(?i)\\b$fn\\s*\\(".r
-    var m = re.findFirstMatchIn(e)
-    var guard = 0
-    while (m.isDefined && guard < 64) {
-      guard += 1
-      val open = e.indexOf('(', m.get.start)
-      val close = JoinSpellings.closeOf(e, open)
-      val inner = e.substring(open + 1, close - 1)
-      e = e.substring(0, m.get.start) + out(inner) + e.substring(close)
-      m = re.findFirstMatchIn(e)
-    }
-    e
-  }
-
-  private def rewriteBin(e0: String): String = {
-    var e = e0
-    val re = "(?i)\\bbin\\s*\\(".r
-    var m = re.findFirstMatchIn(e)
-    var guard = 0
-    while (m.isDefined && guard < 64) {
-      guard += 1
-      val open = e.indexOf('(', m.get.start)
-      val close = JoinSpellings.closeOf(e, open)
-      val args = splitTop(e.substring(open + 1, close - 1), ',')
-      require(args.length == 2, "KQL bin(value, roundTo) takes two arguments")
-      e = e.substring(0, m.get.start) +
-        s"(FLOOR((${args(0).trim}) / (${args(1).trim})) * (${args(1).trim}))" +
-        e.substring(close)
-      m = re.findFirstMatchIn(e)
-    }
-    e
-  }
-
-  private def rewriteCase(e0: String): String = {
-    var e = e0
-    val re = "(?i)\\bcase\\s*\\(".r
-    var m = re.findFirstMatchIn(e)
-    var guard = 0
-    while (m.isDefined && guard < 16) {
-      guard += 1
-      val open = e.indexOf('(', m.get.start)
-      val close = JoinSpellings.closeOf(e, open)
-      val args = splitTop(e.substring(open + 1, close - 1), ',').map(_.trim)
-      require(args.length >= 3 && args.length % 2 == 1,
-        "KQL case(p1, v1, …, default) needs pred/value pairs + a default")
-      val whens = args.init.grouped(2)
-        .map(p => s"WHEN ${p(0)} THEN ${p(1)}").mkString(" ")
-      e = e.substring(0, m.get.start) +
-        s"(CASE $whens ELSE ${args.last} END)" + e.substring(close)
-      m = re.findFirstMatchIn(e)
-    }
-    e
-  }
-
-  // ---- lexing --------------------------------------------------------------
-
-  /** Split a KQL statement on top-level '|' (outside quotes/parens). */
-  private def splitPipes(s: String): Seq[String] = splitTop(s, '|')
-
-  /** Split on `sep` at depth 0, outside single/double-quoted strings. */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inS = false
-    var inD = false
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'') inS = false }
-      else if (inD) { if (c == '"' && (i == 0 || s.charAt(i - 1) != '\\')) inD = false }
-      else c match {
-        case '\'' => inS = true
-        case '"' => inD = true
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case x if x == sep && depth == 0 =>
-          out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Split `summarize aggs by keys` on the top-level BY keyword. */
-  private def splitByKeyword(s: String, kw: String): (String, Option[String]) = {
-    val m = JoinSpellings.maskLiterals(s)
-    var depth = 0
-    var i = 0
-    while (i < m.length) {
-      val c = m.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && i + kw.length <= m.length &&
-          m.substring(i, i + kw.length).equalsIgnoreCase(kw) &&
-          (i == 0 || !m.charAt(i - 1).isLetterOrDigit) &&
-          (i + kw.length == m.length || !m.charAt(i + kw.length).isLetterOrDigit))
-        return (s.substring(0, i), Some(s.substring(i + kw.length)))
-      i += 1
-    }
-    (s, None)
-  }
-
-  /** Apply `f` to the segments of `e` OUTSIDE single-quoted literals. */
-  private def onOutside(e: String)(f: String => String): String =
-    e.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 1) seg else f(seg)
-    }.mkString("'")
 }

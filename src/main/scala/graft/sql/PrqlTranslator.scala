@@ -42,7 +42,8 @@ object PrqlTranslator {
 
   def translate(spark: org.apache.spark.sql.SparkSession,
       prql: String): String = {
-    val stages = splitStages(prql)
+    // pipeline stages: top-level newlines and '|'
+    val stages = SqlLex.splitTop(prql, "\n").flatMap(SqlLex.splitTop(_, "|"))
     require(stages.nonEmpty, "PRQL: empty pipeline")
     val fromRe = "(?is)^from\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*$".r
     val fromLitRe = "(?is)^from\\s+(\\[.*\\])\\s*$".r
@@ -228,13 +229,12 @@ object PrqlTranslator {
     * Every row must carry the same column names in the same order (the
     * PRQL book's tuple-array relation literal). */
   private def relationLiteral(lit: String): String = {
-    val rows = splitTop(lit.substring(1, lit.length - 1))
-      .map(_.trim).filter(_.nonEmpty)
+    val rows = SqlLex.splitTop(lit.substring(1, lit.length - 1))
     require(rows.nonEmpty, "PRQL: empty relation literal")
     val parsed = rows.map { r =>
       require(r.startsWith("{") && r.endsWith("}"),
         s"PRQL relation literal: expected a tuple {{…}}, got '$r'")
-      splitTop(r.substring(1, r.length - 1)).map(_.trim).map {
+      SqlLex.splitTop(r.substring(1, r.length - 1)).map {
         case named(n, e) => (n, expr(e))
         case other => throw new IllegalArgumentException(
           s"PRQL relation literal: expected name = value, got '$other'")
@@ -261,7 +261,7 @@ object PrqlTranslator {
       if (body.startsWith("{") && body.endsWith("}"))
         body.substring(1, body.length - 1)
       else body
-    splitTop(inner).map(_.trim).filter(_.nonEmpty)
+    SqlLex.splitTop(inner)
   }
 
   /** PRQL aggregation items: `n = count this`, `s = sum x`, `avg y`. */
@@ -306,35 +306,28 @@ object PrqlTranslator {
     val lits = scala.collection.mutable.ArrayBuffer.empty[String]
     val masked = new StringBuilder
     def identChar(ch: Char) = ch.isLetterOrDigit || ch == '_'
-    var i = 0
-    while (i < e0.length) {
-      val c = e0.charAt(i)
-      // s-string: PRQL's raw-SQL escape hatch (`s"LEFT({col}, 3)"`) —
-      // the body splices through UNQUOTED, with {expr} interpolations
-      // recursively translated; the placeholder shields it from the
-      // operator rewrites like any literal
-      if ((c == 's' || c == 'S') && i + 1 < e0.length &&
-          e0.charAt(i + 1) == '"' &&
-          (masked.isEmpty || !identChar(masked.last))) {
-        val close = e0.indexOf('"', i + 2)
-        require(close >= 0, s"PRQL: unterminated s-string in '$e0'")
-        val raw = e0.substring(i + 2, close)
-        val sql = "\\{([^{}]*)\\}".r.replaceAllIn(raw, m =>
-          java.util.regex.Matcher.quoteReplacement(expr(m.group(1))))
-        lits += sql
+    var last = 0
+    SqlLex.literals(e0).filter(l => e0.charAt(l._1) != '`').foreach {
+      case (a, b) =>
+        val body = e0.substring(a + 1, b - 1)
+        // s-string: PRQL's raw-SQL escape hatch (`s"LEFT({col}, 3)"`) —
+        // the body splices through UNQUOTED, with {expr} interpolations
+        // recursively translated; the placeholder shields it from the
+        // operator rewrites like any literal
+        val sString = e0.charAt(a) == '"' && a > 0 &&
+          (e0.charAt(a - 1) == 's' || e0.charAt(a - 1) == 'S') &&
+          (a == 1 || !identChar(e0.charAt(a - 2)))
+        masked.append(e0.substring(last, if (sString) a - 1 else a))
+        lits += (
+          if (sString) "\\{([^{}]*)\\}".r.replaceAllIn(body, m =>
+            java.util.regex.Matcher.quoteReplacement(expr(m.group(1))))
+          // restore as a Spark single-quoted literal; embedded single
+          // quotes (possible in a double-quoted PRQL string) escape
+          else "'" + body.replace("\\", "\\\\").replace("'", "\\'") + "'")
         masked.append(s"__PRQLLIT${lits.length - 1}__")
-        i = close + 1
-      } else if (c == '\'' || c == '"') {
-        val close = e0.indexOf(c, i + 1)
-        require(close >= 0, s"PRQL: unterminated string literal in '$e0'")
-        val body = e0.substring(i + 1, close)
-        // restore as a Spark single-quoted literal; embedded single
-        // quotes (possible in a double-quoted PRQL string) escape
-        lits += "'" + body.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        masked.append(s"__PRQLLIT${lits.length - 1}__")
-        i = close + 1
-      } else { masked.append(c); i += 1 }
+        last = b
     }
+    masked.append(e0.substring(last))
     var s = masked.toString
     s = rewriteCase(s)
     s = s.replaceAll("==", " = ")
@@ -359,19 +352,9 @@ object PrqlTranslator {
     while (m.isDefined && budget > 0) {
       budget -= 1
       val open = s.indexOf('[', m.get.start)
-      var depth = 0
-      var close = -1
-      var i = open
-      while (i < s.length && close < 0) {
-        val c = s.charAt(i)
-        if (c == '[' || c == '(' || c == '{') depth += 1
-        else if (c == ']' || c == ')' || c == '}') {
-          depth -= 1; if (depth == 0) close = i
-        }
-        i += 1
-      }
+      val close = SqlLex.closeOf(s, open) - 1
       require(close > open, s"PRQL case: unbalanced brackets in '$s0'")
-      val items = splitTop(s.substring(open + 1, close))
+      val items = SqlLex.splitTop(s.substring(open + 1, close))
       val branches = items.map { it =>
         val at = it.indexOf("=>")
         require(at > 0, s"PRQL case: expected `cond => value`, got '$it'")
@@ -387,53 +370,5 @@ object PrqlTranslator {
       m = "(?i)\\bcase\\s*\\[".r.findFirstMatchIn(s)
     }
     s
-  }
-
-  /** Pipeline stages: split on newlines and top-level '|' (outside
-    * quotes/braces/parens). */
-  private def splitStages(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inS = false
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'' || c == '"') inS = false }
-      else c match {
-        case '\'' | '"' => inS = true
-        case '(' | '{' | '[' => depth += 1
-        case ')' | '}' | ']' => depth -= 1
-        case '\n' | '|' if depth == 0 =>
-          out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Split tuple items on top-level commas. */
-  private def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inS = false
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inS) { if (c == '\'' || c == '"') inS = false }
-      else c match {
-        case '\'' | '"' => inS = true
-        case '(' | '{' | '[' => depth += 1
-        case ')' | '}' | ']' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 }

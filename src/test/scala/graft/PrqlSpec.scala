@@ -124,6 +124,10 @@ class PrqlSpec extends SparkFunSuite {
       // and a filter comparing against such a literal
       Seq((1L, "x==y")).toDF("id", "v").createOrReplaceTempView("prql_q")
       assert(ch("""from prql_q | filter v == "x==y"""").count() == 1L)
+      // a double-quoted literal holding a single quote and a pipe
+      Seq((1L, "it's | x")).toDF("a", "name").createOrReplaceTempView("prql_m")
+      assert(ch("from prql_m\nfilter name == \"it's | x\"\nselect {a, name}")
+        .collect().map(_.getString(1)).toSeq == Seq("it's | x"))
     }
   }
 
