@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.collection.concurrent.TrieMap
 
 /** Table catalog over the driver-generated parquet corpus.
@@ -32,6 +34,7 @@ object Tables {
     * not per-catalog — src/Interpreters/DatabaseCatalog.cpp load loop).
     */
   def register(spark: SparkSession, dir: String): Unit = {
+    graft.plans.RangeWindowSort.install(spark)
     val sessionKey = spark.sparkContext.applicationId + "#" + spark.hashCode()
     if (!lastDir.get(sessionKey).contains(dir)) {
       val failures = names.flatMap { n =>
@@ -52,7 +55,42 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") loadEvents(spark, s"$dir/events.parquet")
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, s"$dir/$name.parquet")
+  }
+
+  // Parquet read settings that change the schema Spark infers.
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas = TrieMap.empty[Seq[Any], StructType]
+
+  /** `spark.read.parquet(path)` without the schema-inference job Spark
+    * launches on every read (`mergeSchemasInParallel`): the schema is
+    * inferred once and memoized by path, the length and modification time
+    * of every data file under it, and the read settings that shape it. A
+    * file rewritten at the same path is re-inferred. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = fs.listStatus(p).toSeq
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sorted
+      Some(Seq(path, files) ++ schemaConfs.map(spark.conf.getOption))
+    } catch { case _: java.io.IOException => None }
+    key.flatMap(schemas.get) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach { k =>
+          if (schemas.size >= 256) schemas.clear()
+          schemas.put(k, df.schema)
+        }
+        df
+    }
   }
 
   /** Schema-adaptive events read. The corpus has shipped `ts` both as
@@ -68,7 +106,7 @@ object Tables {
     // With nanosAsLong set, a NANOS file reads ts as LongType while a
     // MICROS file is unaffected (reads as timestamp). Branch on the result.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path)
+    val raw = readParquet(spark, path)
     raw.schema("ts").dataType match {
       case LongType =>
         // Raw nanos: truncate to micros — the same ns→µs truncation DuckDB

@@ -52,10 +52,20 @@ object JoinOps {
 
   /** Multi-key ASOF (the general form the dialect's `ASOF JOIN … ON
     * k1 = k1 AND k2 = k2 AND t >= t` spelling needs): identical
-    * union-window plan, the window key is a struct over the equality
-    * columns — still exactly one shuffle. The tiebreak keeps its NATIVE
-    * type (any orderable type, e.g. a struct over all right columns for
-    * a deterministic total order), not a Long cast. */
+    * union-window plan, still exactly one shuffle. The window is keyed on
+    * the left key columns themselves: right rows carry their key values in
+    * those columns, cast to the left key's type, so the output's key
+    * columns keep the window's partitioning and a following `ORDER BY`
+    * on them needs no second exchange (`graft.plans.RangeWindowSort`).
+    * The tiebreak keeps its NATIVE type (any orderable type, e.g. a
+    * struct over all right columns for a deterministic total order), not
+    * a Long cast.
+    *
+    * NULLs follow SQL equality and comparison: a right row with a NULL
+    * key or a NULL asof value matches nothing, a right key that does not
+    * survive the cast to the left key's type equals no left key, and a
+    * left row with a NULL asof value matches nothing. The matched right
+    * row travels as one struct, so its NULL payload columns stay NULL. */
   def asofJoinKeys(
       left: DataFrame, right: DataFrame,
       leftKeys: Seq[String], rightKeys: Seq[String],
@@ -68,53 +78,56 @@ object JoinOps {
     require(Set("<=", "<", ">=", ">")(op), s"unsupported ASOF inequality: $op")
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
       "ASOF: left/right equality key lists must be non-empty and equal-length")
-    val lCols = left.columns
-    // Keys keep their NATIVE type (string/date/numeric all partition
-    // correctly). The round-1 cast-to-Long silently NULLed non-numeric
-    // keys, collapsing every row into one window partition.
+    val lFields = left.schema.fields.toSeq
+    val keys = leftKeys.zip(rightKeys).map { case (lk, rk) =>
+      val lf = lFields.find(_.name.equalsIgnoreCase(lk)).getOrElse(
+        throw new IllegalArgumentException(s"ASOF: '$lk' is not a left column"))
+      (lf, rk)
+    }
+    // A right key survives when it round-trips through the left key's
+    // type; the rest can equal no left key and drop with the NULL keys.
+    val rKeyed = keys.zipWithIndex.foldLeft(right.filter(rightTs.isNotNull)) {
+      case (d, ((lf, rk), i)) =>
+        val rType = d.select(col(rk)).schema.head.dataType
+        val cast = col(rk).try_cast(lf.dataType)
+        val kept = d.withColumn(s"__rk$i", cast).filter(col(s"__rk$i").isNotNull)
+        if (rType == lf.dataType) kept
+        else kept.filter(col(s"__rk$i").cast(rType) === col(rk))
+    }
+    val payload = struct(rightPayload.zipWithIndex.map { case (c, i) =>
+      col(c).as(s"p$i") }: _*)
+    // the union needs one concrete type per tag column on BOTH sides:
+    // resolve them from the right schema (no job — schema-only)
+    val types = rKeyed.select(rightTieBreak.as("__tie"), payload.as("__r")).schema
+    def tagged(t: Column, side: Int, tie: Column, r: Column): Seq[Column] =
+      Seq(t.as("__t"), lit(side).as("__side"), tie.as("__tie"), r.as("__r"))
+    val lSel = left.select(lFields.map(f => col(f.name)) ++ tagged(leftTs, 1,
+      lit(null).cast(types("__tie").dataType),
+      lit(null).cast(types("__r").dataType)): _*)
     // Side sort values: asc on __side puts right (0) before left (1) when
     // inclusive, left (1) before right (2) when strict.
-    def keyOf(ks: Seq[String]): Column =
-      if (ks.length == 1) col(ks.head)
-      // canonical field names: the union resolves __k by name, so the
-      // left and right structs must carry identical nested names
-      else struct(ks.zipWithIndex.map { case (k, i) => col(k).as(s"k$i") }: _*)
-    // the union needs one concrete __tie type on BOTH sides: resolve the
-    // tiebreak's type from the right schema (no job — schema-only)
-    val tieType = right.select(rightTieBreak.as("__tie")).schema.head.dataType
-    val l = left
-      .withColumn("__k", keyOf(leftKeys))
-      .withColumn("__t", leftTs)
-      .withColumn("__side", lit(1))
-      .withColumn("__tie", lit(null).cast(tieType))
-    val lTagged = rightPayload.foldLeft(l)((d, c) =>
-      d.withColumn(s"__r_$c", lit(null)))
-    val r0 = right
-      .withColumn("__k", keyOf(rightKeys))
-      .withColumn("__t", rightTs)
-      .withColumn("__side", lit(if (inclusive) 0 else 2))
-      .withColumn("__tie", rightTieBreak.cast(tieType))
-    val rTagged = rightPayload.foldLeft(r0)((d, c) =>
-      d.withColumn(s"__r_$c", col(c)))
-    val unionCols = Seq("__k", "__t", "__side", "__tie") ++ rightPayload.map(c => s"__r_$c")
-    val lSel = lTagged.select((lCols.map(col) ++ unionCols.map(col)): _*)
-    val rSel = rTagged.select((lCols.map(_ => lit(null)) zip lCols)
-      .map { case (c, n) => c.as(n) } ++ unionCols.map(col): _*)
+    val rSel = rKeyed.select(lFields.map { f =>
+      keys.indexWhere(_._1.name == f.name) match {
+        case -1 => lit(null).cast(f.dataType).as(f.name)
+        case i => col(s"__rk$i").as(f.name)
+      }
+    } ++ tagged(rightTs, if (inclusive) 0 else 2, rightTieBreak, payload): _*)
     // Backward scans ascending (last right seen = latest <= t); forward
     // scans descending (last right seen = earliest >= t). __tie ascends in
     // scan order either way so "last" = max tiebreak.
     val ord =
       if (backward) Seq(col("__t").asc, col("__side").asc, col("__tie").asc)
       else Seq(col("__t").desc, col("__side").asc, col("__tie").asc)
-    val w = Window.partitionBy(col("__k"))
+    val w = Window.partitionBy(keys.map(k => col(k._1.name)): _*)
       .orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = rightPayload.foldLeft(lSel.unionByName(rSel)) { (d, c) =>
-      d.withColumn(s"__m_$c", last(col(s"__r_$c"), ignoreNulls = true).over(w))
-    }
-    filled.filter(col("__side") === 1)
-      .select(lCols.map(col) ++
-        rightPayload.map(c => col(s"__m_$c").as(s"asof_$c")): _*)
+    lSel.union(rSel)
+      .withColumn("__m", last(col("__r"), ignoreNulls = true).over(w))
+      .filter(col("__side") === 1)
+      .select(lFields.map(f => col(f.name)) ++
+        rightPayload.zipWithIndex.map { case (c, i) =>
+          when(col("__t").isNotNull, col("__m").getField(s"p$i")).as(s"asof_$c")
+        }: _*)
   }
 
   /** Backward-inclusive ASOF (the ClickHouse default inequality). */

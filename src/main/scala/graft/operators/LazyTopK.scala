@@ -9,14 +9,18 @@ import org.apache.spark.sql.functions._
   * an `ORDER BY s LIMIT k` over a wide table should not read the wide
   * columns for every row; only the k winners ever need them.
   *
-  * Spark rendering, two scans of the same parquet:
+  * Spark rendering, two scans of the same parquet, both reading the
+  * memoized schema (`Tables.readParquet`: no schema-inference job):
   *   1. NARROW scan (key + sort columns only — column pruning keeps the
   *      I/O to two columns) → TakeOrderedAndProject(k) → the winning keys
   *      collect to the driver (bounded: k values, a plan decision);
   *   2. WIDE scan with `key IN (winners)` — the literal IN-list reaches
   *      parquet as a pushed filter, so row groups without winners are
   *      skipped by min/max stats: the wide columns are read for ~k rows,
-  *      not the corpus.
+  *      not the corpus. It emits with `orderBy(…).limit(k)`, one
+  *      TakeOrderedAndProject job instead of a range sort's sample, map
+  *      and result jobs; the IN-list holds exactly the k winners' unique
+  *      keys, so the limit drops no row.
   *
   * At 100 TB with document-sized text columns and top-100 queries this is
   * the difference between streaming the corpus through the sort and
@@ -32,7 +36,7 @@ object LazyTopK {
     val ord: Seq[Column] =
       if (descending) Seq(col(sortCol).desc, col(keyCol).asc)
       else Seq(col(sortCol).asc, col(keyCol).asc)
-    val winnerRows = spark.read.parquet(path)
+    val winnerRows = graft.Tables.readParquet(spark, path)
       .select(keyCol, sortCol)
       .orderBy(ord: _*)
       .limit(k)
@@ -50,10 +54,11 @@ object LazyTopK {
       if (winnerRows.isEmpty || sortVals.contains(null)) None
       else if (descending) Some(col(sortCol) >= lit(sortVals.last))
       else Some(col(sortCol) <= lit(sortVals.last))
-    val base = spark.read.parquet(path)
+    val base = graft.Tables.readParquet(spark, path)
       .filter(col(keyCol).isin(winners: _*))
     bound.fold(base)(b => base.filter(b))
       .orderBy(ord: _*)
+      .limit(k)
       .select(projectCols.map(col): _*)
   }
 }

@@ -819,6 +819,9 @@ object ClickHouseSql {
     // optimize_trivial_count_query analog: bare SELECT count() answers
     // from parquet footers (graft.plans.TrivialCount), never scanning
     graft.plans.TrivialCount.install(spark)
+    // one range exchange for a window followed by an ORDER BY on its
+    // partition keys (graft.plans.RangeWindowSort)
+    graft.plans.RangeWindowSort.install(spark)
     // RBAC gate (src/Access/): row-policy shadow maintenance FIRST
     // (applies/retires filtered views for the current user), then the
     // privilege check for the session's SET user against the grant

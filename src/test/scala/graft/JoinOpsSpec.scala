@@ -35,6 +35,34 @@ class JoinOpsSpec extends SparkFunSuite {
     assert(run(">")  == "r15")  // forward strict: earliest after
   }
 
+  test("asofJoin NULLs: NULL keys and asof values match nothing; a matched " +
+      "row's NULL payload stays NULL") {
+    val left = Seq[(Option[Long], Option[Long], String)](
+      (None, Some(10L), "null_key"),     // only a NULL-keyed right row
+      (Some(1L), None, "null_ts"),       // a NULL-ts right row and r30
+      (Some(2L), Some(20L), "null_pay"), // latest match has a NULL payload
+      (Some(2L), Some(12L), "plain"))
+      .toDF("k", "t", "name")
+    val right = Seq[(Option[Long], Option[Long], Option[String])](
+      (None, Some(5L), Some("r_null_key")),
+      (Some(1L), None, Some("r_null_ts")),
+      (Some(1L), Some(30L), Some("r30")),
+      (Some(2L), Some(10L), Some("r10")),
+      (Some(2L), Some(15L), None))
+      .toDF("rk", "rt", "payload")
+    def run(op: String) = JoinOps.asofJoin(left, right,
+      "k", "rk", col("t"), col("rt"), Seq("payload", "rt"), col("rt"), op)
+      .select("name", "asof_payload", "asof_rt")
+      .as[(String, Option[String], Option[Long])].collect().sortBy(_._1).toSeq
+    assert(run("<=") == Seq(
+      ("null_key", None, None),
+      ("null_pay", None, Some(15L)),   // the t=15 row, not r10's payload
+      ("null_ts", None, None),
+      ("plain", Some("r10"), Some(10L))))
+    // forward: a NULL left asof value sorts last and would see r30
+    assert(run(">=").filter(_._1 == "null_ts") == Seq(("null_ts", None, None)))
+  }
+
   test("pasteJoin zips positionally, truncating to the shorter side") {
     val l = Seq("a", "b", "c").toDF("x")
     val r = Seq(1, 2).toDF("y")

@@ -416,10 +416,20 @@ class PlanAuditSpec extends SparkFunSuite {
       !p.contains("CartesianProduct") && !p.contains("SortMergeJoin") &&
       !p.contains("ShuffledHashJoin"),
       s"ASOF must not plan a per-row range join: $p")
-    // hashpartitioning on the union's key feeds the window — the ONE
+    // hashpartitioning on the equality key feeds the window — the ONE
     // shuffle; the union sides repartition together under it
-    assert(p.contains("hashpartitioning(__k"),
-      s"the window key shuffle is missing: $p")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(user_id"),
+      s"expected one hash exchange on user_id: $p")
+  }
+
+  test("ordered dialect ASOF (q_ch_asof_sql): one range exchange on the " +
+      "key serves the window and the ORDER BY") {
+    val p = planOf("q_ch_asof_sql")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning(user_id"),
+      s"expected one range exchange on user_id: $p")
+    assert(!p.contains("hashpartitioning"), s"no hash exchange expected: $p")
   }
 
   test("delta DV read: one file scan, broadcast partition join only, " +

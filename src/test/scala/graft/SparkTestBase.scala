@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +25,35 @@ object SparkTestBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
+
+  /** Spark jobs that `body` starts on this thread. Jobs are tagged with a
+    * local property; a marker job submitted after `body` comes through the
+    * listener bus after every earlier event, so the count is complete. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == tag + "/end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, tag + "/end")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setLocalProperty(key, null)
+    }
+    try assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "the marker job never reached the listener")
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

@@ -30,10 +30,35 @@ class TablesSchemaSpec extends SparkFunSuite {
       s"SELECT 1L AS event_id, ${ns}L AS ts, 7L AS user_id, " +
         "'click' AS event_type, 1.5d AS value, '{}' AS props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val df = Tables.load(spark, dir, "events")
-    assert(df.schema("ts").dataType == TimestampType)
-    val micros = df.selectExpr("unix_micros(ts)").head.getLong(0)
-    assert(micros == 1700000000L * 1000000L + 123456L) // ns truncated to µs
+    // the second load reads the memoized schema and truncates the same way
+    for (_ <- 1 to 2) {
+      val df = Tables.load(spark, dir, "events")
+      assert(df.schema("ts").dataType == TimestampType)
+      val micros = df.selectExpr("unix_micros(ts)").head.getLong(0)
+      assert(micros == 1700000000L * 1000000L + 123456L) // ns truncated to µs
+    }
+  }
+
+  test("a second load of one file infers no schema: zero jobs") {
+    val dir = Files.createTempDirectory("graft_schema_memo").toString
+    Files.copy(Paths.get(s"$sf/region.parquet"), Paths.get(s"$dir/region.parquet"))
+    val first = jobsDuring(Tables.load(spark, dir, "region"))
+    assert(first >= 1, "the first load infers the schema with a job")
+    assert(jobsDuring(Tables.load(spark, dir, "region")) == 0)
+    assert(Tables.load(spark, dir, "region").count() ==
+      spark.read.parquet(s"$sf/region.parquet").count())
+  }
+
+  test("a file rewritten at the same path with a new schema is re-inferred") {
+    val dir = Files.createTempDirectory("graft_schema_rewrite").toString
+    val path = s"$dir/part.parquet"
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert(Tables.load(spark, dir, "part").columns.toSeq == Seq("a"))
+    spark.range(3).selectExpr("CAST(id AS STRING) AS a", "id AS b")
+      .write.mode("overwrite").parquet(path)
+    val df = Tables.load(spark, dir, "part")
+    assert(df.schema("a").dataType == StringType && df.columns.toSeq == Seq("a", "b"))
+    assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1", "2"))
   }
 
   test("register is fault-isolated per table") {
