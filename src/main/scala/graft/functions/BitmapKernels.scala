@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Static JVM kernels for the SCALAR Roaring bitmap functions registered in
-  * the SQL dialect (sql/ChRegistryTail2.scala) via StaticInvoke — unlike
+  * the SQL dialect (sql/ChBitmapSketch.scala) via StaticInvoke — unlike
   * the Column-based UDFs in [[BitmapFunctions]] (which cannot be embedded
   * inside a FunctionRegistry expression tree), StaticInvoke participates in
   * codegen directly. Payloads are the same Roaring64 portable bytes the

@@ -4,7 +4,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels for the string-distance family
   * (src/Functions/FunctionsStringDistance.cpp), registered in
-  * sql/ChRegistryTail2.scala via StaticInvoke. Byte-level like the
+  * sql/ChStringSearch.scala via StaticInvoke. Byte-level like the
   * reference's Byte* impls (the corpus is ASCII; the UTF8 jaccard variant
   * works on code points like ByteJaccardIndexImpl<true>).
   *

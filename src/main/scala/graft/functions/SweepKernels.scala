@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Round-9 registry-sweep kernels, invoked from the SQL dialect via
-  * StaticInvoke (sql/ChRegistryTail6.scala). Each re-implements a
+/** Static kernels invoked from the SQL dialect via StaticInvoke
+  * (ChBuild.sweep6, called from the sql/Ch* family modules: hashes,
+  * strings, math, introspection, arrays). Each re-implements a
   * PUBLISHED algorithm or formula cited at the method — never the
   * reference's code (its role is only naming the function + its return
   * shape).

@@ -21,41 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Per-round lineage cut. `checkpointDir = None` (the local default)
-    * uses localCheckpoint — executor-block storage, fast, but NOT
-    * fault-tolerant: a lost executor kills the truncated lineage (round-12
-    * verdict wrong #2). On a real cluster pass a reliable directory (HDFS/
-    * object store under the warehouse) and every round lands on durable
-    * storage via checkpoint(), so executor loss only recomputes the
-    * current round. The labels produced are IDENTICAL either way —
-    * pinned by ComponentsStarSpec. */
-  // last dir actually applied to the (global) SparkContext setting —
-  // setCheckpointDir creates a fresh UUID subdir per call, so apply it
-  // only on CHANGE, but re-apply when another caller switched it away
-  // (an absent re-apply would silently land A's checkpoints in B's dir)
-  private val appliedCheckpointDir =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def cut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case None => df.localCheckpoint()
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        appliedCheckpointDir.synchronized {
-          if (appliedCheckpointDir.get() != d) {
-            sc.setCheckpointDir(d)
-            appliedCheckpointDir.set(d)
-          }
-        }
-        df.checkpoint()
-    }
-
-  /** Public lineage-cut with the same local/reliable switch — for other
-    * pipeline stages (e.g. the LSH survivor materialization) that want
-    * the durable lane on a real cluster. */
-  def lineageCut(df: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame =
-    cut(df, checkpointDir)
+  /** Lineage cut (per round here; also used by other pipeline stages,
+    * e.g. the LSH survivor materialization): localCheckpoint —
+    * executor-block storage, eager, so the plan never deepens. */
+  def lineageCut(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** edges: two columns (src, dst), both directions present or not —
     * symmetrized internally. Returns (doc_id, label) with label = min node
@@ -66,17 +35,16 @@ object Components {
       edges: DataFrame,
       src: String = "src",
       dst: String = "dst",
-      maxRounds: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     // Round-17 measured, left alone: pre-cutting the input plan to avoid
     // the union's double evaluation REGRESSED (+0.26s at sf0.1) — the two
     // branches evaluate concurrently inside one job on idle cores, while
     // the extra checkpoint is a serial barrier.
-    val sym = cut(edges.select(col(src).as("s"), col(dst).as("d"))
+    val sym = lineageCut(edges.select(col(src).as("s"), col(dst).as("d"))
       .union(edges.select(col(dst).as("s"), col(src).as("d")))
-      .distinct(), checkpointDir)
+      .distinct())
     val nodes = sym.select(col("s").as("doc_id")).distinct()
-    var lab = cut(nodes.withColumn("label", col("doc_id")), checkpointDir)
+    var lab = lineageCut(nodes.withColumn("label", col("doc_id")))
     var round = 0
     var moved = 1L
     while (moved > 0) {
@@ -90,11 +58,11 @@ object Components {
         .join(lab.withColumnRenamed("doc_id", "d"), Seq("d"))
         .groupBy(col("s").as("doc_id"))
         .agg(min("label").as("nl"))
-      val next = cut(lab.withColumnRenamed("label", "__old")
+      val next = lineageCut(lab.withColumnRenamed("label", "__old")
         .join(nb, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("__old"), coalesce(col("nl"), col("__old"))).as("label"),
-          col("__old")), checkpointDir)
+          col("__old")))
       moved = next.filter(col("label") =!= col("__old")).count()
       lab = next.drop("__old")
     }
@@ -129,11 +97,10 @@ object Components {
       giantFloor: Long = 1000L,
       patience: Int = 8,
       maxRounds: Int = 30,
-      checkpointDir: Option[String] = None,
       localEdgeCap: Long = 2000000L): DataFrame = {
-    val sym = cut(edges.select(col(src).as("s"), col(dst).as("d"))
+    val sym = lineageCut(edges.select(col(src).as("s"), col(dst).as("d"))
       .union(edges.select(col(dst).as("s"), col(src).as("d")))
-      .distinct(), checkpointDir)
+      .distinct())
     // Round-17 third lane (the same shape-adaptive contract as the giant
     // probe, pointed the other way): BELOW `localEdgeCap` symmetrized
     // edges the graph fits on the driver at broadcast-relation scale
@@ -160,12 +127,11 @@ object Components {
     }
     val nodes = sym.select(col("s").as("doc_id")).distinct()
     // round 1 of propagation doubles as the skew probe
-    val lab1 = cut(nodes
+    val lab1 = lineageCut(nodes
       .join(sym.groupBy(col("s").as("doc_id")).agg(min("d").as("nb")),
         Seq("doc_id"), "left")
       .select(col("doc_id"),
-        least(col("doc_id"), coalesce(col("nb"), col("doc_id"))).as("label")),
-      checkpointDir)
+        least(col("doc_id"), coalesce(col("nb"), col("doc_id"))).as("label")))
     // ONE probe action: per-label counts aggregate to (max frequency,
     // node count) together — the probe must stay near-free on the common
     // tiny-component path
@@ -175,7 +141,7 @@ object Components {
     val maxFreq = probe.getLong(0)
     val n = probe.getLong(1)
     if (maxFreq >= math.max(giantFloor.toDouble, giantFraction * n))
-      return connectedComponentsStar(edges, src, dst, maxRounds, checkpointDir)
+      return connectedComponentsStar(edges, src, dst, maxRounds)
     // propagation with patience: continue from the probed labels
     var lab = lab1
     var round = 1
@@ -183,16 +149,16 @@ object Components {
     while (moved > 0) {
       round += 1
       if (round > patience)
-        return connectedComponentsStar(edges, src, dst, maxRounds, checkpointDir)
+        return connectedComponentsStar(edges, src, dst, maxRounds)
       val nb = sym
         .join(lab.withColumnRenamed("doc_id", "d"), Seq("d"))
         .groupBy(col("s").as("doc_id"))
         .agg(min("label").as("nl"))
-      val next = cut(lab.withColumnRenamed("label", "__old")
+      val next = lineageCut(lab.withColumnRenamed("label", "__old")
         .join(nb, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("__old"), coalesce(col("nl"), col("__old"))).as("label"),
-          col("__old")), checkpointDir)
+          col("__old")))
       moved = next.filter(col("label") =!= col("__old")).count()
       lab = next.drop("__old")
     }
@@ -249,8 +215,7 @@ object Components {
       edges: DataFrame,
       src: String = "src",
       dst: String = "dst",
-      maxRounds: Int = 30,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxRounds: Int = 30): DataFrame = {
     val raw = edges.select(col(src).as("u"), col(dst).as("v"))
       .filter(col("u") =!= col("v"))
 
@@ -261,9 +226,9 @@ object Components {
     // self-join behind the dedup queries evaluated twice back-to-back;
     // e's endpoints are exactly raw-minus-self-loops' node set, so the
     // derivation is lossless).
-    var e = cut(raw.select(greatest(col("u"), col("v")).as("u"),
+    var e = lineageCut(raw.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
-      .distinct(), checkpointDir)
+      .distinct())
     // allNodes reads the checkpointed oriented edges LAZILY: it is
     // consumed exactly once (the final label join), so its own cut was a
     // pure extra materialization pass (round 18; the r17 cut existed to
@@ -313,11 +278,11 @@ object Components {
       // small-star: every node's smaller neighbors (all of them, given the
       // orientation) plus itself attach to its min.
       val smins = large.groupBy("u").agg(min("v").as("m"))
-      val next = cut(large.join(smins, Seq("u"))
+      val next = lineageCut(large.join(smins, Seq("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(smins.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .distinct(), checkpointDir)
+        .distinct())
       converged = isStarForest(next)
       e = next
     }

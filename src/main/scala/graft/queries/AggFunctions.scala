@@ -127,10 +127,8 @@ object AggFunctions extends QueryPack {
       // (flag|which, v) rows so the operator's stats/histogram/collect
       // jobs run once, not once per column (measured: two separate calls
       // cost ~0.5s more in job overhead at sf0.1)
-      // lineageCut = localCheckpoint locally; on a real cluster the same
-      // call takes a reliable checkpoint dir (Components.lineageCut's
-      // durable lane), so a lost executor recomputes instead of killing
-      // the query (r17 verdict fault-tolerance note)
+      // lineageCut = localCheckpoint: executor-block storage, not
+      // fault-tolerant — a lost executor fails the query
       val base = graft.operators.Components.lineageCut(
         graft.operators.ScaleOps.fanOutIfTiny(
             Tables.load(s, dir, "lineitem"), col("l_orderkey"))

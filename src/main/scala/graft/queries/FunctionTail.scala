@@ -3,8 +3,9 @@ package graft.queries
 import graft.{Q, QueryPack, Tables}
 import graft.sql.ClickHouseSql
 
-/** Oracled batteries for the round-3 registry extension waves
-  * (ChRegistryArrays + ChRegistryExt): reference function-name surface
+/** Oracled batteries for the array, bit/math, conversion and string
+  * families (sql/ChRegistryArrays, ChMathBits, ChConversions, ChStrings,
+  * ChStringSearch, ChHashes, ChAggregates): reference function-name surface
   * exercised through the dialect layer, value-pinned against DuckDB.
   * Literal-input batteries pin exact expected outputs (the convention
   * FIXTURES.md blesses for engine-internal codecs); one real-data query

@@ -3,8 +3,8 @@ package graft.queries
 import graft.{Q, Tables, QueryPack}
 import graft.sql.ClickHouseSql
 
-/** Oracled batteries for registry tail sweep #2 (sql/ChRegistryTail2.scala):
-  * scalar Roaring bitmap algebra, URL-safe base64, compareSubstrings/
+/** Oracled batteries for the scalar Roaring bitmap algebra
+  * (sql/ChBitmapSketch.scala), URL-safe base64, compareSubstrings/
   * byteSlice, and the date tail. Expected values are stated as literals in
   * the DuckDB oracle (the bitmap state is engine-internal, but every
   * cardinality/array/membership readout is exact arithmetic both engines
@@ -902,7 +902,7 @@ object FunctionTail2 extends QueryPack {
       FROM nation ORDER BY k"""))
   ) ++ tail3
 
-  /** Registry sweep #3 battery (sql/ChRegistryTail3.scala): AUC variants,
+  /** AUC variants (sql/ChRegistryArrays.scala),
     * timezone surface, literal-unit date arithmetic, block/row
     * introspection. Expected values stated as DuckDB literals (the AUC
     * examples are the reference's own doc examples: arrayAUC.cpp:65,105).

@@ -441,8 +441,7 @@ object LlmPipeline extends QueryPack {
       // (the lineage cut is eager) so the shingle cache can be RELEASED
       // before returning (round-3 verdict #5: a lazily-returned plan
       // would pin the cached shingle table in executor memory for the
-      // life of the session). lineageCut carries the round-13 durable
-      // option for a real cluster (localCheckpoint locally).
+      // life of the session).
       val out = graft.operators.Components.lineageCut(pairs)
       docs.unpersist()
       out

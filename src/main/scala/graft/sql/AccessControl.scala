@@ -928,8 +928,9 @@ object AccessControl {
     *  2. Spark's SQL parser collects leaf relations, subqueries
     *     included, for every statement shape its grammar accepts — so
     *     nested/EXISTS/CTE-body reads can't slip past;
-    *  3. the FROM/JOIN/INTO/TABLE regex scan covers dialect-only
-    *     syntax the Spark parser rejects. */
+    *  3. SqlLex.tableRefs over the raw text covers dialect-only syntax
+    *     the Spark parser rejects (SETTINGS tails, …), backtick-quoted,
+    *     comma-listed and 'default.'-qualified names included. */
   private def touchedTables(spark: SparkSession, stmt: String): Seq[String] = {
     val mergeTables =
       "(?i)\\bmerge\\s*\\(\\s*(?:'[^']*'\\s*,\\s*)?'([^']+)'\\s*\\)".r
@@ -946,9 +947,7 @@ object AccessControl {
       catch { case _: Exception => Seq.empty }
     // scan only outside literals and comments, so 'FROM nation' inside
     // a string never trips a check
-    val ids = (SqlLex.matchesIn(stmt, ("(?is)\\b(?:FROM|JOIN|INTO|TABLE)\\s+" +
-      "([A-Za-z_][A-Za-z0-9_.]*)").r).map(_.group(1)).toSeq ++
-      planned ++ mergeTables).distinct
+    val ids = (SqlLex.tableRefs(stmt).toSeq ++ planned ++ mergeTables).distinct
       .filterNot(_.toLowerCase.startsWith("system."))
     val catalog = spark.sessionState.catalog
     ids.filter { t =>

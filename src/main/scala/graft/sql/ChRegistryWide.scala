@@ -20,13 +20,12 @@ import org.apache.spark.sql.types._
   * toInt128OrNull(x) NULLs out-of-range input (accurateCastOrNull),
   * OrZero coalesces the OrNull form to '0'.
   *
-  * The arithmetic/comparison names REPLACE the always-numeric builders
-  * lower in the registry concat (ChFunctionRegistry core, ChRegistryExt
-  * orZero forms, ChRegistryMisc gcd/lcm) with WideBinaryArith /
-  * WideCompare / WideNegate — RuntimeReplaceable dispatchers that keep
-  * the EXACT former Catalyst trees for all-numeric children (zero
-  * regression for every green battery) and route string-carried wide
-  * integers to the kernels. See WideArithExpressions.scala.
+  * The named arithmetic/comparison functions (plus … lcm, equals …
+  * greaterOrEquals, intDivOrZero, moduloOrZero) are WideBinaryArith /
+  * WideCompare / WideNegate — RuntimeReplaceable dispatchers that build
+  * the plain numeric Catalyst trees for all-numeric children and route
+  * string-carried wide integers to the kernels. See
+  * WideArithExpressions.scala.
   */
 object ChRegistryWide {
 
@@ -45,13 +44,17 @@ object ChRegistryWide {
   private def orZero(e: Expression, bits: Int, signed: Boolean): Expression =
     Coalesce(Seq(toWideOrNull(e, bits, signed), Literal("0")))
 
+  private def orDefault(args: Seq[Expression], bits: Int,
+      signed: Boolean): Expression =
+    ChConversions.orDefaultOf(a => toWideOrNull(a.head, bits, signed), args)
+
   private def bin(op: String): Seq[Expression] => Expression =
     args => WideBinaryArith(args(0), args(1), op)
 
   private def cmp(op: String): Seq[Expression] => Expression =
     args => WideCompare(args(0), args(1), op)
 
-  val builders: Map[String, Seq[Expression] => Expression] = Map(
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // conversions: C++-wrap form + OrNull (range-checked) + OrZero
     "toint128" -> { a => toWide(a.head, 128, signed = true) },
     "touint128" -> { a => toWide(a.head, 128, signed = false) },
@@ -65,6 +68,10 @@ object ChRegistryWide {
     "touint128orzero" -> { a => orZero(a.head, 128, signed = false) },
     "toint256orzero" -> { a => orZero(a.head, 256, signed = true) },
     "touint256orzero" -> { a => orZero(a.head, 256, signed = false) },
+    "toint128ordefault" -> { a => orDefault(a, 128, signed = true) },
+    "touint128ordefault" -> { a => orDefault(a, 128, signed = false) },
+    "toint256ordefault" -> { a => orDefault(a, 256, signed = true) },
+    "touint256ordefault" -> { a => orDefault(a, 256, signed = false) },
 
     // named arithmetic — width-dispatched (numeric tree or wide kernel)
     "plus" -> bin("plus"),

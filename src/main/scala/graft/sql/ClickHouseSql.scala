@@ -886,38 +886,12 @@ object ClickHouseSql {
         // by file rename: Spark's own commit protocol stages every
         // insert of a table under its single `_temporary` dir, so the
         // constraint is lifted beside it, not fought inside it.
-        // Every table identifier a leg references. Round-12 ADVICE fixes:
-        // comma-separated FROM lists ('FROM a, b' — each element's first
-        // word is the table, the rest an alias), backtick-quoted names,
-        // and 'default.'-qualified vs bare spellings of one table now all
-        // land on the same group key, so legs sharing a table can never
-        // race into different union-find groups.
-        def legIdents(l: String): Set[String] = {
-          val kw = Set("select", "values", "with", "table", "if", "not",
-            "exists", "from", "into", "where", "only", "infile", "outfile",
-            "partition", "as", "on", "using", "join", "left", "right",
-            "inner", "full", "cross", "group", "order", "limit")
-          val ident = "(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)"
-          // an alias may follow each list element, but a CLAUSE keyword
-          // after the ident is not an alias (…FROM a JOIN b…)
-          val alias = "(?:\\s+(?:AS\\s+)?(?!(?:JOIN|ON|USING|WHERE|GROUP|" +
-            "ORDER|LIMIT|LEFT|RIGHT|INNER|FULL|CROSS|INTO|SELECT|SET|" +
-            "PARTITION|VALUES|UNION|HAVING|SETTINGS|FORMAT|PREWHERE|" +
-            "FINAL|SAMPLE|ASOF|ANY|PASTE|GLOBAL|SEMI|ANTI|INTERSECT|" +
-            "EXCEPT|QUALIFY|OFFSET|WINDOW)\\b)[A-Za-z_][A-Za-z0-9_]*)?"
-          val listRe = ("(?is)\\b(?:FROM|JOIN|INTO|UPDATE|TABLE)\\s+" +
-            "(?:TABLE\\s+)?(?:IF\\s+(?:NOT\\s+)?EXISTS\\s+)?" +
-            s"($ident$alias(?:\\s*,\\s*$ident$alias)*)").r
-          SqlLex.matchesIn(l, listRe)
-            .flatMap(_.group(1).split(','))
-            .map(_.trim.split("\\s+")(0))
-            .map(_.stripPrefix("`").stripSuffix("`").toLowerCase)
-            .map(t => if (t.startsWith("default.")) t.substring(8) else t)
-            .filter(_.nonEmpty)
-            .filterNot(kw)
-            .toSet
-        }
-        val ids = legs.map(legIdents)
+        // Every table identifier a leg references (SqlLex.tableRefs:
+        // comma-listed, backtick-quoted and 'default.'-qualified vs bare
+        // spellings of one table all land on the same group key), so
+        // legs sharing a table can never race into different union-find
+        // groups.
+        val ids = legs.map(SqlLex.tableRefs)
         val parent = Array.tabulate(legs.length)(identity)
         def find(x: Int): Int = {
           var r = x
@@ -952,7 +926,7 @@ object ClickHouseSql {
             val t0 = parsed.headOption.flatten.map(_._1)
             val ok = parsed.forall(_.isDefined) && t0.isDefined &&
               parsed.flatten.forall(_._1 == t0.get) &&
-              parsed.flatten.forall(p => !legIdents(p._3).contains(t0.get)) &&
+              parsed.flatten.forall(p => !SqlLex.tableRefs(p._3).contains(t0.get)) &&
               scala.util.Try(spark.sessionState.catalog.getTableMetadata(
                 org.apache.spark.sql.catalyst.TableIdentifier(t0.get))
                 .provider.exists(_.equalsIgnoreCase("parquet")))

@@ -270,8 +270,8 @@ object Dictionaries {
       hierCls, ret, method, hierMap(d) +: extra,
       MapType(LongType, LongType) +: extra.map(_ => LongType))
 
-  val builders: Map[String, Seq[Expression] => Expression] = {
-    val core: Map[String, Seq[Expression] => Expression] = Map(
+  val builders: Seq[(String, Seq[Expression] => Expression)] = {
+    val core: Seq[(String, Seq[Expression] => Expression)] = Seq(
       "dictget" -> (args => get(args)),
       "dictgetornull" -> (args => getOrNull(args)),
       "dictgetordefault" -> (args => getOrDefault(args)),
@@ -304,6 +304,15 @@ object Dictionaries {
     val typedDefaults = typedLanes.map { case (lane, dt) =>
       s"dictget${lane}ordefault" -> (typedOrDefault(dt) _)
     }
-    core ++ typedGets ++ typedDefaults
+    // IP attributes ride the string rendering, the engine's IP carrier
+    // (FunctionsExternalDictionaries.h dictGetIPv4 / dictGetIPv6)
+    val ipLanes = Seq("ipv4", "ipv6").flatMap { lane =>
+      Seq(
+        s"dictget$lane" -> ((args: Seq[Expression]) =>
+          Cast(get(args), StringType)),
+        s"dictget${lane}ordefault" -> ((args: Seq[Expression]) =>
+          Cast(getOrDefault(args), StringType)))
+    }
+    core ++ typedGets ++ typedDefaults ++ ipLanes
   }
 }

@@ -232,6 +232,45 @@ object SqlLex {
   def firstMatch(s: String, re: Regex): Option[Regex.Match] =
     matchesIn(s, re).nextOption()
 
+  private val refKeywords = Set("select", "values", "with", "table", "if",
+    "not", "exists", "from", "into", "where", "only", "infile", "outfile",
+    "partition", "as", "on", "using", "join", "left", "right", "inner",
+    "full", "cross", "group", "order", "limit")
+
+  private val tableListRe = {
+    val ident = "(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_.]*)"
+    // an alias may follow each list element, but a CLAUSE keyword after
+    // the ident is not an alias (…FROM a JOIN b…)
+    val alias = "(?:\\s+(?:AS\\s+)?(?!(?:JOIN|ON|USING|WHERE|GROUP|" +
+      "ORDER|LIMIT|LEFT|RIGHT|INNER|FULL|CROSS|INTO|SELECT|SET|" +
+      "PARTITION|VALUES|UNION|HAVING|SETTINGS|FORMAT|PREWHERE|" +
+      "FINAL|SAMPLE|ASOF|ANY|PASTE|GLOBAL|SEMI|ANTI|INTERSECT|" +
+      "EXCEPT|QUALIFY|OFFSET|WINDOW)\\b)[A-Za-z_][A-Za-z0-9_]*)?"
+    // UPDATE names a table only as the statement's first word: in
+    // ALTER TABLE t UPDATE c = …, the word after it is a column
+    ("(?is)(?:\\b(?:FROM|JOIN|INTO|TABLE)|^\\s*UPDATE)\\s+" +
+      "(?:TABLE\\s+)?(?:IF\\s+(?:NOT\\s+)?EXISTS\\s+)?" +
+      s"($ident$alias(?:\\s*,\\s*$ident$alias)*)").r
+  }
+
+  /** Table names after FROM, JOIN, INTO or TABLE (and a leading UPDATE),
+    * outside literals and comments, lowercased: comma-separated FROM
+    * lists ('FROM a, b' — each element's first word is the table, the
+    * rest an alias), backtick-quoted names, and 'default.'-qualified
+    * names (reduced to the bare name) included. It reads the raw text,
+    * so it also covers dialect-only syntax Spark's parser rejects; a
+    * word that names no table (a CTE, a table function) is left for the
+    * caller to filter against the catalog. */
+  def tableRefs(stmt: String): Set[String] =
+    matchesIn(stmt, tableListRe)
+      .flatMap(_.group(1).split(','))
+      .map(_.trim.split("\\s+")(0))
+      .map(_.stripPrefix("`").stripSuffix("`").toLowerCase)
+      .map(t => if (t.startsWith("default.")) t.substring(8) else t)
+      .filter(_.nonEmpty)
+      .filterNot(refKeywords)
+      .toSet
+
   /** Every match of `re` outside literals and comments replaced by
     * `f(match)`, spliced in verbatim (no `$n` group syntax). */
   def replaceAll(s: String, re: Regex)(f: Regex.Match => String): String = {

@@ -59,8 +59,8 @@ private[graft] object WideArith {
     StaticInvoke(classOf[java.math.BigInteger], bigIntType, "valueOf",
       Seq(asLong(e)), Seq(LongType))
 
-  /** Long-range gcd via BigInteger (the pre-dispatch ChRegistryMisc tree,
-    * kept verbatim for the all-numeric branch). */
+  /** Long-range gcd via BigInteger: the all-numeric branch of the named
+    * gcd/lcm functions (gcd.cpp), a codegen'd object-call chain. */
   def gcdLong(a: Expression, b: Expression): Expression =
     Invoke(Invoke(bigInt(a), "gcd", bigIntType, Seq(bigInt(b))),
       "longValueExact", LongType)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sql.{ChFunctionRegistry, ChRegistryMisc, ClickHouseSql}
+import graft.sql.{ChDateTime, ChFunctionRegistry, ClickHouseSql}
 import org.apache.spark.sql.Row
 
 /** Edge semantics of the extension-wave registries (Ext/UrlDate/Misc)
@@ -34,10 +34,10 @@ class ChRegistryExtSpec extends SparkFunSuite {
   }
 
   test("mysqlToJava quotes literal text so pattern letters cannot leak") {
-    assert(ChRegistryMisc.mysqlToJava("%Y year") == "yyyy' year'")
-    assert(ChRegistryMisc.mysqlToJava("%Y-%m-%d") == "yyyy-MM-dd")
-    assert(ChRegistryMisc.mysqlToJava("%H:%i:%S") == "HH:mm:ss")
-    assert(ChRegistryMisc.mysqlToJava("100%%") == "100%")
+    assert(ChDateTime.mysqlToJava("%Y year") == "yyyy' year'")
+    assert(ChDateTime.mysqlToJava("%Y-%m-%d") == "yyyy-MM-dd")
+    assert(ChDateTime.mysqlToJava("%H:%i:%S") == "HH:mm:ss")
+    assert(ChDateTime.mysqlToJava("100%%") == "100%")
     val r = one("""SELECT formatDateTime(TIMESTAMP'2024-03-15 00:00:00',
       '%Y year, day %j') AS s""")
     assert(r.getString(0) == "2024 year, day 075")

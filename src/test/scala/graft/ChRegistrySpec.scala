@@ -3,27 +3,16 @@ package graft
 import graft.sql.{ChFunctionRegistry, ClickHouseSql}
 import org.apache.spark.sql.Row
 
-/** De-shadowed registry invariants (round-2 VERDICT item 8):
-  *   - install() must not replace ANY Spark built-in;
-  *   - for every alias we SKIP because Spark already has the name, the
-  *     built-in must deliver the CH semantics we'd have registered
-  *     (parity assertions below — if a Spark upgrade drifts one of these,
-  *     this suite is the tripwire);
+/** De-shadowed registry invariants:
+  *   - install() must not replace a Spark built-in (no builder carries a
+  *     built-in's name but monthname — ChRegistryLayoutSpec);
+  *   - for every CH name Spark's built-in already serves, the built-in
+  *     must deliver the CH semantics (parity assertions below — if a
+  *     Spark upgrade drifts one of these, this suite is the tripwire);
   *   - the dialect layer covers the two deliberate non-registrations
   *     (zero-arg count(), CH any → any_value).
   */
 class ChRegistrySpec extends SparkFunSuite {
-
-  test("install() skips exactly the expected Spark-builtin names") {
-    // The skip-set is pinned: a new entry appearing here means a builder
-    // was added whose name collides with a Spark built-in — decide
-    // explicitly (skip + parity-test below, or rename) before shipping.
-    assert(ChFunctionRegistry.shadowedBuiltins(spark).toSet == Set(
-      "hex", "unhex", "nullif", "ifnull", "startswith", "endswith",
-      "lcase", "ucase", "median", "cbrt",
-      // round-5 tail sweep: Spark builtins with CH-identical semantics
-      "printf", "factorial"))
-  }
 
   test("skipped builtins have CH-identical semantics") {
     ChFunctionRegistry.install(spark)

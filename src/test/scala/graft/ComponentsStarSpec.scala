@@ -124,34 +124,4 @@ class ComponentsStarSpec extends SparkFunSuite {
     val star = labelsOf(Components.connectedComponentsStar(df))
     assert(star == Map(1L -> 1L, 2L -> 1L))
   }
-
-  test("reliable-checkpoint lane (round-12 verdict wrong #2) produces " +
-      "labels identical to the localCheckpoint lane, and actually " +
-      "lands checkpoint files in the directory") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cc_ckpt").toString
-    try {
-      val rnd = new scala.util.Random(7)
-      val edges = (1 to 400).map(_ =>
-        (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-        .toDF("src", "dst")
-      val local = labelsOf(Components.connectedComponents(edges))
-      val reliable = labelsOf(Components.connectedComponents(edges,
-        checkpointDir = Some(dir)))
-      assert(local == reliable,
-        "the durable lane must not change any label")
-      val starL = labelsOf(Components.connectedComponentsStar(edges))
-      val starR = labelsOf(Components.connectedComponentsStar(edges,
-        checkpointDir = Some(dir)))
-      assert(starL == starR)
-      // the reliable lane really wrote RDD checkpoints under the dir
-      def anyFiles(p: java.io.File): Boolean =
-        p.isFile || Option(p.listFiles()).exists(_.exists(anyFiles))
-      assert(anyFiles(new java.io.File(dir)),
-        "reliable checkpoint must write files under the requested dir")
-    } finally {
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
-    }
-  }
 }

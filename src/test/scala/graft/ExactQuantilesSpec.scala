@@ -87,10 +87,10 @@ class ExactQuantilesSpec extends SparkFunSuite {
   }
 
   test("log-grid edges: zeros, adjacent doubles, mixed magnitudes") {
-    // exercises the round-18 level-1 log bucketing: the zero bucket, a
-    // mass point of exact 0.0, values one ulp apart under a cap that
-    // forces the degenerate value-split lane, and magnitudes spanning
-    // twelve orders
+    // exercises the equal-width histogram selection at its edges: a mass
+    // point of exact 0.0 (a min == max bucket resolved without a fetch),
+    // values one ulp apart under a cap that forces the degenerate
+    // value-split lane, and magnitudes spanning twelve orders
     val x = 123.456
     val rows = (1 to 500).map(_ => ("z", 0.0)) ++
       (1 to 300).map(_ => ("z", x)) ++
