@@ -145,18 +145,14 @@ object AccessControl {
       .sortBy(_._1)
   }
 
-  def matches(stmt: String): Boolean =
-    stmt.matches("(?is)^(CREATE|DROP|ALTER)\\s+(USER|ROLE)\\b.*") ||
-      stmt.matches("(?is)^(CREATE|DROP|ALTER)\\s+ROW\\s+POLICY\\b.*") ||
-      stmt.matches("(?is)^(CREATE|DROP|ALTER)\\s+QUOTA\\b.*") ||
-      stmt.matches("(?is)^(CREATE|DROP|ALTER)\\s+SETTINGS\\s+PROFILE\\b.*") ||
-      stmt.matches("(?is)^(GRANT|REVOKE)\\b.*") ||
-      stmt.matches("(?is)^SET\\s+(DEFAULT\\s+)?ROLE\\b.*") ||
-      stmt.matches("(?is)^CHECK\\s+GRANT\\b.*") ||
-      stmt.matches("(?is)^SHOW\\s+(GRANTS|QUOTAS|SETTINGS\\s+PROFILES|" +
-        "USERS|ROLES|ROW\\s+POLICIES|CURRENT\\s+ROLES|ENABLED\\s+ROLES)\\b.*") ||
-      stmt.matches("(?is)^SHOW\\s+CREATE\\s+(QUOTA|SETTINGS\\s+PROFILE|" +
-        "USER|ROLE|ROW\\s+POLICY)\\b.*")
+  /** The statements `execute` serves: users, roles, row policies,
+    * quotas, settings profiles, grants and their SHOW forms. */
+  val statement: scala.util.matching.Regex = ("(?is)^(?:(?:CREATE|DROP|ALTER)" +
+    "\\s+(?:USER|ROLE|ROW\\s+POLICY|QUOTA|SETTINGS\\s+PROFILE)|GRANT|REVOKE|" +
+    "SET\\s+(?:DEFAULT\\s+)?ROLE|CHECK\\s+GRANT|SHOW\\s+(?:GRANTS|QUOTAS|" +
+    "SETTINGS\\s+PROFILES|USERS|ROLES|ROW\\s+POLICIES|CURRENT\\s+ROLES|" +
+    "ENABLED\\s+ROLES)|SHOW\\s+CREATE\\s+(?:QUOTA|SETTINGS\\s+PROFILE|USER|" +
+    "ROLE|ROW\\s+POLICY))\\b.*").r
 
   // ---- quotas (ParserCreateQuotaQuery.cpp, QuotaCache.cpp) ------------
 

@@ -33,14 +33,6 @@ object ChAggregates {
       s"expected a numeric literal, got $other")
   }
 
-  /** A foldable java.lang.Number argument as a Double (unlike
-    * foldDouble, a DECIMAL literal is rejected). */
-  private def foldNumber(e: Expression): Double = e.eval() match {
-    case n: Number => n.doubleValue
-    case other => throw new IllegalArgumentException(
-      s"expected a numeric literal, got $other")
-  }
-
   private def agg(f: AggregateFunction): Expression = f.toAggregateExpression()
 
   private def foldInt(e: Expression): Int = e.eval() match {
@@ -306,7 +298,7 @@ object ChAggregates {
     "quantilesdeterministic" -> approxQsParam _,
     "quantilesdd" -> (args => CreateArray(args.drop(2).map(p =>
       agg(graft.functions.QuantileSketches.QuantileDD(args(0),
-        q = foldNumber(p), alpha = foldNumber(args(1))))))),
+        q = foldDouble(p), alpha = foldDouble(args(1))))))),
     "medianexact" -> (args => new Percentile(args.head, Literal(0.5))),
     "medianbfloat16" -> (args =>
       new ApproximatePercentile(args.head, Literal(0.5))),
@@ -644,7 +636,7 @@ object ChAggregates {
     // existing typed aggregator
     "windowfunnel" -> (args => {
       val conds = args.tail.dropRight(1)
-      val window = foldNumber(args.last).toLong * 1000000L
+      val window = foldDouble(args.last).toLong * 1000000L
       val step = conds.zipWithIndex.foldRight(Literal(-1): Expression) {
         case ((c, i), els) =>
           If(Cast(c, BooleanType), Literal(i), els)

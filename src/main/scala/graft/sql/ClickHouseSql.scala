@@ -1,6 +1,9 @@
 package graft.sql
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import scala.util.matching.Regex
 
 /** Pre-parse rewriter for ClickHouse SQL-isms (SURVEY §7 item 2) — the
   * Spark analog of the reference's parser-level clauses
@@ -639,12 +642,12 @@ object ClickHouseSql {
   private def rewriteQualify(s0: String): String = {
     if (SqlLex.find(s0, "QUALIFY").isEmpty) return s0
     // INSERT INTO t SELECT … QUALIFY …: rewrite the SELECT part only
-    if (s0.trim.matches("(?is)^INSERT\\b.*")) {
+    if (insertLike.matches(s0.trim)) {
       val selAt = SqlLex.find(s0, "SELECT").fold(-1)(_._1)
       return if (selAt <= 0) s0
       else s0.substring(0, selAt) + rewriteQualify(s0.substring(selAt))
     }
-    if (!s0.trim.matches("(?is)^(SELECT|WITH)\\b.*")) return s0
+    if (!selectLike.matches(s0.trim)) return s0
     val s = s0.trim.stripSuffix(";")
     val (at, atEnd) = SqlLex.find(s, "QUALIFY").get
     val core = s.substring(0, at).trim
@@ -808,6 +811,56 @@ object ClickHouseSql {
     }
   }
 
+  // ---- the statement table (executeQuery → InterpreterFactory::get) ---
+
+  private val selectLike = "(?is)^(?:SELECT|WITH)\\b.*".r
+  private val insertLike = "(?is)^INSERT\\b.*".r
+  private val valuesLike = "(?is)^VALUES\\b.*".r
+  private val setLike = "(?is)^SET\\b.*".r
+  private val createViewLike = "(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?VIEW\\b.*".r
+
+  /** A statement one row of the table matched: the session, the text the
+    * row read, and the row's groups, 1-based (null when a group took no
+    * part in the match). */
+  private final case class Hit(spark: SparkSession, text: String,
+      groups: IndexedSeq[String]) {
+    def apply(i: Int): String = groups(i - 1)
+    def opt(i: Int): Option[String] = Option(groups(i - 1))
+    def ok: DataFrame = ClickHouseSql.ok(spark)
+  }
+
+  /** One row of the statement table: a statement shape, compiled once,
+    * and the handler that reads its groups. A handler answering None
+    * passes the statement on to the next row. A `raw` row reads the
+    * statement before the SELECT-side preparation (see prepare). */
+  private final case class Lane(shape: Regex, raw: Boolean,
+      run: Hit => Option[DataFrame])
+
+  /** Shapes are case-insensitive and dot-all, and match the whole
+    * statement; `<t>` is a table name, `<c>` a column name and `<end>`
+    * an optional trailing semicolon. */
+  private def shape(s: String): Regex = ("(?is)" + s
+    .replace("<t>", "[A-Za-z_][A-Za-z0-9_.]*")
+    .replace("<c>", "[A-Za-z_][A-Za-z0-9_]*")
+    .replace("<end>", "\\s*;?\\s*$")).r
+
+  private def lane(s: String, raw: Boolean = false)(run: Hit => DataFrame): Lane =
+    Lane(shape(s), raw, h => Some(run(h)))
+
+  private def maybe(s: String, raw: Boolean = false)(
+      run: Hit => Option[DataFrame]): Lane = Lane(shape(s), raw, run)
+
+  /** The statement starts like one of a family's rows but none of them
+    * took it: fail loudly rather than hand it to Spark's parser. */
+  private def reject(s: String, what: String, raw: Boolean = false): Lane =
+    lane(s, raw)(_ => throw new IllegalArgumentException(s"unsupported $what"))
+
+  /** The one-row `status` frame a statement without a result answers. */
+  private def ok(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq("OK").toDF("status")
+  }
+
   private def sqlImpl(spark: SparkSession, chSql: String): DataFrame = {
     ChFunctionRegistry.install(spark)
     // SET query_id = 'x' tags this thread's jobs with a cancellable group
@@ -836,803 +889,1313 @@ object ClickHouseSql {
     // Query parameters (src/Parsers/ASTQueryParameter.h:10): `{name:Type}`
     // placeholders substitute as TYPE-CHECKED literals from the session's
     // `SET param_<name> = v` values, before any other rewriting, outside
-    // literals only. Comments go first, so no lane below ever sees one.
-    val trimmed0 = {
-      val raw = SqlLex.stripComments(chSql).trim
+    // literals only. Comments go first, so no row ever sees one.
+    val raw = {
+      val stripped = SqlLex.stripComments(chSql).trim
       // SET dialect = 'kusto' (executeQuery.cpp:1044 Dialect::kusto, the
       // reference's KQL front-end switch): every non-SET statement
       // translates through KqlTranslator FIRST, then proceeds through
-      // the ordinary statement lanes as SQL. SET stays native so
+      // the ordinary statement rows as SQL. SET stays native so
       // `SET dialect = 'clickhouse'` can always switch back.
       val dialect = spark.conf.getOption("graft.ch.dialect")
         .map(_.stripPrefix("'").stripSuffix("'").trim.toLowerCase)
         .getOrElse("clickhouse")
       val t0 =
-        if (raw.matches("(?is)^SET\\b.*")) raw
-        else if (dialect == "kusto") KqlTranslator.translate(spark, raw)
-        else if (dialect == "prql") PrqlTranslator.translate(spark, raw)
-        else raw
+        if (setLike.matches(stripped)) stripped
+        else if (dialect == "kusto") KqlTranslator.translate(spark, stripped)
+        else if (dialect == "prql") PrqlTranslator.translate(spark, stripped)
+        else stripped
       // CREATE VIEW bodies KEEP their placeholders — they substitute at
       // call time, per view invocation (parameterized views)
-      if (!t0.contains("{") ||
-          t0.matches("(?is)^CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\b.*")) t0
+      if (!t0.contains("{") || createViewLike.matches(t0)) t0
       else substituteParams(spark, t0)
     }
-    // INTO OUTFILE 'path' [FORMAT fmt] (ParserQueryWithOutput): execute
-    // the query and write the result where the client asked —
-    // CSV[WithNames] / TSV / JSONEachRow / Parquet via the native Spark
-    // writers. Returns a one-row status with the row count, like the
-    // clickhouse-client summary line.
-    // stmt1 PARALLEL WITH stmt2 [PARALLEL WITH …] (ParserParallelWithQuery):
-    // independent DDL/DML legs run CONCURRENTLY — one thread per leg
-    // (bounded pool), each submitting its own Spark jobs; the scheduler
-    // interleaves them exactly like the reference's thread pool. Legs
-    // are independent by the statement's contract. The split happens
-    // outside literals only.
-    if (!trimmed0.matches("(?is)^(SELECT|WITH)\\b.*")) {
-      val legs = SqlLex.splitTop(trimmed0, "PARALLEL WITH")
-      if (legs.length > 1) {
-        // sqlImpl, not sql: the user issued ONE statement (quota was
-        // already charged once at the sql() entry; QuotaCache::used
-        // charges per statement, not per PARALLEL WITH leg).
-        // Legs are grouped by EVERY table identifier each statement
-        // references (sources included, so a leg READING a table
-        // another leg mutates orders behind it instead of racing it),
-        // with transitive sharing merged (union-find). Groups run
-        // concurrently; inside a group legs stay in statement order,
-        // EXCEPT a group of plain `INSERT INTO t SELECT/VALUES ...` legs
-        // into one shared target (none reading that target), which runs
-        // concurrently through per-leg staging dirs + an append commit
-        // by file rename: Spark's own commit protocol stages every
-        // insert of a table under its single `_temporary` dir, so the
-        // constraint is lifted beside it, not fought inside it.
-        // Every table identifier a leg references (SqlLex.tableRefs:
-        // comma-listed, backtick-quoted and 'default.'-qualified vs bare
-        // spellings of one table all land on the same group key), so
-        // legs sharing a table can never race into different union-find
-        // groups.
-        val ids = legs.map(SqlLex.tableRefs)
-        val parent = Array.tabulate(legs.length)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
+    // stmt1 PARALLEL WITH stmt2 [PARALLEL WITH …] (ParserParallelWithQuery),
+    // split outside literals only
+    if (!selectLike.matches(raw)) {
+      val legs = SqlLex.splitTop(raw, "PARALLEL WITH")
+      if (legs.length > 1) return parallelWith(spark, legs)
+    }
+    // the first row whose shape matches runs; rows past the raw ones
+    // read the prepared statement
+    lazy val prepared = prepare(spark, raw)
+    statements.iterator.flatMap { l =>
+      val text = if (l.raw) raw else prepared
+      l.shape.unapplySeq(text).flatMap(g => l.run(Hit(spark, text, g.toIndexedSeq)))
+    }.next()
+  }
+
+  private val parallelInsert = ("(?is)^INSERT\\s+INTO\\s+(?:TABLE\\s+)?" +
+    "([A-Za-z_][A-Za-z0-9_.]*)\\s*(?:\\(([^()]*)\\)\\s*)?" +
+    "((?:SELECT|WITH|VALUES)\\b.*?);?\\s*$").r
+
+  /** The legs of one PARALLEL WITH statement run CONCURRENTLY — one
+    * thread per leg group (bounded pool), each submitting its own Spark
+    * jobs; the scheduler interleaves them exactly like the reference's
+    * thread pool. Legs are independent by the statement's contract.
+    *
+    * Each leg runs through sqlImpl, not sql: the user issued ONE
+    * statement (quota was already charged once at the sql() entry;
+    * QuotaCache::used charges per statement, not per PARALLEL WITH leg).
+    * Legs are grouped by EVERY table identifier each statement
+    * references (sources included, so a leg READING a table another leg
+    * mutates orders behind it instead of racing it), with transitive
+    * sharing merged (union-find). Groups run concurrently; inside a group
+    * legs stay in statement order, EXCEPT a group of plain
+    * `INSERT INTO t SELECT/VALUES ...` legs into one shared target (none
+    * reading that target), which runs concurrently through per-leg
+    * staging dirs + an append commit by file rename: Spark's own commit
+    * protocol stages every insert of a table under its single
+    * `_temporary` dir, so the constraint is lifted beside it, not fought
+    * inside it. SqlLex.tableRefs lands comma-listed, backtick-quoted and
+    * 'default.'-qualified vs bare spellings of one table on the same
+    * group key, so legs sharing a table can never race into different
+    * union-find groups. */
+  private def parallelWith(spark: SparkSession, legs: Seq[String]): DataFrame = {
+    val ids = legs.map(SqlLex.tableRefs)
+    val parent = Array.tabulate(legs.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    val owner = scala.collection.mutable.Map.empty[String, Int]
+    for (i <- legs.indices; t <- ids(i)) owner.get(t) match {
+      case Some(j) => parent(find(i)) = find(j)
+      case None => owner(t) = i
+    }
+    val groups = legs.indices.groupBy(find).values
+      .map(_.sorted.map(legs(_)).toSeq).toSeq
+    // optional (c1, c2, …) column list (round-13: column-list INSERTs
+    // join the concurrent append lane instead of serializing)
+    def concurrentInsertLegs(group: Seq[String])
+        : Option[(String, Seq[(Option[Seq[String]], String)])] =
+      if (group.size < 2) None
+      else {
+        val parsed = group.map {
+          case parallelInsert(t, colList, tail) => Some((t.toLowerCase,
+            Option(colList).map(_.split(',').map(_.trim)
+              .filter(_.nonEmpty).toSeq).filter(_.nonEmpty),
+            tail.trim))
+          case _ => None
         }
-        val owner = scala.collection.mutable.Map.empty[String, Int]
-        for (i <- legs.indices; t <- ids(i)) owner.get(t) match {
-          case Some(j) => parent(find(i)) = find(j)
-          case None => owner(t) = i
-        }
-        val groups = legs.indices.groupBy(find).values
-          .map(_.sorted.map(legs(_)).toSeq).toSeq
-        // optional (c1, c2, …) column list (round-13: column-list INSERTs
-        // join the concurrent append lane instead of serializing)
-        val insRe = ("(?is)^INSERT\\s+INTO\\s+(?:TABLE\\s+)?" +
-          "([A-Za-z_][A-Za-z0-9_.]*)\\s*(?:\\(([^()]*)\\)\\s*)?" +
-          "((?:SELECT|WITH|VALUES)\\b.*?);?\\s*$").r
-        def concurrentInsertLegs(group: Seq[String])
-            : Option[(String, Seq[(Option[Seq[String]], String)])] =
-          if (group.size < 2) None
-          else {
-            val parsed = group.map {
-              case insRe(t, colList, tail) => Some((t.toLowerCase,
-                Option(colList).map(_.split(',').map(_.trim)
-                  .filter(_.nonEmpty).toSeq).filter(_.nonEmpty),
-                tail.trim))
-              case _ => None
-            }
-            val t0 = parsed.headOption.flatten.map(_._1)
-            val ok = parsed.forall(_.isDefined) && t0.isDefined &&
-              parsed.flatten.forall(_._1 == t0.get) &&
-              parsed.flatten.forall(p => !SqlLex.tableRefs(p._3).contains(t0.get)) &&
-              scala.util.Try(spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(t0.get))
-                .provider.exists(_.equalsIgnoreCase("parquet")))
-                .getOrElse(false)
-            if (ok) Some((t0.get, parsed.flatten.map(p => (p._2, p._3))))
-            else None
-          }
-        val commitLock = new Object
-        def appendInsertLeg(t: String, colList: Option[Seq[String]],
-            tail: String): Unit = {
-          AccessControl.enforce(spark, s"INSERT INTO $t $tail")
-          val df0 =
-            if (tail.matches("(?is)^VALUES\\b.*")) spark.sql(tail)
-            else sqlImpl(spark, tail)
-          val meta = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(t))
-          val partCols = meta.partitionColumnNames
-          val schema = spark.table(t).schema
-          // positional binding + cast, exactly like insertInto; with a
-          // column list, unlisted table columns fill with NULL (the
-          // standard INSERT (cols) contract)
-          val aligned = colList.orElse(declaredOrder(spark, t)) match {
-            case None =>
-              require(df0.columns.length == schema.length,
-                s"INSERT INTO $t: ${df0.columns.length} columns, " +
-                  s"table has ${schema.length}")
-              df0.toDF(schema.map(_.name): _*)
-                .select(schema.map(f => org.apache.spark.sql.functions
-                  .col(f.name).cast(f.dataType)): _*)
-            case Some(cols) =>
-              require(df0.columns.length == cols.length,
-                s"INSERT INTO $t (${cols.mkString(", ")}): " +
-                  s"${df0.columns.length} columns in the source")
-              val known = schema.map(_.name.toLowerCase).toSet
-              cols.find(c => !known.contains(c.toLowerCase)).foreach(c =>
-                throw new IllegalArgumentException(
-                  s"INSERT INTO $t: unknown column '$c' in the list"))
-              val listed = cols.map(_.toLowerCase)
-              val named = df0.toDF(listed: _*)
-              named.select(schema.map { f =>
-                if (listed.contains(f.name.toLowerCase))
-                  org.apache.spark.sql.functions.col(f.name.toLowerCase)
-                    .cast(f.dataType).as(f.name)
-                else org.apache.spark.sql.functions.lit(null)
-                  .cast(f.dataType).as(f.name)
-              }: _*)
-          }
-          val loc = meta.location.getPath
-          val root = new org.apache.hadoop.fs.Path(loc)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val stage = new org.apache.hadoop.fs.Path(
-            loc + "__parallel_" + java.util.UUID.randomUUID().toString.take(12))
-          try {
-            val w = aligned.write.mode("overwrite")
-            (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-              .parquet(stage.toString)
-            // TWO-PHASE append commit (round-12 ADVICE: the one-by-one
-            // visible rename could leave a partially applied insert on a
-            // mid-move failure). Phase A renames every staged data file
-            // into its destination dir under a DOT-prefixed temp name —
-            // invisible to every reader (Spark skips '.'/'_' files).
-            // Phase B flips the dot-names to final names; these renames
-            // are same-dir metadata ops, and a failure mid-B rolls the
-            // already-flipped files back to invisibility before
-            // rethrowing — a leg's files become visible all-or-nothing.
-            val legTag = java.util.UUID.randomUUID().toString.take(8)
-            val planned = scala.collection.mutable.ArrayBuffer
-              .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
-            def stageInvisible(dir: org.apache.hadoop.fs.Path,
-                rel: String): Unit =
-              fs.listStatus(dir).foreach { st =>
-                val n = st.getPath.getName
-                if (n.startsWith("_") || n.startsWith(".")) ()
-                else if (st.isDirectory)
-                  stageInvisible(st.getPath,
-                    if (rel.isEmpty) n else s"$rel/$n")
-                else {
-                  val dstDir = if (rel.isEmpty) root
-                    else new org.apache.hadoop.fs.Path(root, rel)
-                  fs.mkdirs(dstDir)
-                  val tmp = new org.apache.hadoop.fs.Path(dstDir,
-                    s".graft_commit_${legTag}_$n")
-                  if (!fs.rename(st.getPath, tmp))
-                    throw new IllegalStateException(
-                      s"PARALLEL WITH append: staging rename of " +
-                        s"${st.getPath} failed")
-                  planned += ((tmp,
-                    new org.apache.hadoop.fs.Path(dstDir, n)))
-                }
-              }
-            stageInvisible(stage, "")
-            val flipped = scala.collection.mutable.ArrayBuffer
-              .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
-            try {
-              planned.foreach { case (tmp, fin) =>
-                if (!fs.rename(tmp, fin))
-                  throw new IllegalStateException(
-                    s"PARALLEL WITH append: commit rename to $fin failed")
-                flipped += ((tmp, fin))
-              }
-            } catch {
-              case e: Throwable =>
-                // roll back: hide the already-visible files again, then
-                // drop every temp so no partial insert survives
-                flipped.foreach { case (tmp, fin) =>
-                  scala.util.Try(fs.rename(fin, tmp))
-                }
-                planned.foreach { case (tmp, _) =>
-                  scala.util.Try(fs.delete(tmp, false))
-                }
-                throw e
-            }
-            commitLock.synchronized {
-              if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t")
-              spark.sql(s"REFRESH TABLE $t")
-              refreshSkipIndexes(spark, t)
-              queryCache.clear()
-            }
-          } finally fs.delete(stage, true)
-        }
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(groups.length, 8))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
-            groups.map[java.util.concurrent.Callable[Unit]] { group =>
-              concurrentInsertLegs(group) match {
-                case Some((t, tails)) => () => {
-                  val inner = java.util.concurrent.Executors
-                    .newFixedThreadPool(math.min(tails.size, 8))
-                  try {
-                    val sub: java.util.List[
-                      java.util.concurrent.Callable[Unit]] =
-                      tails.map[java.util.concurrent.Callable[Unit]] {
-                        case (colList, tail) =>
-                          () => { appendInsertLeg(t, colList, tail); () }
-                      }.asJava
-                    inner.invokeAll(sub).asScala.foreach(_.get())
-                  } catch {
-                    case e: java.util.concurrent.ExecutionException =>
-                      throw e.getCause
-                  } finally inner.shutdown()
-                }
-                case None =>
-                  () => { group.foreach(part => sqlImpl(spark, part)); () }
-              }
-            }.asJava
-          pool.invokeAll(tasks).asScala.foreach(_.get())
-        } catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        } finally pool.shutdown()
-        import spark.implicits._
-        return Seq("OK").toDF("status")
+        val t0 = parsed.headOption.flatten.map(_._1)
+        val ok = parsed.forall(_.isDefined) && t0.isDefined &&
+          parsed.flatten.forall(_._1 == t0.get) &&
+          parsed.flatten.forall(p => !SqlLex.tableRefs(p._3).contains(t0.get)) &&
+          scala.util.Try(spark.sessionState.catalog.getTableMetadata(
+            TableIdentifier(t0.get))
+            .provider.exists(_.equalsIgnoreCase("parquet")))
+            .getOrElse(false)
+        if (ok) Some((t0.get, parsed.flatten.map(p => (p._2, p._3))))
+        else None
       }
-    }
-    val outfile =
-      ("(?is)^(.*?)\\s+INTO\\s+OUTFILE\\s+'([^']+)'(?:\\s+FORMAT\\s+([A-Za-z0-9]+))?\\s*;?\\s*$").r
-    trimmed0 match {
-      case outfile(core, path, fmt) if trimmed0.matches("(?is)^(SELECT|WITH)\\b.*") =>
-        // sqlImpl, not sql: the OUTFILE core is the same user statement,
-        // already quota-charged once at the sql() entry
-        val df = sqlImpl(spark, core)
-        val n = df.count()
-        val w = df.coalesce(1).write.mode("overwrite")
-        Option(fmt).map(_.toLowerCase).getOrElse("csv") match {
-          case "parquet" => w.parquet(path)
-          case "jsoneachrow" | "json" => w.json(path)
-          case "tsv" | "tabseparated" =>
-            w.option("sep", "\t").csv(path)
-          case "tsvwithnames" | "tabseparatedwithnames" =>
-            w.option("sep", "\t").option("header", "true").csv(path)
-          case "csvwithnames" => w.option("header", "true").csv(path)
-          // round-7 format tail: the graft-native writers ride the same
-          // OUTFILE dispatch the reference's output-format registry serves
-          case "npy" => graft.sources.ChMiscFormats.writeNpy(df, path)
-          case "lineasstring" =>
-            graft.sources.ChMiscFormats.writeLineAsString(df, path)
-          case "rawblob" => graft.sources.ChMiscFormats.writeRawBlob(df, path)
-          case "msgpack" => graft.sources.ChMiscFormats.writeMsgPack(df, path)
-          case "jsoncolumns" =>
-            graft.sources.ChTextFormats.writeJsonColumns(df, path)
-          case "jsonobjecteachrow" =>
-            graft.sources.ChTextFormats.writeJsonObjectEachRow(df, path)
-          case "tabseparatedraw" | "tsvraw" =>
-            graft.sources.ChTextFormats.writeTabSeparatedRaw(df, path)
-          case "jsonstringseachrow" =>
-            graft.sources.ChTextFormats.writeJsonStringsEachRow(df, path)
-          // NOTE: bare "json" stays on the earlier JSONEachRow lane (the
-          // long-standing OUTFILE behavior); the document format is the
-          // writeJsonDocument API / "jsondocument" spelling here
-          case "jsondocument" =>
-            graft.sources.ChTextFormats.writeJsonDocument(df, path)
-          // render-only formats (round 8): one text file of the rendering
-          case "vertical" | "markdown" | "xml" =>
-            val text = Option(fmt).get.toLowerCase match {
-              case "vertical" => graft.sources.ChTextFormats.renderVertical(df)
-              case "markdown" => graft.sources.ChTextFormats.renderMarkdown(df)
-              case _ => graft.sources.ChTextFormats.renderXml(df)
+    val commitLock = new Object
+    def appendInsertLeg(t: String, colList: Option[Seq[String]],
+        tail: String): Unit = {
+      AccessControl.enforce(spark, s"INSERT INTO $t $tail")
+      val df0 =
+        if (valuesLike.matches(tail)) spark.sql(tail)
+        else sqlImpl(spark, tail)
+      val aligned = alignInsert(spark, t, df0, colList)
+      val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+      val partCols = meta.partitionColumnNames
+      val loc = meta.location.getPath
+      val root = new Path(loc)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val stage = new Path(
+        loc + "__parallel_" + java.util.UUID.randomUUID().toString.take(12))
+      try {
+        val w = aligned.write.mode("overwrite")
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+          .parquet(stage.toString)
+        // TWO-PHASE append commit (round-12 ADVICE: the one-by-one
+        // visible rename could leave a partially applied insert on a
+        // mid-move failure). Phase A renames every staged data file
+        // into its destination dir under a DOT-prefixed temp name —
+        // invisible to every reader (Spark skips '.'/'_' files).
+        // Phase B flips the dot-names to final names; these renames
+        // are same-dir metadata ops, and a failure mid-B rolls the
+        // already-flipped files back to invisibility before
+        // rethrowing — a leg's files become visible all-or-nothing.
+        val legTag = java.util.UUID.randomUUID().toString.take(8)
+        val planned = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+        def stageInvisible(dir: Path, rel: String): Unit =
+          fs.listStatus(dir).foreach { st =>
+            val n = st.getPath.getName
+            if (n.startsWith("_") || n.startsWith(".")) ()
+            else if (st.isDirectory)
+              stageInvisible(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
+            else {
+              val dstDir = if (rel.isEmpty) root else new Path(root, rel)
+              fs.mkdirs(dstDir)
+              val tmp = new Path(dstDir, s".graft_commit_${legTag}_$n")
+              if (!fs.rename(st.getPath, tmp))
+                throw new IllegalStateException(
+                  s"PARALLEL WITH append: staging rename of " +
+                    s"${st.getPath} failed")
+              planned += ((tmp, new Path(dstDir, n)))
             }
-            val p = new org.apache.hadoop.fs.Path(path)
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val out = fs.create(p, true)
-            try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-          case "rowbinary" => graft.sources.ChWireFormats.writeRowBinary(df, path)
-          // Protobuf / ProtobufSingle (round-13 — needs the reference's
-          // format_schema setting: SET format_schema = 'file.proto:Msg')
-          case "protobuf" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            graft.sources.ChProtobufFormat.writeProtobuf(
-              df.coalesce(1), path, schemaText, msg)
-          case "protobufsingle" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            graft.sources.ChProtobufFormat.writeProtobuf(
-              df.coalesce(1), path, schemaText, msg, single = true)
-          case "protobuflist" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            graft.sources.ChProtobufFormat.writeProtobufList(
-              df.coalesce(1), path, schemaText, msg)
-          case "template" =>
-            val (rowFmt, between) = templateSettingsOf(spark)
-            graft.sources.ChSmallFormats.writeTemplate(
-              df.coalesce(1), path, rowFmt, between)
-          case "capnproto" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            graft.sources.ChCapnProtoFormat.writeCapnProto(
-              df.coalesce(1), path, schemaText, msg)
-          case _ => w.csv(path)
+          }
+        stageInvisible(stage, "")
+        val flipped = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+        try {
+          planned.foreach { case (tmp, fin) =>
+            if (!fs.rename(tmp, fin))
+              throw new IllegalStateException(
+                s"PARALLEL WITH append: commit rename to $fin failed")
+            flipped += ((tmp, fin))
+          }
+        } catch {
+          case e: Throwable =>
+            // roll back: hide the already-visible files again, then
+            // drop every temp so no partial insert survives
+            flipped.foreach { case (tmp, fin) =>
+              scala.util.Try(fs.rename(fin, tmp))
+            }
+            planned.foreach { case (tmp, _) =>
+              scala.util.Try(fs.delete(tmp, false))
+            }
+            throw e
         }
-        import spark.implicits._
-        return Seq(n).toDF("rows_written")
-      case _ =>
+        commitLock.synchronized {
+          if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t")
+          spark.sql(s"REFRESH TABLE $t")
+          afterWrite(spark, t)
+        }
+      } finally fs.delete(stage, true)
     }
-    // INSERT INTO [TABLE] FUNCTION deltaLake('path') [PARTITION BY (…)]
-    // <select|values> (ParserInsertQuery's TABLE FUNCTION form over the
-    // reference's Delta write support): the SELECT runs first, then the
-    // native optimistic-concurrency append commits (DeltaLakeSink) —
-    // this lane must run BEFORE lakehouse READ resolution, which would
-    // otherwise turn the write target into a read view.
-    val insertDelta = ("(?is)^INSERT\\s+INTO\\s+(?:TABLE\\s+)?FUNCTION\\s+" +
-      "(deltaLake|iceberg|hudi)\\s*\\(\\s*'([^']+)'\\s*\\)\\s*" +
-      "(?:PARTITION\\s+BY\\s*\\(([^)]*)\\)\\s*)?(SELECT\\b.*|VALUES\\b.*)$").r
-    trimmed0 match {
-      case insertDelta(fn, path, partCols0, tail) =>
-        val pcs = Option(partCols0).map(_.split(',').map(_.trim)
-          .filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-        val df =
-          if (tail.matches("(?is)^VALUES\\b.*")) spark.sql(s"SELECT * FROM ($tail)")
-          else sqlImpl(spark, tail)
-        import spark.implicits._
-        if (fn.equalsIgnoreCase("iceberg")) {
-          // round 15: PARTITION BY (…) declares an identity-transform
-          // spec at creation; appends derive the table's spec
-          val sid = graft.sources.IcebergSink.append(df, path,
-            partitionBy = pcs)
-          return Seq(sid).toDF("snapshot_id")
-        }
-        if (fn.equalsIgnoreCase("hudi")) {
-          // Hudi INSERT is an UPSERT (the engine's default operation):
-          // existing keys become log data blocks, new keys a fresh
-          // base-file group. The SELECT must carry _hoodie_record_key.
-          // round 15: PARTITION BY (…) lays the table out as hive-style
-          // partition dirs at creation; appends derive the layout.
-          val (instant, nRows) = graft.sources.HudiSink.upsert(df, path,
-            partitionBy = pcs)
-          return Seq((instant, nRows)).toDF("instant", "rows_upserted")
-        }
-        val v = graft.sources.DeltaLakeSink.append(df, path,
-          partitionBy = pcs)
-        return Seq(v).toDF("committed_version")
-      case _ =>
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(groups.length, 8))
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
+        groups.map[java.util.concurrent.Callable[Unit]] { group =>
+          concurrentInsertLegs(group) match {
+            case Some((t, tails)) => () => {
+              val inner = java.util.concurrent.Executors
+                .newFixedThreadPool(math.min(tails.size, 8))
+              try {
+                val sub: java.util.List[
+                  java.util.concurrent.Callable[Unit]] =
+                  tails.map[java.util.concurrent.Callable[Unit]] {
+                    case (colList, tail) =>
+                      () => { appendInsertLeg(t, colList, tail); () }
+                  }.asJava
+                inner.invokeAll(sub).asScala.foreach(_.get())
+              } catch {
+                case e: java.util.concurrent.ExecutionException =>
+                  throw e.getCause
+              } finally inner.shutdown()
+            }
+            case None =>
+              () => { group.foreach(part => sqlImpl(spark, part)); () }
+          }
+        }.asJava
+      pool.invokeAll(tasks).asScala.foreach(_.get())
+    } catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    } finally pool.shutdown()
+    ok(spark)
+  }
+
+  /** `df0` bound to the columns of `t` for an append, cast to the table's
+    * types and in catalog order (the order insertInto binds): by the
+    * INSERT's column list when there is one, unlisted columns NULL (the
+    * standard INSERT (cols) contract); else positionally, in the order a
+    * positional INSERT binds (see declaredOrder). */
+  private def alignInsert(spark: SparkSession, t: String, df0: DataFrame,
+      colList: Option[Seq[String]]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val schema = spark.table(t).schema
+    colList.orElse(declaredOrder(spark, t)) match {
+      case None =>
+        require(df0.columns.length == schema.length,
+          s"INSERT INTO $t: ${df0.columns.length} columns, " +
+            s"table has ${schema.length}")
+        df0.toDF(schema.map(_.name): _*)
+          .select(schema.map(f => col(f.name).cast(f.dataType)): _*)
+      case Some(cols) =>
+        require(df0.columns.length == cols.length,
+          s"INSERT INTO $t (${cols.mkString(", ")}): " +
+            s"${df0.columns.length} columns in the source")
+        val known = schema.map(_.name.toLowerCase).toSet
+        cols.find(c => !known.contains(c.toLowerCase)).foreach(c =>
+          throw new IllegalArgumentException(
+            s"INSERT INTO $t: unknown column '$c' in the list"))
+        val listed = cols.map(_.toLowerCase)
+        df0.toDF(listed: _*).select(schema.map { f =>
+          if (listed.contains(f.name.toLowerCase))
+            col(f.name.toLowerCase).cast(f.dataType).as(f.name)
+          else lit(null).cast(f.dataType).as(f.name)
+        }: _*)
     }
+  }
+
+  private val trailingFormat =
+    "(?is)^((?:SELECT|WITH)\\b.*?)\\s+FORMAT\\s+[A-Za-z0-9]+\\s*;?\\s*$".r
+  private val systemMention = "\\bsystem\\.([a-z_]+)\\b".r
+
+  /** The statement every row past the raw ones reads. A SELECT loses a
+    * trailing FORMAT clause (it names the client-side serialization; the
+    * wire codecs live in sources/ChWireFormats and the result itself is
+    * format-independent), materializes the system tables it mentions,
+    * and has its table functions — file(), deltaLake(), format(), … —
+    * and parameterized views resolved to temp views. Every statement
+    * then reads `system.<t>` as the view `graft_system_<t>`. */
+  private def prepare(spark: SparkSession, raw: String): String = {
+    val s =
+      if (!selectLike.matches(raw)) raw
+      else {
+        val noFmt = raw match {
+          case trailingFormat(core) => core
+          case _ => raw
+        }
+        systemMention.findAllMatchIn(noFmt).map(_.group(1)).toSeq.distinct
+          .foreach(t => systemTables.get(t).foreach(table =>
+            table(spark, noFmt).createOrReplaceTempView(s"graft_system_$t")))
+        resolveParamViews(spark,
+          resolveMergeFn(spark, resolveFileFn(spark,
+            resolveFormatFn(spark, resolveRemoteFn(spark,
+              resolveNullFn(spark, resolveDeltaLakeFn(spark,
+                resolveCollectionFileFn(noFmt))))))))
+      }
+    SqlLex.replaceAll(s, systemName)(m => "graft_system_" + m.group(1))
+  }
+
+  /** `FROM system.<t>` (StorageSystemFactory routing): the argless system
+    * tables, each built from the session and the statement that reads
+    * it. Arg-taking tables (columns/parts of one table) stay API-only. */
+  private val systemTables: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.sources.{SystemTables => S}
+    def of(f: SparkSession => DataFrame): (SparkSession, String) => DataFrame =
+      (spark, _) => f(spark)
+    Map("tables" -> of(S.tables), "functions" -> of(S.functions),
+      "settings" -> of(S.settings), "query_log" -> of(S.queryLog),
+      "dictionaries" -> of(S.dictionaries),
+      "data_skipping_indices" -> of(S.dataSkippingIndices),
+      "metrics" -> of(S.metrics), "events" -> of(S.events),
+      "asynchronous_metrics" -> of(S.asynchronousMetrics),
+      "databases" -> of(S.databases), "processes" -> of(S.processes),
+      "one" -> of(S.one), "merges" -> of(S.merges),
+      "mutations" -> of(S.mutations), "formats" -> of(S.formats),
+      "table_engines" -> of(S.tableEngines), "clusters" -> of(S.clusters),
+      "disks" -> of(S.disks), "columns" -> of(S.columnsAll),
+      "parts" -> of(S.partsAll), "detached_parts" -> of(S.detachedParts),
+      "projections" -> of(S.projections), "errors" -> of(S.errors),
+      "view_refreshes" -> of(S.viewRefreshes), "backups" -> of(S.backups),
+      "users" -> of(S.users), "roles" -> of(S.rolesTable),
+      "grants" -> of(S.grantsTable), "row_policies" -> of(S.rowPolicies),
+      "quotas" -> of(S.quotasTable), "quota_usage" -> of(S.quotaUsage),
+      "settings_profiles" -> of(S.settingsProfilesTable),
+      "part_log" -> of(S.partLog), "current_roles" -> of(S.currentRoles),
+      "dropped_tables" -> of(S.droppedTables),
+      "named_collections" -> of(S.namedCollections),
+      "workloads" -> of(S.workloads), "resources" -> of(S.resourcesTable),
+      "enabled_roles" -> of(S.enabledRoles),
+      "settings_changes" -> of(S.settingsChanges),
+      "time_zones" -> of(S.timeZones), "build_options" -> of(S.buildOptions),
+      "warnings" -> of(S.warnings), "replicas" -> of(S.replicas),
+      "moves" -> of(S.moves),
+      "numbers" -> ((spark, stmt) => S.numbers(spark, numbersBound(stmt))))
+  }
+
+  private val systemName =
+    ("(?i)\\bsystem\\.(" + systemTables.keys.mkString("|") + ")\\b").r
+
+  /** system.numbers streams unbounded in the reference
+    * (StorageSystemNumbers.cpp) and every real query bounds it with LIMIT
+    * or a WHERE predicate; materialize to the LARGEST bound the query
+    * mentions — the max over every `LIMIT n` and every `number <[=] n`
+    * comparison — so a smaller LIMIT belonging to an unrelated subquery
+    * can never truncate the stream (a too-large bound is merely extra
+    * rows the outer plan filters/limits away). Default 2^20; queries that
+    * reference number values beyond the 2^27 materialization cap fail
+    * LOUDLY instead of silently returning short results. */
+  private def numbersBound(stmt: String): Long = {
+    val cap = 1L << 27
+    val limits = numbersLimit.findAllMatchIn(stmt).map(_.group(1).toLong).toSeq
+    val whereBounds = numbersWhere.findAllMatchIn(stmt)
+      .map(m => m.group(2).toLong + (if (m.group(1) == "<") 0L else 1L))
+      .toSeq
+    val bound = (limits ++ whereBounds).foldLeft(1L << 20)(math.max)
+    require(bound <= cap,
+      s"system.numbers: query references number values up to $bound, " +
+        s"beyond the $cap materialization cap")
+    bound
+  }
+  private val numbersLimit = "(?is)\\bLIMIT\\s+(\\d+)".r
+  private val numbersWhere = "(?is)\\bnumber\\s*(<=|<|=)\\s*(\\d+)".r
+
+  /** What follows a write into `t`: its skip indexes and projections
+    * rebuild over the new files, cached SELECT results drop, and a
+    * mutation enters system.mutations with its command text. */
+  private def afterWrite(spark: SparkSession, t: String,
+      mutation: Option[String] = None): Unit = {
+    refreshSkipIndexes(spark, t)
+    queryCache.clear()
+    mutation.foreach(logMutation(t, _))
+  }
+
+  private def partitionCols(spark: SparkSession, t: String): Seq[String] =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+      .partitionColumnNames
+
+  /** The one partition column `verb` operates on; any other layout
+    * fails. */
+  private def onePartCol(spark: SparkSession, t: String, verb: String): String = {
+    val pcols = partitionCols(spark, t)
+    require(pcols.size == 1,
+      s"$verb needs exactly one partition column, $t has $pcols")
+    pcols.head
+  }
+
+  /** Empties the warehouse dir a managed CREATE of `name` will claim. */
+  private def clearWarehouseDir(spark: SparkSession, name: String): Unit = {
+    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
+  }
+
+  private def fsOf(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private val assignment = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
+
+  /** `a = e, b = f` → (column, expression) pairs. */
+  private def assignments(text: String): Seq[(String, org.apache.spark.sql.Column)] =
+    SqlLex.splitTop(text).map {
+      case assignment(c, e) => c -> org.apache.spark.sql.functions.expr(rewrite(e))
+      case other => throw new IllegalArgumentException(
+        s"unparsable UPDATE assignment '$other'")
+    }
+
+  /** Every statement kind the dialect serves, in order; the first row
+    * whose shape matches the whole statement runs it. The last row hands
+    * everything else to Spark SQL. */
+  private val statements: Seq[Lane] = Seq(
+    // ---- raw rows: the statement as typed ----
+    // INTO OUTFILE 'path' [FORMAT fmt] (ParserQueryWithOutput): run the
+    // query and write the result where the client asked; answers the row
+    // count, like the clickhouse-client summary line
+    lane("""^((?:SELECT|WITH)\b.*?)\s+INTO\s+OUTFILE\s+'([^']+)'(?:\s+FORMAT\s+([A-Za-z0-9]+))?<end>""",
+      raw = true)(intoOutfile),
+    // INSERT INTO [TABLE] FUNCTION deltaLake|iceberg|hudi('path')
+    // [PARTITION BY (…)] <select|values> (ParserInsertQuery's TABLE
+    // FUNCTION form): the SELECT runs first, then the lakehouse commit —
+    // before the table-function READ resolution, which would otherwise
+    // turn the write target into a read view
+    lane("""^INSERT\s+INTO\s+(?:TABLE\s+)?FUNCTION\s+(deltaLake|iceberg|hudi)\s*\(\s*'([^']+)'\s*\)\s*(?:PARTITION\s+BY\s*\(([^)]*)\)\s*)?((SELECT)\b.*|VALUES\b.*)$""",
+      raw = true)(insertIntoLake),
     // DELETE FROM FUNCTION hudi('path') WHERE pred — the lightweight
     // lane (delete blocks in the groups' logs; no rewrites), matching
     // the Delta-DV / Iceberg-position-delete split
-    val hudiDelete = ("(?is)^DELETE\\s+FROM\\s+(?:TABLE\\s+)?FUNCTION\\s+" +
-      "hudi\\s*\\(\\s*'([^']+)'\\s*\\)\\s*WHERE\\s+(.+?);?\\s*$").r
-    trimmed0 match {
-      case hudiDelete(path, pred) =>
-        import spark.implicits._
-        val (instant, nRows) = graft.sources.HudiSink.deleteWhere(spark,
-          path, org.apache.spark.sql.functions.expr(rewrite(pred)))
-        return Seq((instant, nRows)).toDF("instant", "rows_deleted")
-      case _ =>
-    }
-    // Row-level lakehouse mutations over the table-function spelling
-    // (round 14 — the write-side twin of the deltaLake()/iceberg()
-    // reads):
-    //   DELETE FROM [TABLE] FUNCTION deltaLake|iceberg('p') WHERE pred
-    //   ALTER TABLE FUNCTION deltaLake|iceberg('p') DELETE WHERE pred
-    //   ALTER TABLE FUNCTION deltaLake|iceberg('p') UPDATE a = e, … WHERE pred
-    // Copy-on-write commits (Delta: remove+add; Iceberg: manifest
-    // rewrite + new snapshot) — only files holding matching rows
-    // rewrite.
-    val lakeDelete = ("(?is)^ALTER\\s+TABLE\\s+FUNCTION\\s+" +
-      "(deltaLake|iceberg)\\s*\\(\\s*'([^']+)'\\s*\\)" +
-      "\\s*DELETE\\s+WHERE\\s+(.+?);?\\s*$").r
-    val lakeDeleteShort = ("(?is)^DELETE\\s+FROM\\s+(?:TABLE\\s+)?FUNCTION\\s+" +
-      "(deltaLake|iceberg)\\s*\\(\\s*'([^']+)'\\s*\\)\\s*WHERE\\s+(.+?);?\\s*$").r
-    val lakeUpdate = ("(?is)^ALTER\\s+TABLE\\s+FUNCTION\\s+" +
-      "(deltaLake|iceberg)\\s*\\(\\s*'([^']+)'\\s*\\)\\s*UPDATE\\s+(.+?)\\s+" +
-      "WHERE\\s+(.+?);?\\s*$").r
-    def lakeMutate(fn: String, path: String, pred: String,
-        assigns: Option[String],
-        lightweight: Boolean): org.apache.spark.sql.DataFrame = {
-      import spark.implicits._
-      val predicate = org.apache.spark.sql.functions.expr(rewrite(pred))
-      val kv = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
-      val asn = assigns.map(SqlLex.splitTop(_).map {
-        case kv(c, e) => c -> org.apache.spark.sql.functions
-          .expr(rewrite(e))
-        case other => throw new IllegalArgumentException(
-          s"unparsable UPDATE assignment '$other'")
-      })
-      val isIce = fn.equalsIgnoreCase("iceberg")
-      val (v, n) = (isIce, asn) match {
-        case (false, None) =>
-          // the reference's split: DELETE FROM is the LIGHTWEIGHT
-          // delete (mask, not rewrite — deletion vectors here, the
-          // _row_exists mask there); ALTER TABLE ... DELETE is the
-          // heavyweight mutation (copy-on-write rewrite)
-          if (lightweight)
-            graft.sources.DeltaLakeSink.deleteLightweight(
-              spark, path, predicate)
-          else graft.sources.DeltaLakeSink.delete(spark, path, predicate)
-        case (false, Some(a)) =>
-          graft.sources.DeltaLakeSink.update(spark, path, a, predicate)
-        case (true, None) =>
-          if (lightweight)
-            graft.sources.IcebergSink.deleteLightweight(
-              spark, path, predicate)
-          else graft.sources.IcebergSink.delete(spark, path, predicate)
-        case (true, Some(a)) =>
-          graft.sources.IcebergSink.update(spark, path, a, predicate)
-      }
-      val vName = if (isIce) "snapshot_id" else "committed_version"
-      val nName = if (asn.isEmpty) "rows_deleted" else "rows_updated"
-      Seq((v, n)).toDF(vName, nName)
-    }
-    trimmed0 match {
-      case lakeDelete(fn, path, pred) =>
-        return lakeMutate(fn, path, pred, None, lightweight = false)
-      case lakeDeleteShort(fn, path, pred) =>
-        return lakeMutate(fn, path, pred, None, lightweight = true)
-      case lakeUpdate(fn, path, assigns, pred) =>
-        return lakeMutate(fn, path, pred, Some(assigns),
-          lightweight = false)
-      case _ =>
-    }
+    lane("""^DELETE\s+FROM\s+(?:TABLE\s+)?FUNCTION\s+hudi\s*\(\s*'([^']+)'\s*\)\s*WHERE\s+(.+?);?\s*$""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      val (instant, nRows) = graft.sources.HudiSink.deleteWhere(h.spark,
+        h(1), org.apache.spark.sql.functions.expr(rewrite(h(2))))
+      Seq((instant, nRows)).toDF("instant", "rows_deleted")
+    },
+    // row-level lakehouse mutations over the table-function spelling
+    // (round 14 — the write-side twin of the deltaLake()/iceberg() reads)
+    lane("""^ALTER\s+TABLE\s+FUNCTION\s+(deltaLake|iceberg)\s*\(\s*'([^']+)'\s*\)\s*DELETE\s+WHERE\s+(.+?);?\s*$""",
+      raw = true)(h => lakeMutate(h, h(3), None, lightweight = false)),
+    lane("""^DELETE\s+FROM\s+(?:TABLE\s+)?FUNCTION\s+(deltaLake|iceberg)\s*\(\s*'([^']+)'\s*\)\s*WHERE\s+(.+?);?\s*$""",
+      raw = true)(h => lakeMutate(h, h(3), None, lightweight = true)),
+    lane("""^ALTER\s+TABLE\s+FUNCTION\s+(deltaLake|iceberg)\s*\(\s*'([^']+)'\s*\)\s*UPDATE\s+(.+?)\s+WHERE\s+(.+?);?\s*$""",
+      raw = true)(h => lakeMutate(h, h(4), Some(h(3)), lightweight = false)),
+    // RESTORE TABLE FUNCTION deltaLake('p') TO VERSION N — revert the
+    // content to a past version with one commit (history preserved)
+    lane("""^RESTORE\s+TABLE\s+FUNCTION\s+deltaLake\s*\(\s*'([^']+)'\s*\)\s+TO\s+VERSION\s+(\d+)<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      val (cv, added, removed) =
+        graft.sources.DeltaLakeSink.restore(h.spark, h(1), h(2).toLong)
+      Seq((cv, added.toLong, removed.toLong))
+        .toDF("committed_version", "files_readded", "files_removed")
+    },
+    // ALTER TABLE FUNCTION iceberg('p') ROLLBACK TO SNAPSHOT <id> —
+    // re-point the current snapshot (round 16)
+    lane("""^ALTER\s+TABLE\s+FUNCTION\s+iceberg\s*\(\s*'([^']+)'\s*\)\s+ROLLBACK\s+TO\s+SNAPSHOT\s+(\d+)<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      Seq(graft.sources.IcebergSink.rollback(h.spark, h(1), h(2).toLong)
+        .toLong).toDF("metadata_version")
+    },
+    // OPTIMIZE TABLE FUNCTION iceberg('path') EXPIRE SNAPSHOTS [KEEP N] —
+    // metadata drops the expired snapshots, files only they referenced
+    // delete AFTER the new version is claimed
+    lane("""^OPTIMIZE\s+TABLE\s+FUNCTION\s+iceberg\s*\(\s*'([^']+)'\s*\)\s+EXPIRE\s+SNAPSHOTS(?:\s+KEEP\s+(\d+))?<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      val (expired, deleted) = graft.sources.IcebergSink.expireSnapshots(
+        h.spark, h(1), keepLast = h.opt(2).map(_.toInt).getOrElse(1))
+      Seq((expired.toLong, deleted.toLong))
+        .toDF("snapshots_expired", "files_deleted")
+    },
+    // OPTIMIZE TABLE FUNCTION deltaLake('path') VACUUM [RETAIN N HOURS] —
+    // delete files the current snapshot does not reference, older than
+    // the retention window (default 168h)
+    lane("""^OPTIMIZE\s+TABLE\s+FUNCTION\s+deltaLake\s*\(\s*'([^']+)'\s*\)\s+VACUUM(?:\s+RETAIN\s+(\d+)\s+HOURS)?<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      val hours = h.opt(2).map(_.toLong).getOrElse(168L)
+      val (files, bytes) = graft.sources.DeltaLakeSink.vacuum(
+        h.spark, h(1), retentionMs = hours * 3600L * 1000L)
+      Seq((files.toLong, bytes)).toDF("files_deleted", "bytes_reclaimed")
+    },
+    // OPTIMIZE TABLE FUNCTION hudi('path') CLEAN [KEEP N] — retain the
+    // newest N visible base slices per file group, delete the rest with
+    // their attached logs
+    lane("""^OPTIMIZE\s+TABLE\s+FUNCTION\s+hudi\s*\(\s*'([^']+)'\s*\)\s+CLEAN(?:\s+KEEP\s+(\d+))?<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      val (bases, logs) = graft.sources.HudiSink.clean(
+        h.spark, h(1), keepSlices = h.opt(2).map(_.toInt).getOrElse(1))
+      Seq((bases.toLong, logs.toLong))
+        .toDF("base_files_deleted", "log_files_deleted")
+    },
+    // OPTIMIZE TABLE FUNCTION hudi('path') ARCHIVE [KEEP N] — fold
+    // completed timeline instants older than the newest N into
+    // .hoodie/archived/ (round 17: the timeline is the unbounded
+    // metadata once compaction+clean bound the data)
+    lane("""^OPTIMIZE\s+TABLE\s+FUNCTION\s+hudi\s*\(\s*'([^']+)'\s*\)\s+ARCHIVE(?:\s+KEEP\s+(\d+))?<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      Seq(graft.sources.HudiSink.archive(h.spark, h(1),
+        keepLast = h.opt(2).map(_.toInt).getOrElse(10)).toLong)
+        .toDF("instants_archived")
+    },
     // OPTIMIZE TABLE FUNCTION deltaLake|iceberg|hudi('path') [FINAL] —
     // lakehouse compaction: materialize the current state (DV masks /
     // delete files / log blocks apply) into fresh files; dataChange
     // false on Delta, an overwrite snapshot on Iceberg (which drops the
     // delete files, re-enabling copy-on-write mutations), a per-group
     // base-slice fold at a `commit` instant on Hudi MoR (round 16)
-    val lakeOptimize = ("(?is)^OPTIMIZE\\s+TABLE\\s+FUNCTION\\s+" +
-      "(deltaLake|iceberg|hudi)\\s*\\(\\s*'([^']+)'\\s*\\)(?:\\s+FINAL)?" +
-      "\\s*;?\\s*$").r
-    // OPTIMIZE TABLE FUNCTION iceberg('path') EXPIRE SNAPSHOTS
-    // [KEEP N] — the expire_snapshots maintenance verb (round 16):
-    // metadata drops the expired snapshots, files only they referenced
-    // delete AFTER the new version is claimed
-    val lakeExpire = ("(?is)^OPTIMIZE\\s+TABLE\\s+FUNCTION\\s+" +
-      "iceberg\\s*\\(\\s*'([^']+)'\\s*\\)\\s+EXPIRE\\s+SNAPSHOTS" +
-      "(?:\\s+KEEP\\s+(\\d+))?\\s*;?\\s*$").r
-    // OPTIMIZE TABLE FUNCTION deltaLake('path') VACUUM
-    // [RETAIN N HOURS] — delete files the current snapshot does not
-    // reference, older than the retention window (default 168h)
-    val lakeVacuum = ("(?is)^OPTIMIZE\\s+TABLE\\s+FUNCTION\\s+" +
-      "deltaLake\\s*\\(\\s*'([^']+)'\\s*\\)\\s+VACUUM" +
-      "(?:\\s+RETAIN\\s+(\\d+)\\s+HOURS)?\\s*;?\\s*$").r
-    // OPTIMIZE TABLE FUNCTION hudi('path') CLEAN [KEEP N] — retain the
-    // newest N visible base slices per file group, delete the rest
-    // with their attached logs
-    val lakeClean = ("(?is)^OPTIMIZE\\s+TABLE\\s+FUNCTION\\s+" +
-      "hudi\\s*\\(\\s*'([^']+)'\\s*\\)\\s+CLEAN" +
-      "(?:\\s+KEEP\\s+(\\d+))?\\s*;?\\s*$").r
-    // OPTIMIZE TABLE FUNCTION hudi('path') ARCHIVE [KEEP N] — fold
-    // completed timeline instants older than the newest N into
-    // .hoodie/archived/ (round 17: the timeline is the unbounded
-    // metadata once compaction+clean bound the data)
-    val lakeArchive = ("(?is)^OPTIMIZE\\s+TABLE\\s+FUNCTION\\s+" +
-      "hudi\\s*\\(\\s*'([^']+)'\\s*\\)\\s+ARCHIVE" +
-      "(?:\\s+KEEP\\s+(\\d+))?\\s*;?\\s*$").r
-    // RESTORE TABLE FUNCTION deltaLake('p') TO VERSION N — revert the
-    // content to a past version with one commit (history preserved);
-    // ALTER TABLE FUNCTION iceberg('p') ROLLBACK TO SNAPSHOT <id> —
-    // re-point the current snapshot (round 16)
-    val lakeRestore = ("(?is)^RESTORE\\s+TABLE\\s+FUNCTION\\s+" +
-      "deltaLake\\s*\\(\\s*'([^']+)'\\s*\\)\\s+TO\\s+VERSION\\s+" +
-      "(\\d+)\\s*;?\\s*$").r
-    val lakeRollback = ("(?is)^ALTER\\s+TABLE\\s+FUNCTION\\s+" +
-      "iceberg\\s*\\(\\s*'([^']+)'\\s*\\)\\s+ROLLBACK\\s+TO\\s+" +
-      "SNAPSHOT\\s+(\\d+)\\s*;?\\s*$").r
-    trimmed0 match {
-      case lakeRestore(path, v) =>
-        import spark.implicits._
-        val (cv, added, removed) = graft.sources.DeltaLakeSink
-          .restore(spark, path, v.toLong)
-        return Seq((cv, added.toLong, removed.toLong))
-          .toDF("committed_version", "files_readded", "files_removed")
-      case lakeRollback(path, sid) =>
-        import spark.implicits._
-        val mv = graft.sources.IcebergSink
-          .rollback(spark, path, sid.toLong)
-        return Seq(mv.toLong).toDF("metadata_version")
-      case _ =>
-    }
-    trimmed0 match {
-      case lakeExpire(path, keep0) =>
-        import spark.implicits._
-        val keep = Option(keep0).map(_.toInt).getOrElse(1)
-        val (expired, deleted) = graft.sources.IcebergSink
-          .expireSnapshots(spark, path, keepLast = keep)
-        return Seq((expired.toLong, deleted.toLong))
-          .toDF("snapshots_expired", "files_deleted")
-      case lakeVacuum(path, hours0) =>
-        import spark.implicits._
-        val hours = Option(hours0).map(_.toLong).getOrElse(168L)
-        val (files, bytes) = graft.sources.DeltaLakeSink
-          .vacuum(spark, path, retentionMs = hours * 3600L * 1000L)
-        return Seq((files.toLong, bytes))
-          .toDF("files_deleted", "bytes_reclaimed")
-      case lakeClean(path, keep0) =>
-        import spark.implicits._
-        val keep = Option(keep0).map(_.toInt).getOrElse(1)
-        val (bases, logs) = graft.sources.HudiSink
-          .clean(spark, path, keepSlices = keep)
-        return Seq((bases.toLong, logs.toLong))
-          .toDF("base_files_deleted", "log_files_deleted")
-      case lakeArchive(path, keep0) =>
-        import spark.implicits._
-        val keep = Option(keep0).map(_.toInt).getOrElse(10)
-        val n = graft.sources.HudiSink
-          .archive(spark, path, keepLast = keep)
-        return Seq(n.toLong).toDF("instants_archived")
-      case lakeOptimize(fn, path) =>
-        import spark.implicits._
-        if (fn.equalsIgnoreCase("iceberg")) {
-          val sid = graft.sources.IcebergSink.compact(spark, path)
-          return Seq(sid).toDF("snapshot_id")
-        }
-        if (fn.equalsIgnoreCase("hudi")) {
-          val (instant, groups) =
-            graft.sources.HudiSink.compact(spark, path)
-          return Seq((instant, groups.toLong))
-            .toDF("instant", "groups_compacted")
-        }
-        val (v, before, after) =
-          graft.sources.DeltaLakeSink.compact(spark, path)
-        return Seq((v, before.toLong, after.toLong))
-          .toDF("committed_version", "files_before", "files_after")
-      case _ =>
-    }
-    // INSERT INTO t FROM INFILE 'path' [FORMAT fmt]
-    // (ParserInsertQuery infile clause — the input twin of INTO
-    // OUTFILE): read the file through the matching format reader with
-    // the TARGET TABLE's schema and append, with the same skip-index /
-    // cache invalidation as any INSERT.
-    val infile = ("(?is)^INSERT\\s+INTO\\s+(?:TABLE\\s+)?([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "FROM\\s+INFILE\\s+'([^']+)'(?:\\s+FORMAT\\s+([A-Za-z0-9]+))?\\s*;?\\s*$").r
-    trimmed0 match {
-      case infile(t, path, fmt0) =>
-        val schema = spark.table(t).schema
-        val fmt = Option(fmt0).map(_.toLowerCase).getOrElse("csvwithnames")
-        val df = fmt match {
-          case "parquet" => spark.read.schema(schema).parquet(path)
-          case "jsoneachrow" | "ndjson" | "json" =>
-            spark.read.schema(schema).json(path)
-          case "csv" =>
-            graft.sources.ChTextFormats.readCsv(spark, path, schema)
-          case "csvwithnames" =>
-            graft.sources.ChTextFormats.readCsv(spark, path, schema,
-              withNames = true)
-          case "tabseparated" | "tsv" =>
-            graft.sources.ChTextFormats.readTabSeparated(spark, path, schema)
-          case "tabseparatedwithnamesandtypes" | "tsvwithnamesandtypes" =>
-            graft.sources.ChTextFormats.readTabSeparated(spark, path, schema,
-              withNames = true, withTypes = true)
-          case "jsonobjecteachrow" =>
-            graft.sources.ChTextFormats.readJsonObjectEachRow(spark, path, schema)
-          case "rowbinary" =>
-            graft.sources.ChWireFormats.readRowBinary(spark, path, schema)
-          case "protobuf" | "protobufsingle" | "protobuflist" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            val raw =
-              if (fmt == "protobuflist")
-                graft.sources.ChProtobufFormat.readProtobufList(
-                  spark, path, schemaText, msg)
-              else graft.sources.ChProtobufFormat.readProtobuf(
-                spark, path, schemaText, msg,
-                single = fmt == "protobufsingle")
-            raw.select(schema.map(f => org.apache.spark.sql.functions
-              .col(f.name).cast(f.dataType)): _*)
-          case "form" =>
-            graft.sources.ChSmallFormats.readForm(spark, path, schema)
-          case "hivetext" =>
-            graft.sources.ChSmallFormats.readHiveText(spark, path, schema)
-          case "mysqldump" =>
-            graft.sources.ChSmallFormats.readMySQLDump(spark, path, schema,
-              spark.conf.getOption(
-                "graft.ch.input_format_mysql_dump_table_name")
-                .map(_.stripPrefix("'").stripSuffix("'")).getOrElse(""))
-          case "template" =>
-            val (rowFmt, between) = templateSettingsOf(spark)
-            graft.sources.ChSmallFormats.readTemplate(
-              spark, path, schema, rowFmt, between)
-          case "capnproto" =>
-            val (schemaText, msg) = formatSchemaOf(spark)
-            graft.sources.ChCapnProtoFormat.readCapnProto(
-              spark, path, schemaText, msg)
-              .select(schema.map(f => org.apache.spark.sql.functions
-                .col(f.name).cast(f.dataType)): _*)
-          case other => throw new IllegalArgumentException(
-            s"FROM INFILE: unsupported format '$other'")
-        }
-        df.write.mode("append").insertInto(t)
-        refreshSkipIndexes(spark, t)
-        queryCache.clear()
-        import spark.implicits._
-        return Seq(df.count()).toDF("rows_read")
-      case _ =>
-    }
-    // a trailing FORMAT clause on a SELECT names the client-side output
-    // serialization (the wire codecs live in sources/ChWireFormats); the
-    // query result itself is format-independent, so strip it
-    val trimmedNoFmt =
-      if (trimmed0.matches("(?is)^(SELECT|WITH)\\b.*\\sFORMAT\\s+[A-Za-z0-9]+\\s*;?\\s*$"))
-        trimmed0.replaceFirst("(?is)\\s+FORMAT\\s+[A-Za-z0-9]+\\s*;?\\s*$", "")
-      else trimmed0
-    // `FROM system.<t>` in a SELECT (StorageSystemFactory routing): the
-    // argless system tables materialize as temp views on demand and the
-    // reference-spelled name rewrites to the view. Arg-taking tables
-    // (columns/parts) stay API-only.
-    if (trimmedNoFmt.matches("(?is)^(SELECT|WITH)\\b.*") &&
-        trimmedNoFmt.matches("(?is).*\\bsystem\\.[a-z_]+.*")) {
-      val servable = Map(
-        "tables" -> (() => graft.sources.SystemTables.tables(spark)),
-        "functions" -> (() => graft.sources.SystemTables.functions(spark)),
-        "settings" -> (() => graft.sources.SystemTables.settings(spark)),
-        "query_log" -> (() => graft.sources.SystemTables.queryLog(spark)),
-        "dictionaries" -> (() => graft.sources.SystemTables.dictionaries(spark)),
-        "data_skipping_indices" ->
-          (() => graft.sources.SystemTables.dataSkippingIndices(spark)),
-        "metrics" -> (() => graft.sources.SystemTables.metrics(spark)),
-        "events" -> (() => graft.sources.SystemTables.events(spark)),
-        "asynchronous_metrics" ->
-          (() => graft.sources.SystemTables.asynchronousMetrics(spark)),
-        "databases" -> (() => graft.sources.SystemTables.databases(spark)),
-        "processes" -> (() => graft.sources.SystemTables.processes(spark)),
-        "one" -> (() => graft.sources.SystemTables.one(spark)),
-        "merges" -> (() => graft.sources.SystemTables.merges(spark)),
-        "mutations" -> (() => graft.sources.SystemTables.mutations(spark)),
-        "formats" -> (() => graft.sources.SystemTables.formats(spark)),
-        "table_engines" ->
-          (() => graft.sources.SystemTables.tableEngines(spark)),
-        "clusters" -> (() => graft.sources.SystemTables.clusters(spark)),
-        "disks" -> (() => graft.sources.SystemTables.disks(spark)),
-        "columns" -> (() => graft.sources.SystemTables.columnsAll(spark)),
-        "parts" -> (() => graft.sources.SystemTables.partsAll(spark)),
-        "detached_parts" ->
-          (() => graft.sources.SystemTables.detachedParts(spark)),
-        "projections" -> (() => graft.sources.SystemTables.projections(spark)),
-        "errors" -> (() => graft.sources.SystemTables.errors(spark)),
-        "view_refreshes" ->
-          (() => graft.sources.SystemTables.viewRefreshes(spark)),
-        "backups" -> (() => graft.sources.SystemTables.backups(spark)),
-        "users" -> (() => graft.sources.SystemTables.users(spark)),
-        "roles" -> (() => graft.sources.SystemTables.rolesTable(spark)),
-        "grants" -> (() => graft.sources.SystemTables.grantsTable(spark)),
-        "row_policies" ->
-          (() => graft.sources.SystemTables.rowPolicies(spark)),
-        "quotas" -> (() => graft.sources.SystemTables.quotasTable(spark)),
-        "quota_usage" ->
-          (() => graft.sources.SystemTables.quotaUsage(spark)),
-        "settings_profiles" ->
-          (() => graft.sources.SystemTables.settingsProfilesTable(spark)),
-        "part_log" -> (() => graft.sources.SystemTables.partLog(spark)),
-        "current_roles" ->
-          (() => graft.sources.SystemTables.currentRoles(spark)),
-        "dropped_tables" ->
-          (() => graft.sources.SystemTables.droppedTables(spark)),
-        "named_collections" ->
-          (() => graft.sources.SystemTables.namedCollections(spark)),
-        "workloads" -> (() => graft.sources.SystemTables.workloads(spark)),
-        "resources" ->
-          (() => graft.sources.SystemTables.resourcesTable(spark)),
-        "enabled_roles" ->
-          (() => graft.sources.SystemTables.enabledRoles(spark)),
-        "settings_changes" ->
-          (() => graft.sources.SystemTables.settingsChanges(spark)),
-        "time_zones" -> (() => graft.sources.SystemTables.timeZones(spark)),
-        "build_options" ->
-          (() => graft.sources.SystemTables.buildOptions(spark)),
-        "warnings" -> (() => graft.sources.SystemTables.warnings(spark)),
-        "replicas" -> (() => graft.sources.SystemTables.replicas(spark)),
-        "moves" -> (() => graft.sources.SystemTables.moves(spark)),
-        // system.numbers streams unbounded in the reference
-        // (StorageSystemNumbers.cpp) and every real query bounds it with
-        // LIMIT or a WHERE predicate; materialize to the LARGEST bound the
-        // query mentions — the max over every `LIMIT n` and every
-        // `number <[=] n` comparison — so a smaller LIMIT belonging to an
-        // unrelated subquery can never truncate the stream (a too-large
-        // bound is merely extra rows the outer plan filters/limits away).
-        // Default 2^20; queries that reference number values beyond the
-        // 2^27 materialization cap fail LOUDLY instead of silently
-        // returning short results.
-        "numbers" -> { () =>
-          val cap = 1L << 27
-          val limits = "(?is)\\bLIMIT\\s+(\\d+)".r
-            .findAllMatchIn(trimmedNoFmt).map(_.group(1).toLong).toSeq
-          val whereBounds = "(?is)\\bnumber\\s*(<=|<|=)\\s*(\\d+)".r
-            .findAllMatchIn(trimmedNoFmt)
-            .map(m => m.group(2).toLong + (if (m.group(1) == "<") 0L else 1L))
-            .toSeq
-          val bound = (limits ++ whereBounds).foldLeft(1L << 20)(math.max)
-          require(bound <= cap,
-            s"system.numbers: query references number values up to $bound, " +
-              s"beyond the $cap materialization cap")
-          graft.sources.SystemTables.numbers(spark, bound)
-        })
-      "\\bsystem\\.([a-z_]+)\\b".r.findAllMatchIn(trimmedNoFmt)
-        .map(_.group(1)).toSeq.distinct
-        .filter(servable.contains)
-        .foreach { t =>
-          servable(t)().createOrReplaceTempView(s"graft_system_$t")
-        }
-    }
-    // file('path'[, 'Format'[, 'schema']]) table function
-    // (src/TableFunctions/TableFunctionFile.cpp): resolve each call to a
-    // temp view over the matching reader BEFORE the literal-safe rewrite
-    // (the call's arguments are quoted, so they must go before the
-    // quote-split below).
+    lane("""^OPTIMIZE\s+TABLE\s+FUNCTION\s+(deltaLake|iceberg|hudi)\s*\(\s*'([^']+)'\s*\)(?:\s+FINAL)?<end>""",
+      raw = true) { h =>
+      import h.spark.implicits._
+      h(1).toLowerCase match {
+        case "iceberg" =>
+          Seq(graft.sources.IcebergSink.compact(h.spark, h(2)))
+            .toDF("snapshot_id")
+        case "hudi" =>
+          val (instant, groups) = graft.sources.HudiSink.compact(h.spark, h(2))
+          Seq((instant, groups.toLong)).toDF("instant", "groups_compacted")
+        case _ =>
+          val (v, before, after) =
+            graft.sources.DeltaLakeSink.compact(h.spark, h(2))
+          Seq((v, before.toLong, after.toLong))
+            .toDF("committed_version", "files_before", "files_after")
+      }
+    },
+    lane("""^INSERT\s+INTO\s+(?:TABLE\s+)?(<t>)\s+FROM\s+INFILE\s+'([^']+)'(?:\s+FORMAT\s+([A-Za-z0-9]+))?<end>""",
+      raw = true)(fromInfile),
     // CREATE [OR REPLACE] VIEW with {p:Type} placeholders → store as a
     // PARAMETERIZED view (src/Storages/StorageView.cpp parameterized
-    // views); `FROM v(p = x)` substitutes typed literals at call time.
-    if (trimmedNoFmt.matches("(?is)^CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\b.*") &&
-        trimmedNoFmt.contains("{")) {
-      val re = ("(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?VIEW\\s+" +
-        "([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+(.*?);?\\s*$").r
-      trimmedNoFmt match {
-        case re(name, body) =>
-          paramViews.put(name.toLowerCase, body)
-          import spark.implicits._
-          return Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException(
-          "unsupported parameterized CREATE VIEW form")
+    // views); `FROM v(p = x)` substitutes typed literals at call time
+    lane("""^(?=.*\{)CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(<c>)\s+AS\s+(.*?);?\s*$""",
+      raw = true) { h =>
+      paramViews.put(h(1).toLowerCase, h(2))
+      h.ok
+    },
+    reject("""^(?=.*\{)CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\b.*""",
+      "parameterized CREATE VIEW form", raw = true),
+    // plain catalog views fall through to Spark's DROP VIEW
+    maybe("""^DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""", raw = true)(h =>
+      Option(paramViews.remove(h(1).toLowerCase)).map(_ => h.ok)),
+
+    // ---- DDL and catalog ----
+    lane("""^(?:CREATE|DROP)\s+DICTIONARY\b.*""")(h =>
+      Dictionaries.execute(h.spark, h.text)),
+    // DESCRIBE TABLE (ParserDescribeTableQuery): reference-shaped
+    // (name, type) rows with CH type names
+    lane("""^DESC(?:RIBE)?(?:\s+TABLE)?\s+(<t>)<end>""") { h =>
+      import h.spark.implicits._
+      h.spark.table(h(1)).schema.fields.toSeq
+        .map(f => (f.name, chTypeOrSpark(f))).toDF("name", "type")
+    },
+    lane("""^SHOW\s+CREATE\s+(?:TABLE\s+)?(<t>)<end>""")(showCreate),
+    // TRUNCATE TABLE (ParserSystemQuery family): keep schema, drop rows
+    lane("""^TRUNCATE\s+TABLE\s+(?:IF\s+EXISTS\s+)?(<t>)<end>""") { h =>
+      if (h.spark.catalog.tableExists(h(1))) {
+        h.spark.table(h(1)).limit(0).localCheckpoint(true)
+          .write.mode("overwrite").insertInto(h(1))
+        afterWrite(h.spark, h(1))
       }
+      h.ok
+    },
+    // CHECK TABLE (ParserCheckQuery / InterpreterCheckQuery): verify
+    // every backing file decodes; one row per part with is_ok, plus the
+    // reference's summary row semantics via the min over parts
+    lane("""^CHECK\s+TABLE\s+(<t>)<end>""") { h =>
+      import h.spark.implicits._
+      h.spark.table(h(1)).inputFiles.toSeq.sorted.map { f =>
+        val ok = try { h.spark.read.parquet(f).count(); 1 }
+          catch { case _: Exception => 0 }
+        (new Path(f).getName, ok)
+      }.toDF("part", "is_ok")
+    },
+    // Standalone lightweight UPDATE (ParserUpdateQuery: UPDATE t SET
+    // a = e, … [IN PARTITION p] WHERE pred): the ALTER TABLE UPDATE
+    // mutation, IN PARTITION narrowing the WHERE to the named partition
+    lane("""^UPDATE\s+(<t>)\s+SET\s+(.+?)(?:\s+IN\s+PARTITION\s+'?([^'\s;]+)'?)?\s+WHERE\s+(.+?);?\s*$""") { h =>
+      val (t, assigns) = (h(1), h(2))
+      val pred = h.opt(3).fold(h(4))(v =>
+        s"(${h(4)}) AND ${onePartCol(h.spark, t, "UPDATE IN PARTITION")} = '$v'")
+      mutate(h.spark, t, Some(assigns), pred,
+        s"ALTER TABLE $t UPDATE $assigns WHERE $pred".trim)
+    },
+    reject("""^UPDATE\s+<t>\s+SET\s+.*\bWHERE\b.*""", "UPDATE form"),
+    // Lightweight DELETE (ParserDeleteQuery): the ALTER TABLE DELETE
+    // mutation
+    lane("""^DELETE\s+FROM\s+(<t>)\s+WHERE\s+(.*?);?\s*$""")(h =>
+      mutate(h.spark, h(1), None, h(2), h.text)),
+    // CREATE TABLE a AS b (schema clone, no data — ParserCreateQuery's
+    // as_table form; never CTAS, whose AS is followed by SELECT) →
+    // Spark's CREATE TABLE ... LIKE
+    lane("""^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s+AS\s+(<t>)\s*(?:ENGINE\s*=[^()]*)?;?\s*$""") { h =>
+      clearWarehouseDir(h.spark, h(2))
+      h.spark.sql(s"CREATE TABLE ${h.opt(1).fold("")(_ => "IF NOT EXISTS ")}" +
+        s"${h(2)} LIKE ${h(3)} USING parquet")
+    },
+    lane("""^CREATE\s+TABLE\b.*""") { h =>
+      val out = h.spark.sql(rewriteCreateTable(h.text))
+      recordEngineMeta(h.text) // ORDER BY / SAMPLE BY / COMMENT / defaults
+      out
+    },
+    // CREATE LIVE VIEW (StorageLiveView.h): version-counted view; the
+    // push channel is served pull-side by WATCH (graft.sql.LiveViews)
+    lane("""^CREATE\s+LIVE\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s+AS\s+(.*)$""") { h =>
+      LiveViews.create(h.spark, h(2), h(3).trim.stripSuffix(";"),
+        h(1) != null, s => rewrite(expandSchemaTransformers(h.spark, s)))
+      h.ok
+    },
+    reject("""^CREATE\s+LIVE\s+VIEW\b.*""", "CREATE LIVE VIEW form"),
+    // WATCH lv [EVENTS] [LIMIT n] (ASTWatchQuery: table + optional
+    // limit_length + is_watch_events): bounded re-evaluation — the
+    // version bumps iff the result hash changed (exactly once per
+    // underlying change, however many WATCHes observe it)
+    lane("""^WATCH\s+(<t>)(\s+EVENTS)?(?:\s+LIMIT\s+(\d+))?<end>""") { h =>
+      val run = liveViewRun(h.spark)
+      if (h(2) != null)
+        LiveViews.watchEvents(h.spark, h(1), h.opt(3).map(_.toInt), run)
+      else LiveViews.watch(h.spark, h(1), run)
+    },
+    reject("""^WATCH\b.*""",
+      "WATCH form (expected WATCH view [EVENTS] [LIMIT n])"),
+    maybe("""^DROP\s+(?:LIVE\s+)?VIEW\s+(?:IF\s+EXISTS\s+)?(<t>)<end>""")(h =>
+      if (!LiveViews.contains(h(1))) None
+      else {
+        LiveViews.remove(h(1))
+        h.spark.catalog.dropTempView(h(1))
+        Some(h.ok)
+      }),
+    lane("""^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s*(?:REFRESH\s+EVERY\s+(\d+)\s+([A-Za-z]+)\s+)?(?:TO\s+(<t>)\s+)?(?:POPULATE\s+)?AS\s+(.*)$""")(
+      createMaterializedView),
+    reject("""^CREATE\s+MATERIALIZED\s+VIEW\b.*""",
+      "CREATE MATERIALIZED VIEW form"),
+    // SYSTEM REFRESH VIEW v (InterpreterSystemQuery SYSTEM REFRESH VIEW
+    // → RefreshTask::run): force the re-materialization the schedule
+    // would trigger — re-run the stored SELECT against the CURRENT base
+    // data, then invalidate caches like any mutation
+    lane("""^SYSTEM\s+REFRESH\s+VIEW\s+(<t>)<end>""") { h =>
+      val v = h(1).toLowerCase
+      val rv = Option(refreshableViews.get(v)).getOrElse(
+        throw new IllegalArgumentException(
+          s"SYSTEM REFRESH VIEW: $v is not a refreshable materialized view"))
+      // durable replace: the fresh materialization is staged on disk
+      // before the old table drops — a crash mid-refresh leaves the
+      // stale-or-staged copy, never neither (DurableRewrite)
+      val out = h.spark.sql(rewrite(expandSchemaTransformers(h.spark, rv.select)))
+      graft.operators.DurableRewrite.replaceTable(h.spark, rv.table, out)
+      refreshableViews.put(v, rv.copy(refreshes = rv.refreshes + 1))
+      afterWrite(h.spark, rv.table)
+      h.ok
+    },
+    lane("""^DETACH\s+TABLE\b\s*(.*?)<end>""")(detachTable),
+    lane("""^ATTACH\s+TABLE\b\s*(.*?)<end>""") { h =>
+      val t = h(1)
+      val (schemaDdl, loc) = Option(detachedTables.remove(t)).getOrElse(
+        throw new IllegalArgumentException(
+          s"ATTACH TABLE $t: no detached table of that name"))
+      fsOf(h.spark, loc).rename(new Path(loc + "_detached"), new Path(loc))
+      h.spark.sql(s"CREATE TABLE $t ($schemaDdl) USING parquet LOCATION '$loc'")
+      h.ok
+    },
+    lane("""^(DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(<t>))<end>""")(dropTable),
+    // UNDROP TABLE (InterpreterUndropQuery.cpp): restore the most
+    // recently dropped table of this name from the `_dropped` holding
+    // dir — rename back, re-create the catalog entry over the original
+    // location, partitions recovered
+    lane("""^UNDROP\s+TABLE\b\s*(.*?)<end>""") { h =>
+      val t = h(1)
+      val (schemaDdl, loc, partCols, managed) =
+        Option(droppedTables.remove(t)).getOrElse(
+          throw new IllegalArgumentException(
+            s"UNDROP TABLE $t: no dropped table of that name in the holding area"))
+      recreateCatalogEntry(h.spark, t, schemaDdl, loc, partCols, managed) { dest =>
+        val fs = fsOf(h.spark, loc)
+        val hold = new Path(loc + "_dropped")
+        if (fs.exists(hold) && !fs.rename(hold, new Path(dest)))
+          throw new IllegalStateException(
+            s"UNDROP TABLE $t: rename of $hold to $dest failed")
+      }
+      droppedEngineMeta.remove(t).foreach(engineMeta.put(t, _))
+      h.ok
+    },
+    lane("""^(BACKUP|RESTORE)\s+TABLE\s+(<t>)\s+(?:TO|FROM)\s+(File|Disk)\s*\(\s*'([^']+)'(?:\s*,\s*'([^']+)')?\s*\)<end>""")(
+      backupRestore),
+    reject("""^(?:BACKUP|RESTORE)\s+TABLE\b.*""",
+      "BACKUP/RESTORE form (TABLE t TO/FROM File('p') | Disk('d','p'))"),
+    // named collections (ParserCreateNamedCollectionQuery,
+    // ParserAlterNamedCollectionQuery, ParserDropNamedCollectionQuery)
+    lane("""^CREATE\s+NAMED\s+COLLECTION\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)\s+AS\s+(.+?);?\s*$""") { h =>
+      if (namedCollections.putIfAbsent(h(2), collectionKv(h(3))).isDefined &&
+          h(1) == null)
+        throw new IllegalArgumentException(
+          s"named collection `${h(2)}` already exists")
+      h.ok
+    },
+    lane("""^ALTER\s+NAMED\s+COLLECTION\s+(IF\s+EXISTS\s+)?(<c>)\s+(SET|DELETE)\s+(.+?);?\s*$""") { h =>
+      namedCollections.get(h(2)) match {
+        case None =>
+          if (h(1) == null) throw new IllegalArgumentException(
+            s"there is no named collection `${h(2)}`")
+        case Some(cur) =>
+          namedCollections.put(h(2),
+            if (h(3).equalsIgnoreCase("SET")) cur ++ collectionKv(h(4))
+            else cur -- h(4).split(",").map(_.trim).filter(_.nonEmpty))
+      }
+      h.ok
+    },
+    lane("""^DROP\s+NAMED\s+COLLECTION\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      if (namedCollections.remove(h(2)).isEmpty && h(1) == null)
+        throw new IllegalArgumentException(
+          s"there is no named collection `${h(2)}`")
+      h.ok
+    },
+    lane("""^SHOW\s+NAMED\s+COLLECTIONS<end>""") { h =>
+      import h.spark.implicits._
+      listNamedCollections.map(_._1).toDF("name")
+    },
+    reject("""^(?:CREATE|ALTER|DROP)\s+NAMED\s+COLLECTION\b.*""",
+      "NAMED COLLECTION form"),
+    // workloads / resources (ParserCreateWorkloadQuery,
+    // ParserCreateResourceQuery; see `workloads`)
+    lane("""^CREATE\s+WORKLOAD\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)(?:\s+IN\s+(<c>))?(?:\s+SETTINGS\s+(.+?))?;?\s*$""") { h =>
+      val parentName = h.opt(3).getOrElse("")
+      if (parentName.nonEmpty) require(workloads.contains(parentName),
+        s"CREATE WORKLOAD: parent workload `$parentName` does not exist")
+      if (workloads.putIfAbsent(h(2),
+          (parentName, h.opt(4).getOrElse(""))).isDefined && h(1) == null)
+        throw new IllegalArgumentException(s"workload `${h(2)}` already exists")
+      h.ok
+    },
+    lane("""^DROP\s+WORKLOAD\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      if (workloads.remove(h(2)).isEmpty && h(1) == null)
+        throw new IllegalArgumentException(s"there is no workload `${h(2)}`")
+      h.ok
+    },
+    lane("""^CREATE\s+RESOURCE\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)\s*\((.+?)\)<end>""") { h =>
+      if (resources.putIfAbsent(h(2), h(3).trim).isDefined && h(1) == null)
+        throw new IllegalArgumentException(s"resource `${h(2)}` already exists")
+      h.ok
+    },
+    lane("""^DROP\s+RESOURCE\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      if (resources.remove(h(2)).isEmpty && h(1) == null)
+        throw new IllegalArgumentException(s"there is no resource `${h(2)}`")
+      h.ok
+    },
+    reject("""^(?:CREATE|DROP)\s+(?:WORKLOAD|RESOURCE)\b.*""",
+      "WORKLOAD/RESOURCE form"),
+    Lane(AccessControl.statement, raw = false, h =>
+      Some(AccessControl.execute(h.spark, h.text))),
+    // EXCHANGE TABLES a AND b (InterpreterRenameQuery exchange=true):
+    // atomic in the reference; here a triple rename through a temp name
+    lane("""^EXCHANGE\s+TABLES\s+(<t>)\s+AND\s+(<t>)<end>""") { h =>
+      val tmp = s"__graft_xchg_${System.nanoTime()}"
+      Seq((h(1), tmp), (h(2), h(1)), (tmp, h(2))).foreach { case (from, to) =>
+        h.spark.sql(s"ALTER TABLE $from RENAME TO $to")
+        moveEngineMeta(from, to)
+      }
+      h.ok
+    },
+    reject("""^EXCHANGE\s+TABLES\b.*""", "EXCHANGE form"),
+    lane("""^RENAME\s+TABLE\s+(<t>)\s+TO\s+(<t>)<end>""") { h =>
+      val df = h.spark.sql(s"ALTER TABLE ${h(1)} RENAME TO ${h(2)}")
+      moveEngineMeta(h(1), h(2))
+      df
+    },
+    reject("""^RENAME\s+TABLE\b.*""", "RENAME form"),
+
+    // ---- ALTER TABLE ----
+    // projections (ParserProjectionDeclaration): ADD builds eagerly here
+    // (the reference defers the build to a mutation), so MATERIALIZE is
+    // the refresh entry point
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(<c>)\s*\((.*)\)<end>""")(
+      addProjection),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+DROP\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      projections.remove((h(1), h(2))).foreach { e =>
+        if (e.isAgg) graft.plans.AggProjections.drop(e.basePath)
+        else graft.plans.NormalProjections.drop(h.spark, e.basePath)
+      }
+      h.ok
+    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+PROJECTION\b.*""") { h =>
+      refreshProjections(h.spark, h(1))
+      h.ok
+    },
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MATERIALIZE)\s+PROJECTION\b.*""",
+      "projection DDL"),
+    // skip indexes (see SkipIdx)
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(<c>)\s+(.+?)\s+TYPE\s+([A-Za-z_0-9]+)(?:\s*\(\s*(\d+)[^)]*\))?(?:\s+GRANULARITY\s+\d+)?<end>""") { h =>
+      val (table, name) = (h(1), h(2))
+      val kind = h(4).toLowerCase
+      if (!Set("bloom_filter", "minmax", "ngrambf_v1", "set").contains(kind))
+        throw new IllegalArgumentException(
+          s"unsupported skip-index type $kind (bloom_filter|minmax|ngrambf_v1|set)")
+      val idxDir = new Path(h.spark.conf.get("spark.sql.warehouse.dir"),
+        s"graft_skip_indexes/${table}_$name").toString
+      val m = SkipIdx(table, name, tableLocation(h.spark, table), kind, idxDir,
+        h(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+        h.opt(5).map(_.toInt), cleared = false)
+      buildSkipIndex(h.spark, m)
+      skipIndexes.put((table, name), m)
+      h.ok
+    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      Option(skipIndexes.remove((h(1), h(2)))).foreach { m =>
+        graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
+        graft.operators.SkipIndex.drop(h.spark, m.idxDir)
+      }
+      h.ok
+    },
+    // CLEAR INDEX: drop the BUILT structure and stop pruning, but keep
+    // the index declared (system.data_skipping_indices still lists it)
+    // so MATERIALIZE INDEX can rebuild it
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+CLEAR\s+INDEX\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      skipIndexes.computeIfPresent((h(1), h(2)), (_, m) => {
+        graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
+        graft.operators.SkipIndex.drop(h.spark, m.idxDir)
+        m.copy(cleared = true)
+      })
+      h.ok
+    },
+    // MATERIALIZE INDEX: rebuild from the table's current files (and
+    // un-clear a cleared index) — the reference's mutation that
+    // populates the index for existing parts
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+INDEX\s+(<c>)<end>""") { h =>
+      skipIndexes.computeIfPresent((h(1), h(2)), (_, m) => {
+        buildSkipIndex(h.spark, m)
+        m.copy(cleared = false)
+      })
+      h.ok
+    },
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MATERIALIZE|CLEAR)\s+INDEX\b.*""",
+      "index DDL"),
+    // partitions (see alterPartition)
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+REPLACE\s+PARTITION\s+'?([^'\s;]+)'?\s+FROM\s+(<t>)<end>""")(
+      h => alterPartition(h, "REPLACE", dst = h(1), src = h(3))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MOVE\s+PARTITION\s+'?([^'\s;]+)'?\s+TO\s+TABLE\s+(<t>)<end>""")(
+      h => alterPartition(h, "MOVE", dst = h(3), src = h(1))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+FETCH\s+PARTITION\s+'?([^'\s;]+)'?\s+FROM\s+'?([^'\s;]+)'?<end>""")(
+      h => alterPartition(h, "FETCH", dst = h(1), src = h(3))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+(DETACH|ATTACH|DROP|FREEZE)\s+PARTITION\s+'?([^'\s;]+)'?(?:\s+WITH\s+NAME\s+'([^']*)')?<end>""")(
+      alterPartitionInPlace),
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:DETACH|ATTACH|DROP|FREEZE|REPLACE|MOVE|FETCH)\s+PARTITION\b.*""",
+      "ALTER PARTITION form"),
+    // table TTL (src/Storages/TTLDescription.cpp; TTLTransform applies at
+    // merge, MATERIALIZE TTL forces a mutation): MODIFY stores the
+    // expression; MATERIALIZE rewrites the table keeping rows whose TTL
+    // instant is still in the future
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+TTL<end>""") { h =>
+      val t = h(1)
+      val ttl = ttlSpecs.getOrElse(t, throw new IllegalArgumentException(
+        s"MATERIALIZE TTL: no TTL stored for $t (run MODIFY TTL first)"))
+      val keep = org.apache.spark.sql.functions.expr(s"($ttl) >= current_timestamp()")
+      // affected = rows that EXPIRE (keep false or null); partitions with
+      // nothing expired keep their files untouched
+      graft.operators.DurableRewrite.rewrite(h.spark, t,
+        h.spark.table(t).filter(keep), Some(!org.apache.spark.sql.functions
+          .coalesce(keep, org.apache.spark.sql.functions.lit(false))))
+      afterWrite(h.spark, t, Some(h.text))
+      h.ok
+    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+TTL\s+(.+?)(?:\s+DELETE)?<end>""") { h =>
+      require(h.spark.catalog.tableExists(h(1)), s"no such table ${h(1)}")
+      ttlSpecs.put(h(1), rewrite(h(2).trim))
+      h.ok
+    },
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:MODIFY|MATERIALIZE)\s+TTL\b.*""",
+      "TTL form"),
+    // engine metadata (AlterCommands.h MODIFY_ORDER_BY, MODIFY_SAMPLE_BY,
+    // COMMENT_COLUMN, COMMENT_TABLE, MATERIALIZE_COLUMN): property
+    // updates on the engine metadata ledger — SHOW CREATE reflects them
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+ORDER\s+BY\s+(.+?);?\s*$""") { h =>
+      // reference contract: the sorting key may only reference existing
+      // columns (AlterCommands::apply validates the expression)
+      val cols = h.spark.table(h(1)).columns.map(_.toLowerCase).toSet
+      "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(h(2))
+        .filterNot(_.equalsIgnoreCase("tuple"))
+        .foreach(w => require(cols.contains(w.toLowerCase),
+          s"MODIFY ORDER BY references unknown column `$w`"))
+      updateEngineMeta(h)(_.copy(orderBy = Some(rewrite(h(2).trim))))
+    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+SAMPLE\s+BY\s+(.+?);?\s*$""")(h =>
+      updateEngineMeta(h)(_.copy(sampleBy = Some(rewrite(h(2).trim))))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+REMOVE\s+SAMPLE\s+BY<end>""")(h =>
+      updateEngineMeta(h)(_.copy(sampleBy = None))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+COMMENT\s+'([^']*)'<end>""")(h =>
+      updateEngineMeta(h)(_.copy(comment = Some(h(2))))),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+COMMENT\s+COLUMN\s+(IF\s+EXISTS\s+)?`?(<c>)`?\s+'([^']*)'<end>""") { h =>
+      if (h.spark.table(h(1)).columns.contains(h(3)))
+        updateEngineMeta(h)(em => em.copy(colComments = em.colComments + (h(3) -> h(4))))
+      else if (h(2) == null) throw new IllegalArgumentException(
+        s"column ${h(3)} does not exist in ${h(1)}")
+      else h.ok
+    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+COLUMN\s+`?(<c>)`?(?:\s+IN\s+PARTITION\s+'?([^'\s;]+)'?)?<end>""")(
+      materializeColumn),
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:MODIFY\s+(?:ORDER\s+BY|SAMPLE\s+BY|COMMENT)|REMOVE\s+SAMPLE\s+BY|COMMENT\s+COLUMN|MATERIALIZE\s+COLUMN)\b.*""",
+      "ALTER metadata form"),
+    // mutations (see mutate)
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+UPDATE\s+(.+?)\s+WHERE\s+(.+?);?\s*$""")(h =>
+      mutate(h.spark, h(1), Some(h(2)), h(3), h.text)),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+DELETE\s+WHERE\s+(.+?);?\s*$""")(h =>
+      mutate(h.spark, h(1), None, h(2), h.text)),
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:UPDATE|DELETE)\b.*""",
+      "ALTER mutation form"),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+CLEAR\s+COLUMN\s+`?(<c>)`?(?:\s+IN\s+PARTITION\s+'?([^'\s;]+)'?)?<end>""")(
+      clearColumn),
+    reject("""^ALTER\s+TABLE\s+\S+\s+CLEAR\s+COLUMN\b.*""", "CLEAR COLUMN form"),
+    // columns (see alterColumn)
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+COLUMN\s+(IF\s+NOT\s+EXISTS\s+)?`?(<c>)`?\s+(.+?)(?:\s+DEFAULT\s+(.+?))?(?:\s+(FIRST)|\s+AFTER\s+`?(<c>)`?)?;?\s*$""")(
+      addColumn),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+DROP\s+COLUMN\s+(IF\s+EXISTS\s+)?`?(<c>)`?;?\s*$""")(
+      h => alterColumn(h) { (t, base) =>
+        val before = declaredColumns(h.spark, t)
+        rewriteTable(h.spark, t, base.drop(h(3)))
+        redeclare(h.spark, t, before.filterNot(_ == h(3)))
+      }),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+COLUMN\s+(IF\s+EXISTS\s+)?`?(<c>)`?\s+(.+?);?\s*$""")(
+      h => alterColumn(h) { (t, base) =>
+        rewriteTable(h.spark, t, base.withColumn(h(3),
+          org.apache.spark.sql.functions.col(h(3)).cast(sparkTypeText(h(4).trim))))
+      }),
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+RENAME\s+COLUMN\s+(IF\s+EXISTS\s+)?`?(<c>)`?\s+TO\s+`?(<c>)`?;?\s*$""")(
+      h => alterColumn(h) { (t, base) =>
+        val before = declaredColumns(h.spark, t)
+        rewriteTable(h.spark, t, base.withColumnRenamed(h(3), h(4)))
+        redeclare(h.spark, t, before.map(c => if (c == h(3)) h(4) else c))
+      }),
+    reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MODIFY|RENAME)\s+COLUMN\b.*""",
+      "ALTER COLUMN form"),
+    lane("""^OPTIMIZE\s+TABLE\s+(<t>)(?:\s+PARTITION\s+'?([^'\s;]+)'?)?(?:\s+FINAL)?\s+DEDUPLICATE(?:\s+BY\s+(.+?))?<end>""")(
+      optimizeDeduplicate),
+    // plain OPTIMIZE stays a no-op: merges are Spark's compaction concern
+    lane("""^OPTIMIZE\s+TABLE\b.*""")(_.ok),
+
+    // ---- SET, EXPLAIN, SHOW, SYSTEM ----
+    // per-session engine knobs: accept and record on the Spark conf under
+    // a namespaced key (no reference settings map onto Spark 1:1)
+    lane("""^SET\s+(\w+)\s*=(?:\s*(.+?))?\s*;?\s*$""") { h =>
+      h.opt(2).foreach { v =>
+        val k = h(1)
+        val prev = h.spark.conf.getOption(s"graft.ch.$k").getOrElse("")
+        // SET workload pins the session's jobs to the Spark fair-scheduler
+        // pool of that name (the workload-scheduling mapping); the
+        // workload must exist
+        if (k.equalsIgnoreCase("workload")) {
+          val w = v.stripPrefix("'").stripSuffix("'")
+          require(workloadExists(w),
+            s"SET workload: workload `$w` does not exist (CREATE WORKLOAD first)")
+          h.spark.sparkContext.setLocalProperty("spark.scheduler.pool", w)
+        }
+        h.spark.conf.set(s"graft.ch.$k", v)
+        // session settings audit (system.settings_changes)
+        graft.sources.SystemTables.SettingsChangesLedger.record(k, v, prev)
+        // SET user authenticates the session: apply every settings
+        // profile covering the new user (SettingsProfilesCache)
+        if (k.equalsIgnoreCase("user")) AccessControl.applyProfiles(h.spark)
+      }
+      h.ok
+    },
+    // EXPLAIN indexes = 1 (the reference's index-usage explain:
+    // InterpreterExplainQuery with indexes setting — which skip index
+    // ran, parts before/after): optimize the query and report the
+    // pruning decisions the transparent rule took
+    lane("""^EXPLAIN\s+indexes\s*=\s*1\b\s*(.*)""") { h =>
+      import h.spark.implicits._
+      graft.plans.SkipIndexPruning.clearDecisions()
+      val df = sqlImpl(h.spark, h(1)) // same statement — no second quota charge
+      df.queryExecution.optimizedPlan // force optimization → decisions
+      graft.plans.SkipIndexPruning.lastDecisions
+        .map(d => (d.dataPath, d.kind, d.columns.toSeq.sorted.mkString(","),
+          d.admitted, d.total))
+        .toDF("data_path", "index_type", "columns", "files_admitted",
+          "files_total")
+    },
+    // EXPLAIN ESTIMATE (InterpreterExplainQuery ESTIMATE kind): parts /
+    // rows / marks for the FROM table, read from parquet FOOTERS —
+    // metadata only, the query never executes (the reference reads the
+    // same counts from part headers; a row group is the granule analog,
+    // so it reports as marks)
+    lane("""^EXPLAIN\s+ESTIMATE\b(?:.*?\bFROM\s+(<t>))?.*""") { h =>
+      import org.apache.spark.sql.functions.{col, countDistinct, count, sum, lit}
+      val table = h.opt(1).getOrElse(throw new IllegalArgumentException(
+        "EXPLAIN ESTIMATE: no FROM <table>"))
+      graft.sources.ChMiscFormats
+        .readParquetMetadata(h.spark, tableLocation(h.spark, table))
+        .agg(lit("default").as("database"), lit(table).as("table"),
+          countDistinct(col("file")).as("parts"),
+          sum("num_rows").as("rows"), count(lit(1)).as("marks"))
+    },
+    lane("""^SHOW\s+DATABASES<end>""")(h =>
+      graft.sources.SystemTables.databases(h.spark).select("name").orderBy("name")),
+    lane("""^SHOW\s+DICTIONARIES<end>""")(h =>
+      graft.sources.SystemTables.dictionaries(h.spark).select("name").orderBy("name")),
+    // reference EXPLAIN SYNTAX shows the rewritten query — here, the
+    // dialect translation itself
+    lane("""^EXPLAIN\s+SYNTAX\b\s*(.*)""") { h =>
+      import h.spark.implicits._
+      Seq(rewrite(expandSchemaTransformers(h.spark, h(1)))).toDF("rewritten")
+    },
+    // PLAN/PIPELINE/ESTIMATE kinds all map to the Spark formatted plan
+    lane("""^EXPLAIN\b\s*(?:(?:PLAN|PIPELINE|ESTIMATE|AST)\s+)?(.*)""")(h =>
+      h.spark.sql("EXPLAIN FORMATTED " +
+        rewrite(expandSchemaTransformers(h.spark, h(1))))),
+    // SHOW TABLES [LIKE '%pat%'] (ParserShowTablesQuery) — the session
+    // catalog, optionally name-filtered; CH's LIKE matches SQL LIKE
+    lane("""^SHOW\s+TABLES\b(?:.*?\bLIKE\s+'([^']*)')?.*""") { h =>
+      val all = graft.sources.SystemTables.tables(h.spark).select("name")
+      h.opt(1).fold(all)(p =>
+        all.filter(org.apache.spark.sql.functions.col("name").like(p)))
+        .orderBy("name")
+    },
+    // EXISTS [TABLE] t (ParserExistsTableQuery): UInt8 0/1 like CH
+    lane("""^EXISTS\s+(?:TABLE\s+)?(<t>)<end>""") { h =>
+      import h.spark.implicits._
+      Seq(if (h.spark.catalog.tableExists(h(1))) 1 else 0).toDF("result")
+    },
+    // ExternalDictionariesLoader reload: re-collect from the source
+    lane("""^SYSTEM\s+RELOAD\s+(?:DICTIONARY\s+(<c>)<end>|DICTIONAR(?:Y|IES)\b.*)""") { h =>
+      Dictionaries.reload(h.spark, h.opt(1))
+      h.ok
+    },
+    lane("""^SYSTEM\s+DROP\s+QUERY\s+CACHE<end>""") { h =>
+      queryCache.clear()
+      h.ok
+    },
+    // SYSTEM DROP MARK/UNCOMPRESSED/COMPILED EXPRESSION CACHE
+    // (InterpreterSystemQuery): Spark's session block-cache is the analog
+    // of the read caches — release it eagerly. DNS/FILESYSTEM/SCHEMA:
+    // the block cache is the nearest analog of the filesystem cache;
+    // DNS/schema caches have no counterpart here — all answer OK like an
+    // empty-cache reference server
+    lane("""^SYSTEM\s+DROP\s+(?:MARK|UNCOMPRESSED|COMPILED\s+EXPRESSION|DNS|FILESYSTEM|SCHEMA)\s+CACHE<end>""") { h =>
+      h.spark.catalog.clearCache()
+      h.ok
+    },
+    // honest no-ops: there is no background merge daemon (compaction is
+    // Spark's write-path concern), a single-node engine is always in sync
+    // with itself, and mutations are SYNCHRONOUS part rewrites — never a
+    // pending one to kill (the reference with an empty mutation queue
+    // answers the same)
+    lane("""^(?:SYSTEM\s+(?:STOP|START)\s+MERGES(?:\s+<t>)?<end>|SYSTEM\s+SYNC\s+REPLICA(?:\s+<t>)?<end>|KILL\s+MUTATION\b.*)""")(
+      _.ok),
+    lane("""^SYSTEM\s+RELOAD\s+FUNCTIONS<end>""") { h =>
+      ChFunctionRegistry.install(h.spark) // idempotent re-install
+      h.ok
+    },
+    // SYSTEM FLUSH LOGS (InterpreterSystemQuery): drain the async
+    // listener bus so system.events/query_log reads observe everything
+    // issued before this statement
+    lane("""^SYSTEM\s+FLUSH\s+LOGS<end>""") { h =>
+      graft.sources.SystemTables.flushEvents(h.spark)
+      h.ok
+    },
+    // KILL QUERY WHERE query_id = 'x' (InterpreterKillQueryQuery): cancel
+    // the Spark job group the tagged query's jobs run under — in-flight
+    // stages abort with interruption, exactly the reference's kill
+    // semantics. Cancelling an unknown id is a no-op (the reference
+    // returns an empty result set)
+    lane("""^KILL\s+QUERY\b(?:.*?query_id\s*=\s*'([^']*)')?.*""") { h =>
+      h.spark.sparkContext.cancelJobGroup(h.opt(1).getOrElse(
+        throw new IllegalArgumentException(
+          "KILL QUERY needs WHERE query_id = '<id>'")))
+      h.ok
+    },
+    // SHOW PROCESSLIST (ParserShowProcesslistQuery) → system.processes
+    lane("""^SHOW\s+PROCESSLIST<end>""")(h =>
+      graft.sources.SystemTables.processes(h.spark)),
+    // SHOW COLUMNS (ParserShowColumnsQuery — the MySQL-compat shape:
+    // field/type/null/key/default/extra); defaults come from the
+    // engine-metadata ledger
+    lane("""^SHOW\s+(?:FULL\s+)?COLUMNS\s+(?:FROM|IN)\s+(<t>)<end>""") { h =>
+      import h.spark.implicits._
+      val em = engineMetaOf(h(1))
+      h.spark.table(h(1)).schema.fields.toSeq.map(f =>
+        (f.name, chTypeOrSpark(f), if (f.nullable) "YES" else "NO", "",
+          em.colDefaults.getOrElse(f.name, ""), ""))
+        .toDF("field", "type", "null", "key", "default", "extra")
+    },
+    // SHOW INDEXES (ParserShowIndexesQuery): the PRIMARY (sorting key)
+    // row from the engine metadata plus every live skip index
+    lane("""^SHOW\s+(?:INDEX|INDEXES|KEYS)\s+(?:FROM|IN)\s+(<t>)<end>""") { h =>
+      import h.spark.implicits._
+      import scala.jdk.CollectionConverters._
+      val t = h(1)
+      require(h.spark.catalog.tableExists(t), s"no such table $t")
+      val primary = engineMetaOf(t).orderBy.toSeq
+        .map(ob => (t, "PRIMARY", ob, "primary"))
+      val skips = skipIndexes.asScala.values.toSeq
+        .filter(m => m.table == t && !m.cleared)
+        .map(m => (t, m.name, m.columns.mkString(","), m.kind))
+        .sortBy(_._2)
+      (primary ++ skips).toDF("table", "key_name", "column_name", "type")
+    },
+    // SHOW FUNCTIONS [LIKE 'pat'] (ParserShowFunctionsQuery) →
+    // system.functions names
+    lane("""^SHOW\s+FUNCTIONS(?:\s+LIKE\s+'([^']*)')?<end>""") { h =>
+      val all = graft.sources.SystemTables.functions(h.spark).select("name")
+      h.opt(1).fold(all)(p =>
+        all.filter(org.apache.spark.sql.functions.col("name").like(p)))
+        .orderBy("name")
+    },
+    // SHOW ENGINES (ParserShowEngineQuery) → system.table_engines
+    lane("""^SHOW\s+ENGINES<end>""")(h =>
+      graft.sources.SystemTables.tableEngines(h.spark)),
+    // SHOW SETTING name (ParserShowSettingQuery): the single value
+    lane("""^SHOW\s+SETTING\s+(<c>)<end>""") { h =>
+      import h.spark.implicits._
+      Seq(h.spark.conf.getOption(s"graft.ch.${h(1)}").getOrElse(""))
+        .toDF("value")
+    },
+    // USE db (ParserUseQuery): this engine serves the single `default`
+    // database — switching to it is a no-op, anything else is loud
+    lane("""^USE\s+(<c>)<end>""") { h =>
+      require(h(1).equalsIgnoreCase("default"),
+        s"USE ${h(1)}: only the `default` database exists on this engine")
+      h.ok
+    },
+
+    // ---- everything else: Spark SQL after the dialect rewrite ----
+    lane("""(?:INSERT\s+INTO\s+(?:TABLE\s+)?(<t>)|(SELECT|WITH)\b)?.*""")(sparkSql))
+
+  // ---- the longer handlers of the statement table ----------------------
+
+  private def intoOutfile(h: Hit): DataFrame = {
+    val (spark, path, fmt) = (h.spark, h(2), h.opt(3).map(_.toLowerCase))
+    // sqlImpl, not sql: the OUTFILE core is the same user statement,
+    // already quota-charged once at the sql() entry
+    val df = sqlImpl(spark, h(1))
+    val n = df.count()
+    val w = df.coalesce(1).write.mode("overwrite")
+    fmt.getOrElse("csv") match {
+      case "parquet" => w.parquet(path)
+      case "jsoneachrow" | "json" => w.json(path)
+      case "tsv" | "tabseparated" =>
+        w.option("sep", "\t").csv(path)
+      case "tsvwithnames" | "tabseparatedwithnames" =>
+        w.option("sep", "\t").option("header", "true").csv(path)
+      case "csvwithnames" => w.option("header", "true").csv(path)
+      // round-7 format tail: the graft-native writers ride the same
+      // OUTFILE dispatch the reference's output-format registry serves
+      case "npy" => graft.sources.ChMiscFormats.writeNpy(df, path)
+      case "lineasstring" =>
+        graft.sources.ChMiscFormats.writeLineAsString(df, path)
+      case "rawblob" => graft.sources.ChMiscFormats.writeRawBlob(df, path)
+      case "msgpack" => graft.sources.ChMiscFormats.writeMsgPack(df, path)
+      case "jsoncolumns" =>
+        graft.sources.ChTextFormats.writeJsonColumns(df, path)
+      case "jsonobjecteachrow" =>
+        graft.sources.ChTextFormats.writeJsonObjectEachRow(df, path)
+      case "tabseparatedraw" | "tsvraw" =>
+        graft.sources.ChTextFormats.writeTabSeparatedRaw(df, path)
+      case "jsonstringseachrow" =>
+        graft.sources.ChTextFormats.writeJsonStringsEachRow(df, path)
+      // NOTE: bare "json" stays on the earlier JSONEachRow lane (the
+      // long-standing OUTFILE behavior); the document format is the
+      // writeJsonDocument API / "jsondocument" spelling here
+      case "jsondocument" =>
+        graft.sources.ChTextFormats.writeJsonDocument(df, path)
+      // render-only formats (round 8): one text file of the rendering
+      case kind @ ("vertical" | "markdown" | "xml") =>
+        val text = kind match {
+          case "vertical" => graft.sources.ChTextFormats.renderVertical(df)
+          case "markdown" => graft.sources.ChTextFormats.renderMarkdown(df)
+          case _ => graft.sources.ChTextFormats.renderXml(df)
+        }
+        val out = fsOf(spark, path).create(new Path(path), true)
+        try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      case "rowbinary" => graft.sources.ChWireFormats.writeRowBinary(df, path)
+      // Protobuf / ProtobufSingle (round-13 — needs the reference's
+      // format_schema setting: SET format_schema = 'file.proto:Msg')
+      case "protobuf" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        graft.sources.ChProtobufFormat.writeProtobuf(
+          df.coalesce(1), path, schemaText, msg)
+      case "protobufsingle" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        graft.sources.ChProtobufFormat.writeProtobuf(
+          df.coalesce(1), path, schemaText, msg, single = true)
+      case "protobuflist" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        graft.sources.ChProtobufFormat.writeProtobufList(
+          df.coalesce(1), path, schemaText, msg)
+      case "template" =>
+        val (rowFmt, between) = templateSettingsOf(spark)
+        graft.sources.ChSmallFormats.writeTemplate(
+          df.coalesce(1), path, rowFmt, between)
+      case "capnproto" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        graft.sources.ChCapnProtoFormat.writeCapnProto(
+          df.coalesce(1), path, schemaText, msg)
+      case _ => w.csv(path)
     }
-    if (trimmedNoFmt.matches("(?is)^DROP\\s+VIEW\\s+(IF\\s+EXISTS\\s+)?[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$")) {
-      val n = trimmedNoFmt
-        .replaceFirst("(?is)^DROP\\s+VIEW\\s+(IF\\s+EXISTS\\s+)?", "")
-        .replaceFirst(";\\s*$", "").trim.toLowerCase
-      if (paramViews.remove(n) != null) {
-        import spark.implicits._
-        return Seq("OK").toDF("status")
-      } // plain catalog views fall through to Spark's DROP VIEW
+    import spark.implicits._
+    Seq(n).toDF("rows_written")
+  }
+
+  private def insertIntoLake(h: Hit): DataFrame = {
+    val (spark, fn, path, tail) = (h.spark, h(1).toLowerCase, h(2), h(4))
+    import spark.implicits._
+    // round 15: PARTITION BY (…) declares the layout at creation (an
+    // identity-transform spec on Iceberg, hive-style partition dirs on
+    // Hudi); appends derive it
+    val pcs = h.opt(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
+    val df =
+      if (h(5) == null) spark.sql(s"SELECT * FROM ($tail)")
+      else sqlImpl(spark, tail)
+    fn match {
+      case "iceberg" =>
+        Seq(graft.sources.IcebergSink.append(df, path, partitionBy = pcs))
+          .toDF("snapshot_id")
+      case "hudi" =>
+        // Hudi INSERT is an UPSERT (the engine's default operation):
+        // existing keys become log data blocks, new keys a fresh
+        // base-file group. The SELECT must carry _hoodie_record_key.
+        val (instant, nRows) =
+          graft.sources.HudiSink.upsert(df, path, partitionBy = pcs)
+        Seq((instant, nRows)).toDF("instant", "rows_upserted")
+      case _ =>
+        Seq(graft.sources.DeltaLakeSink.append(df, path, partitionBy = pcs))
+          .toDF("committed_version")
     }
-    val trimmedFileFn =
-      if (trimmedNoFmt.matches("(?is)^(SELECT|WITH)\\b.*"))
-        resolveParamViews(spark,
-          resolveMergeFn(spark, resolveFileFn(spark,
-            resolveFormatFn(spark, resolveRemoteFn(spark,
-              resolveNullFn(spark, resolveDeltaLakeFn(spark,
-                resolveCollectionFileFn(trimmedNoFmt))))))))
-      else trimmedNoFmt
-    val trimmed = SqlLex.replaceAll(trimmedFileFn,
-        ("(?i)\\bsystem\\.(tables|functions|settings|query_log|dictionaries|" +
-          "data_skipping_indices|metrics|events|asynchronous_metrics|" +
-          "databases|processes|one|numbers|merges|mutations|" +
-          "formats|table_engines|clusters|disks|columns|parts|" +
-          "detached_parts|projections|errors|view_refreshes|" +
-          "backups|time_zones|build_options|warnings|replicas|moves|" +
-          "users|roles|grants|row_policies|settings_profiles|" +
-          "quota_usage|quotas|part_log|settings_changes|" +
-          "current_roles|enabled_roles|dropped_tables|" +
-          "named_collections|workloads|resources)\\b").r)(
-      m => "graft_system_" + m.group(1))
-    if (Dictionaries.matches(trimmed))
-      Dictionaries.execute(spark, trimmed)
-    else if (trimmed.matches("(?is)^DESC(RIBE)?(\\s+TABLE)?\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // DESCRIBE TABLE (ParserDescribeTableQuery): reference-shaped
-      // (name, type) rows with CH type names.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^DESC(RIBE)?(\\s+TABLE)?\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      spark.table(t).schema.fields.toSeq
-        .map(f => (f.name, chTypeOrSpark(f)))
-        .toDF("name", "type")
+  }
+
+  /** Row-level Delta / Iceberg mutations over the table-function
+    * spelling — copy-on-write commits (Delta: remove+add; Iceberg:
+    * manifest rewrite + new snapshot); only files holding matching rows
+    * rewrite. The reference's split: DELETE FROM is the LIGHTWEIGHT
+    * delete (mask, not rewrite — deletion vectors here, the _row_exists
+    * mask there); ALTER TABLE ... DELETE is the heavyweight mutation. */
+  private def lakeMutate(h: Hit, pred: String, assigns: Option[String],
+      lightweight: Boolean): DataFrame = {
+    val (spark, path) = (h.spark, h(2))
+    import spark.implicits._
+    import graft.sources.{DeltaLakeSink, IcebergSink}
+    val predicate = org.apache.spark.sql.functions.expr(rewrite(pred))
+    val asn = assigns.map(assignments)
+    val isIce = h(1).equalsIgnoreCase("iceberg")
+    val (v, n) = (isIce, asn) match {
+      case (false, None) =>
+        if (lightweight) DeltaLakeSink.deleteLightweight(spark, path, predicate)
+        else DeltaLakeSink.delete(spark, path, predicate)
+      case (false, Some(a)) => DeltaLakeSink.update(spark, path, a, predicate)
+      case (true, None) =>
+        if (lightweight) IcebergSink.deleteLightweight(spark, path, predicate)
+        else IcebergSink.delete(spark, path, predicate)
+      case (true, Some(a)) => IcebergSink.update(spark, path, a, predicate)
     }
-    else if (trimmed.matches("(?is)^SHOW\\s+CREATE\\s+(TABLE\\s+)?[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // SHOW CREATE TABLE (InterpreterShowCreateQuery): render the
-      // reference-dialect DDL from the live schema.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^SHOW\\s+CREATE\\s+(TABLE\\s+)?", "")
-        .replaceFirst(";\\s*$", "").trim
+    Seq((v, n)).toDF(if (isIce) "snapshot_id" else "committed_version",
+      if (asn.isEmpty) "rows_deleted" else "rows_updated")
+  }
+
+  /** INSERT INTO t FROM INFILE 'path' [FORMAT fmt] (ParserInsertQuery
+    * infile clause — the input twin of INTO OUTFILE): read the file
+    * through the matching format reader and append, with the same
+    * skip-index / cache invalidation as any INSERT. Files carry the
+    * table's columns in the order a positional INSERT binds (see
+    * declaredOrder), so header-less formats land in the declared
+    * columns. */
+  private def fromInfile(h: Hit): DataFrame = {
+    val (spark, t, path) = (h.spark, h(1), h(2))
+    val catalogSchema = spark.table(t).schema
+    val schema = declaredOrder(spark, t).fold(catalogSchema)(cols =>
+      org.apache.spark.sql.types.StructType(cols.map(catalogSchema(_))))
+    def selectSchema(df: DataFrame) = df.select(schema.map(f =>
+      org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*)
+    val fmt = h.opt(3).map(_.toLowerCase).getOrElse("csvwithnames")
+    val df = fmt match {
+      case "parquet" => spark.read.schema(schema).parquet(path)
+      case "jsoneachrow" | "ndjson" | "json" =>
+        spark.read.schema(schema).json(path)
+      case "csv" =>
+        graft.sources.ChTextFormats.readCsv(spark, path, schema)
+      case "csvwithnames" =>
+        graft.sources.ChTextFormats.readCsv(spark, path, schema,
+          withNames = true)
+      case "tabseparated" | "tsv" =>
+        graft.sources.ChTextFormats.readTabSeparated(spark, path, schema)
+      case "tabseparatedwithnamesandtypes" | "tsvwithnamesandtypes" =>
+        graft.sources.ChTextFormats.readTabSeparated(spark, path, schema,
+          withNames = true, withTypes = true)
+      case "jsonobjecteachrow" =>
+        graft.sources.ChTextFormats.readJsonObjectEachRow(spark, path, schema)
+      case "rowbinary" =>
+        graft.sources.ChWireFormats.readRowBinary(spark, path, schema)
+      case "protobuf" | "protobufsingle" | "protobuflist" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        selectSchema(
+          if (fmt == "protobuflist")
+            graft.sources.ChProtobufFormat.readProtobufList(
+              spark, path, schemaText, msg)
+          else graft.sources.ChProtobufFormat.readProtobuf(
+            spark, path, schemaText, msg, single = fmt == "protobufsingle"))
+      case "form" =>
+        graft.sources.ChSmallFormats.readForm(spark, path, schema)
+      case "hivetext" =>
+        graft.sources.ChSmallFormats.readHiveText(spark, path, schema)
+      case "mysqldump" =>
+        graft.sources.ChSmallFormats.readMySQLDump(spark, path, schema,
+          spark.conf.getOption("graft.ch.input_format_mysql_dump_table_name")
+            .map(_.stripPrefix("'").stripSuffix("'")).getOrElse(""))
+      case "template" =>
+        val (rowFmt, between) = templateSettingsOf(spark)
+        graft.sources.ChSmallFormats.readTemplate(
+          spark, path, schema, rowFmt, between)
+      case "capnproto" =>
+        val (schemaText, msg) = formatSchemaOf(spark)
+        selectSchema(graft.sources.ChCapnProtoFormat.readCapnProto(
+          spark, path, schemaText, msg))
+      case other => throw new IllegalArgumentException(
+        s"FROM INFILE: unsupported format '$other'")
+    }
+    alignInsert(spark, t, df, None).write.mode("append").insertInto(t)
+    afterWrite(spark, t)
+    import spark.implicits._
+    Seq(df.count()).toDF("rows_read")
+  }
+
+  /** SHOW CREATE TABLE (InterpreterShowCreateQuery): render the
+    * reference-dialect DDL from the live schema. */
+  private def showCreate(h: Hit): DataFrame = {
+    val (spark, t) = (h.spark, h(1))
+    import spark.implicits._
+    val statement = LiveViews.selectOf(t) match {
       // live views render their stored definition (StorageLiveView)
-      LiveViews.selectOf(t).foreach { sel =>
-        return Seq(s"CREATE LIVE VIEW $t AS $sel").toDF("statement")
-      }
-      Option(refreshableViews.get(t.toLowerCase)) match {
+      case Some(sel) => s"CREATE LIVE VIEW $t AS $sel"
+      case None => Option(refreshableViews.get(t.toLowerCase)) match {
+        // refreshable MV: render the stored definition with its schedule
         case Some(rv) =>
-          // refreshable MV: render the stored definition with its schedule
-          Seq(s"CREATE MATERIALIZED VIEW ${rv.name} REFRESH ${rv.schedule} " +
-              s"AS ${rv.select.trim}")
-            .toDF("statement")
+          s"CREATE MATERIALIZED VIEW ${rv.name} REFRESH ${rv.schedule} " +
+            s"AS ${rv.select.trim}"
         case None =>
           // recorded engine metadata renders back (ORDER BY / SAMPLE BY
           // / COMMENT / column DEFAULT+COMMENT survive MODIFY verbs)
@@ -1648,711 +2211,488 @@ object ClickHouseSql {
             .mkString(", ")
           val sample = em.sampleBy.map(sb => s" SAMPLE BY $sb").getOrElse("")
           val cmt = em.comment.map(c => s" COMMENT '$c'").getOrElse("")
-          Seq(s"CREATE TABLE $t ($cols) ENGINE = MergeTree ORDER BY " +
-              s"${em.orderBy.getOrElse("tuple()")}$sample$cmt")
-            .toDF("statement")
+          s"CREATE TABLE $t ($cols) ENGINE = MergeTree ORDER BY " +
+            s"${em.orderBy.getOrElse("tuple()")}$sample$cmt"
       }
     }
-    else if (trimmed.matches("(?is)^TRUNCATE\\s+TABLE\\s+(IF\\s+EXISTS\\s+)?[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // TRUNCATE TABLE (ParserSystemQuery family): keep schema, drop rows.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^TRUNCATE\\s+TABLE\\s+(IF\\s+EXISTS\\s+)?", "")
-        .replaceFirst(";\\s*$", "").trim
-      if (spark.catalog.tableExists(t)) {
-        val empty = spark.table(t).limit(0).localCheckpoint(true)
-        empty.write.mode("overwrite").insertInto(t)
-        refreshSkipIndexes(spark, t)
-        queryCache.clear() // mutated data: cached SELECT results are stale
-      }
-      Seq("OK").toDF("status")
+    Seq(statement).toDF("statement")
+  }
+
+  /** Batch analog of the reference's MV: materialize the SELECT once as a
+    * parquet CTAS (the streaming push chain is WindowView
+    * .materializedView); the [TO target] inner-table form uses the target
+    * name; POPULATE is implied (CTAS always populates). REFRESH EVERY n
+    * unit (round 9 — RefreshTask.cpp/RefreshSchedule.cpp refreshable
+    * MVs): the schedule is parsed + recorded, and SYSTEM REFRESH VIEW
+    * re-runs the stored SELECT on demand — the honest mapping in an
+    * engine with no background scheduler loop (like system.merges, the
+    * ledger records what a daemon would do). */
+  private def createMaterializedView(h: Hit): DataFrame = {
+    val (spark, name, select) = (h.spark, h(2), h(6))
+    val tbl = h.opt(5).getOrElse(name)
+    clearWarehouseDir(spark, tbl)
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE ${h.opt(1).fold("")(_ => "IF NOT EXISTS ")}$tbl " +
+      "USING parquet AS " + rewrite(expandSchemaTransformers(spark, select)))
+    h.opt(3) match {
+      case Some(every) =>
+        refreshableViews.put(name.toLowerCase, RefreshableView(name, tbl,
+          select, s"EVERY $every ${h(4).toUpperCase}", refreshes = 0L))
+      case None => refreshableViews.remove(name.toLowerCase)
     }
-    else if (trimmed.matches("(?is)^CHECK\\s+TABLE\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // CHECK TABLE (ParserCheckQuery / InterpreterCheckQuery): verify
-      // every backing file decodes; one row per part with is_ok, plus the
-      // reference's summary row semantics via the min over parts.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^CHECK\\s+TABLE\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      val files = spark.table(t).inputFiles.toSeq.sorted
-      val checks = files.map { f =>
-        val ok = try { spark.read.parquet(f).count(); 1 } catch { case _: Exception => 0 }
-        (new org.apache.hadoop.fs.Path(f).getName, ok)
-      }
-      checks.toDF("part", "is_ok")
-    }
-    else if (trimmed.matches(
-        "(?is)^UPDATE\\s+[A-Za-z_][A-Za-z0-9_.]*\\s+SET\\s+.*\\bWHERE\\b.*")) {
-      // Standalone lightweight UPDATE (ParserUpdateQuery: UPDATE t SET
-      // a = e, … [IN PARTITION p] WHERE pred) — routed to the same
-      // durable pruned part rewrite as ALTER TABLE UPDATE; IN PARTITION
-      // narrows the WHERE to the named partition.
-      val re = ("(?is)^UPDATE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+SET\\s+(.+?)" +
-        "(?:\\s+IN\\s+PARTITION\\s+'?([^'\\s;]+)'?)?\\s+WHERE\\s+(.+?);?\\s*$").r
-      trimmed match {
-        case re(t, assigns, pval, pred) =>
-          val scoped = Option(pval).map { v =>
-            val pcols = spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(t))
-              .partitionColumnNames
-            require(pcols.size == 1,
-              s"UPDATE IN PARTITION needs one partition column, $t has $pcols")
-            s"($pred) AND ${pcols.head} = '$v'"
-          }.getOrElse(pred)
-          alterMutation(spark, s"ALTER TABLE $t UPDATE $assigns WHERE $scoped")
-        case _ => throw new IllegalArgumentException("unsupported UPDATE form")
-      }
-    }
-    else if (trimmed.matches("(?is)^DELETE\\s+FROM\\s+[A-Za-z_][A-Za-z0-9_.]*\\s+WHERE\\s+.*$")) {
-      // Lightweight DELETE (ParserDeleteQuery): durable part rewrite
-      // keeping the survivors — staged on disk, pruned to partitions
-      // that contain matching rows (DurableRewrite).
-      import spark.implicits._
-      val re = "(?is)^DELETE\\s+FROM\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+WHERE\\s+(.*?);?\\s*$".r
-      trimmed match {
-        case re(t, pred) =>
-          val p = org.apache.spark.sql.functions.expr(rewrite(pred))
-          val surviving = spark.table(t)
-            .filter(org.apache.spark.sql.functions.not(
-              org.apache.spark.sql.functions.coalesce(
-                p, org.apache.spark.sql.functions.lit(false))))
-          graft.operators.DurableRewrite.rewrite(spark, t, surviving, Some(p))
-          refreshSkipIndexes(spark, t)
-          queryCache.clear() // mutated data: cached SELECT results are stale
-          logMutation(t, trimmed)
-          Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException("unsupported DELETE form")
-      }
-    }
-    else if (trimmed.matches(
-        "(?is)^CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?[A-Za-z_][A-Za-z0-9_.]*\\s+AS\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*(ENGINE\\s*=[^()]*)?;?\\s*$")) {
-      // CREATE TABLE a AS b (schema clone, no data — ParserCreateQuery's
-      // as_table form; never matches CTAS, whose AS is followed by SELECT)
-      // → Spark's CREATE TABLE ... LIKE
-      val re = ("(?is)^CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-        "([A-Za-z_][A-Za-z0-9_.]*)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_.]*).*$").r
-      val re(ifNot, a, b) = trimmed
-      val ine = if (ifNot != null) "IF NOT EXISTS " else ""
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), a)
-      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-      spark.sql(s"CREATE TABLE $ine$a LIKE $b USING parquet")
-    } else if (trimmed.matches("(?is)^CREATE\\s+TABLE\\b.*")) {
-      val out = spark.sql(rewriteCreateTable(trimmed))
-      recordEngineMeta(trimmed) // ORDER BY / SAMPLE BY / COMMENT / defaults
-      out
-    }
-    else if (trimmed.matches("(?is)^CREATE\\s+LIVE\\s+VIEW\\b.*")) {
-      // CREATE LIVE VIEW (StorageLiveView.h): version-counted view; the
-      // push channel is served pull-side by WATCH (graft.sql.LiveViews)
-      val re = ("(?is)^CREATE\\s+LIVE\\s+VIEW\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-        "([A-Za-z_][A-Za-z0-9_.]*)\\s+AS\\s+(.*)$").r
-      trimmed match {
-        case re(ifNot, name, select) =>
-          LiveViews.create(spark, name, select.trim.stripSuffix(";"),
-            ifNot != null,
-            s => rewrite(expandSchemaTransformers(spark, s)))
-          import spark.implicits._
-          Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException(
-          "unsupported CREATE LIVE VIEW form")
-      }
-    }
-    else if (trimmed.matches("(?is)^WATCH\\b.*")) {
-      // WATCH lv [EVENTS] [LIMIT n] (ASTWatchQuery: table + optional
-      // limit_length + is_watch_events): bounded re-evaluation — the
-      // version bumps iff the result hash changed (exactly once per
-      // underlying change, however many WATCHes observe it)
-      val re = ("(?is)^WATCH\\s+([A-Za-z_][A-Za-z0-9_.]*)" +
-        "(\\s+EVENTS)?(?:\\s+LIMIT\\s+(\\d+))?\\s*;?\\s*$").r
-      trimmed match {
-        case re(name, events, limit) =>
-          val run = liveViewRun(spark)
-          if (events != null)
-            LiveViews.watchEvents(spark, name,
-              Option(limit).map(_.toInt), run)
-          else LiveViews.watch(spark, name, run)
-        case _ => throw new IllegalArgumentException(
-          "unsupported WATCH form (expected WATCH view [EVENTS] [LIMIT n])")
-      }
-    } else if (trimmed.matches(
-        "(?is)^DROP\\s+(LIVE\\s+)?VIEW\\s+(IF\\s+EXISTS\\s+)?" +
-          "[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$") &&
-        LiveViews.contains(trimmed
-          .replaceFirst("(?is)^DROP\\s+(LIVE\\s+)?VIEW\\s+(IF\\s+EXISTS\\s+)?", "")
-          .replaceFirst(";\\s*$", "").trim)) {
-      val name = trimmed
-        .replaceFirst("(?is)^DROP\\s+(LIVE\\s+)?VIEW\\s+(IF\\s+EXISTS\\s+)?", "")
-        .replaceFirst(";\\s*$", "").trim
-      LiveViews.remove(name)
-      spark.catalog.dropTempView(name)
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    }
-    else if (trimmed.matches("(?is)^CREATE\\s+MATERIALIZED\\s+VIEW\\b.*")) {
-      // batch analog of the reference's MV: materialize the SELECT once as
-      // a parquet CTAS (the streaming push chain is WindowView
-      // .materializedView); [TO target] inner-table form uses the target
-      // name; POPULATE is implied (CTAS always populates).
-      // REFRESH EVERY n unit (round 9 — RefreshTask.cpp/RefreshSchedule
-      // .cpp refreshable MVs): the schedule is parsed + recorded, and
-      // SYSTEM REFRESH VIEW re-runs the stored SELECT on demand — the
-      // honest mapping in an engine with no background scheduler loop
-      // (like system.merges, the ledger records what a daemon would do).
-      val re = ("(?is)^CREATE\\s+MATERIALIZED\\s+VIEW\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-        "([A-Za-z_][A-Za-z0-9_.]*)\\s*" +
-        "(?:REFRESH\\s+EVERY\\s+(\\d+)\\s+([A-Za-z]+)\\s+)?" +
-        "(?:TO\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+)?" +
-        "(?:POPULATE\\s+)?AS\\s+(.*)$").r
-      trimmed match {
-        case re(ifNot, name, every, unit, target, select) =>
-          val tbl = if (target != null) target else name
-          val ine = if (ifNot != null) "IF NOT EXISTS " else ""
-          val wh = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), tbl)
-          wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val body = rewrite(expandSchemaTransformers(spark, select))
-          spark.sql(s"CREATE TABLE $ine$tbl USING parquet AS " + body)
-          if (every != null)
-            refreshableViews.put(name.toLowerCase,
-              RefreshableView(name, tbl, select,
-                s"EVERY $every ${unit.toUpperCase}", refreshes = 0L))
-          else refreshableViews.remove(name.toLowerCase)
-          import spark.implicits._
-          Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException(
-          "unsupported CREATE MATERIALIZED VIEW form")
-      }
-    } else if (trimmed.matches(
-        "(?is)^SYSTEM\\s+REFRESH\\s+VIEW\\s+[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // SYSTEM REFRESH VIEW v (InterpreterSystemQuery SYSTEM REFRESH VIEW
-      // → RefreshTask::run): force the re-materialization the schedule
-      // would trigger — drop + re-CTAS the stored SELECT against the
-      // CURRENT base data, then invalidate caches like any mutation.
-      import spark.implicits._
-      val v = trimmed.replaceFirst("(?is)^SYSTEM\\s+REFRESH\\s+VIEW\\s+", "")
-        .replaceFirst(";\\s*$", "").trim.toLowerCase
-      Option(refreshableViews.get(v)) match {
-        case Some(rv) =>
-          // durable replace: the fresh materialization is staged on disk
-          // before the old table drops — a crash mid-refresh leaves the
-          // stale-or-staged copy, never neither (DurableRewrite)
-          val out = spark.sql(
-            rewrite(expandSchemaTransformers(spark, rv.select)))
-          graft.operators.DurableRewrite.replaceTable(spark, rv.table, out)
-          refreshableViews.put(v, rv.copy(refreshes = rv.refreshes + 1))
-          refreshSkipIndexes(spark, rv.table)
-          queryCache.clear()
-          Seq("OK").toDF("status")
-        case None => throw new IllegalArgumentException(
-          s"SYSTEM REFRESH VIEW: $v is not a refreshable materialized view")
-      }
-    } else if (trimmed.matches("(?is)^DETACH\\s+TABLE\\b.*")) {
-      // DETACH TABLE (InterpreterDropQuery detach branch): the table
-      // leaves the catalog but its DATA survives — the files move O(1)
-      // to a `_detached` sibling (the same rename the partition
-      // lifecycle uses) so the managed DROP has nothing to purge;
-      // ATTACH TABLE reverses both steps.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^DETACH\\s+TABLE\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
+    h.ok
+  }
+
+  /** DETACH TABLE (InterpreterDropQuery detach branch): the table leaves
+    * the catalog but its DATA survives — the files move O(1) to a
+    * `_detached` sibling (the same rename the partition lifecycle uses)
+    * so the managed DROP has nothing to purge; ATTACH TABLE reverses both
+    * steps. */
+  private def detachTable(h: Hit): DataFrame = {
+    val (spark, t) = (h.spark, h(1))
+    val loc = tableLocation(spark, t)
+    val schemaDdl = spark.table(t).schema.toDDL
+    val fs = fsOf(spark, loc)
+    val det = new Path(loc + "_detached")
+    fs.delete(det, true)
+    // rename is the data-preservation step: if it fails the DROP below
+    // would purge a managed table's live files — abort instead
+    if (!fs.rename(new Path(loc), det))
+      throw new IllegalStateException(
+        s"DETACH TABLE $t: rename of $loc to $det failed; table left attached")
+    spark.sql(s"DROP TABLE $t")
+    detachedTables.put(t, (schemaDdl, loc))
+    h.ok
+  }
+
+  /** DROP TABLE with an UNDROP window (InterpreterDropQuery +
+    * InterpreterUndropQuery: Atomic databases keep a dropped table's data
+    * for database_atomic_delay_before_drop_table_sec before the real
+    * delete): the data dir moves O(1) to a `_dropped` sibling — the same
+    * rename DETACH uses, with the same rename-failure abort — so the
+    * catalog DROP has nothing to purge. The holding copy lives until the
+    * next DROP of the same name re-uses the slot. Temp views, catalog
+    * views and missing tables take Spark's own DROP. */
+  private def dropTable(h: Hit): DataFrame = {
+    val (spark, t) = (h.spark, h(2))
+    val isCatalogTable = spark.catalog.tableExists(t) &&
+      spark.sessionState.catalog
+        .getTempView(t.toLowerCase(java.util.Locale.ROOT)).isEmpty &&
+      scala.util.Try(tableLocation(spark, t)).isSuccess
+    if (!isCatalogTable) spark.sql(h(1))
+    else {
+      val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
       val loc = tableLocation(spark, t)
       val schemaDdl = spark.table(t).schema.toDDL
-      val fs = new org.apache.hadoop.fs.Path(loc)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val det = new org.apache.hadoop.fs.Path(loc + "_detached")
-      fs.delete(det, true)
-      // rename is the data-preservation step: if it fails the DROP below
-      // would purge a managed table's live files — abort instead
-      if (!fs.rename(new org.apache.hadoop.fs.Path(loc), det))
+      val fs = fsOf(spark, loc)
+      val hold = new Path(loc + "_dropped")
+      fs.delete(hold, true)
+      if (fs.exists(new Path(loc)) && !fs.rename(new Path(loc), hold))
         throw new IllegalStateException(
-          s"DETACH TABLE $t: rename of $loc to $det failed; table left attached")
+          s"DROP TABLE $t: rename of $loc to $hold failed; table left in place")
       spark.sql(s"DROP TABLE $t")
-      detachedTables.put(t, (schemaDdl, loc))
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^ATTACH\\s+TABLE\\b.*")) {
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^ATTACH\\s+TABLE\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      Option(detachedTables.remove(t)) match {
-        case Some((schemaDdl, loc)) =>
-          val fs = new org.apache.hadoop.fs.Path(loc)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.rename(new org.apache.hadoop.fs.Path(loc + "_detached"),
-            new org.apache.hadoop.fs.Path(loc))
-          spark.sql(
-            s"CREATE TABLE $t ($schemaDdl) USING parquet LOCATION '$loc'")
-        case None => throw new IllegalArgumentException(
-          s"ATTACH TABLE $t: no detached table of that name")
-      }
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches(
-        "(?is)^DROP\\s+TABLE\\s+(IF\\s+EXISTS\\s+)?[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // DROP TABLE with an UNDROP window (InterpreterDropQuery +
-      // InterpreterUndropQuery: Atomic databases keep a dropped table's
-      // data for database_atomic_delay_before_drop_table_sec before the
-      // real delete): the data dir moves O(1) to a `_dropped` sibling —
-      // the same rename DETACH uses, with the same rename-failure abort —
-      // so the catalog DROP below has nothing to purge. The holding copy
-      // lives until the next DROP of the same name re-uses the slot.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^DROP\\s+TABLE\\s+(IF\\s+EXISTS\\s+)?", "")
-        .replaceFirst(";\\s*$", "").trim
-      val isCatalogTable = spark.catalog.tableExists(t) &&
-        spark.sessionState.catalog
-          .getTempView(t.toLowerCase(java.util.Locale.ROOT)).isEmpty &&
-        scala.util.Try(tableLocation(spark, t)).isSuccess
-      if (!isCatalogTable) {
-        // temp view / catalog view / missing table: Spark's own DROP
-        spark.sql(trimmed.replaceFirst(";\\s*$", ""))
-      } else {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t))
-        val loc = tableLocation(spark, t)
-        val schemaDdl = spark.table(t).schema.toDDL
-        val fs = new org.apache.hadoop.fs.Path(loc)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hold = new org.apache.hadoop.fs.Path(loc + "_dropped")
-        fs.delete(hold, true)
-        if (fs.exists(new org.apache.hadoop.fs.Path(loc)) &&
-            !fs.rename(new org.apache.hadoop.fs.Path(loc), hold))
-          throw new IllegalStateException(
-            s"DROP TABLE $t: rename of $loc to $hold failed; table left in place")
-        spark.sql(s"DROP TABLE $t")
-        droppedTables.put(t, (schemaDdl, loc, meta.partitionColumnNames,
-          meta.tableType ==
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED))
-        // engine metadata follows the table into the holding area: a
-        // fresh CREATE of the name starts clean, UNDROP restores it
-        engineMeta.remove(t).foreach(droppedEngineMeta.put(t, _))
-        queryCache.clear()
-      }
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^UNDROP\\s+TABLE\\b.*")) {
-      // UNDROP TABLE (InterpreterUndropQuery.cpp): restore the most
-      // recently dropped table of this name from the `_dropped` holding
-      // dir — rename back, re-create the catalog entry over the original
-      // location, partitions recovered.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^UNDROP\\s+TABLE\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      Option(droppedTables.remove(t)) match {
-        case Some((schemaDdl, loc, partCols, managed)) =>
-          recreateCatalogEntry(spark, t, schemaDdl, loc, partCols, managed) {
-            dest =>
-              val fs = new org.apache.hadoop.fs.Path(loc)
-                .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              val hold = new org.apache.hadoop.fs.Path(loc + "_dropped")
-              if (fs.exists(hold) &&
-                  !fs.rename(hold, new org.apache.hadoop.fs.Path(dest)))
-                throw new IllegalStateException(
-                  s"UNDROP TABLE $t: rename of $hold to $dest failed")
-          }
-          droppedEngineMeta.remove(t).foreach(engineMeta.put(t, _))
-        case None => throw new IllegalArgumentException(
-          s"UNDROP TABLE $t: no dropped table of that name in the holding area")
-      }
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^(BACKUP|RESTORE)\\s+TABLE\\b.*")) {
-      backupRestore(spark, trimmed)
-    } else if (trimmed.matches(
-        "(?is)^(CREATE|ALTER|DROP)\\s+NAMED\\s+COLLECTION\\b.*") ||
-        trimmed.matches("(?is)^SHOW\\s+NAMED\\s+COLLECTIONS\\s*;?\\s*$")) {
-      namedCollectionDdl(spark, trimmed)
-    } else if (trimmed.matches(
-        "(?is)^(CREATE|DROP)\\s+(WORKLOAD|RESOURCE)\\b.*")) {
-      workloadDdl(spark, trimmed)
-    } else if (AccessControl.matches(trimmed)) {
-      AccessControl.execute(spark, trimmed)
-    } else if (trimmed.matches("(?is)^EXCHANGE\\s+TABLES\\b.*")) {
-      // EXCHANGE TABLES a AND b (InterpreterRenameQuery exchange=true):
-      // atomic in the reference; here a triple rename through a temp name
-      val re = ("(?is)^EXCHANGE\\s+TABLES\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+AND\\s+" +
-        "([A-Za-z_][A-Za-z0-9_.]*)\\s*;?\\s*$").r
-      trimmed match {
-        case re(a, b) =>
-          val tmp = s"__graft_xchg_${System.nanoTime()}"
-          Seq((a, tmp), (b, a), (tmp, b)).foreach { case (from, to) =>
-            spark.sql(s"ALTER TABLE $from RENAME TO $to")
-            moveEngineMeta(from, to)
-          }
-          import spark.implicits._
-          Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException("unsupported EXCHANGE form")
-      }
-    } else if (trimmed.matches("(?is)^RENAME\\s+TABLE\\b.*")) {
-      val re = ("(?is)^RENAME\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+TO\\s+" +
-        "([A-Za-z_][A-Za-z0-9_.]*)\\s*;?\\s*$").r
-      trimmed match {
-        case re(from, to) =>
-          val df = spark.sql(s"ALTER TABLE $from RENAME TO $to")
-          moveEngineMeta(from, to)
-          df
-        case _ => throw new IllegalArgumentException("unsupported RENAME form")
-      }
-    }
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(ADD|DROP|MATERIALIZE)\\s+PROJECTION\\b.*"))
-      projectionDdl(spark, trimmed)
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(ADD|DROP|MATERIALIZE|CLEAR)\\s+INDEX\\b.*"))
-      indexDdl(spark, trimmed)
-    else if (trimmed.matches(
-        "(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(DETACH|ATTACH|DROP|FREEZE|REPLACE|MOVE|FETCH)\\s+PARTITION\\b.*"))
-      alterPartition(spark, trimmed)
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(MODIFY|MATERIALIZE)\\s+TTL\\b.*"))
-      alterTtl(spark, trimmed)
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+" +
-        "(MODIFY\\s+(ORDER\\s+BY|SAMPLE\\s+BY|COMMENT)|REMOVE\\s+SAMPLE\\s+BY|" +
-        "COMMENT\\s+COLUMN|MATERIALIZE\\s+COLUMN)\\b.*"))
-      alterMeta(spark, trimmed)
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(UPDATE|DELETE)\\b.*"))
-      alterMutation(spark, trimmed)
-    else if (trimmed.matches(
-        "(?is)^ALTER\\s+TABLE\\s+\\S+\\s+CLEAR\\s+COLUMN\\b.*")) {
-      // ALTER TABLE t CLEAR COLUMN c [IN PARTITION 'v'] (AlterCommands
-      // DROP_COLUMN clear_column form): reset the column to its default
-      // (NULL here) in the named partition — a part rewrite of the
-      // affected rows only, everything else passes through.
-      import spark.implicits._
-      import org.apache.spark.sql.functions.{col, lit, when}
-      val re = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+CLEAR\\s+COLUMN\\s+" +
-        "`?([A-Za-z_][A-Za-z0-9_]*)`?(?:\\s+IN\\s+PARTITION\\s+'?([^'\\s;]+)'?)?\\s*;?\\s*$").r
-      trimmed match {
-        case re(t, c, pval) =>
-          val base = spark.table(t)
-          val dt = base.schema(c).dataType
-          // clearing a partition column would move every row's
-          // partition — forbidden like the reference's key columns
-          require(!spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(t))
-              .partitionColumnNames.exists(_.equalsIgnoreCase(c)),
-            s"Cannot CLEAR key column `$c` (it is a partition column of $t)")
-          val condOpt = Option(pval).map { v =>
-            val pcols = spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(t))
-              .partitionColumnNames
-            require(pcols.size == 1,
-              s"CLEAR COLUMN IN PARTITION needs one partition column, $t has $pcols")
-            col(pcols.head) === v
-          }
-          val cond = condOpt.getOrElse(lit(true))
-          val mutated = base.withColumn(c,
-            when(cond, lit(null).cast(dt)).otherwise(col(c)))
-          // IN PARTITION prunes the rewrite to the named partition only
-          graft.operators.DurableRewrite.rewrite(spark, t, mutated, condOpt)
-          refreshSkipIndexes(spark, t)
-          queryCache.clear()
-          logMutation(t, trimmed)
-          Seq("OK").toDF("status")
-        case _ => throw new IllegalArgumentException(
-          "unsupported CLEAR COLUMN form")
-      }
-    }
-    else if (trimmed.matches("(?is)^ALTER\\s+TABLE\\s+\\S+\\s+(ADD|DROP|MODIFY|RENAME)\\s+COLUMN\\b.*"))
-      alterColumnDdl(spark, trimmed)
-    else if (trimmed.matches("(?is)^OPTIMIZE\\s+TABLE\\b.*")) {
-      import spark.implicits._
-      // OPTIMIZE ... DEDUPLICATE [BY c1, c2] has real semantics (the
-      // reference physically dedups identical rows during the merge —
-      // InterpreterOptimizeQuery + MergeTreeDataMergerMutator dedup):
-      // rewrite the catalog table keeping one row per key (all columns
-      // when BY is absent). Plain OPTIMIZE stays a no-op: merges are
-      // Spark's compaction concern.
-      val dedup = ("(?is)^OPTIMIZE\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)" +
-        "(?:\\s+PARTITION\\s+'?([^'\\s;]+)'?)?" +
-        "(?:\\s+FINAL)?\\s+DEDUPLICATE(?:\\s+BY\\s+(.+?))?\\s*;?\\s*$").r
-      trimmed match {
-        case dedup(table, part, by) =>
-          import org.apache.spark.sql.functions.col
-          val cols = Option(by).map(_.split(",").map(_.trim).toSeq)
-          val before = spark.table(table)
-          // PARTITION scope (round 8 — previously this form fell to the
-          // no-op branch WITHOUT deduplicating): dedup only the named
-          // partition's rows, pass every other partition through. The
-          // pass-through complement is NULL-SAFE (<=>): a plain
-          // !(col === v) evaluates to NULL for NULL-partition rows
-          // (__HIVE_DEFAULT_PARTITION__), which would silently DELETE them
-          val (target, rest, partCond) = Option(part) match {
-            case Some(v) =>
-              val pcols = spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(table))
-                .partitionColumnNames
-              require(pcols.size == 1,
-                s"OPTIMIZE PARTITION needs one partition column, $table has $pcols")
-              (before.filter(col(pcols.head) === v),
-                Some(before.filter(
-                  !col(pcols.head).eqNullSafe(org.apache.spark.sql.functions.lit(v)))),
-                Some(col(pcols.head) === v))
-            case None => (before, None, None)
-          }
-          val deduped = cols.fold(target.dropDuplicates())(c =>
-            target.dropDuplicates(c.head, c.tail: _*))
-          val after = rest.fold(deduped)(r => deduped.unionByName(r))
-          // durable part rewrite; a PARTITION scope prunes the rewrite
-          // to that partition's files only (DurableRewrite)
-          graft.operators.DurableRewrite.rewrite(spark, table, after, partCond)
-          refreshSkipIndexes(spark, table)
-          queryCache.clear() // mutated data: cached SELECT results are stale
-          Seq("OK").toDF("status")
-        case _ => Seq("OK").toDF("status")
-      }
-    } else if (trimmed.matches("(?is)^SET\\s+\\w+\\s*=.*")) {
-      // per-session engine knobs: accept and record on the Spark conf
-      // under a namespaced key (no reference settings map onto Spark 1:1)
-      val kv = "(?is)^SET\\s+(\\w+)\\s*=\\s*(.+?)\\s*;?\\s*$".r
-      trimmed match {
-        case kv(k, v) =>
-          val prev = spark.conf.getOption(s"graft.ch.$k").getOrElse("")
-          // SET workload pins the session's jobs to the Spark
-          // fair-scheduler pool of that name (the workload-scheduling
-          // mapping); the workload must exist
-          if (k.equalsIgnoreCase("workload")) {
-            val w = v.stripPrefix("'").stripSuffix("'")
-            require(workloadExists(w),
-              s"SET workload: workload `$w` does not exist " +
-                "(CREATE WORKLOAD first)")
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", w)
-          }
-          spark.conf.set(s"graft.ch.$k", v)
-          // session settings audit (system.settings_changes)
-          graft.sources.SystemTables.SettingsChangesLedger.record(k, v, prev)
-          // SET user authenticates the session: apply every settings
-          // profile covering the new user (SettingsProfilesCache)
-          if (k.equalsIgnoreCase("user")) AccessControl.applyProfiles(spark)
-        case _ =>
-      }
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^EXPLAIN\\s+indexes\\s*=\\s*1\\b.*")) {
-      // EXPLAIN indexes = 1 (the reference's index-usage explain:
-      // InterpreterExplainQuery with indexes setting — which skip index
-      // ran, parts before/after): optimize the query and report the
-      // pruning decisions the transparent rule took.
-      val q = trimmed.replaceFirst("(?is)^EXPLAIN\\s+indexes\\s*=\\s*1\\s+", "")
-      graft.plans.SkipIndexPruning.clearDecisions()
-      val df = sqlImpl(spark, q) // same statement — no second quota charge
-      df.queryExecution.optimizedPlan // force optimization → decisions
-      val ds = graft.plans.SkipIndexPruning.lastDecisions
-      import spark.implicits._
-      if (ds.isEmpty)
-        Seq.empty[(String, String, String, Int, Int)]
-          .toDF("data_path", "index_type", "columns", "files_admitted",
-            "files_total")
-      else ds.map(d => (d.dataPath, d.kind, d.columns.toSeq.sorted.mkString(","),
-          d.admitted, d.total))
-        .toDF("data_path", "index_type", "columns", "files_admitted",
-          "files_total")
-    } else if (trimmed.matches("(?is)^EXPLAIN\\s+ESTIMATE\\b.*")) {
-      // EXPLAIN ESTIMATE (InterpreterExplainQuery ESTIMATE kind): parts /
-      // rows / marks for the FROM table, read from parquet FOOTERS —
-      // metadata only, the query never executes (the reference reads the
-      // same counts from part headers; a row group is the granule
-      // analog, so it reports as marks).
-      val q = trimmed.replaceFirst("(?is)^EXPLAIN\\s+ESTIMATE\\s+", "")
-      val table = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_.]*)".r
-        .findFirstMatchIn(q).map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(
-          "EXPLAIN ESTIMATE: no FROM <table>"))
-      val loc = tableLocation(spark, table)
-      val md = graft.sources.ChMiscFormats.readParquetMetadata(spark, loc)
-      import org.apache.spark.sql.functions.{countDistinct, count, sum, lit => flit}
-      md.agg(flit("default").as("database"), flit(table).as("table"),
-        countDistinct(org.apache.spark.sql.functions.col("file")).as("parts"),
-        sum("num_rows").as("rows"), count(flit(1)).as("marks"))
-    } else if (trimmed.matches("(?is)^SHOW\\s+DATABASES\\s*;?\\s*$")) {
-      graft.sources.SystemTables.databases(spark).select("name").orderBy("name")
-    } else if (trimmed.matches("(?is)^SHOW\\s+DICTIONARIES\\s*;?\\s*$")) {
-      graft.sources.SystemTables.dictionaries(spark).select("name").orderBy("name")
-    } else if (trimmed.matches("(?is)^EXPLAIN\\s+SYNTAX\\b.*")) {
-      // reference EXPLAIN SYNTAX shows the rewritten query — here, the
-      // dialect translation itself
-      val q = trimmed.replaceFirst("(?is)^EXPLAIN\\s+SYNTAX\\s+", "")
-      import spark.implicits._
-      Seq(rewrite(expandSchemaTransformers(spark, q))).toDF("rewritten")
-    } else if (trimmed.matches("(?is)^EXPLAIN\\b.*")) {
-      // PLAN/PIPELINE/ESTIMATE kinds all map to the Spark formatted plan
-      val q = trimmed.replaceFirst(
-        "(?is)^EXPLAIN\\s+(PLAN\\s+|PIPELINE\\s+|ESTIMATE\\s+|AST\\s+)?", "")
-      spark.sql("EXPLAIN FORMATTED " + rewrite(expandSchemaTransformers(spark, q)))
-    } else if (trimmed.matches("(?is)^SHOW\\s+TABLES\\b.*")) {
-      // SHOW TABLES [LIKE '%pat%'] (ParserShowTablesQuery) — the session
-      // catalog, optionally name-filtered; CH's LIKE matches SQL LIKE.
-      import org.apache.spark.sql.functions.col
-      val like = "(?is)\\bLIKE\\s+'([^']*)'".r.findFirstMatchIn(trimmed)
-        .map(_.group(1))
-      val all = graft.sources.SystemTables.tables(spark).select("name")
-      like.fold(all)(p => all.filter(col("name").like(p))).orderBy("name")
-    } else if (trimmed.matches("(?is)^EXISTS\\s+(TABLE\\s+)?[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // EXISTS [TABLE] t (ParserExistsTableQuery): UInt8 0/1 like CH.
-      import spark.implicits._
-      val t = trimmed.replaceFirst("(?is)^EXISTS\\s+(TABLE\\s+)?", "")
-        .replaceFirst("(?s)\\s*;?\\s*$", "")
-      Seq(if (spark.catalog.tableExists(t)) 1 else 0).toDF("result")
-    } else if (trimmed.matches("(?is)^SYSTEM\\s+RELOAD\\s+DICTIONAR(Y|IES)\\b.*")) {
-      // ExternalDictionariesLoader reload: re-collect from the source
-      val one = "(?is)^SYSTEM\\s+RELOAD\\s+DICTIONARY\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$".r
-      val name = one.findFirstMatchIn(trimmed).map(_.group(1))
-      Dictionaries.reload(spark, name)
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^SYSTEM\\s+DROP\\s+QUERY\\s+CACHE\\s*;?\\s*$")) {
+      droppedTables.put(t, (schemaDdl, loc, meta.partitionColumnNames,
+        meta.tableType ==
+          org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED))
+      // engine metadata follows the table into the holding area: a fresh
+      // CREATE of the name starts clean, UNDROP restores it
+      engineMeta.remove(t).foreach(droppedEngineMeta.put(t, _))
       queryCache.clear()
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches(
-        "(?is)^SYSTEM\\s+DROP\\s+(MARK|UNCOMPRESSED|COMPILED\\s+EXPRESSION)\\s+CACHE\\s*;?\\s*$")) {
-      // SYSTEM DROP MARK/UNCOMPRESSED/COMPILED EXPRESSION CACHE
-      // (InterpreterSystemQuery): Spark's session block-cache is the
-      // analog of the read caches — release it eagerly.
-      spark.catalog.clearCache()
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches(
-        "(?is)^SYSTEM\\s+(STOP|START)\\s+MERGES(\\s+[A-Za-z_][A-Za-z0-9_.]*)?\\s*;?\\s*$")) {
-      // STOP/START MERGES: honest no-op — there is no background merge
-      // daemon in this engine (compaction is Spark's write-path concern),
-      // so both states are always "started" and always clean.
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches(
-        "(?is)^SYSTEM\\s+DROP\\s+(DNS|FILESYSTEM|SCHEMA)\\s+CACHE\\s*;?\\s*$")) {
-      // SYSTEM DROP DNS/FILESYSTEM/SCHEMA CACHE: the session block cache
-      // is the nearest analog of the filesystem cache; DNS/schema caches
-      // have no counterpart here — all three accept and answer OK like
-      // an empty-cache reference server.
-      spark.catalog.clearCache()
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches(
-        "(?is)^SYSTEM\\s+SYNC\\s+REPLICA(\\s+[A-Za-z_][A-Za-z0-9_.]*)?\\s*;?\\s*$")) {
-      // SYSTEM SYNC REPLICA: single-node engine — every table is always
-      // in sync with itself; honest immediate OK.
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^SYSTEM\\s+RELOAD\\s+FUNCTIONS\\s*;?\\s*$")) {
-      ChFunctionRegistry.install(spark) // idempotent re-install
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^SYSTEM\\s+FLUSH\\s+LOGS\\s*;?\\s*$")) {
-      // SYSTEM FLUSH LOGS (InterpreterSystemQuery): drain the async
-      // listener bus so system.events/query_log reads observe everything
-      // issued before this statement.
-      graft.sources.SystemTables.flushEvents(spark)
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^KILL\\s+QUERY\\b.*")) {
-      // KILL QUERY WHERE query_id = 'x' (InterpreterKillQueryQuery):
-      // cancel the Spark job group the tagged query's jobs run under —
-      // in-flight stages abort with interruption, exactly the
-      // reference's kill semantics. Cancelling an unknown id is a no-op
-      // (the reference returns an empty result set).
-      val id = "(?i)query_id\\s*=\\s*'([^']*)'".r.findFirstMatchIn(trimmed)
-        .map(_.group(1)).getOrElse(throw new IllegalArgumentException(
-          "KILL QUERY needs WHERE query_id = '<id>'"))
-      spark.sparkContext.cancelJobGroup(id)
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^KILL\\s+MUTATION\\b.*")) {
-      // KILL MUTATION: mutations in this engine are SYNCHRONOUS part
-      // rewrites — there is never a pending mutation to kill, so the
-      // statement parses and returns cleanly (the reference with an
-      // empty mutation queue does the same).
-      import spark.implicits._
-      Seq("OK").toDF("status")
-    } else if (trimmed.matches("(?is)^SHOW\\s+PROCESSLIST\\s*;?\\s*$")) {
-      // SHOW PROCESSLIST (ParserShowProcesslistQuery) → system.processes
-      graft.sources.SystemTables.processes(spark)
-    } else if (trimmed.matches(
-        "(?is)^SHOW\\s+(FULL\\s+)?COLUMNS\\s+(FROM|IN)\\s+" +
-          "[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // SHOW COLUMNS (ParserShowColumnsQuery — the MySQL-compat shape:
-      // field/type/null/key/default/extra); defaults come from the
-      // engine-metadata ledger.
-      import spark.implicits._
-      val t = trimmed
-        .replaceFirst("(?is)^SHOW\\s+(FULL\\s+)?COLUMNS\\s+(FROM|IN)\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      val em = engineMetaOf(t)
-      spark.table(t).schema.fields.toSeq.map(f =>
-        (f.name, chTypeOrSpark(f), if (f.nullable) "YES" else "NO", "",
-          em.colDefaults.getOrElse(f.name, ""), ""))
-        .toDF("field", "type", "null", "key", "default", "extra")
-    } else if (trimmed.matches(
-        "(?is)^SHOW\\s+(INDEX|INDEXES|KEYS)\\s+(FROM|IN)\\s+" +
-          "[A-Za-z_][A-Za-z0-9_.]*\\s*;?\\s*$")) {
-      // SHOW INDEXES (ParserShowIndexesQuery): the PRIMARY (sorting key)
-      // row from the engine metadata plus every live skip index.
-      import spark.implicits._
-      import scala.jdk.CollectionConverters._
-      val t = trimmed
-        .replaceFirst("(?is)^SHOW\\s+(INDEX|INDEXES|KEYS)\\s+(FROM|IN)\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      require(spark.catalog.tableExists(t), s"no such table $t")
-      val primary = engineMetaOf(t).orderBy.toSeq
-        .map(ob => (t, "PRIMARY", ob, "primary"))
-      val skips = skipIndexes.asScala.values.toSeq
-        .filter(m => m.table == t && !m.cleared)
-        .map(m => (t, m.name, m.columns.mkString(","), m.kind))
-        .sortBy(_._2)
-      (primary ++ skips)
-        .toDF("table", "key_name", "column_name", "type")
-    } else if (trimmed.matches(
-        "(?is)^SHOW\\s+FUNCTIONS(\\s+LIKE\\s+'[^']*')?\\s*;?\\s*$")) {
-      // SHOW FUNCTIONS [LIKE 'pat'] (ParserShowFunctionsQuery) →
-      // system.functions names
-      import org.apache.spark.sql.functions.col
-      val like = "(?is)LIKE\\s+'([^']*)'".r.findFirstMatchIn(trimmed)
-        .map(_.group(1))
-      val all = graft.sources.SystemTables.functions(spark).select("name")
-      like.fold(all)(p => all.filter(col("name").like(p))).orderBy("name")
-    } else if (trimmed.matches("(?is)^SHOW\\s+ENGINES\\s*;?\\s*$")) {
-      // SHOW ENGINES (ParserShowEngineQuery) → system.table_engines
-      graft.sources.SystemTables.tableEngines(spark)
-    } else if (trimmed.matches(
-        "(?is)^SHOW\\s+SETTING\\s+[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$")) {
-      // SHOW SETTING name (ParserShowSettingQuery): the single value
-      import spark.implicits._
-      val k = trimmed.replaceFirst("(?is)^SHOW\\s+SETTING\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      Seq(spark.conf.getOption(s"graft.ch.$k").getOrElse("")).toDF("value")
-    } else if (trimmed.matches("(?is)^USE\\s+[A-Za-z_][A-Za-z0-9_]*\\s*;?\\s*$")) {
-      // USE db (ParserUseQuery): this engine serves the single `default`
-      // database — switching to it is a no-op, anything else is loud.
-      import spark.implicits._
-      val db = trimmed.replaceFirst("(?is)^USE\\s+", "")
-        .replaceFirst(";\\s*$", "").trim
-      require(db.equalsIgnoreCase("default"),
-        s"USE $db: only the `default` database exists on this engine")
-      Seq("OK").toDF("status")
-    } else {
-      // ASOF / PASTE / ANY join spellings (round-13 — the reference's own
-      // syntax for its non-standard strictnesses, Joins.h:44/78) rewrite
-      // onto the oracled JoinOps operators BEFORE the textual dialect
-      // pass; the guard keeps ordinary SQL off the parsing cost.
-      val preJoined =
-        if (trimmed.matches("(?is)^(SELECT|WITH)\\b.*") &&
-            JoinSpellings.applies(trimmed))
-          JoinSpellings.rewrite(spark, trimmed, selectRunner(spark))
-        else trimmed
-      val result = spark.sql(rewrite(expandSchemaTransformers(spark,
-        bindDeclaredOrder(spark, preJoined))))
-      // INSERT appends files to the table's layout: per-file skip indexes
-      // no longer cover the new files (transparent pruning would silently
-      // exclude the inserted rows) and cached SELECT results are stale —
-      // mirror the DELETE/TRUNCATE/OPTIMIZE invalidation.
-      val ins = ("(?is)^INSERT\\s+INTO\\s+(?:TABLE\\s+)?" +
-        "([A-Za-z_][A-Za-z0-9_.]*)").r
-      ins.findFirstMatchIn(trimmed).foreach { m =>
-        refreshSkipIndexes(spark, m.group(1))
-        queryCache.clear()
-      }
-      // use_query_cache = 1 (reference Settings use_query_cache →
-      // QueryResultCache.cpp): SELECT results are admitted to / served
-      // from the canonical-plan-keyed cache. SET lands on the conf above.
-      if (trimmed.matches("(?is)^(SELECT|WITH)\\b.*") &&
-          spark.conf.getOption("graft.ch.use_query_cache").contains("1"))
-        queryCache.cached(result)
-      else result
     }
+    h.ok
+  }
+
+  /** BACKUP TABLE t TO File('path') / Disk('disk', 'path') and
+    * RESTORE TABLE t FROM … (ParserBackupQuery.h:8-31,
+    * src/Backups/BackupsWorker.cpp): a backup is the table's data dir
+    * copied under the destination plus a schema sidecar; RESTORE
+    * re-creates the table from that copy. Disk('d', 'p') resolves under
+    * /tmp/graft_disks/<d>/<p> — the named-disk analog in an engine whose
+    * storage policy is a filesystem. Synchronous (the reference's
+    * non-ASYNC form); status values match the reference's
+    * BACKUP_CREATED / RESTORED. */
+  private def backupRestore(h: Hit): DataFrame = {
+    val (spark, t) = (h.spark, h(2))
+    import spark.implicits._
+    val dest = h(3).toLowerCase match {
+      case "file" => h(4)
+      case _ =>
+        require(h(5) != null, "Disk('name', 'path') needs both arguments")
+        s"/tmp/graft_disks/${h(4)}/${h(5)}"
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val destPath = new Path(dest)
+    val fs = destPath.getFileSystem(conf)
+    if (h(1).equalsIgnoreCase("BACKUP")) {
+      val loc = tableLocation(spark, t)
+      val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+      fs.delete(destPath, true)
+      fs.mkdirs(destPath)
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(loc), fs,
+        new Path(destPath, "data"), false, true, conf)
+      val managed = meta.tableType ==
+        org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED
+      val sidecar = fs.create(new Path(destPath, "_schema.txt"), true)
+      try sidecar.write((spark.table(t).schema.toDDL + "\n" +
+        meta.partitionColumnNames.mkString(",") + "\n" +
+        loc + "\n" + managed).getBytes("UTF-8"))
+      finally sidecar.close()
+      val sum = fs.getContentSummary(new Path(destPath, "data"))
+      backupLog.addLast(BackupEntry(dest, t, "BACKUP_CREATED",
+        sum.getFileCount, sum.getLength))
+      Seq((dest, "BACKUP_CREATED")).toDF("id", "status")
+    } else {
+      val sidecarPath = new Path(destPath, "_schema.txt")
+      require(fs.exists(sidecarPath), s"no backup at $dest")
+      val in = fs.open(sidecarPath)
+      val text = try {
+        val buf = new Array[Byte](fs.getFileStatus(sidecarPath).getLen.toInt)
+        in.readFully(0, buf)
+        new String(buf, "UTF-8")
+      } finally in.close()
+      val lines = text.split("\n", -1)
+      val partCols = lines.lift(1).getOrElse("").split(",").toSeq.filter(_.nonEmpty)
+      // sidecar lines 3/4 (round-9): original location + managed flag;
+      // older backups default to a managed warehouse table
+      val loc = lines.lift(2).filter(_.nonEmpty).getOrElse(
+        new Path(spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase).toString)
+      val managed = lines.lift(3).forall(_.trim != "false")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      recreateCatalogEntry(spark, t, lines(0), loc, partCols, managed) { actualLoc =>
+        org.apache.hadoop.fs.FileUtil.copy(fs, new Path(destPath, "data"),
+          fs, new Path(actualLoc), false, true, conf)
+        ()
+      }
+      backupLog.addLast(BackupEntry(dest, t, "RESTORED", -1L, -1L))
+      Seq((dest, "RESTORED")).toDF("id", "status")
+    }
+  }
+
+  /** Named-collection key/value text; OVERRIDABLE flags are accepted and
+    * dropped (no override layer on a single-session engine). */
+  private def collectionKv(text: String): Map[String, String] =
+    SqlLex.splitTop(text).map { kv =>
+      val Array(k, v) = kv.split("=", 2).map(_.trim)
+      k -> v.replaceAll("(?is)\\s+(NOT\\s+)?OVERRIDABLE$", "")
+        .stripPrefix("'").stripSuffix("'")
+    }.toMap
+
+  /** ALTER TABLE t ADD PROJECTION — the reference's projection DDL
+    * (src/Parsers/ParserProjectionDeclaration, projections on MergeTree
+    * tables), wired onto the two rewrite rules:
+    *  - `ADD PROJECTION p (SELECT <dims+aggs> GROUP BY dims)` →
+    *    AggProjections.create (precomputed rollup);
+    *  - `ADD PROJECTION p (SELECT * ORDER BY keys)` →
+    *    NormalProjections.create (alternate physical order). */
+  private def addProjection(h: Hit): DataFrame = {
+    val (spark, table, proj, body) = (h.spark, h(1), h(2), h(3))
+    val basePath = tableLocation(spark, table)
+    val groupBy = "(?is)\\bGROUP\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
+    val orderBy = "(?is)\\bORDER\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
+    if (groupBy.isDefined) {
+      val dims = groupBy.get.group(1).split(",").map(_.trim)
+        .filter(_.nonEmpty).toSeq
+      val measures = "(?i)(?:sum|min|max|avg)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r
+        .findAllMatchIn(body).map(_.group(1)).toSeq.distinct
+      val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+        s"graft_projections/${table}_$proj").toString
+      val build = () => graft.plans.AggProjections.create(
+        spark, basePath, wh, dims, measures)
+      build()
+      projections.put((table, proj), ProjEntry(basePath, isAgg = true, build))
+    } else if (orderBy.isDefined) {
+      val keys = orderBy.get.group(1).split(",").map(_.trim)
+        .filter(_.nonEmpty).toSeq
+      val build = () => graft.plans.NormalProjections.create(
+        spark, basePath, s"${table}__proj_$proj", 8, keys)
+      build()
+      projections.put((table, proj), ProjEntry(basePath, isAgg = false, build))
+    } else throw new IllegalArgumentException(
+      "ADD PROJECTION needs a GROUP BY (aggregate) or ORDER BY (normal) body")
+    h.ok
+  }
+
+  /** ALTER TABLE … REPLACE PARTITION v FROM src / MOVE PARTITION v TO
+    * TABLE dst / FETCH PARTITION v FROM 'path' — the round-9 ETL verbs
+    * (PartitionCommands.h:26-35 REPLACE_PARTITION / MOVE_PARTITION /
+    * FETCH_PARTITION): staging-swap, cross-table move, and
+    * replica-fetch-into-detached, as O(1) directory operations in
+    * [[graft.operators.ScaleOps]] with the Spark catalog kept in sync. */
+  private def alterPartition(h: Hit, verb: String, dst: String,
+      src: String): DataFrame = {
+    val (spark, value) = (h.spark, h(2))
+    val ops = graft.operators.ScaleOps
+    val partLog = graft.sources.SystemTables.PartLogLedger
+    def refresh(t: String, pcol: String, admitted: Boolean): Unit = {
+      spark.sql(s"ALTER TABLE $t ${if (admitted) "ADD IF NOT" else "DROP IF"} " +
+        s"EXISTS PARTITION ($pcol = '$value')")
+      spark.sql(s"REFRESH TABLE $t")
+      afterWrite(spark, t)
+    }
+    def samePartCol(what: String): String = {
+      val pcol = onePartCol(spark, dst, "ALTER PARTITION")
+      require(onePartCol(spark, src, "ALTER PARTITION") == pcol,
+        s"$what PARTITION: $src and $dst partition on different columns")
+      pcol
+    }
+    verb match {
+      case "REPLACE" =>
+        val pcol = samePartCol(verb)
+        require(ops.replacePartition(spark, tableLocation(spark, dst),
+            tableLocation(spark, src), pcol, value),
+          s"REPLACE PARTITION: $src has no partition $pcol=$value")
+        refresh(dst, pcol, admitted = true)
+        partLog.record("NewPart", dst, s"$pcol=$value")
+      case "MOVE" =>
+        val pcol = samePartCol(verb)
+        require(ops.movePartition(spark, tableLocation(spark, src),
+            tableLocation(spark, dst), pcol, value),
+          s"MOVE PARTITION: $src has no partition $pcol=$value")
+        refresh(src, pcol, admitted = false)
+        refresh(dst, pcol, admitted = true)
+        partLog.record("RemovePart", src, s"$pcol=$value")
+        partLog.record("MovePart", dst, s"$pcol=$value")
+      case _ =>
+        val pcol = onePartCol(spark, dst, "ALTER PARTITION")
+        // `src` is a layout path in quotes or a catalog table name — the
+        // reference takes a replica path; any readable layout serves here
+        val srcPath =
+          if (spark.catalog.tableExists(src)) tableLocation(spark, src) else src
+        require(ops.fetchPartition(spark, tableLocation(spark, dst), srcPath,
+            pcol, value),
+          s"FETCH PARTITION: $srcPath has no partition $pcol=$value")
+        // fetched data sits in _detached — invisible until ATTACH, so no
+        // catalog change and no cache invalidation yet
+        partLog.record("DownloadPart", dst, s"_detached/$pcol=$value")
+    }
+    h.ok
+  }
+
+  /** ALTER TABLE t DETACH / ATTACH / DROP / FREEZE PARTITION 'v' — the
+    * statement forms of the partition lifecycle
+    * (src/Parsers/ParserAlterQuery.cpp partition commands), routed to the
+    * O(1) directory operations in [[graft.operators.ScaleOps]] with the
+    * Spark catalog kept in sync (ADD/DROP PARTITION) and the file listing
+    * refreshed. Single-partition-column tables (the layout the CREATE
+    * TABLE dialect produces). */
+  private def alterPartitionInPlace(h: Hit): DataFrame = {
+    val (spark, t, verb, value) = (h.spark, h(1), h(2).toUpperCase, h(3))
+    val pcol = onePartCol(spark, t, "ALTER PARTITION")
+    val loc = tableLocation(spark, t)
+    val ops = graft.operators.ScaleOps
+    val partLog = graft.sources.SystemTables.PartLogLedger
+    def catalogPartition(op: String): Unit =
+      spark.sql(s"ALTER TABLE $t $op EXISTS PARTITION ($pcol = '$value')")
+    verb match {
+      case "DROP" =>
+        catalogPartition("DROP IF")
+        ops.dropPartition(spark, loc, pcol, value)
+        partLog.record("RemovePart", t, s"$pcol=$value")
+      case "DETACH" =>
+        ops.detachPartition(spark, loc, pcol, value)
+        catalogPartition("DROP IF")
+        partLog.record("RemovePart", t, s"$pcol=$value")
+      case "ATTACH" =>
+        ops.attachPartition(spark, loc, pcol, value)
+        catalogPartition("ADD IF NOT")
+        partLog.record("NewPart", t, s"$pcol=$value")
+      case _ =>
+        ops.freezePartition(spark, loc, pcol, value, h.opt(4).getOrElse("default"))
+    }
+    spark.sql(s"REFRESH TABLE $t")
+    if (verb != "FREEZE") afterWrite(spark, t)
+    h.ok
+  }
+
+  /** ALTER TABLE t UPDATE a = e, … WHERE p / ALTER TABLE t DELETE WHERE p
+    * and their lightweight spellings UPDATE t SET … / DELETE FROM t — the
+    * reference's mutation statements (src/Interpreters/MutationsInterpreter.h:44,
+    * ParserAlterQuery): the declarative transform comes from
+    * [[graft.operators.Mutations]] and the part rewrite goes through
+    * [[graft.operators.DurableRewrite]] — staged durably on disk, pruned
+    * to partitions containing WHERE matches (only parts with matching
+    * rows rewrite, the reference's MutationsInterpreter contract). The
+    * reference forbids mutating key columns ("Cannot UPDATE key column"),
+    * and the pruned rewrite depends on rows never changing partition. */
+  private def mutate(spark: SparkSession, t: String, assigns: Option[String],
+      pred: String, command: String): DataFrame = {
+    val asn = assigns.map { a =>
+      val asn = assignments(a).toMap
+      val keys = partitionCols(spark, t).map(_.toLowerCase).toSet
+      asn.keys.find(c => keys.contains(c.toLowerCase)).foreach(c =>
+        throw new IllegalArgumentException(
+          s"Cannot UPDATE key column `$c` (it is a partition column of $t)"))
+      asn
+    }
+    val table = spark.table(t)
+    val p = org.apache.spark.sql.functions.expr(rewrite(pred))
+    val mutated = asn.fold(graft.operators.Mutations.delete(table, p))(
+      graft.operators.Mutations.update(table, p, _))
+    graft.operators.DurableRewrite.rewrite(spark, t, mutated, Some(p))
+    afterWrite(spark, t, Some(command))
+    ok(spark)
+  }
+
+  /** ALTER TABLE t CLEAR COLUMN c [IN PARTITION 'v'] (AlterCommands
+    * DROP_COLUMN clear_column form): reset the column to its default
+    * (NULL here) in the named partition — a part rewrite of the affected
+    * rows only, everything else passes through. */
+  private def clearColumn(h: Hit): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val (spark, t, c) = (h.spark, h(1), h(2))
+    val base = spark.table(t)
+    val dt = base.schema(c).dataType
+    // clearing a partition column would move every row's partition —
+    // forbidden like the reference's key columns
+    require(!partitionCols(spark, t).exists(_.equalsIgnoreCase(c)),
+      s"Cannot CLEAR key column `$c` (it is a partition column of $t)")
+    val condOpt = h.opt(3).map(v =>
+      col(onePartCol(spark, t, "CLEAR COLUMN IN PARTITION")) === v)
+    val mutated = base.withColumn(c,
+      when(condOpt.getOrElse(lit(true)), lit(null).cast(dt)).otherwise(col(c)))
+    // IN PARTITION prunes the rewrite to the named partition only
+    graft.operators.DurableRewrite.rewrite(spark, t, mutated, condOpt)
+    afterWrite(spark, t, Some(h.text))
+    h.ok
+  }
+
+  /** ALTER TABLE t MATERIALIZE COLUMN c [IN PARTITION v]: fill the
+    * column's NULL lanes with its recorded DEFAULT expression through the
+    * durable pruned rewrite (a part with nothing to materialize is never
+    * touched); a column with no recorded expression is a no-op, as in
+    * the reference. */
+  private def materializeColumn(h: Hit): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, when}
+    val (spark, t, c) = (h.spark, h(1), h(2))
+    require(spark.table(t).columns.contains(c), s"column $c does not exist in $t")
+    engineMetaOf(t).colDefaults.get(c).foreach { dflt =>
+      val dt = spark.table(t).schema(c).dataType
+      val partCond = h.opt(3).map(v =>
+        col(onePartCol(spark, t, "MATERIALIZE COLUMN IN PARTITION")) === v)
+      val hole = col(c).isNull
+      val affected = partCond.fold(hole)(_ && hole)
+      val mutated = spark.table(t).withColumn(c,
+        when(affected, expr(rewrite(dflt)).cast(dt)).otherwise(col(c)))
+      graft.operators.DurableRewrite.rewrite(spark, t, mutated, Some(affected))
+      afterWrite(spark, t, Some(h.text))
+    }
+    h.ok
+  }
+
+  /** A property update on `h(1)`'s engine metadata. */
+  private def updateEngineMeta(h: Hit)(f: EngineMeta => EngineMeta): DataFrame = {
+    require(h.spark.catalog.tableExists(h(1)), s"no such table ${h(1)}")
+    engineMeta.put(h(1), f(engineMetaOf(h(1))))
+    h.ok
+  }
+
+  /** OPTIMIZE ... DEDUPLICATE [BY c1, c2] has real semantics (the
+    * reference physically dedups identical rows during the merge —
+    * InterpreterOptimizeQuery + MergeTreeDataMergerMutator dedup):
+    * rewrite the catalog table keeping one row per key (all columns when
+    * BY is absent). */
+  private def optimizeDeduplicate(h: Hit): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (spark, table) = (h.spark, h(1))
+    val cols = h.opt(3).map(_.split(",").map(_.trim).toSeq)
+    val before = spark.table(table)
+    // PARTITION scope (round 8): dedup only the named partition's rows,
+    // pass every other partition through. The pass-through complement is
+    // NULL-SAFE (<=>): a plain !(col === v) evaluates to NULL for
+    // NULL-partition rows (__HIVE_DEFAULT_PARTITION__), which would
+    // silently DELETE them
+    val (target, rest, partCond) = h.opt(2) match {
+      case Some(v) =>
+        val pcol = col(onePartCol(spark, table, "OPTIMIZE PARTITION"))
+        (before.filter(pcol === v), Some(before.filter(!pcol.eqNullSafe(lit(v)))),
+          Some(pcol === v))
+      case None => (before, None, None)
+    }
+    val deduped = cols.fold(target.dropDuplicates())(c =>
+      target.dropDuplicates(c.head, c.tail: _*))
+    // durable part rewrite; a PARTITION scope prunes the rewrite to that
+    // partition's files only (DurableRewrite)
+    graft.operators.DurableRewrite.rewrite(spark, table,
+      rest.fold(deduped)(r => deduped.unionByName(r)), partCond)
+    afterWrite(spark, table)
+    h.ok
+  }
+
+  /** ALTER TABLE t ADD COLUMN [IF NOT EXISTS] c type [DEFAULT e]
+    * [FIRST | AFTER c2] (AlterCommands ADD_COLUMN): append the column —
+    * DEFAULT backfills, else NULL — at the declared position. */
+  private def addColumn(h: Hit): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, lit}
+    val (spark, t, name) = (h.spark, h(1), h(3))
+    val base = spark.table(t)
+    if (base.columns.contains(name)) {
+      if (h(2) == null) throw new IllegalArgumentException(
+        s"column $name already exists in $t")
+    } else {
+      val st = sparkTypeText(h(4).trim)
+      val value = h.opt(5).map(d => expr(rewrite(d)).cast(st))
+        .getOrElse(lit(null).cast(st))
+      val before = declaredColumns(spark, t)
+      val order: Seq[String] =
+        if (h(6) != null) name +: before
+        else h.opt(7).fold(before :+ name) { after =>
+          val i = before.indexOf(after)
+          if (i < 0) throw new IllegalArgumentException(
+            s"AFTER column $after not found in $t")
+          val (pre, post) = before.splitAt(i + 1)
+          pre ++ (name +: post)
+        }
+      rewriteTable(spark, t, base.withColumn(name, value).select(order.map(col): _*))
+      redeclare(spark, t, order)
+    }
+    h.ok
+  }
+
+  /** ALTER TABLE t DROP / MODIFY / RENAME COLUMN [IF EXISTS] c
+    * (AlterCommands DROP_COLUMN / MODIFY_COLUMN / RENAME_COLUMN): on the
+    * parquet layout every verb is a part rewrite with the transformed
+    * schema, run by `change` when the column exists. */
+  private def alterColumn(h: Hit)(change: (String, DataFrame) => Unit): DataFrame = {
+    val base = h.spark.table(h(1))
+    if (base.columns.contains(h(3))) change(h(1), base)
+    else if (h(2) == null) throw new IllegalArgumentException(
+      s"column ${h(3)} does not exist in ${h(1)}")
+    h.ok
+  }
+
+  /** Rewrite `t`'s data with the transformed frame and the NEW schema
+    * (insertInto can't change schemas): the shared stage-then-swap
+    * replace (graft.operators.DurableRewrite.replaceTable) — the
+    * transformed copy is durable on disk before the drop + re-create,
+    * partitioning and the managed/external distinction preserved. */
+  private def rewriteTable(spark: SparkSession, t: String, df: DataFrame): Unit = {
+    graft.operators.DurableRewrite.replaceTable(spark, t, df)
+    afterWrite(spark, t)
+  }
+
+  /** Everything no other row claims: Spark SQL after the dialect
+    * rewrite. ASOF / PASTE / ANY join spellings (round-13 — the
+    * reference's own syntax for its non-standard strictnesses,
+    * Joins.h:44/78) rewrite onto the oracled JoinOps operators BEFORE the
+    * textual dialect pass. */
+  private def sparkSql(h: Hit): DataFrame = {
+    val (spark, select) = (h.spark, h(2) != null)
+    val preJoined =
+      if (select && JoinSpellings.applies(h.text))
+        JoinSpellings.rewrite(spark, h.text, selectRunner(spark))
+      else h.text
+    val result = spark.sql(rewrite(expandSchemaTransformers(spark,
+      bindDeclaredOrder(spark, preJoined))))
+    // INSERT appends files to the table's layout: per-file skip indexes
+    // no longer cover the new files (transparent pruning would silently
+    // exclude the inserted rows) and cached SELECT results are stale
+    h.opt(1).foreach(afterWrite(spark, _))
+    // use_query_cache = 1 (reference Settings use_query_cache →
+    // QueryResultCache.cpp): SELECT results are admitted to / served
+    // from the canonical-plan-keyed cache. SET lands on the conf above.
+    if (select && spark.conf.getOption("graft.ch.use_query_cache").contains("1"))
+      queryCache.cached(result)
+    else result
   }
 
   /** Session-wide query result cache (reference QueryResultCache.cpp);
@@ -2464,68 +2804,6 @@ object ClickHouseSql {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .location.getPath
 
-  /** ALTER TABLE t ADD/DROP/MATERIALIZE PROJECTION — the reference's
-    * projection DDL (src/Parsers/ParserProjectionDeclaration, projections
-    * on MergeTree tables), wired onto the two rewrite rules:
-    *  - `ADD PROJECTION p (SELECT <dims+aggs> GROUP BY dims)` →
-    *    AggProjections.create (precomputed rollup);
-    *  - `ADD PROJECTION p (SELECT * ORDER BY keys)` →
-    *    NormalProjections.create (alternate physical order);
-    *  - MATERIALIZE PROJECTION is a no-op: ADD materializes eagerly here
-    *    (the reference defers the build to a mutation);
-    *  - DROP PROJECTION unregisters and removes the structure. */
-  private def projectionDdl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val add = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+ADD\\s+PROJECTION\\s+" +
-      "(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.*)\\)\\s*;?\\s*$").r
-    val drop = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+DROP\\s+PROJECTION\\s+" +
-      "(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    val mat = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+MATERIALIZE\\s+PROJECTION\\b.*").r
-    stmt.trim match {
-      case add(table, proj, body) =>
-        val basePath = tableLocation(spark, table)
-        val groupBy = "(?is)\\bGROUP\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
-        val orderBy = "(?is)\\bORDER\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
-        if (groupBy.isDefined) {
-          val dims = groupBy.get.group(1).split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq
-          val measures = "(?i)(?:sum|min|max|avg)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r
-            .findAllMatchIn(body).map(_.group(1)).toSeq.distinct
-          val wh = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"),
-            s"graft_projections/${table}_$proj").toString
-          val build = () => graft.plans.AggProjections.create(
-            spark, basePath, wh, dims, measures)
-          build()
-          projections.put((table, proj), ProjEntry(basePath, isAgg = true, build))
-        } else if (orderBy.isDefined) {
-          val keys = orderBy.get.group(1).split(",").map(_.trim)
-            .filter(_.nonEmpty).toSeq
-          val build = () => graft.plans.NormalProjections.create(
-            spark, basePath, s"${table}__proj_$proj", 8, keys)
-          build()
-          projections.put((table, proj), ProjEntry(basePath, isAgg = false, build))
-        } else throw new IllegalArgumentException(
-          "ADD PROJECTION needs a GROUP BY (aggregate) or ORDER BY (normal) body")
-        Seq("OK").toDF("status")
-      case drop(table, proj) =>
-        projections.remove((table, proj)).foreach { e =>
-          if (e.isAgg) graft.plans.AggProjections.drop(e.basePath)
-          else graft.plans.NormalProjections.drop(spark, e.basePath)
-        }
-        Seq("OK").toDF("status")
-      case mat(table) =>
-        // MATERIALIZE PROJECTION forces the rebuild (the reference defers
-        // the build to this mutation; ADD builds eagerly here, so this is
-        // the refresh entry point)
-        refreshProjections(spark, table.trim)
-        Seq("OK").toDF("status")
-      case other => throw new IllegalArgumentException(
-        s"unsupported projection DDL: $other")
-    }
-  }
-
   /** CH type name for DESCRIBE/SHOW CREATE; complex types (arrays, maps)
     * fall back to the Spark DDL spelling the wire codecs don't carry. */
   private def chTypeOrSpark(f: org.apache.spark.sql.types.StructField): String =
@@ -2598,8 +2876,7 @@ object ClickHouseSql {
     installData(actualLoc)
     if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t")
     spark.sql(s"REFRESH TABLE $t")
-    refreshSkipIndexes(spark, t)
-    queryCache.clear()
+    afterWrite(spark, t)
   }
 
   /** Backup ledger entry — feeds system.backups
@@ -2609,86 +2886,6 @@ object ClickHouseSql {
 
   private[graft] val backupLog =
     new java.util.concurrent.ConcurrentLinkedDeque[BackupEntry]()
-
-  /** BACKUP TABLE t TO File('path') / Disk('disk', 'path') and
-    * RESTORE TABLE t FROM … (ParserBackupQuery.h:8-31,
-    * src/Backups/BackupsWorker.cpp): a backup is the table's data dir
-    * copied under the destination plus a schema sidecar; RESTORE
-    * re-creates the table from that copy. Disk('d', 'p') resolves under
-    * /tmp/graft_disks/<d>/<p> — the named-disk analog in an engine whose
-    * storage policy is a filesystem. Synchronous (the reference's
-    * non-ASYNC form); status values match the reference's
-    * BACKUP_CREATED / RESTORED. */
-  private def backupRestore(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val re = ("(?is)^(BACKUP|RESTORE)\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "(?:TO|FROM)\\s+(File|Disk)\\s*\\(\\s*'([^']+)'" +
-      "(?:\\s*,\\s*'([^']+)')?\\s*\\)\\s*;?\\s*$").r
-    stmt.trim match {
-      case re(verb, t, kind, a, b) =>
-        val dest = kind.toLowerCase match {
-          case "file" => a
-          case "disk" =>
-            require(b != null, "Disk('name', 'path') needs both arguments")
-            s"/tmp/graft_disks/$a/$b"
-        }
-        val conf = spark.sparkContext.hadoopConfiguration
-        val destPath = new Path(dest)
-        val fs = destPath.getFileSystem(conf)
-        if (verb.equalsIgnoreCase("BACKUP")) {
-          val loc = tableLocation(spark, t)
-          val meta = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(t))
-          fs.delete(destPath, true)
-          fs.mkdirs(destPath)
-          org.apache.hadoop.fs.FileUtil.copy(fs, new Path(loc), fs,
-            new Path(destPath, "data"), false, true, conf)
-          val managed = meta.tableType ==
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED
-          val sidecar = fs.create(new Path(destPath, "_schema.txt"), true)
-          try sidecar.write((spark.table(t).schema.toDDL + "\n" +
-            meta.partitionColumnNames.mkString(",") + "\n" +
-            loc + "\n" + managed).getBytes("UTF-8"))
-          finally sidecar.close()
-          val sum = fs.getContentSummary(new Path(destPath, "data"))
-          backupLog.addLast(BackupEntry(dest, t, "BACKUP_CREATED",
-            sum.getFileCount, sum.getLength))
-          Seq((dest, "BACKUP_CREATED")).toDF("id", "status")
-        } else {
-          val sidecarPath = new Path(destPath, "_schema.txt")
-          require(fs.exists(sidecarPath), s"no backup at $dest")
-          val in = fs.open(sidecarPath)
-          val text = try {
-            val buf = new Array[Byte](fs.getFileStatus(sidecarPath).getLen.toInt)
-            in.readFully(0, buf)
-            new String(buf, "UTF-8")
-          } finally in.close()
-          val lines = text.split("\n", -1)
-          val ddl = lines(0)
-          val partCols = lines.lift(1).getOrElse("")
-            .split(",").toSeq.filter(_.nonEmpty)
-          // sidecar lines 3/4 (round-9): original location + managed flag;
-          // older backups default to a managed warehouse table
-          val loc = lines.lift(2).filter(_.nonEmpty).getOrElse(
-            new Path(spark.conf.get("spark.sql.warehouse.dir"),
-              t.toLowerCase).toString)
-          val managed = lines.lift(3).forall(_.trim != "false")
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          recreateCatalogEntry(spark, t, ddl, loc, partCols, managed) {
-            actualLoc =>
-              org.apache.hadoop.fs.FileUtil.copy(fs, new Path(destPath, "data"),
-                fs, new Path(actualLoc), false, true, conf)
-              ()
-          }
-          backupLog.addLast(BackupEntry(dest, t, "RESTORED", -1L, -1L))
-          Seq((dest, "RESTORED")).toDF("id", "status")
-        }
-      case _ => throw new IllegalArgumentException(
-        "unsupported BACKUP/RESTORE form (TABLE t TO/FROM File('p') | Disk('d','p'))")
-    }
-  }
 
   /** One refreshable MV's stored definition + schedule (the reference's
     * RefreshTask state: view, target table, SELECT, REFRESH EVERY spec,
@@ -2739,11 +2936,6 @@ object ClickHouseSql {
       m.columns, m.kind)
   }
 
-  /** Invalidate-by-rebuild after a mutation rewrote `table`'s files with
-    * new names (the ADVICE r6 staleness hazard: a registered index over
-    * deleted paths silently empties results). Cleared indexes stay
-    * cleared; a rebuild that fails (e.g. the table is now empty) degrades
-    * to no-pruning, never to wrong answers. */
   // ---- file() table function (TableFunctionFile.cpp) ------------------
 
   private val fileFnRe =
@@ -2763,9 +2955,6 @@ object ClickHouseSql {
 
   private val fileFnCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Replace every `file('path'[, 'Format'[, 'schema']])` call with a
-    * temp view over the matching reader. Formats without self-describing
-    * headers require the schema argument, like the reference. */
   // ---- workloads / resources (ParserCreateWorkloadQuery,
   // ParserCreateResourceQuery; src/Common/Scheduler/) -------------------
   //
@@ -2791,47 +2980,6 @@ object ClickHouseSql {
   private[graft] def workloadExists(name: String): Boolean =
     workloads.contains(name)
 
-  private def workloadDdl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val createW = ("(?is)^CREATE\\s+WORKLOAD\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)(?:\\s+IN\\s+([A-Za-z_][A-Za-z0-9_]*))?" +
-      "(?:\\s+SETTINGS\\s+(.+?))?;?\\s*$").r
-    val dropW = ("(?is)^DROP\\s+WORKLOAD\\s+(IF\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    val createR = ("(?is)^CREATE\\s+RESOURCE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.+?)\\)\\s*;?\\s*$").r
-    val dropR = ("(?is)^DROP\\s+RESOURCE\\s+(IF\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    stmt.trim match {
-      case createW(ifNot, name, parent, settings) =>
-        val parentName = Option(parent).getOrElse("")
-        if (parentName.nonEmpty) require(workloads.contains(parentName),
-          s"CREATE WORKLOAD: parent workload `$parentName` does not exist")
-        if (workloads.putIfAbsent(name,
-            (parentName, Option(settings).getOrElse(""))).isDefined
-          && ifNot == null)
-          throw new IllegalArgumentException(
-            s"workload `$name` already exists")
-        Seq("OK").toDF("status")
-      case dropW(ifEx, name) =>
-        if (workloads.remove(name).isEmpty && ifEx == null)
-          throw new IllegalArgumentException(s"there is no workload `$name`")
-        Seq("OK").toDF("status")
-      case createR(ifNot, name, spec) =>
-        if (resources.putIfAbsent(name, spec.trim).isDefined && ifNot == null)
-          throw new IllegalArgumentException(
-            s"resource `$name` already exists")
-        Seq("OK").toDF("status")
-      case dropR(ifEx, name) =>
-        if (resources.remove(name).isEmpty && ifEx == null)
-          throw new IllegalArgumentException(s"there is no resource `$name`")
-        Seq("OK").toDF("status")
-      case _ => throw new IllegalArgumentException(
-        "unsupported WORKLOAD/RESOURCE form")
-    }
-  }
-
   // ---- named collections (ParserCreateNamedCollectionQuery,
   // ParserAlterNamedCollectionQuery, ParserDropNamedCollectionQuery;
   // storage/NamedCollections*) ------------------------------------------
@@ -2850,56 +2998,6 @@ object ClickHouseSql {
     namedCollections.toSeq.sortBy(_._1).map { case (n, kv) =>
       (n, kv.toSeq.sorted.map { case (k, v) => s"$k = $v" }.mkString(", "))
     }
-
-  private def namedCollectionDdl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    def parseKv(text: String): Map[String, String] =
-      SqlLex.splitTop(text).map { kv =>
-        val Array(k, v) = kv.split("=", 2).map(_.trim)
-        // OVERRIDABLE flags are accepted + dropped (no override layer
-        // on a single-session engine)
-        k -> v.replaceAll("(?is)\\s+(NOT\\s+)?OVERRIDABLE$", "")
-          .stripPrefix("'").stripSuffix("'")
-      }.toMap
-    val create = ("(?is)^CREATE\\s+NAMED\\s+COLLECTION\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s+AS\\s+" +
-      "(.+?);?\\s*$").r
-    val alter = ("(?is)^ALTER\\s+NAMED\\s+COLLECTION\\s+" +
-      "(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s+" +
-      "(SET|DELETE)\\s+(.+?);?\\s*$").r
-    val drop = ("(?is)^DROP\\s+NAMED\\s+COLLECTION\\s+" +
-      "(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    stmt.trim match {
-      case create(ifNot, name, kvs) =>
-        if (namedCollections.putIfAbsent(name, parseKv(kvs)).isDefined
-            && ifNot == null)
-          throw new IllegalArgumentException(
-            s"named collection `$name` already exists")
-        Seq("OK").toDF("status")
-      case alter(ifEx, name, verb, rest) =>
-        namedCollections.get(name) match {
-          case None =>
-            if (ifEx == null) throw new IllegalArgumentException(
-              s"there is no named collection `$name`")
-          case Some(cur) =>
-            val next =
-              if (verb.equalsIgnoreCase("SET")) cur ++ parseKv(rest)
-              else cur -- rest.split(",").map(_.trim).filter(_.nonEmpty)
-            namedCollections.put(name, next)
-        }
-        Seq("OK").toDF("status")
-      case drop(ifEx, name) =>
-        if (namedCollections.remove(name).isEmpty && ifEx == null)
-          throw new IllegalArgumentException(
-            s"there is no named collection `$name`")
-        Seq("OK").toDF("status")
-      case s if s.matches("(?is)^SHOW\\s+NAMED\\s+COLLECTIONS\\s*;?\\s*$") =>
-        listNamedCollections.map(_._1).toDF("name")
-      case _ => throw new IllegalArgumentException(
-        "unsupported NAMED COLLECTION form")
-    }
-  }
 
   /** `file(nc_name)` with a named collection: substitute the
     * collection's path/format/structure keys into the literal file()
@@ -3015,6 +3113,9 @@ object ClickHouseSql {
     }
   }
 
+  /** Replace every `file('path'[, 'Format'[, 'schema']])` call with a
+    * temp view over the matching reader. Formats without self-describing
+    * headers require the schema argument, like the reference. */
   private def resolveFileFn(spark: SparkSession, sql0: String): String =
     fileFnRe.replaceAllIn(sql0, m => {
       val path = m.group(1)
@@ -3330,333 +3431,11 @@ object ClickHouseSql {
   private val ttlSpecs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** ALTER TABLE t MODIFY TTL col + INTERVAL n unit [DELETE] /
-    * ALTER TABLE t MATERIALIZE TTL — the reference's table-TTL DDL
-    * (src/Storages/TTLDescription.cpp; TTLTransform applies at merge,
-    * MATERIALIZE TTL forces a mutation). MODIFY stores the expression;
-    * MATERIALIZE rewrites the table keeping rows whose TTL instant is
-    * still in the future — the same part-rewrite path as every other
-    * mutation, ledger entry included. */
-  private def alterTtl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val modify = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+MODIFY\\s+TTL\\s+" +
-      "(.+?)(?:\\s+DELETE)?\\s*;?\\s*$").r
-    val mat = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MATERIALIZE\\s+TTL\\s*;?\\s*$").r
-    stmt.trim match {
-      case mat(t) =>
-        val ttl = ttlSpecs.getOrElse(t, throw new IllegalArgumentException(
-          s"MATERIALIZE TTL: no TTL stored for $t (run MODIFY TTL first)"))
-        val keep = org.apache.spark.sql.functions.expr(
-          s"($ttl) >= current_timestamp()")
-        val surviving = spark.table(t).filter(keep)
-        // affected = rows that EXPIRE (keep false or null); partitions
-        // with nothing expired keep their files untouched
-        graft.operators.DurableRewrite.rewrite(spark, t, surviving,
-          Some(org.apache.spark.sql.functions.not(
-            org.apache.spark.sql.functions.coalesce(
-              keep, org.apache.spark.sql.functions.lit(false)))))
-        refreshSkipIndexes(spark, t)
-        queryCache.clear()
-        logMutation(t, stmt.trim)
-        Seq("OK").toDF("status")
-      case modify(t, ttlExpr) =>
-        require(spark.catalog.tableExists(t), s"no such table $t")
-        ttlSpecs.put(t, rewrite(ttlExpr.trim))
-        Seq("OK").toDF("status")
-      case _ => throw new IllegalArgumentException("unsupported TTL form")
-    }
-  }
-
-  /** ALTER TABLE t DETACH / ATTACH / DROP / FREEZE PARTITION 'v' — the
-    * statement forms of the partition lifecycle
-    * (src/Parsers/ParserAlterQuery.cpp partition commands), routed to
-    * the O(1) directory operations in [[graft.operators.ScaleOps]] with
-    * the Spark catalog kept in sync (ADD/DROP PARTITION) and the file
-    * listing refreshed. Single-partition-column tables (the layout the
-    * CREATE TABLE dialect produces). */
-  private def alterPartition(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    /** One partition column, or fail — the layout every partition verb
-      * operates on. */
-    def onePartCol(t: String): String = {
-      val pcols = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)).partitionColumnNames
-      require(pcols.size == 1,
-        s"ALTER PARTITION needs exactly one partition column, $t has $pcols")
-      pcols.head
-    }
-    def invalidate(t: String, pcol: String, value: String,
-        admitted: Boolean): Unit = {
-      if (admitted)
-        spark.sql(s"ALTER TABLE $t ADD IF NOT EXISTS PARTITION ($pcol = '$value')")
-      else
-        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($pcol = '$value')")
-      spark.sql(s"REFRESH TABLE $t")
-      refreshSkipIndexes(spark, t)
-    }
-    // the round-9 ETL verbs (PartitionCommands.h:26-35 REPLACE_PARTITION /
-    // MOVE_PARTITION / FETCH_PARTITION): staging-swap, cross-table move,
-    // and replica-fetch-into-detached
-    val replace = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "REPLACE\\s+PARTITION\\s+'?([^'\\s;]+)'?\\s+FROM\\s+" +
-      "([A-Za-z_][A-Za-z0-9_.]*)\\s*;?\\s*$").r
-    val move = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MOVE\\s+PARTITION\\s+'?([^'\\s;]+)'?\\s+TO\\s+TABLE\\s+" +
-      "([A-Za-z_][A-Za-z0-9_.]*)\\s*;?\\s*$").r
-    val fetch = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "FETCH\\s+PARTITION\\s+'?([^'\\s;]+)'?\\s+FROM\\s+" +
-      "'?([^'\\s;]+)'?\\s*;?\\s*$").r
-    val re = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "(DETACH|ATTACH|DROP|FREEZE)\\s+PARTITION\\s+'?([^'\\s;]+)'?" +
-      "(?:\\s+WITH\\s+NAME\\s+'([^']*)')?\\s*;?\\s*$").r
-    stmt.trim match {
-      case replace(dst, value, src) =>
-        val pcol = onePartCol(dst)
-        require(onePartCol(src) == pcol,
-          s"REPLACE PARTITION: $src and $dst partition on different columns")
-        require(graft.operators.ScaleOps.replacePartition(spark,
-            tableLocation(spark, dst), tableLocation(spark, src), pcol, value),
-          s"REPLACE PARTITION: $src has no partition $pcol=$value")
-        invalidate(dst, pcol, value, admitted = true)
-        graft.sources.SystemTables.PartLogLedger
-          .record("NewPart", dst, s"$pcol=$value")
-        queryCache.clear()
-        return Seq("OK").toDF("status")
-      case move(src, value, dst) =>
-        val pcol = onePartCol(src)
-        require(onePartCol(dst) == pcol,
-          s"MOVE PARTITION: $src and $dst partition on different columns")
-        require(graft.operators.ScaleOps.movePartition(spark,
-            tableLocation(spark, src), tableLocation(spark, dst), pcol, value),
-          s"MOVE PARTITION: $src has no partition $pcol=$value")
-        invalidate(src, pcol, value, admitted = false)
-        invalidate(dst, pcol, value, admitted = true)
-        graft.sources.SystemTables.PartLogLedger
-          .record("RemovePart", src, s"$pcol=$value")
-        graft.sources.SystemTables.PartLogLedger
-          .record("MovePart", dst, s"$pcol=$value")
-        queryCache.clear()
-        return Seq("OK").toDF("status")
-      case fetch(dst, value, from) =>
-        val pcol = onePartCol(dst)
-        // `from` is a layout path in quotes or a catalog table name — the
-        // reference takes a replica path; any readable layout serves here
-        val srcPath =
-          if (spark.catalog.tableExists(from)) tableLocation(spark, from)
-          else from
-        require(graft.operators.ScaleOps.fetchPartition(spark,
-            tableLocation(spark, dst), srcPath, pcol, value),
-          s"FETCH PARTITION: $srcPath has no partition $pcol=$value")
-        // fetched data sits in _detached — invisible until ATTACH, so no
-        // catalog change and no cache invalidation yet
-        graft.sources.SystemTables.PartLogLedger
-          .record("DownloadPart", dst, s"_detached/$pcol=$value")
-        return Seq("OK").toDF("status")
-      case _ =>
-    }
-    stmt.trim match {
-      case re(t, verb, value, snap) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t))
-        val pcols = meta.partitionColumnNames
-        require(pcols.size == 1,
-          s"ALTER PARTITION needs exactly one partition column, $t has $pcols")
-        val pcol = pcols.head
-        val loc = tableLocation(spark, t)
-        val ops = graft.operators.ScaleOps
-        verb.toUpperCase match {
-          case "DROP" =>
-            spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($pcol = '$value')")
-            ops.dropPartition(spark, loc, pcol, value)
-            graft.sources.SystemTables.PartLogLedger
-              .record("RemovePart", t, s"$pcol=$value")
-          case "DETACH" =>
-            ops.detachPartition(spark, loc, pcol, value)
-            spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($pcol = '$value')")
-            graft.sources.SystemTables.PartLogLedger
-              .record("RemovePart", t, s"$pcol=$value")
-          case "ATTACH" =>
-            ops.attachPartition(spark, loc, pcol, value)
-            spark.sql(s"ALTER TABLE $t ADD IF NOT EXISTS PARTITION ($pcol = '$value')")
-            graft.sources.SystemTables.PartLogLedger
-              .record("NewPart", t, s"$pcol=$value")
-          case "FREEZE" =>
-            ops.freezePartition(spark, loc, pcol, value,
-              Option(snap).getOrElse("default"))
-        }
-        spark.sql(s"REFRESH TABLE $t")
-        if (verb.toUpperCase != "FREEZE") {
-          refreshSkipIndexes(spark, t)
-          queryCache.clear()
-        }
-        Seq("OK").toDF("status")
-      case _ => throw new IllegalArgumentException(
-        "unsupported ALTER PARTITION form")
-    }
-  }
-
-  /** ALTER TABLE t UPDATE a = e, … WHERE p / ALTER TABLE t DELETE WHERE p
-    * — the reference's canonical mutation statements
-    * (src/Interpreters/MutationsInterpreter.h:44, ParserAlterQuery): the
-    * declarative transform comes from [[graft.operators.Mutations]] and
-    * the part rewrite goes through [[graft.operators.DurableRewrite]] —
-    * staged durably on disk, pruned to partitions containing WHERE
-    * matches (only parts with matching rows rewrite, the reference's
-    * MutationsInterpreter contract) — with skip-index rebuild +
-    * result-cache invalidation like every other mutation path. */
-  private def alterMutation(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.expr
-    val upd = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+UPDATE\\s+" +
-      "(.+?)\\s+WHERE\\s+(.+?);?\\s*$").r
-    val del = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+DELETE\\s+" +
-      "WHERE\\s+(.+?);?\\s*$").r
-    stmt.trim match {
-      case upd(t, assigns, pred) =>
-        val kv = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
-        val asn = SqlLex.splitTop(assigns).map {
-          case kv(c, e) => c -> expr(rewrite(e))
-          case other => throw new IllegalArgumentException(
-            s"unparsable UPDATE assignment '$other'")
-        }.toMap
-        // the reference forbids mutating key columns
-        // (MutationsInterpreter: "Cannot UPDATE key column") — and the
-        // pruned part rewrite depends on rows never changing partition
-        val pkCols = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t))
-          .partitionColumnNames.map(_.toLowerCase).toSet
-        asn.keys.find(c => pkCols.contains(c.toLowerCase)).foreach(c =>
-          throw new IllegalArgumentException(
-            s"Cannot UPDATE key column `$c` (it is a partition column of $t)"))
-        val mutated = graft.operators.Mutations
-          .update(spark.table(t), expr(rewrite(pred)), asn)
-        graft.operators.DurableRewrite.rewrite(spark, t, mutated,
-          Some(expr(rewrite(pred))))
-        refreshSkipIndexes(spark, t)
-        queryCache.clear()
-        logMutation(t, stmt.trim)
-        Seq("OK").toDF("status")
-      case del(t, pred) =>
-        val surviving = graft.operators.Mutations
-          .delete(spark.table(t), expr(rewrite(pred)))
-        graft.operators.DurableRewrite.rewrite(spark, t, surviving,
-          Some(expr(rewrite(pred))))
-        refreshSkipIndexes(spark, t)
-        queryCache.clear()
-        logMutation(t, stmt.trim)
-        Seq("OK").toDF("status")
-      case _ => throw new IllegalArgumentException(
-        "unsupported ALTER mutation form")
-    }
-  }
-
-  /** ALTER TABLE t ADD / DROP / MODIFY / RENAME COLUMN — the most common
-    * schema-evolution DDL (src/Storages/AlterCommands.cpp: ADD_COLUMN /
-    * DROP_COLUMN / MODIFY_COLUMN / RENAME_COLUMN). On the parquet layout
-    * every verb is a part rewrite with the transformed schema:
-    *   ADD    = append the column (DEFAULT expr backfills, else NULL),
-    *            honoring FIRST / AFTER position clauses;
-    *   DROP   = projection without the column;
-    *   MODIFY = cast rewrite to the new type;
-    *   RENAME = column-map rewrite.
-    * The table is re-created with the new schema (partition columns
-    * preserved); indexes rebuild and the result cache clears, as for any
-    * mutation. */
-  private def alterColumnDdl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, lit}
-    val add = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+ADD\\s+COLUMN\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+(.+?)" +
-      "(?:\\s+DEFAULT\\s+(.+?))?(?:\\s+(FIRST)|\\s+AFTER\\s+`?([A-Za-z_][A-Za-z0-9_]*)`?)?;?\\s*$").r
-    val drop = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+DROP\\s+COLUMN\\s+" +
-      "(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?;?\\s*$").r
-    val modify = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+MODIFY\\s+COLUMN\\s+" +
-      "(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+(.+?);?\\s*$").r
-    val ren = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+RENAME\\s+COLUMN\\s+" +
-      "(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+TO\\s+`?([A-Za-z_][A-Za-z0-9_]*)`?;?\\s*$").r
-
-    /** Rewrite `t`'s data with the transformed frame and the NEW schema
-      * (insertInto can't change schemas): the shared stage-then-swap
-      * replace (graft.operators.DurableRewrite.replaceTable) — the
-      * transformed copy is durable on disk before the drop + re-create,
-      * partitioning and the managed/external distinction preserved. */
-    def rewriteTable(t: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      graft.operators.DurableRewrite.replaceTable(spark, t, df)
-      refreshSkipIndexes(spark, t)
-      queryCache.clear()
-    }
-    /** The column order a positional INSERT into `t` binds to. */
-    def declared(t: String): Seq[String] =
-      declaredOrder(spark, t).getOrElse(spark.table(t).columns.toSeq)
-
-    stmt.trim match {
-      case add(t, ifNot, name, ctype, dflt, first, after) =>
-        val base = spark.table(t)
-        if (base.columns.contains(name)) {
-          if (ifNot == null) throw new IllegalArgumentException(
-            s"column $name already exists in $t")
-        } else {
-          val st = sparkTypeText(ctype.trim)
-          val value = Option(dflt)
-            .map(d => expr(rewrite(d)).cast(st))
-            .getOrElse(lit(null).cast(st))
-          val withCol = base.withColumn(name, value)
-          val before = declared(t)
-          val order: Seq[String] =
-            if (first != null) name +: before
-            else if (after != null) {
-              val i = before.indexOf(after)
-              if (i < 0) throw new IllegalArgumentException(
-                s"AFTER column $after not found in $t")
-              val (pre, post) = before.splitAt(i + 1)
-              pre ++ (name +: post)
-            } else before :+ name
-          rewriteTable(t, withCol.select(order.map(col): _*))
-          redeclare(spark, t, order)
-        }
-        Seq("OK").toDF("status")
-      case drop(t, ifEx, name) =>
-        val base = spark.table(t)
-        if (!base.columns.contains(name)) {
-          if (ifEx == null) throw new IllegalArgumentException(
-            s"column $name does not exist in $t")
-        } else {
-          val before = declared(t)
-          rewriteTable(t, base.drop(name))
-          redeclare(spark, t, before.filterNot(_ == name))
-        }
-        Seq("OK").toDF("status")
-      case modify(t, ifEx, name, ctype) =>
-        val base = spark.table(t)
-        if (!base.columns.contains(name)) {
-          if (ifEx == null) throw new IllegalArgumentException(
-            s"column $name does not exist in $t")
-        } else {
-          val st = sparkTypeText(ctype.trim)
-          rewriteTable(t, base.withColumn(name, col(name).cast(st)))
-        }
-        Seq("OK").toDF("status")
-      case ren(t, ifEx, from, to) =>
-        val base = spark.table(t)
-        if (!base.columns.contains(from)) {
-          if (ifEx == null) throw new IllegalArgumentException(
-            s"column $from does not exist in $t")
-        } else {
-          val before = declared(t)
-          rewriteTable(t, base.withColumnRenamed(from, to))
-          redeclare(spark, t, before.map(c => if (c == from) to else c))
-        }
-        Seq("OK").toDF("status")
-      case _ => throw new IllegalArgumentException(
-        "unsupported ALTER COLUMN form")
-    }
-  }
-
+  /** Invalidate-by-rebuild after a mutation rewrote `table`'s files with
+    * new names (the ADVICE r6 staleness hazard: a registered index over
+    * deleted paths silently empties results). Cleared indexes stay
+    * cleared; a rebuild that fails (e.g. the table is now empty) degrades
+    * to no-pruning, never to wrong answers. */
   private def refreshSkipIndexes(spark: SparkSession, table: String): Unit = {
     import scala.jdk.CollectionConverters._
     skipIndexes.asScala.values.filter(m => m.table == table && !m.cleared)
@@ -3687,64 +3466,6 @@ object ClickHouseSql {
         }
       }
     }
-
-  private def indexDdl(spark: SparkSession, stmt: String)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val add = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+ADD\\s+INDEX\\s+" +
-      "(?:IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s+(.+?)\\s+TYPE\\s+" +
-      "([A-Za-z_0-9]+)(?:\\s*\\(\\s*(\\d+)[^)]*\\))?(?:\\s+GRANULARITY\\s+\\d+)?\\s*;?\\s*$").r
-    val drop = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+DROP\\s+INDEX\\s+" +
-      "(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    val clear = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+CLEAR\\s+INDEX\\s+" +
-      "(?:IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    val mat = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+MATERIALIZE\\s+INDEX\\s+" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*;?\\s*$").r
-    stmt.trim match {
-      case add(table, name, colSpec, kind0, param) =>
-        val basePath = tableLocation(spark, table)
-        val cols = colSpec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val idxDir = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"),
-          s"graft_skip_indexes/${table}_$name").toString
-        val kind = kind0.toLowerCase
-        if (!Set("bloom_filter", "minmax", "ngrambf_v1", "set").contains(kind))
-          throw new IllegalArgumentException(
-            s"unsupported skip-index type $kind (bloom_filter|minmax|ngrambf_v1|set)")
-        val m = SkipIdx(table, name, basePath, kind, idxDir, cols,
-          Option(param).map(_.toInt), cleared = false)
-        buildSkipIndex(spark, m)
-        skipIndexes.put((table, name), m)
-        Seq("OK").toDF("status")
-      case drop(table, name) =>
-        Option(skipIndexes.remove((table, name))).foreach { m =>
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
-        }
-        Seq("OK").toDF("status")
-      case clear(table, name) =>
-        // CLEAR INDEX: drop the BUILT structure and stop pruning, but keep
-        // the index declared (system.data_skipping_indices still lists it)
-        // so MATERIALIZE INDEX can rebuild it.
-        skipIndexes.computeIfPresent((table, name), (_, m) => {
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
-          m.copy(cleared = true)
-        })
-        Seq("OK").toDF("status")
-      case mat(table, name) =>
-        // MATERIALIZE INDEX: rebuild from the table's current files (and
-        // un-clear a cleared index) — the reference's mutation that
-        // populates the index for existing parts.
-        skipIndexes.computeIfPresent((table, name), (_, m) => {
-          buildSkipIndex(spark, m)
-          m.copy(cleared = false)
-        })
-        Seq("OK").toDF("status")
-      case other => throw new IllegalArgumentException(
-        s"unsupported index DDL: $other")
-    }
-  }
 
   // ---- DDL translation (ParserCreateQuery → Spark DDL) ----------------
 
@@ -3861,95 +3582,6 @@ object ClickHouseSql {
     }
   }
 
-  /** ALTER TABLE t MODIFY ORDER BY / MODIFY SAMPLE BY / REMOVE SAMPLE BY
-    * / MODIFY COMMENT / COMMENT COLUMN / MATERIALIZE COLUMN
-    * (AlterCommands.h MODIFY_ORDER_BY, MODIFY_SAMPLE_BY, COMMENT_COLUMN,
-    * COMMENT_TABLE, MATERIALIZE_COLUMN): property updates on the engine
-    * metadata ledger — SHOW CREATE reflects them — plus the MATERIALIZE
-    * COLUMN part rewrite, which fills the column's NULL lanes with its
-    * recorded DEFAULT expression through the durable pruned rewrite (a
-    * part with nothing to materialize is never touched). */
-  private def alterMeta(spark: SparkSession, stmt: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr, when}
-    val modOrder = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MODIFY\\s+ORDER\\s+BY\\s+(.+?);?\\s*$").r
-    val modSample = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MODIFY\\s+SAMPLE\\s+BY\\s+(.+?);?\\s*$").r
-    val rmSample = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "REMOVE\\s+SAMPLE\\s+BY\\s*;?\\s*$").r
-    val modComment = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MODIFY\\s+COMMENT\\s+'([^']*)'\\s*;?\\s*$").r
-    val colComment = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "COMMENT\\s+COLUMN\\s+(IF\\s+EXISTS\\s+)?`?([A-Za-z_][A-Za-z0-9_]*)`?" +
-      "\\s+'([^']*)'\\s*;?\\s*$").r
-    val matCol = ("(?is)^ALTER\\s+TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "MATERIALIZE\\s+COLUMN\\s+`?([A-Za-z_][A-Za-z0-9_]*)`?" +
-      "(?:\\s+IN\\s+PARTITION\\s+'?([^'\\s;]+)'?)?\\s*;?\\s*$").r
-    def upd(t: String)(f: EngineMeta => EngineMeta): Unit = {
-      require(spark.catalog.tableExists(t), s"no such table $t")
-      engineMeta.put(t, f(engineMetaOf(t)))
-    }
-    stmt.trim match {
-      case modOrder(t, expr0) =>
-        // reference contract: the sorting key may only reference existing
-        // columns (AlterCommands::apply validates the expression)
-        val cols = spark.table(t).columns.map(_.toLowerCase).toSet
-        "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(expr0)
-          .filterNot(w => Set("tuple").contains(w.toLowerCase))
-          .foreach(w => require(cols.contains(w.toLowerCase),
-            s"MODIFY ORDER BY references unknown column `$w`"))
-        upd(t)(_.copy(orderBy = Some(rewrite(expr0.trim))))
-        Seq("OK").toDF("status")
-      case modSample(t, expr0) =>
-        upd(t)(_.copy(sampleBy = Some(rewrite(expr0.trim))))
-        Seq("OK").toDF("status")
-      case rmSample(t) =>
-        upd(t)(_.copy(sampleBy = None))
-        Seq("OK").toDF("status")
-      case modComment(t, c) =>
-        upd(t)(_.copy(comment = Some(c)))
-        Seq("OK").toDF("status")
-      case colComment(t, ifEx, c, txt) =>
-        if (!spark.table(t).columns.contains(c)) {
-          if (ifEx == null) throw new IllegalArgumentException(
-            s"column $c does not exist in $t")
-        } else upd(t)(em => em.copy(colComments = em.colComments + (c -> txt)))
-        Seq("OK").toDF("status")
-      case matCol(t, c, pval) =>
-        require(spark.table(t).columns.contains(c),
-          s"column $c does not exist in $t")
-        engineMetaOf(t).colDefaults.get(c) match {
-          case None => // nothing recorded to materialize — reference
-            // semantics degrade to a no-op on an expressionless column
-            Seq("OK").toDF("status")
-          case Some(dflt) =>
-            val dt = spark.table(t).schema(c).dataType
-            val partCond = Option(pval).map { v =>
-              val pcols = spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(t))
-                .partitionColumnNames
-              require(pcols.size == 1,
-                s"MATERIALIZE COLUMN IN PARTITION needs one partition " +
-                  s"column, $t has $pcols")
-              col(pcols.head) === v
-            }
-            val hole = col(c).isNull
-            val affected = partCond.fold(hole)(_ && hole)
-            val mutated = spark.table(t).withColumn(c,
-              when(affected, expr(rewrite(dflt)).cast(dt)).otherwise(col(c)))
-            graft.operators.DurableRewrite.rewrite(spark, t, mutated,
-              Some(affected))
-            refreshSkipIndexes(spark, t)
-            queryCache.clear()
-            logMutation(t, stmt.trim)
-            Seq("OK").toDF("status")
-        }
-      case _ => throw new IllegalArgumentException(
-        "unsupported ALTER metadata form")
-    }
-  }
-
   /** `CREATE TABLE [IF NOT EXISTS] t (cols…) ENGINE = X [ORDER BY …]
     * [PARTITION BY col] [SETTINGS …]` → `CREATE TABLE … USING parquet
     * [PARTITIONED BY (col)]`. Engine choice, ORDER BY (PK) and TTL are
@@ -4001,6 +3633,10 @@ object ClickHouseSql {
       Some(order).filter(_ != cur)
     }
   }
+
+  /** The column order a positional INSERT into `t` binds to. */
+  private def declaredColumns(spark: SparkSession, t: String): Seq[String] =
+    declaredOrder(spark, t).getOrElse(spark.table(t).columns.toSeq)
 
   /** Records `cols` as `t`'s declared column order after an ALTER that
     * added, dropped or renamed a column. */

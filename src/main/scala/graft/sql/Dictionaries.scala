@@ -83,9 +83,6 @@ object Dictionaries {
       "SOURCE\\s*\\(\\s*\\w+\\s*\\(.*?TABLE\\s+'([A-Za-z_][A-Za-z0-9_.]*)'.*?\\)\\s*\\)" +
       ".*$").r
 
-  def matches(stmt: String): Boolean =
-    stmt.trim.matches("(?is)^(CREATE|DROP)\\s+DICTIONARY\\b.*")
-
   /** Handle CREATE/DROP DICTIONARY; returns a 1-row status frame. */
   def execute(spark: SparkSession, stmt0: String): DataFrame = {
     val stmt = stmt0.trim

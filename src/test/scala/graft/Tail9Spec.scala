@@ -139,6 +139,18 @@ class Tail9Spec extends SparkFunSuite {
     }
   }
 
+  test("parametric aggregates take DECIMAL literals, ClickHouse's own spelling") {
+    // 0.01 and 3600.0 parse as DECIMAL, not DOUBLE
+    val r = one("""SELECT quantilesDD(0.01, 0.5)(x) AS qs,
+        quantileDD(0.01, 0.5)(x) AS q
+      FROM (SELECT CAST(id AS DOUBLE) AS x FROM range(1, 1001))""")
+    assert(r.getSeq[Double](0) == Seq(r.getDouble(1)))
+    val wf = one("""SELECT windowFunnel(3600.0)(ts, ev = 'view', ev = 'buy')
+      FROM (VALUES (TIMESTAMP '2024-01-01 10:00:00', 'view'),
+                   (TIMESTAMP '2024-01-01 10:20:00', 'buy')) AS t(ts, ev)""")
+    assert(wf.getInt(0) == 2)
+  }
+
   test("t tests match published critical values; rankCorr is Spearman") {
     // two samples with known t: sample0 = {1,2,3,4,5}, sample1 = {3,4,5,6,7}
     // pooled t = -2 / sqrt(2.5 * 0.4) = -2.0, df = 8 → p ≈ 0.0805
