@@ -34,7 +34,7 @@ object Tables {
     * not per-catalog — src/Interpreters/DatabaseCatalog.cpp load loop).
     */
   def register(spark: SparkSession, dir: String): Unit = {
-    graft.plans.RangeWindowSort.install(spark)
+    graft.plans.Rules.install(spark)
     val sessionKey = spark.sparkContext.applicationId + "#" + spark.hashCode()
     if (!lastDir.get(sessionKey).contains(dir)) {
       val failures = names.flatMap { n =>

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * src/Processors/QueryPlan/Optimizations/optimizeUseAggregateProjections.cpp,
   * optimizer pass list Optimizations.h:160). Spark rendering: `create`
   * materializes `GROUP BY dims` partials (count / sum / min / max) to
-  * parquet, and a `Rule[LogicalPlan]` installed via
-  * `spark.experimental.extraOptimizations` rewrites any later Aggregate
-  * over the BASE scan whose grouping is a subset of `dims` and whose
+  * parquet, and a `Rule[LogicalPlan]` (installed with the others by
+  * [[Rules.install]]) rewrites any later Aggregate over the BASE scan
+  * whose grouping is a subset of `dims` and whose
   * aggregates are re-derivable (count(*), sum, min, max, avg) into a
   * re-aggregation of the projection — same answers, touching rollup-sized
   * data instead of the fact table. At 100 TB this is the difference
@@ -61,23 +61,10 @@ object AggProjections {
       .write.mode("overwrite").parquet(projPath)
     registry.put(canon(baseParquetPath),
       Proj(canon(baseParquetPath), projPath, dims.toSet, measures.toSet))
-    install(spark)
   }
 
   def drop(baseParquetPath: String): Unit =
     registry.remove(canon(baseParquetPath))
-
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!installed.contains(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRule(spark)
-      installed.add(spark)
-    }
-  }
 
   /** Scan-path extractor: a bare parquet relation or a pruning Project
     * over one. Returns the matching projection, if registered. */

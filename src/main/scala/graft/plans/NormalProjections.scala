@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions.col
   *   - outputOrdering = keys (one sorted file per bucket) → sort-merge
   *     operations need NO Sort — Spark's literal read-in-order.
   *
-  * `create` materializes the layout; the installed Rule rewrites any
+  * `create` materializes the layout; the Rule ([[Rules]]) rewrites any
   * later Aggregate over the BASE parquet scan whose grouping contains the
   * projection keys onto the projection table. Pure layout substitution:
   * same rows, same answers (oracled in q_projection_normal), different
@@ -70,24 +70,11 @@ object NormalProjections {
     registry.put(canon(baseParquetPath),
       NProj(canon(baseParquetPath), table, keys,
         projected.columns.toSet))
-    install(spark)
   }
 
   def drop(spark: SparkSession, baseParquetPath: String): Unit = {
     Option(registry.remove(canon(baseParquetPath)))
       .foreach(p => spark.sql(s"DROP TABLE IF EXISTS ${p.table}"))
-  }
-
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!installed.contains(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRule(spark)
-      installed.add(spark)
-    }
   }
 
   private def baseScan(plan: LogicalPlan): Option[NProj] = plan match {

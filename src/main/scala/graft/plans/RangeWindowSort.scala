@@ -37,18 +37,6 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   */
 object RangeWindowSort {
 
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!installed.contains(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SortRule
-      installed.add(spark)
-    }
-  }
-
   object SortRule extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
       // a Sort under a limit plans as TakeOrderedAndProject, with no range

@@ -1,0 +1,50 @@
+package graft.plans
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+
+/** The engine's optimizer rules, installed together in one fixed order
+  * (the reference runs its plan optimizations as one ordered pass list,
+  * QueryPlan::optimizeTree). Spark runs `extraOptimizations` as one
+  * fixed-point batch after its own, applying the rules in list order on
+  * every iteration, so when two rules match the same subtree the earlier
+  * one decides. The order:
+  *  1. [[TrivialCount]]: a bare count/min/max answers from parquet
+  *     footers, with no scan at all, before any rule below turns that
+  *     Aggregate into a read of something else.
+  *  2. [[AggProjections]]: an Aggregate over a (dim-filtered) base scan
+  *     re-aggregates the rollup. It runs before the two rules that swap
+  *     the base scan: once the scan reads the sorted copy or a pruned
+  *     file list, its root is no longer the registered base path and the
+  *     rollup, the smallest read, is lost.
+  *  3. [[NormalProjections]]: an Aggregate directly over a base scan reads
+  *     the bucketed copy instead (no shuffle for its grouping).
+  *  4. [[SkipIndexPruning]]: a Filter over a base scan reads only the
+  *     files the skip indexes admit. It matches Filters, which the two
+  *     projection rules only consume from above an Aggregate, so running
+  *     it after them changes no plan either of them can take.
+  *  5. [[RangeWindowSort]]: moves an exchange above whatever scan the
+  *     rules before it chose; it changes no scan, so it goes last.
+  * The three layout rules return at once while their registries are
+  * empty, so a session without projections or skip indexes pays nothing
+  * for them. */
+object Rules {
+
+  /** The rules for `spark`, in the order they run. */
+  def of(spark: SparkSession): Seq[Rule[LogicalPlan]] = Seq(
+    TrivialCount.CountRule(spark),
+    AggProjections.RewriteRule(spark),
+    NormalProjections.RewriteRule(spark),
+    SkipIndexPruning.PruneRule(spark),
+    RangeWindowSort.SortRule)
+
+  /** Appends the rules to the session's optimizer unless it already has
+    * them (a rule equals its own kind for the same session). */
+  def install(spark: SparkSession): Unit = synchronized {
+    val rules = of(spark)
+    val current = spark.experimental.extraOptimizations
+    if (!current.exists(rules.contains))
+      spark.experimental.extraOptimizations = current ++ rules
+  }
+}

@@ -54,7 +54,7 @@ object SkipIndexPruning {
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   /** Register an index built with the matching [[SkipIndex]] builder for
-    * transparent use and install the rule. `kind` ∈ bloom_filter | minmax
+    * transparent use by the rule ([[Rules]]). `kind` ∈ bloom_filter | minmax
     * | set | ngrambf_v1. */
   def register(spark: SparkSession, dataDir: String, indexDir: String,
       columns: Seq[String], kind: String = "bloom_filter"): Unit = {
@@ -62,7 +62,6 @@ object SkipIndexPruning {
     val idx = Idx(key, kind, indexDir, columns.toSet)
     registry.merge(key, List(idx),
       (old, _) => idx :: old.filterNot(_.indexDir == idx.indexDir))
-    install(spark)
   }
 
   /** Unregister every index over the data dir. */
@@ -96,18 +95,6 @@ object SkipIndexPruning {
   def lastDecisions: Seq[Decision] = {
     import scala.jdk.CollectionConverters._
     decisions.iterator().asScala.toSeq
-  }
-
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!installed.contains(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneRule(spark)
-      installed.add(spark)
-    }
   }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {

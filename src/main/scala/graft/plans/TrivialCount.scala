@@ -36,18 +36,6 @@ import org.apache.spark.sql.types.{DateType, IntegerType, LongType, TimestampNTZ
   */
 object TrivialCount {
 
-  private val installed =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean])
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!installed.contains(spark)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ CountRule(spark)
-      installed.add(spark)
-    }
-  }
-
   private sealed trait Want
   private case object WantCount extends Want
   private final case class WantMin(column: String) extends Want

@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import Lane.{lane, maybe, reject}
 
 /** Access-control statement surface + enforcement — the reference's
   * RBAC (src/Access/AccessControl.h, src/Parsers/Access/
@@ -145,15 +146,6 @@ object AccessControl {
       .sortBy(_._1)
   }
 
-  /** The statements `execute` serves: users, roles, row policies,
-    * quotas, settings profiles, grants and their SHOW forms. */
-  val statement: scala.util.matching.Regex = ("(?is)^(?:(?:CREATE|DROP|ALTER)" +
-    "\\s+(?:USER|ROLE|ROW\\s+POLICY|QUOTA|SETTINGS\\s+PROFILE)|GRANT|REVOKE|" +
-    "SET\\s+(?:DEFAULT\\s+)?ROLE|CHECK\\s+GRANT|SHOW\\s+(?:GRANTS|QUOTAS|" +
-    "SETTINGS\\s+PROFILES|USERS|ROLES|ROW\\s+POLICIES|CURRENT\\s+ROLES|" +
-    "ENABLED\\s+ROLES)|SHOW\\s+CREATE\\s+(?:QUOTA|SETTINGS\\s+PROFILE|USER|" +
-    "ROLE|ROW\\s+POLICY))\\b.*").r
-
   // ---- quotas (ParserCreateQuotaQuery.cpp, QuotaCache.cpp) ------------
 
   /** One quota: interval-windowed limits on per-user statement counters
@@ -267,15 +259,21 @@ object AccessControl {
     * window (QuotaCache::used — the window resets `intervalSec` after
     * its first charge). `default` is never metered; SET always passes
     * (it is the session-auth channel). */
+  /** A statement's leading word, upper case: what `\b` ends in a
+    * `^WORD\b` guard. */
+  private def firstWord(stmt: String): String =
+    stmt.trim.takeWhile(c => c.isLetterOrDigit || c == '_').toUpperCase
+
   def chargeQuota(spark: SparkSession, stmt: String): Unit = {
     import scala.jdk.CollectionConverters._
     val me = currentUser(spark)
     if (me == "default") return
-    if (stmt.trim.matches("(?is)^SET\\b.*")) return
-    val charged = Seq("queries") ++
-      (if (stmt.trim.matches("(?is)^(SELECT|WITH)\\b.*")) Seq("query_selects")
-       else if (stmt.trim.matches("(?is)^INSERT\\b.*")) Seq("query_inserts")
-       else Nil)
+    val charged = firstWord(stmt) match {
+      case "SET" => return
+      case "SELECT" | "WITH" => Seq("queries", "query_selects")
+      case "INSERT" => Seq("queries", "query_inserts")
+      case _ => Seq("queries")
+    }
     quotas.asScala.values
       .filter(q => granteeCovers(q.toAll, q.grantees, me)).foreach { q =>
         val now = System.currentTimeMillis()
@@ -385,155 +383,129 @@ object AccessControl {
       })
   }
 
-  def execute(spark: SparkSession, stmt0: String): DataFrame = {
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val stmt = stmt0.trim.replaceFirst(";\\s*$", "")
+  private def names(s: String): Seq[String] =
+    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
+  private val privilegesWord = "(?i)\\s+PRIVILEGES$".r
+
+  private def privs(s: String): Seq[String] =
+    names(s).map(p => privilegesWord.replaceFirstIn(p, "").toUpperCase)
+
+  private def requireAdmin(spark: SparkSession): Unit = {
     val me = currentUser(spark)
-    def ok = Seq("OK").toDF("status")
-    val createUser = ("(?is)^CREATE\\s+USER\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)(\\s+IDENTIFIED\\s+.*)?$").r
-    val dropUser = "(?is)^DROP\\s+USER\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)$".r
-    val createRole = "(?is)^CREATE\\s+ROLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)$".r
-    val dropRole = "(?is)^DROP\\s+ROLE\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)$".r
-    val grantPriv = ("(?is)^GRANT\\s+(.+?)\\s+ON\\s+(\\*\\.\\*|\\*|[A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "TO\\s+(.+)$").r
-    val revokePriv = ("(?is)^REVOKE\\s+(.+?)\\s+ON\\s+(\\*\\.\\*|\\*|[A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "FROM\\s+(.+)$").r
-    val grantRole = "(?is)^GRANT\\s+([A-Za-z_][A-Za-z0-9_,\\s]*)\\s+TO\\s+(.+)$".r
-    val revokeRole = "(?is)^REVOKE\\s+([A-Za-z_][A-Za-z0-9_,\\s]*)\\s+FROM\\s+(.+)$".r
-    // REVOKE GRANT OPTION FOR / ADMIN OPTION FOR strip the delegation
-    // bit only — the underlying grant survives (ParserGrantQuery.cpp
-    // grant_option "GRANT OPTION FOR" / admin_option branch)
-    val revokeGrantOption = ("(?is)^REVOKE\\s+GRANT\\s+OPTION\\s+FOR\\s+(.+?)" +
-      "\\s+ON\\s+(\\*\\.\\*|\\*|[A-Za-z_][A-Za-z0-9_.]*)\\s+FROM\\s+(.+)$").r
-    val revokeAdminOption = ("(?is)^REVOKE\\s+ADMIN\\s+OPTION\\s+FOR\\s+" +
-      "([A-Za-z_][A-Za-z0-9_,\\s]*)\\s+FROM\\s+(.+)$").r
-    // `… WITH GRANT OPTION` / `… WITH ADMIN OPTION` tails: detected and
-    // stripped up front so the GRANT patterns' trailing grantee capture
-    // stays clean
-    val withGrantOpt =
-      stmt.matches("(?is).*\\s+WITH\\s+GRANT\\s+OPTION\\s*$")
-    val withAdminOpt =
-      stmt.matches("(?is).*\\s+WITH\\s+ADMIN\\s+OPTION\\s*$")
-    val stmtNoOpt =
-      stmt.replaceFirst("(?is)\\s+WITH\\s+(GRANT|ADMIN)\\s+OPTION\\s*$", "")
-    val showFor = "(?is)^SHOW\\s+GRANTS(?:\\s+FOR\\s+([A-Za-z_][A-Za-z0-9_]*))?$".r
+    if (me != "default") throw new SecurityException(
+      s"$me: Not enough privileges. Access management requires the " +
+        "default (bootstrap) user in this engine")
+  }
 
-    def names(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    def privs(s: String): Seq[String] =
-      names(s).map(_.replaceAll("(?i)\\s+PRIVILEGES$", "").toUpperCase)
-    def requireAdmin(): Unit =
-      if (me != "default") throw new SecurityException(
-        s"$me: Not enough privileges. Access management requires the " +
-          "default (bootstrap) user in this engine")
-    def knownGrantee(g: String): Unit =
-      require(g == "default" || users.contains(g) || roles.contains(g),
-        s"there is no user or role `$g`")
+  private def knownGrantee(g: String): Unit =
+    require(g == "default" || users.contains(g) || roles.contains(g),
+      s"there is no user or role `$g`")
 
-    val createQuota = ("(?is)^CREATE\\s+QUOTA\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)" +
-      "(?:\\s+(?:KEYED\\s+BY\\s+([A-Za-z_]+)|NOT\\s+KEYED))?" +
-      "(?:\\s+FOR\\s+(?:RANDOMIZED\\s+)?INTERVAL\\s+(\\d+)\\s+([A-Za-z]+?)s?\\b)?" +
-      "(?:\\s+MAX\\s+(.+?))?" +
-      "(?:\\s+TO\\s+([A-Za-z_,\\s]+|ALL))?$").r
-    val dropQuota =
-      "(?is)^DROP\\s+QUOTA\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)$".r
-    val createProfile = ("(?is)^CREATE\\s+SETTINGS\\s+PROFILE\\s+" +
-      "(IF\\s+NOT\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)" +
-      "(?:\\s+SETTINGS\\s+(.+?))?(?:\\s+TO\\s+([A-Za-z_,\\s]+|ALL))?$").r
-    val dropProfile = ("(?is)^DROP\\s+SETTINGS\\s+PROFILE\\s+" +
-      "(IF\\s+EXISTS\\s+)?([A-Za-z_][A-Za-z0-9_]*)$").r
-    val showQuotas = "(?is)^SHOW\\s+QUOTAS$".r
-    val showCreateQuota =
-      "(?is)^SHOW\\s+CREATE\\s+QUOTA\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-    val showProfiles = "(?is)^SHOW\\s+SETTINGS\\s+PROFILES$".r
-    val showCreateProfile = ("(?is)^SHOW\\s+CREATE\\s+SETTINGS\\s+PROFILE\\s+" +
-      "([A-Za-z_][A-Za-z0-9_]*)$").r
-    def intervalSeconds(n: String, unit: String): Long = {
-      val k = Option(unit).map(_.toLowerCase).getOrElse("hour")
-      val mult = k match {
-        case "second" => 1L; case "minute" => 60L; case "hour" => 3600L
-        case "day" => 86400L; case "week" => 604800L
-        case "month" => 2629746L; case "quarter" => 7889238L
-        case "year" => 31556952L
-        case other => throw new IllegalArgumentException(
-          s"unsupported quota interval unit '$other'")
-      }
-      Option(n).map(_.toLong).getOrElse(1L) * mult
+  /** Delegation gate: `default` always may; another user may GRANT or
+    * REVOKE exactly the privileges it holds WITH GRANT OPTION on that
+    * target (roles: WITH ADMIN OPTION). */
+  private def requireGrantOption(me: String, ps: String, target: String): Unit =
+    for (p <- privs(ps))
+      if (me != "default" && !hasGrantOption(me, p, target))
+        throw new SecurityException(
+          s"$me: Not enough privileges. To execute this query, it's " +
+            s"necessary to have the grant $p ON $target WITH GRANT OPTION")
+
+  private def requireAdminOption(me: String, rs: String): Unit =
+    for (r <- names(rs))
+      if (me != "default" && !hasAdminOption(me, r))
+        throw new SecurityException(
+          s"$me: Not enough privileges. To execute this query, it's " +
+            s"necessary to have the grant $r WITH ADMIN OPTION")
+
+  private def intervalSeconds(n: String, unit: String): Long = {
+    val k = Option(unit).map(_.toLowerCase).getOrElse("hour")
+    val mult = k match {
+      case "second" => 1L; case "minute" => 60L; case "hour" => 3600L
+      case "day" => 86400L; case "week" => 604800L
+      case "month" => 2629746L; case "quarter" => 7889238L
+      case "year" => 31556952L
+      case other => throw new IllegalArgumentException(
+        s"unsupported quota interval unit '$other'")
     }
-    // KEYED BY: the reference buckets usage by QuotaKeyType
-    // (src/Access/Common/QuotaDefs.h) — this engine meters per session
-    // user, so only user_name keying is honest. Other reference key
-    // types are REJECTED LOUDLY (documented deviation) rather than
-    // silently accepted with different semantics; unknown names error.
-    val refQuotaKeys = Set("none", "user_name", "ip_address",
-      "forwarded_ip_address", "client_key", "client_key_or_user_name",
-      "client_key_or_ip_address")
-    def checkQuotaKey(keyed: String): Unit = Option(keyed).foreach { k =>
-      val key = k.toLowerCase
-      require(refQuotaKeys(key), s"unknown quota key type '$k'")
-      require(key == "user_name",
-        s"KEYED BY $k is not supported: this engine meters quotas per " +
-          "session user (KEYED BY user_name) only — documented deviation")
+    Option(n).map(_.toLong).getOrElse(1L) * mult
+  }
+
+  // KEYED BY: the reference buckets usage by QuotaKeyType
+  // (src/Access/Common/QuotaDefs.h) — this engine meters per session
+  // user, so only user_name keying is honest. Other reference key
+  // types are REJECTED LOUDLY (documented deviation) rather than
+  // silently accepted with different semantics; unknown names error.
+  private val refQuotaKeys = Set("none", "user_name", "ip_address",
+    "forwarded_ip_address", "client_key", "client_key_or_user_name",
+    "client_key_or_ip_address")
+
+  private def checkQuotaKey(keyed: String): Unit = Option(keyed).foreach { k =>
+    val key = k.toLowerCase
+    require(refQuotaKeys(key), s"unknown quota key type '$k'")
+    require(key == "user_name",
+      s"KEYED BY $k is not supported: this engine meters quotas per " +
+        "session user (KEYED BY user_name) only — documented deviation")
+  }
+
+  /** `MAX a = 1, b = 2` → metered limits. */
+  private def quotaLimits(maxList: String): Map[String, Long] =
+    names(maxList).map { kv =>
+      val Array(k, v) = kv.split("=", 2).map(_.trim)
+      require(quotaLimitNames(k.toLowerCase), s"unknown quota limit '$k'")
+      k.toLowerCase -> v.toDouble.toLong
+    }.toMap
+
+  /** `SETTINGS a = 1, b = 'x'` → (name, unquoted value) pairs. */
+  private def profileSettings(list: String): Seq[(String, String)] =
+    names(list).map { kv =>
+      val Array(k, v) = kv.split("=", 2).map(_.trim)
+      k -> v.stripPrefix("'").stripSuffix("'")
     }
-    def granteeSpec(to: String): (Boolean, Set[String]) =
-      Option(to).map(_.trim) match {
-        case None => (false, Set.empty[String])
-        case Some(t) if t.equalsIgnoreCase("ALL") => (true, Set.empty[String])
-        case Some(list) =>
-          val gs = names(list).toSet
-          gs.foreach(knownGrantee); (false, gs)
-      }
 
-    val createPolicy = ("(?is)^CREATE\\s+ROW\\s+POLICY\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s+ON\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "USING\\s+(.+?)(?:\\s+TO\\s+(.+))?$").r
-    val dropPolicy = ("(?is)^DROP\\s+ROW\\s+POLICY\\s+(IF\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s+ON\\s+([A-Za-z_][A-Za-z0-9_.]*)$").r
+  /** `TO a, b` / `TO ALL` / no TO → (to all, named grantees). */
+  private def granteeSpec(to: String): (Boolean, Set[String]) =
+    Option(to).map(_.trim) match {
+      case None => (false, Set.empty[String])
+      case Some(t) if t.equalsIgnoreCase("ALL") => (true, Set.empty[String])
+      case Some(list) =>
+        val gs = names(list).toSet
+        gs.foreach(knownGrantee); (false, gs)
+    }
 
-    val setRole = ("(?is)^SET\\s+ROLE\\s+" +
-      "(DEFAULT|NONE|ALL(?:\\s+EXCEPT\\s+(.+))?|[A-Za-z_][A-Za-z0-9_,\\s]*)" +
-      "\\s*$").r
-    val setDefaultRole = ("(?is)^SET\\s+DEFAULT\\s+ROLE\\s+" +
-      "(NONE|ALL|[A-Za-z_][A-Za-z0-9_,\\s]*?)\\s+TO\\s+(.+)$").r
-    val showUsers = "(?is)^SHOW\\s+USERS$".r
-    val showRoles = "(?is)^SHOW\\s+ROLES$".r
-    val showPolicies = "(?is)^SHOW\\s+ROW\\s+POLICIES$".r
-    val showCurrentRoles = "(?is)^SHOW\\s+CURRENT\\s+ROLES$".r
-    val showEnabledRoles = "(?is)^SHOW\\s+ENABLED\\s+ROLES$".r
-    val showCreateUser =
-      "(?is)^SHOW\\s+CREATE\\s+USER\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-    val showCreateRole =
-      "(?is)^SHOW\\s+CREATE\\s+ROLE\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
-    val showCreatePolicy = ("(?is)^SHOW\\s+CREATE\\s+ROW\\s+POLICY\\s+" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s+ON\\s+([A-Za-z_][A-Za-z0-9_.]*)$").r
+  /** A row policy's `TO` list; none or ALL applies to everyone. */
+  private def policyGrantees(to: String): Set[String] =
+    Option(to).map(_.trim) match {
+      case None | Some("ALL") => Set.empty[String]
+      case Some(list) => names(list).toSet
+    }
 
-    val checkGrant = ("(?is)^CHECK\\s+GRANT\\s+([A-Za-z]+)\\s+ON\\s+" +
-      "(\\*\\.\\*|\\*|[A-Za-z_][A-Za-z0-9_.]*)$").r
-    // ALTER forms (ASTCreateUserQuery alter=true and siblings): RENAME TO
-    // for users/roles; the quota/policy/profile ALTERs re-state the
-    // definition (the reference likewise replaces the changed fields)
-    val alterUserRename = ("(?is)^ALTER\\s+USER\\s+([A-Za-z_][A-Za-z0-9_]*)" +
-      "\\s+RENAME\\s+TO\\s+([A-Za-z_][A-Za-z0-9_]*)$").r
-    val alterRoleRename = ("(?is)^ALTER\\s+ROLE\\s+([A-Za-z_][A-Za-z0-9_]*)" +
-      "\\s+RENAME\\s+TO\\s+([A-Za-z_][A-Za-z0-9_]*)$").r
-    val alterQuota = ("(?is)^ALTER\\s+QUOTA\\s+([A-Za-z_][A-Za-z0-9_]*)" +
-      "(?:\\s+(?:KEYED\\s+BY\\s+([A-Za-z_]+)|NOT\\s+KEYED))?" +
-      "(?:\\s+FOR\\s+(?:RANDOMIZED\\s+)?INTERVAL\\s+(\\d+)\\s+([A-Za-z]+?)s?\\b)?" +
-      "(?:\\s+MAX\\s+(.+?))?" +
-      "(?:\\s+TO\\s+([A-Za-z_,\\s]+|ALL))?$").r
-    val alterPolicy = ("(?is)^ALTER\\s+ROW\\s+POLICY\\s+" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s+ON\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s+" +
-      "USING\\s+(.+?)(?:\\s+TO\\s+(.+))?$").r
-    val alterProfile = ("(?is)^ALTER\\s+SETTINGS\\s+PROFILE\\s+" +
-      "([A-Za-z_][A-Za-z0-9_]*)" +
-      "(?:\\s+SETTINGS\\s+(.+?))?(?:\\s+TO\\s+([A-Za-z_,\\s]+|ALL))?$").r
-
-    stmtNoOpt match {
-      case alterUserRename(from, to) =>
-        requireAdmin()
+  /** Rows of the dialect's statement table (ClickHouseSql.statements):
+    * users, roles, row policies, quotas, settings profiles, grants and
+    * their SHOW forms, in the order they are tried. The last row refuses
+    * any other statement of the family. */
+  private[sql] val statements: Seq[Lane] = {
+    import scala.jdk.CollectionConverters._
+    val target = """(\*\.\*|\*|<t>)"""
+    val roleList = "([A-Za-z_][A-Za-z0-9_,\\s]*)"
+    val toList = """(?:\s+TO\s+([A-Za-z_,\s]+|ALL))?"""
+    val quotaBody = """(?:\s+(?:KEYED\s+BY\s+([A-Za-z_]+)|NOT\s+KEYED))?""" +
+      """(?:\s+FOR\s+(?:RANDOMIZED\s+)?INTERVAL\s+(\d+)\s+([A-Za-z]+?)s?\b)?""" +
+      """(?:\s+MAX\s+(.+?))?""" + toList
+    // `… WITH GRANT OPTION` / `… WITH ADMIN OPTION` tail of a GRANT
+    val optionTail = """(?:\s+WITH\s+(GRANT|ADMIN)\s+OPTION)?<end>"""
+    def frame(h: Hit, rows: Seq[String], col: String): DataFrame = {
+      import h.spark.implicits._
+      rows.toDF(col)
+    }
+    Seq(
+      // ALTER forms (ASTCreateUserQuery alter=true and siblings): RENAME
+      // TO for users/roles; the quota/policy/profile ALTERs re-state the
+      // definition (the reference likewise replaces the changed fields)
+      lane("""^ALTER\s+USER\s+(<c>)\s+RENAME\s+TO\s+(<c>)<end>""") { h =>
+        val (from, to) = (h(1), h(2))
+        requireAdmin(h.spark)
         require(users.contains(from), s"there is no user `$from`")
         require(!users.contains(to) && to != "default",
           s"user `$to` already exists")
@@ -547,10 +519,12 @@ object AccessControl {
           grants.remove(g); grants.add(g.copy(grantee = to))
         }
         renameGrantee(from, to)
-        retireShadows(spark)
-        ok
-      case alterRoleRename(from, to) =>
-        requireAdmin()
+        retireShadows(h.spark)
+        h.ok
+      },
+      lane("""^ALTER\s+ROLE\s+(<c>)\s+RENAME\s+TO\s+(<c>)<end>""") { h =>
+        val (from, to) = (h(1), h(2))
+        requireAdmin(h.spark)
         require(roles.contains(from), s"there is no role `$from`")
         require(!roles.contains(to), s"role `$to` already exists")
         roles.remove(from); roles.add(to)
@@ -565,72 +539,67 @@ object AccessControl {
         Option(roleAdminOptions.remove(from))
           .foreach(roleAdminOptions.put(to, _))
         renameGrantee(from, to)
-        retireShadows(spark)
-        ok
-      case alterQuota(name, keyed, n, unit, maxList, to) =>
-        requireAdmin()
-        checkQuotaKey(keyed)
+        retireShadows(h.spark)
+        h.ok
+      },
+      lane("""^ALTER\s+QUOTA\s+(<c>)""" + quotaBody + "<end>") { h =>
+        val name = h(1)
+        requireAdmin(h.spark)
+        checkQuotaKey(h(2))
         val prev = Option(quotas.get(name)).getOrElse(
           throw new IllegalArgumentException(s"there is no quota `$name`"))
-        val limits = Option(maxList).map(names(_).map { kv =>
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          require(quotaLimitNames(k.toLowerCase), s"unknown quota limit '$k'")
-          k.toLowerCase -> v.toDouble.toLong
-        }.toMap).getOrElse(prev.limits)
-        val (toAll, gs) = Option(to).map(_ => granteeSpec(to))
+        val limits = h.opt(5).map(quotaLimits).getOrElse(prev.limits)
+        val (toAll, gs) = h.opt(6).map(granteeSpec)
           .getOrElse((prev.toAll, prev.grantees))
         quotas.put(name, Quota(name,
-          Option(keyed).getOrElse(prev.keyedBy),
-          Option(n).map(_ => intervalSeconds(n, unit))
+          h.opt(2).getOrElse(prev.keyedBy),
+          h.opt(3).map(n => intervalSeconds(n, h(4)))
             .getOrElse(prev.intervalSec),
           limits, toAll, gs))
-        ok
-      case alterPolicy(name, table, cond, to) =>
-        requireAdmin()
+        h.ok
+      },
+      lane("""^ALTER\s+ROW\s+POLICY\s+(<c>)\s+ON\s+(<t>)\s+USING\s+(.+?)(?:\s+TO\s+(.+?))?<end>""") { h =>
+        val name = h(1)
+        requireAdmin(h.spark)
         require(rowPolicies.containsKey(name),
           s"there is no row policy `$name`")
-        val appliesTo = Option(to).map(_.trim) match {
-          case None | Some("ALL") => Set.empty[String]
-          case Some(list) => names(list).toSet
-        }
         rowPolicies.put(name,
-          RowPolicy(name, table.toLowerCase, cond.trim, appliesTo))
-        retireShadows(spark) // live shadows hold the OLD filter
-        ok
-      case alterProfile(name, settingsList, to) =>
-        requireAdmin()
+          RowPolicy(name, h(2).toLowerCase, h(3).trim, policyGrantees(h(4))))
+        retireShadows(h.spark) // live shadows hold the OLD filter
+        h.ok
+      },
+      lane("""^ALTER\s+SETTINGS\s+PROFILE\s+(<c>)(?:\s+SETTINGS\s+(.+?))?""" + toList + "<end>") { h =>
+        val name = h(1)
+        requireAdmin(h.spark)
         val prev = Option(settingsProfiles.get(name)).getOrElse(
           throw new IllegalArgumentException(
             s"there is no settings profile `$name`"))
-        val settings = Option(settingsList).map(names(_).map { kv =>
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          k -> v.stripPrefix("'").stripSuffix("'")
-        }).getOrElse(prev.settings)
-        val (toAll, gs) = Option(to).map(_ => granteeSpec(to))
+        val settings = h.opt(2).map(profileSettings).getOrElse(prev.settings)
+        val (toAll, gs) = h.opt(3).map(granteeSpec)
           .getOrElse((prev.toAll, prev.grantees))
-        settingsProfiles.put(name,
-          SettingsProfile(name, settings, toAll, gs))
-        ok
+        settingsProfiles.put(name, SettingsProfile(name, settings, toAll, gs))
+        h.ok
+      },
       // CHECK GRANT p ON t (ASTCheckGrantQuery): does the CURRENT user
       // hold the privilege? Answers 1/0, never throws — the self-probe
       // an application runs before attempting a statement.
-      case checkGrant(p, target) =>
+      lane("""^CHECK\s+GRANT\s+([A-Za-z]+)\s+ON\s+""" + target + "<end>") { h =>
+        import h.spark.implicits._
+        val me = currentUser(h.spark)
         val has = me == "default" ||
-          allowed(me, p.toUpperCase, target.toLowerCase)
+          allowed(me, h(1).toUpperCase, h(2).toLowerCase)
         Seq(if (has) 1 else 0).toDF("result")
-      // SET ROLE is self-service: the session narrows its OWN granted
-      // roles (InterpreterSetRoleQuery) — every named role must be
-      // granted to the current user
-      case setDefaultRole(rolesSpec, to) =>
-        requireAdmin()
-        val targets = names(to)
+      },
+      lane("""^SET\s+DEFAULT\s+ROLE\s+(NONE|ALL|[A-Za-z_][A-Za-z0-9_,\s]*?)\s+TO\s+(.+?)<end>""") { h =>
+        requireAdmin(h.spark)
+        val targets = names(h(2))
         targets.foreach(knownGrantee)
-        rolesSpec.trim.toUpperCase match {
+        h(1).trim.toUpperCase match {
           case "NONE" =>
             targets.foreach(u => defaultRoles.put(u, Set.empty))
           case "ALL" => targets.foreach(defaultRoles.remove)
           case _ =>
-            val rs = names(rolesSpec).toSet
+            val rs = names(h(1)).toSet
             rs.foreach(r => require(roles.contains(r),
               s"there is no role `$r`"))
             targets.foreach { u =>
@@ -640,80 +609,82 @@ object AccessControl {
               defaultRoles.put(u, rs)
             }
         }
-        ok
-      case setRole(spec, exceptList) =>
+        h.ok
+      },
+      // SET ROLE is self-service: the session narrows its OWN granted
+      // roles (InterpreterSetRoleQuery) — every named role must be
+      // granted to the current user
+      lane("""^SET\s+ROLE\s+(DEFAULT|NONE|ALL(?:\s+EXCEPT\s+(.+?))?|[A-Za-z_][A-Za-z0-9_,\s]*)<end>""") { h =>
+        val me = currentUser(h.spark)
         val granted = roleGrants.getOrDefault(me, Set.empty)
-        spec.trim.toUpperCase match {
+        h(1).trim.toUpperCase match {
           case "DEFAULT" => activeRoles.remove(me)
           case "NONE" => activeRoles.put(me, Set.empty)
           case s if s.startsWith("ALL") =>
-            val except = Option(exceptList).map(names(_).toSet)
-              .getOrElse(Set.empty)
+            val except = h.opt(2).map(names(_).toSet).getOrElse(Set.empty)
             activeRoles.put(me, granted -- except)
           case _ =>
-            val rs = names(spec).toSet
+            val rs = names(h(1)).toSet
             rs.foreach(r => require(granted.contains(r),
               s"Role `$r` should be granted to `$me` to be set as current"))
             activeRoles.put(me, rs)
         }
-        ok
-      case showUsers() => listUsers.toDF("name")
-      case showRoles() => listRoles.toDF("name")
-      case showPolicies() =>
-        listRowPolicies.map(p => s"${p._1} ON ${p._2}").toDF("name")
-      case showCurrentRoles() =>
-        currentRoleSet(me).toSeq.sorted
-          .map(r => (r, Option(defaultRoles.get(me))
-            .forall(_.contains(r))))
-          .toDF("role_name", "is_default")
-      case showEnabledRoles() =>
-        val closure = identityClosure(me) - me
-        val current = currentRoleSet(me)
-        closure.toSeq.sorted.map(r => (r, current.contains(r)))
-          .toDF("role_name", "is_current")
-      case showCreateUser(name) =>
-        require(name == "default" || users.contains(name),
-          s"there is no user `$name`")
-        Seq(s"CREATE USER $name").toDF("statement")
-      case showCreateRole(name) =>
-        require(roles.contains(name), s"there is no role `$name`")
-        Seq(s"CREATE ROLE $name").toDF("statement")
-      case showCreatePolicy(name, _) =>
-        val p = Option(rowPolicies.get(name)).getOrElse(
-          throw new IllegalArgumentException(s"there is no row policy `$name`"))
+        h.ok
+      },
+      lane("""^SHOW\s+USERS<end>""")(frame(_, listUsers, "name")),
+      lane("""^SHOW\s+ROLES<end>""")(frame(_, listRoles, "name")),
+      lane("""^SHOW\s+ROW\s+POLICIES<end>""")(
+        frame(_, listRowPolicies.map(p => s"${p._1} ON ${p._2}"), "name")),
+      lane("""^SHOW\s+CURRENT\s+ROLES<end>""") { h =>
+        import h.spark.implicits._
+        listCurrentRoles(h.spark).toDF("role_name", "is_default")
+      },
+      lane("""^SHOW\s+ENABLED\s+ROLES<end>""") { h =>
+        import h.spark.implicits._
+        listEnabledRoles(h.spark).toDF("role_name", "is_current")
+      },
+      lane("""^SHOW\s+CREATE\s+USER\s+(<c>)<end>""") { h =>
+        require(h(1) == "default" || users.contains(h(1)),
+          s"there is no user `${h(1)}`")
+        frame(h, Seq(s"CREATE USER ${h(1)}"), "statement")
+      },
+      lane("""^SHOW\s+CREATE\s+ROLE\s+(<c>)<end>""") { h =>
+        require(roles.contains(h(1)), s"there is no role `${h(1)}`")
+        frame(h, Seq(s"CREATE ROLE ${h(1)}"), "statement")
+      },
+      lane("""^SHOW\s+CREATE\s+ROW\s+POLICY\s+(<c>)\s+ON\s+(<t>)<end>""") { h =>
+        val p = Option(rowPolicies.get(h(1))).getOrElse(
+          throw new IllegalArgumentException(s"there is no row policy `${h(1)}`"))
         val toPart =
           if (p.appliesTo.isEmpty) "ALL"
           else p.appliesTo.toSeq.sorted.mkString(", ")
-        Seq(s"CREATE ROW POLICY ${p.name} ON ${p.table} USING " +
-          s"${p.condition} TO $toPart").toDF("statement")
-      case createQuota(ifNot, name, keyed, n, unit, maxList, to) =>
-        requireAdmin()
-        checkQuotaKey(keyed)
-        val limits = Option(maxList).map(names(_).map { kv =>
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          val key = k.toLowerCase
-          require(quotaLimitNames(key), s"unknown quota limit '$k'")
-          key -> v.toDouble.toLong
-        }.toMap).getOrElse(Map.empty)
-        val (toAll, gs) = granteeSpec(to)
-        val q = Quota(name, Option(keyed).getOrElse("user_name"),
-          intervalSeconds(n, unit), limits, toAll, gs)
-        if (quotas.putIfAbsent(name, q) != null && ifNot == null)
+        frame(h, Seq(s"CREATE ROW POLICY ${p.name} ON ${p.table} USING " +
+          s"${p.condition} TO $toPart"), "statement")
+      },
+      lane("""^CREATE\s+QUOTA\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)""" + quotaBody + "<end>") { h =>
+        val name = h(2)
+        requireAdmin(h.spark)
+        checkQuotaKey(h(3))
+        val limits = h.opt(6).map(quotaLimits).getOrElse(Map.empty[String, Long])
+        val (toAll, gs) = granteeSpec(h(7))
+        val q = Quota(name, h.opt(3).getOrElse("user_name"),
+          intervalSeconds(h(4), h(5)), limits, toAll, gs)
+        if (quotas.putIfAbsent(name, q) != null && h(1) == null)
           throw new IllegalArgumentException(s"quota `$name` already exists")
-        ok
-      case dropQuota(ifEx, name) =>
-        requireAdmin()
-        if (quotas.remove(name) == null && ifEx == null)
-          throw new IllegalArgumentException(s"there is no quota `$name`")
-        import scala.jdk.CollectionConverters._
-        quotaUsage.keySet.asScala.filter(_._1 == name)
+        h.ok
+      },
+      lane("""^DROP\s+QUOTA\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+        requireAdmin(h.spark)
+        if (quotas.remove(h(2)) == null && h(1) == null)
+          throw new IllegalArgumentException(s"there is no quota `${h(2)}`")
+        quotaUsage.keySet.asScala.filter(_._1 == h(2))
           .foreach(quotaUsage.remove)
-        ok
-      case showQuotas() =>
-        listQuotas.map(_._1).toDF("name")
-      case showCreateQuota(name) =>
-        val q = Option(quotas.get(name)).getOrElse(
-          throw new IllegalArgumentException(s"there is no quota `$name`"))
+        h.ok
+      },
+      lane("""^SHOW\s+QUOTAS<end>""")(frame(_, listQuotas.map(_._1), "name")),
+      lane("""^SHOW\s+CREATE\s+QUOTA\s+(<c>)<end>""") { h =>
+        val q = Option(quotas.get(h(1))).getOrElse(
+          throw new IllegalArgumentException(s"there is no quota `${h(1)}`"))
         val maxPart =
           if (q.limits.isEmpty) ""
           else " MAX " + q.limits.toSeq.sorted
@@ -723,32 +694,33 @@ object AccessControl {
           else if (q.grantees.nonEmpty)
             s" TO ${q.grantees.toSeq.sorted.mkString(", ")}"
           else ""
-        Seq(s"CREATE QUOTA ${q.name} KEYED BY ${q.keyedBy} FOR INTERVAL " +
-          s"${q.intervalSec} second$maxPart$toPart").toDF("statement")
-      case createProfile(ifNot, name, settingsList, to) =>
-        requireAdmin()
-        val settings = Option(settingsList).map(names(_).map { kv =>
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          k -> v.stripPrefix("'").stripSuffix("'")
-        }).getOrElse(Seq.empty)
-        val (toAll, gs) = granteeSpec(to)
+        frame(h, Seq(s"CREATE QUOTA ${q.name} KEYED BY ${q.keyedBy} FOR INTERVAL " +
+          s"${q.intervalSec} second$maxPart$toPart"), "statement")
+      },
+      lane("""^CREATE\s+SETTINGS\s+PROFILE\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)(?:\s+SETTINGS\s+(.+?))?""" + toList + "<end>") { h =>
+        val name = h(2)
+        requireAdmin(h.spark)
+        val settings = h.opt(3).map(profileSettings).getOrElse(Seq.empty)
+        val (toAll, gs) = granteeSpec(h(4))
         if (settingsProfiles.putIfAbsent(name,
-            SettingsProfile(name, settings, toAll, gs)) != null && ifNot == null)
+            SettingsProfile(name, settings, toAll, gs)) != null && h(1) == null)
           throw new IllegalArgumentException(
             s"settings profile `$name` already exists")
-        ok
-      case dropProfile(ifEx, name) =>
-        requireAdmin()
-        if (settingsProfiles.remove(name) == null && ifEx == null)
+        h.ok
+      },
+      lane("""^DROP\s+SETTINGS\s+PROFILE\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+        requireAdmin(h.spark)
+        if (settingsProfiles.remove(h(2)) == null && h(1) == null)
           throw new IllegalArgumentException(
-            s"there is no settings profile `$name`")
-        ok
-      case showProfiles() =>
-        listSettingsProfiles.map(_._1).toDF("name")
-      case showCreateProfile(name) =>
-        val p = Option(settingsProfiles.get(name)).getOrElse(
+            s"there is no settings profile `${h(2)}`")
+        h.ok
+      },
+      lane("""^SHOW\s+SETTINGS\s+PROFILES<end>""")(
+        frame(_, listSettingsProfiles.map(_._1), "name")),
+      lane("""^SHOW\s+CREATE\s+SETTINGS\s+PROFILE\s+(<c>)<end>""") { h =>
+        val p = Option(settingsProfiles.get(h(1))).getOrElse(
           throw new IllegalArgumentException(
-            s"there is no settings profile `$name`"))
+            s"there is no settings profile `${h(1)}`"))
         val sPart =
           if (p.settings.isEmpty) ""
           else " SETTINGS " + p.settings
@@ -758,144 +730,136 @@ object AccessControl {
           else if (p.grantees.nonEmpty)
             s" TO ${p.grantees.toSeq.sorted.mkString(", ")}"
           else ""
-        Seq(s"CREATE SETTINGS PROFILE ${p.name}$sPart$toPart")
-          .toDF("statement")
-      case createPolicy(ifNot, name, table, cond, to) =>
-        requireAdmin()
-        val appliesTo = Option(to).map(_.trim) match {
-          case None | Some("ALL") => Set.empty[String]
-          case Some(list) => names(list).toSet
-        }
-        if (rowPolicies.putIfAbsent(name,
-            RowPolicy(name, table.toLowerCase, cond.trim, appliesTo)) != null
-          && ifNot == null)
+        frame(h, Seq(s"CREATE SETTINGS PROFILE ${p.name}$sPart$toPart"),
+          "statement")
+      },
+      lane("""^CREATE\s+ROW\s+POLICY\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)\s+ON\s+(<t>)\s+USING\s+(.+?)(?:\s+TO\s+(.+?))?<end>""") { h =>
+        val name = h(2)
+        requireAdmin(h.spark)
+        if (rowPolicies.putIfAbsent(name, RowPolicy(name, h(3).toLowerCase,
+            h(4).trim, policyGrantees(h(5)))) != null && h(1) == null)
           throw new IllegalArgumentException(s"row policy `$name` already exists")
-        retireShadows(spark) // a live shadow must pick up the new policy
-        ok
-      case dropPolicy(ifEx, name, _) =>
-        requireAdmin()
-        if (rowPolicies.remove(name) == null && ifEx == null)
-          throw new IllegalArgumentException(s"there is no row policy `$name`")
-        retireShadows(spark)
-        ok
-      case showFor(who) =>
-        val target = Option(who).getOrElse(me)
-        val rows =
-          listGrants.filter(_._1 == target).map {
-            case (_, "ROLE", r, admin) =>
-              s"GRANT $r TO $target" +
-                (if (admin) " WITH ADMIN OPTION" else "")
-            case (_, p, t, opt) =>
-              s"GRANT $p ON $t TO $target" +
-                (if (opt) " WITH GRANT OPTION" else "")
-          }
-        rows.toDF("grants")
-      case createUser(ifNot, name, _) =>
-        requireAdmin()
-        if (!users.add(name) && ifNot == null)
-          throw new IllegalArgumentException(s"user `$name` already exists")
-        ok
-      case dropUser(ifEx, name) =>
-        requireAdmin()
-        if (!users.remove(name) && ifEx == null)
+        retireShadows(h.spark) // a live shadow must pick up the new policy
+        h.ok
+      },
+      lane("""^DROP\s+ROW\s+POLICY\s+(IF\s+EXISTS\s+)?(<c>)\s+ON\s+(<t>)<end>""") { h =>
+        requireAdmin(h.spark)
+        if (rowPolicies.remove(h(2)) == null && h(1) == null)
+          throw new IllegalArgumentException(s"there is no row policy `${h(2)}`")
+        retireShadows(h.spark)
+        h.ok
+      },
+      lane("""^SHOW\s+GRANTS(?:\s+FOR\s+(<c>))?<end>""") { h =>
+        val target = h.opt(1).getOrElse(currentUser(h.spark))
+        frame(h, listGrants.filter(_._1 == target).map {
+          case (_, "ROLE", r, admin) =>
+            s"GRANT $r TO $target" + (if (admin) " WITH ADMIN OPTION" else "")
+          case (_, p, t, opt) =>
+            s"GRANT $p ON $t TO $target" + (if (opt) " WITH GRANT OPTION" else "")
+        }, "grants")
+      },
+      lane("""^CREATE\s+USER\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)(\s+IDENTIFIED\s+.*?)?<end>""") { h =>
+        requireAdmin(h.spark)
+        if (!users.add(h(2)) && h(1) == null)
+          throw new IllegalArgumentException(s"user `${h(2)}` already exists")
+        h.ok
+      },
+      lane("""^DROP\s+USER\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+        val name = h(2)
+        requireAdmin(h.spark)
+        if (!users.remove(name) && h(1) == null)
           throw new IllegalArgumentException(s"there is no user `$name`")
         roleGrants.remove(name)
         activeRoles.remove(name); defaultRoles.remove(name)
-        import scala.jdk.CollectionConverters._
         grants.asScala.filter(_.grantee == name).foreach(grants.remove)
-        ok
-      case createRole(ifNot, name) =>
-        requireAdmin()
-        if (!roles.add(name) && ifNot == null)
-          throw new IllegalArgumentException(s"role `$name` already exists")
-        ok
-      case dropRole(ifEx, name) =>
-        requireAdmin()
-        if (!roles.remove(name) && ifEx == null)
+        h.ok
+      },
+      lane("""^CREATE\s+ROLE\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)<end>""") { h =>
+        requireAdmin(h.spark)
+        if (!roles.add(h(2)) && h(1) == null)
+          throw new IllegalArgumentException(s"role `${h(2)}` already exists")
+        h.ok
+      },
+      lane("""^DROP\s+ROLE\s+(IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+        val name = h(2)
+        requireAdmin(h.spark)
+        if (!roles.remove(name) && h(1) == null)
           throw new IllegalArgumentException(s"there is no role `$name`")
-        import scala.jdk.CollectionConverters._
         grants.asScala.filter(_.grantee == name).foreach(grants.remove)
         roleGrants.replaceAll((_, rs) => rs - name)
         roleAdminOptions.replaceAll((_, rs) => rs - name)
-        ok
-      // delegation-aware gates: `default` always may; a non-default
-      // user may GRANT/REVOKE exactly the privileges it holds WITH
-      // GRANT OPTION (roles: WITH ADMIN OPTION) on that target
-      case revokeGrantOption(ps, target, from) =>
-        for (p <- privs(ps))
-          if (me != "default" && !hasGrantOption(me, p, target))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $p ON $target WITH GRANT OPTION")
-        for (g <- names(from); p <- privs(ps))
-          if (grants.remove(Grant(g, p, target.toLowerCase,
-              grantOption = true)))
-            grants.add(Grant(g, p, target.toLowerCase))
-        ok
-      case revokeAdminOption(rs, from) if names(rs).forall(roles.contains) =>
-        for (r <- names(rs))
-          if (me != "default" && !hasAdminOption(me, r))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $r WITH ADMIN OPTION")
-        for (g <- names(from); r <- names(rs))
-          roleAdminOptions.computeIfPresent(g, (_, cur) => cur - r)
-        ok
-      case grantPriv(ps, target, to) =>
-        for (p <- privs(ps))
-          if (me != "default" && !hasGrantOption(me, p, target))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $p ON $target WITH GRANT OPTION")
-        for (g <- names(to); p <- privs(ps)) {
+        h.ok
+      },
+      // REVOKE GRANT OPTION FOR / ADMIN OPTION FOR strip the delegation
+      // bit only — the underlying grant survives (ParserGrantQuery.cpp
+      // grant_option "GRANT OPTION FOR" / admin_option branch)
+      lane("""^REVOKE\s+GRANT\s+OPTION\s+FOR\s+(.+?)\s+ON\s+""" + target + """\s+FROM\s+(.+?)<end>""") { h =>
+        requireGrantOption(currentUser(h.spark), h(1), h(2))
+        for (g <- names(h(3)); p <- privs(h(1)))
+          if (grants.remove(Grant(g, p, h(2).toLowerCase, grantOption = true)))
+            grants.add(Grant(g, p, h(2).toLowerCase))
+        h.ok
+      },
+      maybe("""^REVOKE\s+ADMIN\s+OPTION\s+FOR\s+""" + roleList + """\s+FROM\s+(.+?)<end>""") { h =>
+        if (!names(h(1)).forall(roles.contains)) None
+        else {
+          requireAdminOption(currentUser(h.spark), h(1))
+          for (g <- names(h(2)); r <- names(h(1)))
+            roleAdminOptions.computeIfPresent(g, (_, cur) => cur - r)
+          Some(h.ok)
+        }
+      },
+      lane("""^GRANT\s+(.+?)\s+ON\s+""" + target + """\s+TO\s+(.+?)""" + optionTail) { h =>
+        val withGrantOpt = h.opt(4).exists(_.equalsIgnoreCase("GRANT"))
+        val t = h(2).toLowerCase
+        requireGrantOption(currentUser(h.spark), h(1), h(2))
+        for (g <- names(h(3)); p <- privs(h(1))) {
           knownGrantee(g)
           if (withGrantOpt) {
-            grants.remove(Grant(g, p, target.toLowerCase))
-            grants.add(Grant(g, p, target.toLowerCase, grantOption = true))
-          } else if (!grants.contains(
-              Grant(g, p, target.toLowerCase, grantOption = true)))
-            grants.add(Grant(g, p, target.toLowerCase))
+            grants.remove(Grant(g, p, t))
+            grants.add(Grant(g, p, t, grantOption = true))
+          } else if (!grants.contains(Grant(g, p, t, grantOption = true)))
+            grants.add(Grant(g, p, t))
         }
-        ok
-      case revokePriv(ps, target, from) =>
-        for (p <- privs(ps))
-          if (me != "default" && !hasGrantOption(me, p, target))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $p ON $target WITH GRANT OPTION")
+        h.ok
+      },
+      lane("""^REVOKE\s+(.+?)\s+ON\s+""" + target + """\s+FROM\s+(.+?)<end>""") { h =>
+        val t = h(2).toLowerCase
+        requireGrantOption(currentUser(h.spark), h(1), h(2))
         // revoking the privilege strips its grant option with it
-        for (g <- names(from); p <- privs(ps)) {
-          grants.remove(Grant(g, p, target.toLowerCase))
-          grants.remove(Grant(g, p, target.toLowerCase, grantOption = true))
+        for (g <- names(h(3)); p <- privs(h(1))) {
+          grants.remove(Grant(g, p, t))
+          grants.remove(Grant(g, p, t, grantOption = true))
         }
-        ok
-      case grantRole(rs, to) if names(rs).forall(roles.contains) =>
-        for (r <- names(rs))
-          if (me != "default" && !hasAdminOption(me, r))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $r WITH ADMIN OPTION")
-        for (g <- names(to); r <- names(rs)) {
-          knownGrantee(g)
-          roleGrants.merge(g, Set(r), _ ++ _)
-          if (withAdminOpt) roleAdminOptions.merge(g, Set(r), _ ++ _)
+        h.ok
+      },
+      maybe("""^GRANT\s+""" + roleList + """\s+TO\s+(.+?)""" + optionTail) { h =>
+        if (!names(h(1)).forall(roles.contains)) None
+        else {
+          val withAdminOpt = h.opt(3).exists(_.equalsIgnoreCase("ADMIN"))
+          requireAdminOption(currentUser(h.spark), h(1))
+          for (g <- names(h(2)); r <- names(h(1))) {
+            knownGrantee(g)
+            roleGrants.merge(g, Set(r), _ ++ _)
+            if (withAdminOpt) roleAdminOptions.merge(g, Set(r), _ ++ _)
+          }
+          Some(h.ok)
         }
-        ok
-      case revokeRole(rs, from) if names(rs).forall(roles.contains) =>
-        for (r <- names(rs))
-          if (me != "default" && !hasAdminOption(me, r))
-            throw new SecurityException(
-              s"$me: Not enough privileges. To execute this query, it's " +
-                s"necessary to have the grant $r WITH ADMIN OPTION")
-        // revoking the role strips its admin option with it
-        for (g <- names(from); r <- names(rs)) {
-          roleGrants.computeIfPresent(g, (_, cur) => cur - r)
-          roleAdminOptions.computeIfPresent(g, (_, cur) => cur - r)
+      },
+      maybe("""^REVOKE\s+""" + roleList + """\s+FROM\s+(.+?)<end>""") { h =>
+        if (!names(h(1)).forall(roles.contains)) None
+        else {
+          requireAdminOption(currentUser(h.spark), h(1))
+          // revoking the role strips its admin option with it
+          for (g <- names(h(2)); r <- names(h(1))) {
+            roleGrants.computeIfPresent(g, (_, cur) => cur - r)
+            roleAdminOptions.computeIfPresent(g, (_, cur) => cur - r)
+          }
+          Some(h.ok)
         }
-        ok
-      case _ => throw new IllegalArgumentException(
-        s"unsupported access-control statement: $stmt0")
-    }
+      },
+      reject("""^(?:(?:CREATE|DROP|ALTER)\s+(?:USER|ROLE|ROW\s+POLICY|QUOTA|SETTINGS\s+PROFILE)|GRANT|REVOKE|SET\s+(?:DEFAULT\s+)?ROLE|CHECK\s+GRANT|SHOW\s+(?:GRANTS|QUOTAS|SETTINGS\s+PROFILES|USERS|ROLES|ROW\s+POLICIES|CURRENT\s+ROLES|ENABLED\s+ROLES)|SHOW\s+CREATE\s+(?:QUOTA|SETTINGS\s+PROFILE|USER|ROLE|ROW\s+POLICY))\b.*""",
+        "access-control statement"))
   }
 
   /** All privileges effective for `who`: direct grants plus grants to
@@ -1037,16 +1001,16 @@ object AccessControl {
     val me = currentUser(spark)
     if (me == "default") return
     val stmt = stmt0.trim
+    val word = firstWord(stmt)
     // SET always passes — it is the session-auth channel itself (a
     // wedged unknown user could otherwise never switch back)
-    if (stmt.matches("(?is)^SET\\b.*")) return
+    if (word == "SET") return
     require(users.contains(me),
       s"unknown user `$me` (SET user names a user created with CREATE USER)")
     // WATCH lv reads through the live view: require SELECT on the
     // view's base tables (the stored SELECT — same data surface)
-    if (stmt.matches("(?is)^WATCH\\b.*")) {
-      val name = stmt.replaceFirst("(?is)^WATCH\\s+", "")
-        .split("\\s+").headOption.getOrElse("")
+    if (word == "WATCH") {
+      val name = stmt.split("\\s+").lift(1).getOrElse("")
       LiveViews.selectOf(name).foreach { sel =>
         touchedTables(spark, sel).foreach { t =>
           if (!allowed(me, "SELECT", t)) throw new SecurityException(
@@ -1056,14 +1020,14 @@ object AccessControl {
       }
       return
     }
-    val priv =
-      if (stmt.matches("(?is)^(SELECT|WITH)\\b.*")) Some("SELECT")
-      else if (stmt.matches("(?is)^INSERT\\b.*")) Some("INSERT")
+    val priv = word match {
+      case "SELECT" | "WITH" => Some("SELECT")
+      case "INSERT" => Some("INSERT")
       // standalone UPDATE is the same mutation as ALTER TABLE UPDATE
-      else if (stmt.matches("(?is)^(ALTER|OPTIMIZE|DELETE|UPDATE)\\b.*"))
-        Some("ALTER")
-      else if (stmt.matches("(?is)^(DROP|TRUNCATE)\\b.*")) Some("DROP")
-      else None
+      case "ALTER" | "OPTIMIZE" | "DELETE" | "UPDATE" => Some("ALTER")
+      case "DROP" | "TRUNCATE" => Some("DROP")
+      case _ => None
+    }
     priv.foreach { p =>
       touchedTables(spark, stmt).foreach { t =>
         if (!allowed(me, p, t)) throw new SecurityException(

@@ -35,6 +35,36 @@ object ChAggregates {
 
   private def agg(f: AggregateFunction): Expression = f.toAggregateExpression()
 
+  /** The reference's VarMoments (Moments.h): n and the raw power sums
+    * Σx, Σx², Σx³, Σx⁴ are plain Sums, so partial states merge exactly
+    * for integral inputs (Spark's Skewness/Kurtosis merge central
+    * moments, whose rounding follows the merge order); the central
+    * moment and the variance are then formed in the reference's operation
+    * order. `order` is 3 (skewness) or 4 (kurtosis, not excess). NULL
+    * for an empty or constant input, or a one-row sample, as Spark's own
+    * moment aggregates answer. */
+  private def standardMoment(x: Expression, order: Int, sample: Boolean): Expression = {
+    def d(v: Double) = Literal(v)
+    val v = asDouble(x)
+    val v2 = Multiply(v, v)
+    val n = asDouble(agg(Count(x)))
+    val Seq(m1, m2, m3, m4) =
+      Seq(v, v2, Multiply(v2, v), Multiply(v2, v2)).map(p => agg(Sum(p)))
+    def mean(e: Expression) = Divide(Multiply(e, m1), n) // e·Σx / n
+    val spread = Subtract(m2, mean(m1))
+    val variance = Divide(spread, if (sample) Subtract(n, d(1)) else n)
+    val central =
+      if (order == 3)
+        Subtract(m3, mean(Subtract(Multiply(d(3), m2), mean(Multiply(d(2), m1)))))
+      else
+        Subtract(m4, mean(Subtract(Multiply(d(4), m3),
+          mean(Subtract(Multiply(d(6), m2), mean(Multiply(d(3), m1)))))))
+    If(And(GreaterThan(n, d(if (sample) 1 else 0)), GreaterThan(spread, d(0))),
+      Divide(Divide(central, n),
+        if (order == 3) Pow(variance, d(1.5)) else Multiply(variance, variance)),
+      Literal(null, DoubleType))
+  }
+
   private def foldInt(e: Expression): Int = e.eval() match {
     case n: Number => n.intValue
     case other => throw new IllegalArgumentException(
@@ -539,25 +569,13 @@ object ChAggregates {
       Slice(new SortArray(agg(CollectList(args.head))), Literal(1),
         if (args.length > 1) args(1) else Literal(10))),
 
-    // skew/kurt (AggregateFunctionStatisticsSimple.cpp): Spark's
-    // skewness IS the population skewness g1 = m3/m2^1.5 and kurtosis
-    // the population EXCESS kurtosis; CH's Pop forms are the raw
-    // moments ratio and the Samp forms divide by sample moments —
-    // algebra over (g1, g2, n), no new aggregation state
-    "skewpop" -> (args => agg(Skewness(asDouble(args.head)))),
-    "skewsamp" -> (args => {
-      val n = asDouble(agg(Count(args.head)))
-      Multiply(agg(Skewness(asDouble(args.head))),
-        Pow(Divide(Subtract(n, Literal(1.0)), n), Literal(1.5)))
-    }),
-    "kurtpop" -> (args =>
-      Add(agg(Kurtosis(asDouble(args.head))), Literal(3.0))),
-    "kurtsamp" -> (args => {
-      val n = asDouble(agg(Count(args.head)))
-      val ratio = Divide(Subtract(n, Literal(1.0)), n)
-      Multiply(Add(agg(Kurtosis(asDouble(args.head))), Literal(3.0)),
-        Multiply(ratio, ratio))
-    }),
+    // skew/kurt (AggregateFunctionStatisticsSimple.cpp over Moments.h
+    // VarMoments): the standardized third/fourth central moment, from
+    // the raw power sums; the Samp forms divide by the sample variance
+    "skewpop" -> (args => standardMoment(args.head, 3, sample = false)),
+    "skewsamp" -> (args => standardMoment(args.head, 3, sample = true)),
+    "kurtpop" -> (args => standardMoment(args.head, 4, sample = false)),
+    "kurtsamp" -> (args => standardMoment(args.head, 4, sample = true)),
 
     // sumCount (AggregateFunctionSumCount.cpp): (sum, count) tuple
     "sumcount" -> (args => CreateNamedStruct(Seq(

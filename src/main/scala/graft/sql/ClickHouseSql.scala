@@ -3,7 +3,6 @@ package graft.sql
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import scala.util.matching.Regex
 
 /** Pre-parse rewriter for ClickHouse SQL-isms (SURVEY §7 item 2) — the
   * Spark analog of the reference's parser-level clauses
@@ -819,62 +818,25 @@ object ClickHouseSql {
   private val setLike = "(?is)^SET\\b.*".r
   private val createViewLike = "(?is)^CREATE\\s+(?:OR\\s+REPLACE\\s+)?VIEW\\b.*".r
 
-  /** A statement one row of the table matched: the session, the text the
-    * row read, and the row's groups, 1-based (null when a group took no
-    * part in the match). */
-  private final case class Hit(spark: SparkSession, text: String,
-      groups: IndexedSeq[String]) {
-    def apply(i: Int): String = groups(i - 1)
-    def opt(i: Int): Option[String] = Option(groups(i - 1))
-    def ok: DataFrame = ClickHouseSql.ok(spark)
-  }
+  import Lane.{lane, maybe, ok, reject}
 
-  /** One row of the statement table: a statement shape, compiled once,
-    * and the handler that reads its groups. A handler answering None
-    * passes the statement on to the next row. A `raw` row reads the
-    * statement before the SELECT-side preparation (see prepare). */
-  private final case class Lane(shape: Regex, raw: Boolean,
-      run: Hit => Option[DataFrame])
-
-  /** Shapes are case-insensitive and dot-all, and match the whole
-    * statement; `<t>` is a table name, `<c>` a column name and `<end>`
-    * an optional trailing semicolon. */
-  private def shape(s: String): Regex = ("(?is)" + s
-    .replace("<t>", "[A-Za-z_][A-Za-z0-9_.]*")
-    .replace("<c>", "[A-Za-z_][A-Za-z0-9_]*")
-    .replace("<end>", "\\s*;?\\s*$")).r
-
-  private def lane(s: String, raw: Boolean = false)(run: Hit => DataFrame): Lane =
-    Lane(shape(s), raw, h => Some(run(h)))
-
-  private def maybe(s: String, raw: Boolean = false)(
-      run: Hit => Option[DataFrame]): Lane = Lane(shape(s), raw, run)
-
-  /** The statement starts like one of a family's rows but none of them
-    * took it: fail loudly rather than hand it to Spark's parser. */
-  private def reject(s: String, what: String, raw: Boolean = false): Lane =
-    lane(s, raw)(_ => throw new IllegalArgumentException(s"unsupported $what"))
-
-  /** The one-row `status` frame a statement without a result answers. */
-  private def ok(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq("OK").toDF("status")
-  }
-
+  /** One statement, its bound relation names dropped on the way out
+    * (see Scope). */
   private def sqlImpl(spark: SparkSession, chSql: String): DataFrame = {
+    val scope = new Scope(spark)
+    try run(scope, chSql) finally scope.close()
+  }
+
+  private def run(scope: Scope, chSql: String): DataFrame = {
+    val spark = scope.spark
     ChFunctionRegistry.install(spark)
+    graft.plans.Rules.install(spark)
     // SET query_id = 'x' tags this thread's jobs with a cancellable group
     // (the reference's query_id + KILL QUERY pair; Spark job groups are
     // the cancellation primitive)
     spark.conf.getOption("graft.ch.query_id").foreach(id =>
       spark.sparkContext.setJobGroup(id, chSql.take(120),
         interruptOnCancel = true))
-    // optimize_trivial_count_query analog: bare SELECT count() answers
-    // from parquet footers (graft.plans.TrivialCount), never scanning
-    graft.plans.TrivialCount.install(spark)
-    // one range exchange for a window followed by an ORDER BY on its
-    // partition keys (graft.plans.RangeWindowSort)
-    graft.plans.RangeWindowSort.install(spark)
     // RBAC gate (src/Access/): row-policy shadow maintenance FIRST
     // (applies/retires filtered views for the current user), then the
     // privilege check for the session's SET user against the grant
@@ -903,7 +865,7 @@ object ClickHouseSql {
       val t0 =
         if (setLike.matches(stripped)) stripped
         else if (dialect == "kusto") KqlTranslator.translate(spark, stripped)
-        else if (dialect == "prql") PrqlTranslator.translate(spark, stripped)
+        else if (dialect == "prql") PrqlTranslator.translate(scope, stripped)
         else stripped
       // CREATE VIEW bodies KEEP their placeholders — they substitute at
       // call time, per view invocation (parameterized views)
@@ -918,10 +880,10 @@ object ClickHouseSql {
     }
     // the first row whose shape matches runs; rows past the raw ones
     // read the prepared statement
-    lazy val prepared = prepare(spark, raw)
+    lazy val prepared = prepare(scope, raw)
     statements.iterator.flatMap { l =>
       val text = if (l.raw) raw else prepared
-      l.shape.unapplySeq(text).flatMap(g => l.run(Hit(spark, text, g.toIndexedSeq)))
+      l.shape.unapplySeq(text).flatMap(g => l.run(Hit(scope, text, g.toIndexedSeq)))
     }.next()
   }
 
@@ -1136,16 +1098,16 @@ object ClickHouseSql {
 
   private val trailingFormat =
     "(?is)^((?:SELECT|WITH)\\b.*?)\\s+FORMAT\\s+[A-Za-z0-9]+\\s*;?\\s*$".r
-  private val systemMention = "\\bsystem\\.([a-z_]+)\\b".r
 
   /** The statement every row past the raw ones reads. A SELECT loses a
     * trailing FORMAT clause (it names the client-side serialization; the
     * wire codecs live in sources/ChWireFormats and the result itself is
-    * format-independent), materializes the system tables it mentions,
-    * and has its table functions — file(), deltaLake(), format(), … —
-    * and parameterized views resolved to temp views. Every statement
-    * then reads `system.<t>` as the view `graft_system_<t>`. */
-  private def prepare(spark: SparkSession, raw: String): String = {
+    * format-independent) and has its table functions — file(),
+    * deltaLake(), format(), … — and parameterized views resolved. Every
+    * statement then reads each `system.<t>` it names, in any case, from
+    * a snapshot taken now. Resolved relations are bound in `scope`. */
+  private def prepare(scope: Scope, raw: String): String = {
+    val spark = scope.spark
     val s =
       if (!selectLike.matches(raw)) raw
       else {
@@ -1153,16 +1115,17 @@ object ClickHouseSql {
           case trailingFormat(core) => core
           case _ => raw
         }
-        systemMention.findAllMatchIn(noFmt).map(_.group(1)).toSeq.distinct
-          .foreach(t => systemTables.get(t).foreach(table =>
-            table(spark, noFmt).createOrReplaceTempView(s"graft_system_$t")))
         resolveParamViews(spark,
-          resolveMergeFn(spark, resolveFileFn(spark,
-            resolveFormatFn(spark, resolveRemoteFn(spark,
-              resolveNullFn(spark, resolveDeltaLakeFn(spark,
+          resolveMergeFn(scope, resolveFileFn(scope,
+            resolveFormatFn(scope, resolveRemoteFn(spark,
+              resolveNullFn(scope, resolveDeltaLakeFn(scope,
                 resolveCollectionFileFn(noFmt))))))))
       }
-    SqlLex.replaceAll(s, systemName)(m => "graft_system_" + m.group(1))
+    val snapshots = scala.collection.mutable.Map.empty[String, String]
+    SqlLex.replaceAll(s, systemName) { m =>
+      val t = m.group(1).toLowerCase
+      snapshots.getOrElseUpdate(t, scope.bind(systemTables(t)(spark, s)))
+    }
   }
 
   /** `FROM system.<t>` (StorageSystemFactory routing): the argless system
@@ -1406,10 +1369,7 @@ object ClickHouseSql {
     // plain catalog views fall through to Spark's DROP VIEW
     maybe("""^DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""", raw = true)(h =>
       Option(paramViews.remove(h(1).toLowerCase)).map(_ => h.ok)),
-
-    // ---- DDL and catalog ----
-    lane("""^(?:CREATE|DROP)\s+DICTIONARY\b.*""")(h =>
-      Dictionaries.execute(h.spark, h.text)),
+  ) ++ Dictionaries.statements ++ Seq( // ---- DDL and catalog ----
     // DESCRIBE TABLE (ParserDescribeTableQuery): reference-shaped
     // (name, type) rows with CH type names
     lane("""^DESC(?:RIBE)?(?:\s+TABLE)?\s+(<t>)<end>""") { h =>
@@ -1611,8 +1571,7 @@ object ClickHouseSql {
     },
     reject("""^(?:CREATE|DROP)\s+(?:WORKLOAD|RESOURCE)\b.*""",
       "WORKLOAD/RESOURCE form"),
-    Lane(AccessControl.statement, raw = false, h =>
-      Some(AccessControl.execute(h.spark, h.text))),
+  ) ++ AccessControl.statements ++ Seq(
     // EXCHANGE TABLES a AND b (InterpreterRenameQuery exchange=true):
     // atomic in the reference; here a triple rename through a temp name
     lane("""^EXCHANGE\s+TABLES\s+(<t>)\s+AND\s+(<t>)<end>""") { h =>
@@ -2177,10 +2136,14 @@ object ClickHouseSql {
       case other => throw new IllegalArgumentException(
         s"FROM INFILE: unsupported format '$other'")
     }
-    alignInsert(spark, t, df, None).write.mode("append").insertInto(t)
+    // rows_read comes from the insert's own pass over the file
+    import org.apache.spark.sql.functions.{count, lit}
+    val read = org.apache.spark.sql.Observation()
+    alignInsert(spark, t, df.observe(read, count(lit(1)).as("n")), None)
+      .write.mode("append").insertInto(t)
     afterWrite(spark, t)
     import spark.implicits._
-    Seq(df.count()).toDF("rows_read")
+    Seq(read.get("n").asInstanceOf[Long]).toDF("rows_read")
   }
 
   /** SHOW CREATE TABLE (InterpreterShowCreateQuery): render the
@@ -2679,7 +2642,7 @@ object ClickHouseSql {
     val (spark, select) = (h.spark, h(2) != null)
     val preJoined =
       if (select && JoinSpellings.applies(h.text))
-        JoinSpellings.rewrite(spark, h.text, selectRunner(spark))
+        JoinSpellings.rewrite(h.scope, h.text, selectRunner(h.scope))
       else h.text
     val result = spark.sql(rewrite(expandSchemaTransformers(spark,
       bindDeclaredOrder(spark, preJoined))))
@@ -2764,13 +2727,13 @@ object ClickHouseSql {
     * dialect treatment including NESTED join spellings (an ASOF side
     * may itself contain an ANY JOIN). Lazy — callers that only need the
     * schema never run a job. */
-  private[sql] def selectRunner(spark: SparkSession): String => DataFrame =
+  private def selectRunner(scope: Scope): String => DataFrame =
     s0 => {
       val s1 =
         if (JoinSpellings.applies(s0))
-          JoinSpellings.rewrite(spark, s0, selectRunner(spark))
+          JoinSpellings.rewrite(scope, s0, selectRunner(scope))
         else s0
-      spark.sql(rewrite(expandSchemaTransformers(spark, s1)))
+      scope.spark.sql(rewrite(expandSchemaTransformers(scope.spark, s1)))
     }
 
   // ---- projection DDL (ParserProjection → plans/*Projections) ---------
@@ -2953,8 +2916,6 @@ object ClickHouseSql {
       }.mkString(", "))
   }
 
-  private val fileFnCounter = new java.util.concurrent.atomic.AtomicLong()
-
   // ---- workloads / resources (ParserCreateWorkloadQuery,
   // ParserCreateResourceQuery; src/Common/Scheduler/) -------------------
   //
@@ -3018,13 +2979,14 @@ object ClickHouseSql {
 
   /** `deltaLake('path'[, version])` (TableFunctionObjectStorage.h:100
     * DeltaLakeDefinition — the reference's Delta table function; the
-    * S3/Azure twins are credentialed variants of the same read): a temp
-    * view over the native log replay (sources/DeltaLakeSource). The
+    * S3/Azure twins are credentialed variants of the same read): a name
+    * bound to the native log replay (sources/DeltaLakeSource). The
     * optional second argument is `versionAsOf` time travel. */
   private val deltaLakeFnRe =
     "(?i)\\bdeltaLake(?:Local)?\\s*\\(\\s*'([^']+)'\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
 
-  private def resolveDeltaLakeFn(spark: SparkSession, sql0: String): String = {
+  private def resolveDeltaLakeFn(scope: Scope, sql0: String): String = {
+    val spark = scope.spark
     // *Cluster variants (TableFunctionObjectStorageCluster.cpp:
     // deltaLakeCluster/icebergCluster/hudiCluster — same read with a
     // cluster routing hint as arg 1): Spark IS the cluster here, so the
@@ -3039,11 +3001,8 @@ object ClickHouseSql {
     val step0c = SqlLex.replaceAll(step0,
       ("(?i)\\btable_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*(\\d+)\\s*" +
         "(?:,\\s*(\\d+)\\s*)?\\)").r) { g =>
-      val df = graft.sources.DeltaLakeSource.readChanges(spark, g.group(1),
-        g.group(2).toLong, Option(g.group(3)).map(_.toLong))
-      val view = s"graft_delta_cdf_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+      scope.bind(graft.sources.DeltaLakeSource.readChanges(spark, g.group(1),
+        g.group(2).toLong, Option(g.group(3)).map(_.toLong)))
     }
     // iceberg_changes('path', fromSnap[, toSnap]) — the Iceberg
     // incremental append scan (round 16): rows appended strictly after
@@ -3052,11 +3011,8 @@ object ClickHouseSql {
     val step0d = SqlLex.replaceAll(step0c,
       ("(?i)\\biceberg_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*(\\d+)\\s*" +
         "(?:,\\s*(\\d+)\\s*)?\\)").r) { g =>
-      val df = graft.sources.IcebergSource.readIncremental(spark,
-        g.group(1), g.group(2).toLong, Option(g.group(3)).map(_.toLong))
-      val view = s"graft_ice_inc_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+      scope.bind(graft.sources.IcebergSource.readIncremental(spark,
+        g.group(1), g.group(2).toLong, Option(g.group(3)).map(_.toLong)))
     }
     // hudi_changes('path', 'fromInstant'[, 'toInstant']) — the Hudi
     // incremental query (round 16): rows whose winning event committed
@@ -3064,18 +3020,12 @@ object ClickHouseSql {
     val step0e = SqlLex.replaceAll(step0d,
       ("(?i)\\bhudi_changes\\s*\\(\\s*'([^']+)'\\s*,\\s*'([^']*)'\\s*" +
         "(?:,\\s*'([^']*)'\\s*)?\\)").r) { g =>
-      val df = graft.sources.HudiSource.readIncremental(spark, g.group(1),
-        g.group(2), Option(g.group(3)))
-      val view = s"graft_hudi_inc_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+      scope.bind(graft.sources.HudiSource.readIncremental(spark, g.group(1),
+        g.group(2), Option(g.group(3))))
     }
     val step1 = SqlLex.replaceAll(step0e, deltaLakeFnRe) { g =>
-      val df = graft.sources.DeltaLakeSource.read(spark, g.group(1),
-        Option(g.group(2)).map(_.toLong))
-      val view = s"graft_delta_fn_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+      scope.bind(graft.sources.DeltaLakeSource.read(spark, g.group(1),
+        Option(g.group(2)).map(_.toLong)))
     }
     // hudi('path'[, 'instant']) (TableFunctionObjectStorage.h:118) —
     // native latest-file-slice selection with timeline awareness
@@ -3086,11 +3036,8 @@ object ClickHouseSql {
       // literal-masked SQL, where digits inside quotes are hidden —
       // the argument text slices from the original by position
       "(?i)\\bhudi\\s*\\(\\s*'([^']+)'\\s*(?:,\\s*'([^']*)'\\s*)?\\)".r) { g =>
-      val df = graft.sources.HudiSource.read(spark, g.group(1),
-        Option(g.group(2)))
-      val view = s"graft_hudi_fn_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+      scope.bind(graft.sources.HudiSource.read(spark, g.group(1),
+        Option(g.group(2))))
     }
     // iceberg('path'[, snapshotId]) — native metadata/manifest replay
     // (IcebergMetadata.cpp)
@@ -3104,20 +3051,18 @@ object ClickHouseSql {
           .map(_.stripPrefix("'").stripSuffix("'").trim.toLong)
           .filter(_ != 0L)
       val explicit = Option(g.group(2)).map(_.toLong)
-      val df = graft.sources.IcebergSource.read(spark, g.group(1),
+      scope.bind(graft.sources.IcebergSource.read(spark, g.group(1),
         explicit.orElse(setting("iceberg_snapshot_id")),
-        if (explicit.isDefined) None else setting("iceberg_timestamp_ms"))
-      val view = s"graft_iceberg_fn_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      view
+        if (explicit.isDefined) None else setting("iceberg_timestamp_ms")))
     }
   }
 
   /** Replace every `file('path'[, 'Format'[, 'schema']])` call with a
-    * temp view over the matching reader. Formats without self-describing
+    * name bound to the matching reader. Formats without self-describing
     * headers require the schema argument, like the reference. */
-  private def resolveFileFn(spark: SparkSession, sql0: String): String =
+  private def resolveFileFn(scope: Scope, sql0: String): String =
     fileFnRe.replaceAllIn(sql0, m => {
+      val spark = scope.spark
       val path = m.group(1)
       val fmt = Option(m.group(2)).getOrElse("Parquet")
       val schema = Option(m.group(3)).map(chSchemaToStruct)
@@ -3171,9 +3116,7 @@ object ClickHouseSql {
         case other => throw new IllegalArgumentException(
           s"file(): unsupported format '$other'")
       }
-      val view = s"graft_file_fn_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
+      scope.bind(df)
     })
 
   // ---- null() + remote() table functions -------------------------------
@@ -3183,14 +3126,12 @@ object ClickHouseSql {
   /** `null('a Int64, b String')` (TableFunctionNull.cpp / StorageNull):
     * a table of the given structure whose reads are empty (writes into
     * Null storage are discarded; the read side is what a SELECT sees). */
-  private def resolveNullFn(spark: SparkSession, sql0: String): String =
+  private def resolveNullFn(scope: Scope, sql0: String): String =
     nullFnRe.replaceAllIn(sql0, m => {
-      val schema = chSchemaToStruct(m.group(1))
-      val view = s"graft_null_fn_${fileFnCounter.incrementAndGet()}"
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
+      val spark = scope.spark
+      scope.bind(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        chSchemaToStruct(m.group(1))))
     })
 
   private val remoteFnRe =
@@ -3253,12 +3194,13 @@ object ClickHouseSql {
     sb.toString
   }
 
-  /** Replace `format(Fmt, 'data')` with a temp view over the parsed
+  /** Replace `format(Fmt, 'data')` with a name bound to the parsed
     * inline data (TableFunctionFormat.cpp: parse a literal through the
     * named input format, schema INFERRED from the data). Nameless
     * formats name columns c1..cN like the reference's inference does. */
-  private def resolveFormatFn(spark: SparkSession, sql0: String): String =
+  private def resolveFormatFn(scope: Scope, sql0: String): String =
     formatFnRe.replaceAllIn(sql0, m => {
+      val spark = scope.spark
       val fmt = m.group(1).toLowerCase
       val data = unescapeChString(m.group(2))
       def c1cN(df: org.apache.spark.sql.DataFrame) =
@@ -3269,9 +3211,8 @@ object ClickHouseSql {
         java.nio.file.Files.writeString(f, data)
         // localCheckpoint (eager) pins the parsed rows in executor storage
         // so the temp file can be deleted immediately — repeated format()
-        // calls in a long session no longer leak temp dirs, and the temp
-        // view registered below references the checkpointed frame, not
-        // the deleted file.
+        // calls in a long session no longer leak temp dirs, and the name
+        // bound below reads the checkpointed frame, not the deleted file.
         try read(f.toString).localCheckpoint()
         finally {
           java.nio.file.Files.deleteIfExists(f)
@@ -3295,9 +3236,7 @@ object ClickHouseSql {
         case other => throw new IllegalArgumentException(
           s"format(): unsupported inline format '$other'")
       }
-      val view = s"graft_format_fn_${fileFnCounter.incrementAndGet()}"
-      df.createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
+      scope.bind(df)
     })
 
   // ---- merge() table function (TableFunctionMerge.cpp) ----------------
@@ -3305,20 +3244,19 @@ object ClickHouseSql {
   private val mergeFnRe =
     "(?i)\\bmerge\\s*\\(\\s*(?:'[^']*'\\s*,\\s*)?'([^']+)'\\s*\\)".r
 
-  /** Replace `merge(['db',] 'name_regex')` with a temp view unioning (by
-    * name) every catalog table whose name matches — the reference's
-    * multi-table union storage (StorageMerge). */
-  private def resolveMergeFn(spark: SparkSession, sql0: String): String =
+  /** Replace `merge(['db',] 'name_regex')` with a name bound to the
+    * union (by name) of every catalog table whose name matches — the
+    * reference's multi-table union storage (StorageMerge). */
+  private def resolveMergeFn(scope: Scope, sql0: String): String =
     mergeFnRe.replaceAllIn(sql0, m => {
+      val spark = scope.spark
       val pattern = m.group(1).r
       val names = spark.catalog.listTables().collect()
         .map(_.name).filter(n => pattern.findFirstIn(n).isDefined).sorted
       require(names.nonEmpty, s"merge(): no table matches '${m.group(1)}'")
       val unioned = names.map(spark.table)
         .reduce(_ unionByName (_, allowMissingColumns = true))
-      val view = s"graft_merge_fn_${fileFnCounter.incrementAndGet()}"
-      unioned.createOrReplaceTempView(view)
-      java.util.regex.Matcher.quoteReplacement(view)
+      scope.bind(unioned)
     })
 
   // ---- parameterized views (StorageView.cpp parameterized views) ------

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
+import Lane.lane
 
 /** SQL dictionary surface: `CREATE DICTIONARY` DDL + the dictGet* function
   * family (reference: src/Dictionaries/ directory, SQL functions in
@@ -66,7 +67,7 @@ object Dictionaries {
     names.foreach { n =>
       Option(ddlText.get(n)).foreach { stmt =>
         dicts.remove(n)
-        execute(spark, stmt)
+        stmt match { case ddl(groups @ _*) => create(spark, stmt, groups) }
       }
     }
   }
@@ -76,83 +77,83 @@ object Dictionaries {
     * steers such dicts to CACHE/DIRECT layouts (= our broadcast join op). */
   val maxRows = 100000
 
-  private val ddlRe =
-    ("(?is)^CREATE\\s+DICTIONARY\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.*?)\\)\\s*" +
-      "PRIMARY\\s+KEY\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*" +
-      "SOURCE\\s*\\(\\s*\\w+\\s*\\(.*?TABLE\\s+'([A-Za-z_][A-Za-z0-9_.]*)'.*?\\)\\s*\\)" +
-      ".*$").r
+  private val ddl = Lane.shape(
+    """^CREATE\s+DICTIONARY\s+(IF\s+NOT\s+EXISTS\s+)?(<c>)\s*\((.*?)\)\s*""" +
+      """PRIMARY\s+KEY\s+(<c>)\s*""" +
+      """SOURCE\s*\(\s*\w+\s*\(.*?TABLE\s+'(<t>)'.*?\)\s*\).*""")
+  private val columnDef = ("(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s+" +
+    "([A-Za-z0-9_()\\s,]+?)(?:\\s+DEFAULT\\s+(.+?))?\\s*$").r
+  private val hierarchical = "(?i)\\bHIERARCHICAL\\b".r
+  private val attributeHints = "(?i)\\s+(HIERARCHICAL|INJECTIVE)\\b".r
 
-  /** Handle CREATE/DROP DICTIONARY; returns a 1-row status frame. */
-  def execute(spark: SparkSession, stmt0: String): DataFrame = {
-    val stmt = stmt0.trim
-    if (stmt.matches("(?is)^DROP\\s+DICTIONARY\\b.*")) {
-      val name = stmt.replaceAll("(?is)^DROP\\s+DICTIONARY\\s+(IF\\s+EXISTS\\s+)?", "")
-        .replaceAll("[;\\s]+$", "")
-      dicts.remove(name)
-      return status(spark)
+  /** Rows of the dialect's statement table (ClickHouseSql.statements):
+    * CREATE and DROP DICTIONARY; the last row refuses other forms. */
+  private[sql] val statements: Seq[Lane] = Seq(
+    Lane(ddl, raw = false, h => Some(create(h.spark, h.text, h.groups))),
+    lane("""^DROP\s+DICTIONARY\s+(?:IF\s+EXISTS\s+)?(<t>)<end>""") { h =>
+      dicts.remove(h(1))
+      h.ok
+    },
+    Lane.reject("""^(?:CREATE|DROP)\s+DICTIONARY\b.*""",
+      "CREATE DICTIONARY form (need PRIMARY KEY + SOURCE(...(TABLE 'name')))"))
+
+  /** CREATE DICTIONARY from the `ddl` shape's groups: (IF NOT EXISTS,
+    * name, column list, key, source table). */
+  private def create(spark: SparkSession, stmt: String,
+      groups: Seq[String]): DataFrame = {
+    val Seq(ifNot, name, colsRaw, pk, srcTable) = groups
+    if (ifNot != null && dicts.containsKey(name)) return Lane.ok(spark)
+    val colDefs = SqlLex.splitTop(colsRaw).map { cd0 =>
+      // HIERARCHICAL marks the key→parent attribute
+      // (DictionaryStructure hierarchical flag); INJECTIVE is a
+      // lookup-optimization hint — recorded/dropped respectively
+      val hier = hierarchical.findFirstIn(cd0).isDefined
+      attributeHints.replaceAllIn(cd0, "").trim match {
+        case columnDef(cname, ctype, dflt) =>
+          val dt = CatalystSqlParser.parseDataType(
+            ClickHouseSql.sparkTypeText(ctype.trim))
+          (cname, dt, Option(dflt), hier)
+        case other => throw new IllegalArgumentException(
+          s"unparsable dictionary column '$other'")
+      }
     }
-    stmt match {
-      case ddlRe(ifNot, name, colsRaw, pk, srcTable) =>
-        if (ifNot != null && dicts.containsKey(name)) return status(spark)
-        val colDefs = SqlLex.splitTop(colsRaw).map { cd0 =>
-          // HIERARCHICAL marks the key→parent attribute
-          // (DictionaryStructure hierarchical flag); INJECTIVE is a
-          // lookup-optimization hint — recorded/dropped respectively
-          val hier = "(?i)\\bHIERARCHICAL\\b".r.findFirstIn(cd0).isDefined
-          val cd = cd0.replaceAll("(?i)\\s+(HIERARCHICAL|INJECTIVE)\\b", "")
-          val m = ("(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s+([A-Za-z0-9_()\\s,]+?)" +
-            "(?:\\s+DEFAULT\\s+(.+?))?\\s*$").r
-          cd.trim match {
-            case m(cname, ctype, dflt) =>
-              val dt = CatalystSqlParser.parseDataType(
-                ClickHouseSql.sparkTypeText(ctype.trim))
-              (cname, dt, Option(dflt), hier)
-            case other => throw new IllegalArgumentException(
-              s"unparsable dictionary column '$other'")
-          }
-        }
-        val keyDef = colDefs.find(_._1 == pk).getOrElse(
-          throw new IllegalArgumentException(s"PRIMARY KEY $pk not in columns"))
-        val attrDefs = colDefs.filterNot(_._1 == pk)
-        // cast source columns to the DECLARED types up front so collected
-        // externals match what CatalystTypeConverters expects per type
-        // (e.g. a bigint source column into a DECIMAL(20,0) UInt64 attr)
-        val src = spark.table(srcTable)
-          .select((keyDefCast(pk, colDefs) +:
-            attrDefs.map(a => keyDefCast(a._1, colDefs))): _*)
-        val rows = src.limit(maxRows + 1).collect()
-        if (rows.length > maxRows) throw new IllegalArgumentException(
-          s"dictionary $name source exceeds $maxRows rows — use the " +
-            "broadcast-join dictGet operator for large dictionaries")
-        val keyType = keyDef._2
-        val keyConv = CatalystTypeConverters.createToCatalystConverter(keyType)
-        val keys = rows.map(r => keyConv(r.get(0)))
-        val attrs = attrDefs.zipWithIndex.map { case ((aname, atype, dflt, _), i) =>
-          val conv = CatalystTypeConverters.createToCatalystConverter(atype)
-          val values = rows.map(r => conv(r.get(i + 1)))
-          val mapLit = Literal(
-            new ArrayBasedMapData(new GenericArrayData(keys),
-              new GenericArrayData(values)),
-            MapType(keyType, atype, valueContainsNull = true))
-          val default = dflt match {
-            case Some(d) => Literal.create(
-              CatalystTypeConverters.convertToScala(
-                Cast(parseLiteral(d), atype).eval(), atype), atype)
-            case None => typeZero(atype)
-          }
-          aname -> DictAttr(mapLit, atype, default)
-        }.toMap
-        dicts.put(name, Dict(name, keyType,
-          Literal(new GenericArrayData(keys),
-            ArrayType(keyType, containsNull = false)), attrs,
-          colDefs.find(_._4).map(_._1)))
-        ddlText.put(name, stmt)
-        status(spark)
-      case _ => throw new IllegalArgumentException(
-        "unsupported CREATE DICTIONARY form (need PRIMARY KEY + " +
-          "SOURCE(...(TABLE 'name')))")
-    }
+    val keyDef = colDefs.find(_._1 == pk).getOrElse(
+      throw new IllegalArgumentException(s"PRIMARY KEY $pk not in columns"))
+    val attrDefs = colDefs.filterNot(_._1 == pk)
+    // cast source columns to the DECLARED types up front so collected
+    // externals match what CatalystTypeConverters expects per type
+    // (e.g. a bigint source column into a DECIMAL(20,0) UInt64 attr)
+    val src = spark.table(srcTable)
+      .select((keyDefCast(pk, colDefs) +:
+        attrDefs.map(a => keyDefCast(a._1, colDefs))): _*)
+    val rows = src.limit(maxRows + 1).collect()
+    if (rows.length > maxRows) throw new IllegalArgumentException(
+      s"dictionary $name source exceeds $maxRows rows — use the " +
+        "broadcast-join dictGet operator for large dictionaries")
+    val keyType = keyDef._2
+    val keyConv = CatalystTypeConverters.createToCatalystConverter(keyType)
+    val keys = rows.map(r => keyConv(r.get(0)))
+    val attrs = attrDefs.zipWithIndex.map { case ((aname, atype, dflt, _), i) =>
+      val conv = CatalystTypeConverters.createToCatalystConverter(atype)
+      val values = rows.map(r => conv(r.get(i + 1)))
+      val mapLit = Literal(
+        new ArrayBasedMapData(new GenericArrayData(keys),
+          new GenericArrayData(values)),
+        MapType(keyType, atype, valueContainsNull = true))
+      val default = dflt match {
+        case Some(d) => Literal.create(
+          CatalystTypeConverters.convertToScala(
+            Cast(parseLiteral(d), atype).eval(), atype), atype)
+        case None => typeZero(atype)
+      }
+      aname -> DictAttr(mapLit, atype, default)
+    }.toMap
+    dicts.put(name, Dict(name, keyType,
+      Literal(new GenericArrayData(keys),
+        ArrayType(keyType, containsNull = false)), attrs,
+      colDefs.find(_._4).map(_._1)))
+    ddlText.put(name, stmt)
+    Lane.ok(spark)
   }
 
   private def keyDefCast(name: String,
@@ -179,11 +180,6 @@ object Dictionaries {
     case TimestampType => Literal(
       Cast(Literal("1970-01-01 00:00:00"), TimestampType).eval(), TimestampType)
     case _ => Literal.create(null, dt)
-  }
-
-  private def status(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq("OK").toDF("status")
   }
 
   /** Registry listing for system.dictionaries (reference:

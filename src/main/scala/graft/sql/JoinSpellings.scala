@@ -23,12 +23,12 @@ import org.apache.spark.sql.types._
   *    engine pins a total order instead).
   *  - ASOF: routed onto the oracled `JoinOps.asofJoinKeys` union-window
   *    operator (ONE shuffle — the same cost class as the reference's
-  *    full-sorting-merge ASOF). The join segment is replaced by a temp
-  *    view over the operator's output; right-side column references
-  *    (`r.c`, and bare right-only names) remap to the operator's
-  *    `asof_c` output convention.
+  *    full-sorting-merge ASOF). The join segment is replaced by a name
+  *    the statement's [[Scope]] binds to the operator's output;
+  *    right-side column references (`r.c`, and bare right-only names)
+  *    remap to the operator's `asof_c` output convention.
   *  - PASTE: routed onto `JoinOps.pasteJoin` (positional zip via
-  *    RDD.zipWithIndex — stays distributed) through the same temp-view
+  *    RDD.zipWithIndex — stays distributed) through the same bound-name
   *    surgery.
   *
   * SUPPORTED FORMS (loud errors otherwise — never silent misreads):
@@ -42,25 +42,6 @@ object JoinSpellings {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Bounded ledger for the rewrite's temp views: each ASOF/PASTE
-    * statement registers a `graft_asof_join_N` / `graft_paste_join_N`
-    * view the rewritten SQL references; a long session would otherwise
-    * accumulate catalog entries without bound. Dropping immediately is
-    * unsafe (the caller analyzes the rewritten SQL AFTER the rewrite
-    * returns), but by the time 128 NEWER statements have been rewritten,
-    * the owning statement's analysis has long completed (it happens
-    * synchronously inside the same sql() call) — so evict the oldest. */
-  private val viewLedger = new java.util.ArrayDeque[String]()
-  private[graft] val viewLedgerCap = 128
-
-  private[graft] def registerBounded(spark: SparkSession, view: String,
-      df: DataFrame): Unit = synchronized {
-    df.createOrReplaceTempView(view)
-    viewLedger.addLast(view)
-    while (viewLedger.size > viewLedgerCap)
-      spark.catalog.dropTempView(viewLedger.removeFirst())
-  }
-
   /** Cheap guard: does the statement contain one of the spellings
     * outside string literals? Ordinary SQL never pays rewrite cost. */
   def applies(sql: String): Boolean = {
@@ -71,12 +52,12 @@ object JoinSpellings {
   /** Apply all three spellings. `run` evaluates dialect SQL to a
     * DataFrame (lazy — subquery sides resolve schema without a job,
     * and materialize only when the final plan executes). */
-  def rewrite(spark: SparkSession, sql: String,
+  def rewrite(scope: Scope, sql: String,
       run: String => DataFrame): String = {
     var s = sql
-    s = rewriteAny(spark, s, run)
-    s = rewriteAsof(spark, s, run)
-    s = rewritePaste(spark, s, run)
+    s = rewriteAny(scope.spark, s, run)
+    s = rewriteAsof(scope, s, run)
+    s = rewritePaste(scope, s, run)
     s
   }
 
@@ -355,7 +336,7 @@ object JoinSpellings {
 
   // ---- ASOF JOIN -------------------------------------------------------
 
-  private def rewriteAsof(spark: SparkSession, sql0: String,
+  private def rewriteAsof(scope: Scope, sql0: String,
       run: String => DataFrame): String = {
     var s = sql0
     var budget = 4
@@ -367,19 +348,19 @@ object JoinSpellings {
           budget -= 1
           val kind = Seq(Option(jm.group(1)), Option(jm.group(2))).flatten
             .headOption.map(_.toUpperCase).getOrElse("INNER")
-          s = rewriteOneAsof(spark, s, m, jm, kind, run)
+          s = rewriteOneAsof(scope, s, m, jm, kind, run)
       }
     }
     s
   }
 
-  private def rewriteOneAsof(spark: SparkSession, s: String, m: String,
+  private def rewriteOneAsof(scope: Scope, s: String, m: String,
       jm: scala.util.matching.Regex.Match, kind: String,
       run: String => DataFrame): String = {
     val (fromStart, lRel) = leftRelBefore(s, m, jm.start, "ASOF JOIN")
     val rRel = parseRel(s, m, jm.end)
-    val lDf = resolveRel(spark, lRel, run)
-    val rDf = resolveRel(spark, rRel, run)
+    val lDf = resolveRel(scope.spark, lRel, run)
+    val rDf = resolveRel(scope.spark, rRel, run)
     val lq = lRel.qualifier
     val rq = rRel.qualifier
     val lColsSet = lDf.columns.map(_.toLowerCase).toSet
@@ -488,9 +469,7 @@ object JoinSpellings {
     val joined =
       if (kind == "INNER") joined0.filter(col(s"asof_$rtc").isNotNull)
       else joined0
-    val view = s"graft_asof_join_${counter.incrementAndGet()}"
-    registerBounded(spark, view, joined)
-    val rewritten = s.substring(0, fromStart) + s"FROM $view " +
+    val rewritten = s.substring(0, fromStart) + s"FROM ${scope.bind(joined)} " +
       s.substring(ce)
     val rightOnly = rDf.columns.filterNot(c =>
       lColsSet.contains(c.toLowerCase)).toSeq
@@ -499,7 +478,7 @@ object JoinSpellings {
 
   // ---- PASTE JOIN ------------------------------------------------------
 
-  private def rewritePaste(spark: SparkSession, sql0: String,
+  private def rewritePaste(scope: Scope, sql0: String,
       run: String => DataFrame): String = {
     var s = sql0
     var budget = 4
@@ -512,17 +491,15 @@ object JoinSpellings {
           val (fromStart, lRel) =
             leftRelBefore(s, m, jm.start, "PASTE JOIN")
           val rRel = parseRel(s, m, jm.end)
-          val lDf = resolveRel(spark, lRel, run)
-          val rDf = resolveRel(spark, rRel, run)
+          val lDf = resolveRel(scope.spark, lRel, run)
+          val rDf = resolveRel(scope.spark, rRel, run)
           val overlap = lDf.columns.map(_.toLowerCase).toSet
             .intersect(rDf.columns.map(_.toLowerCase).toSet)
           if (overlap.nonEmpty) throw new IllegalArgumentException(
             "PASTE JOIN: sides share column names " +
               overlap.mkString("[", ", ", "]") + " — rename in a subquery")
           val zipped = graft.operators.JoinOps.pasteJoin(lDf, rDf)
-          val view = s"graft_paste_join_${counter.incrementAndGet()}"
-          registerBounded(spark, view, zipped)
-          val out = s.substring(0, fromStart) + s"FROM $view" +
+          val out = s.substring(0, fromStart) + s"FROM ${scope.bind(zipped)}" +
             s.substring(rRel.end)
           // both sides' columns keep their names — strip the qualifiers
           s = Seq(lRel.qualifier, rRel.qualifier).flatten

@@ -28,8 +28,8 @@ package graft.sql
   * and `loop (pipeline)` — PRQL's fixpoint iteration (union of every
   * iteration's result until an iteration is empty), run as a
   * driver-side fixpoint of distributed jobs exactly like the recursive
-  * CTE lane (needs the session — the translate(spark, …) entry the
-  * dialect switch uses). Still loud: `select !{…}` exclusion.
+  * CTE lane (needs the statement's [[Scope]] — the translate(scope, …)
+  * entry the dialect switch uses). Still loud: `select !{…}` exclusion.
   */
 object PrqlTranslator {
 
@@ -40,8 +40,7 @@ object PrqlTranslator {
   /** Pure translation — `loop` (which must EXECUTE) is loud here. */
   def translate(prql: String): String = translate(null, prql)
 
-  def translate(spark: org.apache.spark.sql.SparkSession,
-      prql: String): String = {
+  def translate(scope: Scope, prql: String): String = {
     // pipeline stages: top-level newlines and '|'
     val stages = SqlLex.splitTop(prql, "\n").flatMap(SqlLex.splitTop(_, "|"))
     require(stages.nonEmpty, "PRQL: empty pipeline")
@@ -178,15 +177,14 @@ object PrqlTranslator {
           // the UNION of the input and every iteration. A driver-side
           // fixpoint of distributed jobs (the recursive-CTE shape),
           // with the same lineage truncation and iteration guard.
-          require(spark != null,
+          require(scope != null,
             "PRQL loop: needs a live session — run it through " +
               "SET dialect = 'prql', not the pure translator")
           require(body.startsWith("(") && body.endsWith(")"),
             s"PRQL loop: expected `loop (pipeline)`, got '$body'")
           val inner = body.substring(1, body.length - 1).trim
           require(inner.nonEmpty, "PRQL loop: empty pipeline")
-          val id = counter.incrementAndGet()
-          val frontierView = s"graft_prql_loop_f_$id"
+          val spark = scope.spark
           var acc = spark.sql(cur)
           var frontier = acc
           var iter = 0
@@ -194,13 +192,12 @@ object PrqlTranslator {
           val maxIter = 1000
           while (!done && iter < maxIter) {
             iter += 1
-            frontier.createOrReplaceTempView(frontierView)
             // the frontier materializes EAGERLY each round: without it
             // every iteration's plan embeds the whole previous chain
             // (O(n²) recompute across isEmpty + the final query, and a
             // 1000-deep nested plan at the guard)
             val next = spark.sql(
-              translate(spark, s"from $frontierView\n$inner"))
+              translate(scope, s"from ${scope.bind(frontier)}\n$inner"))
               .localCheckpoint(true)
             if (next.isEmpty) done = true
             else {
@@ -209,13 +206,10 @@ object PrqlTranslator {
               if (iter % 8 == 0) acc = acc.localCheckpoint()
             }
           }
-          spark.catalog.dropTempView(frontierView)
           require(done,
             s"PRQL loop: did not reach an empty iteration within " +
               s"$maxIter rounds — refusing a possibly-unbounded loop")
-          val outView = s"graft_prql_loop_$id"
-          acc.createOrReplaceTempView(outView)
-          s"SELECT * FROM $outView"
+          s"SELECT * FROM ${scope.bind(acc)}"
         case other => throw new IllegalArgumentException(
           s"PRQL: unsupported verb '$other' (supported: from, filter, " +
             "derive, select, aggregate, group, sort, take, join, " +

@@ -8,6 +8,14 @@ import org.apache.spark.sql.functions._
   * answers matching GROUP BYs; everything else is left alone. */
 class AggProjectionsSpec extends SparkFunSuite {
 
+  // the plans API is called directly here, not through Tables.register or
+  // a dialect statement, so the spec installs the rules as any caller must
+  override def spark: org.apache.spark.sql.SparkSession = {
+    val s = super.spark
+    graft.plans.Rules.install(s)
+    s
+  }
+
   private def basePath = s"$sf/lineitem.parquet"
   private def projPath = "/tmp/graft_proj_lineitem"
 

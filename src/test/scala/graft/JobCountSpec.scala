@@ -23,4 +23,32 @@ class JobCountSpec extends SparkFunSuite {
   test("q_ch_asof_sql: one exchange serves the window and the ORDER BY") {
     assert(jobs("q_ch_asof_sql") <= 3)
   }
+
+  // rows_read comes from the insert's own pass, not a second parse
+  test("FROM INFILE reads its file once") {
+    val t = "jc_infile"
+    def drop(): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val wh = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), t)
+      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("jc_infile")
+    java.nio.file.Files.writeString(dir.resolve("part-00000.csv"), "1,a\n2,b\n")
+    drop()
+    try {
+      graft.sql.ClickHouseSql.sql(spark,
+        s"CREATE TABLE $t (k Int64, v String) ENGINE = MergeTree ORDER BY k")
+      var read = -1L
+      val n = jobsDuring {
+        read = graft.sql.ClickHouseSql.sql(spark,
+          s"INSERT INTO $t FROM INFILE '$dir' FORMAT CSV").collect().head.getLong(0)
+      }
+      assert(read == 2L)
+      assert(n <= 1, s"$n jobs")
+    } finally {
+      drop()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

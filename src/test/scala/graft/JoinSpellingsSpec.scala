@@ -151,21 +151,50 @@ class JoinSpellingsSpec extends SparkFunSuite {
     assert(e3.getMessage.contains("inequality"))
   }
 
-  test("temp-view ledger is bounded (round-14: long sessions must not " +
-      "accumulate graft_asof/paste_join_N catalog entries forever)") {
-    import SparkTestBase.spark.implicits._
-    val cap = graft.sql.JoinSpellings.viewLedgerCap
-    (0 until cap + 40).foreach { i =>
-      graft.sql.JoinSpellings.registerBounded(spark,
-        s"graft_ledger_probe_$i", Seq((i, "x")).toDF("a", "b"))
-    }
-    val live = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_ledger_probe_"))
-    assert(live.length <= cap,
-      s"ledger must evict beyond $cap, found ${live.length}")
-    // the NEWEST views survive; the oldest are gone
-    assert(!live.contains("graft_ledger_probe_0"))
-    assert(live.contains(s"graft_ledger_probe_${cap + 39}"))
-    live.foreach(v => spark.catalog.dropTempView(v))
+  // every binding lane: the ten table functions, ASOF, PASTE, the PRQL
+  // loop and system.<t>
+  test("no binding lane leaves a view in the session catalog") {
+    mkViews()
+    val root = java.nio.file.Files.createTempDirectory("js_lanes")
+    def dir(n: String) = root.resolve(n).toString
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    try {
+      ch(s"INSERT INTO FUNCTION deltaLake('${dir("d")}') SELECT 1L AS id")
+      val cdf = graft.sources.DeltaLakeSink.setTableProperties(spark, dir("d"),
+        Map("delta.enableChangeDataFeed" -> "true"))
+      val snap = ch(s"INSERT INTO FUNCTION iceberg('${dir("i")}') SELECT 1L AS id")
+        .collect().head.getLong(0)
+      ch(s"INSERT INTO FUNCTION iceberg('${dir("i")}') SELECT 2L AS id")
+      ch(s"INSERT INTO FUNCTION hudi('${dir("h")}') " +
+        "SELECT 'k1' AS _hoodie_record_key, 1L AS id")
+      Seq(1L, 2L).toDF("id").write.parquet(dir("p"))
+      val statements = Seq(
+        s"SELECT count() FROM table_changes('${dir("d")}', $cdf)",
+        s"SELECT count() FROM iceberg_changes('${dir("i")}', $snap)",
+        s"SELECT count() FROM hudi_changes('${dir("h")}', '0')",
+        s"SELECT count() FROM deltaLake('${dir("d")}')",
+        s"SELECT count() FROM iceberg('${dir("i")}')",
+        s"SELECT count() FROM hudi('${dir("h")}')",
+        s"SELECT count() FROM file('${dir("p")}', 'Parquet')",
+        "SELECT count() FROM null('a Int64')",
+        "SELECT count() FROM format(CSV, '1,2')",
+        "SELECT count() FROM merge('^js_base$')",
+        "SELECT count() FROM js_left l ASOF JOIN js_right r " +
+          "ON l.k = r.rk AND l.t >= r.rt",
+        "SELECT count() FROM js_left a PASTE JOIN js_base b",
+        "SELECT count() FROM system.tables")
+      val before = views
+      statements.foreach { q =>
+        assert(ch(q).collect().head.getLong(0) >= 0L)
+        assert(views == before, s"views left by: $q")
+      }
+      ch("SET dialect = 'prql'")
+      try ch("""from [{n = 3}]
+        | loop (filter n <= 40 | derive {m = n * 2} | select {n = m})""")
+        .collect()
+      finally ch("SET dialect = 'clickhouse'")
+      assert(views == before, "views left by the PRQL loop")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 }

@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
   * per-bucket sort order feeds sort-merge operations with no Sort. */
 class NormalProjectionsSpec extends SparkFunSuite {
 
+  // the plans API is called directly here, not through Tables.register or
+  // a dialect statement, so the spec installs the rules as any caller must
+  override def spark: org.apache.spark.sql.SparkSession = {
+    val s = super.spark
+    graft.plans.Rules.install(s)
+    s
+  }
+
   private def basePath = s"$sf/lineitem.parquet"
 
   test("matching aggregate reads the projection with no Exchange, values identical") {

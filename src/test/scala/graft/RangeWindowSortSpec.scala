@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.RangeWindowSort
+import graft.plans.{RangeWindowSort, Rules}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{RepartitionByExpression, Window, WindowGroupLimit}
 import org.apache.spark.sql.expressions.{Window => W}
@@ -11,17 +11,15 @@ import org.apache.spark.sql.functions._
   * else changes a plan. */
 class RangeWindowSortSpec extends SparkFunSuite {
 
-  /** `body` with the rule in or out of the session's optimizer. The rule is
-    * installed first, so a `Tables.register` inside `body` adds nothing;
-    * rules other code installs meanwhile stay. */
+  /** `body` with the rule in or out of the session's optimizer: the
+    * session runs the engine's rule list, without this rule when `on` is
+    * false. The rules are installed first, so a `Tables.register` inside
+    * `body` adds nothing. */
   private def withRule[T](on: Boolean)(body: => T): T = {
-    RangeWindowSort.install(spark)
-    def include(in: Boolean): Unit = {
-      val others = spark.experimental.extraOptimizations
-        .filterNot(_ == RangeWindowSort.SortRule)
+    Rules.install(spark)
+    def include(in: Boolean): Unit =
       spark.experimental.extraOptimizations =
-        if (in) others :+ RangeWindowSort.SortRule else others
-    }
+        Rules.of(spark).filter(in || _ != RangeWindowSort.SortRule)
     include(on)
     try body finally include(true)
   }

@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
   * must cut FILES, never change ANSWERS. */
 class SkipIndexSpec extends SparkFunSuite {
 
+  // the plans API is called directly here, not through Tables.register or
+  // a dialect statement, so the spec installs the rules as any caller must
+  override def spark: org.apache.spark.sql.SparkSession = {
+    val s = super.spark
+    graft.plans.Rules.install(s)
+    s
+  }
+
   private val base = {
     val d = Files.createTempDirectory("skipindex").toString
     new java.io.File(d).deleteOnExit()

@@ -6,7 +6,8 @@ import graft.sql.ClickHouseSql
   * tried in order and the first whole-statement match runs, so the
   * neighbours whose shapes overlap are pinned here, along with the
   * family rejects, the mutation ledger text, the FROM INFILE binding,
-  * and a guard that keeps re-parsing out of the dispatch. */
+  * the system-table snapshots, and guards that keep re-parsing out of
+  * the dispatch and temp views out of the dialect layer. */
 class StatementTableSpec extends SparkFunSuite {
 
   private def ch(s: String) = ClickHouseSql.sql(spark, s)
@@ -170,15 +171,37 @@ class StatementTableSpec extends SparkFunSuite {
     // a statement shape tested with String.matches (compiled per call),
     // or an operand cut back out of the text with replaceFirst
     val reparse = """\.matches\("\(\?is\)|\.replaceFirst\(""".r
-    val f = new java.io.File("src/main/scala/graft/sql/ClickHouseSql.scala")
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    val offenders =
-      try src.getLines().zipWithIndex.collect {
-        case (line, i) if reparse.findFirstIn(line).isDefined =>
-          s"${f.getName}:${i + 1}: ${line.trim}"
-      }.toList
-      finally src.close()
-    assert(f.isFile && offenders.isEmpty,
-      "statement re-parsing in the dispatch:\n" + offenders.mkString("\n"))
+    val owners = Set("ClickHouseSql.scala", "AccessControl.scala",
+      "Dictionaries.scala")
+    val lines = SourceGuard.lines("src/main/scala/graft/sql")
+      .filter(l => owners(l._1.getName))
+    assert(lines.map(_._1.getName).toSet == owners)
+    val offenders = lines.filter(l => reparse.findFirstIn(l._3).isDefined)
+    assert(offenders.isEmpty,
+      "statement re-parsing in the dispatch:\n" +
+        offenders.map(SourceGuard.show).mkString("\n"))
+  }
+
+  test("source guard: temp views only in Scope and row policies") {
+    val made = SourceGuard.lines("src/main/scala/graft/sql")
+      .filter(_._3.contains("createOrReplaceTempView"))
+    assert(made.map(_._1.getName).sorted == Seq("AccessControl.scala",
+      "Statement.scala"), made.map(SourceGuard.show).mkString("\n"))
+  }
+
+  // a snapshot taken by the statement itself, also when it is not a
+  // SELECT, spells SYSTEM in capitals, or is a session's first
+  test("system.<t> snapshots in any statement, case and session") {
+    val t = "st_sys"
+    withTables(t) {
+      ch(s"CREATE TABLE $t (name String) ENGINE = MergeTree ORDER BY name")
+      val fresh = spark.newSession()
+      def run(q: String) = ClickHouseSql.sql(fresh, q)
+      run(s"INSERT INTO $t SELECT name FROM system.tables WHERE name = '$t'")
+      assert(run(s"SELECT count() FROM $t").collect().head.getLong(0) == 1L)
+      assert(run(s"SELECT count() FROM SYSTEM.tables WHERE name = '$t'")
+        .collect().head.getLong(0) == 1L)
+      assert(fresh.catalog.listTables().collect().forall(!_.isTemporary))
+    }
   }
 }

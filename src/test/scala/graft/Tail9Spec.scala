@@ -83,6 +83,31 @@ class Tail9Spec extends SparkFunSuite {
       < 1e-9)
   }
 
+  test("skew/kurt do not depend on partitioning or merge order") {
+    /** Bits of every value `sql` answers under (1 partition, AQE off)
+      * and (7 partitions, AQE on). */
+    def bits(sql: Int => String): Seq[Seq[Long]] =
+      Seq((1, false), (7, true)).map { case (parts, aqe) =>
+        val conf = spark.conf
+        val saved = Seq("spark.sql.shuffle.partitions",
+          "spark.sql.adaptive.enabled").map(k => k -> conf.get(k))
+        conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        try ClickHouseSql.sql(spark, sql(parts)).collect().head.toSeq
+          .map(v => java.lang.Double.doubleToRawLongBits(
+            v.asInstanceOf[Double]))
+        finally saved.foreach { case (k, v) => conf.set(k, v) }
+      }
+    Tables.register(spark, sf)
+    val tail9b = bits(_ => "SELECT CAST(skewPop(x) AS DOUBLE) AS sp " +
+      "FROM (SELECT CAST(n_nationkey AS BIGINT) + 1 AS x FROM nation)")
+    assert(tail9b.distinct.size == 1, s"sp bits differ: $tail9b")
+    val spread = bits(parts => "SELECT skewPop(x), skewSamp(x), " +
+      "kurtPop(x), kurtSamp(x) FROM (SELECT (id * id) % 101 AS x " +
+      s"FROM range(0, 5000, 1, $parts))")
+    assert(spread.distinct.size == 1, s"bits differ: $spread")
+  }
+
   test("boundingRatio / simpleLinearRegression / retention") {
     val r = one("""SELECT boundingRatio(x, y) AS br,
         simpleLinearRegression(x, y) AS lr,
