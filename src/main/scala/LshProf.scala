@@ -2,7 +2,7 @@
   * (explode+groupBy `minhashTable` signatures, cached shingle table,
   * capped band buckets). Round-2 verdict: the previous version timed the
   * superseded interpreted-HOF `minhashSignature` path — keep this in sync
-  * with graft.queries.LlmPipeline. */
+  * with graft.operators.NearDup.minhashLshPairs. */
 object LshProf {
   def main(args: Array[String]): Unit = {
     import org.apache.spark.sql.SparkSession

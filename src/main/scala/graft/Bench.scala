@@ -312,7 +312,7 @@ object Bench {
     // leaves it unset and always gets the full io note.
     val skipIo = sys.env.get("SPARK_GRAFT_BENCH_SKIP_IO").contains("1")
     val ioNote = if (skipIo) "" else try {
-      val tbase = s"/tmp/graft_textindex_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val tbase = Scratch.path("textindex", sfDir)
       val totalFiles = spark.read.parquet(s"$tbase/data").inputFiles.length
       val matchedFiles = graft.operators.TextIndex.matchingFiles(
         spark, s"$tbase/index", Seq("dup", "vector")).size
@@ -327,7 +327,7 @@ object Bench {
       // measure over a sort-column-clustered multi-file layout — the
       // shape a top-N-heavy wide table has at 100 TB (the corpus file is
       // a single small part, where no row-group pruning can show)
-      val ldir = s"/tmp/graft_lazybench_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val ldir = Scratch.path("lazybench", sfDir)
       import org.apache.spark.sql.functions.col
       spark.read.parquet(s"$sfDir/documents.parquet")
         .repartitionByRange(16, col("n_chars"), col("doc_id"))
@@ -358,7 +358,7 @@ object Bench {
       val tableRows = spark.read.parquet(ldir).count()
       // round-8: the planted-token corpus's TOKEN-lane admission — the
       // number q_text_token_selective's pruning claim rides on
-      val selBase = s"/tmp/graft_textindex_sel_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val selBase = Scratch.path("textindex_sel", sfDir)
       val selTotal = spark.read.parquet(s"$selBase/data").inputFiles.length
       val selFiles = graft.operators.TextIndex.matchingFiles(
         spark, s"$selBase/index", Seq("zqx_planted_tok")).size
@@ -380,7 +380,7 @@ object Bench {
       // identical replicas would understate the raw bytes 10×). Bytes =
       // on-disk size of each projected table (what a scan must read);
       // time = min-of-3 single-query top-10 over each.
-      val annBase = s"/tmp/graft_annsq8_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val annBase = Scratch.path("annsq8", sfDir)
       val annFs = java.nio.file.Paths.get(annBase)
       if (!java.nio.file.Files.exists(annFs)) {
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -41,10 +41,34 @@ object Q {
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, (s, dir) => { Tables.register(s, dir); fn(s, dir) }, Some(oracle))
 
-  /** Implementation with no SQL-expressible oracle (approximate sketches,
-    * custom binary states) — the driver records a weaker rows-only check. */
-  def unoracled(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, (s, dir) => { Tables.register(s, dir); fn(s, dir) }, None)
+  /** ClickHouse-dialect SQL run through [[graft.sql.ClickHouseSql]] with a
+    * separately-worded DuckDB oracle. */
+  def ch(name: String, chSql: String, oracle: String): Q =
+    Q(name, (s, dir) => { Tables.register(s, dir); graft.sql.ClickHouseSql.sql(s, chSql) },
+      Some(oracle))
+}
+
+/** Scratch directories of the fixtures the queries, specs and the bench
+  * write: `/tmp/graft_<tag>_<key>`, where the key is the corpus directory
+  * with every character outside [A-Za-z0-9] replaced by `_`, so each
+  * corpus gets its own copy; each fixture picks its own tag. */
+object Scratch {
+
+  /** The corpus-directory part of every scratch path. */
+  def key(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  def path(tag: String, dir: String): String = s"/tmp/graft_${tag}_${key(dir)}"
+
+  /** [[path]], with whatever an earlier run left there deleted first. */
+  def fresh(s: SparkSession, tag: String, dir: String): String = {
+    val p = path(tag, dir)
+    fs(s, p).delete(new org.apache.hadoop.fs.Path(p), true)
+    p
+  }
+
+  /** The Hadoop file system that holds `p`. */
+  def fs(s: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
 }
 
 trait QueryPack {

@@ -11,44 +11,41 @@ import graft.{queries => qp}
   */
 object SparkEntry {
 
-  /** All query packs, in SURVEY §7 build order. */
+  /** All query packs, grouped by the SURVEY §2 subsystem they exercise. */
   def packs: Seq[QueryPack] = Seq(
+    // relational core: scans, joins, set operations
     qp.Relational,
-    qp.AggFunctions,
-    qp.WindowQueries,
-    qp.SortLimit,
-    qp.SetOps,
-    qp.JoinExtras,
-    qp.ScalarFunctions,
-    qp.LlmPipeline,
-    qp.DialectQueries,
-    qp.TimeWindows,
-    qp.Extras,
-    qp.Extras2,
-    qp.Extras3,
-    qp.Extras4,
-    qp.StatAggregates,
-    qp.Formats,
-    qp.BitmapQueries,
-    qp.MutationQueries,
-    qp.Extras5,
-    qp.StorageQueries,
-    qp.MlQueries,
     qp.TpchExtra,
-    qp.FunctionTail,
-    qp.FunctionTail2,
-    qp.LlmPipeline2,
-    qp.LlmPipeline3,
-    qp.LlmPipeline4,
-    qp.WideIntQueries,
-    qp.IndexQueries,
-    qp.CodecQueries,
-    qp.LifecycleQueries,
+    qp.JoinExtras,
     qp.JoinSqlQueries,
+    qp.SetOps,
+    // aggregation
+    qp.AggFunctions,
+    qp.StatAggregates,
+    qp.MlQueries,
+    // windows and sorts
+    qp.WindowQueries,
+    qp.TimeWindows,
+    qp.SortLimit,
+    // the scalar function surface
+    qp.ScalarFunctions,
+    qp.WideIntQueries,
+    qp.BitmapQueries,
+    // the ClickHouse dialect and its translators
+    qp.DialectQueries,
     qp.KqlQueries,
-    qp.Extras6,
-    qp.Extras7,
-    qp.Extras8
+    // formats, storages and tables
+    qp.Formats,
+    qp.CodecQueries,
+    qp.StorageQueries,
+    qp.Lakehouse,
+    qp.MutationQueries,
+    qp.LifecycleQueries,
+    // indexes
+    qp.IndexQueries,
+    // training-data pipelines
+    qp.Dedup,
+    qp.TextPipeline
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

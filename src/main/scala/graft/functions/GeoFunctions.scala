@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * Reference anchors: src/Functions/geohashEncode.cpp / geohashDecode.cpp
   * (interval-halving base32 geohash), src/Functions/pointInPolygon.cpp
-  * (crossing-number test), greatCircleDistance.cpp (haversine — already in
-  * Extras2).
+  * (crossing-number test), greatCircleDistance.cpp (haversine — pinned by
+  * ScalarFunctions' q_fn_geo_distance).
   *
   * Everything here unrolls to pure arithmetic/bit Catalyst expressions
   * (shiftright/&/floor/substring) — fully codegen'd, no UDFs — and the

@@ -34,12 +34,6 @@ object TextFunctions {
       i => array_join(slice(ws, i, lit(n)), " ")))
   }
 
-  /** Character n-gram (shingle) set. */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => text.substr(i, lit(n))))
-
   /** Exact Jaccard similarity of two DISTINCT-element array columns.
     * |a∪b| = |a|+|b|−|a∩b| when both sides are sets (wordSet/wordShingles
     * both array_distinct), so one hash-set build per pair instead of two —
@@ -140,18 +134,6 @@ object TextFunctions {
     * (md5 so the DuckDB oracle can reproduce it bit-for-bit). */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(trim(lower(text)), "\\s+", " "))
-
-  /** Cheap quality signals (length, punctuation ratio, stopword ratio,
-    * mean word length) — the classic pre-training corpus filters. */
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[.,;:!?]", ""))).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def stopwordCount(text: Column, stopwords: Seq[String]): Column =
-    stopwords.map { sw =>
-      ((length(text) - length(regexp_replace(text, s"\\b$sw\\b", ""))) / sw.length)
-        .cast("long")
-    }.reduce(_ + _)
 
   /** Dot product of two equal-length double arrays. Codegen'd left-to-right
     * loop (org.apache.spark.sql.graft.ArrayDotProduct) — bit-identical to

@@ -104,17 +104,6 @@ object VectorSQ {
       invoke(DoubleType, "vecNorm", Seq(col(vecCol)),
         Seq(ArrayType(DoubleType))).as("norm"))
 
-  /** Approximate cosine of every corpus code row against ONE query. */
-  def sq8Cosine(codes: Column, norm: Column, r: Ranges,
-      q: Array[Double]): Column = {
-    val qmin = q.indices.map(i => q(i) * r.mins(i)).sum
-    val w = q.indices.map(i => q(i) * r.scales(i)).toArray
-    val qn = math.sqrt(q.map(x => x * x).sum)
-    invoke(DoubleType, "sq8Dot", Seq(codes, dArr(w), lit(qmin)),
-      Seq(BinaryType, ArrayType(DoubleType), DoubleType)) /
-      (norm * lit(qn))
-  }
-
   /** Brute-force SQ8 top-k for a query set: broadcast the per-query
     * weight rows, scan the byte codes once, rank per query. Returns
     * (query_id, vec_id, approx_cos, rank). */

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, QueryPack, Tables}
 import graft.functions.aggregates.CustomAggregates
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Aggregate-function surface parity (reference: 192 registrations in
@@ -392,6 +393,660 @@ object AggFunctions extends QueryPack {
       FROM (SELECT user_id, value, EPOCH_US(ts) AS t,
               MAX(EPOCH_US(ts)) OVER (PARTITION BY user_id) AS tmax
             FROM events) x
-      GROUP BY user_id ORDER BY user_id""")
+      GROUP BY user_id ORDER BY user_id"""),
+
+    // Combinator, group-array, map, sequence and sketch-state aggregates
+
+    // -Array combinator (Combinators/AggregateFunctionArray.cpp):
+    // aggregate over array elements — sumArray/avgArray/maxArray over the
+    // embedding vectors per label.
+    Q.df("q_agg_array_combinator", """
+      SELECT label,
+        ROUND(SUM(e) , 4) AS sum_array,
+        ROUND(MAX(e), 6) AS max_array,
+        COUNT(*) AS n_elems
+      FROM (SELECT label, UNNEST(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS e
+            FROM embeddings)
+      GROUP BY label
+      ORDER BY label""") { (s, dir) =>
+      Tables.load(s, dir, "embeddings")
+        .select(col("label"),
+          explode(transform(col("embedding"), x => x.cast("double"))).as("e"))
+        .groupBy("label")
+        .agg(round(sum(col("e")), 4).as("sum_array"),
+          round(max(col("e")), 6).as("max_array"),
+          count(lit(1)).as("n_elems"))
+        .orderBy("label")
+    },
+
+    // -State/-Merge semantics via re-aggregable partials (the
+    // AggregatingMergeTree read path, src/Processors/Merges/Algorithms/
+    // AggregatingSortedAlgorithm): store per-(flag,status) partial
+    // (sum, count) states, then MERGE them to per-flag finals — exactly
+    // what -State columns + -Merge reads do, with the state as columns.
+    Q.shared("q_agg_state_merge", """
+      WITH states AS (
+        SELECT l_returnflag, l_linestatus,
+          SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_state,
+          COUNT(*) AS count_state
+        FROM lineitem
+        GROUP BY l_returnflag, l_linestatus)
+      SELECT l_returnflag,
+        CAST(SUM(sum_state) AS DOUBLE) AS merged_sum,
+        CAST(SUM(count_state) AS BIGINT) AS merged_count,
+        CAST(SUM(sum_state) AS DOUBLE) / SUM(count_state) AS merged_avg
+      FROM states
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
+
+    // -ForEach combinator (Combinators/AggregateFunctionForEach.cpp):
+    // elementwise aggregate across array columns — the 64-dim mean vector
+    // of all embeddings (a centroid, as used by the IVF ANN operator).
+    Q.df("q_agg_foreach", """
+      SELECT ARRAY_TO_STRING(LIST_TRANSFORM(
+               LIST({'p': i, 'v': v} ORDER BY i),
+               s -> CAST(CAST(s.v AS DECIMAL(18,4)) AS VARCHAR)), ',') AS avg_foreach
+      FROM (SELECT i, ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 4) AS v
+            FROM embeddings, GENERATE_SERIES(1, 64) t(i)
+            GROUP BY i)""") { (s, dir) =>
+      Tables.load(s, dir, "embeddings")
+        .select(posexplode(col("embedding")).as(Seq("p", "v")))
+        .groupBy("p").agg(round(avg(col("v").cast("double")), 4).as("v"))
+        .agg(array_sort(collect_list(struct(col("p"), col("v")))).as("s"))
+        .select(concat_ws(",", transform(col("s"),
+          s => s.getField("v").cast("decimal(18,4)").cast("string"))).as("avg_foreach"))
+    },
+
+    // minMap / maxMap (AggregateFunctionSumMap.cpp family): per-key min and
+    // max emitted as key-sorted entries.
+    Q.df("q_agg_minmax_map", """
+      SELECT user_id,
+        STRING_AGG(event_type || ':' || CAST(CAST(mn AS DECIMAL(18,6)) AS VARCHAR),
+                   ',' ORDER BY event_type) AS min_map,
+        STRING_AGG(event_type || ':' || CAST(CAST(mx AS DECIMAL(18,6)) AS VARCHAR),
+                   ',' ORDER BY event_type) AS max_map
+      FROM (SELECT user_id, event_type,
+              ROUND(MIN(value), 6) AS mn, ROUND(MAX(value), 6) AS mx
+            FROM events GROUP BY user_id, event_type)
+      GROUP BY user_id
+      ORDER BY user_id""") { (s, dir) =>
+      val entry = (k: Column, v: Column) =>
+        concat(k, lit(":"), v.cast("decimal(18,6)").cast("string"))
+      Tables.load(s, dir, "events")
+        .groupBy("user_id", "event_type")
+        .agg(round(min("value"), 6).as("mn"), round(max("value"), 6).as("mx"))
+        .groupBy("user_id")
+        .agg(
+          array_sort(collect_list(struct(col("event_type").as("_1"), col("mn").as("_2"))))
+            .as("mins"),
+          array_sort(collect_list(struct(col("event_type").as("_1"), col("mx").as("_2"))))
+            .as("maxs"))
+        .select(col("user_id"),
+          concat_ws(",", transform(col("mins"),
+            p => entry(p.getField("_1"), p.getField("_2")))).as("min_map"),
+          concat_ws(",", transform(col("maxs"),
+            p => entry(p.getField("_1"), p.getField("_2")))).as("max_map"))
+        .orderBy("user_id")
+    },
+
+    // -Resample combinator (Combinators/AggregateFunctionResample.cpp):
+    // one aggregate evaluated per bucket of a resample key, emitted as an
+    // array — order counts over 6 totalprice bands.
+    Q.sparkSql("q_agg_resample", """
+      SELECT ARRAY_JOIN(TRANSFORM(ARRAY(
+        COUNT(CASE WHEN o_totalprice >= 0      AND o_totalprice < 100000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 100000 AND o_totalprice < 200000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 200000 AND o_totalprice < 300000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 300000 AND o_totalprice < 400000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 400000 AND o_totalprice < 500000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 500000 THEN 1 END)),
+        x -> CAST(x AS STRING)), ',') AS count_resample
+      FROM orders""",
+      """
+      SELECT ARRAY_TO_STRING([
+        COUNT(CASE WHEN o_totalprice >= 0      AND o_totalprice < 100000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 100000 AND o_totalprice < 200000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 200000 AND o_totalprice < 300000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 300000 AND o_totalprice < 400000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 400000 AND o_totalprice < 500000 THEN 1 END),
+        COUNT(CASE WHEN o_totalprice >= 500000 THEN 1 END)], ',') AS count_resample
+      FROM orders"""),
+
+    // sequenceCount('(?1)(?2)') (AggregateFunctionSequenceMatch.cpp
+    // sequenceCount): non-overlapping signup→purchase chains per user —
+    // a purchase closes a chain iff a signup occurred after the previous
+    // purchase; greedy left-to-right, expressed with window functions.
+    Q.sparkSql("q_agg_sequence_count", """
+      WITH e AS (SELECT user_id, UNIX_MICROS(ts) AS t, event_type FROM events),
+      m AS (SELECT user_id, t, event_type,
+              MAX(CASE WHEN event_type = 'signup' THEN t END)
+                OVER (PARTITION BY user_id ORDER BY t
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_signup,
+              MAX(CASE WHEN event_type = 'purchase' THEN t END)
+                OVER (PARTITION BY user_id ORDER BY t
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_purchase
+            FROM e)
+      SELECT user_id, COUNT(*) AS chains
+      FROM m
+      WHERE event_type = 'purchase'
+        AND last_signup IS NOT NULL
+        AND last_signup > COALESCE(prev_purchase, -1)
+      GROUP BY user_id
+      ORDER BY user_id""",
+      """
+      WITH e AS (SELECT user_id, EPOCH_US(ts) AS t, event_type FROM events),
+      m AS (SELECT user_id, t, event_type,
+              MAX(CASE WHEN event_type = 'signup' THEN t END)
+                OVER (PARTITION BY user_id ORDER BY t
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_signup,
+              MAX(CASE WHEN event_type = 'purchase' THEN t END)
+                OVER (PARTITION BY user_id ORDER BY t
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_purchase
+            FROM e)
+      SELECT user_id, COUNT(*) AS chains
+      FROM m
+      WHERE event_type = 'purchase'
+        AND last_signup IS NOT NULL
+        AND last_signup > COALESCE(prev_purchase, -1)
+      GROUP BY user_id
+      ORDER BY user_id"""),
+
+    // sequenceNextNode(forward, first_match) (reference:
+    // src/AggregateFunctions/AggregateFunctionSequenceNextNode.cpp): the
+    // event that FOLLOWS the first matched event ('signup') per user, in
+    // (ts, event_id) order.
+    Q.sparkSql("q_agg_sequence_next_node", """
+      WITH e AS (SELECT user_id, UNIX_MICROS(ts) AS t, event_id, event_type
+                 FROM events),
+      f AS (SELECT user_id, MIN(t) AS t0 FROM e
+            WHERE event_type = 'signup' GROUP BY user_id),
+      nxt AS (SELECT e.user_id, e.event_type,
+                ROW_NUMBER() OVER (PARTITION BY e.user_id
+                                   ORDER BY e.t, e.event_id) AS rn
+              FROM e JOIN f ON e.user_id = f.user_id AND e.t > f.t0)
+      SELECT user_id, event_type AS next_node
+      FROM nxt WHERE rn = 1
+      ORDER BY user_id""",
+      """
+      WITH e AS (SELECT user_id, EPOCH_US(ts) AS t, event_id, event_type
+                 FROM events),
+      f AS (SELECT user_id, MIN(t) AS t0 FROM e
+            WHERE event_type = 'signup' GROUP BY user_id),
+      nxt AS (SELECT e.user_id, e.event_type,
+                ROW_NUMBER() OVER (PARTITION BY e.user_id
+                                   ORDER BY e.t, e.event_id) AS rn
+              FROM e JOIN f ON e.user_id = f.user_id AND e.t > f.t0)
+      SELECT user_id, event_type AS next_node
+      FROM nxt WHERE rn = 1
+      ORDER BY user_id"""),
+
+    // groupArraySorted(5) (reference: registered next to
+    // AggregateFunctionGroupArray.cpp family): the 5 smallest values per
+    // group, sorted — emitted as exact cent integers, CSV-serialized.
+    Q.sparkSql("q_agg_group_array_sorted", """
+      SELECT o_orderpriority,
+        ARRAY_JOIN(TRANSFORM(
+          SLICE(ARRAY_SORT(COLLECT_LIST(CAST(ROUND(o_totalprice * 100) AS BIGINT))), 1, 5),
+          x -> CAST(x AS STRING)), ',') AS low5_cents
+      FROM orders
+      GROUP BY o_orderpriority
+      ORDER BY o_orderpriority""",
+      """
+      SELECT o_orderpriority,
+        ARRAY_TO_STRING((LIST(c ORDER BY c))[1:5], ',') AS low5_cents
+      FROM (SELECT o_orderpriority,
+              CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c FROM orders)
+      GROUP BY o_orderpriority
+      ORDER BY o_orderpriority"""),
+
+    // groupArrayMovingSum(3) (reference:
+    // src/AggregateFunctions/AggregateFunctionGroupArrayMoving.cpp): the
+    // trailing-3 moving sum over each group's ordered series (monthly
+    // quantity per returnflag), emitted as the CH array — CSV of exact
+    // DECIMAL window sums. Window is PARTITIONED by flag; the series per
+    // group is months, tiny.
+    Q.sparkSql("q_agg_group_array_moving", """
+      WITH m AS (SELECT l_returnflag, DATE_TRUNC('month', l_shipdate) AS mo,
+                   SUM(CAST(l_quantity AS DECIMAL(18,2))) AS q
+                 FROM lineitem GROUP BY l_returnflag, DATE_TRUNC('month', l_shipdate)),
+      w AS (SELECT l_returnflag, mo,
+              SUM(q) OVER (PARTITION BY l_returnflag ORDER BY mo
+                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS ms
+            FROM m)
+      SELECT l_returnflag,
+        ARRAY_JOIN(TRANSFORM(ARRAY_SORT(COLLECT_LIST(STRUCT(mo, ms))),
+          s -> CAST(s.ms AS STRING)), ',') AS moving_sum3
+      FROM w
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag""",
+      """
+      WITH m AS (SELECT l_returnflag, DATE_TRUNC('month', l_shipdate) AS mo,
+                   SUM(CAST(l_quantity AS DECIMAL(18,2))) AS q
+                 FROM lineitem GROUP BY l_returnflag, DATE_TRUNC('month', l_shipdate)),
+      w AS (SELECT l_returnflag, mo,
+              SUM(q) OVER (PARTITION BY l_returnflag ORDER BY mo
+                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS ms
+            FROM m)
+      SELECT l_returnflag,
+        STRING_AGG(CAST(ms AS VARCHAR), ',' ORDER BY mo) AS moving_sum3
+      FROM w
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
+
+    // groupArrayInsertAt (reference:
+    // src/AggregateFunctions/AggregateFunctionGroupArrayInsertAt.cpp):
+    // values placed at caller-given positions (priority digit 1..5),
+    // absent slots default-filled with 0.
+    Q.sparkSql("q_agg_group_array_insert_at", """
+      WITH c AS (SELECT o_orderstatus,
+                   CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS pos,
+                   COUNT(*) AS cnt
+                 FROM orders GROUP BY o_orderstatus, SUBSTRING(o_orderpriority, 1, 1)),
+      m AS (SELECT o_orderstatus,
+              MAP_FROM_ENTRIES(COLLECT_LIST(STRUCT(pos, cnt))) AS mp
+            FROM c GROUP BY o_orderstatus)
+      SELECT o_orderstatus,
+        ARRAY_JOIN(TRANSFORM(SEQUENCE(1, 5),
+          i -> CAST(COALESCE(ELEMENT_AT(mp, i), 0) AS STRING)), ',') AS by_priority
+      FROM m
+      ORDER BY o_orderstatus""",
+      """
+      SELECT o_orderstatus,
+        ARRAY_TO_STRING([
+          COUNT(CASE WHEN SUBSTRING(o_orderpriority, 1, 1) = '1' THEN 1 END),
+          COUNT(CASE WHEN SUBSTRING(o_orderpriority, 1, 1) = '2' THEN 1 END),
+          COUNT(CASE WHEN SUBSTRING(o_orderpriority, 1, 1) = '3' THEN 1 END),
+          COUNT(CASE WHEN SUBSTRING(o_orderpriority, 1, 1) = '4' THEN 1 END),
+          COUNT(CASE WHEN SUBSTRING(o_orderpriority, 1, 1) = '5' THEN 1 END)], ',') AS by_priority
+      FROM orders
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus"""),
+
+    // topKWeighted(3) (reference: AggregateFunctionTopK.cpp:50 weighted
+    // registration): top event types by TOTAL VALUE (fixed-point weight),
+    // deterministic tie-break (weight desc, value asc).
+    Q.sparkSql("q_agg_topk_weighted", """
+      WITH w AS (SELECT user_id, event_type,
+                   SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS wt
+                 FROM events GROUP BY user_id, event_type),
+      r AS (SELECT user_id, event_type,
+              ROW_NUMBER() OVER (PARTITION BY user_id
+                                 ORDER BY wt DESC, event_type) AS rn
+            FROM w)
+      SELECT user_id,
+        ARRAY_JOIN(TRANSFORM(ARRAY_SORT(COLLECT_LIST(STRUCT(rn, event_type))),
+          s -> s.event_type), ',') AS top_types
+      FROM r WHERE rn <= 3
+      GROUP BY user_id
+      ORDER BY user_id""",
+      """
+      WITH w AS (SELECT user_id, event_type,
+                   SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS wt
+                 FROM events GROUP BY user_id, event_type),
+      r AS (SELECT user_id, event_type,
+              ROW_NUMBER() OVER (PARTITION BY user_id
+                                 ORDER BY wt DESC, event_type) AS rn
+            FROM w)
+      SELECT user_id,
+        STRING_AGG(event_type, ',' ORDER BY rn) AS top_types
+      FROM r WHERE rn <= 3
+      GROUP BY user_id
+      ORDER BY user_id"""),
+
+    // intervalLengthSum: length of the UNION of [ship, ship + 1..20 days)
+    // intervals per supplier — sweep line: sort by start within the key,
+    // each interval contributes max(0, end - max(start, running max of
+    // previous ends)). (The synthetic lineitem ships no l_receiptdate, so
+    // the interval end derives deterministically from l_orderkey — the
+    // sweep-line operator under test is unchanged.)
+    Q.sparkSql("q_agg_interval_length_sum", """
+      WITH iv AS (SELECT l_suppkey AS k, CAST(l_shipdate AS DATE) AS s,
+                    DATE_ADD(CAST(l_shipdate AS DATE),
+                             CAST(l_orderkey % 20 + 1 AS INT)) AS e
+                  FROM lineitem),
+      w AS (SELECT k, s, e,
+              MAX(e) OVER (PARTITION BY k ORDER BY s, e
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+            FROM iv)
+      SELECT k,
+        CAST(SUM(GREATEST(0, DATEDIFF(e, GREATEST(s, COALESCE(pmax, s))))) AS BIGINT)
+          AS union_days
+      FROM w
+      GROUP BY k
+      ORDER BY k""",
+      """
+      WITH iv AS (SELECT l_suppkey AS k, CAST(l_shipdate AS DATE) AS s,
+                    CAST(l_shipdate AS DATE) + CAST(l_orderkey % 20 + 1 AS INT) AS e
+                  FROM lineitem),
+      w AS (SELECT k, s, e,
+              MAX(e) OVER (PARTITION BY k ORDER BY s, e
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+            FROM iv)
+      SELECT k,
+        CAST(SUM(GREATEST(0, DATE_DIFF('day', GREATEST(s, COALESCE(pmax, s)), e))) AS BIGINT)
+          AS union_days
+      FROM w
+      GROUP BY k
+      ORDER BY k"""),
+
+    // maxIntersections: the maximum number of simultaneously open
+    // [ship, ship + 1..20 days) intervals per supplier — +1/-1 deltas
+    // aggregated per date, running sum, max. Same derived end as
+    // q_agg_interval_length_sum.
+    Q.sparkSql("q_agg_max_intersections", """
+      WITH pts AS (
+        SELECT l_suppkey AS k, CAST(l_shipdate AS DATE) AS t, 1 AS d FROM lineitem
+        UNION ALL
+        SELECT l_suppkey AS k,
+          DATE_ADD(CAST(l_shipdate AS DATE), CAST(l_orderkey % 20 + 1 AS INT)) AS t,
+          -1 AS d FROM lineitem),
+      c AS (SELECT k, t, SUM(d) AS dsum FROM pts GROUP BY k, t),
+      r AS (SELECT k,
+              SUM(dsum) OVER (PARTITION BY k ORDER BY t
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
+            FROM c)
+      SELECT k, CAST(MAX(run) AS BIGINT) AS max_open
+      FROM r
+      GROUP BY k
+      ORDER BY k""",
+      """
+      WITH pts AS (
+        SELECT l_suppkey AS k, CAST(l_shipdate AS DATE) AS t, 1 AS d FROM lineitem
+        UNION ALL
+        SELECT l_suppkey AS k,
+          CAST(l_shipdate AS DATE) + CAST(l_orderkey % 20 + 1 AS INT) AS t,
+          -1 AS d FROM lineitem),
+      c AS (SELECT k, t, SUM(d) AS dsum FROM pts GROUP BY k, t),
+      r AS (SELECT k,
+              SUM(dsum) OVER (PARTITION BY k ORDER BY t
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
+            FROM c)
+      SELECT k, CAST(MAX(run) AS BIGINT) AS max_open
+      FROM r
+      GROUP BY k
+      ORDER BY k"""),
+
+    // deltaSumTimestamp: sum of POSITIVE deltas between consecutive values
+    // in (ts, event_id) order per user — fixed-point so the sum is exact.
+    Q.sparkSql("q_agg_delta_sum_timestamp", """
+      WITH e AS (SELECT user_id, UNIX_MICROS(ts) AS t, event_id,
+                   CAST(ROUND(value * 10000) AS BIGINT) AS v
+                 FROM events),
+      d AS (SELECT user_id,
+              v - LAG(v) OVER (PARTITION BY user_id ORDER BY t, event_id) AS dv
+            FROM e)
+      SELECT user_id,
+        CAST(SUM(CASE WHEN dv > 0 THEN dv ELSE 0 END) AS DOUBLE) / 10000.0 AS delta_sum
+      FROM d
+      GROUP BY user_id
+      ORDER BY user_id""",
+      """
+      WITH e AS (SELECT user_id, EPOCH_US(ts) AS t, event_id,
+                   CAST(ROUND(value * 10000) AS BIGINT) AS v
+                 FROM events),
+      d AS (SELECT user_id,
+              v - LAG(v) OVER (PARTITION BY user_id ORDER BY t, event_id) AS dv
+            FROM e)
+      SELECT user_id,
+        CAST(SUM(CASE WHEN dv > 0 THEN dv ELSE 0 END) AS DOUBLE) / 10000.0 AS delta_sum
+      FROM d
+      GROUP BY user_id
+      ORDER BY user_id"""),
+
+    // boundingRatio: slope between the first and last point of each user's
+    // (ts, value) series — value delta per SECOND, exact fixed-point values.
+    Q.sparkSql("q_agg_bounding_ratio", """
+      WITH e AS (SELECT user_id, UNIX_MICROS(ts) AS t, event_id,
+                   CAST(ROUND(value * 10000) AS BIGINT) AS v
+                 FROM events),
+      r AS (SELECT user_id,
+              FIRST_VALUE(v) OVER w AS v0, LAST_VALUE(v) OVER w AS v1,
+              FIRST_VALUE(t) OVER w AS t0, LAST_VALUE(t) OVER w AS t1
+            FROM e
+            WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
+      SELECT DISTINCT user_id,
+        CASE WHEN t1 > t0 THEN
+          ROUND(CAST(v1 - v0 AS DOUBLE) / 10000.0
+                / (CAST(t1 - t0 AS DOUBLE) / 1000000.0), 8)
+        END AS ratio_per_sec
+      FROM r
+      ORDER BY user_id""",
+      """
+      WITH e AS (SELECT user_id, EPOCH_US(ts) AS t, event_id,
+                   CAST(ROUND(value * 10000) AS BIGINT) AS v
+                 FROM events),
+      r AS (SELECT user_id,
+              FIRST_VALUE(v) OVER w AS v0, LAST_VALUE(v) OVER w AS v1,
+              FIRST_VALUE(t) OVER w AS t0, LAST_VALUE(t) OVER w AS t1
+            FROM e
+            WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
+      SELECT DISTINCT user_id,
+        CASE WHEN t1 > t0 THEN
+          ROUND(CAST(v1 - v0 AS DOUBLE) / 10000.0
+                / (CAST(t1 - t0 AS DOUBLE) / 1000000.0), 8)
+        END AS ratio_per_sec
+      FROM r
+      ORDER BY user_id"""),
+
+    // sparkbar(12): unicode bar chart of monthly order counts — levels are
+    // integer math (1..8 scaled min..max), glyphs from a literal array so
+    // both engines emit identical strings.
+    Q.sparkSql("q_agg_sparkbar", """
+      WITH m AS (SELECT (YEAR(o_orderdate) - 1995) * 12 + MONTH(o_orderdate) - 1 AS mo,
+                   COUNT(*) AS c
+                 FROM orders WHERE YEAR(o_orderdate) = 1995
+                 GROUP BY (YEAR(o_orderdate) - 1995) * 12 + MONTH(o_orderdate) - 1),
+      s AS (SELECT mo, c, MIN(c) OVER () AS mn, MAX(c) OVER () AS mx FROM m),
+      l AS (SELECT mo,
+              CASE WHEN mx > mn
+                THEN 1 + CAST(FLOOR(7.0 * (c - mn) / (mx - mn)) AS INT)
+                ELSE 8 END AS lvl
+            FROM s)
+      SELECT ARRAY_JOIN(TRANSFORM(ARRAY_SORT(COLLECT_LIST(STRUCT(mo, lvl))),
+        x -> ELEMENT_AT(ARRAY('▁','▂','▃','▄','▅','▆','▇','█'), x.lvl)), '') AS bar
+      FROM l""",
+      """
+      WITH m AS (SELECT (EXTRACT(YEAR FROM o_orderdate) - 1995) * 12
+                   + EXTRACT(MONTH FROM o_orderdate) - 1 AS mo,
+                   COUNT(*) AS c
+                 FROM orders WHERE EXTRACT(YEAR FROM o_orderdate) = 1995
+                 GROUP BY 1),
+      s AS (SELECT mo, c, MIN(c) OVER () AS mn, MAX(c) OVER () AS mx FROM m),
+      l AS (SELECT mo,
+              CASE WHEN mx > mn
+                THEN 1 + CAST(FLOOR(7.0 * (c - mn) / (mx - mn)) AS INT)
+                ELSE 8 END AS lvl
+            FROM s)
+      SELECT STRING_AGG((['▁','▂','▃','▄','▅','▆','▇','█'])[lvl], '' ORDER BY mo) AS bar
+      FROM l"""),
+
+    // General -Map combinator (Combinators/AggregateFunctionMap.cpp) with
+    // an aggregate beyond sum/min/max: avgMap — per-key averages emitted
+    // as key-sorted entries (CSV-serialized; exact cent sums / counts).
+    Q.sparkSql("q_agg_avg_map", """
+      WITH k AS (SELECT user_id, event_type,
+                   CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS DOUBLE)
+                     / 10000.0 / COUNT(*) AS avg_v
+                 FROM events GROUP BY user_id, event_type)
+      SELECT user_id,
+        ARRAY_JOIN(TRANSFORM(ARRAY_SORT(COLLECT_LIST(STRUCT(event_type, avg_v))),
+          s -> CONCAT(s.event_type, ':', CAST(CAST(ROUND(s.avg_v, 6) AS DECIMAL(18,6)) AS STRING))), ',')
+          AS avg_map
+      FROM k
+      GROUP BY user_id
+      ORDER BY user_id""",
+      """
+      WITH k AS (SELECT user_id, event_type,
+                   CAST(SUM(CAST(ROUND(value * 10000) AS BIGINT)) AS DOUBLE)
+                     / 10000.0 / COUNT(*) AS avg_v
+                 FROM events GROUP BY user_id, event_type)
+      SELECT user_id,
+        STRING_AGG(event_type || ':'
+            || CAST(CAST(ROUND(avg_v, 6) AS DECIMAL(18,6)) AS VARCHAR),
+          ',' ORDER BY event_type) AS avg_map
+      FROM k
+      GROUP BY user_id
+      ORDER BY user_id"""),
+
+    // -ArgMax combinator (Combinators/AggregateFunctionArgMinMax.cpp):
+    // sumArgMax(l_quantity, l_shipdate) — the aggregate restricted to rows
+    // where the arg column is maximal within the group.
+    Q.shared("q_agg_combinator_argmax", """
+      SELECT l_orderkey,
+        CAST(SUM(CASE WHEN l_shipdate = mx
+                 THEN CAST(ROUND(l_quantity * 100) AS BIGINT) END) AS BIGINT)
+          AS sum_qty_cents_at_latest
+      FROM (SELECT l_orderkey, l_quantity, l_shipdate,
+              MAX(l_shipdate) OVER (PARTITION BY l_orderkey) AS mx
+            FROM lineitem) t
+      GROUP BY l_orderkey
+      ORDER BY l_orderkey"""),
+
+    // groupArrayIntersect (AggregateFunctionGroupArrayIntersect.cpp): the
+    // event types a user fired on EVERY active day — intersection across
+    // the per-day arrays, computed scalably as per-(user,type) day counts
+    // vs the user's day count (never materializing pairwise intersects).
+    Q.df("q_agg_group_array_intersect", """
+      WITH r AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d, event_type
+                 FROM events WHERE ts < TIMESTAMP '2024-01-04'),
+      days AS (SELECT user_id, COUNT(DISTINCT d) AS nd FROM r GROUP BY user_id),
+      c AS (SELECT user_id, event_type, COUNT(DISTINCT d) AS cd FROM r GROUP BY user_id, event_type)
+      SELECT c.user_id, STRING_AGG(event_type, ',' ORDER BY event_type) AS common_csv
+      FROM c JOIN days USING (user_id)
+      WHERE cd = nd
+      GROUP BY c.user_id
+      ORDER BY user_id""") { (s, dir) =>
+      val r = Tables.load(s, dir, "events")
+        .filter(col("ts") < lit("2024-01-04").cast("timestamp"))
+        .select(col("user_id"), to_date(col("ts")).as("d"), col("event_type"))
+        .distinct()
+      val days = r.groupBy("user_id").agg(countDistinct("d").as("nd"))
+      val counts = r.groupBy("user_id", "event_type").agg(countDistinct("d").as("cd"))
+      counts.join(days, "user_id")
+        .filter(col("cd") === col("nd"))
+        .groupBy("user_id")
+        .agg(concat_ws(",", array_sort(collect_list(col("event_type")))).as("common_csv"))
+        .orderBy("user_id")
+    },
+
+    // largestTriangleThreeBuckets(12)
+    // (AggregateFunctionLargestTriangleThreeBuckets.cpp): downsample the
+    // daily order-count series to 12 points. Deterministic parallel
+    // variant: the triangle anchor is the PREVIOUS BUCKET'S AVERAGE (the
+    // reference anchors on the previously SELECTED point, a sequential
+    // dependence; bucket-average anchoring is the standard parallel
+    // approximation and is documented here as this engine's spec).
+    Q.sparkSql("q_agg_lttb", """
+      WITH s AS (SELECT CAST(o_orderdate AS DATE) AS d, COUNT(*) AS c
+                 FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      x AS (SELECT DATEDIFF(d, DATE '1995-01-01') AS x, CAST(c AS DOUBLE) AS y,
+              NTILE(12) OVER (ORDER BY d) AS b
+            FROM s),
+      ba AS (SELECT b, AVG(CAST(x AS DOUBLE)) AS ax, AVG(y) AS ay FROM x GROUP BY b),
+      nb AS (SELECT b, ax, ay,
+               LAG(ax) OVER (ORDER BY b) AS pax, LAG(ay) OVER (ORDER BY b) AS pay,
+               LEAD(ax) OVER (ORDER BY b) AS nax, LEAD(ay) OVER (ORDER BY b) AS nay
+             FROM ba),
+      sc AS (SELECT x.b, x.x, x.y,
+               CASE WHEN nb.pax IS NOT NULL AND nb.nax IS NOT NULL THEN
+                 ABS((nb.pax - nb.nax) * (x.y - nb.pay)
+                   - (nb.pax - CAST(x.x AS DOUBLE)) * (nb.nay - nb.pay))
+               END AS area
+             FROM x JOIN nb ON x.b = nb.b),
+      rk AS (SELECT b, x, y,
+               ROW_NUMBER() OVER (PARTITION BY b ORDER BY
+                 CASE WHEN b = 1 THEN CAST(x AS DOUBLE)
+                      WHEN b = 12 THEN -CAST(x AS DOUBLE)
+                      ELSE -area END, x) AS rn
+             FROM sc)
+      SELECT b AS bucket, CAST(x AS BIGINT) AS day_off, CAST(y AS BIGINT) AS cnt
+      FROM rk WHERE rn = 1
+      ORDER BY bucket""",
+      """
+      WITH s AS (SELECT CAST(o_orderdate AS DATE) AS d, COUNT(*) AS c
+                 FROM orders GROUP BY CAST(o_orderdate AS DATE)),
+      x AS (SELECT DATE_DIFF('day', DATE '1995-01-01', d) AS x, CAST(c AS DOUBLE) AS y,
+              NTILE(12) OVER (ORDER BY d) AS b
+            FROM s),
+      ba AS (SELECT b, AVG(CAST(x AS DOUBLE)) AS ax, AVG(y) AS ay FROM x GROUP BY b),
+      nb AS (SELECT b, ax, ay,
+               LAG(ax) OVER (ORDER BY b) AS pax, LAG(ay) OVER (ORDER BY b) AS pay,
+               LEAD(ax) OVER (ORDER BY b) AS nax, LEAD(ay) OVER (ORDER BY b) AS nay
+             FROM ba),
+      sc AS (SELECT x.b, x.x, x.y,
+               CASE WHEN nb.pax IS NOT NULL AND nb.nax IS NOT NULL THEN
+                 ABS((nb.pax - nb.nax) * (x.y - nb.pay)
+                   - (nb.pax - CAST(x.x AS DOUBLE)) * (nb.nay - nb.pay))
+               END AS area
+             FROM x JOIN nb ON x.b = nb.b),
+      rk AS (SELECT b, x, y,
+               ROW_NUMBER() OVER (PARTITION BY b ORDER BY
+                 CASE WHEN b = 1 THEN CAST(x AS DOUBLE)
+                      WHEN b = 12 THEN -CAST(x AS DOUBLE)
+                      ELSE -area END, x) AS rn
+             FROM sc)
+      SELECT b AS bucket, CAST(x AS BIGINT) AS day_off, CAST(y AS BIGINT) AS cnt
+      FROM rk WHERE rn = 1
+      ORDER BY bucket"""),
+
+    // uniqState/uniqMerge sketch algebra over DataSketches HLL: per-status
+    // binary states union-merged to a global estimate. At the tiny
+    // o_orderpriority cardinality (5) the sketch operates in exact
+    // list-mode, so COUNT DISTINCT is a true oracle; the big-cardinality
+    // merge path (states == single pass, ±5% of exact) is asserted in
+    // ChRegistrySpec.
+    Q.sparkSql("q_agg_uniq_state_merge_hll", """
+      WITH st AS (SELECT o_orderstatus,
+                    HLL_SKETCH_AGG(o_orderpriority) AS sk
+                  FROM orders GROUP BY o_orderstatus)
+      SELECT o_orderstatus, HLL_SKETCH_ESTIMATE(sk) AS nd FROM st
+      UNION ALL
+      SELECT 'ALL' AS o_orderstatus, HLL_SKETCH_ESTIMATE(HLL_UNION_AGG(sk)) AS nd FROM st
+      ORDER BY o_orderstatus""",
+      """
+      SELECT o_orderstatus, COUNT(DISTINCT o_orderpriority) AS nd
+      FROM orders GROUP BY o_orderstatus
+      UNION ALL
+      SELECT 'ALL' AS o_orderstatus, COUNT(DISTINCT o_orderpriority) AS nd
+      FROM orders
+      ORDER BY o_orderstatus"""),
+
+    Q.ch("q_agg_any_heavy", """
+      SELECT CAST(anyHeavy(x) AS INT) AS h
+      FROM VALUES (5), (5), (1), (5), (2) AS t(x)""",
+      """
+      SELECT 5 AS h"""),
+
+    // Theta-sketch set algebra (round 9 — FunctionsUniqTheta.cpp):
+    // -State lane + union/intersect/not + finalizeAggregation. Both
+    // inputs stay below the sketch's nominal k (exact mode), so every
+    // readout is EXACTLY the set-arithmetic answer the oracle computes
+    // with COUNT(DISTINCT).
+    Q.ch("q_agg_theta_algebra", """
+      SELECT
+        CAST(finalizeAggregation(uniqThetaUnion(a.s, b.s)) AS BIGINT) AS u,
+        CAST(finalizeAggregation(uniqThetaIntersect(a.s, b.s)) AS BIGINT) AS i,
+        CAST(finalizeAggregation(uniqThetaNot(a.s, b.s)) AS BIGINT) AS d,
+        CAST(finalizeAggregation(a.s) AS BIGINT) AS na,
+        CAST(finalizeAggregation(b.s) AS BIGINT) AS nb
+      FROM (SELECT uniqThetaState(c_nationkey) AS s FROM customer) a
+      CROSS JOIN (SELECT uniqThetaState(n_nationkey) AS s FROM nation
+                  WHERE n_nationkey < 10) b""",
+      """
+      SELECT
+        (SELECT COUNT(DISTINCT k) FROM (
+          SELECT c_nationkey AS k FROM customer
+          UNION SELECT n_nationkey FROM nation WHERE n_nationkey < 10)) AS u,
+        (SELECT COUNT(DISTINCT n_nationkey) FROM nation
+         WHERE n_nationkey < 10
+           AND n_nationkey IN (SELECT c_nationkey FROM customer)) AS i,
+        (SELECT COUNT(DISTINCT c_nationkey) FROM customer
+         WHERE c_nationkey NOT IN
+           (SELECT n_nationkey FROM nation WHERE n_nationkey < 10)) AS d,
+        (SELECT COUNT(DISTINCT c_nationkey) FROM customer) AS na,
+        (SELECT COUNT(DISTINCT n_nationkey) FROM nation
+         WHERE n_nationkey < 10) AS nb""")
   )
 }

@@ -63,6 +63,19 @@ object BitmapQueries extends QueryPack {
       states.agg(
         bitmapCardinality(bitmapOrAgg(col("st"))).as("card_union"),
         bitmapCardinality(bitmapAndAgg(col("st"))).as("card_common"))
-    }
+    },
+
+    // groupBitmap cardinality (AggregateFunctionGroupBitmap.cpp): the
+    // bitmap's observable surface is set cardinality + membership algebra —
+    // AND/OR cardinalities across two event-type sets per user.
+    Q.shared("q_bitmap_cardinality", """
+      SELECT
+        COUNT(DISTINCT CASE WHEN event_type = 'view' THEN user_id END) AS card_view,
+        COUNT(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END) AS card_purchase,
+        COUNT(DISTINCT CASE WHEN event_type IN ('view', 'purchase') THEN user_id END) AS card_or,
+        CAST(COUNT(DISTINCT CASE WHEN event_type = 'view' THEN user_id END)
+           + COUNT(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END)
+           - COUNT(DISTINCT CASE WHEN event_type IN ('view', 'purchase') THEN user_id END) AS BIGINT) AS card_and
+      FROM events""")
   )
 }

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryPack, Tables}
-import graft.sql.ClickHouseSql
+import graft.{Q, QueryPack}
 
 /** The reference's join-strictness SQL SPELLINGS running end-to-end
   * through the dialect front-end (round-13 — the round-12 verdict's top
@@ -15,10 +14,6 @@ import graft.sql.ClickHouseSql
   */
 object JoinSqlQueries extends QueryPack {
 
-  private def ch(name: String, chSql: String, oracle: String): Q =
-    Q(name, (s, dir) => { Tables.register(s, dir); ClickHouseSql.sql(s, chSql) },
-      Some(oracle))
-
   override def queries: Seq[Q] = Seq(
 
     // ASOF LEFT JOIN through the dialect: latest order at-or-before each
@@ -26,7 +21,7 @@ object JoinSqlQueries extends QueryPack {
     // deterministic tiebreak is the lexicographic max over the right
     // side's columns in scan order — (ck, od, ok) ⇒ max ok), which the
     // oracle states directly.
-    ch("q_ch_asof_sql", """
+    Q.ch("q_ch_asof_sql", """
       SELECT user_id, event_id, r.od AS asof_date, r.ok AS asof_order
       FROM events ASOF LEFT JOIN (
         SELECT o_custkey AS ck, o_orderdate AS od, o_orderkey AS ok
@@ -52,7 +47,7 @@ object JoinSqlQueries extends QueryPack {
     // unrestricted right side would make INNER == LEFT). Inequality
     // written from the right side (`r.od <= ts`) to pin the
     // operand-order normalization.
-    ch("q_ch_asof_inner_sql", """
+    Q.ch("q_ch_asof_inner_sql", """
       SELECT user_id, event_id, r.od AS asof_date
       FROM events ASOF JOIN (
         SELECT o_custkey AS ck, o_orderdate AS od, o_orderkey AS ok
@@ -73,7 +68,7 @@ object JoinSqlQueries extends QueryPack {
     // PASTE JOIN through the dialect: positional zip of two ordered
     // subqueries — ascending custkeys zipped against descending ones.
     // The oracle spells the positional zip with row_number.
-    ch("q_ch_paste_sql", """
+    Q.ch("q_ch_paste_sql", """
       SELECT ck, nk
       FROM (SELECT c_custkey AS ck FROM customer ORDER BY c_custkey) a
       PASTE JOIN (
@@ -91,7 +86,7 @@ object JoinSqlQueries extends QueryPack {
     // ANY LEFT JOIN through the dialect: one lineitem per order — the
     // deterministic lexicographic-min row over lineitem's column order,
     // which the oracle's row_number window states explicitly.
-    ch("q_ch_any_sql", """
+    Q.ch("q_ch_any_sql", """
       SELECT o_orderkey, l.l_partkey AS any_part, l.l_quantity AS any_qty
       FROM orders ANY LEFT JOIN lineitem l ON o_orderkey = l.l_orderkey
       WHERE o_orderkey <= 2000
@@ -111,7 +106,7 @@ object JoinSqlQueries extends QueryPack {
 
     // ANY RIGHT JOIN (RightAny): every supplier exactly once, matched to
     // at most one (lexicographic-min) lineitem.
-    ch("q_ch_any_right_sql", """
+    Q.ch("q_ch_any_right_sql", """
       SELECT s_suppkey, s_name, l.l_orderkey AS any_order
       FROM lineitem l ANY RIGHT JOIN supplier s ON l.l_suppkey = s_suppkey
       ORDER BY s_suppkey""",

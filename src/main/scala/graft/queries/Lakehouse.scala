@@ -1,27 +1,25 @@
 package graft.queries
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, Scratch, Tables}
 import org.apache.spark.sql.functions._
 
-/** Round-14 lakehouse row-level surface: Delta deletion-vector reads,
-  * Iceberg v2 position/equality deletes, and the Delta append-only
-  * write path — the round-13 verdict's top three directives. Each
-  * fixture is built per the PUBLIC spec (delta.io PROTOCOL.md /
-  * iceberg.apache.org/spec) and oracled against the equivalent
-  * predicate over the source table.
+/** Lakehouse tables (SURVEY §2.1 sources and storages): the
+  * `deltaLake` / `iceberg` / `hudi` table functions over fixtures written
+  * per the PUBLIC specs (delta.io PROTOCOL.md, iceberg.apache.org/spec,
+  * hudi.apache.org tech-specs), the write, row-level mutation and
+  * maintenance verbs of `graft.sources`, and the metadata-plane pruning
+  * paths (manifest partition and column-bound pruning, schema evolution
+  * by field id). Each query is oracled against the equivalent predicate
+  * over the source parquet tables.
   */
-object Extras6 extends QueryPack {
-
-  private def fsOf(s: org.apache.spark.sql.SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p).getFileSystem(
-      s.sparkContext.hadoopConfiguration)
+object Lakehouse extends QueryPack {
 
   /** Write `df` as one ordered single-file parquet named `name` under
     * `root`, returning the absolute path. */
   private def oneFile(s: org.apache.spark.sql.SparkSession, root: String,
       name: String, df: org.apache.spark.sql.DataFrame,
       sub: String = ""): String = {
-    val fs = fsOf(s, root)
+    val fs = Scratch.fs(s, root)
     val tmp = s"$root/__tmp_$name"
     df.write.mode("overwrite").parquet(tmp)
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
@@ -34,7 +32,179 @@ object Extras6 extends QueryPack {
     dst.toString
   }
 
+  /** Write `rows` as an Avro container file at local `path` (the
+    * Iceberg manifest and manifest-list fixtures). */
+  private def writeAvro(path: String, sch: org.apache.avro.Schema,
+      rows: Seq[org.apache.avro.generic.GenericRecord]): Unit = {
+    val w = new org.apache.avro.file.DataFileWriter(
+      new org.apache.avro.generic.GenericDatumWriter[
+        org.apache.avro.generic.GenericRecord](sch))
+    w.create(sch, new java.io.File(path))
+    try rows.foreach(w.append) finally w.close()
+  }
+
+  /** numFiles actually scanned by the (first) execution of `df`. */
+  private def scanNumFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    def scans(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+      p match {
+        case a: org.apache.spark.sql.execution.adaptive
+            .AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive
+            .QueryStageExec => scans(q.plan)
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          Seq(s)
+        case other => other.children.flatMap(scans)
+      }
+    scans(df.queryExecution.executedPlan)
+      .map(_.metrics("numFiles").value).sum
+  }
+
   override def queries: Seq[Q] = Seq(
+
+    // deltaLake('path') table function (round-13 — native transaction-
+    // log replay, sources/DeltaLakeSource; reference
+    // TableFunctionObjectStorage.h:100 over DeltaLakeMetadata.cpp).
+    // The fixture is a hand-built PROTOCOL.md table: commit 0 adds two
+    // partition files of customer rows, commit 1 REMOVES the second and
+    // adds a third — the read must see exactly commit 1's active set
+    // with the partition column restored from the log, which the
+    // oracle states as the equivalent predicate over customer.
+    Q.df("q_tf_delta_lake", """
+      SELECT c_custkey, c_name, seg FROM (
+        SELECT c_custkey, c_name, 'lo' AS seg FROM customer
+        WHERE c_custkey <= 100
+        UNION ALL
+        SELECT c_custkey, c_name, 'hi' AS seg FROM customer
+        WHERE c_custkey > 200 AND c_custkey <= 300) t
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "deltafn", dir)
+      val fs = Scratch.fs(s, root)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      def file(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        oneFile(s, root, name, df.coalesce(1))
+      file("lo.parquet", cust.filter(col("c_custkey") <= 100))
+      file("mid.parquet", cust.filter(
+        col("c_custkey") > 100 && col("c_custkey") <= 200))
+      file("hi.parquet", cust.filter(
+        col("c_custkey") > 200 && col("c_custkey") <= 300))
+      val schemaString = ("""{"type":"struct","fields":[""" +
+        """{"name":"c_custkey","type":"long","nullable":true,"metadata":{}},""" +
+        """{"name":"c_name","type":"string","nullable":true,"metadata":{}},""" +
+        """{"name":"seg","type":"string","nullable":true,"metadata":{}}]}""")
+        .replace("\"", "\\\"")
+      val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
+      fs.mkdirs(log)
+      def commit(v: Long, lines: Seq[String]): Unit = {
+        val out = fs.create(new org.apache.hadoop.fs.Path(log, f"$v%020d.json"), true)
+        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+        finally out.close()
+      }
+      commit(0L, Seq(
+        """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+        s"""{"metaData":{"id":"graft-q","format":{"provider":"parquet"},"schemaString":"$schemaString","partitionColumns":["seg"],"configuration":{}}}""",
+        """{"add":{"path":"lo.parquet","partitionValues":{"seg":"lo"},"size":1,"modificationTime":1,"dataChange":true}}""",
+        """{"add":{"path":"mid.parquet","partitionValues":{"seg":"mid"},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      commit(1L, Seq(
+        """{"remove":{"path":"mid.parquet","deletionTimestamp":2,"dataChange":true}}""",
+        """{"add":{"path":"hi.parquet","partitionValues":{"seg":"hi"},"size":1,"modificationTime":2,"dataChange":true}}"""))
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name, seg FROM deltaLake('$root') " +
+          "ORDER BY c_custkey")
+    },
+
+    // hudi('path') table function (round-13 — HudiMetadata.cpp
+    // semantics: latest-timestamp base file per file group). The
+    // fixture writes file group fg1 TWICE — the stale version carries
+    // the keys shifted by 1e6, so a reader that picked the wrong
+    // version (or both) is a red row, not a row-count coincidence.
+    Q.df("q_tf_hudi", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey <= 150 ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "hudifn", dir)
+      val fs = Scratch.fs(s, root)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(root, ".hoodie"))
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      def file(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        oneFile(s, root, name, df.coalesce(1), sub = "p0")
+      val fresh = cust.filter(col("c_custkey") <= 100)
+      val stale = fresh.withColumn("c_custkey",
+        col("c_custkey") + 1000000L)
+      file("fg1_0-1-0_20240101000000.parquet", stale)
+      file("fg1_0-2-0_20240102000000.parquet", fresh)
+      file("fg2_0-1-0_20240101000000.parquet", cust.filter(
+        col("c_custkey") > 100 && col("c_custkey") <= 150))
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name FROM hudi('$root') ORDER BY c_custkey")
+    },
+
+    // iceberg('path') table function (round-13 — native metadata/
+    // manifest replay, sources/IcebergSource; reference
+    // IcebergMetadata.cpp). Spec-conformant fixture: two data files
+    // live in the manifest, a third is a DELETED entry — the read must
+    // see exactly the live set, which the oracle states as the
+    // equivalent predicate over customer.
+    Q.df("q_tf_iceberg", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey <= 120 ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icefn", dir)
+      val fs = Scratch.fs(s, root)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      def file(name: String, df: org.apache.spark.sql.DataFrame): String =
+        oneFile(s, root, name, df.coalesce(1), sub = "data")
+      val f1 = file("d1.parquet", cust.filter(col("c_custkey") <= 60))
+      val f2 = file("d2.parquet", cust.filter(
+        col("c_custkey") > 60 && col("c_custkey") <= 120))
+      val f3 = file("d3.parquet", cust.filter(
+        col("c_custkey") > 120 && col("c_custkey") <= 180))
+      val entrySchema = new org.apache.avro.Schema.Parser().parse("""
+        {"type":"record","name":"manifest_entry","fields":[
+          {"name":"status","type":"int"},
+          {"name":"data_file","type":{"type":"record","name":"data_file",
+            "fields":[{"name":"content","type":"int","default":0},
+              {"name":"file_path","type":"string"},
+              {"name":"file_format","type":"string"},
+              {"name":"record_count","type":"long"}]}}]}""")
+      val listSchema = new org.apache.avro.Schema.Parser().parse("""
+        {"type":"record","name":"manifest_file","fields":[
+          {"name":"manifest_path","type":"string"},
+          {"name":"manifest_length","type":"long"},
+          {"name":"content","type":"int","default":0}]}""")
+      def entry(status: Int, p: String) = {
+        val d = new org.apache.avro.generic.GenericData.Record(
+          entrySchema.getField("data_file").schema())
+        d.put("content", 0); d.put("file_path", p)
+        d.put("file_format", "PARQUET"); d.put("record_count", 1L)
+        val e = new org.apache.avro.generic.GenericData.Record(entrySchema)
+        e.put("status", status); e.put("data_file", d); e
+      }
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/metadata"))
+      val mPath = s"$root/metadata/m1.avro"
+      writeAvro(mPath, entrySchema,
+        Seq(entry(1, f1), entry(0, f2), entry(2, f3)))
+      val ml = new org.apache.avro.generic.GenericData.Record(listSchema)
+      ml.put("manifest_path", mPath)
+      ml.put("manifest_length", 1L)
+      ml.put("content", 0)
+      val mlPath = s"$root/metadata/snap-1.avro"
+      writeAvro(mlPath, listSchema, Seq(ml))
+      val metaJson = s"""{
+        "format-version": 2, "table-uuid": "graft-q-iceberg",
+        "current-snapshot-id": 101, "current-schema-id": 0,
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": [
+          {"id": 1, "name": "c_custkey", "required": false, "type": "long"},
+          {"id": 2, "name": "c_name", "required": false, "type": "string"}]}],
+        "snapshots": [{"snapshot-id": 101, "manifest-list": "$mlPath"}]}"""
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        s"$root/metadata/v1.metadata.json"), true)
+      try out.write(metaJson.getBytes("UTF-8")) finally out.close()
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name FROM iceberg('$root') ORDER BY c_custkey")
+    },
 
     // Delta deletion vectors (round 14 — PROTOCOL.md "Deletion
     // Vectors"; reference reads them through delta-kernel, sources
@@ -49,9 +219,8 @@ object Extras6 extends QueryPack {
       WHERE c_custkey <= 200
         AND NOT (c_custkey <= 100 AND c_custkey % 7 = 0)
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltadv_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltadv", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
       oneFile(s, root, "f1.parquet",
@@ -107,9 +276,8 @@ object Extras6 extends QueryPack {
       WHERE c_custkey <= 120
         AND NOT (c_custkey <= 60 AND c_custkey % 5 = 0)
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_icepd_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "icepd", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
       val f1 = oneFile(s, root, "d1.parquet",
@@ -155,14 +323,6 @@ object Extras6 extends QueryPack {
         r.put("manifest_path", p); r.put("manifest_length", 1L)
         r.put("content", content); r.put("sequence_number", seq); r
       }
-      def writeAvro(path: String, sch: org.apache.avro.Schema,
-          rows: Seq[org.apache.avro.generic.GenericRecord]): Unit = {
-        val w = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[
-            org.apache.avro.generic.GenericRecord](sch))
-        w.create(sch, new java.io.File(path))
-        try rows.foreach(w.append) finally w.close()
-      }
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/metadata"))
       val mData = s"$root/metadata/m-data.avro"
       writeAvro(mData, entrySchema, Seq(entry(f1, 0), entry(f2, 0)))
@@ -196,9 +356,8 @@ object Extras6 extends QueryPack {
         UNION ALL
         SELECT c_custkey, c_name FROM customer WHERE c_custkey = 10) t
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_iceeq_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "iceeq", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
       val f1 = oneFile(s, root, "d1.parquet",
@@ -245,14 +404,6 @@ object Extras6 extends QueryPack {
         r.put("manifest_path", p); r.put("manifest_length", 1L)
         r.put("content", content); r.put("sequence_number", seq); r
       }
-      def writeAvro(path: String, sch: org.apache.avro.Schema,
-          rows: Seq[org.apache.avro.generic.GenericRecord]): Unit = {
-        val w = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[
-            org.apache.avro.generic.GenericRecord](sch))
-        w.create(sch, new java.io.File(path))
-        try rows.foreach(w.append) finally w.close()
-      }
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/metadata"))
       val m1 = s"$root/metadata/m1.avro"
       writeAvro(m1, entrySchema, Seq(entry(f1, 0, Seq.empty)))
@@ -294,8 +445,7 @@ object Extras6 extends QueryPack {
         SELECT c_custkey, c_name, 'late' AS seg FROM customer
         WHERE c_custkey > 80 AND c_custkey <= 120) t
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltaw_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltaw", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_dw_cust")
@@ -333,9 +483,8 @@ object Extras6 extends QueryPack {
       SELECT c_custkey, c_name,
         CASE WHEN c_custkey % 2 = 0 THEN 'e' ELSE 'o' END AS par
       FROM customer WHERE c_custkey <= 90 ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltacm_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltacm", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") <= 90)
         .select(col("c_custkey"), col("c_name"),
@@ -377,88 +526,6 @@ object Extras6 extends QueryPack {
           "ORDER BY c_custkey")
     },
 
-    // FORMAT One (round 14 — OneFormat.cpp): one dummy=0 row per input
-    // file, the content never read — the reference's existence probe.
-    // Fixture: three junk files; oracle = three constant rows.
-    Q.df("q_format_one", """
-      SELECT CAST(0 AS SMALLINT) AS dummy
-      FROM (VALUES (1), (2), (3)) t(i)""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_one_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      Seq("a.bin" -> "opaque", "b.csv" -> "not,parsed", "c" -> "")
-        .foreach { case (n, t) =>
-          val out = fs.create(new org.apache.hadoop.fs.Path(root, n), true)
-          try out.write(t.getBytes("UTF-8")) finally out.close()
-        }
-      graft.sql.ClickHouseSql.sql(s,
-        s"SELECT dummy FROM file('$root', 'One')")
-    },
-
-    // FORMAT Form (FormRowInputFormat.cpp): url-encoded k=v&k=v rows,
-    // one per file; unknown keys skip, omitted columns default. The
-    // fixture percent-encodes real customer names (space → %20, '+'
-    // literal), so a form-decoding reader (eating '+') or a skipped
-    // junk-key bug shows as a value mismatch, not a count.
-    Q.df("q_format_form", """
-      SELECT c_custkey, c_name, CAST(0 AS BIGINT) AS extra
-      FROM customer WHERE c_custkey <= 4 ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_form_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      def pct(v: String): String = v.map { c =>
-        if (c.isLetterOrDigit) c.toString
-        else "%%%02X".format(c.toInt)
-      }.mkString
-      Tables.load(s, dir, "customer")
-        .filter(col("c_custkey") <= 4)
-        .select(col("c_custkey"), col("c_name"))
-        .collect().foreach { r =>
-          val k = r.getAs[Number](0).longValue
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(root, s"r$k.form"), true)
-          try out.write(
-            (s"c_custkey=$k&junk=skipme&c_name=${pct(r.getString(1))}")
-              .getBytes("UTF-8"))
-          finally out.close()
-        }
-      graft.sql.ClickHouseSql.sql(s,
-        s"SELECT c_custkey, c_name, extra FROM file('$root', 'Form', " +
-          "'c_custkey Int64, c_name String, extra Int64') " +
-          "ORDER BY c_custkey")
-    },
-
-    // FORMAT HiveText (HiveTextRowInputFormat.cpp): header-less CSV
-    // with the Hive 0x01 delimiter and \N nulls, read through Spark's
-    // native CSV source (distributed/splittable). Fixture restates
-    // nation with one NULLed name.
-    Q.df("q_format_hivetext", """
-      SELECT n_nationkey,
-        CASE WHEN n_nationkey = 3 THEN NULL ELSE n_name END AS n_name
-      FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_hive_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      val lines = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))
-        .collect().sortBy(_.getAs[Number](0).longValue)
-        .map { r =>
-          val k = r.getAs[Number](0).longValue
-          val v = if (k == 3) "\\N" else r.getString(1)
-          s"$k\u0001$v"
-        }
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(root, "part1.hive"), true)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      graft.sql.ClickHouseSql.sql(s,
-        s"SELECT n_nationkey, n_name FROM file('$root', 'HiveText', " +
-          "'n_nationkey Int64, n_name String') ORDER BY n_nationkey")
-    },
-
     // Iceberg APPEND (round 14 — write-side counterpart of the native
     // reader; Hadoop-catalog version-file commits): two appends through
     // the sink, read back through the dialect, with the creation
@@ -466,8 +533,7 @@ object Extras6 extends QueryPack {
     Q.df("q_iceberg_write_roundtrip", """
       SELECT c_custkey, c_name FROM customer
       WHERE c_custkey <= 100 ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_icew_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "icew", dir)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
       cust.createOrReplaceTempView("graft_icew_cust")
@@ -501,8 +567,7 @@ object Extras6 extends QueryPack {
       SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS nat
       FROM customer WHERE c_custkey <= 600 AND c_nationkey = 7
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_icepw_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "icepw", dir)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"),
           col("c_nationkey").cast("long").as("nat"))
@@ -523,43 +588,6 @@ object Extras6 extends QueryPack {
       pruned.orderBy("c_custkey")
     },
 
-    // FORMAT MySQLDump (MySQLDumpRowInputFormat.cpp): parses the
-    // INSERT statements of a mysqldump file, skipping DDL; NULLs,
-    // multi-row tuples and a by-name column list all exercised. The
-    // oracle restates nation with the NULLed comment.
-    Q.df("q_format_mysqldump", """
-      SELECT n_nationkey, n_name,
-        CASE WHEN n_nationkey % 4 = 0 THEN NULL
-             ELSE CAST(n_regionkey AS BIGINT) END AS region
-      FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_mysqldump_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      val rows = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-        .collect().sortBy(_.getAs[Number](0).longValue)
-      val tuples = rows.map { r =>
-        val k = r.getAs[Number](0).longValue
-        val rk = if (k % 4 == 0) "NULL"
-          else r.getAs[Number](2).longValue.toString
-        s"($k,'${r.getString(1).replace("'", "''")}',$rk)"
-      }
-      val dump =
-        "-- MySQL dump (fixture)\n" +
-          "DROP TABLE IF EXISTS `nation`;\n" +
-          "CREATE TABLE `nation` (x int);\n" +
-          s"INSERT INTO `nation` VALUES ${tuples.mkString(",\n  ")};\n" +
-          "UNLOCK TABLES;\n"
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(root, "dump.sql"), true)
-      try out.write(dump.getBytes("UTF-8")) finally out.close()
-      graft.sql.ClickHouseSql.sql(s,
-        s"SELECT n_nationkey, n_name, region FROM file('$root', " +
-          "'MySQLDump', 'n_nationkey Int64, n_name String, " +
-          "region Int64') ORDER BY n_nationkey")
-    },
-
     // Delta checkpoint WRITING + overwrite (round 14, pulled forward
     // from the round-15 list): three dialect-written commits with
     // checkpointInterval 2, the pre-checkpoint JSON commits deleted —
@@ -569,9 +597,8 @@ object Extras6 extends QueryPack {
     Q.df("q_delta_checkpoint_write", """
       SELECT c_custkey, c_name FROM customer
       WHERE c_custkey > 40 AND c_custkey <= 70 ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltackw_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltackw", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
       def slice(a: Int, b: Int) =
@@ -601,162 +628,6 @@ object Extras6 extends QueryPack {
           "ORDER BY c_custkey")
     },
 
-    // FORMAT CapnProto (CapnProtoRowInputFormat.cpp over libcapnp —
-    // here a native implementation of the public encoding; the LAST
-    // unported data format): framed single-segment messages, hole-
-    // packed scalars, NUL-terminated Text. OUTFILE→INFILE roundtrip
-    // behind the reference's format_schema setting.
-    Q.df("q_format_capnproto", """
-      SELECT n_nationkey, n_name, CAST(n_regionkey * 2.5 AS DOUBLE) AS w
-      FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_capnp_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
-      fsOf(s, root).mkdirs(new org.apache.hadoop.fs.Path(root))
-      Tables.register(s, dir)
-      val schemaPath = s"$root/row.capnp"
-      val out = fsOf(s, root).create(
-        new org.apache.hadoop.fs.Path(schemaPath), true)
-      try out.write(("struct N { n_nationkey @0 :Int64; " +
-        "n_name @1 :Text; w @2 :Float64; }\n").getBytes("UTF-8"))
-      finally out.close()
-      val ch = (q: String) => graft.sql.ClickHouseSql.sql(s, q)
-      ch(s"SET format_schema = '$schemaPath:N'")
-      try {
-        ch("SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name, " +
-          "CAST(n_regionkey * 2.5 AS DOUBLE) AS w FROM nation " +
-          s"ORDER BY n_nationkey INTO OUTFILE '$root/data' " +
-          "FORMAT CapnProto")
-        ch("DROP TABLE IF EXISTS graft_capnp_t")
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), "graft_capnp_t")
-        wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(wh, true)
-        ch("CREATE TABLE graft_capnp_t (n_nationkey Int64, " +
-          "n_name String, w Float64) ENGINE = MergeTree " +
-          "ORDER BY n_nationkey")
-        ch(s"INSERT INTO graft_capnp_t FROM INFILE '$root/data' " +
-          "FORMAT CapnProto")
-        ch("SELECT n_nationkey, n_name, w FROM graft_capnp_t " +
-          "ORDER BY n_nationkey")
-      } finally s.conf.unset("graft.ch.format_schema")
-    },
-
-    // FORMAT Template (TemplateRowInputFormat.cpp + the
-    // format_template_row_format / rows_between settings): a roundtrip
-    // through a user-defined row template with mixed escaping rules —
-    // OUTFILE writes it, INFILE reads it back into a table.
-    Q.df("q_format_template", """
-      SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_fmt_tpl_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
-      Tables.register(s, dir)
-      val ch = (q: String) => graft.sql.ClickHouseSql.sql(s, q)
-      ch("SET format_template_row_format = " +
-        "'row: ${n_nationkey:Quoted} -> ${n_name:CSV}'")
-      try {
-        ch(s"SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey " +
-          s"INTO OUTFILE '$root/data' FORMAT Template")
-        ch("DROP TABLE IF EXISTS graft_tpl_t")
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), "graft_tpl_t")
-        wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(wh, true)
-        ch("CREATE TABLE graft_tpl_t (n_nationkey Int64, n_name String) " +
-          "ENGINE = MergeTree ORDER BY n_nationkey")
-        ch(s"INSERT INTO graft_tpl_t FROM INFILE '$root/data' " +
-          "FORMAT Template")
-        ch("SELECT n_nationkey, n_name FROM graft_tpl_t " +
-          "ORDER BY n_nationkey")
-      } finally s.conf.unset("graft.ch.format_template_row_format")
-    },
-
-    // FORMAT ProtobufList (ProtobufListInputFormat.cpp — the envelope
-    // variant: ONE length-delimited message per stream whose field 1
-    // repeats the row message). Roundtrip over nation through the
-    // dialect's OUTFILE/INFILE lanes with format_schema set.
-    Q.df("q_format_protobuf_list", """
-      SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_pblist_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-      val protoPath = s"$root/row.proto"
-      val out = fs.create(new org.apache.hadoop.fs.Path(protoPath), true)
-      try out.write(("syntax = \"proto3\";\n" +
-        "message N { int64 n_nationkey = 1; string n_name = 2; }\n")
-        .getBytes("UTF-8"))
-      finally out.close()
-      val src = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("n_nationkey"),
-          col("n_name"))
-      graft.sources.ChProtobufFormat.writeProtobufList(
-        src.coalesce(1), s"$root/data", "syntax = \"proto3\";\n" +
-          "message N { int64 n_nationkey = 1; string n_name = 2; }", "N")
-      val ch = (q: String) => graft.sql.ClickHouseSql.sql(s, q)
-      ch(s"SET format_schema = '$protoPath:N'")
-      try {
-        ch("DROP TABLE IF EXISTS graft_pblist_t")
-        // a prior JVM's managed location survives the catalog — clear it
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), "graft_pblist_t")
-        wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(wh, true)
-        ch("CREATE TABLE graft_pblist_t (n_nationkey Int64, " +
-          "n_name String) ENGINE = MergeTree ORDER BY n_nationkey")
-        ch(s"INSERT INTO graft_pblist_t FROM INFILE '$root/data' " +
-          "FORMAT ProtobufList")
-        ch("SELECT n_nationkey, n_name FROM graft_pblist_t " +
-          "ORDER BY n_nationkey")
-      } finally s.conf.unset("graft.ch.format_schema")
-    },
-
-    // Protobuf NESTED messages + enums (round 14 — the reference's
-    // ProtobufSerializer handles nesting; this closes the round-13
-    // flat-scalar gate): a message field round-trips as a StructType
-    // (length-delimited sub-message), an enum as its NAME, a repeated
-    // message as an array of structs. The oracle restates the
-    // flattened projection over nation.
-    Q.df("q_format_protobuf_nested", """
-      SELECT n_nationkey AS key, n_name AS label,
-        CAST(n_nationkey * 1.5 AS DOUBLE) AS score,
-        CASE WHEN n_regionkey = 0 THEN 'LOW'
-             WHEN n_regionkey = 1 THEN 'MID' ELSE 'HIGH' END AS band,
-        n_name || ',x' AS hist_labels
-      FROM nation ORDER BY key""") { (s, dir) =>
-      val src = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("key"),
-          struct(col("n_name").as("label"),
-            (col("n_nationkey") * 1.5).cast("double").as("score"))
-            .as("sub"),
-          when(col("n_regionkey") === 0, "LOW")
-            .when(col("n_regionkey") === 1, "MID")
-            .otherwise("HIGH").as("band"),
-          array(
-            struct(col("n_name").as("label"),
-              lit(1.0).cast("double").as("score")),
-            struct(lit("x").as("label"),
-              lit(2.0).cast("double").as("score"))).as("history"))
-        .repartition(3)
-      val proto = """
-        syntax = "proto3";
-        enum Band { LOW = 0; MID = 1; HIGH = 2; }
-        message Sub { string label = 1; double score = 2; }
-        message Part {
-          int64 key = 1;
-          Sub sub = 2;
-          Band band = 3;
-          repeated Sub history = 4;
-        }"""
-      val path = s"/tmp/graft_pb_nested_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      graft.sources.ChProtobufFormat.writeProtobuf(src, path, proto, "Part")
-      graft.sources.ChProtobufFormat.readProtobuf(s, path, proto, "Part")
-        .select(col("key"), col("sub.label").as("label"),
-          col("sub.score").as("score"), col("band"),
-          array_join(expr("transform(history, h -> h.label)"), ",")
-            .as("hist_labels"))
-        .orderBy("key")
-    },
-
     // Delta row-level DELETE (round 14 — copy-on-write remove+add
     // commits, the write-side twin of the DV read): build a partitioned
     // table through the dialect, DELETE a predicate slice, read the
@@ -769,8 +640,7 @@ object Extras6 extends QueryPack {
       FROM customer
       WHERE c_custkey <= 120 AND c_custkey % 3 <> 0
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltadel_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltadel", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_dd_cust")
@@ -806,8 +676,7 @@ object Extras6 extends QueryPack {
              ELSE c_name END AS c_name
       FROM customer WHERE c_custkey <= 100
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_deltaupd_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "deltaupd", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_du_cust")
@@ -833,8 +702,7 @@ object Extras6 extends QueryPack {
       FROM customer
       WHERE c_custkey <= 100 AND c_custkey % 3 <> 0
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_icemut_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "icemut", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_im_cust")
@@ -876,9 +744,8 @@ object Extras6 extends QueryPack {
              ELSE n_name END AS n_name
       FROM nation WHERE n_regionkey <> 1
       ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_hudimor_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "hudimor", dir)
+      val fs = Scratch.fs(s, root)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/.hoodie"))
       val nation = Tables.load(s, dir, "nation")
         .select(concat(lit("n"), col("n_nationkey").cast("string"))
@@ -915,47 +782,6 @@ object Extras6 extends QueryPack {
           s"FROM hudi('$root') ORDER BY n_nationkey")
     },
 
-    // Protobuf map<K,V> + oneof (round 14 — the LAST protobuf surface
-    // gap; reference ProtobufSerializer handles both): a map column
-    // round-trips as MapType through the spec's repeated entry-message
-    // wire shape, and oneof members keep EXPLICIT presence — the unset
-    // member of each row must read back NULL, never the proto3
-    // default (a default-filling decoder hash-mismatches on a/b).
-    Q.df("q_format_protobuf_map", """
-      SELECT n_nationkey AS key,
-        CAST(n_regionkey AS BIGINT) AS tag_val,
-        CAST(length(n_name) AS BIGINT) AS tag_len,
-        CASE WHEN n_nationkey % 2 = 0
-          THEN CAST(n_regionkey AS BIGINT) END AS a,
-        CASE WHEN n_nationkey % 2 <> 0 THEN n_name END AS b
-      FROM nation ORDER BY key""") { (s, dir) =>
-      val src = Tables.load(s, dir, "nation")
-        .select(col("n_nationkey").cast("long").as("key"),
-          col("n_name").as("nm"),
-          map(col("n_name"), col("n_regionkey").cast("long"),
-            lit("len"), length(col("n_name")).cast("long")).as("tags"),
-          when(col("n_nationkey") % 2 === 0,
-            col("n_regionkey").cast("long")).as("a"),
-          when(col("n_nationkey") % 2 =!= 0, col("n_name")).as("b"))
-        .repartition(3)
-      val proto = """
-        syntax = "proto3";
-        message N {
-          int64 key = 1;
-          string nm = 2;
-          map<string, int64> tags = 3;
-          oneof pick { int64 a = 4; string b = 5; }
-        }"""
-      val path = s"/tmp/graft_pb_map_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      graft.sources.ChProtobufFormat.writeProtobuf(src, path, proto, "N")
-      graft.sources.ChProtobufFormat.readProtobuf(s, path, proto, "N")
-        .select(col("key"),
-          element_at(col("tags"), col("nm")).as("tag_val"),
-          element_at(col("tags"), lit("len")).as("tag_len"),
-          col("a"), col("b"))
-        .orderBy("key")
-    },
-
     // Delta LIGHTWEIGHT delete (round 14 continuation — the reference's
     // DELETE FROM is the lightweight mask, MutationsInterpreter's
     // _row_exists path; the Delta spelling is a DELETION VECTOR
@@ -971,8 +797,7 @@ object Extras6 extends QueryPack {
       WHERE c_custkey <= 150 AND c_custkey % 3 <> 0
         AND NOT (c_custkey % 5 = 0 AND c_custkey % 2 = 0)
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_dvwrite_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "dvwrite", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_dvw_cust")
@@ -981,7 +806,7 @@ object Extras6 extends QueryPack {
         "SELECT c_custkey, c_name, CASE WHEN c_custkey % 2 = 0 " +
         "THEN 'even' ELSE 'odd' END AS seg " +
         "FROM graft_dvw_cust WHERE c_custkey <= 150")
-      def files(): Set[String] = fsOf(s, root)
+      def files(): Set[String] = Scratch.fs(s, root)
         .listStatus(new org.apache.hadoop.fs.Path(root))
         .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
       val files0 = files()
@@ -1011,8 +836,7 @@ object Extras6 extends QueryPack {
       WHERE c_custkey <= 120 AND c_custkey % 4 <> 0
         AND NOT (c_custkey <= 30)
       ORDER BY c_custkey""") { (s, dir) =>
-      val root = s"/tmp/graft_icepdw_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      fsOf(s, root).delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "icepdw", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_ipdw_cust")
@@ -1020,7 +844,7 @@ object Extras6 extends QueryPack {
       ch(s"INSERT INTO FUNCTION iceberg('$root') " +
         "SELECT c_custkey, c_name FROM graft_ipdw_cust " +
         "WHERE c_custkey <= 120")
-      def dataFiles(): Set[String] = fsOf(s, root)
+      def dataFiles(): Set[String] = Scratch.fs(s, root)
         .listStatus(new org.apache.hadoop.fs.Path(s"$root/data"))
         .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
       val files0 = dataFiles()
@@ -1048,9 +872,8 @@ object Extras6 extends QueryPack {
       SELECT 'asof_t1' AS lane, CAST(n_nationkey AS BIGINT), n_name
       FROM nation
       ORDER BY lane, n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_huditt_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "huditt", dir)
+      val fs = Scratch.fs(s, root)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/.hoodie"))
       val nation = Tables.load(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("n_nationkey"),
@@ -1095,9 +918,8 @@ object Extras6 extends QueryPack {
         CASE WHEN n_nationkey % 2 = 0 THEN 'e' ELSE 'o' END AS seg
       FROM nation WHERE n_nationkey % 5 <> 0
       ORDER BY n_nationkey""") { (s, dir) =>
-      val root = s"/tmp/graft_cmapmut_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "cmapmut", dir)
+      val fs = Scratch.fs(s, root)
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_delta_log"))
       def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
       val schemaString =
@@ -1151,10 +973,8 @@ object Extras6 extends QueryPack {
       FROM customer
       WHERE c_custkey <= 80 AND c_custkey % 4 <> 0
       ORDER BY lane, c_custkey""") { (s, dir) =>
-      val dRoot = s"/tmp/graft_opt_d_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val iRoot = s"/tmp/graft_opt_i_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      Seq(dRoot, iRoot).foreach(r =>
-        fsOf(s, r).delete(new org.apache.hadoop.fs.Path(r), true))
+      val dRoot = Scratch.fresh(s, "opt_d", dir)
+      val iRoot = Scratch.fresh(s, "opt_i", dir)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"))
         .createOrReplaceTempView("graft_opt_cust")
@@ -1201,9 +1021,8 @@ object Extras6 extends QueryPack {
       UNION ALL
       SELECT 'extra', 99, 'NEWLAND'
       ORDER BY n_nationkey, k""") { (s, dir) =>
-      val root = s"/tmp/graft_hudiwr_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "hudiwr", dir)
+      val fs = Scratch.fs(s, root)
       Tables.load(s, dir, "nation")
         .select(concat(lit("n"), col("n_nationkey").cast("string"))
           .as("_hoodie_record_key"),
@@ -1253,9 +1072,8 @@ object Extras6 extends QueryPack {
       WHERE c_custkey <= 200 AND c_custkey % 7 <> 0
       UNION ALL SELECT 'x1', 9001, 'NEWCOMER', 999
       ORDER BY c_custkey, k""") { (s, dir) =>
-      val root = s"/tmp/graft_hudipw_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = fsOf(s, root)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = Scratch.fresh(s, "hudipw", dir)
+      val fs = Scratch.fs(s, root)
       val cust = Tables.load(s, dir, "customer")
         .filter(col("c_custkey") <= 200)
         .select(concat(lit("c"), col("c_custkey").cast("string"))
@@ -1281,6 +1099,641 @@ object Extras6 extends QueryPack {
         .select(col("_hoodie_record_key").as("k"), col("c_custkey"),
           col("c_name"), col("nat"))
         .orderBy("c_custkey", "k")
+    },
+
+    // Iceberg DERIVED-transform partition pruning (round 16 — r15
+    // verdict Missing #1; reference: Iceberg ManifestFilesPruning
+    // prunes identity/temporal/bucket/truncate): a bucket(4,
+    // c_custkey)-partitioned table written with the REAL transform in
+    // the spec JSON and typed `partition` structs in the manifests;
+    // three point reads each evaluate murmur3-bucket(literal) against
+    // the manifest tuples and must scan STRICTLY fewer files than the
+    // table holds (asserted in-query). The oracle restates the three
+    // customers from the source parquet — a wrong bucket evaluation
+    // on either side loses or misroutes a row.
+    Q.df("q_iceberg_transform_prune", """
+      SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS nat
+      FROM customer WHERE c_custkey IN (137, 311, 487)
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icetp", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"),
+          col("c_nationkey").cast("long").as("nat"))
+        .filter(col("c_custkey") <= 600)
+      graft.sources.IcebergSink.append(cust.repartition(2), root,
+        partitionBy = Seq("bucket(4, c_custkey)"))
+      val allFiles = graft.sources.IcebergSource.read(s, root)
+        .inputFiles.length
+      val parts = Seq(137L, 311L, 487L).map { k =>
+        val pruned = graft.sources.IcebergSource.read(s, root,
+          pruneSource = Map("c_custkey" -> k.toString))
+        require(pruned.inputFiles.length < allFiles,
+          s"bucket pruning for $k must scan < $allFiles files, got " +
+            pruned.inputFiles.length)
+        pruned.filter(col("c_custkey") === k)
+      }
+      parts.reduce(_ unionByName _).orderBy("c_custkey")
+    },
+
+    // Iceberg SNAPSHOT EXPIRATION (round 16 — r15 verdict Missing #4,
+    // the expire_snapshots maintenance verb): three commits (two
+    // appends + an overwrite that strands the appended data), expire
+    // to the current snapshot only — the metadata must shrink, the
+    // stranded data files must be DELETED from disk (asserted
+    // in-query), travel to an expired snapshot must be loud, and the
+    // current read must be byte-identical to the oracle's restatement.
+    Q.df("q_iceberg_expire", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey > 100 AND c_custkey <= 200
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "iceexp", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      val s1 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") <= 50), root)
+      graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 50 && col("c_custkey") <= 100),
+        root)
+      graft.sources.IcebergSink.overwrite(
+        cust.filter(col("c_custkey") > 100 && col("c_custkey") <= 200),
+        root)
+      val fs = Scratch.fs(s, root)
+      def dataFiles(): Int = fs.listStatus(
+        new org.apache.hadoop.fs.Path(root, "data")).length
+      val before = dataFiles()
+      val (expired, deleted) = graft.sources.IcebergSink
+        .expireSnapshots(s, root, keepLast = 1)
+      require(expired == 2 && deleted > 0,
+        s"expire must drop 2 snapshots and delete files, got " +
+          s"($expired, $deleted)")
+      require(dataFiles() < before,
+        s"stranded data files must be deleted: $before -> ${dataFiles()}")
+      val loud = scala.util.Try(graft.sources.IcebergSource.read(s, root,
+        snapshotId = Some(s1)).count())
+      require(loud.isFailure, "travel to an expired snapshot must refuse")
+      graft.sources.IcebergSource.read(s, root).orderBy("c_custkey")
+    },
+
+    // Hudi MoR COMPACTION (round 16 — r15 verdict Missing #2: the
+    // engine writes MoR upserts/deletes, so its own logs grow
+    // unboundedly without a fold): create + upsert + delete build log
+    // blocks, `OPTIMIZE TABLE FUNCTION hudi(...)` folds every
+    // log-bearing group into a fresh base slice at a `commit` instant,
+    // and the post-compaction read — asserted in-query to be served
+    // with the old log blocks OUT-PRECEDENCED (every fresh slice
+    // carries the compaction instant) — must equal the oracle's
+    // restatement of the merged state.
+    Q.df("q_hudi_optimize", """
+      SELECT 'c' || CAST(c_custkey AS VARCHAR) AS k,
+        CAST(c_custkey AS BIGINT) AS c_custkey,
+        CASE WHEN c_custkey % 10 = 0 THEN 'COMPACTED' ELSE c_name END
+          AS c_name
+      FROM customer
+      WHERE c_custkey <= 150 AND c_custkey % 7 <> 0
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "hudiopt", dir)
+      val fs = Scratch.fs(s, root)
+      val cust = Tables.load(s, dir, "customer")
+        .filter(col("c_custkey") <= 150)
+        .select(concat(lit("c"), col("c_custkey").cast("string"))
+          .as("_hoodie_record_key"),
+          col("c_custkey").cast("long").as("c_custkey"), col("c_name"))
+      graft.sources.HudiSink.upsert(cust, root)
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") % 10 === 0)
+          .withColumn("c_name", lit("COMPACTED")), root)
+      graft.sources.HudiSink.deleteWhere(s, root,
+        col("c_custkey") % 7 === 0)
+      def logs(): Seq[String] = fs
+        .listStatus(new org.apache.hadoop.fs.Path(root))
+        .map(_.getPath.getName).filter(_.contains(".log.")).toSeq
+      require(logs().nonEmpty, "the mutations must build log blocks")
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"OPTIMIZE TABLE FUNCTION hudi('$root')").collect().head
+      val instant = res.getString(0)
+      require(instant.nonEmpty && res.getLong(1) > 0,
+        s"compaction must fold log-bearing groups, got $res")
+      // every fresh slice carries the compaction instant, and a
+      // `commit` timeline action completed
+      require(fs.exists(new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(root, ".hoodie"),
+        s"$instant.commit")), "compaction must complete a commit instant")
+      val fresh = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+        .map(_.getPath.getName)
+        .filter(n => n.endsWith(".parquet") && n.contains(s"_$instant"))
+      require(fresh.length == res.getLong(1),
+        s"expected ${res.getLong(1)} fresh slices, got ${fresh.length}")
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT _hoodie_record_key AS k, c_custkey, c_name " +
+          s"FROM hudi('$root') ORDER BY c_custkey")
+    },
+
+    // Delta CHANGE DATA FEED (round 16 — r15 verdict Missing #3;
+    // PROTOCOL.md "Change Data Files"): create → enable CDF (protocol
+    // upgrade rides the same commit) → append → UPDATE → DELETE, then
+    // table_changes('path', 1) through the dialect — from the ENABLING
+    // version: a range covering the pre-enablement creation commit is
+    // LOUD (round 17, pinned in-query — change data was never captured
+    // for it; delta-spark errors identically). Appends must write NO
+    // cdc files while mutations must (both asserted in-query); the
+    // oracle restates every captured change row — the post-enablement
+    // insert slice, update_preimage/postimage, and the deletes with
+    // their post-update names — keyed by DETERMINISTIC commit versions.
+    Q.df("q_delta_cdf", """
+      SELECT c_custkey, c_name, 'insert' AS change_type,
+        CAST(2 AS BIGINT) AS commit_version
+      FROM customer WHERE c_custkey > 120 AND c_custkey <= 150
+      UNION ALL
+      SELECT c_custkey, c_name, 'update_preimage', CAST(3 AS BIGINT)
+      FROM customer WHERE c_custkey <= 150 AND c_custkey % 10 = 0
+      UNION ALL
+      SELECT c_custkey, 'CHANGED', 'update_postimage', CAST(3 AS BIGINT)
+      FROM customer WHERE c_custkey <= 150 AND c_custkey % 10 = 0
+      UNION ALL
+      SELECT c_custkey,
+        CASE WHEN c_custkey % 10 = 0 THEN 'CHANGED' ELSE c_name END,
+        'delete', CAST(4 AS BIGINT)
+      FROM customer WHERE c_custkey <= 150 AND c_custkey % 7 = 0
+      ORDER BY commit_version, change_type, c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "deltacdf", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey").cast("long").as("c_custkey"),
+          col("c_name"))
+      graft.sources.DeltaLakeSink.append(
+        cust.filter(col("c_custkey") <= 120), root,
+        checkpointInterval = 0) // v0
+      val v1 = graft.sources.DeltaLakeSink.setTableProperties(s, root,
+        Map("delta.enableChangeDataFeed" -> "true"))
+      val v2 = graft.sources.DeltaLakeSink.append(
+        cust.filter(col("c_custkey") > 120 && col("c_custkey") <= 150),
+        root, checkpointInterval = 0)
+      val (v3, _) = graft.sources.DeltaLakeSink.update(s, root,
+        Seq("c_name" -> lit("CHANGED")), col("c_custkey") % 10 === 0,
+        checkpointInterval = 0)
+      val (v4, _) = graft.sources.DeltaLakeSink.delete(s, root,
+        col("c_custkey") % 7 === 0, checkpointInterval = 0)
+      require((v1, v2, v3, v4) == ((1L, 2L, 3L, 4L)),
+        s"deterministic versions expected, got ($v1, $v2, $v3, $v4)")
+      def commitText(v: Long): String = {
+        val in = Scratch.fs(s, root).open(new org.apache.hadoop.fs.Path(
+          s"$root/_delta_log/" + f"$v%020d.json"))
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      require(!commitText(v2).contains("\"cdc\""),
+        "appends to a CDF table must not write cdc files")
+      require(commitText(v3).contains("\"cdc\"") &&
+        commitText(v4).contains("\"cdc\""),
+        "mutations on a CDF table must write cdc actions")
+      // a range covering the pre-enablement creation commit refuses
+      require(scala.util.Try(graft.sources.DeltaLakeSource
+        .readChanges(s, root, 0L)).isFailure,
+        "a range covering pre-CDF commits must be loud")
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name, _change_type AS change_type, " +
+          s"_commit_version AS commit_version " +
+          s"FROM table_changes('$root', 1) " +
+          "ORDER BY commit_version, change_type, c_custkey")
+    },
+
+    // Delta VACUUM (round 16 — the storage-reclaim twin of the new
+    // Iceberg expiration): DV delete → compaction (strands the old
+    // parquet files + the DV bin) → VACUUM RETAIN 0 HOURS through the
+    // dialect. In-query pins: a default-retention vacuum deletes
+    // NOTHING (the young-file guard), the zero-retention pass deletes
+    // the stranded files incl. the DV bin, and time travel to the
+    // pre-compaction version is loud afterwards. The oracle restates
+    // the surviving rows — a vacuum that touched a referenced file
+    // would lose rows, not just space.
+    Q.df("q_delta_vacuum", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey <= 80 AND c_custkey % 9 <> 0
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "deltavac", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey").cast("long").as("c_custkey"),
+          col("c_name")).filter(col("c_custkey") <= 80)
+      graft.sources.DeltaLakeSink.append(cust, root,
+        checkpointInterval = 0)
+      graft.sources.DeltaLakeSink.deleteLightweight(s, root,
+        col("c_custkey") % 9 === 0, checkpointInterval = 0)
+      val (vComp, _, _) = graft.sources.DeltaLakeSink.compact(s, root,
+        checkpointInterval = 0)
+      require(graft.sources.DeltaLakeSink.vacuum(s, root) == ((0, 0L)),
+        "a default-retention vacuum must not touch young files")
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"OPTIMIZE TABLE FUNCTION deltaLake('$root') VACUUM " +
+          "RETAIN 0 HOURS").collect().head
+      require(res.getLong(0) > 0L && res.getLong(1) > 0L,
+        s"the stranded pre-compaction files must collect, got $res")
+      require(!new java.io.File(root).listFiles.map(_.getName)
+        .exists(_.startsWith("deletion_vector_")),
+        "the unreferenced DV bin must collect")
+      require(scala.util.Try(graft.sources.DeltaLakeSource.read(s, root,
+        versionAsOf = Some(vComp - 1)).collect()).isFailure,
+        "time travel needing vacuumed files must be loud")
+      graft.sources.DeltaLakeSource.read(s, root).orderBy("c_custkey")
+    },
+
+    // Hudi CLEAN (round 16 — KEEP_LATEST_FILE_VERSIONS): upsert logs →
+    // compaction (second slice per group) → CLEAN KEEP 1 through the
+    // dialect deletes every pre-compaction slice and its logs (counts
+    // pinned in-query). The oracle restates the merged state — a clean
+    // that removed a retained slice or a still-needed log would lose
+    // or resurrect rows.
+    Q.df("q_hudi_clean", """
+      SELECT 'c' || CAST(c_custkey AS VARCHAR) AS k,
+        CAST(c_custkey AS BIGINT) AS c_custkey,
+        CASE WHEN c_custkey % 5 = 0 THEN 'CLEANED' ELSE c_name END
+          AS c_name
+      FROM customer WHERE c_custkey <= 100
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "hudicln", dir)
+      val fs = Scratch.fs(s, root)
+      val cust = Tables.load(s, dir, "customer")
+        .filter(col("c_custkey") <= 100)
+        .select(concat(lit("c"), col("c_custkey").cast("string"))
+          .as("_hoodie_record_key"),
+          col("c_custkey").cast("long").as("c_custkey"), col("c_name"))
+      graft.sources.HudiSink.upsert(cust, root)
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") % 5 === 0)
+          .withColumn("c_name", lit("CLEANED")), root)
+      val (_, groups) = graft.sources.HudiSink.compact(s, root)
+      require(groups > 0, "the update logs must compact")
+      def names(): Seq[String] = fs
+        .listStatus(new org.apache.hadoop.fs.Path(root))
+        .map(_.getPath.getName).toSeq
+      val logsBefore = names().count(n => n.contains(".log.") &&
+        !n.endsWith(".crc"))
+      require(logsBefore > 0)
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"OPTIMIZE TABLE FUNCTION hudi('$root') CLEAN KEEP 1")
+        .collect().head
+      require(res.getLong(0) == groups.toLong &&
+        res.getLong(1) == logsBefore.toLong,
+        s"clean must drop $groups slices + $logsBefore logs, got $res")
+      require(!names().exists(n => n.contains(".log.") &&
+        !n.endsWith(".crc")), "no logs may survive a KEEP 1 clean here")
+      graft.sources.HudiSource.read(s, root)
+        .select(col("_hoodie_record_key").as("k"), col("c_custkey"),
+          col("c_name"))
+        .orderBy("c_custkey")
+    },
+
+    // Delta RESTORE (round 16 — point-in-time recovery): append →
+    // UPDATE → RESTORE TO VERSION 0 through the dialect. The restored
+    // content must equal the original append (the oracle restates it)
+    // while the PRE-restore state stays travelable (pinned in-query:
+    // restore preserves history, unlike a rollback-by-truncation).
+    Q.df("q_delta_restore", """
+      SELECT c_custkey, c_name FROM customer WHERE c_custkey <= 100
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "deltarst", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey").cast("long").as("c_custkey"),
+          col("c_name")).filter(col("c_custkey") <= 100)
+      graft.sources.DeltaLakeSink.append(cust, root,
+        checkpointInterval = 0) // v0
+      val (v1, nUpd) = graft.sources.DeltaLakeSink.update(s, root,
+        Seq("c_name" -> lit("MUTATED")), col("c_custkey") % 10 === 0,
+        checkpointInterval = 0)
+      require(nUpd > 0L && v1 == 1L,
+        s"expected a matched update at v1, got ($nUpd, $v1)")
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"RESTORE TABLE FUNCTION deltaLake('$root') TO VERSION 0")
+        .collect().head
+      require(res.getLong(0) == 2L && res.getLong(1) > 0 &&
+        res.getLong(2) > 0, s"restore must commit re-adds+removes: $res")
+      // history preserved: the pre-restore (mutated) state travels
+      val mutated = graft.sources.DeltaLakeSource.read(s, root,
+        versionAsOf = Some(1L))
+        .filter(col("c_name") === "MUTATED").count()
+      require(mutated == nUpd,
+        s"the pre-restore state must stay travelable: $mutated != $nUpd")
+      graft.sources.DeltaLakeSource.read(s, root).orderBy("c_custkey")
+    },
+
+    // Iceberg ROLLBACK (round 16): two appends → roll the current
+    // snapshot back to the first → a third append builds on the
+    // rolled-back state. Current = first + third slices (the oracle
+    // restates them); the bypassed second snapshot stays travelable
+    // (pinned in-query).
+    Q.df("q_iceberg_rollback", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey <= 50 OR (c_custkey > 100 AND c_custkey <= 120)
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icerb", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      val s1 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") <= 50), root)
+      val s2 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 50 && col("c_custkey") <= 100),
+        root)
+      graft.sql.ClickHouseSql.sql(s,
+        s"ALTER TABLE FUNCTION iceberg('$root') ROLLBACK TO SNAPSHOT $s1")
+        .collect()
+      graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 100 && col("c_custkey") <= 120),
+        root)
+      require(graft.sources.IcebergSource.read(s, root,
+        snapshotId = Some(s2)).count() ==
+        cust.filter(col("c_custkey") <= 100).count(),
+        "the bypassed snapshot must stay travelable")
+      graft.sources.IcebergSource.read(s, root).orderBy("c_custkey")
+    },
+
+    // Iceberg INCREMENTAL APPEND SCAN (round 16 — the snapshot-range
+    // changes read, Iceberg's incremental-read contract): three
+    // appends, then iceberg_changes(root, s1) through the dialect
+    // serves exactly the rows of appends 2+3 (the oracle restates
+    // them); a bounded (s1, s2] range serves only append 2, and a
+    // range crossing a row-level DELETE refuses loudly (both pinned
+    // in-query).
+    Q.df("q_iceberg_incremental", """
+      SELECT c_custkey, c_name FROM customer
+      WHERE c_custkey > 40 AND c_custkey <= 120
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "iceinc", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey"), col("c_name"))
+      val s1 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") <= 40), root)
+      val s2 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 40 && col("c_custkey") <= 80),
+        root)
+      val s3 = graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 80 && col("c_custkey") <= 120),
+        root)
+      val bounded = graft.sources.IcebergSource.readIncremental(s, root,
+        s1, Some(s2)).count()
+      require(bounded ==
+        cust.filter(col("c_custkey") > 40 && col("c_custkey") <= 80)
+          .count(),
+        s"the bounded range must serve only the second append: $bounded")
+      // a range crossing a row-level delete refuses
+      graft.sources.IcebergSink.deleteLightweight(s, root,
+        col("c_custkey") === 1L)
+      val loud = scala.util.Try(graft.sources.IcebergSource
+        .readIncremental(s, root, s1).count())
+      require(loud.isFailure,
+        "a range containing a delete must refuse")
+      // the append-only prefix still serves through the dialect
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name FROM " +
+          s"iceberg_changes('$root', $s1, $s3) ORDER BY c_custkey")
+    },
+
+    // Hudi INCREMENTAL query (round 16 — completes the incremental/CDC
+    // read on all three formats: Delta table_changes, Iceberg
+    // iceberg_changes, Hudi hudi_changes): batch 1 inserts, batch 2
+    // inserts new keys AND updates some of batch 1 —
+    // hudi_changes(root, i1) must serve exactly batch 2's keys plus
+    // the updated rows at their new values, and NOT untouched batch-1
+    // rows (the oracle restates that set). A bounded (i1, i1] range is
+    // empty (pinned in-query).
+    Q.df("q_hudi_incremental", """
+      SELECT 'c' || CAST(c_custkey AS VARCHAR) AS k,
+        CAST(c_custkey AS BIGINT) AS c_custkey,
+        CASE WHEN c_custkey <= 60 THEN 'UPDATED' ELSE c_name END
+          AS c_name
+      FROM customer
+      WHERE (c_custkey <= 60 AND c_custkey % 6 = 0)
+         OR (c_custkey > 60 AND c_custkey <= 90)
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "hudiinc", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .filter(col("c_custkey") <= 90)
+        .select(concat(lit("c"), col("c_custkey").cast("string"))
+          .as("_hoodie_record_key"),
+          col("c_custkey").cast("long").as("c_custkey"), col("c_name"))
+      val (i1, _) = graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") <= 60), root)
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") > 60)
+          .unionByName(cust
+            .filter(col("c_custkey") <= 60 && col("c_custkey") % 6 === 0)
+            .withColumn("c_name", lit("UPDATED"))), root)
+      require(graft.sources.HudiSource.readIncremental(s, root, i1,
+        toInstant = Some(i1)).isEmpty,
+        "an empty (i1, i1] range must serve nothing")
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT _hoodie_record_key AS k, c_custkey, c_name " +
+          s"FROM hudi_changes('$root', '$i1') ORDER BY c_custkey")
+    },
+
+    // Iceberg RANGE-predicate manifest pruning (round 17 — the r16
+    // verdict's #1 directive): a day(ts)-partitioned table over the
+    // events stream (30 day files), then the flagship time-range shape
+    // `WHERE ts >= X AND ts < Y` through the dialect. The query's OWN
+    // pushed predicates must prune to EXACTLY the 5 in-range day files
+    // at planning time (asserted in-query via the scan's numFiles
+    // metric — the strict `< midnight` upper bound excludes the
+    // boundary day). The oracle restates the window from the source
+    // parquet — a wrong day() evaluation on either side loses rows.
+    Q.df("q_iceberg_range_prune", """
+      SELECT event_id, user_id, event_type
+      FROM events
+      WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
+        AND ts <  TIMESTAMP '2024-01-15 00:00:00'
+      ORDER BY event_id""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icerng", dir)
+      val ev = Tables.load(s, dir, "events")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"))
+      graft.sources.IcebergSink.append(ev.repartition(1), root,
+        partitionBy = Seq("day(ts)"))
+      val total = graft.sources.IcebergSource.read(s, root)
+        .inputFiles.length
+      require(total == 30, s"30 day files expected, got $total")
+      val win = graft.sql.ClickHouseSql.sql(s,
+        s"SELECT event_id, user_id, event_type FROM iceberg('$root') " +
+          "WHERE ts >= '2024-01-10 00:00:00' " +
+          "AND ts < '2024-01-15 00:00:00' ORDER BY event_id")
+      val scanned = scanNumFiles(win)
+      require(scanned == 5L,
+        s"the 5-day window must scan 5 of $total files, got $scanned")
+      win
+    },
+
+    // Iceberg manifest COLUMN-BOUNDS pruning (round 17 — the r16
+    // verdict's #2 directive): an UNPARTITIONED table whose files hold
+    // disjoint o_orderkey ranges (range-partitioned staging), so any
+    // file skipping must come from the manifests' lower_bounds/
+    // upper_bounds — written by the sink from the parquet footers. A
+    // key-range predicate must scan a strict subset of the files
+    // (asserted in-query); the oracle restates the range from the
+    // source parquet.
+    Q.df("q_iceberg_stats_prune", """
+      SELECT o_orderkey, CAST(o_custkey AS BIGINT) AS cust,
+        o_orderstatus
+      FROM orders
+      WHERE o_orderkey BETWEEN 10000 AND 12000
+      ORDER BY o_orderkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icestat", dir)
+      val ord = Tables.load(s, dir, "orders")
+        .select(col("o_orderkey"),
+          col("o_custkey").cast("long").as("cust"), col("o_orderstatus"))
+      graft.sources.IcebergSink.append(
+        ord.repartitionByRange(8, col("o_orderkey")), root)
+      val total = graft.sources.IcebergSource.read(s, root)
+        .inputFiles.length
+      require(total == 8, s"8 range files expected, got $total")
+      val q = graft.sql.ClickHouseSql.sql(s,
+        s"SELECT o_orderkey, cust, o_orderstatus FROM iceberg('$root') " +
+          "WHERE o_orderkey BETWEEN 10000 AND 12000 ORDER BY o_orderkey")
+      val scanned = scanNumFiles(q)
+      require(scanned >= 1L && scanned < total,
+        s"column bounds must prune: scanned $scanned of $total")
+      q
+    },
+
+    // Iceberg SCHEMA EVOLUTION read (round 17 — the r16 verdict's #3
+    // directive): generation 1 writes (c_custkey, payload); an
+    // external-style metadata evolution renames payload→label (same
+    // field id 2) and adds note (id 3); generation 2 appends under the
+    // new schema. The read resolves data-file columns by PARQUET FIELD
+    // ID (the sink stamps ids per the spec), so gen-1 rows serve their
+    // pre-rename values under the new name and read NULL for the added
+    // column — a name-resolved read would serve nulls for ALL gen-1
+    // labels. The oracle restates both generations.
+    Q.df("q_iceberg_schema_evolution", """
+      SELECT c_custkey, c_name AS label,
+        CAST(NULL AS BIGINT) AS note
+      FROM customer WHERE c_custkey <= 100
+      UNION ALL
+      SELECT c_custkey, 'gen2-' || c_name, c_custkey * 10
+      FROM customer WHERE c_custkey > 100 AND c_custkey <= 150
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "icesev", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .select(col("c_custkey").cast("long").as("c_custkey"),
+          col("c_name"))
+      graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") <= 100)
+          .withColumnRenamed("c_name", "payload"), root)
+      // external-style ALTER: append schema-id 1 (payload→label, +note)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val metaDir = new java.io.File(root, "metadata")
+      val v = metaDir.listFiles().map(_.getName)
+        .collect { case n if n.matches("v\\d+\\.metadata\\.json") =>
+          n.stripPrefix("v").stripSuffix(".metadata.json").toInt }.max
+      val node = mapper.readTree(java.nio.file.Files.readString(
+        new java.io.File(metaDir, s"v$v.metadata.json").toPath))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
+        "schemas").add(mapper.readTree(
+        """{"type":"struct","schema-id":1,"fields":[
+          {"id":1,"name":"c_custkey","required":false,"type":"long"},
+          {"id":2,"name":"label","required":false,"type":"string"},
+          {"id":3,"name":"note","required":false,"type":"long"}]}"""))
+      node.put("current-schema-id", 1)
+      node.put("last-column-id", 3)
+      java.nio.file.Files.writeString(
+        new java.io.File(metaDir, s"v${v + 1}.metadata.json").toPath,
+        mapper.writeValueAsString(node))
+      java.nio.file.Files.writeString(
+        new java.io.File(metaDir, "version-hint.text").toPath,
+        (v + 1).toString)
+      new java.io.File(metaDir, s".v$v.metadata.json.crc").delete()
+      // generation 2 under the evolved schema
+      graft.sources.IcebergSink.append(
+        cust.filter(col("c_custkey") > 100 && col("c_custkey") <= 150)
+          .select(col("c_custkey"),
+            concat(lit("gen2-"), col("c_name")).as("label"),
+            (col("c_custkey") * 10).as("note")), root)
+      graft.sources.IcebergSource.read(s, root).orderBy("c_custkey")
+    },
+
+    // Hudi TIMELINE ARCHIVAL (round 17 — the r16 verdict's #6
+    // directive: after compaction and cleaning bound the data, the
+    // .hoodie timeline is the unbounded metadata): four commits (two
+    // upsert batches, an update wave, a compaction) then
+    // `OPTIMIZE ... ARCHIVE KEEP 2` folds the older instants into
+    // .hoodie/archived/. Asserted in-query: the active instant count
+    // shrinks to 2, exactly one archive file lands, and archival
+    // changes NOTHING about visibility — the oracle restates the full
+    // merged state including rows whose only write lives at an
+    // archived instant.
+    Q.df("q_hudi_archive", """
+      SELECT 'c' || CAST(c_custkey AS VARCHAR) AS k,
+        CAST(c_custkey AS BIGINT) AS c_custkey,
+        CASE WHEN c_custkey % 8 = 0 THEN 'ARCHIVED-UPD' ELSE c_name END
+          AS c_name
+      FROM customer WHERE c_custkey <= 120
+      ORDER BY c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "hudiarch", dir)
+      val fs = Scratch.fs(s, root)
+      val cust = Tables.load(s, dir, "customer")
+        .filter(col("c_custkey") <= 120)
+        .select(concat(lit("c"), col("c_custkey").cast("string"))
+          .as("_hoodie_record_key"),
+          col("c_custkey").cast("long").as("c_custkey"), col("c_name"))
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") <= 60), root)
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") > 60), root)
+      graft.sources.HudiSink.upsert(
+        cust.filter(col("c_custkey") % 8 === 0)
+          .withColumn("c_name", lit("ARCHIVED-UPD")), root)
+      graft.sources.HudiSink.compact(s, root)
+      def activeInstants(): Int = fs.listStatus(
+        new org.apache.hadoop.fs.Path(root, ".hoodie"))
+        .count(st => !st.isDirectory &&
+          st.getPath.getName.matches("\\d+\\.[a-z]+"))
+      require(activeInstants() == 4,
+        s"4 completed instants expected, got ${activeInstants()}")
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"OPTIMIZE TABLE FUNCTION hudi('$root') ARCHIVE KEEP 2")
+        .collect().head
+      require(res.getLong(0) == 2L && activeInstants() == 2,
+        s"2 instants must archive, got $res / ${activeInstants()}")
+      require(fs.listStatus(new org.apache.hadoop.fs.Path(root,
+        ".hoodie/archived")).count(
+        _.getPath.getName.endsWith(".archive.jsonl")) == 1,
+        "one archive file expected")
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT _hoodie_record_key AS k, c_custkey, c_name " +
+          s"FROM hudi('$root') ORDER BY c_custkey")
+    },
+
+    // Delta RESTORE on a CDF table (round 17 — the r16 verdict's #7:
+    // the refusal drops): the restore commit captures its change rows
+    // from the file-level diff it already computes. A grp-partitioned
+    // table makes the diff DETERMINISTIC: the update rewrites exactly
+    // partition grp=1, so the restore emits that partition's rows as
+    // 'delete' (the mutated state being removed) and 'insert' (the
+    // original state coming back) — the oracle restates both sides.
+    Q.df("q_delta_restore_cdf", """
+      SELECT c_custkey, 'UPDATED' AS c_name, 'delete' AS change_type
+      FROM customer WHERE c_custkey % 4 = 1 AND c_custkey <= 100
+      UNION ALL
+      SELECT c_custkey, c_name, 'insert'
+      FROM customer WHERE c_custkey % 4 = 1 AND c_custkey <= 100
+      ORDER BY change_type, c_custkey""") { (s, dir) =>
+      val root = Scratch.fresh(s, "drcdf", dir)
+      val cust = Tables.load(s, dir, "customer")
+        .filter(col("c_custkey") <= 100)
+        .select(col("c_custkey").cast("long").as("c_custkey"),
+          col("c_name"), (col("c_custkey") % 4).cast("long").as("grp"))
+      graft.sources.DeltaLakeSink.append(cust, root,
+        partitionBy = Seq("grp"), checkpointInterval = 0) // v0
+      val v1 = graft.sources.DeltaLakeSink.setTableProperties(s, root,
+        Map("delta.enableChangeDataFeed" -> "true"))
+      val (v2, nUpd) = graft.sources.DeltaLakeSink.update(s, root,
+        Seq("c_name" -> lit("UPDATED")), col("grp") === 1L,
+        checkpointInterval = 0)
+      require(nUpd > 0 && v2 == 2L, s"expected update at v2, got $v2")
+      val res = graft.sql.ClickHouseSql.sql(s,
+        s"RESTORE TABLE FUNCTION deltaLake('$root') TO VERSION $v1")
+        .collect().head
+      val v3 = res.getLong(0)
+      require(v3 == 3L && res.getLong(1) > 0 && res.getLong(2) > 0,
+        s"the restore must re-add and remove files, got $res")
+      graft.sql.ClickHouseSql.sql(s,
+        s"SELECT c_custkey, c_name, _change_type AS change_type " +
+          s"FROM table_changes('$root', $v3, $v3) " +
+          "ORDER BY change_type, c_custkey")
     }
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, Scratch, Tables}
 import org.apache.spark.sql.functions._
 
 /** Round-9 lifecycle DDL surface — the last common statement-form gaps
@@ -823,7 +823,7 @@ object LifecycleQueries extends QueryPack {
     * COLLECTIONS + system.named_collections. */
   private val namedCollection = Q("q_ch_named_collection", (s, dir) => {
     Tables.register(s, dir)
-    val path = s"/tmp/graft_nc_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val path = Scratch.path("nc", dir)
     Tables.load(s, dir, "nation")
       .write.mode("overwrite").parquet(path)
     ch.sql(s, "DROP NAMED COLLECTION IF EXISTS nc_probe")

@@ -331,7 +331,39 @@ object Relational extends QueryPack {
       JOIN lineitem b ON a.l_orderkey = b.l_orderkey
                      AND b.l_linenumber = a.l_linenumber + 1
       ORDER BY a.l_orderkey, a.l_linenumber
-      LIMIT 500""")
+      LIMIT 500"""),
+
+    // Recursive CTE (src/Processors/QueryPlan/ReadFromRecursiveCTEStep.h):
+    // Spark has no recursive CTE — rendered as a driver-side fixpoint loop
+    // of DataFrame unions (each iteration is still a distributed job).
+    // Computes 1..10 factorial-ish chain: path lengths in a key graph.
+    Q.df("q_recursive_cte", """
+      WITH RECURSIVE r(n, fact) AS (
+        SELECT 1, CAST(1 AS BIGINT)
+        UNION ALL
+        SELECT n + 1, fact * (n + 1) FROM r WHERE n < 10)
+      SELECT n, fact FROM r ORDER BY n""") { (s, _) =>
+      import s.implicits._
+      var acc = Seq((1, 1L)).toDF("n", "fact")
+      var frontier = acc
+      var done = false
+      var iter = 0
+      val maxIter = 1000 // fixpoint guard, like the reference's
+                         // max_recursive_cte_evaluation_depth setting
+      while (!done && iter < maxIter) {
+        iter += 1
+        val next = frontier.filter(col("n") < 10)
+          .select((col("n") + 1).as("n"), (col("fact") * (col("n") + 1)).as("fact"))
+        if (next.isEmpty) done = true
+        else {
+          acc = acc.unionByName(next); frontier = next
+          // truncate lineage every few iterations: an unbounded union chain
+          // makes the plan (and each isEmpty job) grow quadratically deep
+          if (iter % 8 == 0) acc = acc.localCheckpoint()
+        }
+      }
+      acc.orderBy("n")
+    }
   )
 
   /** DataFrame-API twin of Q5 used as the `SparkEntry.entry` flagship:

@@ -109,6 +109,43 @@ object SortLimit extends QueryPack {
       SELECT COUNT(*) AS n,
         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
       FROM orders
-      WHERE o_orderkey % 10 = 3""")
+      WHERE o_orderkey % 10 = 3"""),
+
+    // WITH FILL + INTERPOLATE carry-forward (FillingTransform +
+    // InterpolateDescription): missing months take the last seen value.
+    Q.df("q_fill_interpolate", """
+      WITH monthly AS (
+        SELECT DATE_TRUNC('month', o_orderdate) AS m,
+          CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        FROM orders WHERE o_custkey <= 30 GROUP BY 1),
+      axis AS (SELECT UNNEST(GENERATE_SERIES(TIMESTAMP '1995-01-01',
+                 TIMESTAMP '2001-08-01', INTERVAL 1 MONTH)) AS m)
+      SELECT axis.m,
+        COALESCE(revenue,
+          LAST_VALUE(revenue IGNORE NULLS) OVER (ORDER BY axis.m
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0) AS revenue
+      FROM axis LEFT JOIN monthly USING (m)
+      ORDER BY axis.m""") { (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val monthly = Tables.load(s, dir, "orders")
+        .filter(col("o_custkey") <= 30)
+        .groupBy(date_trunc("month", col("o_orderdate")).as("m"))
+        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("revenue"))
+      val filled = graft.operators.SortLimitOps
+        .withFillMonths(monthly, "m", "1995-01-01", "2001-08-01")
+      val w = Window.orderBy("m").rowsBetween(Window.unboundedPreceding, 0)
+      filled.select(col("m"),
+        coalesce(col("revenue"), last(col("revenue"), ignoreNulls = true).over(w),
+          lit(0.0)).as("revenue"))
+        .orderBy("m")
+    },
+
+    // Collation-style case-insensitive ordering (src/Columns/Collator.cpp)
+    // rendered as an explicit collation key.
+    Q.shared("q_collation_sort", """
+      SELECT p_partkey, p_name
+      FROM part
+      ORDER BY LOWER(p_name), p_partkey
+      LIMIT 300""")
   )
 }

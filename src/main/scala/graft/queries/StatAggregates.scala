@@ -214,6 +214,90 @@ object StatAggregates extends QueryPack {
         CAST(a.n AS BIGINT) AS n_a,
         CAST(b.n AS BIGINT) AS n_b
       FROM (SELECT * FROM m WHERE grp = 'a') a
+      CROSS JOIN (SELECT * FROM m WHERE grp = 'b') b"""),
+
+    // Hypothesis tests
+
+    // Welch t-test statistic (AggregateFunctionStudentTTest/WelchTTest):
+    // composed from moment aggregates — identical arithmetic in the oracle.
+    Q.shared("q_agg_welch_ttest", """
+      WITH g AS (
+        SELECT CASE WHEN l_returnflag = 'R' THEN 'a' ELSE 'b' END AS grp,
+               l_extendedprice AS x
+        FROM lineitem),
+      m AS (SELECT grp, COUNT(*) AS n, AVG(x) AS mean, VAR_SAMP(x) AS v
+            FROM g GROUP BY grp)
+      SELECT ROUND((a.mean - b.mean)
+               / SQRT(a.v / a.n + b.v / b.n), 4) AS t_stat,
+             a.n AS n_a, b.n AS n_b
+      FROM (SELECT * FROM m WHERE grp = 'a') a
+      CROSS JOIN (SELECT * FROM m WHERE grp = 'b') b"""),
+
+    // Mann-Whitney U statistic (AggregateFunctionMannWhitney.cpp) via
+    // DISTRIBUTED midranks: aggregate per distinct value x first (shuffle
+    // on x, partial-agg'd), then a prefix-sum window over the tiny
+    // distinct-value table — midrank(x) = cum(x) - cnt(x) + (cnt(x)+1)/2.
+    // No global window ever sees a full-input row (the round-1 form ranked
+    // every lineitem row through ONE task).
+    Q.shared("q_agg_mann_whitney", """
+      WITH t AS (SELECT l_returnflag AS g, l_quantity AS x
+                 FROM lineitem WHERE l_returnflag IN ('R', 'N')),
+      c AS (SELECT x, COUNT(*) AS cnt,
+              COUNT(CASE WHEN g = 'R' THEN 1 END) AS cr
+            FROM t GROUP BY x),
+      m AS (SELECT x, cnt, cr,
+              SUM(cnt) OVER (ORDER BY x
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+            FROM c)
+      SELECT
+        ROUND(SUM(CAST(cr AS DOUBLE) * (CAST(cum - cnt AS DOUBLE) + (CAST(cnt AS DOUBLE) + 1) / 2.0))
+          - CAST(SUM(cr) AS DOUBLE) * (CAST(SUM(cr) AS DOUBLE) + 1) / 2.0, 2) AS u_stat,
+        CAST(SUM(cr) AS BIGINT) AS n_r,
+        CAST(SUM(cnt - cr) AS BIGINT) AS n_n
+      FROM m"""),
+
+    // One-way ANOVA F statistic over price cents by returnflag
+    // (registerAggregateFunctions.cpp analysisOfVariance). Between/within
+    // sums from exact integer moments; the 3-term cross-group double sum
+    // goes through a 1e2 fixed point (dollar-scale terms ~1e14 at sf0.1,
+    // far from BIGINT overflow).
+    Q.shared("q_agg_anova", """
+      WITH g AS (SELECT l_returnflag AS f,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS xc
+                 FROM lineitem),
+      m AS (SELECT f, CAST(COUNT(*) AS DOUBLE) AS n,
+              CAST(SUM(xc) AS DOUBLE) / 100.0 AS s,
+              CAST(SUM(CAST(xc AS DECIMAL(18,0)) * CAST(xc AS DECIMAL(18,0))) AS DOUBLE)
+                / 10000.0 AS s2
+            FROM g GROUP BY f),
+      b AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k, SUM(n) AS n,
+              SUM(CAST(ROUND(s * 100.0) AS BIGINT)) / 100.0 AS s,
+              SUM(CAST(ROUND(s2 / 1000.0) AS BIGINT)) * 1000.0 AS s2,
+              SUM(CAST(ROUND(s * s / n * 100.0) AS BIGINT)) / 100.0 AS sb
+            FROM m)
+      SELECT
+        ROUND(((sb - s * s / n) / (k - 1.0))
+          / ((s2 - sb) / (n - k)), 6) AS f_stat,
+        CAST(n AS BIGINT) AS n_rows,
+        CAST(k AS BIGINT) AS n_groups
+      FROM b"""),
+
+    // meanZTest (registerAggregateFunctions.cpp meanZTest): two-sample z
+    // with population variances from exact moments.
+    Q.shared("q_agg_mean_ztest", """
+      WITH g AS (SELECT CASE WHEN l_returnflag = 'R' THEN 'a' ELSE 'b' END AS grp,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS xc
+                 FROM lineitem),
+      m AS (SELECT grp, CAST(COUNT(*) AS DOUBLE) AS n,
+              CAST(SUM(xc) AS DOUBLE) AS s1,
+              CAST(SUM(CAST(xc AS DECIMAL(18,0)) * CAST(xc AS DECIMAL(18,0))) AS DOUBLE) AS s2
+            FROM g GROUP BY grp)
+      SELECT
+        ROUND((a.s1 / a.n - b.s1 / b.n)
+          / SQRT((a.s2 / a.n - (a.s1 / a.n) * (a.s1 / a.n)) / a.n
+               + (b.s2 / b.n - (b.s1 / b.n) * (b.s1 / b.n)) / b.n), 4) AS z_stat,
+        CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b
+      FROM (SELECT * FROM m WHERE grp = 'a') a
       CROSS JOIN (SELECT * FROM m WHERE grp = 'b') b""")
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, Scratch, Tables}
 import graft.operators.{ExecutableUdf, Storages}
 import graft.sources.SystemTables
 import graft.sql.ClickHouseSql
@@ -673,7 +673,7 @@ object StorageQueries extends QueryPack {
         s.conf.get("spark.sql.warehouse.dir"), t)
       wh.getFileSystem(s.sparkContext.hadoopConfiguration).delete(wh, true)
       s.sql(s"CREATE TABLE $t (r_regionkey INT, r_name STRING) USING parquet")
-      val out = s"/tmp/graft_infile_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = Scratch.path("infile", dir)
       graft.sql.ClickHouseSql.sql(s,
         s"SELECT r_regionkey, r_name FROM region INTO OUTFILE '$out' " +
           "FORMAT CSVWithNames")

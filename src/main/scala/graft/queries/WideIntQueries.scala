@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{Q, QueryPack, Tables}
-import graft.sql.ClickHouseSql
+import graft.{Q, QueryPack}
 
 /** Wide-integer (Int128/Int256) batteries, exactly oracled against
   * DuckDB's native HUGEINT (which IS Int128) rendered as VARCHAR — the
@@ -22,10 +21,6 @@ import graft.sql.ClickHouseSql
   */
 object WideIntQueries extends QueryPack {
 
-  private def ch(name: String, chSql: String, oracle: String): Q =
-    Q(name, (s, dir) => { Tables.register(s, dir); ClickHouseSql.sql(s, chSql) },
-      Some(oracle))
-
   // 12345678901234567890 * 9876543210987654321 ≈ 1.219e38: above the
   // DECIMAL(38) cap, inside Int128. Both engines derive it, not state it.
   private val bigA = "12345678901234567890"
@@ -34,7 +29,7 @@ object WideIntQueries extends QueryPack {
 
   override def queries: Seq[Q] = Seq(
 
-    ch("q_fn_wide_int128", s"""
+    Q.ch("q_fn_wide_int128", s"""
       SELECT
         multiply(toInt128('$bigA'), toInt128('$bigB')) AS prod,
         plus(multiply('$bigA', '$bigB'), '1') AS prod1,
@@ -91,7 +86,7 @@ object WideIntQueries extends QueryPack {
     // Int256 lane: HUGEINT-checkable values carried through toInt256 /
     // toUInt256 conversions and OrNull range checks (2^127 IS in the
     // Int256 range, so the OrNull twin keeps it where Int128 rejects it).
-    ch("q_fn_wide_int256", s"""
+    Q.ch("q_fn_wide_int256", s"""
       SELECT
         toInt256(multiply('$bigA', '$bigB')) AS v256,
         toUInt256(multiply('$bigA', '$bigB')) AS u256,
@@ -113,7 +108,7 @@ object WideIntQueries extends QueryPack {
     // Key bounds keep the product inside INT128 at EVERY scale factor —
     // at sf0.1 the unbounded form overflowed the DUCKDB oracle's HUGEINT
     // (our Int128/256 carrier was fine); the gate must stay sf-robust.
-    ch("q_fn_wide_int_rows", """
+    Q.ch("q_fn_wide_int_rows", """
       SELECT l_orderkey, l_linenumber,
         multiply(multiply(toInt128(l_orderkey), '1000000000000000'),
                  multiply(toInt128(l_partkey), '1000000000000000')) AS wide,

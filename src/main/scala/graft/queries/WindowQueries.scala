@@ -237,6 +237,44 @@ object WindowQueries extends QueryPack {
           / (CAST(EPOCH_US(ts) - LAG(EPOCH_US(ts)) OVER w AS DOUBLE) / 1000000.0), 0.0), 0.0), 6) AS rate
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-      ORDER BY user_id, event_id""")
+      ORDER BY user_id, event_id"""),
+
+    // GROUPS window frames (WindowDescription.h:32; Spark lacks GROUPS) —
+    // emulated by pre-aggregating per (partition, order value) and running
+    // a ROWS frame over the per-value table, then weighting back. The
+    // oracle (DuckDB here lacks GROUPS too) derives each distinct value's
+    // frame sum independently via LAG over the per-value sums.
+    Q.df("q_win_groups_frame", """
+      WITH r AS (SELECT l_returnflag AS f, CAST(l_shipdate AS DATE) AS d,
+                   CAST(ROUND(l_quantity * 100) AS BIGINT) AS qc
+                 FROM lineitem),
+      pd AS (SELECT f, d, SUM(qc) AS dqc, COUNT(*) AS cnt FROM r GROUP BY f, d),
+      w AS (SELECT f, cnt,
+              dqc + COALESCE(LAG(dqc) OVER (PARTITION BY f ORDER BY d), 0) AS gs
+            FROM pd)
+      SELECT f AS l_returnflag, CAST(MAX(gs) AS BIGINT) AS max_gs,
+        CAST(MIN(gs) AS BIGINT) AS min_gs,
+        CAST(SUM(gs * cnt) AS BIGINT) AS total_gs
+      FROM w GROUP BY f ORDER BY f""") { (s, dir) =>
+      val r = Tables.load(s, dir, "lineitem")
+        .select(col("l_returnflag").as("f"), col("l_shipdate").cast("date").as("d"),
+          round(col("l_quantity") * 100).cast("long").as("qc"))
+      val perDate = r.groupBy("f", "d")
+        .agg(sum("qc").as("dqc"), count(lit(1)).as("cnt"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("f").orderBy("d")
+        .rowsBetween(-1, org.apache.spark.sql.expressions.Window.currentRow)
+      val gs = perDate.withColumn("gs", sum("dqc").over(w))
+      // total_gs lands as BIGINT on BOTH engines: DuckDB's SUM(BIGINT) is
+      // HUGEINT and Spark's decimal(38,0) stringifies without the ".0" a
+      // float-converted HUGEINT gains in the oracle gate's hash — the hash
+      // mismatch was repr skew, not a value difference. The product sum
+      // fits int64 past sf100 (~1e13 at sf100 vs 9.2e18 max).
+      gs.groupBy(col("f").as("l_returnflag"))
+        .agg(max("gs").cast("long").as("max_gs"),
+          min("gs").cast("long").as("min_gs"),
+          sum(col("gs") * col("cnt")).cast("long").as("total_gs"))
+        .orderBy("l_returnflag")
+    }
   )
 }

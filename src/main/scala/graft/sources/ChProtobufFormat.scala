@@ -290,12 +290,6 @@ object ChProtobufFormat {
     while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
   }
 
-  private def scalarBytes(t: String, v: Any): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    writeScalar(bos, t, v)
-    bos.toByteArray
-  }
-
   /** One scalar payload (no tag). */
   private def writeScalar(out: OutputStream, t: String, v: Any): Unit = t match {
     case "double" =>

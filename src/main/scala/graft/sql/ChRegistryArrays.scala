@@ -26,7 +26,7 @@ import ChBuild._
   *
   * Scalar per-row arrays are small; the few O(n²) forms (enumerateUniq,
   * enumerateDense, normalize*) are documented at their definition and are
-  * NOT used by any bulk pipeline (LlmPipeline uses explode+groupBy forms).
+  * NOT used by any bulk pipeline (Dedup and TextPipeline use explode+groupBy forms).
   */
 object ChRegistryArrays {
 

@@ -107,12 +107,6 @@ object WindowView {
   def withStrictlyAscendingWatermark(events: DataFrame): DataFrame =
     events.withWatermark("ts", "0 seconds")
 
-  /** ASCENDING watermark strategy (StorageWindowView.h:80-85): like
-    * STRICTLY_ASCENDING but tolerates equal timestamps — max minus one
-    * second, so ties and sub-second jitter survive. */
-  def withAscendingWatermark(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 second")
-
   /** ALLOWED_LATENESS (StorageWindowView.h:93-95, :212): a late row whose
     * window already fired re-fires that window with the updated aggregate,
     * as long as the row is within the lateness bound; beyond it the row is
@@ -125,8 +119,8 @@ object WindowView {
 
   /** Streaming exact dedup by key within the watermark horizon — the
     * streaming face of ReplacingMergeTree dedup (reference
-    * ReplacingSortedAlgorithm) and the stream form of the LlmPipeline
-    * exact-dedup stage. State is bounded: keys expire once the watermark
+    * ReplacingSortedAlgorithm) and the stream form of `q_dedup_exact`
+    * (queries.Dedup). State is bounded: keys expire once the watermark
     * passes (dropDuplicatesWithinWatermark), so the operator holds
     * O(keys-per-horizon) state at 100 TB stream rates, not O(all keys). */
   def dedupStream(events: DataFrame, delay: String, keys: Seq[String]): DataFrame =

@@ -26,7 +26,7 @@ object MinhashDiag {
       val t0 = System.nanoTime()
       // call the helper directly (the query wrapper localCheckpoints,
       // which hides the interesting executed plan behind an RDD scan)
-      val (docs, pairs) = graft.queries.LlmPipeline.minhashLshPairs(
+      val (docs, pairs) = graft.operators.NearDup.minhashLshPairs(
         graft.Tables.load(spark, sfDir, "documents"))
       val df = pairs
       val n = df.collect().length

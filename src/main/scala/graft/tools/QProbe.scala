@@ -58,7 +58,7 @@ object QProbe {
     }
     // Minhash LSH phase split: shingle cache build vs the survivor query
     time("minhash: full pipeline") {
-      val (docs, pairs) = graft.queries.LlmPipeline.minhashLshPairs(
+      val (docs, pairs) = graft.operators.NearDup.minhashLshPairs(
         graft.Tables.load(spark, sfDir, "documents"))
       graft.operators.Components.lineageCut(pairs)
       docs.unpersist()

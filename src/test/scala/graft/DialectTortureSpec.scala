@@ -5,7 +5,7 @@ import graft.sql.ClickHouseSql
 /** Executability smoke over realistic reference-dialect query shapes — the
   * "a user of the reference could paste their query" claim, exercised
   * end-to-end (rewrite + registry + Catalyst + execution). Correctness of
-  * the individual pieces is oracled elsewhere (FunctionTail, DialectQueries);
+  * the individual pieces is oracled elsewhere (ScalarFunctions, DialectQueries);
   * this suite pins that the COMBINATIONS keep executing. */
 class DialectTortureSpec extends SparkFunSuite {
 

@@ -30,7 +30,7 @@ class LlmPipelineSpec extends SparkFunSuite {
   test("approximate ANN (LSH + IVF) is sound and clears its recall floor") {
     val exact = SparkEntry.queries("q_ann_cosine_topk")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val e = queries.LlmPipeline.prepEmbeddings(
+    val e = operators.VectorIndex.prep(
       Tables.load(spark, sf, "embeddings"))
     def check(name: String, ann: Array[org.apache.spark.sql.Row],
         floor: Double): Unit = {
@@ -44,8 +44,8 @@ class LlmPipelineSpec extends SparkFunSuite {
       val recall = exact.intersect(found).size.toDouble / exact.size
       assert(recall >= floor, s"$name recall $recall below floor $floor")
     }
-    check("lsh", queries.LlmPipeline.annLshTopK(e, 5).collect(), 0.25)
-    check("ivf", queries.LlmPipeline.annIvfTopK(e, 5).collect(), 0.65)
+    check("lsh", operators.VectorIndex.annLshTopK(e, 5).collect(), 0.25)
+    check("ivf", operators.VectorIndex.annIvfTopK(e, 5).collect(), 0.65)
     // the hybrid-oracled query forms report every invariant as passing
     Seq("q_ann_lsh_bucketed", "q_ann_ivf").foreach { name =>
       val metrics = SparkEntry.queries(name)(spark, sf).collect()
@@ -59,9 +59,9 @@ class LlmPipelineSpec extends SparkFunSuite {
     // result (same threshold) — bucketing can lose pairs, never invent them
     val exact = SparkEntry.queries("q_dedup_embedding_exact")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val e = queries.LlmPipeline.prepEmbeddings(
+    val e = operators.VectorIndex.prep(
       Tables.load(spark, sf, "embeddings"))
-    val lsh = queries.LlmPipeline.embeddingLshPairs(e, 0.4).collect()
+    val lsh = operators.NearDup.embeddingLshPairs(e, 0.4).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .filter(p => p._1 < 300 && p._2 < 300).toSet
     assert(lsh.subsetOf(exact), s"unsound pairs: ${lsh.diff(exact)}")
@@ -71,7 +71,7 @@ class LlmPipelineSpec extends SparkFunSuite {
   }
 
   test("simhash dedup pairs are within the hamming bound") {
-    val rows = queries.LlmPipeline.simhashPairs(
+    val rows = operators.NearDup.simhashPairs(
       Tables.load(spark, sf, "documents"), 12).collect()
     assert(rows.forall(_.getInt(2) <= 12))
     val metrics = SparkEntry.queries("q_dedup_simhash")(spark, sf).collect()

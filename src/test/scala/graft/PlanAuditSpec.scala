@@ -32,7 +32,7 @@ class PlanAuditSpec extends SparkFunSuite {
     // The query wrapper eagerly checkpoints the tiny survivor set and
     // unpersists the shingle cache (round-3 verdict #5), so the cache is
     // only visible in the LAZY pipeline's plan — pin it there.
-    val (docs, pairs) = queries.LlmPipeline.minhashLshPairs(
+    val (docs, pairs) = operators.NearDup.minhashLshPairs(
       Tables.load(spark, sf, "documents"))
     try {
       val p = pairs.queryExecution.executedPlan.toString
@@ -49,7 +49,7 @@ class PlanAuditSpec extends SparkFunSuite {
     // executor-heartbeat timeouts from GC storms). The shuffle_hash hints
     // make the join strategy deterministic AND 100 TB-shaped (a full-corpus
     // broadcast can never scale).
-    val (docs, pairs) = queries.LlmPipeline.minhashLshPairs(
+    val (docs, pairs) = operators.NearDup.minhashLshPairs(
       Tables.load(spark, sf, "documents"))
     try {
       val p = pairs.queryExecution.executedPlan.toString
