@@ -55,8 +55,9 @@ object JoinOps {
     * union-window plan, still exactly one shuffle. The window is keyed on
     * the left key columns themselves: right rows carry their key values in
     * those columns, cast to the left key's type, so the output's key
-    * columns keep the window's partitioning and a following `ORDER BY`
-    * on them needs no second exchange (`graft.plans.RangeWindowSort`).
+    * columns keep the window's partitioning: an aggregate on them needs
+    * no second exchange, and a collected `ORDER BY` needs none at all
+    * (`graft.plans.OrderedCollect`).
     * The tiebreak keeps its NATIVE type (any orderable type, e.g. a
     * struct over all right columns for a deterministic total order), not
     * a Long cast.

@@ -3,13 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
-/** The engine's optimizer rules, installed together in one fixed order
-  * (the reference runs its plan optimizations as one ordered pass list,
-  * QueryPlan::optimizeTree). Spark runs `extraOptimizations` as one
-  * fixed-point batch after its own, applying the rules in list order on
-  * every iteration, so when two rules match the same subtree the earlier
-  * one decides. The order:
+/** The engine's optimizer rules and planner strategies, installed
+  * together in one fixed order (the reference runs its plan optimizations
+  * as one ordered pass list, QueryPlan::optimizeTree). Spark runs
+  * `extraOptimizations` as one fixed-point batch after its own, applying
+  * the rules in list order on every iteration, so when two rules match
+  * the same subtree the earlier one decides. The order:
   *  1. [[TrivialCount]]: a bare count/min/max answers from parquet
   *     footers, with no scan at all, before any rule below turns that
   *     Aggregate into a read of something else.
@@ -24,11 +25,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     files the skip indexes admit. It matches Filters, which the two
   *     projection rules only consume from above an Aggregate, so running
   *     it after them changes no plan either of them can take.
-  *  5. [[RangeWindowSort]]: moves an exchange above whatever scan the
-  *     rules before it chose; it changes no scan, so it goes last.
   * The three layout rules return at once while their registries are
   * empty, so a session without projections or skip indexes pays nothing
-  * for them. */
+  * for them. The one strategy, [[OrderedCollect]], runs before Spark's
+  * own and plans only the root ORDER BY it matches. */
 object Rules {
 
   /** The rules for `spark`, in the order they run. */
@@ -36,15 +36,21 @@ object Rules {
     TrivialCount.CountRule(spark),
     AggProjections.RewriteRule(spark),
     NormalProjections.RewriteRule(spark),
-    SkipIndexPruning.PruneRule(spark),
-    RangeWindowSort.SortRule)
+    SkipIndexPruning.PruneRule(spark))
 
-  /** Appends the rules to the session's optimizer unless it already has
-    * them (a rule equals its own kind for the same session). */
+  /** The planner strategies, in the order they are tried. */
+  val strategies: Seq[SparkStrategy] = Seq(OrderedCollect)
+
+  /** Appends the rules to the session's optimizer and the strategies to
+    * its planner unless it already has them (a rule equals its own kind
+    * for the same session). */
   def install(spark: SparkSession): Unit = synchronized {
     val rules = of(spark)
     val current = spark.experimental.extraOptimizations
     if (!current.exists(rules.contains))
       spark.experimental.extraOptimizations = current ++ rules
+    val planned = spark.experimental.extraStrategies
+    if (!planned.exists(strategies.contains))
+      spark.experimental.extraStrategies = planned ++ strategies
   }
 }

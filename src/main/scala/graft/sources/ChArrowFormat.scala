@@ -49,13 +49,6 @@ object ChArrowFormat {
   private def toArrowSchema(schema: StructType): ArrowSchema =
     new ArrowSchema(schema.fields.map(arrowField).toSeq.asJava)
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def partPath(dir: String, idx: Int): Path =
     new Path(dir, f"part-$idx%05d.arrows")
 
@@ -104,11 +97,10 @@ object ChArrowFormat {
     }
 
   /** Write `df` as a directory of ArrowStream part files. */
-  def writeArrowStream(df: DataFrame, path: String): Unit = {
+  def writeArrowStream(df: DataFrame, path: String): Long = {
     val schema = df.schema
     toArrowSchema(schema) // validate up front on the driver
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val alloc = new RootAllocator()
       val root = VectorSchemaRoot.create(toArrowSchema(schema), alloc)
       val fs = new Path(path).getFileSystem(new Configuration())
@@ -139,9 +131,7 @@ object ChArrowFormat {
       } finally {
         writer.close(); root.close(); alloc.close(); out.close()
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Read an ArrowStream directory; one task per part, schema verified

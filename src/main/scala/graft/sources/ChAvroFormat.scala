@@ -79,24 +79,16 @@ object ChAvroFormat {
     case (_, other) => other
   }
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def listParts(dir: String): Seq[String] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(new Configuration())
     fs.globStatus(new Path(p, "part-*.avro")).map(_.getPath.toString).toSeq.sorted
   }
 
-  def writeAvro(df: DataFrame, path: String): Unit = {
+  def writeAvro(df: DataFrame, path: String): Long = {
     val schema = df.schema
     val avroJson = avroSchema(schema, "row").toString // serializable carrier
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val aSchema = new AvroSchema.Parser().parse(avroJson)
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = fs.create(new Path(path, f"part-$idx%05d.avro"), true)
@@ -113,9 +105,7 @@ object ChAvroFormat {
           writer.append(rec)
         }
       } finally writer.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readAvro(spark: SparkSession, path: String, schema: StructType): DataFrame = {

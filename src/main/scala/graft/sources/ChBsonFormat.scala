@@ -25,13 +25,6 @@ import org.apache.spark.sql.types._
   */
 object ChBsonFormat {
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def listParts(dir: String): Seq[String] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(new Configuration())
@@ -77,10 +70,9 @@ object ChBsonFormat {
     }
   }
 
-  def writeBsonEachRow(df: DataFrame, path: String): Unit = {
+  def writeBsonEachRow(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = new BufferedOutputStream(
         fs.create(new Path(path, f"part-$idx%05d.bson"), true), 1 << 16)
@@ -96,9 +88,7 @@ object ChBsonFormat {
           out.write(0x00)
         }
       } finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   private def readCString(in: DataInputStream): String = {

@@ -413,24 +413,18 @@ object ChCapnProtoFormat {
   /** Write one framed message per row (FORMAT CapnProto), one part
     * file per partition. */
   def writeCapnProto(df: DataFrame, path: String, schemaText: String,
-      structName: String): Unit = {
+      structName: String): Long = {
     val cs = parseCapnp(schemaText, structName)
     val schema = df.schema
     cs.fields.foreach(f => require(schema.fieldNames.contains(f.name),
       s"capnproto: column '${f.name}' missing from the DataFrame"))
-    val p0 = new Path(path)
-    val fs0 = p0.getFileSystem(new Configuration())
-    if (fs0.exists(p0)) fs0.delete(p0, true)
-    fs0.mkdirs(p0)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = new BufferedOutputStream(
         fs.create(new Path(path, f"part-$idx%05d.capnp"), true), 1 << 16)
       try rows.foreach(row => out.write(encodeRow(row, schema, cs)))
       finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Read a directory of framed messages — one task per part file. */

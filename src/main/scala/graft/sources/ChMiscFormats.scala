@@ -20,13 +20,6 @@ object ChMiscFormats {
 
   // --------------------------------------------------------- fs plumbing
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def partPath(dir: String, idx: Int, ext: String): Path =
     new Path(dir, f"part-$idx%05d.$ext")
 
@@ -78,13 +71,12 @@ object ChMiscFormats {
   /** Write ONE non-nullable column of `df` per the npy v1.0 layout — one
     * .npy part per partition (a sharded numpy dataset, the layout
     * training pipelines actually emit). */
-  def writeNpy(df: DataFrame, path: String): Unit = {
+  def writeNpy(df: DataFrame, path: String): Long = {
     val fields = df.schema.fields
     require(fields.length == 1, s"Npy writes exactly one column, got ${fields.length}")
     val dt = fields(0).dataType
     val descr = npyDescr(dt)
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val buf = rows.toArray
       writePartBytes(path, idx, "npy") { out =>
         out.write(0x93); out.write("NUMPY".getBytes(StandardCharsets.US_ASCII))
@@ -107,9 +99,7 @@ object ChMiscFormats {
           }
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Read a dir of .npy parts into a one-column DataFrame named `column`.
@@ -179,21 +169,18 @@ object ChMiscFormats {
   // empty lines are real rows; only the final delimiter's trailing empty
   // element drops (same contract as the fixed TSV reader).
 
-  def writeLineAsString(df: DataFrame, path: String): Unit = {
+  def writeLineAsString(df: DataFrame, path: String): Long = {
     require(df.schema.fields.length == 1 &&
       df.schema.fields(0).dataType == StringType,
       "LineAsString writes exactly one String column")
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePartBytes(path, idx, "lines") { out =>
         rows.foreach { r =>
           out.write(r.getString(0).getBytes(StandardCharsets.UTF_8))
           out.write('\n')
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readLineAsString(spark: SparkSession, path: String,
@@ -216,24 +203,21 @@ object ChMiscFormats {
   // rendering: one row per part file — write emits one part per input
   // row (a blob store layout), read maps each part to one row.
 
-  def writeRawBlob(df: DataFrame, path: String): Unit = {
+  def writeRawBlob(df: DataFrame, path: String): Long = {
     require(df.schema.fields.length == 1 &&
       df.schema.fields(0).dataType == BinaryType,
       "RawBLOB writes exactly one Binary column")
-    prepareDir(path)
     // one part per ROW (distributed): RawBLOB's contract is stream ==
     // value, so a multi-row dataset shards row-per-file to round-trip —
     // the same object-store layout a blob table has at scale. Part index
     // = partition id × 1e6 + offset keeps names collision-free without
     // any coordination.
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       rows.zipWithIndex.foreach { case (r, j) =>
         writePartBytes(path, idx * 1000000 + j, "blob")(
           _.write(r.getAs[Array[Byte]](0)))
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readRawBlob(spark: SparkSession, path: String,
@@ -448,10 +432,9 @@ object ChMiscFormats {
       s"MsgPack: unsupported type $other")
   }
 
-  def writeMsgPack(df: DataFrame, path: String): Unit = {
+  def writeMsgPack(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePartBytes(path, idx, "msgpack") { out =>
         rows.foreach { r =>
           schema.fields.zipWithIndex.foreach { case (f, i) =>
@@ -460,9 +443,7 @@ object ChMiscFormats {
           }
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Decode one msgpack object (the families the writer and the wider

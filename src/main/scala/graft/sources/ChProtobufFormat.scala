@@ -572,13 +572,6 @@ object ChProtobufFormat {
 
   // ------------------------------------------------------------- framing
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def partPath(dir: String, idx: Int): Path =
     new Path(dir, f"part-$idx%05d.pb")
 
@@ -595,14 +588,13 @@ object ChProtobufFormat {
     * exactly one row, because bare concatenated messages of one type
     * are not splittable. */
   def writeProtobuf(df: DataFrame, path: String, schemaText: String,
-      message: String, single: Boolean = false): Unit = {
+      message: String, single: Boolean = false): Long = {
     val reg = parseRegistry(schemaText)
     val fields = parseProto(schemaText, message)
     val schema = df.schema
     fields.foreach(f => require(schema.fieldNames.contains(f.name),
       s"protobuf: column '${f.name}' missing from the DataFrame"))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = new BufferedOutputStream(
         fs.create(partPath(path, idx), true), 1 << 16)
@@ -618,9 +610,7 @@ object ChProtobufFormat {
           out.write(msg)
         }
       } finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Read a Protobuf directory: one Spark task per part file, each
@@ -668,14 +658,13 @@ object ChProtobufFormat {
     * message — `<varint total><0x0A><varint len><row>…`. One envelope
     * per part file (each part is one stream, like the reference's). */
   def writeProtobufList(df: DataFrame, path: String, schemaText: String,
-      message: String): Unit = {
+      message: String): Long = {
     val reg = parseRegistry(schemaText)
     val fields = parseProto(schemaText, message)
     val schema = df.schema
     fields.foreach(f => require(schema.fieldNames.contains(f.name),
       s"protobuf: column '${f.name}' missing from the DataFrame"))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val body = new java.io.ByteArrayOutputStream()
       rows.foreach { row =>
         val msg = encodeRow(row, schema, fields, reg)
@@ -690,9 +679,7 @@ object ChProtobufFormat {
         writeVarint(out, body.size.toLong)
         body.writeTo(out)
       } finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readProtobufList(spark: SparkSession, path: String,

@@ -412,17 +412,13 @@ object ChSmallFormats {
     * template with the column escaping rules, `rowsBetween` separated,
     * one part file per partition. */
   def writeTemplate(df: DataFrame, path: String, rowFormat: String,
-      rowsBetween: String = "\n"): Unit = {
+      rowsBetween: String = "\n"): Long = {
     val t = parseTemplate(rowFormat)
     val schema = df.schema
     t.cols.flatMap(_._1).foreach(c =>
       require(schema.fieldNames.contains(c),
         s"Template: column '$c' not in the data"))
-    val p0 = new Path(path)
-    val fs0 = p0.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (fs0.exists(p0)) fs0.delete(p0, true)
-    fs0.mkdirs(p0)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val fs = new Path(path).getFileSystem(
         new org.apache.hadoop.conf.Configuration())
       val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
@@ -460,9 +456,7 @@ object ChSmallFormats {
           out.write(t.delims.last)
         }
       } finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   private def unescapeMySql(c: Char): Char = c match {

@@ -41,13 +41,6 @@ object ChTextFormats {
 
   // ------------------------------------------------------------ fs plumbing
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def partPath(dir: String, idx: Int, ext: String): Path =
     new Path(dir, f"part-$idx%05d.$ext")
 
@@ -174,11 +167,10 @@ object ChTextFormats {
   // --------------------------------------------------------------- TSV
 
   def writeTabSeparated(df: DataFrame, path: String,
-                        withNames: Boolean = false, withTypes: Boolean = false): Unit = {
+                        withNames: Boolean = false, withTypes: Boolean = false): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "tsv") { w =>
         if (withNames) w.write(schema.fields.map(f => escapeTsv(f.name)).mkString("", "\t", "\n"))
         if (withTypes) w.write(schema.fields
@@ -195,9 +187,7 @@ object ChTextFormats {
           w.write(line); w.write('\n')
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Split part text into rows, dropping ONLY the trailing empty element
@@ -248,11 +238,10 @@ object ChTextFormats {
     "\"" + s.replace("\"", "\"\"") + "\""
 
   def writeCsv(df: DataFrame, path: String,
-               withNames: Boolean = false, withTypes: Boolean = false): Unit = {
+               withNames: Boolean = false, withTypes: Boolean = false): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "csv") { w =>
         if (withNames) w.write(schema.fields.map(f => csvQuote(f.name)).mkString("", ",", "\n"))
         if (withTypes) w.write(schema.fields
@@ -270,9 +259,7 @@ object ChTextFormats {
           w.write(line); w.write('\n')
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Char-level CSV field scanner — handles quoted fields with doubled
@@ -371,11 +358,10 @@ object ChTextFormats {
     }
 
   def writeJsonCompactEachRow(df: DataFrame, path: String,
-                              withNamesAndTypes: Boolean = false): Unit = {
+                              withNamesAndTypes: Boolean = false): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "jsonl") { w =>
         if (withNamesAndTypes) {
           w.write(schema.fields.map(f => "\"" + jsonEscape(f.name) + "\"")
@@ -389,9 +375,7 @@ object ChTextFormats {
             .mkString("[", ", ", "]\n"))
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   /** Minimal JSON array-of-scalars parser (strings, numbers, null, bools).
@@ -474,12 +458,11 @@ object ChTextFormats {
   /** TSKV (`TSKVRowOutputFormat.cpp`): `key=value<TAB>key=value` lines with
     * TSV escaping on keys and values ('=' additionally escaped in keys),
     * `\N` nulls. Self-describing per row — column order need not match. */
-  def writeTskv(df: DataFrame, path: String): Unit = {
+  def writeTskv(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
     val keys = schema.fields.map(f => escapeTsv(f.name).replace("=", "\\="))
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "tskv") { w =>
         rows.foreach { row =>
           val line = schema.fields.indices.map { i =>
@@ -494,9 +477,7 @@ object ChTextFormats {
           w.write(line); w.write('\n')
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readTskv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
@@ -536,11 +517,10 @@ object ChTextFormats {
     * reference, a delimiter that can appear unescaped inside rendered
     * values is the caller's responsibility. */
   def writeCustomSeparated(df: DataFrame, path: String,
-                           fieldDelim: String, rowDelim: String): Unit = {
+                           fieldDelim: String, rowDelim: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "custom") { w =>
         rows.foreach { row =>
           val line = schema.fields.indices.map { i =>
@@ -553,9 +533,7 @@ object ChTextFormats {
           w.write(line); w.write(rowDelim)
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readCustomSeparated(spark: SparkSession, path: String, schema: StructType,
@@ -621,11 +599,10 @@ object ChTextFormats {
   private def valuesQuote(s: String): String =
     "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-  def writeValues(df: DataFrame, path: String): Unit = {
+  def writeValues(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "values") { w =>
         var first = true
         rows.foreach { row =>
@@ -642,9 +619,7 @@ object ChTextFormats {
         }
         if (!first) w.write("\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readValues(spark: SparkSession, path: String, schema: StructType): DataFrame = {
@@ -714,10 +689,9 @@ object ChTextFormats {
   // per part file (block == part), arrays one per line so the reader can
   // reuse the flat-array scanner. Null cells ride as bare null.
 
-  def writeJsonColumns(df: DataFrame, path: String): Unit = {
+  def writeJsonColumns(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val buf = rows.toArray
       writePart(path, idx, "jsoncolumns") { w =>
         w.write("{\n")
@@ -733,9 +707,7 @@ object ChTextFormats {
         }
         w.write("}\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonColumns(spark: SparkSession, path: String,
@@ -859,10 +831,9 @@ object ChTextFormats {
     out.toMap
   }
 
-  def writeJsonObjectEachRow(df: DataFrame, path: String): Unit = {
+  def writeJsonObjectEachRow(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "jsonobjecteachrow") { w =>
         w.write("{\n")
         var j = 0
@@ -879,9 +850,7 @@ object ChTextFormats {
         if (j > 0) w.write("\n")
         w.write("}\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonObjectEachRow(spark: SparkSession, path: String,
@@ -919,10 +888,9 @@ object ChTextFormats {
   // variant keeps the null marker; a literal backslash-N string is
   // therefore unrepresentable too — same contract).
 
-  def writeTabSeparatedRaw(df: DataFrame, path: String): Unit = {
+  def writeTabSeparatedRaw(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "tsvraw") { w =>
         rows.foreach { row =>
           val line = schema.fields.indices.map { i =>
@@ -937,9 +905,7 @@ object ChTextFormats {
           w.write(line); w.write('\n')
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readTabSeparatedRaw(spark: SparkSession, path: String,
@@ -966,10 +932,9 @@ object ChTextFormats {
   // the target type. The string-everything lane survives schema drift
   // (a reader with wider types still parses) at the cost of bytes.
 
-  def writeJsonStringsEachRow(df: DataFrame, path: String): Unit = {
+  def writeJsonStringsEachRow(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "jsonstrings") { w =>
         rows.foreach { row =>
           w.write(schema.fields.indices.map { i =>
@@ -978,9 +943,7 @@ object ChTextFormats {
           }.mkString("[", ", ", "]\n"))
         }
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonStringsEachRow(spark: SparkSession, path: String,
@@ -1009,11 +972,10 @@ object ChTextFormats {
   // one document per part; readers verify meta against the schema, so a
   // drifted file fails loudly.
 
-  def writeJsonDocument(df: DataFrame, path: String): Unit = {
+  def writeJsonDocument(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "json") { w =>
         w.write("{\n\"meta\":\n[\n")
         w.write(schema.fields.map { f =>
@@ -1031,9 +993,7 @@ object ChTextFormats {
         }
         w.write(s"\n],\n\"rows\": $n\n}\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonDocument(spark: SparkSession, path: String,
@@ -1091,11 +1051,10 @@ object ChTextFormats {
   // (readMetadataAndValidateHeader), so a drifted file fails loudly —
   // mirrored here by the meta == schema require.
 
-  def writeJsonCompactDocument(df: DataFrame, path: String): Unit = {
+  def writeJsonCompactDocument(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       writePart(path, idx, "jsoncompact") { w =>
         w.write("{\n\"meta\":\n[\n")
         w.write(schema.fields.map { f =>
@@ -1112,9 +1071,7 @@ object ChTextFormats {
         }
         w.write(s"\n],\n\"rows\": $n\n}\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonCompactDocument(spark: SparkSession, path: String,
@@ -1167,10 +1124,9 @@ object ChTextFormats {
   // (readColumnStart returns nullopt: no name to bind by). Sharded one
   // block per part file, column arrays one per line.
 
-  def writeJsonCompactColumns(df: DataFrame, path: String): Unit = {
+  def writeJsonCompactColumns(df: DataFrame, path: String): Long = {
     val schema = df.schema
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val buf = rows.toArray
       writePart(path, idx, "jsoncompactcolumns") { w =>
         w.write("[\n")
@@ -1186,9 +1142,7 @@ object ChTextFormats {
         }
         w.write("]\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonCompactColumns(spark: SparkSession, path: String,
@@ -1224,11 +1178,10 @@ object ChTextFormats {
   // object by NAME, and checkChunkEnd skips the statistics tail (rows
   // etc.). Reader validates meta AND the rows count.
 
-  def writeJsonColumnsWithMetadata(df: DataFrame, path: String): Unit = {
+  def writeJsonColumnsWithMetadata(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => ChWireFormats.chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val buf = rows.toArray
       writePart(path, idx, "jsoncolumnsmeta") { w =>
         w.write("{\n\"meta\":\n[\n")
@@ -1248,9 +1201,7 @@ object ChTextFormats {
         }
         w.write(s"},\n\"rows\": ${buf.length}\n}\n")
       }
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   def readJsonColumnsWithMetadata(spark: SparkSession, path: String,

@@ -186,13 +186,6 @@ object ChWireFormats {
 
   // --------------------------------------------------------- fs plumbing
 
-  private def prepareDir(path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true)
-    fs.mkdirs(p)
-  }
-
   private def partPath(dir: String, idx: Int, ext: String): Path =
     new Path(dir, f"part-$idx%05d.$ext")
 
@@ -218,13 +211,12 @@ object ChWireFormats {
     * With `withNamesAndTypes`, each part opens with the names+types header
     * (each part is a self-contained RowBinaryWithNamesAndTypes stream). */
   def writeRowBinary(df: DataFrame, path: String,
-                     withNamesAndTypes: Boolean = false): Unit = {
+                     withNamesAndTypes: Boolean = false): Long = {
     val schema = df.schema
     // Validate the schema up front on the driver — fail before launching tasks.
     schema.fields.foreach(f => chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
     val ext = "rowbinary"
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = new BufferedOutputStream(fs.create(partPath(path, idx, ext), true), 1 << 16)
       try {
@@ -248,9 +240,7 @@ object ChWireFormats {
           }
         }
       } finally out.close()
-      Iterator.empty
-    }.count() // materialize the write
-    ()
+    }
   }
 
   /** Read a RowBinary directory written by [[writeRowBinary]] (or any
@@ -373,11 +363,10 @@ object ChWireFormats {
 
   /** Write `df` as the Native columnar block format — one file per
     * partition, one block per file (the writer's block = the partition). */
-  def writeNative(df: DataFrame, path: String): Unit = {
+  def writeNative(df: DataFrame, path: String): Long = {
     val schema = df.schema
     schema.fields.foreach(f => chTypeName(f.dataType, f.nullable))
-    prepareDir(path)
-    df.rdd.mapPartitionsWithIndex { (idx, rows) =>
+    Parts.write(df, path) { (idx, rows) =>
       val buf = rows.toArray
       val fs = new Path(path).getFileSystem(new Configuration())
       val out = new BufferedOutputStream(fs.create(partPath(path, idx, "native"), true), 1 << 16)
@@ -400,9 +389,7 @@ object ChWireFormats {
           }
         }
       } finally out.close()
-      Iterator.empty
-    }.count()
-    ()
+    }
   }
 
   private def zeroOf(dt: DataType): Any = dt match {

@@ -1951,16 +1951,23 @@ object ClickHouseSql {
     // sqlImpl, not sql: the OUTFILE core is the same user statement,
     // already quota-charged once at the sql() entry
     val df = sqlImpl(spark, h(1))
-    val n = df.count()
-    val w = df.coalesce(1).write.mode("overwrite")
-    fmt.getOrElse("csv") match {
-      case "parquet" => w.parquet(path)
-      case "jsoneachrow" | "json" => w.json(path)
+    // rows_written comes from the write's own pass: an observation on
+    // Spark's writers, the returned count of the graft-native ones
+    def sparkWrite(
+        write: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] => Unit): Long = {
+      import org.apache.spark.sql.functions.{count, lit}
+      val written = org.apache.spark.sql.Observation()
+      write(df.observe(written, count(lit(1)).as("n")).coalesce(1).write.mode("overwrite"))
+      written.get("n").asInstanceOf[Long]
+    }
+    val n = fmt.getOrElse("csv") match {
+      case "parquet" => sparkWrite(_.parquet(path))
+      case "jsoneachrow" | "json" => sparkWrite(_.json(path))
       case "tsv" | "tabseparated" =>
-        w.option("sep", "\t").csv(path)
+        sparkWrite(_.option("sep", "\t").csv(path))
       case "tsvwithnames" | "tabseparatedwithnames" =>
-        w.option("sep", "\t").option("header", "true").csv(path)
-      case "csvwithnames" => w.option("header", "true").csv(path)
+        sparkWrite(_.option("sep", "\t").option("header", "true").csv(path))
+      case "csvwithnames" => sparkWrite(_.option("header", "true").csv(path))
       // round-7 format tail: the graft-native writers ride the same
       // OUTFILE dispatch the reference's output-format registry serves
       case "npy" => graft.sources.ChMiscFormats.writeNpy(df, path)
@@ -1981,7 +1988,8 @@ object ClickHouseSql {
       // writeJsonDocument API / "jsondocument" spelling here
       case "jsondocument" =>
         graft.sources.ChTextFormats.writeJsonDocument(df, path)
-      // render-only formats (round 8): one text file of the rendering
+      // render-only formats (round 8): one text file of the rendering,
+      // which holds at most its first rows; rows_written counts the input
       case kind @ ("vertical" | "markdown" | "xml") =>
         val text = kind match {
           case "vertical" => graft.sources.ChTextFormats.renderVertical(df)
@@ -1991,6 +1999,7 @@ object ClickHouseSql {
         val out = fsOf(spark, path).create(new Path(path), true)
         try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
+        df.count()
       case "rowbinary" => graft.sources.ChWireFormats.writeRowBinary(df, path)
       // Protobuf / ProtobufSingle (round-13 — needs the reference's
       // format_schema setting: SET format_schema = 'file.proto:Msg')
@@ -2014,7 +2023,7 @@ object ClickHouseSql {
         val (schemaText, msg) = formatSchemaOf(spark)
         graft.sources.ChCapnProtoFormat.writeCapnProto(
           df.coalesce(1), path, schemaText, msg)
-      case _ => w.csv(path)
+      case _ => sparkWrite(_.csv(path))
     }
     import spark.implicits._
     Seq(n).toDF("rows_written")

@@ -16,12 +16,18 @@ class JobCountSpec extends SparkFunSuite {
     assert(jobs("q_lazy_topk") <= 2)
   }
 
+  // the window's exchange, then one job that sorts and collects
   test("q_limit_by: no schema-inference job") {
-    assert(jobs("q_limit_by") <= 4)
+    assert(jobs("q_limit_by") <= 2)
   }
 
   test("q_ch_asof_sql: one exchange serves the window and the ORDER BY") {
-    assert(jobs("q_ch_asof_sql") <= 3)
+    assert(jobs("q_ch_asof_sql") <= 2)
+  }
+
+  // a root ORDER BY over a scan: no sample job, no shuffle
+  test("q_ch_multisearch_many: one job sorts and collects") {
+    assert(jobs("q_ch_multisearch_many") <= 1)
   }
 
   // rows_read comes from the insert's own pass, not a second parse
@@ -50,5 +56,25 @@ class JobCountSpec extends SparkFunSuite {
       drop()
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
+  }
+
+  // rows_written comes from the write's own pass, not a count before it:
+  // an observation on Spark's CSV writer, the returned count of the
+  // graft-native ones
+  test("INTO OUTFILE reads its input once: CSV, RowBinary, MsgPack") {
+    Tables.register(spark, sf01)
+    val query = "SELECT event_id FROM events WHERE event_id % 10 = 0"
+    val rows = graft.sql.ClickHouseSql.sql(spark, query).count()
+    assert(rows > 0L)
+    val dir = java.nio.file.Files.createTempDirectory("jc_outfile")
+    try for (fmt <- Seq("CSV", "RowBinary", "MsgPack")) {
+      var written = -1L
+      val n = jobsDuring {
+        written = graft.sql.ClickHouseSql.sql(spark,
+          s"$query INTO OUTFILE '$dir/$fmt' FORMAT $fmt").collect().head.getLong(0)
+      }
+      assert(written == rows, fmt)
+      assert(n <= 1, s"$fmt: $n jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -423,13 +423,18 @@ class PlanAuditSpec extends SparkFunSuite {
       s"expected one hash exchange on user_id: $p")
   }
 
-  test("ordered dialect ASOF (q_ch_asof_sql): one range exchange on the " +
-      "key serves the window and the ORDER BY") {
-    val p = planOf("q_ch_asof_sql")
+  test("ordered dialect ASOF (q_ch_asof_sql): the window's exchange only") {
+    val plan = SparkEntry.queries("q_ch_asof_sql")(spark, sf).queryExecution.executedPlan
+    val p = plan.toString
+    val root = plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    assert(root.isInstanceOf[graft.plans.OrderedCollectExec], s"expected a root OrderedCollect: $p")
     val exchanges = p.linesIterator.filter(_.contains("Exchange ")).toSeq
-    assert(exchanges.size == 1 && exchanges.head.contains("rangepartitioning(user_id"),
-      s"expected one range exchange on user_id: $p")
-    assert(!p.contains("hashpartitioning"), s"no hash exchange expected: $p")
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(user_id"),
+      s"expected one hash exchange on user_id: $p")
+    assert(!p.contains("rangepartitioning"), s"no range exchange expected: $p")
   }
 
   test("delta DV read: one file scan, broadcast partition join only, " +

@@ -4,8 +4,9 @@ import graft.plans.Rules
 import graft.sql.ClickHouseSql
 import org.apache.spark.sql.SparkSession
 
-/** The engine's optimizer rules are one list in one order, installed by
-  * one call, whichever statement a session runs first. */
+/** The engine's optimizer rules and planner strategies are one list each,
+  * in one order, installed by one call, whichever statement a session runs
+  * first. */
 class RulesSpec extends SparkFunSuite {
 
   private def dropTable(t: String): Unit = {
@@ -35,7 +36,9 @@ class RulesSpec extends SparkFunSuite {
       Tables.register(s, sf)
       assert(s.experimental.extraOptimizations == Rules.of(s), what)
       assert(Rules.of(s).map(_.getClass.getSimpleName) == Seq("CountRule",
-        "RewriteRule", "RewriteRule", "PruneRule", "SortRule$"), what)
+        "RewriteRule", "RewriteRule", "PruneRule"), what)
+      assert(s.experimental.extraStrategies == Rules.strategies, what)
+      assert(Rules.strategies.map(_.getClass.getSimpleName) == Seq("OrderedCollect$"), what)
     } finally {
       ClickHouseSql.sql(spark, s"ALTER TABLE $t DROP PROJECTION rules_p")
       ClickHouseSql.sql(spark, s"ALTER TABLE $t DROP INDEX rules_ix")
@@ -43,14 +46,15 @@ class RulesSpec extends SparkFunSuite {
     }
   }
 
-  test("source guard: only Rules assigns extraOptimizations") {
-    val assign = """extraOptimizations\s*=[^=]""".r
-    val offenders = SourceGuard.lines("src/main/scala")
-      .filter { case (f, _, line) =>
-        f.getName != "Rules.scala" && assign.findFirstIn(line).isDefined
-      }
-    assert(offenders.isEmpty,
-      "extraOptimizations assigned outside Rules:\n" +
-        offenders.map(SourceGuard.show).mkString("\n"))
-  }
+  for (slot <- Seq("extraOptimizations", "extraStrategies"))
+    test(s"source guard: only Rules assigns $slot") {
+      val assign = (slot + """\s*=[^=]""").r
+      val offenders = SourceGuard.lines("src/main/scala")
+        .filter { case (f, _, line) =>
+          f.getName != "Rules.scala" && assign.findFirstIn(line).isDefined
+        }
+      assert(offenders.isEmpty,
+        s"$slot assigned outside Rules:\n" +
+          offenders.map(SourceGuard.show).mkString("\n"))
+    }
 }
