@@ -303,11 +303,12 @@ object DialectQueries extends QueryPack {
       SELECT CAST(n_nationkey AS BIGINT) AS k, n_name FROM nation
       WHERE n_regionkey = 2 AND n_nationkey >= 5 ORDER BY k""")),
 
-    // FINAL on a registered Replacing table.
+    // FINAL on a corpus view declared ReplacingMergeTree(ver) ORDER BY key.
     Q("q_ch_final", (s, dir) => {
       Tables.register(s, dir)
-      ClickHouseSql.registerReplacingTable("orders",
-        keys = Seq("o_custkey"), version = Seq("o_orderdate", "o_orderkey"))
+      graft.sql.TableLedger.declare("orders", graft.sql.TableLedger.TableRecord(
+        engine = "ReplacingMergeTree", engineArgs = Seq("o_orderdate", "o_orderkey"),
+        orderBy = Some("o_custkey")))
       ClickHouseSql.sql(s, """
         SELECT o_custkey, o_orderkey, o_orderdate
         FROM orders FINAL

@@ -359,7 +359,7 @@ object SystemTables {
     * projection registered through ALTER TABLE ADD PROJECTION. */
   def projections(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    graft.sql.ClickHouseSql.listProjections.toDF("table", "name", "type")
+    graft.sql.TableLedger.listProjections.toDF("table", "name", "type")
   }
 
   /** system.errors (StorageSystemErrors.cpp): per-error-name count and
@@ -496,7 +496,7 @@ object SystemTables {
     * the DROP → UNDROP holding area, with their `_dropped` data path. */
   def droppedTables(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    graft.sql.ClickHouseSql.listDroppedTables
+    graft.sql.TableLedger.listDroppedTables
       .toDF("table", "metadata_dropped_path", "is_managed")
   }
 
@@ -578,7 +578,7 @@ object SystemTables {
     * with its table, type, and backing data path. */
   def dataSkippingIndices(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    graft.sql.ClickHouseSql.listSkipIndexes
+    graft.sql.TableLedger.listSkipIndexes(spark)
       .toDF("table", "name", "type", "data_path")
   }
 

@@ -14,15 +14,6 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   */
 object ClickHouseSql {
 
-  /** FINAL-able table registry: table → (keys, version columns), the
-    * metadata a ReplacingMergeTree DDL would carry (ORDER BY = keys,
-    * `ver` parameter = version). */
-  private val replacingTables =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[String], Seq[String])]
-
-  def registerReplacingTable(name: String, keys: Seq[String], version: Seq[String]): Unit =
-    replacingTables.put(name.toLowerCase, (keys, version))
-
   /** Apply all textual rewrites. */
   def rewrite(sql: String): String = {
     // every rewrite below matches outside literals and comments only
@@ -599,18 +590,18 @@ object ClickHouseSql {
     }
   }
 
-  /** `FROM t FINAL` → latest-version-per-key subselect for tables
-    * registered as Replacing (reference: FINAL read mode of
-    * ReadFromMergeTree). */
+  /** `FROM t FINAL` → latest-version-per-key subselect for a table whose
+    * recorded engine is ReplacingMergeTree(ver) (reference: FINAL read
+    * mode of ReadFromMergeTree); other engines read every row. */
   private def rewriteFinal(s: String): String = {
     val fin = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+FINAL\\b".r
     SqlLex.replaceAll(s, fin)(m => {
       val t = m.group(1)
-      replacingTables.get(t.toLowerCase) match {
+      TableLedger.finalKeys(t) match {
         case Some((keys, ver)) =>
-          val part = keys.mkString(", ")
+          val part = if (keys.isEmpty) "" else keys.mkString("PARTITION BY ", ", ", " ")
           val ord = ver.map(v => s"$v DESC").mkString(", ")
-          s"FROM (SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY $part ORDER BY $ord) AS __ver_rn FROM $t) WHERE __ver_rn = 1) $t"
+          s"FROM (SELECT * EXCEPT (__ver_rn) FROM (SELECT *, row_number() OVER (${part}ORDER BY $ord) AS __ver_rn FROM $t) WHERE __ver_rn = 1) $t"
         case None => s"FROM $t"
       }
     })
@@ -1192,12 +1183,13 @@ object ClickHouseSql {
   private val numbersLimit = "(?is)\\bLIMIT\\s+(\\d+)".r
   private val numbersWhere = "(?is)\\bnumber\\s*(<=|<|=)\\s*(\\d+)".r
 
-  /** What follows a write into `t`: its skip indexes and projections
-    * rebuild over the new files, cached SELECT results drop, and a
-    * mutation enters system.mutations with its command text. */
+  /** What follows a write into `t`, or a verb that moved it: its skip
+    * indexes and projections rebuild over the current files, cached
+    * SELECT results drop, and a mutation enters system.mutations with its
+    * command text. */
   private def afterWrite(spark: SparkSession, t: String,
       mutation: Option[String] = None): Unit = {
-    refreshSkipIndexes(spark, t)
+    TableLedger.build(spark, t)
     queryCache.clear()
     mutation.foreach(logMutation(t, _))
   }
@@ -1215,13 +1207,7 @@ object ClickHouseSql {
     pcols.head
   }
 
-  /** Empties the warehouse dir a managed CREATE of `name` will claim. */
-  private def clearWarehouseDir(spark: SparkSession, name: String): Unit = {
-    val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
-    wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
-  }
-
-  private def fsOf(spark: SparkSession, path: String) =
+  private[sql] def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val assignment = "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s*=\\s*(.*)$".r
@@ -1416,16 +1402,9 @@ object ClickHouseSql {
     // CREATE TABLE a AS b (schema clone, no data — ParserCreateQuery's
     // as_table form; never CTAS, whose AS is followed by SELECT) →
     // Spark's CREATE TABLE ... LIKE
-    lane("""^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s+AS\s+(<t>)\s*(?:ENGINE\s*=[^()]*)?;?\s*$""") { h =>
-      clearWarehouseDir(h.spark, h(2))
-      h.spark.sql(s"CREATE TABLE ${h.opt(1).fold("")(_ => "IF NOT EXISTS ")}" +
-        s"${h(2)} LIKE ${h(3)} USING parquet")
-    },
-    lane("""^CREATE\s+TABLE\b.*""") { h =>
-      val out = h.spark.sql(rewriteCreateTable(h.text))
-      recordEngineMeta(h.text) // ORDER BY / SAMPLE BY / COMMENT / defaults
-      out
-    },
+    lane("""^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s+AS\s+(<t>)\s*(?:ENGINE\s*=[^()]*)?;?\s*$""")(
+      h => TableLedger.createLike(h.spark, h(2), h(3), h(1) != null)),
+    lane("""^CREATE\s+TABLE\b.*""")(h => TableLedger.create(h.spark, h.text)),
     // CREATE LIVE VIEW (StorageLiveView.h): version-counted view; the
     // push channel is served pull-side by WATCH (graft.sql.LiveViews)
     lane("""^CREATE\s+LIVE\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?(<t>)\s+AS\s+(.*)$""") { h =>
@@ -1475,35 +1454,22 @@ object ClickHouseSql {
       afterWrite(h.spark, rv.table)
       h.ok
     },
-    lane("""^DETACH\s+TABLE\b\s*(.*?)<end>""")(detachTable),
-    lane("""^ATTACH\s+TABLE\b\s*(.*?)<end>""") { h =>
-      val t = h(1)
-      val (schemaDdl, loc) = Option(detachedTables.remove(t)).getOrElse(
-        throw new IllegalArgumentException(
-          s"ATTACH TABLE $t: no detached table of that name"))
-      fsOf(h.spark, loc).rename(new Path(loc + "_detached"), new Path(loc))
-      h.spark.sql(s"CREATE TABLE $t ($schemaDdl) USING parquet LOCATION '$loc'")
+    // DETACH / DROP park the table with its record (TableLedger); ATTACH
+    // / UNDROP (InterpreterUndropQuery.cpp) restore the most recent one
+    lane("""^DETACH\s+TABLE\b\s*(.*?)<end>""") { h =>
+      TableLedger.detach(h.spark, h(1))
       h.ok
     },
-    lane("""^(DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(<t>))<end>""")(dropTable),
-    // UNDROP TABLE (InterpreterUndropQuery.cpp): restore the most
-    // recently dropped table of this name from the `_dropped` holding
-    // dir — rename back, re-create the catalog entry over the original
-    // location, partitions recovered
-    lane("""^UNDROP\s+TABLE\b\s*(.*?)<end>""") { h =>
-      val t = h(1)
-      val (schemaDdl, loc, partCols, managed) =
-        Option(droppedTables.remove(t)).getOrElse(
-          throw new IllegalArgumentException(
-            s"UNDROP TABLE $t: no dropped table of that name in the holding area"))
-      recreateCatalogEntry(h.spark, t, schemaDdl, loc, partCols, managed) { dest =>
-        val fs = fsOf(h.spark, loc)
-        val hold = new Path(loc + "_dropped")
-        if (fs.exists(hold) && !fs.rename(hold, new Path(dest)))
-          throw new IllegalStateException(
-            s"UNDROP TABLE $t: rename of $hold to $dest failed")
-      }
-      droppedEngineMeta.remove(t).foreach(engineMeta.put(t, _))
+    lane("""^(DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(<t>))<end>""") { h =>
+      TableLedger.drop(h.spark, h(2), h(1))
+      queryCache.clear()
+      h.ok
+    },
+    lane("""^(ATTACH|UNDROP)\s+TABLE\b\s*(.*?)<end>""") { h =>
+      val attach = h(1).equalsIgnoreCase("ATTACH")
+      TableLedger.restore(h.spark, h(2), if (attach) "detached" else "dropped",
+        h(1).toUpperCase)
+      afterWrite(h.spark, h(2))
       h.ok
     },
     lane("""^(BACKUP|RESTORE)\s+TABLE\s+(<t>)\s+(?:TO|FROM)\s+(File|Disk)\s*\(\s*'([^']+)'(?:\s*,\s*'([^']+)')?\s*\)<end>""")(
@@ -1576,16 +1542,15 @@ object ClickHouseSql {
     // atomic in the reference; here a triple rename through a temp name
     lane("""^EXCHANGE\s+TABLES\s+(<t>)\s+AND\s+(<t>)<end>""") { h =>
       val tmp = s"__graft_xchg_${System.nanoTime()}"
-      Seq((h(1), tmp), (h(2), h(1)), (tmp, h(2))).foreach { case (from, to) =>
-        h.spark.sql(s"ALTER TABLE $from RENAME TO $to")
-        moveEngineMeta(from, to)
-      }
+      Seq((h(1), tmp), (h(2), h(1)), (tmp, h(2)))
+        .foreach { case (from, to) => TableLedger.rename(h.spark, from, to) }
+      Seq(h(1), h(2)).foreach(afterWrite(h.spark, _))
       h.ok
     },
     reject("""^EXCHANGE\s+TABLES\b.*""", "EXCHANGE form"),
     lane("""^RENAME\s+TABLE\s+(<t>)\s+TO\s+(<t>)<end>""") { h =>
-      val df = h.spark.sql(s"ALTER TABLE ${h(1)} RENAME TO ${h(2)}")
-      moveEngineMeta(h(1), h(2))
+      val df = TableLedger.rename(h.spark, h(1), h(2))
+      afterWrite(h.spark, h(2))
       df
     },
     reject("""^RENAME\s+TABLE\b.*""", "RENAME form"),
@@ -1597,60 +1562,33 @@ object ClickHouseSql {
     lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+PROJECTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(<c>)\s*\((.*)\)<end>""")(
       addProjection),
     lane("""^ALTER\s+TABLE\s+(<t>)\s+DROP\s+PROJECTION\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
-      projections.remove((h(1), h(2))).foreach { e =>
-        if (e.isAgg) graft.plans.AggProjections.drop(e.basePath)
-        else graft.plans.NormalProjections.drop(h.spark, e.basePath)
-      }
+      TableLedger.dropProjection(h.spark, h(1), h(2))
       h.ok
     },
     lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+PROJECTION\b.*""") { h =>
-      refreshProjections(h.spark, h(1))
+      TableLedger.build(h.spark, h(1))
       h.ok
     },
     reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MATERIALIZE)\s+PROJECTION\b.*""",
       "projection DDL"),
-    // skip indexes (see SkipIdx)
+    // skip indexes (ParserCreateIndexQuery.h, MergeTreeIndices.h): every
+    // type prunes transparently at file granularity (SkipIndexPruning:
+    // equality via bloom/set, ranges via minmax, LIKE via ngrambf);
+    // GRANULARITY is accepted and ignored
     lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(<c>)\s+(.+?)\s+TYPE\s+([A-Za-z_0-9]+)(?:\s*\(\s*(\d+)[^)]*\))?(?:\s+GRANULARITY\s+\d+)?<end>""") { h =>
-      val (table, name) = (h(1), h(2))
       val kind = h(4).toLowerCase
       if (!Set("bloom_filter", "minmax", "ngrambf_v1", "set").contains(kind))
         throw new IllegalArgumentException(
           s"unsupported skip-index type $kind (bloom_filter|minmax|ngrambf_v1|set)")
-      val idxDir = new Path(h.spark.conf.get("spark.sql.warehouse.dir"),
-        s"graft_skip_indexes/${table}_$name").toString
-      val m = SkipIdx(table, name, tableLocation(h.spark, table), kind, idxDir,
-        h(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-        h.opt(5).map(_.toInt), cleared = false)
-      buildSkipIndex(h.spark, m)
-      skipIndexes.put((table, name), m)
+      TableLedger.addIndex(h.spark, h(1), h(2), TableLedger.SkipIndexDecl(kind,
+        h(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq, h.opt(5).map(_.toInt)))
       h.ok
     },
-    lane("""^ALTER\s+TABLE\s+(<t>)\s+DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
-      Option(skipIndexes.remove((h(1), h(2)))).foreach { m =>
-        graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-        graft.operators.SkipIndex.drop(h.spark, m.idxDir)
-      }
-      h.ok
-    },
-    // CLEAR INDEX: drop the BUILT structure and stop pruning, but keep
-    // the index declared (system.data_skipping_indices still lists it)
-    // so MATERIALIZE INDEX can rebuild it
-    lane("""^ALTER\s+TABLE\s+(<t>)\s+CLEAR\s+INDEX\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
-      skipIndexes.computeIfPresent((h(1), h(2)), (_, m) => {
-        graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-        graft.operators.SkipIndex.drop(h.spark, m.idxDir)
-        m.copy(cleared = true)
-      })
-      h.ok
-    },
-    // MATERIALIZE INDEX: rebuild from the table's current files (and
-    // un-clear a cleared index) — the reference's mutation that
-    // populates the index for existing parts
-    lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+INDEX\s+(<c>)<end>""") { h =>
-      skipIndexes.computeIfPresent((h(1), h(2)), (_, m) => {
-        buildSkipIndex(h.spark, m)
-        m.copy(cleared = false)
-      })
+    // DROP undeclares; CLEAR drops the built structure but keeps the
+    // declaration so MATERIALIZE (the reference's mutation that
+    // populates the index for existing parts) can rebuild it
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+(DROP|CLEAR|MATERIALIZE)\s+INDEX\s+(?:IF\s+EXISTS\s+)?(<c>)<end>""") { h =>
+      TableLedger.alterIndex(h.spark, h(1), h(3), h(2).toUpperCase)
       h.ok
     },
     reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MATERIALIZE|CLEAR)\s+INDEX\b.*""",
@@ -1672,9 +1610,9 @@ object ClickHouseSql {
     // instant is still in the future
     lane("""^ALTER\s+TABLE\s+(<t>)\s+MATERIALIZE\s+TTL<end>""") { h =>
       val t = h(1)
-      val ttl = ttlSpecs.getOrElse(t, throw new IllegalArgumentException(
+      val ttl = TableLedger.record(t).ttl.getOrElse(throw new IllegalArgumentException(
         s"MATERIALIZE TTL: no TTL stored for $t (run MODIFY TTL first)"))
-      val keep = org.apache.spark.sql.functions.expr(s"($ttl) >= current_timestamp()")
+      val keep = org.apache.spark.sql.functions.expr(s"(${rewrite(ttl)}) >= current_timestamp()")
       // affected = rows that EXPIRE (keep false or null); partitions with
       // nothing expired keep their files untouched
       graft.operators.DurableRewrite.rewrite(h.spark, t,
@@ -1683,16 +1621,13 @@ object ClickHouseSql {
       afterWrite(h.spark, t, Some(h.text))
       h.ok
     },
-    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+TTL\s+(.+?)(?:\s+DELETE)?<end>""") { h =>
-      require(h.spark.catalog.tableExists(h(1)), s"no such table ${h(1)}")
-      ttlSpecs.put(h(1), rewrite(h(2).trim))
-      h.ok
-    },
+    lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+TTL\s+(.+?)(?:\s+DELETE)?<end>""")(h =>
+      updateRecord(h)(_.copy(ttl = Some(h(2).trim)))),
     reject("""^ALTER\s+TABLE\s+\S+\s+(?:MODIFY|MATERIALIZE)\s+TTL\b.*""",
       "TTL form"),
     // engine metadata (AlterCommands.h MODIFY_ORDER_BY, MODIFY_SAMPLE_BY,
     // COMMENT_COLUMN, COMMENT_TABLE, MATERIALIZE_COLUMN): property
-    // updates on the engine metadata ledger — SHOW CREATE reflects them
+    // updates on the table's record — SHOW CREATE reflects them
     lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+ORDER\s+BY\s+(.+?);?\s*$""") { h =>
       // reference contract: the sorting key may only reference existing
       // columns (AlterCommands::apply validates the expression)
@@ -1701,17 +1636,17 @@ object ClickHouseSql {
         .filterNot(_.equalsIgnoreCase("tuple"))
         .foreach(w => require(cols.contains(w.toLowerCase),
           s"MODIFY ORDER BY references unknown column `$w`"))
-      updateEngineMeta(h)(_.copy(orderBy = Some(rewrite(h(2).trim))))
+      updateRecord(h)(_.copy(orderBy = Some(rewrite(h(2).trim))))
     },
     lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+SAMPLE\s+BY\s+(.+?);?\s*$""")(h =>
-      updateEngineMeta(h)(_.copy(sampleBy = Some(rewrite(h(2).trim))))),
+      updateRecord(h)(_.copy(sampleBy = Some(rewrite(h(2).trim))))),
     lane("""^ALTER\s+TABLE\s+(<t>)\s+REMOVE\s+SAMPLE\s+BY<end>""")(h =>
-      updateEngineMeta(h)(_.copy(sampleBy = None))),
+      updateRecord(h)(_.copy(sampleBy = None))),
     lane("""^ALTER\s+TABLE\s+(<t>)\s+MODIFY\s+COMMENT\s+'([^']*)'<end>""")(h =>
-      updateEngineMeta(h)(_.copy(comment = Some(h(2))))),
+      updateRecord(h)(_.copy(comment = Some(h(2))))),
     lane("""^ALTER\s+TABLE\s+(<t>)\s+COMMENT\s+COLUMN\s+(IF\s+EXISTS\s+)?`?(<c>)`?\s+'([^']*)'<end>""") { h =>
       if (h.spark.table(h(1)).columns.contains(h(3)))
-        updateEngineMeta(h)(em => em.copy(colComments = em.colComments + (h(3) -> h(4))))
+        updateRecord(h)(em => em.copy(colComments = em.colComments + (h(3) -> h(4))))
       else if (h(2) == null) throw new IllegalArgumentException(
         s"column ${h(3)} does not exist in ${h(1)}")
       else h.ok
@@ -1895,7 +1830,7 @@ object ClickHouseSql {
     // engine-metadata ledger
     lane("""^SHOW\s+(?:FULL\s+)?COLUMNS\s+(?:FROM|IN)\s+(<t>)<end>""") { h =>
       import h.spark.implicits._
-      val em = engineMetaOf(h(1))
+      val em = TableLedger.record(h(1))
       h.spark.table(h(1)).schema.fields.toSeq.map(f =>
         (f.name, chTypeOrSpark(f), if (f.nullable) "YES" else "NO", "",
           em.colDefaults.getOrElse(f.name, ""), ""))
@@ -1905,15 +1840,12 @@ object ClickHouseSql {
     // row from the engine metadata plus every live skip index
     lane("""^SHOW\s+(?:INDEX|INDEXES|KEYS)\s+(?:FROM|IN)\s+(<t>)<end>""") { h =>
       import h.spark.implicits._
-      import scala.jdk.CollectionConverters._
       val t = h(1)
       require(h.spark.catalog.tableExists(t), s"no such table $t")
-      val primary = engineMetaOf(t).orderBy.toSeq
-        .map(ob => (t, "PRIMARY", ob, "primary"))
-      val skips = skipIndexes.asScala.values.toSeq
-        .filter(m => m.table == t && !m.cleared)
-        .map(m => (t, m.name, m.columns.mkString(","), m.kind))
-        .sortBy(_._2)
+      val r = TableLedger.record(t)
+      val primary = r.orderBy.toSeq.map(ob => (t, "PRIMARY", ob, "primary"))
+      val skips = r.indexes.toSeq.collect { case (n, d) if !d.cleared =>
+        (t, n, d.columns.mkString(","), d.kind) }.sortBy(_._2)
       (primary ++ skips).toDF("table", "key_name", "column_name", "type")
     },
     // SHOW FUNCTIONS [LIKE 'pat'] (ParserShowFunctionsQuery) →
@@ -2169,9 +2101,9 @@ object ClickHouseSql {
           s"CREATE MATERIALIZED VIEW ${rv.name} REFRESH ${rv.schedule} " +
             s"AS ${rv.select.trim}"
         case None =>
-          // recorded engine metadata renders back (ORDER BY / SAMPLE BY
-          // / COMMENT / column DEFAULT+COMMENT survive MODIFY verbs)
-          val em = engineMetaOf(t)
+          // the table's record renders back (engine, ORDER BY / SAMPLE
+          // BY / COMMENT / column DEFAULT+COMMENT survive MODIFY verbs)
+          val em = TableLedger.record(t)
           val cols = spark.table(t).schema.fields
             .map { f =>
               val dflt = em.colDefaults.get(f.name)
@@ -2183,7 +2115,9 @@ object ClickHouseSql {
             .mkString(", ")
           val sample = em.sampleBy.map(sb => s" SAMPLE BY $sb").getOrElse("")
           val cmt = em.comment.map(c => s" COMMENT '$c'").getOrElse("")
-          s"CREATE TABLE $t ($cols) ENGINE = MergeTree ORDER BY " +
+          val args = if (em.engineArgs.isEmpty) ""
+            else em.engineArgs.mkString("(", ", ", ")")
+          s"CREATE TABLE $t ($cols) ENGINE = ${em.engine}$args ORDER BY " +
             s"${em.orderBy.getOrElse("tuple()")}$sample$cmt"
       }
     }
@@ -2202,74 +2136,13 @@ object ClickHouseSql {
   private def createMaterializedView(h: Hit): DataFrame = {
     val (spark, name, select) = (h.spark, h(2), h(6))
     val tbl = h.opt(5).getOrElse(name)
-    clearWarehouseDir(spark, tbl)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"CREATE TABLE ${h.opt(1).fold("")(_ => "IF NOT EXISTS ")}$tbl " +
-      "USING parquet AS " + rewrite(expandSchemaTransformers(spark, select)))
+    TableLedger.replaceWithSelect(spark, tbl, h(1) != null,
+      rewrite(expandSchemaTransformers(spark, select)))
     h.opt(3) match {
       case Some(every) =>
         refreshableViews.put(name.toLowerCase, RefreshableView(name, tbl,
           select, s"EVERY $every ${h(4).toUpperCase}", refreshes = 0L))
       case None => refreshableViews.remove(name.toLowerCase)
-    }
-    h.ok
-  }
-
-  /** DETACH TABLE (InterpreterDropQuery detach branch): the table leaves
-    * the catalog but its DATA survives — the files move O(1) to a
-    * `_detached` sibling (the same rename the partition lifecycle uses)
-    * so the managed DROP has nothing to purge; ATTACH TABLE reverses both
-    * steps. */
-  private def detachTable(h: Hit): DataFrame = {
-    val (spark, t) = (h.spark, h(1))
-    val loc = tableLocation(spark, t)
-    val schemaDdl = spark.table(t).schema.toDDL
-    val fs = fsOf(spark, loc)
-    val det = new Path(loc + "_detached")
-    fs.delete(det, true)
-    // rename is the data-preservation step: if it fails the DROP below
-    // would purge a managed table's live files — abort instead
-    if (!fs.rename(new Path(loc), det))
-      throw new IllegalStateException(
-        s"DETACH TABLE $t: rename of $loc to $det failed; table left attached")
-    spark.sql(s"DROP TABLE $t")
-    detachedTables.put(t, (schemaDdl, loc))
-    h.ok
-  }
-
-  /** DROP TABLE with an UNDROP window (InterpreterDropQuery +
-    * InterpreterUndropQuery: Atomic databases keep a dropped table's data
-    * for database_atomic_delay_before_drop_table_sec before the real
-    * delete): the data dir moves O(1) to a `_dropped` sibling — the same
-    * rename DETACH uses, with the same rename-failure abort — so the
-    * catalog DROP has nothing to purge. The holding copy lives until the
-    * next DROP of the same name re-uses the slot. Temp views, catalog
-    * views and missing tables take Spark's own DROP. */
-  private def dropTable(h: Hit): DataFrame = {
-    val (spark, t) = (h.spark, h(2))
-    val isCatalogTable = spark.catalog.tableExists(t) &&
-      spark.sessionState.catalog
-        .getTempView(t.toLowerCase(java.util.Locale.ROOT)).isEmpty &&
-      scala.util.Try(tableLocation(spark, t)).isSuccess
-    if (!isCatalogTable) spark.sql(h(1))
-    else {
-      val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
-      val loc = tableLocation(spark, t)
-      val schemaDdl = spark.table(t).schema.toDDL
-      val fs = fsOf(spark, loc)
-      val hold = new Path(loc + "_dropped")
-      fs.delete(hold, true)
-      if (fs.exists(new Path(loc)) && !fs.rename(new Path(loc), hold))
-        throw new IllegalStateException(
-          s"DROP TABLE $t: rename of $loc to $hold failed; table left in place")
-      spark.sql(s"DROP TABLE $t")
-      droppedTables.put(t, (schemaDdl, loc, meta.partitionColumnNames,
-        meta.tableType ==
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED))
-      // engine metadata follows the table into the holding area: a fresh
-      // CREATE of the name starts clean, UNDROP restores it
-      engineMeta.remove(t).foreach(droppedEngineMeta.put(t, _))
-      queryCache.clear()
     }
     h.ok
   }
@@ -2329,12 +2202,12 @@ object ClickHouseSql {
       val loc = lines.lift(2).filter(_.nonEmpty).getOrElse(
         new Path(spark.conf.get("spark.sql.warehouse.dir"), t.toLowerCase).toString)
       val managed = lines.lift(3).forall(_.trim != "false")
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      recreateCatalogEntry(spark, t, lines(0), loc, partCols, managed) { actualLoc =>
+      TableLedger.restoreBackup(spark, t, lines(0), partCols, loc, managed) { actualLoc =>
         org.apache.hadoop.fs.FileUtil.copy(fs, new Path(destPath, "data"),
           fs, new Path(actualLoc), false, true, conf)
         ()
       }
+      afterWrite(spark, t)
       backupLog.addLast(BackupEntry(dest, t, "RESTORED", -1L, -1L))
       Seq((dest, "RESTORED")).toDF("id", "status")
     }
@@ -2357,30 +2230,19 @@ object ClickHouseSql {
     *  - `ADD PROJECTION p (SELECT * ORDER BY keys)` →
     *    NormalProjections.create (alternate physical order). */
   private def addProjection(h: Hit): DataFrame = {
-    val (spark, table, proj, body) = (h.spark, h(1), h(2), h(3))
-    val basePath = tableLocation(spark, table)
-    val groupBy = "(?is)\\bGROUP\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
-    val orderBy = "(?is)\\bORDER\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
-    if (groupBy.isDefined) {
-      val dims = groupBy.get.group(1).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-      val measures = "(?i)(?:sum|min|max|avg)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r
-        .findAllMatchIn(body).map(_.group(1)).toSeq.distinct
-      val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"),
-        s"graft_projections/${table}_$proj").toString
-      val build = () => graft.plans.AggProjections.create(
-        spark, basePath, wh, dims, measures)
-      build()
-      projections.put((table, proj), ProjEntry(basePath, isAgg = true, build))
-    } else if (orderBy.isDefined) {
-      val keys = orderBy.get.group(1).split(",").map(_.trim)
-        .filter(_.nonEmpty).toSeq
-      val build = () => graft.plans.NormalProjections.create(
-        spark, basePath, s"${table}__proj_$proj", 8, keys)
-      build()
-      projections.put((table, proj), ProjEntry(basePath, isAgg = false, build))
-    } else throw new IllegalArgumentException(
-      "ADD PROJECTION needs a GROUP BY (aggregate) or ORDER BY (normal) body")
+    val body = h(3)
+    def keys(m: scala.util.matching.Regex.Match) =
+      m.group(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val decl = "(?is)\\bGROUP\\s+BY\\s+(.*)$".r.findFirstMatchIn(body) match {
+      case Some(g) => TableLedger.ProjectionDecl(aggregate = true, keys(g),
+        "(?i)(?:sum|min|max|avg)\\s*\\(\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\)".r
+          .findAllMatchIn(body).map(_.group(1)).toSeq.distinct)
+      case None => "(?is)\\bORDER\\s+BY\\s+(.*)$".r.findFirstMatchIn(body)
+        .map(o => TableLedger.ProjectionDecl(aggregate = false, keys(o), Nil))
+        .getOrElse(throw new IllegalArgumentException(
+          "ADD PROJECTION needs a GROUP BY (aggregate) or ORDER BY (normal) body"))
+    }
+    TableLedger.addProjection(h.spark, h(1), h(2), decl)
     h.ok
   }
 
@@ -2537,7 +2399,7 @@ object ClickHouseSql {
     import org.apache.spark.sql.functions.{col, expr, when}
     val (spark, t, c) = (h.spark, h(1), h(2))
     require(spark.table(t).columns.contains(c), s"column $c does not exist in $t")
-    engineMetaOf(t).colDefaults.get(c).foreach { dflt =>
+    TableLedger.record(t).colDefaults.get(c).foreach { dflt =>
       val dt = spark.table(t).schema(c).dataType
       val partCond = h.opt(3).map(v =>
         col(onePartCol(spark, t, "MATERIALIZE COLUMN IN PARTITION")) === v)
@@ -2551,10 +2413,11 @@ object ClickHouseSql {
     h.ok
   }
 
-  /** A property update on `h(1)`'s engine metadata. */
-  private def updateEngineMeta(h: Hit)(f: EngineMeta => EngineMeta): DataFrame = {
+  /** A property update on `h(1)`'s record. */
+  private def updateRecord(h: Hit)(
+      f: TableLedger.TableRecord => TableLedger.TableRecord): DataFrame = {
     require(h.spark.catalog.tableExists(h(1)), s"no such table ${h(1)}")
-    engineMeta.put(h(1), f(engineMetaOf(h(1))))
+    TableLedger.update(h(1))(f)
     h.ok
   }
 
@@ -2745,33 +2608,13 @@ object ClickHouseSql {
       scope.spark.sql(rewrite(expandSchemaTransformers(scope.spark, s1)))
     }
 
-  // ---- projection DDL (ParserProjection → plans/*Projections) ---------
-
-  // (table, projection) → registered base path + kind, for DROP
-  /** One registered projection: base path, agg/normal kind, and the
-    * REBUILD thunk mutations re-run (round 8 — the same staleness class
-    * the round-7 ADVICE flagged for skip indexes: a mutated base table
-    * must not keep serving a stale rollup). */
-  private final case class ProjEntry(basePath: String, isAgg: Boolean,
-      rebuild: () => Unit)
-
-  private val projections =
-    scala.collection.concurrent.TrieMap.empty[(String, String), ProjEntry]
-
-  /** (table, projection name, kind) — feeds system.projections
-    * (StorageSystemProjections analog). */
-  def listProjections: Seq[(String, String, String)] =
-    projections.snapshot().toSeq.map { case ((t, p), e) =>
-      (t, p, if (e.isAgg) "aggregate" else "normal")
-    }.sortBy(x => (x._1, x._2))
-
   /** error name → (count, last message) — feeds system.errors
     * (StorageSystemErrors.cpp). */
   val errorLedger =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
 
   /** Catalog table → its parquet location path. */
-  private def tableLocation(spark: SparkSession, table: String): String =
+  private[sql] def tableLocation(spark: SparkSession, table: String): String =
     spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .location.getPath
@@ -2781,75 +2624,6 @@ object ClickHouseSql {
   private def chTypeOrSpark(f: org.apache.spark.sql.types.StructField): String =
     try graft.sources.ChWireFormats.chTypeName(f.dataType, f.nullable)
     catch { case _: IllegalArgumentException => f.dataType.sql }
-
-  /** Skip-index DDL (src/Parsers/ParserCreateIndexQuery.h, index types in
-    * src/Storages/MergeTree/MergeTreeIndices.h):
-    *   ALTER TABLE t ADD INDEX [IF NOT EXISTS] name col[, col…]
-    *     TYPE bloom_filter | minmax | ngrambf_v1(n[, …]) [GRANULARITY g]
-    *   ALTER TABLE t DROP INDEX [IF EXISTS] name
-    *   ALTER TABLE t MATERIALIZE/CLEAR INDEX name
-    * bloom_filter additionally registers for TRANSPARENT pruning
-    * (SkipIndexPruning); GRANULARITY is accepted and ignored — pruning is
-    * file-granular here (the analog of the reference's granule). ADD
-    * builds eagerly; MATERIALIZE rebuilds from the table's CURRENT data;
-    * CLEAR deletes the built structure and disables pruning while keeping
-    * the metadata entry visible (reference semantics: CLEAR drops built
-    * files, keeps the index declared; MATERIALIZE re-builds it). Every
-    * kind registers for TRANSPARENT pruning (SkipIndexPruning serves
-    * equality via bloom/set, ranges via minmax, LIKE/contains via
-    * ngrambf). Mutations that rewrite the table's files (DELETE,
-    * TRUNCATE, OPTIMIZE ... DEDUPLICATE) call [[refreshSkipIndexes]] so a
-    * registered index never prunes against stale file names. */
-  private final case class SkipIdx(table: String, name: String,
-      basePath: String, kind: String, idxDir: String, columns: Seq[String],
-      param: Option[Int], cleared: Boolean)
-
-  /** name → (schema DDL, data location) for DETACH/ATTACH TABLE. */
-  private val detachedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** name → (schema DDL, original location, partition cols, was-managed)
-    * for the DROP → UNDROP TABLE window (the holding dir is
-    * `<location>_dropped`). */
-  private val droppedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, Seq[String], Boolean)]()
-
-  /** system.dropped_tables feed (StorageSystemDroppedTables.cpp): the
-    * UNDROP-able holding area — table, holding path, managed flag. */
-  def listDroppedTables: Seq[(String, String, Boolean)] = {
-    import scala.jdk.CollectionConverters._
-    droppedTables.asScala.toSeq.sortBy(_._1)
-      .map { case (t, (_, loc, _, managed)) =>
-        (t, loc + "_dropped", managed) }
-  }
-
-  /** Re-create a table's catalog entry preserving its managed/external
-    * identity, with the data to be moved in AFTERWARD (the entry is made
-    * while the location is absent, then the caller installs the data and
-    * this refreshes): managed tables stay managed — never silently
-    * converted to external by a LOCATION clause. */
-  private def recreateCatalogEntry(spark: SparkSession, t: String,
-      schemaDdl: String, loc: String, partCols: Seq[String],
-      managed: Boolean)(installData: String => Unit): Unit = {
-    val partClause =
-      if (partCols.nonEmpty) s" PARTITIONED BY (${partCols.mkString(", ")})"
-      else ""
-    if (managed)
-      spark.sql(s"CREATE TABLE $t ($schemaDdl) USING parquet$partClause")
-    else
-      spark.sql(
-        s"CREATE TABLE $t ($schemaDdl) USING parquet$partClause LOCATION '$loc'")
-    // the entry's OWN location is authoritative (a managed create derives
-    // it from the catalog, which may not equal the recorded one verbatim)
-    val actualLoc = tableLocation(spark, t)
-    val fs = new org.apache.hadoop.fs.Path(actualLoc)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(actualLoc), true) // create's empty dir
-    installData(actualLoc)
-    if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $t")
-    spark.sql(s"REFRESH TABLE $t")
-    afterWrite(spark, t)
-  }
 
   /** Backup ledger entry — feeds system.backups
     * (src/Storages/System/StorageSystemBackups.cpp). */
@@ -2875,37 +2649,6 @@ object ClickHouseSql {
     refreshableViews.asScala.values.toSeq
       .map(rv => (rv.name, rv.schedule, rv.table, rv.refreshes))
       .sortBy(_._1)
-  }
-
-  private val skipIndexes =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), SkipIdx]()
-
-  /** (table, index name, type, data path) — feeds
-    * system.data_skipping_indices (SystemTables.dataSkippingIndices). */
-  def listSkipIndexes: Seq[(String, String, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    skipIndexes.asScala.toSeq.map { case ((t, n), m) =>
-      (t, n, m.kind, m.basePath)
-    }.sortBy(x => (x._1, x._2))
-  }
-
-  /** Build (or re-build) one index's on-disk structure from the table's
-    * current files and (re-)register transparent pruning. */
-  private def buildSkipIndex(spark: SparkSession, m: SkipIdx): Unit = {
-    m.kind match {
-      case "bloom_filter" =>
-        graft.operators.SkipIndex.create(spark, m.basePath, m.idxDir, m.columns)
-      case "minmax" =>
-        graft.operators.SkipIndex.createMinMax(spark, m.basePath, m.idxDir, m.columns)
-      case "ngrambf_v1" =>
-        graft.operators.SkipIndex.createNgram(spark, m.basePath, m.idxDir,
-          m.columns.head, n = m.param.getOrElse(3))
-      case "set" =>
-        graft.operators.SkipIndex.createSet(spark, m.basePath, m.idxDir,
-          m.columns, maxValues = m.param.getOrElse(100))
-    }
-    graft.plans.SkipIndexPruning.register(spark, m.basePath, m.idxDir,
-      m.columns, m.kind)
   }
 
   // ---- file() table function (TableFunctionFile.cpp) ------------------
@@ -3373,47 +3116,6 @@ object ClickHouseSql {
     }
   }
 
-  /** table → stored row-TTL expression text (e.g. "ts + INTERVAL 30 DAY"
-    * — rows whose expression falls before now() expire). */
-  private val ttlSpecs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Invalidate-by-rebuild after a mutation rewrote `table`'s files with
-    * new names (the ADVICE r6 staleness hazard: a registered index over
-    * deleted paths silently empties results). Cleared indexes stay
-    * cleared; a rebuild that fails (e.g. the table is now empty) degrades
-    * to no-pruning, never to wrong answers. */
-  private def refreshSkipIndexes(spark: SparkSession, table: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    skipIndexes.asScala.values.filter(m => m.table == table && !m.cleared)
-      .foreach { m =>
-        try buildSkipIndex(spark, m)
-        catch { case _: Exception =>
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
-        }
-      }
-    refreshProjections(spark, table)
-  }
-
-  /** Rebuild every registered projection of the mutated table — a stale
-    * rollup/sorted copy would silently serve pre-mutation answers (the
-    * skip-index staleness class). Failure degrades to DROPPING the
-    * projection: no rewrite, never wrong answers. */
-  private def refreshProjections(spark: SparkSession, table: String): Unit =
-    projections.snapshot().foreach { case ((t, proj), e) =>
-      if (t == table) {
-        try e.rebuild()
-        catch { case _: Exception =>
-          projections.remove((t, proj))
-          try {
-            if (e.isAgg) graft.plans.AggProjections.drop(e.basePath)
-            else graft.plans.NormalProjections.drop(spark, e.basePath)
-          } catch { case _: Exception => }
-        }
-      }
-    }
-
   // ---- DDL translation (ParserCreateQuery → Spark DDL) ----------------
 
   /** Reference column-type text → Spark DDL type text. Carriers match the
@@ -3465,112 +3167,11 @@ object ClickHouseSql {
     }
   }
 
-  /** table → engine-layout metadata recorded from the reference DDL
-    * (AlterCommands.h MODIFY_ORDER_BY:33 / MODIFY_SAMPLE_BY:34 /
-    * COMMENT_COLUMN / MATERIALIZE_COLUMN): the declared sorting key,
-    * sampling expression, table comment, per-column comments, and
-    * per-column DEFAULT expressions. Physical-layout hints carried as
-    * properties (Catalyst sorts/samples on demand); SHOW CREATE renders
-    * them back and MATERIALIZE COLUMN rewrites from the defaults.
-    * `columns` is the declared column order, kept only when it differs
-    * from the catalog's: Spark moves PARTITION BY columns last. */
-  final case class EngineMeta(orderBy: Option[String] = None,
-      sampleBy: Option[String] = None, comment: Option[String] = None,
-      colComments: Map[String, String] = Map.empty,
-      colDefaults: Map[String, String] = Map.empty,
-      columns: Seq[String] = Nil)
-  private val engineMeta =
-    scala.collection.concurrent.TrieMap.empty[String, EngineMeta]
-  /** Dropped tables' engine metadata, restored by UNDROP. */
-  private val droppedEngineMeta =
-    scala.collection.concurrent.TrieMap.empty[String, EngineMeta]
-
-  private[graft] def engineMetaOf(t: String): EngineMeta =
-    engineMeta.getOrElse(t, EngineMeta())
-
-  /** Record ORDER BY / SAMPLE BY / COMMENT / column DEFAULTs+COMMENTs
-    * from a reference-shaped CREATE TABLE (fresh create replaces any
-    * stale entry for the name). */
-  private def recordEngineMeta(s: String): Unit = {
-    val re = ("(?is)^CREATE\\s+TABLE\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_.]*)\\s*\\((.*)\\)\\s*ENGINE\\s*=\\s*\\w+(.*)$").r
-    re.findFirstMatchIn(s).foreach { m =>
-      val name = m.group(1)
-      val tail = m.group(3)
-      def clause(kw: String): Option[String] =
-        (s"(?is)\\b$kw\\s+(.+?)(?=\\s+(?:PARTITION\\s+BY|ORDER\\s+BY|" +
-          "SAMPLE\\s+BY|PRIMARY\\s+KEY|TTL|SETTINGS|COMMENT)\\b|;?\\s*$)").r
-          .findFirstMatchIn(tail).map(_.group(1).trim)
-      val comment = "(?is)\\bCOMMENT\\s+'([^']*)'\\s*;?\\s*$".r
-        .findFirstMatchIn(tail).map(_.group(1))
-      val colComments = scala.collection.mutable.Map[String, String]()
-      val colDefaults = scala.collection.mutable.Map[String, String]()
-      val declared = Seq.newBuilder[String]
-      SqlLex.splitTop(m.group(2)).foreach { colDef =>
-        "(?s)^\\s*`?([A-Za-z_][A-Za-z0-9_]*)`?\\s+(.*)$".r
-          .findFirstMatchIn(colDef).foreach { cm =>
-            val cname = cm.group(1)
-            declared += cname
-            val rest = cm.group(2)
-            ("(?is)\\bDEFAULT\\s+(.+?)(?=\\s+(?:CODEC|COMMENT|TTL)\\b|$)").r
-              .findFirstMatchIn(rest)
-              .foreach(d => colDefaults(cname) = d.group(1).trim)
-            "(?is)\\bCOMMENT\\s+'([^']*)'".r.findFirstMatchIn(rest)
-              .foreach(c => colComments(cname) = c.group(1))
-          }
-      }
-      val cols = declared.result()
-      val (part, rest) = cols.partition(c =>
-        createPartitionColumn(tail).exists(_.equalsIgnoreCase(c)))
-      val catalogOrder = rest ++ part
-      engineMeta.put(name, EngineMeta(clause("ORDER\\s+BY"),
-        clause("SAMPLE\\s+BY"), comment, colComments.toMap, colDefaults.toMap,
-        if (cols == catalogOrder) Nil else cols))
-    }
-  }
-
-  /** `CREATE TABLE [IF NOT EXISTS] t (cols…) ENGINE = X [ORDER BY …]
-    * [PARTITION BY col] [SETTINGS …]` → `CREATE TABLE … USING parquet
-    * [PARTITIONED BY (col)]`. Engine choice, ORDER BY (PK) and TTL are
-    * physical-layout hints with no Spark-DDL analog: ORDER BY maps to
-    * nothing (Catalyst sorts on demand), a bare-column PARTITION BY maps
-    * to Spark partitioning. */
-  def rewriteCreateTable(s: String): String = {
-    val re = ("(?is)^CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?" +
-      "([A-Za-z_][A-Za-z0-9_.]*)\\s*\\((.*)\\)\\s*ENGINE\\s*=\\s*\\w+(.*)$").r
-    re.findFirstMatchIn(s) match {
-      case None => s // not a reference-shaped CREATE; pass through
-      case Some(m) =>
-        val ifNot = if (m.group(1) != null) "IF NOT EXISTS " else ""
-        val name = m.group(2)
-        val cols = SqlLex.splitTop(m.group(3)).map { colDef =>
-          val cd = "(?s)^([A-Za-z_][A-Za-z0-9_]*)\\s+(.*)$".r
-          colDef.trim match {
-            case cd(cname, ctype0) =>
-              // strip DEFAULT/CODEC/COMMENT suffixes
-              val ctype = ctype0
-                .replaceAll("(?is)\\s+(DEFAULT|MATERIALIZED|CODEC|COMMENT|TTL)\\b.*$", "")
-              s"$cname ${sparkTypeText(ctype)}"
-            case other =>
-              throw new IllegalArgumentException(s"unparsable column def '$other'")
-          }
-        }
-        val part = createPartitionColumn(m.group(4))
-          .map(p => s" PARTITIONED BY ($p)").getOrElse("")
-        s"CREATE TABLE $ifNot$name (${cols.mkString(", ")}) USING parquet$part"
-    }
-  }
-
-  /** The bare-column `PARTITION BY` of a CREATE TABLE's engine clauses. */
-  private def createPartitionColumn(tail: String): Option[String] =
-    "(?is)\\bPARTITION\\s+BY\\s+([A-Za-z_][A-Za-z0-9_]*)\\b".r
-      .findFirstMatchIn(tail).map(_.group(1))
-
   /** The column order a positional INSERT into `t` binds to, when it is
     * not the catalog's: the declared order of its CREATE TABLE (see
-    * EngineMeta.columns), then any column added since, in catalog order. */
+    * TableRecord.columns), then any column added since, in catalog order. */
   private def declaredOrder(spark: SparkSession, t: String): Option[Seq[String]] = {
-    val declared = engineMetaOf(t).columns
+    val declared = TableLedger.record(t).columns
     if (declared.isEmpty) None
     else {
       val cur = spark.table(t).columns.toSeq
@@ -3589,17 +3190,8 @@ object ClickHouseSql {
     * added, dropped or renamed a column. */
   private def redeclare(spark: SparkSession, t: String, cols: Seq[String]): Unit = {
     val cur = spark.table(t).columns.toSeq
-    if (cols != cur || engineMeta.contains(t))
-      engineMeta.put(t, engineMetaOf(t).copy(columns =
-        if (cols == cur) Nil else cols))
+    TableLedger.update(t)(_.copy(columns = if (cols == cur) Nil else cols))
   }
-
-  /** Moves a table's engine metadata along with a rename of the table. */
-  private def moveEngineMeta(from: String, to: String): Unit =
-    engineMeta.remove(from) match {
-      case Some(m) => engineMeta.put(to, m)
-      case None => engineMeta.remove(to)
-    }
 
   private val positionalInsertRe = ("(?is)^(INSERT\\s+INTO\\s+(?:TABLE\\s+)?" +
     "([A-Za-z_][A-Za-z0-9_.]*))\\s+(?=SELECT\\b|WITH\\b|VALUES\\b)").r

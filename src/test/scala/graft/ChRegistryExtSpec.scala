@@ -123,9 +123,9 @@ class ChRegistryExtSpec extends SparkFunSuite {
     assert(ClickHouseSql.sparkTypeText("FixedString(16)") == "STRING")
     assert(ClickHouseSql.sparkTypeText("Enum8('a' = 1, 'b' = 2)") == "STRING")
     assert(ClickHouseSql.sparkTypeText("DateTime64(3)") == "TIMESTAMP")
-    val ddl = ClickHouseSql.rewriteCreateTable(
+    val ddl = graft.sql.TableLedger.parseCreate(
       "CREATE TABLE t (d Date, n UInt64 DEFAULT 0) ENGINE = MergeTree " +
-        "PARTITION BY d ORDER BY n")
+        "PARTITION BY d ORDER BY n").get.ddl
     assert(ddl == "CREATE TABLE t (d DATE, n DECIMAL(20, 0)) USING parquet " +
       "PARTITIONED BY (d)")
   }

@@ -363,7 +363,7 @@ class SkipIndexSpec extends SparkFunSuite {
       s"SELECT COUNT(*) AS n FROM $t WHERE source = 'src1'").head().getLong(0) == 0)
     // CLEAR keeps the declaration visible but stops pruning
     graft.sql.ClickHouseSql.sql(spark, s"ALTER TABLE $t CLEAR INDEX s_idx")
-    assert(graft.sql.ClickHouseSql.listSkipIndexes.exists(x =>
+    assert(graft.sql.TableLedger.listSkipIndexes(spark).exists(x =>
       x._1 == t && x._2 == "s_idx"), "CLEAR must keep the metadata entry")
     assert(graft.sql.ClickHouseSql.sql(spark,
       s"SELECT COUNT(*) AS n FROM $t WHERE source = 'src3'").head().getLong(0) == before)
