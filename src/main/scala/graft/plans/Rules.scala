@@ -14,28 +14,27 @@ import org.apache.spark.sql.execution.SparkStrategy
   *  1. [[TrivialCount]]: a bare count/min/max answers from parquet
   *     footers, with no scan at all, before any rule below turns that
   *     Aggregate into a read of something else.
-  *  2. [[AggProjections]]: an Aggregate over a (dim-filtered) base scan
-  *     re-aggregates the rollup. It runs before the two rules that swap
-  *     the base scan: once the scan reads the sorted copy or a pruned
-  *     file list, its root is no longer the registered base path and the
-  *     rollup, the smallest read, is lost.
-  *  3. [[NormalProjections]]: an Aggregate directly over a base scan reads
-  *     the bucketed copy instead (no shuffle for its grouping).
-  *  4. [[SkipIndexPruning]]: a Filter over a base scan reads only the
-  *     files the skip indexes admit. It matches Filters, which the two
-  *     projection rules only consume from above an Aggregate, so running
-  *     it after them changes no plan either of them can take.
-  * The three layout rules return at once while their registries are
-  * empty, so a session without projections or skip indexes pays nothing
-  * for them. The one strategy, [[OrderedCollect]], runs before Spark's
-  * own and plans only the root ORDER BY it matches. */
+  *  2. [[Projections]]: an Aggregate over a (dim-filtered) base scan
+  *     re-aggregates the smallest rollup that fits, else reads a sorted
+  *     copy its grouping covers. Choosing among the path's rollups and
+  *     copies happens inside the one rule, so no order between rules
+  *     decides it. It runs before the file pruning: once the scan reads
+  *     a pruned file list, its root is no longer the registered base path
+  *     and the rollup, the smallest read, is lost.
+  *  3. [[SkipIndexPruning]]: a Filter over a base scan reads only the
+  *     files the skip indexes admit. It matches Filters, which the
+  *     projection rule only consumes from above an Aggregate, so running
+  *     it after changes no plan that rule can take.
+  * Both layout rules read one registry, [[Layouts]], and return at once
+  * while it is empty, so a session without projections or skip indexes
+  * pays nothing for them. The one strategy, [[OrderedCollect]], runs
+  * before Spark's own and plans only the root ORDER BY it matches. */
 object Rules {
 
   /** The rules for `spark`, in the order they run. */
   def of(spark: SparkSession): Seq[Rule[LogicalPlan]] = Seq(
     TrivialCount.CountRule(spark),
-    AggProjections.RewriteRule(spark),
-    NormalProjections.RewriteRule(spark),
+    Projections.RewriteRule(spark),
     SkipIndexPruning.PruneRule(spark))
 
   /** The planner strategies, in the order they are tried. */

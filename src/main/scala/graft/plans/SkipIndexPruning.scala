@@ -1,12 +1,11 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.operators.SkipIndex
+import graft.plans.Layouts.Skip
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, EndsWith, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Lower, StartsWith}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
@@ -28,10 +27,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   * The Filter itself always stays, so index false positives re-check and
   * answers never change — pruning is strictly an I/O reduction.
   *
-  * Mechanics (same extension point as [[AggProjections]] /
-  * [[NormalProjections]]): an extraOptimizations rule matches
-  * Filter-over-LogicalRelation plans whose relation roots at a registered
-  * data dir, turns supported conjuncts into per-index file sets
+  * Mechanics: an extraOptimizations rule matches Filter-over-base-scan
+  * plans whose relation roots at a path with [[Layouts.Skip]] layouts
+  * registered, turns supported conjuncts into per-index file sets
   * (driver-resident index reads, |files| rows each), intersects them, and
   * swaps the relation's location for an [[InMemoryFileIndex]] over the
   * surviving files. After the swap the root paths no longer match the
@@ -42,38 +40,6 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   * partition pruning over granule pruning the same way).
   */
 object SkipIndexPruning {
-
-  final case class Idx(dataPath: String, kind: String, indexDir: String,
-      columns: Set[String])
-
-  /** canon(dataPath) → registered indexes over that dir (a dir can carry
-    * several, like a reference table with several INDEX clauses). */
-  private val registry = new ConcurrentHashMap[String, List[Idx]]()
-
-  private def canon(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  /** Register an index built with the matching [[SkipIndex]] builder for
-    * transparent use by the rule ([[Rules]]). `kind` ∈ bloom_filter | minmax
-    * | set | ngrambf_v1. */
-  def register(spark: SparkSession, dataDir: String, indexDir: String,
-      columns: Seq[String], kind: String = "bloom_filter"): Unit = {
-    val key = canon(dataDir)
-    val idx = Idx(key, kind, indexDir, columns.toSet)
-    registry.merge(key, List(idx),
-      (old, _) => idx :: old.filterNot(_.indexDir == idx.indexDir))
-  }
-
-  /** Unregister every index over the data dir. */
-  def drop(dataDir: String): Unit = registry.remove(canon(dataDir))
-
-  /** Unregister one index (by its index dir) over the data dir. */
-  def dropIndex(dataDir: String, indexDir: String): Unit =
-    registry.computeIfPresent(canon(dataDir),
-      (_, old) => old.filterNot(_.indexDir == indexDir) match {
-        case Nil => null
-        case rest => rest
-      })
 
   /** One pruning decision per (relation, index) the rule applied —
     * drained by the dialect's EXPLAIN indexes = 1 (the reference's
@@ -119,25 +85,25 @@ object SkipIndexPruning {
 
     /** The file set one conjunct admits under one index, or None when the
       * conjunct doesn't probe this index. */
-    private def fileSet(idx: Idx, c: Expression): Option[Set[String]] = {
+    private def fileSet(idx: Skip, c: Expression): Option[Set[String]] = {
       def bloomEq(a: AttributeReference, hashes: Seq[Long]) =
         if (idx.kind == "bloom_filter" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesByHash(spark, idx.indexDir, a.name,
+          Some(SkipIndex.matchingFilesByHash(spark, idx.dir, a.name,
             hashes).toSet)
         else None
       def setEq(a: AttributeReference, vals: Seq[Any]) =
         if (idx.kind == "set" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesSet(spark, idx.indexDir, a.name,
+          Some(SkipIndex.matchingFilesSet(spark, idx.dir, a.name,
             vals).toSet)
         else None
       def mmBound(a: AttributeReference, lo: Option[Any], hi: Option[Any]) =
         if (idx.kind == "minmax" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesBound(spark, idx.indexDir, a.name,
+          Some(SkipIndex.matchingFilesBound(spark, idx.dir, a.name,
             lo, hi).toSet)
         else None
       def ngram(a: AttributeReference, needle: String) =
         if (idx.kind == "ngrambf_v1" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesLike(spark, idx.indexDir, needle).toSet)
+          Some(SkipIndex.matchingFilesLike(spark, idx.dir, needle).toSet)
         else None
       /** Smallest string ≥ every string carrying `pre` as a prefix, in
         * UTF-8 binary order (the order Spark compares strings in): strip
@@ -225,11 +191,12 @@ object SkipIndexPruning {
     }
 
     override def apply(plan: LogicalPlan): LogicalPlan = {
-      if (registry.isEmpty) return plan
+      if (Layouts.isEmpty) return plan
       plan.transformUp {
         case f @ Filter(cond, child) =>
-          val rewritten = rewriteScan(child, cond)
-          rewritten.map(c => Filter(cond, c)).getOrElse(f)
+          Layouts.scanOf(child).flatMap(prune(_, cond))
+            .map(lr => Filter(cond, child.transform { case _: LogicalRelation => lr }))
+            .getOrElse(f)
       }
     }
 
@@ -257,41 +224,25 @@ object SkipIndexPruning {
       }
     }
 
-    /** Rewrite the scan under (possibly) a column-pruning Project. */
-    private def rewriteScan(plan: LogicalPlan, cond: Expression): Option[LogicalPlan] =
-      plan match {
-        case p @ Project(projectList, child)
-            if projectList.forall(_.isInstanceOf[AttributeReference]) =>
-          rewriteScan(child, cond).map(c => p.copy(child = c))
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation =>
-            val roots = fs.location.rootPaths.map(p => canon(p.toString))
-            val idxs = roots.flatMap(r => Option(registry.get(r)).toSeq.flatten)
-            if (idxs.isEmpty) None
-            else {
-              val sets = for {
-                c <- conjuncts(cond)
-                idx <- idxs
-                s <- fileSet(idx, c)
-              } yield (idx, s)
-              if (sets.isEmpty) None
-              else {
-                val files = sets.map(_._2).reduce(_ intersect _).toSeq.sorted
-                val total = fs.location.inputFiles.length
-                sets.groupBy(_._1).foreach { case (idx, ss) =>
-                  logDecision(Decision(idx.dataPath, idx.kind, idx.columns,
-                    ss.map(_._2).reduce(_ intersect _).size, total))
-                }
-                if (files.size >= total) None
-                else swappedLocation(fs, files).map { newLocation =>
-                  val newFs = fs.copy(location = newLocation)(spark)
-                  lr.copy(relation = newFs)
-                }
-              }
-            }
-          case _ => None
-        }
-        case _ => None
+    /** The scan's relation over only the files its skip indexes admit
+      * under `cond`, when they exclude any. */
+    private def prune(scan: Layouts.Scan, cond: Expression): Option[LogicalRelation] = {
+      val sets = for {
+        c <- conjuncts(cond)
+        idx <- scan.layouts.collect { case s: Skip => s }
+        s <- fileSet(idx, c)
+      } yield (idx, s)
+      if (sets.isEmpty) return None
+      val files = sets.map(_._2).reduce(_ intersect _).toSeq.sorted
+      val total = scan.files.location.inputFiles.length
+      sets.groupBy(_._1).foreach { case (idx, ss) =>
+        logDecision(Decision(scan.path, idx.kind, idx.columns.toSet,
+          ss.map(_._2).reduce(_ intersect _).size, total))
       }
+      if (files.size >= total) None
+      else swappedLocation(scan.files, files).map { newLocation =>
+        scan.relation.copy(relation = scan.files.copy(location = newLocation)(spark))
+      }
+    }
   }
 }

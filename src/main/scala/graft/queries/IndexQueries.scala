@@ -4,6 +4,7 @@ import graft.{Q, QueryPack, Scratch, Tables}
 import graft.operators.{LazyTopK, SkipIndex, TextIndex, VectorIndex}
 import graft.operators.VectorIndex.{annIvfTopK, annLshTopK}
 import graft.functions.TextFunctions.{dot, l2norm}
+import graft.plans.Layouts
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -410,9 +411,8 @@ object IndexQueries extends QueryPack {
       Tables.load(s, dir, "documents")
         .repartitionByRange(8, col("source"), col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/data")
-      SkipIndex.create(s, s"$base/data", s"$base/index", Seq("source"))
-      graft.plans.SkipIndexPruning.register(s, s"$base/data", s"$base/index",
-        Seq("source"))
+      Layouts.register(s, Layouts.Skip(s"$base/data", "bloom_filter",
+        s"$base/index", Seq("source")))
       s.read.parquet(s"$base/data")
         .filter(col("source") === "src5")
         .groupBy("lang").agg(count(lit(1)).as("n"))
@@ -431,9 +431,8 @@ object IndexQueries extends QueryPack {
       Tables.load(s, dir, "documents")
         .repartitionByRange(8, col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/data")
-      SkipIndex.createMinMax(s, s"$base/data", s"$base/mm", Seq("doc_id"))
-      graft.plans.SkipIndexPruning.register(s, s"$base/data", s"$base/mm",
-        Seq("doc_id"), kind = "minmax")
+      Layouts.register(s, Layouts.Skip(s"$base/data", "minmax", s"$base/mm",
+        Seq("doc_id")))
       s.read.parquet(s"$base/data")
         .filter(col("doc_id").between(40, 160))
         .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"),
@@ -452,9 +451,8 @@ object IndexQueries extends QueryPack {
       Tables.load(s, dir, "documents")
         .repartitionByRange(8, col("source"), col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/data")
-      SkipIndex.createNgram(s, s"$base/data", s"$base/ng", "text", n = 3)
-      graft.plans.SkipIndexPruning.register(s, s"$base/data", s"$base/ng",
-        Seq("text"), kind = "ngrambf_v1")
+      Layouts.register(s, Layouts.Skip(s"$base/data", "ngrambf_v1", s"$base/ng",
+        Seq("text"), Some(3)))
       s.read.parquet(s"$base/data")
         .filter(lower(col("text")).contains("dup"))
         .select("doc_id", "source").orderBy("doc_id")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, QueryPack, Scratch, Tables}
 import graft.operators.{ExecutableUdf, Storages}
+import graft.plans.Layouts
 import graft.sources.SystemTables
 import graft.sql.ClickHouseSql
 import org.apache.spark.sql.functions._
@@ -113,11 +114,11 @@ object StorageQueries extends QueryPack {
         .select("name").orderBy("name")
     },
 
-    // Aggregate projection (plans/AggProjections.scala — the reference's
+    // Aggregate projection (plans/Projections.scala — the reference's
     // optimizeUseAggregateProjections): a registered rollup on
     // (l_returnflag, l_linestatus) answers this GROUP BY from
     // rollup-sized data; the Rule[LogicalPlan] rewrite is pinned in
-    // AggProjectionsSpec, the VALUES equal the base-table aggregate,
+    // ProjectionsSpec, the VALUES equal the base-table aggregate,
     // which is exactly what the oracle states. The projection is
     // registered only for the duration of this query's materialization
     // (localCheckpoint is eager), so no other query's plan is touched.
@@ -129,10 +130,10 @@ object StorageQueries extends QueryPack {
       FROM lineitem GROUP BY l_returnflag, l_linestatus
       ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
       val basePath = s"$dir/lineitem.parquet"
-      graft.plans.AggProjections.create(s, basePath,
-        "/tmp/graft_proj_q/lineitem",
+      val rollup = Layouts.Rollup(basePath, "/tmp/graft_proj_q/lineitem",
         Seq("l_returnflag", "l_linestatus"),
         Seq("l_quantity", "l_extendedprice"))
+      Layouts.register(s, rollup)
       try {
         s.read.parquet(basePath)
           .groupBy("l_returnflag", "l_linestatus")
@@ -146,14 +147,14 @@ object StorageQueries extends QueryPack {
             round(col("__aq"), 6).as("avg_qty"), col("mn"), col("mx"))
           .orderBy("l_returnflag", "l_linestatus")
           .localCheckpoint()
-      } finally graft.plans.AggProjections.drop(basePath)
+      } finally Layouts.unregister(s, basePath, rollup.dir)
     },
 
     // Filtered aggregate projection (round-6: the reference's rewrite
     // serves `WHERE dim = x GROUP BY dim2` from the projection too —
     // optimizeUseAggregateProjections.cpp). The dim-only predicate is
     // pushed onto the ROLLUP scan; rewrite + measure-filter bail-out are
-    // pinned in AggProjectionsSpec.
+    // pinned in ProjectionsSpec.
     Q.df("q_projection_agg_filtered", """
       SELECT l_returnflag, COUNT(*) AS n,
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
@@ -161,10 +162,10 @@ object StorageQueries extends QueryPack {
       GROUP BY l_returnflag
       ORDER BY l_returnflag""") { (s, dir) =>
       val basePath = s"$dir/lineitem.parquet"
-      graft.plans.AggProjections.create(s, basePath,
-        "/tmp/graft_proj_qf/lineitem",
+      val rollup = Layouts.Rollup(basePath, "/tmp/graft_proj_qf/lineitem",
         Seq("l_returnflag", "l_linestatus"),
         Seq("l_quantity", "l_extendedprice"))
+      Layouts.register(s, rollup)
       try {
         s.read.parquet(basePath)
           .filter(col("l_linestatus") === "F")
@@ -174,14 +175,14 @@ object StorageQueries extends QueryPack {
             col("__q").cast("double").as("qty"))
           .orderBy("l_returnflag")
           .localCheckpoint()
-      } finally graft.plans.AggProjections.drop(basePath)
+      } finally Layouts.unregister(s, basePath, rollup.dir)
     },
 
-    // Normal projection (plans/NormalProjections — the reference's
+    // Normal projection (plans/Projections.scala — the reference's
     // optimizeUseNormalProjections + optimizeReadInOrder): a
     // bucketed+sorted alternate layout of lineitem on l_orderkey answers
     // this GROUP BY with NO Exchange (the fact shuffle disappears — the
-    // plan pin lives in NormalProjectionsSpec); values equal the base
+    // plan pin lives in ProjectionsSpec); values equal the base
     // aggregate, which is what the oracle states.
     Q.df("q_projection_normal", """
       SELECT l_orderkey, COUNT(*) AS n,
@@ -189,8 +190,8 @@ object StorageQueries extends QueryPack {
       FROM lineitem GROUP BY l_orderkey
       ORDER BY l_orderkey""") { (s, dir) =>
       val basePath = s"$dir/lineitem.parquet"
-      graft.plans.NormalProjections.create(s, basePath, "q_nproj_lineitem",
-        8, Seq("l_orderkey"), Seq("l_quantity"))
+      Layouts.register(s, Layouts.Sorted(basePath, "q_nproj_lineitem",
+        Seq("l_orderkey"), Seq("l_quantity")))
       try {
         s.read.parquet(basePath)
           .groupBy("l_orderkey")
@@ -199,7 +200,7 @@ object StorageQueries extends QueryPack {
             col("__q").cast("double").as("qty"))
           .orderBy("l_orderkey")
           .localCheckpoint()
-      } finally graft.plans.NormalProjections.drop(s, basePath)
+      } finally Layouts.unregister(s, basePath, "q_nproj_lineitem")
     },
 
     // Projection DDL (ParserProjectionDeclaration): ALTER TABLE ... ADD

@@ -2224,11 +2224,11 @@ object ClickHouseSql {
 
   /** ALTER TABLE t ADD PROJECTION — the reference's projection DDL
     * (src/Parsers/ParserProjectionDeclaration, projections on MergeTree
-    * tables), wired onto the two rewrite rules:
-    *  - `ADD PROJECTION p (SELECT <dims+aggs> GROUP BY dims)` →
-    *    AggProjections.create (precomputed rollup);
-    *  - `ADD PROJECTION p (SELECT * ORDER BY keys)` →
-    *    NormalProjections.create (alternate physical order). */
+    * tables), wired onto the projection rule's two layouts:
+    *  - `ADD PROJECTION p (SELECT <dims+aggs> GROUP BY dims)` → a
+    *    precomputed rollup;
+    *  - `ADD PROJECTION p (SELECT * ORDER BY keys)` → a sorted copy
+    *    (alternate physical order). */
   private def addProjection(h: Hit): DataFrame = {
     val body = h(3)
     def keys(m: scala.util.matching.Regex.Match) =

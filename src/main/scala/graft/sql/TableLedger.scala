@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.plans.Layouts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
@@ -165,8 +166,9 @@ private[graft] object TableLedger {
     * window: Atomic databases keep a dropped table's data for a delay
     * before the real delete) and DETACH TABLE: the data dir moves O(1) to
     * a `_dropped` / `_detached` sibling, the built parts are unregistered,
-    * and the record parks with the catalog entry until UNDROP / ATTACH or
-    * the next DROP / DETACH of the name. Temp views, catalog views and
+    * and the record parks with the catalog entry until UNDROP / ATTACH; a
+    * later DROP of the name replaces a dropped one, a later DETACH fails
+    * while a detached one is parked. Temp views, catalog views and
     * missing tables take Spark's own DROP (`stmt`) and lose any record. */
   def drop(spark: SparkSession, t: String, stmt: String): Unit =
     if (spark.catalog.tableExists(t) &&
@@ -180,6 +182,10 @@ private[graft] object TableLedger {
   def detach(spark: SparkSession, t: String): Unit = park(spark, t, "detached", "DETACH")
 
   private def park(spark: SparkSession, t: String, how: String, verb: String): Unit = {
+    // a DROP replaces the last dropped table of the name; a DETACH would
+    // discard a detached one nobody chose to drop
+    require(how != "detached" || !parked.contains((key(t), how)),
+      s"$verb TABLE $t: a detached table of that name is parked; ATTACH it first")
     val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
     val loc = meta.location.getPath
     val fs = ClickHouseSql.fsOf(spark, loc)
@@ -272,73 +278,52 @@ private[graft] object TableLedger {
 
   // ---- built parts: skip indexes and projections -----------------------
 
-  private def indexDir(spark: SparkSession, t: String, name: String): String =
-    new Path(spark.conf.get("spark.sql.warehouse.dir"),
-      s"graft_skip_indexes/${key(t)}_$name").toString
+  private def builtDir(spark: SparkSession, under: String, t: String, name: String): String =
+    new Path(spark.conf.get("spark.sql.warehouse.dir"), s"$under/${key(t)}_$name").toString
 
-  /** Builds one index's structure from the files at `loc` and registers it
-    * for transparent pruning. */
-  private def buildIndex(spark: SparkSession, t: String, name: String,
-      d: SkipIndexDecl, loc: String): Unit = {
-    val (ops, dir) = (graft.operators.SkipIndex, indexDir(spark, t, name))
-    d.kind match {
-      case "bloom_filter" => ops.create(spark, loc, dir, d.columns)
-      case "minmax" => ops.createMinMax(spark, loc, dir, d.columns)
-      case "ngrambf_v1" => ops.createNgram(spark, loc, dir, d.columns.head,
-        n = d.param.getOrElse(3))
-      case "set" => ops.createSet(spark, loc, dir, d.columns,
-        maxValues = d.param.getOrElse(100))
-    }
-    graft.plans.SkipIndexPruning.register(spark, loc, dir, d.columns, d.kind)
-  }
+  private def indexLayout(spark: SparkSession, t: String, name: String,
+      d: SkipIndexDecl, loc: String): Layouts.Layout =
+    Layouts.Skip(loc, d.kind, builtDir(spark, "graft_skip_indexes", t, name), d.columns, d.param)
 
-  private def unbuildIndex(spark: SparkSession, t: String, name: String, loc: String): Unit = {
-    val dir = indexDir(spark, t, name)
-    graft.plans.SkipIndexPruning.dropIndex(loc, dir)
-    graft.operators.SkipIndex.drop(spark, dir)
-  }
+  private def projectionLayout(spark: SparkSession, t: String, name: String,
+      p: ProjectionDecl, loc: String): Layouts.Layout =
+    if (p.aggregate)
+      Layouts.Rollup(loc, builtDir(spark, "graft_projections", t, name), p.keys, p.measures)
+    else Layouts.Sorted(loc, s"${key(t)}__proj_$name", p.keys)
 
-  private def buildProjection(spark: SparkSession, t: String, name: String,
-      p: ProjectionDecl, loc: String): Unit =
-    if (p.aggregate) graft.plans.AggProjections.create(spark, loc,
-      new Path(spark.conf.get("spark.sql.warehouse.dir"),
-        s"graft_projections/${key(t)}_$name").toString, p.keys, p.measures)
-    else graft.plans.NormalProjections.create(spark, loc,
-      s"${key(t)}__proj_$name", 8, p.keys)
-
-  private def unbuildProjection(spark: SparkSession, p: ProjectionDecl, loc: String): Unit =
-    if (p.aggregate) graft.plans.AggProjections.drop(loc)
-    else graft.plans.NormalProjections.drop(spark, loc)
-
+  /** Unregisters every layout `r` declares over `t`'s files at `loc`. */
   private def unbuild(spark: SparkSession, t: String, r: TableRecord, loc: String): Unit = {
-    r.indexes.keys.foreach(unbuildIndex(spark, t, _, loc))
-    r.projections.values.foreach(unbuildProjection(spark, _, loc))
+    val ls = r.indexes.map { case (n, d) => indexLayout(spark, t, n, d, loc) } ++
+      r.projections.map { case (n, p) => projectionLayout(spark, t, n, p, loc) }
+    ls.foreach(l => Layouts.unregister(spark, loc, l.built))
   }
 
   /** Rebuilds `t`'s skip indexes and projections over its current files
     * after a write renamed or replaced them (a structure over deleted
     * paths silently empties results; a stale rollup answers pre-write
-    * values). Cleared indexes stay cleared. A failed index rebuild (an
-    * empty table) degrades to no pruning, a failed projection to no
+    * values). Every layout of the path is unregistered before any is
+    * rebuilt, so no build reads the new files through a stale one.
+    * Cleared indexes stay cleared. A failed index rebuild (an empty
+    * table) degrades to no pruning, a failed projection to no
     * projection: never to a wrong answer. */
   def build(spark: SparkSession, t: String): Unit = live.get(key(t))
     .filter(r => r.indexes.nonEmpty || r.projections.nonEmpty)
     .foreach { r =>
       val loc = ClickHouseSql.tableLocation(spark, t)
+      unbuild(spark, t, r, loc)
       for ((n, d) <- r.indexes if !d.cleared)
-        try buildIndex(spark, t, n, d, loc)
-        catch { case _: Exception => unbuildIndex(spark, t, n, loc) }
+        try Layouts.register(spark, indexLayout(spark, t, n, d, loc))
+        catch { case _: Exception => }
       for ((n, p) <- r.projections)
-        try buildProjection(spark, t, n, p, loc)
+        try Layouts.register(spark, projectionLayout(spark, t, n, p, loc))
         catch { case _: Exception =>
           update(t)(x => x.copy(projections = x.projections - n))
-          try unbuildProjection(spark, p, loc) catch { case _: Exception => }
         }
     }
 
   /** ADD INDEX: build, then declare. */
   def addIndex(spark: SparkSession, t: String, name: String, d: SkipIndexDecl): Unit = {
-    buildIndex(spark, t, name, d, ClickHouseSql.tableLocation(spark, t))
+    Layouts.register(spark, indexLayout(spark, t, name, d, ClickHouseSql.tableLocation(spark, t)))
     update(t)(r => r.copy(indexes = r.indexes + (name -> d)))
   }
 
@@ -347,9 +332,9 @@ private[graft] object TableLedger {
     * MATERIALIZE INDEX rebuilds from the current files. */
   def alterIndex(spark: SparkSession, t: String, name: String, verb: String): Unit =
     live.get(key(t)).flatMap(_.indexes.get(name)).foreach { d =>
-      val loc = ClickHouseSql.tableLocation(spark, t)
-      if (verb == "MATERIALIZE") buildIndex(spark, t, name, d, loc)
-      else unbuildIndex(spark, t, name, loc)
+      val l = indexLayout(spark, t, name, d, ClickHouseSql.tableLocation(spark, t))
+      if (verb == "MATERIALIZE") Layouts.register(spark, l)
+      else Layouts.unregister(spark, l.base, l.built)
       update(t)(r => r.copy(indexes =
         if (verb == "DROP") r.indexes - name
         else r.indexes + (name -> d.copy(cleared = verb == "CLEAR"))))
@@ -358,14 +343,16 @@ private[graft] object TableLedger {
   /** ADD PROJECTION builds eagerly (the reference defers the build to a
     * mutation), then declares. */
   def addProjection(spark: SparkSession, t: String, name: String, p: ProjectionDecl): Unit = {
-    buildProjection(spark, t, name, p, ClickHouseSql.tableLocation(spark, t))
+    Layouts.register(spark,
+      projectionLayout(spark, t, name, p, ClickHouseSql.tableLocation(spark, t)))
     update(t)(r => r.copy(projections = r.projections + (name -> p)))
   }
 
   def dropProjection(spark: SparkSession, t: String, name: String): Unit =
     live.get(key(t)).flatMap(_.projections.get(name)).foreach { p =>
       update(t)(r => r.copy(projections = r.projections - name))
-      unbuildProjection(spark, p, ClickHouseSql.tableLocation(spark, t))
+      val l = projectionLayout(spark, t, name, p, ClickHouseSql.tableLocation(spark, t))
+      Layouts.unregister(spark, l.base, l.built)
     }
 
   // ---- readers ---------------------------------------------------------

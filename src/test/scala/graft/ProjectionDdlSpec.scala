@@ -7,6 +7,87 @@ import org.apache.spark.sql.functions._
   * projection rewrite rules (reference ParserProjectionDeclaration). */
 class ProjectionDdlSpec extends SparkFunSuite {
 
+  private def ch(s: String) = ClickHouseSql.sql(spark, s)
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString(" ")).toSeq
+
+  private def warehouse(name: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+
+  /** Where the rollup of `t`'s projection `p` is built. */
+  private def rollupDir(t: String, p: String): String =
+    warehouse(s"graft_projections/${t}_$p").toUri.getPath
+
+  /** Runs `body` on no table `t`; afterwards the dialect DROP unbuilds
+    * what `t` declared and the warehouse keeps no dir of it. */
+  private def withTable(t: String)(body: => Unit): Unit = {
+    def clean(): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val fs = warehouse(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("", "_dropped").foreach(sfx => fs.delete(warehouse(t + sfx), true))
+    }
+    clean()
+    try body finally { ch(s"DROP TABLE IF EXISTS $t"); clean() }
+  }
+
+  /** A table whose GROUP BY d and GROUP BY e each have a rollup. */
+  private def twoRollups(t: String): Unit = {
+    ch(s"CREATE TABLE $t (d String, e String, x Int64) ENGINE = MergeTree ORDER BY d")
+    ch(s"INSERT INTO $t VALUES ('a', 'u', 1), ('a', 'v', 2), ('b', 'u', 3), " +
+      "('b', 'v', 4), ('b', 'v', 5)")
+    ch(s"ALTER TABLE $t ADD PROJECTION p1 (SELECT d, sum(x) GROUP BY d)")
+    ch(s"ALTER TABLE $t ADD PROJECTION p2 (SELECT e, sum(x) GROUP BY e)")
+  }
+
+  private def byKey(t: String, k: String) =
+    ch(s"SELECT $k, count() AS n, sum(x) AS s FROM $t GROUP BY $k ORDER BY $k")
+
+  test("several aggregate projections: each GROUP BY reads its own rollup") {
+    withTable("pddl_two") {
+      twoRollups("pddl_two")
+      assert(readRoots(byKey("pddl_two", "d")) == Seq(rollupDir("pddl_two", "p1")))
+      assert(readRoots(byKey("pddl_two", "e")) == Seq(rollupDir("pddl_two", "p2")))
+      assert(rows(byKey("pddl_two", "d")) == Seq("a 2 3", "b 3 12"))
+      assert(rows(byKey("pddl_two", "e")) == Seq("u 2 4", "v 3 11"))
+      // DROP takes its own rollup, and the rollup's files, and no other
+      ch("ALTER TABLE pddl_two DROP PROJECTION p2")
+      assert(readRoots(byKey("pddl_two", "d")) == Seq(rollupDir("pddl_two", "p1")))
+      assert(!new java.io.File(rollupDir("pddl_two", "p2")).exists,
+        "the dropped projection's rollup dir is still in the warehouse")
+      assert(rows(byKey("pddl_two", "e")) == Seq("u 2 4", "v 3 11"))
+    }
+  }
+
+  test("mutations rebuild every projection of a table — no stale rollup answers") {
+    withTable("pddl_mut2") {
+      twoRollups("pddl_mut2")
+      assert(rows(byKey("pddl_mut2", "d")) == Seq("a 2 3", "b 3 12"))
+      ch("ALTER TABLE pddl_mut2 DELETE WHERE x = 5")
+      assert(rows(byKey("pddl_mut2", "d")) == Seq("a 2 3", "b 2 7"))
+      assert(rows(byKey("pddl_mut2", "e")) == Seq("u 2 4", "v 2 6"))
+      assert(readRoots(byKey("pddl_mut2", "d")) == Seq(rollupDir("pddl_mut2", "p1")))
+      assert(readRoots(byKey("pddl_mut2", "e")) == Seq(rollupDir("pddl_mut2", "p2")))
+    }
+  }
+
+  test("DROP PROJECTION of one sorted copy drops its own table and keeps the other") {
+    withTable("pddl_n2") {
+      ch("CREATE TABLE pddl_n2 (k1 Int64, k2 Int64, x Int64) ENGINE = MergeTree ORDER BY k1")
+      ch("INSERT INTO pddl_n2 VALUES (1, 10, 1), (2, 20, 2), (3, 10, 3)")
+      ch("ALTER TABLE pddl_n2 ADD PROJECTION p1 (SELECT * ORDER BY k1)")
+      ch("ALTER TABLE pddl_n2 ADD PROJECTION p2 (SELECT * ORDER BY k2)")
+      def plan(k: String) = spark.table("pddl_n2").groupBy(k).agg(sum("x"))
+        .queryExecution.optimizedPlan.toString
+      assert(plan("k1").contains("pddl_n2__proj_p1"))
+      assert(plan("k2").contains("pddl_n2__proj_p2"))
+      ch("ALTER TABLE pddl_n2 DROP PROJECTION p1")
+      assert(plan("k2").contains("pddl_n2__proj_p2"))
+      assert(!plan("k1").contains("__proj_"))
+      assert(!spark.catalog.tableExists("pddl_n2__proj_p1"))
+    }
+  }
+
   test("aggregate-projection DDL: GROUP BY answers from the rollup") {
     Tables.register(spark, sf)
     ClickHouseSql.sql(spark, """

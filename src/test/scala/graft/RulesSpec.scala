@@ -36,7 +36,7 @@ class RulesSpec extends SparkFunSuite {
       Tables.register(s, sf)
       assert(s.experimental.extraOptimizations == Rules.of(s), what)
       assert(Rules.of(s).map(_.getClass.getSimpleName) == Seq("CountRule",
-        "RewriteRule", "RewriteRule", "PruneRule"), what)
+        "RewriteRule", "PruneRule"), what)
       assert(s.experimental.extraStrategies == Rules.strategies, what)
       assert(Rules.strategies.map(_.getClass.getSimpleName) == Seq("OrderedCollect$"), what)
     } finally {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.SkipIndex
+import graft.plans.Layouts
 import org.apache.spark.sql.functions._
 
 /** Generic bloom skip index (ref MergeTreeIndexBloomFilter.cpp): pruning
@@ -22,6 +23,12 @@ class SkipIndexSpec extends SparkFunSuite {
     new java.io.File(d).deleteOnExit()
     d
   }
+
+  private def register(data: String, kind: String, dir: String, columns: String*): Unit =
+    Layouts.register(spark, Layouts.Skip(data, kind, dir, columns))
+
+  private def unregister(data: String, dir: String): Unit =
+    Layouts.unregister(spark, data, dir)
 
   private lazy val fixture: Unit = {
     val docs = Tables.load(spark, sf, "documents")
@@ -104,8 +111,7 @@ class SkipIndexSpec extends SparkFunSuite {
 
   test("transparent rule prunes the plan's file list and keeps answers exact") {
     fixture
-    graft.plans.SkipIndexPruning.register(spark, s"$base/data", s"$base/index",
-      Seq("source", "lang"))
+    register(s"$base/data", "bloom_filter", s"$base/auto", "source", "lang")
     try {
       val df = spark.read.parquet(s"$base/data")
         .filter(col("source") === "src3")
@@ -116,18 +122,17 @@ class SkipIndexSpec extends SparkFunSuite {
       }.sum
       assert(scannedFiles < 8, s"rule should prune: scanned $scannedFiles of 8")
       val viaRule = df.collect().map(_.getLong(0)).sorted
-      graft.plans.SkipIndexPruning.drop(s"$base/data")
+      unregister(s"$base/data", s"$base/auto")
       val full = spark.read.parquet(s"$base/data")
         .filter(col("source") === "src3")
         .select("doc_id").collect().map(_.getLong(0)).sorted
       assert(viaRule.toSeq == full.toSeq && full.nonEmpty)
-    } finally graft.plans.SkipIndexPruning.drop(s"$base/data")
+    } finally unregister(s"$base/data", s"$base/auto")
   }
 
   test("transparent rule leaves non-indexed predicates untouched") {
     fixture
-    graft.plans.SkipIndexPruning.register(spark, s"$base/data", s"$base/index",
-      Seq("source", "lang"))
+    register(s"$base/data", "bloom_filter", s"$base/auto", "source", "lang")
     try {
       val df = spark.read.parquet(s"$base/data")
         .filter(col("n_chars") > 100)  // not an indexed column
@@ -136,7 +141,7 @@ class SkipIndexSpec extends SparkFunSuite {
           s.relation.location.inputFiles.length
       }.sum
       assert(scannedFiles == 8, s"no probe → no pruning, got $scannedFiles")
-    } finally graft.plans.SkipIndexPruning.drop(s"$base/data")
+    } finally unregister(s"$base/data", s"$base/auto")
   }
 
   test("index DDL: ADD builds + registers, DROP unregisters and removes") {
@@ -174,9 +179,7 @@ class SkipIndexSpec extends SparkFunSuite {
     Tables.load(spark, sf, "documents")
       .repartitionByRange(6, col("doc_id"))
       .write.mode("overwrite").parquet(s"$mmBase/data")
-    SkipIndex.createMinMax(spark, s"$mmBase/data", s"$mmBase/mm", Seq("doc_id"))
-    graft.plans.SkipIndexPruning.register(spark, s"$mmBase/data", s"$mmBase/mm",
-      Seq("doc_id"), kind = "minmax")
+    register(s"$mmBase/data", "minmax", s"$mmBase/mm", "doc_id")
     try {
       val df = spark.read.parquet(s"$mmBase/data")
         .filter(col("doc_id").between(5, 20))
@@ -187,14 +190,13 @@ class SkipIndexSpec extends SparkFunSuite {
       }.sum
       assert(scanned < 6, s"BETWEEN should minmax-prune: scanned $scanned of 6")
       val viaRule = df.collect().map(_.getLong(0)).sorted
-      graft.plans.SkipIndexPruning.drop(s"$mmBase/data")
+      unregister(s"$mmBase/data", s"$mmBase/mm")
       val full = spark.read.parquet(s"$mmBase/data")
         .filter(col("doc_id").between(5, 20))
         .select("doc_id").collect().map(_.getLong(0)).sorted
       assert(viaRule.toSeq == full.toSeq && full.nonEmpty)
       // one-sided range prunes too
-      graft.plans.SkipIndexPruning.register(spark, s"$mmBase/data", s"$mmBase/mm",
-        Seq("doc_id"), kind = "minmax")
+      register(s"$mmBase/data", "minmax", s"$mmBase/mm", "doc_id")
       val oneSided = spark.read.parquet(s"$mmBase/data")
         .filter(col("doc_id") < 10)
       val scanned2 = oneSided.queryExecution.executedPlan.collect {
@@ -203,9 +205,9 @@ class SkipIndexSpec extends SparkFunSuite {
       }.sum
       assert(scanned2 < 6, s"doc_id < 10 should prune: $scanned2 of 6")
       assert(oneSided.count() ==
-        { graft.plans.SkipIndexPruning.drop(s"$mmBase/data")
+        { unregister(s"$mmBase/data", s"$mmBase/mm")
           spark.read.parquet(s"$mmBase/data").filter(col("doc_id") < 10).count() })
-    } finally graft.plans.SkipIndexPruning.drop(s"$mmBase/data")
+    } finally unregister(s"$mmBase/data", s"$mmBase/mm")
   }
 
   test("transparent minmax: LIKE 'prefix%' prunes on the string lane") {
@@ -213,9 +215,7 @@ class SkipIndexSpec extends SparkFunSuite {
     Tables.load(spark, sf, "documents")
       .repartitionByRange(8, col("source"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$pfxBase/data")
-    SkipIndex.createMinMax(spark, s"$pfxBase/data", s"$pfxBase/mm", Seq("source"))
-    graft.plans.SkipIndexPruning.register(spark, s"$pfxBase/data", s"$pfxBase/mm",
-      Seq("source"), kind = "minmax")
+    register(s"$pfxBase/data", "minmax", s"$pfxBase/mm", "source")
     try {
       // LIKE 'src1%' simplifies to StartsWith → [prefix, prefix+U+FFFF]
       val df = spark.read.parquet(s"$pfxBase/data")
@@ -226,11 +226,11 @@ class SkipIndexSpec extends SparkFunSuite {
       }.sum
       assert(scanned < 8, s"prefix should minmax-prune: scanned $scanned of 8")
       val viaRule = df.count()
-      graft.plans.SkipIndexPruning.drop(s"$pfxBase/data")
+      unregister(s"$pfxBase/data", s"$pfxBase/mm")
       val full = spark.read.parquet(s"$pfxBase/data")
         .filter(col("source").like("src1%")).count()
       assert(viaRule == full && full > 0)
-    } finally graft.plans.SkipIndexPruning.drop(s"$pfxBase/data")
+    } finally unregister(s"$pfxBase/data", s"$pfxBase/mm")
   }
 
   test("transparent ngrambf: LIKE/contains conjuncts prune files, answers exact") {
@@ -243,9 +243,8 @@ class SkipIndexSpec extends SparkFunSuite {
     }
     rows.toDF("id", "body").repartitionByRange(5, col("id"))
       .write.mode("overwrite").parquet(s"$ngBase/data")
-    SkipIndex.createNgram(spark, s"$ngBase/data", s"$ngBase/ng", "body", n = 3)
-    graft.plans.SkipIndexPruning.register(spark, s"$ngBase/data", s"$ngBase/ng",
-      Seq("body"), kind = "ngrambf_v1")
+    Layouts.register(spark, Layouts.Skip(s"$ngBase/data", "ngrambf_v1", s"$ngBase/ng",
+      Seq("body"), Some(3)))
     try {
       // LIKE '%needle%' simplifies to Contains by the time the rule runs
       val df = spark.read.parquet(s"$ngBase/data")
@@ -264,7 +263,7 @@ class SkipIndexSpec extends SparkFunSuite {
           s.relation.location.inputFiles.length
       }.sum
       assert(scannedL < 5 && viaLower.count() == 1)
-    } finally graft.plans.SkipIndexPruning.drop(s"$ngBase/data")
+    } finally unregister(s"$ngBase/data", s"$ngBase/ng")
   }
 
   test("bloom probes cast to the indexed column's type (no false negatives)") {
@@ -292,8 +291,7 @@ class SkipIndexSpec extends SparkFunSuite {
       .repartitionByRange(8, col("source"))
       .write.mode("overwrite").partitionBy("lang").parquet(s"$pBase/data")
     SkipIndex.create(spark, s"$pBase/data", s"$pBase/idx", Seq("source"))
-    graft.plans.SkipIndexPruning.register(spark, s"$pBase/data", s"$pBase/idx",
-      Seq("source"))
+    register(s"$pBase/data", "bloom_filter", s"$pBase/auto", "source")
     try {
       // round 8: the swap CARRIES the partition spec — the pruned scan
       // reads fewer files while the hive partition column still
@@ -309,7 +307,7 @@ class SkipIndexSpec extends SparkFunSuite {
         s"no file pruned on the partitioned layout: $ds")
       assert(viaRule.nonEmpty && viaRule.forall(_._2 != null),
         "partition values lost in the swapped location")
-      graft.plans.SkipIndexPruning.drop(s"$pBase/data")
+      unregister(s"$pBase/data", s"$pBase/auto")
       val full = spark.read.parquet(s"$pBase/data")
         .filter(col("source") === "src3")
         .select("doc_id", "lang").collect()
@@ -318,12 +316,11 @@ class SkipIndexSpec extends SparkFunSuite {
       // partition pruning COMPOSES with the file swap: a lang predicate
       // on the pruned relation still prunes partitions (plan shows the
       // partition filter; answers stay exact)
-      graft.plans.SkipIndexPruning.register(spark, s"$pBase/data",
-        s"$pBase/idx", Seq("source"))
+      register(s"$pBase/data", "bloom_filter", s"$pBase/auto", "source")
       val both = spark.read.parquet(s"$pBase/data")
         .filter(col("source") === "src3" && col("lang") === "en")
       val bothRows = both.select("doc_id").collect().map(_.getLong(0)).sorted
-      graft.plans.SkipIndexPruning.drop(s"$pBase/data")
+      unregister(s"$pBase/data", s"$pBase/auto")
       val bothFull = spark.read.parquet(s"$pBase/data")
         .filter(col("source") === "src3" && col("lang") === "en")
         .select("doc_id").collect().map(_.getLong(0)).sorted
@@ -335,7 +332,7 @@ class SkipIndexSpec extends SparkFunSuite {
       assert(explicit.columns.contains("lang"))
       assert(explicit.select("lang").collect().forall(_.getString(0) != null))
       assert(explicit.count() == full.length)
-    } finally graft.plans.SkipIndexPruning.drop(s"$pBase/data")
+    } finally unregister(s"$pBase/data", s"$pBase/auto")
   }
 
   test("mutations rebuild registered indexes; CLEAR/MATERIALIZE semantics") {

@@ -26,6 +26,15 @@ abstract class SparkFunSuite extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
 
+  /** The root paths of the file relations `df`'s optimized plan reads. */
+  def readRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation
+    }.collect {
+      case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        fs.location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+
   /** Spark jobs that `body` starts on this thread. Jobs are tagged with a
     * local property; a marker job submitted after `body` comes through the
     * listener bus after every earlier event, so the count is complete. */

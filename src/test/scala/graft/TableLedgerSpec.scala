@@ -161,6 +161,22 @@ class TableLedgerSpec extends SparkFunSuite {
     }
   }
 
+  test("a DETACH of a name whose detached table is parked fails and deletes nothing") {
+    withTables("tl_dd") {
+      val create = "CREATE TABLE tl_dd (v Int64) ENGINE = MergeTree ORDER BY v"
+      ch(create)
+      ch("INSERT INTO tl_dd VALUES (1)")
+      ch("DETACH TABLE tl_dd")
+      ch(create)
+      ch("INSERT INTO tl_dd VALUES (2)")
+      intercept[IllegalArgumentException](ch("DETACH TABLE tl_dd"))
+      assert(rows("SELECT v FROM tl_dd") == Seq("2"))
+      ch("DROP TABLE tl_dd")
+      ch("ATTACH TABLE tl_dd")
+      assert(rows("SELECT v FROM tl_dd") == Seq("1"))
+    }
+  }
+
   test("DETACH → ATTACH preserves managed/external identity") {
     withTables("tl_ident", "tl_ident_ext") {
       ch("CREATE MATERIALIZED VIEW tl_ident AS SELECT 7 AS a")
