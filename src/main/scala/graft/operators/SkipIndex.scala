@@ -2,271 +2,96 @@ package graft.operators
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.FileAdmission
+import graft.plans.FileAdmission.{Eq, Pred, Range, Text}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, Expression, GreaterThanOrEqual, In, LessThanOrEqual, Literal, Lower, UnsafeProjection, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ExprColumn
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, MetadataBuilder, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Generic per-file bloom skip index for equality predicates — the analog
-  * of the reference's `INDEX x TYPE bloom_filter GRANULARITY n` skip index
-  * (src/Storages/MergeTree/MergeTreeIndexBloomFilter.cpp); the minmax
-  * member of the family is parquet row-group statistics (free), the text
-  * member is [[TextIndex]].
+/** Per-file skip indexes, the analog of the reference's data-skipping
+  * indexes (src/Storages/MergeTree/MergeTreeIndices.h) at file granularity:
+  *  - `bloom_filter`: a bloom of each file's values per column, on the
+  *    xxhash64(seed=42) of the column's own type
+  *    (MergeTreeIndexBloomFilter.cpp);
+  *  - `minmax`: each file's min and max per column, in the column's type
+  *    (MergeTreeIndexMinMax.cpp);
+  *  - `set`: each file's distinct values per column, in the column's type,
+  *    or null past the cap, which admits always (MergeTreeIndexSet.cpp);
+  *  - `ngrambf_v1`: a bloom of the n-grams of the lowercased text of one
+  *    column (MergeTreeIndexBloomFilterText.cpp).
   *
-  * Build: ONE distributed pass over the data dir — rows group by
-  * `_metadata.file_path`, one [[BloomFilterAggregate]] per indexed column
-  * (map-side partial blooms, OR-merged) — and the index lands as a tiny
-  * parquet of (file, column, n_items, bloom) rows. Probe: the index is
-  * driver-resident (|files| × |columns| rows), `mightContainLong` on the
-  * same xxhash64(seed=42) lane the build used, then ONLY matching files
-  * are scanned, with the exact predicate re-applied (bloom false
-  * positives re-checked; no false negatives). Like the reference, the
-  * index only prunes when the layout clusters the column — write with
-  * `repartitionByRange`/`partitionBy` on the indexed key.
-  */
+  * Build: one distributed pass over the data dir, rows grouped by
+  * `_metadata.file_path`; the index lands as a parquet of one row per data
+  * file, `__file` and then one field per indexed column. Probe: [[load]]
+  * reads that parquet in the planning JVM with no Spark job, and an [[Index]]
+  * judges each leaf of a [[FileAdmission]] filter for each file. The
+  * transparent path ([[graft.plans.SkipIndexPruning]]) and the explicit
+  * `matching*` and `scan*` calls here both go through that one judgement;
+  * the scans re-apply the exact predicate, so index false positives
+  * never change answers. Like the reference, an index only prunes when
+  * the layout clusters the column. */
 object SkipIndex {
 
-  private def hashOf(value: Any): Long = {
-    val lit = Literal(value)
-    XxHash64(Seq(lit), 42L).eval(InternalRow.empty).asInstanceOf[Long]
+  private def hash(l: Literal): Long =
+    XxHash64(Seq(l), 42L).eval(InternalRow.empty).asInstanceOf[Long]
+
+  private def bloomOf(e: Column, items: Long): Column =
+    ExprColumn.column(new BloomFilterAggregate(XxHash64(Seq(ExprColumn.expression(e)), 42L),
+      Literal(items), Literal(items * 8)).toAggregateExpression())
+
+  /** Writes one row per file of `dataDir`: `__file` and `agg(c)` per
+    * column `c`, named `c`. */
+  private def build(spark: SparkSession, dataDir: String, indexDir: String,
+      columns: Seq[String])(agg: (DataFrame, String) => Column): Unit = {
+    val data = spark.read.parquet(dataDir)
+    val aggs = columns.map(c => agg(data, c))
+    data.groupBy(col("_metadata.file_path").as("__file")).agg(aggs.head, aggs.tail: _*)
+      .coalesce(1).write.mode("overwrite").parquet(indexDir)
   }
 
-  /** Hash of `value` cast to the indexed column's own type — the build
-    * side hashes XxHash64 over the COLUMN type, so an Int probe against a
-    * Long column (or a date string against a DateType column) must land
-    * on the same lane or every file is silently excluded. */
-  private def hashOfTyped(value: Any, dt: org.apache.spark.sql.types.DataType): Long = {
-    val lit = Literal(value)
-    val typed: org.apache.spark.sql.catalyst.expressions.Expression =
-      if (lit.dataType == dt) lit
-      else org.apache.spark.sql.catalyst.expressions.Cast(lit, dt, Some("UTC"))
-    XxHash64(Seq(typed), 42L).eval(InternalRow.empty).asInstanceOf[Long]
-  }
-
-  /** The indexed column's stored type, when the index recorded it. */
-  private def indexedType(spark: SparkSession, indexDir: String,
-      column: String): Option[org.apache.spark.sql.types.DataType] = {
-    val df = spark.read.parquet(indexDir)
-    if (!df.columns.contains("dtype")) None
-    else df.filter(col("column") === column).select("dtype")
-      .limit(1).collect().headOption
-      .map(r => org.apache.spark.sql.types.DataType.fromDDL(r.getString(0)))
-  }
-
-  /** Hash lane for an already-typed literal (internal representation) —
-    * the path the transparent pruning rule uses. */
-  private[graft] def hashOfLiteral(lit: Literal): Long =
-    XxHash64(Seq(lit), 42L).eval(InternalRow.empty).asInstanceOf[Long]
-
-  /** Files whose bloom for `column` might contain ANY of the given
-    * pre-computed hashes. */
-  private[graft] def matchingFilesByHash(spark: SparkSession, indexDir: String,
-      column: String, hashes: Seq[Long]): Seq[String] =
-    spark.read.parquet(indexDir)
-      .filter(col("column") === column)
-      .select("file", "bloom").collect()
-      .filter { r =>
-        val bf = BloomFilter.readFrom(new ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        hashes.exists(bf.mightContainLong)
-      }
-      .map(_.getString(0)).toSeq
-
-  /** Index `columns` of every parquet part file under `dataDir`. Each row
-    * records the column's data type so probes can cast to the build lane
-    * ([[hashOfTyped]]). */
+  /** Bloom index of `columns`; each field records its column's type. */
   def create(spark: SparkSession, dataDir: String, indexDir: String,
-             columns: Seq[String], expectedItemsPerFile: Long = 100000L): Unit = {
-    val src = spark.read.parquet(dataDir)
-    val types = columns.map(c => c -> src.schema(c).dataType.sql).toMap
-    val data = src
-      .select(col("_metadata.file_path").as("__file") +: columns.map(col): _*)
-    val aggs = columns.map { c =>
-      val agg = new BloomFilterAggregate(
-        XxHash64(Seq(ExprColumn.expression(col(c))), 42L),
-        Literal(expectedItemsPerFile), Literal(expectedItemsPerFile * 8))
-        .toAggregateExpression()
-      ExprColumn.column(agg).as(s"__bloom_$c")
-    } :+ count(lit(1)).as("__n")
-    val perFile = data.groupBy("__file").agg(aggs.head, aggs.tail: _*)
-    val long = columns.map { c =>
-      perFile.select(col("__file").as("file"), lit(c).as("column"),
-        lit(types(c)).as("dtype"),
-        col("__n").as("n_items"), col(s"__bloom_$c").as("bloom"))
-    }.reduce(_ unionAll _)
-    long.coalesce(1).write.mode("overwrite").parquet(indexDir)
-  }
-
-  /** Files whose bloom for `column` might contain ANY of `values` —
-    * probes are cast to the indexed column's recorded type first. */
-  def matchingFiles(spark: SparkSession, indexDir: String,
-                    column: String, values: Seq[Any]): Seq[String] = {
-    val dt = indexedType(spark, indexDir, column)
-    val hashes = dt match {
-      case Some(t) => values.map(hashOfTyped(_, t))
-      case None => values.map(hashOf)
+             columns: Seq[String], expectedItemsPerFile: Long = 100000L): Unit =
+    build(spark, dataDir, indexDir, columns) { (data, c) =>
+      bloomOf(col(c), expectedItemsPerFile).as(c,
+        new MetadataBuilder().putString("type", data.schema(c).dataType.sql).build())
     }
-    spark.read.parquet(indexDir)
-      .filter(col("column") === column)
-      .select("file", "bloom").collect()
-      .filter { r =>
-        val bf = BloomFilter.readFrom(new ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        hashes.exists(bf.mightContainLong)
-      }
-      .map(_.getString(0)).toSeq
-  }
 
-  /** Pruned scan: only bloom-matching files are read; the exact equality
-    * predicate re-checks, so the result equals the full scan. Returns an
-    * empty (correctly-typed) frame when no file can match. */
-  def scan(spark: SparkSession, dataDir: String, indexDir: String,
-           column: String, values: Seq[Any]): DataFrame = {
-    val files = matchingFiles(spark, indexDir, column, values)
-    val full = spark.read.parquet(dataDir)
-    val pruned =
-      if (files.isEmpty) full.limit(0)
-      else spark.read.option("basePath", dataDir)
-        .schema(full.schema).parquet(files: _*)
-    pruned.filter(col(column).isin(values: _*))
-  }
-
-  def drop(spark: SparkSession, indexDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  // ------------------------------------------------------ minmax variant
-
-  /** Per-file min/max index (the reference's `INDEX x TYPE minmax` —
-    * MergeTreeIndexMinMax.cpp). Parquet already prunes ROW GROUPS from
-    * footer stats, but at 100 TB the win is never LISTING the file into a
-    * task at all: the driver consults |files| rows instead of opening
-    * footers. */
+  /** Min/max index: a `struct<min, max>` per column, in its type. */
   def createMinMax(spark: SparkSession, dataDir: String, indexDir: String,
-                   columns: Seq[String]): Unit = {
-    val data = spark.read.parquet(dataDir)
-      .select(col("_metadata.file_path").as("__file") +: columns.map(col): _*)
-    val aggs = columns.flatMap { c =>
-      // try_cast on the double lane: string columns (prefix pruning rides
-      // the string lane) would throw under ANSI on a plain cast
-      Seq(min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c"),
-        expr(s"try_cast(min($c) as double)").as(s"__mnd_$c"),
-        expr(s"try_cast(max($c) as double)").as(s"__mxd_$c"))
+                   columns: Seq[String]): Unit =
+    build(spark, dataDir, indexDir, columns) { (_, c) =>
+      struct(min(col(c)).as("min"), max(col(c)).as("max")).as(c)
     }
-    val perFile = data.groupBy("__file").agg(aggs.head, aggs.tail: _*)
-    columns.map { c =>
-      perFile.select(col("__file").as("file"), lit(c).as("column"),
-        col(s"__mn_$c").as("min_s"), col(s"__mx_$c").as("max_s"),
-        col(s"__mnd_$c").as("min_d"), col(s"__mxd_$c").as("max_d"))
-    }.reduce(_ unionAll _)
-      .coalesce(1).write.mode("overwrite").parquet(indexDir)
-  }
 
-  /** Files whose [min,max] for `column` overlaps [lo,hi]. Numeric and
-    * timestamp probes compare on the double lane, everything else
-    * lexicographically on the string lane (valid for the corpus's string
-    * categories). */
-  def matchingFilesRange(spark: SparkSession, indexDir: String, column: String,
-                         lo: Any, hi: Any): Seq[String] =
-    matchingFilesBound(spark, indexDir, column, Some(lo), Some(hi))
-
-  /** One-sided/two-sided minmax probe: files whose [min,max] can hold a
-    * value satisfying `x >= lo` and/or `x <= hi` — the transparent rule's
-    * rendering of >, >=, <, <=, =, BETWEEN conjuncts. */
-  def matchingFilesBound(spark: SparkSession, indexDir: String, column: String,
-                         lo: Option[Any], hi: Option[Any]): Seq[String] = {
-    def dlane(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case t: java.sql.Timestamp => Some(t.getTime / 1000.0)
-      case t: java.time.Instant => Some(t.toEpochMilli / 1000.0)
-      case _ => None
-    }
-    val idx = spark.read.parquet(indexDir).filter(col("column") === column)
-    val preds = Seq(
-      lo.map(v => dlane(v).map(d => col("max_d") >= d)
-        .getOrElse(col("max_s") >= v.toString)),
-      hi.map(v => dlane(v).map(d => col("min_d") <= d)
-        .getOrElse(col("min_s") <= v.toString))).flatten
-    idx.filter(preds.reduceOption(_ && _).getOrElse(lit(true)))
-      .select("file").collect().map(_.getString(0)).toSeq
-  }
-
-  /** Range scan over the minmax-pruned file list, exact predicate
-    * re-applied. */
-  def scanRange(spark: SparkSession, dataDir: String, indexDir: String,
-                column: String, lo: Any, hi: Any): DataFrame = {
-    val files = matchingFilesRange(spark, indexDir, column, lo, hi)
-    val full = spark.read.parquet(dataDir)
-    val pruned =
-      if (files.isEmpty) full.limit(0)
-      else spark.read.option("basePath", dataDir)
-        .schema(full.schema).parquet(files: _*)
-    pruned.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
-
-  // --------------------------------------------------------- set variant
-
-  /** Per-file exact distinct-value set, capped — the reference's
-    * `INDEX x TYPE set(N)` (MergeTreeIndexSet.cpp): when a file's distinct
-    * count for the column stays ≤ N the exact set is stored (membership
-    * pruning with NO false positives); past the cap the file stores an
-    * overflow marker and always matches, exactly the reference's
-    * max_rows=N behavior. Values ride as strings for schema uniformity. */
+  /** Set index: each file's distinct values per column while there are at
+    * most `maxValues` of them, else null. */
   def createSet(spark: SparkSession, dataDir: String, indexDir: String,
-                columns: Seq[String], maxValues: Int = 100): Unit = {
-    val data = spark.read.parquet(dataDir)
-      .select(col("_metadata.file_path").as("__file") +: columns.map(col): _*)
-    val aggs = columns.map { c =>
-      collect_set(col(c).cast("string")).as(s"__set_$c")
+                columns: Seq[String], maxValues: Int = 100): Unit =
+    build(spark, dataDir, indexDir, columns) { (_, c) =>
+      val values = collect_set(col(c))
+      when(size(values) <= maxValues, values).as(c)
     }
-    val perFile = data.groupBy("__file").agg(aggs.head, aggs.tail: _*)
-    columns.map { c =>
-      perFile.select(col("__file").as("file"), lit(c).as("column"),
-        when(size(col(s"__set_$c")) <= maxValues, col(s"__set_$c"))
-          .otherwise(lit(null)).as("values"))
-    }.reduce(_ unionAll _)
-      .coalesce(1).write.mode("overwrite").parquet(indexDir)
-  }
 
-  /** Files whose stored set contains ANY of `values` (overflowed files
-    * always match). */
-  def matchingFilesSet(spark: SparkSession, indexDir: String,
-                       column: String, values: Seq[Any]): Seq[String] = {
-    val probe = values.map(String.valueOf)
-    spark.read.parquet(indexDir)
-      .filter(col("column") === column)
-      .filter(col("values").isNull ||
-        arrays_overlap(col("values"), lit(probe.toArray)))
-      .select("file").collect().map(_.getString(0)).toSeq
-  }
-
-  /** Membership scan over the set-index-pruned file list. */
-  def scanSet(spark: SparkSession, dataDir: String, indexDir: String,
-              column: String, values: Seq[Any]): DataFrame = {
-    val files = matchingFilesSet(spark, indexDir, column, values)
-    val full = spark.read.parquet(dataDir)
-    val pruned =
-      if (files.isEmpty) full.limit(0)
-      else spark.read.option("basePath", dataDir)
-        .schema(full.schema).parquet(files: _*)
-    pruned.filter(col(column).isin(values: _*))
-  }
-
-  // ----------------------------------------------------- ngrambf variant
-
-  /** Per-file n-gram bloom for substring/LIKE pruning — the reference's
-    * `ngrambf_v1` text skip index (MergeTreeIndexBloomFilterText.cpp).
-    * Build explodes each row's lowercased text into distinct n-grams (one
-    * distributed pass, the same work the reference spends per granule);
-    * a needle can only match a file whose bloom holds EVERY gram of the
-    * needle. */
+  /** N-gram bloom of `textColumn`: every distinct n-gram of each row's
+    * lowercased text; the field records `n`. */
   def createNgram(spark: SparkSession, dataDir: String, indexDir: String,
                   textColumn: String, n: Int = 3,
-                  expectedItemsPerFile: Long = 200000L): Unit = {
-    val grams = spark.read.parquet(dataDir)
+                  expectedItemsPerFile: Long = 200000L): Unit =
+    spark.read.parquet(dataDir)
       .select(col("_metadata.file_path").as("__file"), lower(col(textColumn)).as("__t"))
       .select(col("__file"), explode(expr(
         // sequence(1, 0) is DESCENDING in Spark — guard short rows explicitly
@@ -274,44 +99,192 @@ object SkipIndex {
           s"i -> substring(__t, i, $n)) ELSE array() END"))
         .as("gram"))
       .distinct()
-    val agg = new BloomFilterAggregate(
-      XxHash64(Seq(ExprColumn.expression(col("gram"))), 42L),
-      Literal(expectedItemsPerFile), Literal(expectedItemsPerFile * 8))
-      .toAggregateExpression()
-    grams.groupBy("__file")
-      .agg(ExprColumn.column(agg).as("bloom"), count(lit(1)).as("n_items"))
-      .select(col("__file").as("file"), lit(n).as("n"), col("n_items"), col("bloom"))
+      .groupBy("__file")
+      .agg(bloomOf(col("gram"), expectedItemsPerFile).as(textColumn,
+        new MetadataBuilder().putLong("n", n).build()))
       .coalesce(1).write.mode("overwrite").parquet(indexDir)
+
+  def drop(spark: SparkSession, indexDir: String): Unit = {
+    val p = new Path(indexDir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  /** Files that can contain `needle` as a substring of the indexed text
-    * (every n-gram of the lowercased needle in the file's bloom). Needles
-    * shorter than n admit every file — same degradation as the reference. */
-  def matchingFilesLike(spark: SparkSession, indexDir: String,
-                        needle: String): Seq[String] = {
-    val rows = spark.read.parquet(indexDir)
-      .select("file", "n", "bloom").collect()
-    rows.filter { r =>
-      val n = r.getAs[Int]("n")
-      val low = needle.toLowerCase
-      if (low.length < n) true
-      else {
-        val bf = BloomFilter.readFrom(new ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        (0 to low.length - n).forall(i => bf.mightContainLong(hashOf(low.substring(i, i + n))))
+  /** A built index of `kind`, read in the planning JVM. It judges one leaf of a
+    * [[FileAdmission]] filter for one data file; a leaf it cannot judge,
+    * or a file it does not list, admits. */
+  final class Index private[SkipIndex] (kind: String, schema: StructType,
+      rows: Seq[InternalRow]) {
+
+    /** The data files, as the build recorded them. */
+    val files: Seq[String] = rows.map(_.getUTF8String(0).toString)
+
+    /** The indexed columns. */
+    def columns: Seq[String] = schema.fieldNames.toSeq.drop(1)
+
+    /** Each indexed column's field and own type, by lowercased name. */
+    private val fields: Map[String, (Int, DataType)] =
+      schema.fields.zipWithIndex.drop(1).map { case (f, i) =>
+        f.name.toLowerCase -> (i, f.dataType match {
+          case ArrayType(t, _) => t
+          case s: StructType => s.head.dataType
+          case _ if f.metadata.contains("type") => DataType.fromDDL(f.metadata.getString("type"))
+          case _ => StringType
+        })
+      }.toMap
+
+    def typeOf(c: String): Option[DataType] = fields.get(c.toLowerCase).map(_._2)
+
+    /** Each file's row by path, with its blooms decoded once. */
+    private val byPath = files.zip(rows).map { case (f, r) =>
+      val blooms = fields.values.collect {
+        case (i, _) if schema(i).dataType == BinaryType && !r.isNullAt(i) =>
+          i -> BloomFilter.readFrom(new ByteArrayInputStream(r.getBinary(i)))
+      }.toMap
+      SparkPath.fromUrlString(f).toPath.toUri.getPath -> (r, blooms)
+    }.toMap
+
+    def admits(file: Path, p: Pred): Boolean =
+      byPath.get(file.toUri.getPath).forall { case (r, blooms) => admits(r, blooms, p) }
+
+    private def admits(r: InternalRow, blooms: Map[Int, BloomFilter], p: Pred): Boolean = {
+      val (c, vs) = p match {
+        case Eq(c, vs) => (c, vs)
+        case Range(c, v, _, _) => (c, Seq(v))
+        case Text(c, needle, _, _) => (c, Seq(Literal(needle)))
+        case _ => return true
       }
-    }.map(_.getString(0)).toSeq
+      fields.get(c.toLowerCase) match {
+        case Some((i, t)) if vs.forall(_.dataType == t) =>
+          // a null entry holds no non-null value, except set's overflow
+          if (r.isNullAt(i)) kind == "set" else judge(r, blooms, i, t, p)
+        case _ => true
+      }
+    }
+
+    private def judge(r: InternalRow, blooms: Map[Int, BloomFilter], i: Int, t: DataType,
+        p: Pred): Boolean = {
+      lazy val ord = TypeUtils.getInterpretedOrdering(t)
+      (kind, p) match {
+        case ("bloom_filter", Eq(_, vs)) => vs.exists(v => blooms(i).mightContainLong(hash(v)))
+        case ("set", Eq(_, vs)) =>
+          val set = r.getArray(i)
+          val values = (0 until set.numElements()).filterNot(set.isNullAt).map(set.get(_, t))
+          vs.exists(v => values.exists(ord.equiv(_, v.value)))
+        case ("minmax", _) =>
+          val mm = r.getStruct(i, 2)
+          if (mm.isNullAt(0)) false
+          else {
+            val (lo, hi) = (mm.get(0, t), mm.get(1, t))
+            p match {
+              case Eq(_, vs) => vs.exists(v => ord.lteq(lo, v.value) && ord.gteq(hi, v.value))
+              case Range(_, v, true, strict) => if (strict) ord.gt(hi, v.value) else ord.gteq(hi, v.value)
+              case Range(_, v, false, strict) => if (strict) ord.lt(lo, v.value) else ord.lteq(lo, v.value)
+              // the strings carrying a prefix are the ones from the prefix
+              // up to the first string above it that does not carry it
+              case Text(_, pre, true, false) =>
+                val s = UTF8String.fromString(pre)
+                ord.gteq(hi, s) && (ord.lteq(lo, s) || lo.asInstanceOf[UTF8String].startsWith(s))
+              case _ => true
+            }
+          }
+        // the grams are of lowercased text, so a needle's lowercase grams
+        // admit a superset of its case-sensitive matches
+        case ("ngrambf_v1", Text(_, needle, _, _)) =>
+          val n = schema(i).metadata.getLong("n").toInt
+          val low = needle.toLowerCase
+          low.length < n || (0 to low.length - n).forall(j =>
+            blooms(i).mightContainLong(hash(Literal(low.substring(j, j + n)))))
+        case _ => true
+      }
+    }
   }
 
-  /** Case-insensitive substring scan via the ngram index (the pruned
-    * rendering of `LIKE '%needle%'` / hasTokenCaseInsensitive). */
-  def scanLike(spark: SparkSession, dataDir: String, indexDir: String,
-               textColumn: String, needle: String): DataFrame = {
-    val files = matchingFilesLike(spark, indexDir, needle)
-    val full = spark.read.parquet(dataDir)
-    val pruned =
-      if (files.isEmpty) full.limit(0)
-      else spark.read.option("basePath", dataDir)
-        .schema(full.schema).parquet(files: _*)
-    pruned.filter(lower(col(textColumn)).contains(needle.toLowerCase))
+  /** Reads the index of `kind` at `dir` in this JVM, with no Spark job:
+    * it holds one row per data file. */
+  def load(spark: SparkSession, kind: String, dir: String): Index = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(dir)
+    val parts: Seq[FileStatus] = path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    parts.headOption.fold(new Index(kind, new StructType(), Nil)) { first =>
+      val footer = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+      val schema = try DataType.fromJson(footer.getFooter.getFileMetaData
+        .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+      finally footer.close()
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+      val unsafe = UnsafeProjection.create(schema)
+      new Index(kind, schema, parts.flatMap { st =>
+        read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0, st.getLen))
+          .map(unsafe(_).copy()).toSeq
+      })
+    }
   }
+
+  /** The files of the index at `indexDir` that may hold a row where `pred`
+    * of `column` holds. */
+  private def admitted(spark: SparkSession, kind: String, indexDir: String,
+      column: Option[String])(pred: AttributeReference => Expression): Seq[String] = {
+    val idx = load(spark, kind, indexDir)
+    val c = column.orElse(idx.columns.headOption).getOrElse("")
+    val p = FileAdmission.normalize(pred(AttributeReference(c, idx.typeOf(c).getOrElse(StringType))()))
+    idx.files.filter(f => FileAdmission.admits(p,
+      idx.admits(SparkPath.fromUrlString(f).toPath, _)))
+  }
+
+  private def isIn(values: Seq[Any])(a: AttributeReference): Expression =
+    In(a, values.map(Literal(_)))
+
+  /** `files` of `dataDir` read as `dataDir` is, or none. */
+  private def readFiles(spark: SparkSession, dataDir: String, files: Seq[String]): DataFrame = {
+    val full = spark.read.parquet(dataDir)
+    if (files.isEmpty) full.limit(0)
+    else spark.read.option("basePath", dataDir).schema(full.schema).parquet(files: _*)
+  }
+
+  /** Files whose bloom for `column` may hold any of `values`. */
+  def matchingFiles(spark: SparkSession, indexDir: String,
+                    column: String, values: Seq[Any]): Seq[String] =
+    admitted(spark, "bloom_filter", indexDir, Some(column))(isIn(values))
+
+  /** The rows of `dataDir` whose `column` is one of `values`, read from
+    * the files the bloom index admits. */
+  def scan(spark: SparkSession, dataDir: String, indexDir: String,
+           column: String, values: Seq[Any]): DataFrame =
+    readFiles(spark, dataDir, matchingFiles(spark, indexDir, column, values))
+      .filter(col(column).isin(values: _*))
+
+  /** Files whose [min, max] for `column` meets [lo, hi]. */
+  def matchingFilesRange(spark: SparkSession, indexDir: String, column: String,
+                         lo: Any, hi: Any): Seq[String] =
+    admitted(spark, "minmax", indexDir, Some(column))(a =>
+      And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi))))
+
+  def scanRange(spark: SparkSession, dataDir: String, indexDir: String,
+                column: String, lo: Any, hi: Any): DataFrame =
+    readFiles(spark, dataDir, matchingFilesRange(spark, indexDir, column, lo, hi))
+      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+
+  /** Files whose set for `column` holds any of `values`, and the files
+    * past the cap. */
+  def matchingFilesSet(spark: SparkSession, indexDir: String,
+                       column: String, values: Seq[Any]): Seq[String] =
+    admitted(spark, "set", indexDir, Some(column))(isIn(values))
+
+  def scanSet(spark: SparkSession, dataDir: String, indexDir: String,
+              column: String, values: Seq[Any]): DataFrame =
+    readFiles(spark, dataDir, matchingFilesSet(spark, indexDir, column, values))
+      .filter(col(column).isin(values: _*))
+
+  /** Files whose text may contain `needle`, in any case. Needles shorter
+    * than n admit every file, as in the reference. */
+  def matchingFilesLike(spark: SparkSession, indexDir: String,
+                        needle: String): Seq[String] =
+    admitted(spark, "ngrambf_v1", indexDir, None)(a => Contains(Lower(a), Literal(needle)))
+
+  /** Case-insensitive substring scan (`LIKE '%needle%'` on lower(text)). */
+  def scanLike(spark: SparkSession, dataDir: String, indexDir: String,
+               textColumn: String, needle: String): DataFrame =
+    readFiles(spark, dataDir, matchingFilesLike(spark, indexDir, needle))
+      .filter(lower(col(textColumn)).contains(needle.toLowerCase))
 }

@@ -15,7 +15,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * among all the projections and skip indexes a table declares
   * (optimizeUseAggregateProjections, optimizeUseNormalProjections,
   * MergeTreeDataSelectExecutor::filterMarksUsingIndex); here
-  * [[Projections]] and [[SkipIndexPruning]] read this one map.
+  * [[Projections]] and [[SkipIndexPruning]] read this one map. A catalog
+  * table's layouts are registered under its location
+  * (`ClickHouseSql.tableLocation`), the key [[scanOf]] reads off the
+  * relation's catalog table.
   *
   * A layout is keyed by (base path, `built`): its dir, or its catalog
   * table. `register` builds it from the base path's current files and
@@ -108,8 +111,10 @@ object Layouts {
     dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
   }
 
-  /** A base scan: a file relation with one root path, under column-pruning
-    * Projects, and the layouts registered at that root. */
+  /** A base scan: a file relation under column-pruning Projects, its key
+    * and the layouts registered at that key. A catalog table's key is its
+    * location, which partition pruning leaves in place (it replaces only
+    * the file index); a path read's key is its one root path. */
   final case class Scan(relation: LogicalRelation, files: HadoopFsRelation,
       path: String, layouts: List[Layout])
 
@@ -118,12 +123,11 @@ object Layouts {
         if projectList.forall(_.isInstanceOf[AttributeReference]) =>
       scanOf(child)
     case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths match {
-        case Seq(root) =>
-          val path = canon(root.toString)
-          Option(registry.get(path)).map(Scan(lr, fs, path, _))
-        case _ => None
-      }
+      case fs: HadoopFsRelation =>
+        lr.catalogTable.map(_.location.toString)
+          .orElse(Some(fs.location.rootPaths).collect { case Seq(root) => root.toString })
+          .map(canon)
+          .flatMap(path => Option(registry.get(path)).map(Scan(lr, fs, path, _)))
       case _ => None
     }
     case _ => None

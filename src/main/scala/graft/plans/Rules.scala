@@ -18,13 +18,11 @@ import org.apache.spark.sql.execution.SparkStrategy
   *     re-aggregates the smallest rollup that fits, else reads a sorted
   *     copy its grouping covers. Choosing among the path's rollups and
   *     copies happens inside the one rule, so no order between rules
-  *     decides it. It runs before the file pruning: once the scan reads
-  *     a pruned file list, its root is no longer the registered base path
-  *     and the rollup, the smallest read, is lost.
-  *  3. [[SkipIndexPruning]]: a Filter over a base scan reads only the
-  *     files the skip indexes admit. It matches Filters, which the
-  *     projection rule only consumes from above an Aggregate, so running
-  *     it after changes no plan that rule can take.
+  *     decides it.
+  *  3. [[SkipIndexPruning]]: a Filter over a base scan lists its files
+  *     through a skipping file index, which drops the files the skip
+  *     indexes reject. The wrapped scan keeps its roots and catalog table,
+  *     so the projection rule still matches it in a later iteration.
   * Both layout rules read one registry, [[Layouts]], and return at once
   * while it is empty, so a session without projections or skip indexes
   * pays nothing for them. The one strategy, [[OrderedCollect]], runs

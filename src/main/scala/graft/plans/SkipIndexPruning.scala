@@ -3,245 +3,99 @@ package graft.plans
 import graft.operators.SkipIndex
 import graft.plans.Layouts.Skip
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, EndsWith, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Lower, StartsWith}
+import org.apache.spark.sql.catalyst.expressions.{DynamicPruning, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.{FileIndex, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.types.StructType
 
-/** TRANSPARENT skip-index pruning — the way the reference actually applies
-  * its skip indexes: the user writes a plain SELECT and
-  * `MergeTreeDataSelectExecutor::filterMarksUsingIndex` drops granules
-  * before the scan (src/Storages/MergeTree/MergeTreeDataSelectExecutor
-  * .cpp). The [[SkipIndex]] operator API is the explicit form; this Rule
-  * is the implicit one, and it now serves the WHOLE index family the way
-  * the reference does:
-  *   - bloom_filter → equality / IN conjuncts (hash probes);
-  *   - minmax      → <, <=, >, >=, =, BETWEEN conjuncts (bound probes);
-  *   - set(N)      → equality / IN conjuncts (exact membership);
-  *   - ngrambf_v1  → LIKE '%x%' / contains / startsWith / endsWith
-  *                   (every n-gram of the needle must be in the file's
-  *                   bloom; Catalyst has already simplified LIKE into
-  *                   Contains/StartsWith/EndsWith by the time
-  *                   extraOptimizations run).
-  * The Filter itself always stays, so index false positives re-check and
-  * answers never change — pruning is strictly an I/O reduction.
-  *
-  * Mechanics: an extraOptimizations rule matches Filter-over-base-scan
-  * plans whose relation roots at a path with [[Layouts.Skip]] layouts
-  * registered, turns supported conjuncts into per-index file sets
-  * (driver-resident index reads, |files| rows each), intersects them, and
-  * swaps the relation's location for an [[InMemoryFileIndex]] over the
-  * surviving files. After the swap the root paths no longer match the
-  * registry, so the rule cannot re-fire on its own output.
-  * Hive-partitioned relations keep their partition values: the swap
-  * carries the original location's partition spec, so partition pruning
-  * and skip-index file pruning COMPOSE (round 8; the reference layers
-  * partition pruning over granule pruning the same way).
-  */
-object SkipIndexPruning {
+/** Transparent skip-index pruning, the way the reference applies its skip
+  * indexes: the user writes a plain SELECT and
+  * MergeTreeDataSelectExecutor::filterMarksUsingIndex drops granules after
+  * partition pruning and before the read. Here [[PruneRule]] wraps the
+  * location of a Filter's base scan that has [[Layouts.Skip]] layouts in a
+  * [[SkippingFileIndex]], whatever partition pruning left of it. Spark
+  * lists the scan's files through `listFiles(partitionFilters,
+  * dataFilters)`: the inner index prunes partitions, then
+  * [[FileAdmission]] drops the files the skip indexes reject under the
+  * data filters, so the scan's "number of files read" shows the decision.
+  * Each index family answers its own leaves ([[SkipIndex.Index]]):
+  * bloom_filter and set equality and IN, minmax comparisons, equality and
+  * LIKE 'x%', ngrambf_v1 LIKE '%x%', 'x%' and '%x'. The Filter stays, so
+  * index false positives re-check and answers never change. */
+object SkipIndexPruning extends PredicateHelper {
 
-  /** One pruning decision per (relation, index) the rule applied —
-    * drained by the dialect's EXPLAIN indexes = 1 (the reference's
-    * EXPLAIN indexes output: which index ran, parts before/after). */
+  /** What one skip index admitted of a scan's files: the reference's
+    * EXPLAIN indexes = 1 output (which index ran, parts before and after). */
   final case class Decision(dataPath: String, kind: String,
       columns: Set[String], admitted: Int, total: Int)
 
-  private val decisions =
-    new java.util.concurrent.ConcurrentLinkedQueue[Decision]()
-  private val MaxDecisions = 256 // bounded: the log must never leak over a session
+  /** `inner`'s files less those the `skips` of the base path `base` reject.
+    * `filters`, the wrapped Filter's conjuncts, judge `inputFiles`, which
+    * Spark asks without filters. */
+  final case class SkippingFileIndex(inner: FileIndex, base: String, skips: Seq[Skip],
+      filters: Seq[Expression])(spark: SparkSession) extends FileIndex {
 
-  private def logDecision(d: Decision): Unit = {
-    decisions.add(d)
-    while (decisions.size > MaxDecisions) decisions.poll()
+    override def rootPaths = inner.rootPaths
+    override def partitionSchema: StructType = inner.partitionSchema
+    override def refresh(): Unit = inner.refresh()
+    override def sizeInBytes: Long = inner.sizeInBytes
+    override def inputFiles: Array[String] =
+      listFiles(Nil, filters).flatMap(_.files).map(_.getPath.toString).toArray
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      decide(partitionFilters, dataFilters)._1
+
+    /** The files each index admits under the filters, one decision per
+      * index on a column the filters name. */
+    def decisions(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[Decision] =
+      decide(partitionFilters, dataFilters)._2
+
+    private def decide(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): (Seq[PartitionDirectory], Seq[Decision]) = {
+      val dirs = inner.listFiles(partitionFilters, dataFilters)
+      val p = FileAdmission.normalize(dataFilters)
+      val named = FileAdmission.columns(p).map(_.toLowerCase)
+      val probed = skips.filter(_.columns.exists(c => named(c.toLowerCase)))
+      if (probed.isEmpty) return (dirs, Nil)
+      // each index dir is read once per listing
+      val indexes = probed.map(s => s -> SkipIndex.load(spark, s.kind, s.dir))
+      def admits(f: org.apache.hadoop.fs.Path, is: Seq[SkipIndex.Index]): Boolean =
+        FileAdmission.admits(p, q => is.forall(_.admits(f, q)))
+      val files = dirs.flatMap(_.files).map(_.getPath)
+      (dirs.map(d => d.copy(files = d.files.filter(f => admits(f.getPath, indexes.map(_._2))))),
+        indexes.map { case (s, i) =>
+          Decision(base, s.kind, s.columns.toSet, files.count(admits(_, Seq(i))), files.size)
+        })
+    }
   }
 
-  def clearDecisions(): Unit = decisions.clear()
-
-  def lastDecisions: Seq[Decision] = {
-    import scala.jdk.CollectionConverters._
-    decisions.iterator().asScala.toSeq
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case x => Seq(x)
-  }
+  /** The decisions of the skip-index scans of `plan`, as each lists its
+    * files. */
+  def decisions(plan: SparkPlan): Seq[Decision] = plan.collect {
+    case s: FileSourceScanExec => s.relation.location match {
+      case i: SkippingFileIndex =>
+        i.decisions(s.partitionFilters.filterNot(_.isInstanceOf[DynamicPruning]), s.dataFilters)
+      case _ => Nil
+    }
+  }.flatten
 
   case class PruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-    /** Typed equality hash: cast the literal to the column's type first so
-      * e.g. an Int probe against a Long column hashes on the build lane
-      * (the bloom was built over the column's own type). */
-    private def eqHash(l: Literal, a: AttributeReference): Long =
-      SkipIndex.hashOfLiteral(
-        if (l.dataType == a.dataType) l
-        else Literal.create(
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            l, a.dataType, Some("UTC")).eval(null), a.dataType))
-
-    private def scalaValue(l: Literal): Any =
-      CatalystTypeConverters.convertToScala(l.value, l.dataType)
-
-    /** The file set one conjunct admits under one index, or None when the
-      * conjunct doesn't probe this index. */
-    private def fileSet(idx: Skip, c: Expression): Option[Set[String]] = {
-      def bloomEq(a: AttributeReference, hashes: Seq[Long]) =
-        if (idx.kind == "bloom_filter" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesByHash(spark, idx.dir, a.name,
-            hashes).toSet)
-        else None
-      def setEq(a: AttributeReference, vals: Seq[Any]) =
-        if (idx.kind == "set" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesSet(spark, idx.dir, a.name,
-            vals).toSet)
-        else None
-      def mmBound(a: AttributeReference, lo: Option[Any], hi: Option[Any]) =
-        if (idx.kind == "minmax" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesBound(spark, idx.dir, a.name,
-            lo, hi).toSet)
-        else None
-      def ngram(a: AttributeReference, needle: String) =
-        if (idx.kind == "ngrambf_v1" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesLike(spark, idx.dir, needle).toSet)
-        else None
-      /** Smallest string ≥ every string carrying `pre` as a prefix, in
-        * UTF-8 binary order (the order Spark compares strings in): strip
-        * trailing max-lane chars, increment the last remaining one.
-        * `pre + '￿'` is NOT such a bound — supplementary code points
-        * (e.g. emoji) encode ABOVE U+FFFF in UTF-8 — so surrogate-bearing
-        * prefixes conservatively get no upper bound (lo-only pruning).
-        * Mirrors the reference's prefix-range analysis in
-        * KeyCondition's LIKE handling. */
-      def prefixSuccessor(pre: String): Option[String] =
-        if (!pre.forall(c => c < '\uD800')) None
-        else {
-          var i = pre.length - 1
-          while (i >= 0 && pre.charAt(i) == 0xD7FF) i -= 1
-          if (i < 0) None
-          else Some(pre.substring(0, i) + (pre.charAt(i) + 1).toChar)
-        }
-      def textAttr(e: Expression): Option[AttributeReference] = e match {
-        case a: AttributeReference => Some(a)
-        case Lower(a: AttributeReference) => Some(a)
-        case _ => None
-      }
-
-      c match {
-        case EqualTo(a: AttributeReference, l: Literal) if l.value != null =>
-          bloomEq(a, Seq(eqHash(l, a)))
-            .orElse(setEq(a, Seq(scalaValue(l))))
-            .orElse(mmBound(a, Some(scalaValue(l)), Some(scalaValue(l))))
-        case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-          fileSet(idx, EqualTo(a, l))
-        case In(a: AttributeReference, vs)
-            if vs.forall(v => v.isInstanceOf[Literal] &&
-              v.asInstanceOf[Literal].value != null) =>
-          val lits = vs.map(_.asInstanceOf[Literal])
-          bloomEq(a, lits.map(eqHash(_, a)))
-            .orElse(setEq(a, lits.map(scalaValue)))
-        case InSet(a: AttributeReference, hset) if !hset.contains(null) =>
-          val lits = hset.toSeq.map(v => Literal.create(v, a.dataType))
-          bloomEq(a, lits.map(SkipIndex.hashOfLiteral))
-            .orElse(setEq(a, lits.map(scalaValue)))
-        case GreaterThan(a: AttributeReference, l: Literal) if l.value != null =>
-          mmBound(a, Some(scalaValue(l)), None)
-        case GreaterThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-          mmBound(a, Some(scalaValue(l)), None)
-        case LessThan(a: AttributeReference, l: Literal) if l.value != null =>
-          mmBound(a, None, Some(scalaValue(l)))
-        case LessThanOrEqual(a: AttributeReference, l: Literal) if l.value != null =>
-          mmBound(a, None, Some(scalaValue(l)))
-        // mirrored literal-first comparisons: 5 < a ≡ a > 5
-        case GreaterThan(l: Literal, a: AttributeReference) if l.value != null =>
-          mmBound(a, None, Some(scalaValue(l)))
-        case GreaterThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-          mmBound(a, None, Some(scalaValue(l)))
-        case LessThan(l: Literal, a: AttributeReference) if l.value != null =>
-          mmBound(a, Some(scalaValue(l)), None)
-        case LessThanOrEqual(l: Literal, a: AttributeReference) if l.value != null =>
-          mmBound(a, Some(scalaValue(l)), None)
-        // LIKE '%x%' / '%x' / 'x%' arrive simplified; the ngram index is
-        // built over lower(text), so a case-sensitive needle's lowercase
-        // grams admit a superset — safe, the Filter re-checks exactly.
-        case Contains(t, l: Literal) if l.value != null =>
-          textAttr(t).flatMap(a => ngram(a, l.value.toString))
-        case StartsWith(t, l: Literal) if l.value != null =>
-          // a prefix is ALSO a range: every match lies in
-          // [prefix, prefixSuccessor) on the string lane, so a minmax
-          // index prunes LIKE 'abc%' like the reference's primary-key
-          // prefix analysis; ngram covers the substring superset. The
-          // minmax lane is ONLY sound on the bare column — under
-          // lower(col) the raw min/max can exclude rows the lowercased
-          // needle would match — so Lower-wrapped text routes to the
-          // ngram lane alone (built over lower(text), superset-safe).
-          t match {
-            case a: AttributeReference =>
-              val pre = l.value.toString
-              mmBound(a, Some(pre), prefixSuccessor(pre))
-                .orElse(ngram(a, pre))
-            case Lower(a: AttributeReference) =>
-              ngram(a, l.value.toString)
-            case _ => None
-          }
-        case EndsWith(t, l: Literal) if l.value != null =>
-          textAttr(t).flatMap(a => ngram(a, l.value.toString))
-        case _ => None
-      }
-    }
-
     override def apply(plan: LogicalPlan): LogicalPlan = {
       if (Layouts.isEmpty) return plan
       plan.transformUp {
-        case f @ Filter(cond, child) =>
-          Layouts.scanOf(child).flatMap(prune(_, cond))
-            .map(lr => Filter(cond, child.transform { case _: LogicalRelation => lr }))
-            .getOrElse(f)
-      }
-    }
-
-    /** A pruned file index over the surviving leaf files. Unpartitioned
-      * relations get a plain [[InMemoryFileIndex]]; hive-partitioned
-      * relations (round 8, closing the round-7 bail-out) CARRY the
-      * original location's partition spec into the swap, so the pruned
-      * relation keeps both its partition values (columns read from dir
-      * names) and Catalyst's partition pruning — exactly the reference's
-      * layering, where partition pruning and skip-index granule pruning
-      * compose (MergeTreeDataSelectExecutor). A partitioned location
-      * that doesn't expose its spec (non-PartitioningAware) still bails. */
-    private def swappedLocation(fs: HadoopFsRelation,
-        files: Seq[String]): Option[org.apache.spark.sql.execution.datasources.FileIndex] = {
-      val paths = files.map(new org.apache.hadoop.fs.Path(_))
-      if (fs.partitionSchema.isEmpty)
-        Some(new InMemoryFileIndex(spark, paths, Map.empty, Some(fs.dataSchema)))
-      else fs.location match {
-        case pa: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
-          Some(new InMemoryFileIndex(spark, paths, Map.empty,
-            Some(org.apache.spark.sql.types.StructType(
-              fs.dataSchema.fields ++ fs.partitionSchema.fields)),
-            userSpecifiedPartitionSpec = Some(pa.partitionSpec())))
-        case _ => None
-      }
-    }
-
-    /** The scan's relation over only the files its skip indexes admit
-      * under `cond`, when they exclude any. */
-    private def prune(scan: Layouts.Scan, cond: Expression): Option[LogicalRelation] = {
-      val sets = for {
-        c <- conjuncts(cond)
-        idx <- scan.layouts.collect { case s: Skip => s }
-        s <- fileSet(idx, c)
-      } yield (idx, s)
-      if (sets.isEmpty) return None
-      val files = sets.map(_._2).reduce(_ intersect _).toSeq.sorted
-      val total = scan.files.location.inputFiles.length
-      sets.groupBy(_._1).foreach { case (idx, ss) =>
-        logDecision(Decision(scan.path, idx.kind, idx.columns.toSet,
-          ss.map(_._2).reduce(_ intersect _).size, total))
-      }
-      if (files.size >= total) None
-      else swappedLocation(scan.files, files).map { newLocation =>
-        scan.relation.copy(relation = scan.files.copy(location = newLocation)(spark))
+        case f @ Filter(cond, child) => Layouts.scanOf(child) match {
+          case Some(s) if s.layouts.exists(_.isInstanceOf[Skip]) &&
+              !s.files.location.isInstanceOf[SkippingFileIndex] =>
+            val location = SkippingFileIndex(s.files.location, s.path,
+              s.layouts.collect { case k: Skip => k }, splitConjunctivePredicates(cond))(spark)
+            val wrapped = s.relation.copy(relation = s.files.copy(location = location)(spark))
+            Filter(cond, child.transform { case _: LogicalRelation => wrapped })
+          case _ => f
+        }
       }
     }
   }

@@ -2,10 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
+import graft.plans.FileAdmission
+import graft.plans.FileAdmission.{Eq, Nulls, Pred, Range, Text}
 import graft.sources.IcebergBounds.ColBounds
 import graft.sources.IcebergTransforms.IcePartField
 
@@ -36,7 +38,9 @@ import graft.sources.IcebergTransforms.IcePartField
   *    file, pruning predicates on NON-partition columns from metadata
   *    alone — equality, inequalities, IN, and string prefix.
   *
-  * Everything else ADMITS — keep is always safe. Literal rendering and
+  * The filters are normalized by [[FileAdmission]], the evaluator the
+  * skip indexes share; everything else ADMITS — keep is always safe.
+  * Literal rendering and
   * transform evaluation are the SAME code as the static lane
   * (IcebergTransforms.tupleAdmitsSource*), so the two can never
   * disagree. The index is file-count-sized driver metadata — the same
@@ -61,133 +65,52 @@ final class IcebergManifestFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept =
-      if (dataFilters.isEmpty) files
-      else files.filter { case (_, tuple, stats) =>
-        dataFilters.forall(f => admits(f, tuple, stats))
-      }
+    val p = FileAdmission.normalize(dataFilters)
+    val kept = files.filter { case (_, tuple, stats) =>
+      FileAdmission.admits(p, admits(tuple, stats, _))
+    }
     Seq(PartitionDirectory(InternalRow.empty,
       kept.map { case (st, _, _) => FileStatusWithMetadata(st) }))
   }
 
-  private type Tuple = Option[Map[String, Option[String]]]
-  private type Stats = Map[String, ColBounds]
-
-  /** May the file described by `tuple`/`stats` contain rows satisfying
-    * `e`? Conservative: anything unrecognized admits. */
-  private def admits(e: Expression, tuple: Tuple, stats: Stats): Boolean =
-    e match {
-      case And(l, r) => admits(l, tuple, stats) && admits(r, tuple, stats)
-      case Or(l, r) => admits(l, tuple, stats) || admits(r, tuple, stats)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        eqAdmits(a, l, tuple, stats)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        eqAdmits(a, l, tuple, stats)
-      case EqualNullSafe(a: AttributeReference, l: Literal) =>
-        eqAdmits(a, l, tuple, stats)
-      case EqualNullSafe(l: Literal, a: AttributeReference) =>
-        eqAdmits(a, l, tuple, stats)
-      // inequalities: `lower` = the predicate bounds the column from
-      // below. Strict predicates tighten the TUPLE bound by one
-      // discrete unit when the domain allows (`ts < midnight` prunes
-      // the midnight day) and compare STATS bounds strictly.
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        boundAdmits(a, l, lower = true, strict = true, tuple, stats)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        boundAdmits(a, l, lower = true, strict = false, tuple, stats)
-      case LessThan(a: AttributeReference, l: Literal) =>
-        boundAdmits(a, l, lower = false, strict = true, tuple, stats)
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        boundAdmits(a, l, lower = false, strict = false, tuple, stats)
-      // literal-first spellings flip the direction
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        boundAdmits(a, l, lower = false, strict = true, tuple, stats)
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        boundAdmits(a, l, lower = false, strict = false, tuple, stats)
-      case LessThan(l: Literal, a: AttributeReference) =>
-        boundAdmits(a, l, lower = true, strict = true, tuple, stats)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        boundAdmits(a, l, lower = true, strict = false, tuple, stats)
-      case In(a: AttributeReference, ls)
-          if ls.forall(_.isInstanceOf[Literal]) =>
-        ls.exists(l => eqAdmits(a, l.asInstanceOf[Literal], tuple, stats))
-      case InSet(a: AttributeReference, vs) =>
-        vs.exists(v => eqAdmits(a, Literal(v, a.dataType), tuple, stats))
-      case IsNull(a: AttributeReference) =>
-        IcebergTransforms.tupleAdmitsSourceNull(tuple, fields, a.name,
-          isNull = true)
-      case IsNotNull(a: AttributeReference) =>
-        IcebergTransforms.tupleAdmitsSourceNull(tuple, fields, a.name,
-          isNull = false)
-      case StartsWith(a: AttributeReference, Literal(p, StringType))
-          if p != null =>
-        statsPrefixAdmits(a, p.toString, stats)
+  /** May the file with partition `tuple` and column bounds `stats` hold a
+    * row where the leaf `p` holds? Strict bounds tighten the tuple bound
+    * by one discrete unit where the domain allows (`ts < midnight` prunes
+    * the midnight day) and compare the column bounds strictly. */
+  private def admits(tuple: Option[Map[String, Option[String]]],
+      stats: Map[String, ColBounds], p: Pred): Boolean = {
+    def raw(v: Literal) = IcebergTransforms.rawOfLiteral(v.value, v.dataType)
+    /** `test` of the comparison of the file's `bound` with `v`. */
+    def bounds(c: String, v: Literal, bound: ColBounds => Option[Any])(test: Int => Boolean) =
+      (for {
+        b <- stats.get(c.toLowerCase)
+        m <- bound(b)
+        x <- IcebergBounds.normLiteral(v.value, v.dataType)
+        r <- IcebergBounds.cmp(m, x)
+      } yield test(r)).getOrElse(true)
+    p match {
+      case Eq(c, vs) => vs.exists { v =>
+        raw(v).forall(IcebergTransforms.tupleAdmitsSource(tuple, fields, c, _)) &&
+          bounds(c, v, _.min)(_ <= 0) && bounds(c, v, _.max)(_ >= 0)
+      }
+      case Range(c, v, lower, strict) =>
+        raw(v).forall(IcebergTransforms.tupleAdmitsSourceBound(tuple, fields, c, _, lower, strict)) &&
+          (if (lower) bounds(c, v, _.max)(r => r > 0 || !strict && r == 0)
+          else bounds(c, v, _.min)(r => r < 0 || !strict && r == 0))
+      case Nulls(c, isNull) => IcebergTransforms.tupleAdmitsSourceNull(tuple, fields, c, isNull)
+      // `col LIKE 'p%'`: the file admits unless its whole range sorts
+      // before `p` (max < p) or after every `p`-prefixed string (min > p
+      // without the prefix), in the bounds' UTF-8 byte order
+      case Text(c, pre, true, false) => stats.get(c.toLowerCase).forall { b =>
+        b.max.forall {
+          case m: String => IcebergBounds.cmp(m, pre).forall(_ >= 0)
+          case _ => true
+        } && b.min.forall {
+          case m: String => IcebergBounds.cmp(m, pre).forall(_ <= 0) || m.startsWith(pre)
+          case _ => true
+        }
+      }
       case _ => true
     }
-
-  private def eqAdmits(a: AttributeReference, l: Literal, tuple: Tuple,
-      stats: Stats): Boolean =
-    (IcebergTransforms.rawOfLiteral(l.value, l.dataType) match {
-      case None => true // null or an unevaluated literal type — keep
-      case Some(raw) =>
-        IcebergTransforms.tupleAdmitsSource(tuple, fields, a.name, raw)
-    }) && statsEqAdmits(a, l, stats)
-
-  private def boundAdmits(a: AttributeReference, l: Literal,
-      lower: Boolean, strict: Boolean, tuple: Tuple, stats: Stats)
-      : Boolean =
-    (IcebergTransforms.rawOfLiteral(l.value, l.dataType) match {
-      case None => true
-      case Some(raw) => IcebergTransforms.tupleAdmitsSourceBound(
-        tuple, fields, a.name, raw, lower, strict)
-    }) && statsBoundAdmits(a, l, lower, strict, stats)
-
-  // ---- column-bounds (min/max) pruning ----
-
-  private def statsEqAdmits(a: AttributeReference, l: Literal,
-      stats: Stats): Boolean =
-    (for {
-      b <- stats.get(a.name.toLowerCase)
-      v <- IcebergBounds.normLiteral(l.value, l.dataType)
-    } yield {
-      val aboveMin = b.min.forall(m =>
-        IcebergBounds.cmp(m, v).forall(_ <= 0))
-      val belowMax = b.max.forall(m =>
-        IcebergBounds.cmp(m, v).forall(_ >= 0))
-      aboveMin && belowMax
-    }).getOrElse(true)
-
-  private def statsBoundAdmits(a: AttributeReference, l: Literal,
-      lower: Boolean, strict: Boolean, stats: Stats): Boolean =
-    (for {
-      b <- stats.get(a.name.toLowerCase)
-      v <- IcebergBounds.normLiteral(l.value, l.dataType)
-    } yield {
-      if (lower) // col > v / col >= v: the file's max must reach v
-        b.max.forall(m => IcebergBounds.cmp(m, v)
-          .forall(c => if (strict) c > 0 else c >= 0))
-      else // col < v / col <= v: the file's min must not exceed v
-        b.min.forall(m => IcebergBounds.cmp(m, v)
-          .forall(c => if (strict) c < 0 else c <= 0))
-    }).getOrElse(true)
-
-  /** `col LIKE 'p%'`: the file admits unless its whole range sorts
-    * strictly before `p` (max < p — a prefixed string can't be below
-    * its prefix) or strictly after every `p`-prefixed string (min > p
-    * without itself carrying the prefix). UTF-8 byte order throughout,
-    * matching the bounds' own order. */
-  private def statsPrefixAdmits(a: AttributeReference, p: String,
-      stats: Stats): Boolean =
-    stats.get(a.name.toLowerCase).forall { b =>
-      val maxOk = b.max.forall {
-        case m: String => IcebergBounds.cmp(m, p).forall(_ >= 0)
-        case _ => true
-      }
-      val minOk = b.min.forall {
-        case m: String =>
-          IcebergBounds.cmp(m, p).forall(_ <= 0) || m.startsWith(p)
-        case _ => true
-      }
-      maxOk && minOk
-    }
+  }
 }

@@ -1572,8 +1572,9 @@ object ClickHouseSql {
     reject("""^ALTER\s+TABLE\s+\S+\s+(?:ADD|DROP|MATERIALIZE)\s+PROJECTION\b.*""",
       "projection DDL"),
     // skip indexes (ParserCreateIndexQuery.h, MergeTreeIndices.h): every
-    // type prunes transparently at file granularity (SkipIndexPruning:
-    // equality via bloom/set, ranges via minmax, LIKE via ngrambf);
+    // type prunes transparently at file granularity, after partition
+    // pruning, as the scan lists its files (SkipIndexPruning: equality via
+    // bloom/set, ranges via minmax, LIKE via ngrambf or a minmax prefix);
     // GRANULARITY is accepted and ignored
     lane("""^ALTER\s+TABLE\s+(<t>)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?(<c>)\s+(.+?)\s+TYPE\s+([A-Za-z_0-9]+)(?:\s*\(\s*(\d+)[^)]*\))?(?:\s+GRANULARITY\s+\d+)?<end>""") { h =>
       val kind = h(4).toLowerCase
@@ -1719,14 +1720,12 @@ object ClickHouseSql {
     },
     // EXPLAIN indexes = 1 (the reference's index-usage explain:
     // InterpreterExplainQuery with indexes setting — which skip index
-    // ran, parts before/after): optimize the query and report the
-    // pruning decisions the transparent rule took
+    // ran, parts before/after): plan the query and report what each skip
+    // index of its scans admits of the files partition pruning left
     lane("""^EXPLAIN\s+indexes\s*=\s*1\b\s*(.*)""") { h =>
       import h.spark.implicits._
-      graft.plans.SkipIndexPruning.clearDecisions()
       val df = sqlImpl(h.spark, h(1)) // same statement — no second quota charge
-      df.queryExecution.optimizedPlan // force optimization → decisions
-      graft.plans.SkipIndexPruning.lastDecisions
+      graft.plans.SkipIndexPruning.decisions(df.queryExecution.sparkPlan)
         .map(d => (d.dataPath, d.kind, d.columns.toSeq.sorted.mkString(","),
           d.admitted, d.total))
         .toDF("data_path", "index_type", "columns", "files_admitted",

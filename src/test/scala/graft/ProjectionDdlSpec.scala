@@ -59,6 +59,21 @@ class ProjectionDdlSpec extends SparkFunSuite {
     }
   }
 
+  test("a partition filter keeps a partitioned table's rollup") {
+    withTable("pddl_part") {
+      ch("CREATE TABLE pddl_part (s String, flag String, x Int64) ENGINE = MergeTree " +
+        "PARTITION BY flag ORDER BY s")
+      ch("INSERT INTO pddl_part VALUES ('x1', 'A', 1), ('x2', 'B', 2), ('x3', 'A', 3)")
+      ch("ALTER TABLE pddl_part ADD PROJECTION pr (SELECT flag, sum(x) GROUP BY flag)")
+      val all = ch("SELECT flag, count() AS n, sum(x) AS s FROM pddl_part GROUP BY flag ORDER BY flag")
+      val a = ch("SELECT flag, count() AS n, sum(x) AS s FROM pddl_part WHERE flag = 'A' GROUP BY flag")
+      assert(readRoots(all) == Seq(rollupDir("pddl_part", "pr")))
+      assert(readRoots(a) == Seq(rollupDir("pddl_part", "pr")))
+      assert(rows(all) == Seq("A 2 4", "B 1 2"))
+      assert(rows(a) == Seq("A 2 4"))
+    }
+  }
+
   test("mutations rebuild every projection of a table — no stale rollup answers") {
     withTable("pddl_mut2") {
       twoRollups("pddl_mut2")

@@ -4,6 +4,9 @@ import java.nio.file.Files
 
 import graft.operators.SkipIndex
 import graft.plans.Layouts
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Generic bloom skip index (ref MergeTreeIndexBloomFilter.cpp): pruning
@@ -29,6 +32,32 @@ class SkipIndexSpec extends SparkFunSuite {
 
   private def unregister(data: String, dir: String): Unit =
     Layouts.unregister(spark, data, dir)
+
+  private def ch(q: String): DataFrame = graft.sql.ClickHouseSql.sql(spark, q)
+
+  private def warehouse(t: String) = new org.apache.hadoop.fs.Path(
+    spark.conf.get("spark.sql.warehouse.dir"), t)
+
+  /** Runs `body` on no table `t`; the dialect DROP unbuilds what it declared. */
+  private def withTable(t: String)(body: => Unit): Unit = {
+    def clean(): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val fs = warehouse(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("", "_dropped").foreach(sfx => fs.delete(warehouse(t + sfx), true))
+    }
+    clean()
+    try body finally { ch(s"DROP TABLE IF EXISTS $t"); clean() }
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** `df`'s rows and the "number of files read" of its file scans. */
+  private def runCounting(df: DataFrame): (Seq[Row], Long) = {
+    val rows = df.collect().toSeq
+    (rows, Plans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.sum)
+  }
 
   private lazy val fixture: Unit = {
     val docs = Tables.load(spark, sf, "documents")
@@ -296,12 +325,11 @@ class SkipIndexSpec extends SparkFunSuite {
       // round 8: the swap CARRIES the partition spec — the pruned scan
       // reads fewer files while the hive partition column still
       // materializes from the dir names
-      graft.plans.SkipIndexPruning.clearDecisions()
       val df = spark.read.parquet(s"$pBase/data")
         .filter(col("source") === "src3")
       val viaRule = df.select("doc_id", "lang").collect()
         .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val ds = graft.plans.SkipIndexPruning.lastDecisions
+      val ds = graft.plans.SkipIndexPruning.decisions(df.queryExecution.sparkPlan)
       assert(ds.nonEmpty, "rule did not fire on the partitioned layout")
       assert(ds.exists(d => d.admitted < d.total),
         s"no file pruned on the partitioned layout: $ds")
@@ -403,5 +431,76 @@ class SkipIndexSpec extends SparkFunSuite {
     val full = spark.read.parquet(s"$base/data")
       .filter(col("lang") === l).count()
     assert(viaIndex == full && full > 0)
+  }
+
+  test("planning a transparent skip-index query runs no Spark job") {
+    fixture
+    register(s"$base/data", "bloom_filter", s"$base/auto", "source", "lang")
+    try {
+      val df = spark.read.parquet(s"$base/data").filter(col("source") === "src3")
+      assert(jobsDuring(df.queryExecution.optimizedPlan) == 0)
+      assert(df.count() > 0)
+    } finally unregister(s"$base/data", s"$base/auto")
+  }
+
+  test("a skip index prunes inside the partition a partition filter leaves") {
+    withTable("skip_part_flag") {
+      val ss = spark
+      import ss.implicits._
+      (0 until 200).map(i => (s"x${i % 50}", if (i % 2 == 0) "A" else "B", i.toLong))
+        .toDF("s", "flag", "x").repartitionByRange(4, col("s"))
+        .write.partitionBy("flag").saveAsTable("skip_part_flag")
+      ch("ALTER TABLE skip_part_flag ADD INDEX s_idx s TYPE bloom_filter")
+      val q = "SELECT count() AS n FROM skip_part_flag WHERE s = 'x5' AND flag = 'B'"
+      val inPartition = new java.io.File(warehouse("skip_part_flag/flag=B").toUri.getPath)
+        .listFiles().count(_.getName.endsWith(".parquet"))
+      val ds = ch(s"EXPLAIN indexes = 1 $q").collect()
+      assert(ds.length == 1, s"one bloom decision expected: ${ds.toSeq}")
+      assert(ds.head.getAs[Int]("files_total") == inPartition &&
+        ds.head.getAs[Int]("files_admitted") < inPartition, ds.head.toString)
+      val (rows, files) = runCounting(ch(q))
+      assert(rows.head.getLong(0) == 4)
+      assert(files < inPartition, s"read $files of the partition's $inPartition files")
+    }
+  }
+
+  test("a set index on a TIMESTAMP column admits the files holding the value") {
+    withTable("skip_ts_set") {
+      spark.range(4000)
+        .select(col("id"), expr("make_timestamp(2024, 1, 1, 0, CAST(id % 40 AS INT), 0)").as("ts"))
+        .repartitionByRange(8, col("ts")).write.saveAsTable("skip_ts_set")
+      ch("ALTER TABLE skip_ts_set ADD INDEX ts_set ts TYPE set(100)")
+      val (rows, files) = runCounting(ch(
+        "SELECT count() AS n FROM skip_ts_set WHERE ts = TIMESTAMP '2024-01-01 00:12:00'"))
+      assert(rows.head.getLong(0) == 100)
+      assert(files < 8, s"the set index should prune: read $files of 8")
+    }
+  }
+
+  test("a minmax index builds on a TIMESTAMP_NTZ column and prunes a range") {
+    withTable("skip_ntz_mm") {
+      spark.range(4000)
+        .select(col("id"), expr("make_timestamp_ntz(2024, 1, 1, 0, CAST(id % 40 AS INT), 0)").as("ts"))
+        .repartitionByRange(8, col("ts")).write.saveAsTable("skip_ntz_mm")
+      ch("ALTER TABLE skip_ntz_mm ADD INDEX ts_mm ts TYPE minmax")
+      val at = (m: Int) => lit(java.time.LocalDateTime.of(2024, 1, 1, 0, m))
+      val (rows, files) = runCounting(spark.table("skip_ntz_mm")
+        .filter(col("ts") >= at(10) && col("ts") < at(15)).agg(count(lit(1))))
+      assert(rows.head.getLong(0) == 500)
+      assert(files < 8, s"the minmax index should prune: read $files of 8")
+    }
+  }
+
+  test("source guard: one file-admission evaluator in graft/plans and graft/sources") {
+    val literalFirst = ("case (GreaterThan|GreaterThanOrEqual|LessThan|LessThanOrEqual" +
+      """|EqualTo|EqualNullSafe)\(\w+: Literal""").r
+    val offenders = Seq("plans", "sources").flatMap { d =>
+      SourceGuard.lines(s"src/main/scala/graft/$d").filter { case (f, _, line) =>
+        (f.getName != "FileAdmission.scala" && literalFirst.findFirstIn(line).isDefined) ||
+          (d == "plans" && line.contains("InMemoryFileIndex("))
+      }
+    }
+    assert(offenders.isEmpty, "filter normalizing or file listing outside the evaluator:\n" +
+      offenders.map(SourceGuard.show).mkString("\n"))
   }
 }
